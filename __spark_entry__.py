@@ -6524,7 +6524,7 @@ _KG_GRAPHS: dict = {}
 _KG_DENSE: dict = {}
 
 
-def _kg_graph(spark, canonicalize=False):
+def _kg_graph(spark):
     from python_mecab_ner_spark.plans.pipeline import extract_graph
     from python_mecab_ner_spark.sources.corpus import pages_dataframe
     # memoized per session: the 5 kg_* queries share one graph build
@@ -6533,19 +6533,17 @@ def _kg_graph(spark, canonicalize=False):
     # Keyed by applicationId, NOT id(spark): CPython can reuse a GC'd
     # session's id and silently serve DataFrames bound to a stopped
     # session (same hazard class as annotate.py's broadcast cache key).
-    key = (spark.sparkContext.applicationId, canonicalize)
+    key = spark.sparkContext.applicationId
     if key not in _KG_GRAPHS:
         # entries from other (stopped) sessions can never be served
         # again — drop the references so their pinned DataFrames are
         # collectable (their JVM-side cache died with the session)
-        for stale in [k for k in _KG_GRAPHS if k[0] != key[0]]:
-            _KG_GRAPHS.pop(stale, None)
+        _KG_GRAPHS.clear()
         pages = pages_dataframe(spark, N_KG_DOCS, seed=42)
         # kb_holdout_mod=20: the canonical KB lacks ~5% of detector
         # aliases (deterministic hash holdout) — the KB-coverage-gap
         # reality that exercises the inference end of the linking ladder
-        _KG_GRAPHS[key] = extract_graph(spark, pages,
-                                        canonicalize=canonicalize,
+        _KG_GRAPHS[key] = extract_graph(spark, pages, canonicalize=False,
                                         kb_holdout_mod=20)
     return _KG_GRAPHS[key]
 

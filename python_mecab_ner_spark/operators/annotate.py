@@ -11,7 +11,7 @@ mecab_ner.py:146, and per-instance tagger load, mecab_parser.py:116).
 
 Column pruning: only (url, warc_ts, text, lang) are read — the `html`
 binary column never leaves the scan when the caller selects before
-this stage (pipeline.extract_graph does).
+this stage (plans.pipeline does, for extract_graph and run_pipeline).
 """
 
 from __future__ import annotations

@@ -13,6 +13,8 @@ Writes partitioned Parquet through sources.catalog (Iceberg-gated).
 
 from __future__ import annotations
 
+import numbers
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -204,14 +206,10 @@ def ppr_int(edges: DataFrame, seeds: list, iters: int = 3,
     query-sized).  Callers must localCheckpoint deep edge inputs
     first (the kg_entity_rank lesson)."""
     base = (scale * (damping_den - damping_num)) // damping_den
-    # coerce numeric-like seeds (np ints, Rows' values) to plain int;
-    # non-numeric node ids (host strings) pass through unchanged
-    def _as_node(s):
-        try:
-            return int(s)
-        except (TypeError, ValueError):
-            return s
-    seed_ids = [_as_node(s) for s in seeds]
+    # coerce integral seeds (np ints) to plain int; strings pass
+    # through unchanged, numeric-looking ones ("123") included
+    seed_ids = [int(s) if isinstance(s, numbers.Integral) else s
+                for s in seeds]
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (e.select(F.col("src").alias("node"))
              .union(e.select("dst")).distinct())

@@ -355,8 +355,7 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
                   context_df: DataFrame | None = None,
                   neighbor_stats_df: DataFrame | None = None,
                   core_stats_df: DataFrame | None = None,
-                  disambig: str = "neighbor",
-                  barrier_dir: str | None = None) -> DataFrame:
+                  disambig: str = "neighbor") -> DataFrame:
     """mentions (url, start, end, surface, large, small) ->
     + (entity_id, link_level, link_score); unlinkable mentions keep
     entity_id NULL at level LEVEL_UNLINKED.
@@ -444,26 +443,7 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
     # dedicated names: `candidates` is rebound to derived frames below,
     # and unpersist() on a derived frame is a silent no-op (the round-2
     # working-set leak).
-    cand_union = l0.unionByName(l1).unionByName(l2)
-    if barrier_dir is not None:
-        # parquet-barrier variant (round-3 verdict task 5): truncate
-        # the candidate lineage by writing the l0-l2 working set to
-        # parquet and reading it back — a REAL plan barrier that cuts
-        # the ~15 MiB per-stage task binaries of the monolithic plan.
-        # MEASURED at 50k docs local[32], 8 interleaved cache/barrier
-        # pairs in one session (burst-robust protocol, table in
-        # BENCH_EXTRAS.md): per-pair wall ratio median 0.93, spread
-        # 0.54-1.40 — a statistical tie.  Unlike the eager-count dead
-        # end (56% slower), the single post-union barrier costs no
-        # measurable wall time, so this is a LEGITIMATE mode when the
-        # ladder grows deep enough for plan size to bite; cache stays
-        # the default because it needs no temp-dir lifecycle and the
-        # task binaries are plan-size-bound constants today.
-        path = f"{barrier_dir}/link_cand_ws"
-        cand_union.write.mode("overwrite").parquet(path)
-        cand_ws = mentions_df.sparkSession.read.parquet(path)
-    else:
-        cand_ws = cand_union.persist()
+    cand_ws = l0.unionByName(l1).unionByName(l2).persist()
     candidates = cand_ws
     l3_ws = None
     with_stats = (context_df is not None and neighbor_stats_df is not None)

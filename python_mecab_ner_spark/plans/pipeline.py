@@ -4,8 +4,11 @@ pages -> [annotate: tokenize + mention + span + triple, ONE narrow
 stage] -> link spans to canonical entities (broadcast ladder) ->
 canonicalize alias clusters (LSH + CC) -> materialize salted graph.
 
-extract_graph() wires the DataFrames lazily; run_pipeline() executes
-with per-stage lineage + resume via plans.lineage.
+Both entry points share one wiring after annotate (_build_graph):
+extract_graph() persists the annotate stage and returns the lazily
+planned graph; run_pipeline() checkpoints it per part_key with
+lineage + resume (plans.lineage), writes the salted graph and
+releases every working set the build pinned before it returns.
 """
 
 from __future__ import annotations
@@ -32,48 +35,21 @@ def _training_mentions(mentions):
     return mentions.join(unambig, ["url", "start", "end"], "left_semi")
 
 
-def extract_graph(spark, pages_df, gazetteer_df=None, search_category=None,
-                  infer=True, canonicalize=True, learned_stats=True,
-                  kb_holdout_mod=None, disambig="neighbor",
-                  link_barrier_dir=None):
-    """Returns a dict of lazily-planned DataFrames:
-    annotated, mentions, spans, triples, entities, linked, vertices,
-    edges (+ canonical when canonicalize=True; + context/neighbor_stats
-    /core_stats when learned_stats=True).
-
-    learned_stats=True runs the full 6-level linking ladder: the
-    corpus' own unambiguous gazetteer mentions train the +-3-neighbor
-    and core counters (one groupBy job each, broadcast), which then
-    power levels 3/4 and in-window homonym disambiguation.
-
-    kb_holdout_mod=N deterministically drops aliases with
-    pmod(md5(surface), N) == 0 from the CANONICAL entity KB (mention
-    detection still sees the full gazetteer).  This models the
-    KB-coverage gap every real KG build has — surfaces the detector
-    finds but the canonical KB lacks — which is exactly the situation
-    the reference's PART/BRUTE inference levels exist for (reference
-    mecab_category_storage.py:534-595)."""
-    gaz_df = gazetteer_df if gazetteer_df is not None else gazetteer_df_from_tsv(spark)
-    bc = broadcast_rows(spark, df=gaz_df)
-
+def _annotate(pages_df, bc, learned_stats=True):
     # "context": the slim 4-field token struct — every consumer of the
     # graph's context table (stats builds, scoring, BIO) reads only
     # (word, pos, begin, end); the full struct is ~3x the cache/Arrow
     # payload.  Surface-restoring paths (posseq) re-tokenize via
     # annotate.tokenize_pages from g["pages"] instead.
-    annotated = annotate_pages(
-        pages_df.select("url", "warc_ts", "text", "lang"),
-        bc, search_category=search_category, infer=infer,
-        with_tokens="context" if learned_stats else False)
-    if learned_stats:
-        # the annotate stage feeds ~10 downstream subplans (stats
-        # builds, context joins, level-3/4 scoring, spans, triples);
-        # without materialization each one re-executes the whole
-        # tokenize+match mapInPandas.  Lazy-plan variant: persist
-        # (memory+disk).  The production path is run_pipeline, which
-        # checkpoints this stage to Parquet with lineage instead.
-        from pyspark import StorageLevel
-        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
+    return annotate_pages(pages_df.select("url", "warc_ts", "text", "lang"),
+                          bc, with_tokens="context" if learned_stats else False)
+
+
+def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
+                 kb_holdout_mod=None, disambig="neighbor") -> dict:
+    """Everything after annotate, over an already-materialized
+    `annotated` frame: the lazily planned graph dict plus its
+    `release` hook."""
     mentions = mentions_table(annotated)
     spans = spans_table(annotated)
     triples = triples_table(annotated)
@@ -97,8 +73,7 @@ def extract_graph(spark, pages_df, gazetteer_df=None, search_category=None,
     linked = link_mentions(
         spans.withColumnRenamed("word", "surface"), entities,
         context_df=context, neighbor_stats_df=nstats,
-        core_stats_df=cstats, disambig=disambig,
-        barrier_dir=link_barrier_dir)
+        core_stats_df=cstats, disambig=disambig)
 
     canonical = canonical_map(entities) if canonicalize else None
     # label universe = the DETECTOR-side gazetteer larges (brute
@@ -115,10 +90,10 @@ def extract_graph(spark, pages_df, gazetteer_df=None, search_category=None,
         Call when done with the graph — a long session building many
         graphs otherwise accumulates pinned cache entries.  Idempotent;
         the DataFrames remain usable (they just recompute)."""
-        for hook in (getattr(linked, "unpersist_working_set", None),
-                     getattr(nstats, "unpersist_input", None) if nstats is not None else None,
+        for hook in (linked.unpersist_working_set,
+                     nstats.unpersist_input if nstats is not None else None,
                      context.unpersist if context is not None else None,
-                     annotated.unpersist if learned_stats else None):
+                     annotated.unpersist):
             if hook is None:
                 continue
             try:
@@ -131,62 +106,81 @@ def extract_graph(spark, pages_df, gazetteer_df=None, search_category=None,
         "triples": triples, "entities": entities, "linked": linked,
         "context": context, "neighbor_stats": nstats, "core_stats": cstats,
         "canonical": canonical, "vertices": vertices, "edges": edges,
-        "pages": pages_df, "release": release,
+        "release": release,
     }
 
 
+def extract_graph(spark, pages_df, canonicalize=True, learned_stats=True,
+                  kb_holdout_mod=None, disambig="neighbor"):
+    """Returns a dict of lazily-planned DataFrames:
+    annotated, mentions, spans, triples, entities, linked, vertices,
+    edges (+ canonical when canonicalize=True; + context/neighbor_stats
+    /core_stats when learned_stats=True), pages, and release().
+
+    learned_stats=True runs the full 6-level linking ladder: the
+    corpus' own unambiguous gazetteer mentions train the +-3-neighbor
+    and core counters (one groupBy job each, broadcast), which then
+    power levels 3/4 and in-window homonym disambiguation.
+
+    kb_holdout_mod=N deterministically drops aliases with
+    pmod(md5(surface), N) == 0 from the CANONICAL entity KB (mention
+    detection still sees the full gazetteer).  This models the
+    KB-coverage gap every real KG build has — surfaces the detector
+    finds but the canonical KB lacks — which is exactly the situation
+    the reference's PART/BRUTE inference levels exist for (reference
+    mecab_category_storage.py:534-595)."""
+    gaz_df = gazetteer_df_from_tsv(spark)
+    annotated = _annotate(pages_df, broadcast_rows(spark, df=gaz_df),
+                          learned_stats)
+    if learned_stats:
+        # the annotate stage feeds ~10 downstream subplans (stats
+        # builds, context joins, level-3/4 scoring, spans, triples);
+        # without materialization each one re-executes the whole
+        # tokenize+match mapInPandas.  Lazy-plan variant: persist
+        # (memory+disk); run_pipeline checkpoints it to Parquet.
+        from pyspark import StorageLevel
+        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
+    g = _build_graph(annotated, gaz_df, canonicalize=canonicalize,
+                     learned_stats=learned_stats,
+                     kb_holdout_mod=kb_holdout_mod, disambig=disambig)
+    g["pages"] = pages_df
+    return g
+
+
 def run_pipeline(spark, pages_df, out_dir: str, n_parts: int = 32,
-                 canonicalize: bool = True, disambig: str = "neighbor",
+                 canonicalize: bool = True,
                  wave_parts: int | None = None,
                  refresh: bool = False) -> dict:
     """Execute with lineage + resume: the annotate stage (the heavy
     scan) is checkpointed per part_key; downstream relational stages
     re-derive from the persisted annotation (cheap relative to the
-    scan) and the graph is written salted."""
+    scan), the graph is written salted, and every working set the
+    build pinned is released before returning."""
     from .lineage import run_stage
 
     gaz_df = gazetteer_df_from_tsv(spark)
     bc = broadcast_rows(spark, df=gaz_df)
-
-    def annotate_fn(pages_part):
-        return annotate_pages(
-            pages_part.select("url", "warc_ts", "text", "lang"), bc,
-            with_tokens="context")
-
-    annotated = run_stage(spark, "annotate", pages_df, annotate_fn,
+    annotated = run_stage(spark, "annotate", pages_df,
+                          lambda part: _annotate(part, bc),
                           out_dir, key_col="url", n_parts=n_parts,
                           wave_parts=wave_parts, refresh=refresh)
-
-    entities = canonical_entities(gaz_df)
-    spans = spans_table(annotated)
-    context = tokens_table(annotated)
-    mentions = mentions_table(annotated)
-    train = _training_mentions(mentions)
-    nstats, cstats = build_stats(context, train)
-    linked = link_mentions(spans.withColumnRenamed("word", "surface"), entities,
-                           context_df=context,
-                           neighbor_stats_df=nstats,
-                           core_stats_df=cstats, disambig=disambig)
-    triples = triples_table(annotated)
-    canonical = canonical_map(entities) if canonicalize else None
-    # label universe = the DETECTOR-side gazetteer larges (brute
-    # labels come from full-gazetteer stats, not the possibly
-    # holdout-filtered KB)
-    vertices = build_vertices(linked, entities, canonical,
-                              label_universe=gaz_df.select("large"))
-    edges = build_edges(triples, linked, canonical)
-    info = materialize_graph(edges, vertices, out_dir)
-    if "html" in pages_df.columns:
-        # web-graph side tables (host link graph + inbound anchor-text
-        # profiles): host-dimension-sized aggregates off a second
-        # narrow scan of the raw pages — cheap next to annotate, and
-        # the crawl-prioritization consumers read THESE, not pages
-        from ..operators.weblinks import host_graph, inbound_anchor_profile
-        (host_graph(pages_df).repartition(1)
-         .write.mode("overwrite").parquet(f"{out_dir}/hosts"))
-        (inbound_anchor_profile(pages_df).repartition(1)
-         .write.mode("overwrite").parquet(f"{out_dir}/anchors"))
-        info["hosts"] = f"{out_dir}/hosts"
-        info["anchors"] = f"{out_dir}/anchors"
-    info["annotated_rows"] = annotated.count()
+    g = _build_graph(annotated, gaz_df, canonicalize=canonicalize)
+    try:
+        info = materialize_graph(g["edges"], g["vertices"], out_dir)
+        if "html" in pages_df.columns:
+            # web-graph side tables (host link graph + inbound anchor-text
+            # profiles): host-dimension-sized aggregates off a second
+            # narrow scan of the raw pages — cheap next to annotate, and
+            # the crawl-prioritization consumers read THESE, not pages
+            from ..operators.weblinks import (host_graph,
+                                              inbound_anchor_profile)
+            (host_graph(pages_df).repartition(1)
+             .write.mode("overwrite").parquet(f"{out_dir}/hosts"))
+            (inbound_anchor_profile(pages_df).repartition(1)
+             .write.mode("overwrite").parquet(f"{out_dir}/anchors"))
+            info["hosts"] = f"{out_dir}/hosts"
+            info["anchors"] = f"{out_dir}/anchors"
+        info["annotated_rows"] = annotated.count()
+    finally:
+        g["release"]()
     return info

@@ -45,11 +45,6 @@ def main() -> int:
                     help="inject --skew-entity into this fraction of "
                          "Korean docs (head-entity skew stressor)")
     ap.add_argument("--skew-entity", default="미국")
-    ap.add_argument("--barrier", action="store_true",
-                    help="parquet-barrier variant: write the l0-l2 "
-                         "candidate working set to temp parquet and read "
-                         "it back instead of cache (A/B for the verdict-"
-                         "task-5 measurement)")
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -83,15 +78,11 @@ def main() -> int:
     annotate_pages(pages.limit(2000).repartition(par), bc) \
         .agg(F.count("*")).collect()
 
-    barrier_dir = (tempfile.mkdtemp(prefix="link_barrier_")
-                   if args.barrier else None)
-
     def run_once(i):
         p = pages.where(F.col("url") != F.lit(f"zz{i}"))  # fresh lineage
         t0 = time.time()
         g = extract_graph(spark, p, canonicalize=False, kb_holdout_mod=20,
-                          disambig=args.disambig,
-                          link_barrier_dir=barrier_dir)
+                          disambig=args.disambig)
         hist = {r.link_level: r.n for r in
                 g["linked"].groupBy("link_level")
                 .agg(F.count("*").alias("n")).collect()}
@@ -117,7 +108,6 @@ def main() -> int:
     print(json.dumps({
         "metric": "full_6level_link_wall",
         "disambig": args.disambig,
-        "barrier": bool(args.barrier),
         "skew_pct": args.skew_pct,
         "docs": args.docs,
         "cpus": args.cpus,

@@ -6,10 +6,16 @@ from python_mecab_ner_spark.plans.pipeline import extract_graph, run_pipeline
 from python_mecab_ner_spark.sources.corpus import pages_dataframe
 
 
+def persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.fixture(scope="module")
 def graph(spark):
     pages = pages_dataframe(spark, 150, seed=3, partitions=4)
-    return extract_graph(spark, pages, canonicalize=False)
+    g = extract_graph(spark, pages, canonicalize=False)
+    yield g
+    g["release"]()
 
 
 def test_linked_spans(graph):
@@ -43,8 +49,13 @@ def test_vertices_join_entities(graph):
 def test_run_pipeline_resume(spark, tmp_path):
     out = str(tmp_path / "kg")
     pages = pages_dataframe(spark, 60, seed=5, partitions=2)
+    before = persistent_rdd_ids(spark)
     info1 = run_pipeline(spark, pages, out, n_parts=8, canonicalize=False)
     assert info1["annotated_rows"] == 60
+    # run_pipeline releases every working set its build pinned.  Compared
+    # by RDD id, not count: the ContextCleaner may reclaim other tests'
+    # GC'd RDDs meanwhile, which lowers the count but adds no id
+    assert persistent_rdd_ids(spark) - before == set()
 
     # resume: second run must skip all completed partitions (the
     # annotate fn would crash on any new input row)
@@ -139,17 +150,13 @@ def test_extract_graph_release(spark):
     pinned: persistent-RDD count returns to the pre-build level (the
     round-2 leak was unpersist() called on rebound, never-persisted
     derived frames — a silent no-op)."""
-
-    def n_persistent():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    before = n_persistent()
+    before = len(persistent_rdd_ids(spark))
     pages = pages_dataframe(spark, 40, seed=7, partitions=2)
     g = extract_graph(spark, pages, canonicalize=False)
     g["linked"].count()  # materialize the working sets
-    assert n_persistent() > before
+    assert len(persistent_rdd_ids(spark)) > before
     g["release"]()
-    assert n_persistent() == before
+    assert len(persistent_rdd_ids(spark)) == before
     # idempotent + graph still usable (recomputes)
     g["release"]()
     assert g["linked"].count() > 0
@@ -330,22 +337,3 @@ def test_kg_reach_registers_exact_and_estimate_tracks_ball(spark):
     mean = sum(ratios) / len(ratios)
     assert 0.6 < mean < 1.4, mean
 
-
-def test_link_barrier_variant_matches_cache(spark, tmp_path):
-    """link_mentions(barrier_dir=...) — the parquet-barrier working
-    set (BENCH_EXTRAS round-4 A/B: statistical tie with cache) — must
-    produce the IDENTICAL linked table."""
-    pages = pages_dataframe(spark, 80, seed=3, partitions=2).cache()
-    pages.count()
-    key = ["url", "start", "end", "link_level"]
-    g1 = extract_graph(spark, pages, canonicalize=False,
-                       kb_holdout_mod=20)
-    a = sorted(tuple(r) for r in g1["linked"].select(*key).collect())
-    g1["release"]()
-    g2 = extract_graph(spark, pages, canonicalize=False,
-                       kb_holdout_mod=20,
-                       link_barrier_dir=str(tmp_path / "b"))
-    b = sorted(tuple(r) for r in g2["linked"].select(*key).collect())
-    g2["release"]()
-    pages.unpersist()
-    assert a == b and len(a) > 0

@@ -71,6 +71,16 @@ def test_ppr_line_graph_hand_golden(spark):
     assert got == {1: 150000, 2: 127500, 3: 108375}
 
 
+def test_ppr_numeric_string_node_ids_stay_strings(spark):
+    """String node ids that look numeric are matched as strings: seed
+    "007" seeds only "007", never "7"."""
+    from python_mecab_ner_spark.operators.graph import ppr_int
+    e = spark.createDataFrame([("007", "100"), ("7", "200")],
+                              "src string, dst string")
+    got = {r.node: r.pr for r in ppr_int(e, ["007"], iters=1).collect()}
+    assert got == {"007": 150000, "100": 850000, "7": 0, "200": 0}
+
+
 def test_ppr_localizes_vs_global_pagerank(spark):
     """Two disconnected 3-cycles; seeding one component leaves the
     other at exactly zero mass, while global PageRank ranks both
