@@ -4726,7 +4726,7 @@ def _bottomk_oracle_sql(k: int = 128,
             SELECT g, v, key FROM (
               SELECT g, v, key,
                      row_number() OVER (PARTITION BY g
-                                        ORDER BY pri, key) AS rn
+                                        ORDER BY pri, key, v) AS rn
               FROM rows_)
             WHERE rn <= {k}),
         ks AS (SELECT g, count(*) AS ks FROM samp GROUP BY 1),

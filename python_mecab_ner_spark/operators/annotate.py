@@ -2,7 +2,7 @@
 
 Design for 100 TB: the whole extract path (tokenize T1-T11, gazetteer
 match M1-M11, triple extraction) is row-local, so it runs as ONE
-Arrow-batched mapInPandas over the pages scan — a single narrow stage
+Arrow-batched mapInArrow over the pages scan — a single narrow stage
 with zero shuffles that scales linearly with executors.  The compiled
 gazetteer rows are broadcast once; each executor builds the
 Aho-Corasick automaton lazily on first use and caches it
@@ -16,13 +16,18 @@ this stage (plans.pipeline does, for extract_graph and run_pipeline).
 
 from __future__ import annotations
 
-import pandas as pd
+from operator import attrgetter, itemgetter
+
+import pyarrow as pa
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..kernel.lexicon import default_lexicon
-from ..kernel.matcher import CompiledGazetteer
+from ..kernel.matcher import (CompiledGazetteer, find_mentions,
+                              infer_extend, ner_spans)
 from ..kernel.tokenizer import tokenize, words
 from ..kernel.triples import extract_triples
-from .schemas import annotated_schema
+from .schemas import TOKENIZED_SCHEMA, annotated_schema
 
 # per-executor automaton cache: key -> CompiledGazetteer
 _GAZ_CACHE: dict = {}
@@ -40,7 +45,49 @@ def _executor_gazetteer(rows_bc, bc_id, search_category) -> CompiledGazetteer:
     return gaz
 
 
-_CTX_FIELDS = ("word", "pos", "begin", "end")
+def _list_array(list_type, getters, records, offsets) -> pa.ListArray:
+    """Dremel-style nested column: each struct field read off the whole
+    batch's records into one child array, under int32 row offsets."""
+    struct, n = list_type.value_type, len(records)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(map(get, records), f.type, size=n)
+             for get, f in zip(getters, struct)],
+            fields=list(struct)), type=list_type)
+
+
+# how a nested column's kernel records yield struct field (i, name):
+# token dicts by key, Mention/NerSpan by attribute, triples by position
+_GETTERS = {"tokens": lambda i, name: itemgetter(name),
+            "mentions": lambda i, name: attrgetter(name),
+            "spans": lambda i, name: attrgetter(name),
+            "triples": lambda i, name: itemgetter(i)}
+
+
+def _map_columnar(batches, arrow, doc):
+    """Arrow page batches -> Arrow batches of `arrow`.  `doc(text)` gives
+    a page's computed fields by name; input fields pass through, cast to
+    the output type; a field neither one gives (warc_ts, lang) is null."""
+    getters = {f.name: [_GETTERS[f.name](i, g.name)
+                        for i, g in enumerate(f.type.value_type)]
+               for f in arrow if f.name in _GETTERS}
+    for batch in batches:
+        nested = {k: (get, [], [0]) for k, get in getters.items()}
+        flat = {f.name: [] for f in arrow
+                if f.name not in nested and f.name not in batch.schema.names}
+        for text in batch.column("text").to_pylist():
+            rec = doc(text or "")
+            for k, (_, records, offsets) in nested.items():
+                records.extend(rec[k])
+                offsets.append(len(records))
+            for k, col in flat.items():
+                col.append(rec.get(k))
+        yield pa.RecordBatch.from_arrays(
+            [_list_array(f.type, *nested[f.name]) if f.name in nested
+             else pa.array(flat[f.name], f.type) if f.name in flat
+             else batch.column(f.name).cast(f.type) for f in arrow],
+            schema=arrow)
 
 
 def annotate_pages(pages_df, gazetteer_rows_bc, search_category=None,
@@ -65,87 +112,46 @@ def annotate_pages(pages_df, gazetteer_rows_bc, search_category=None,
     gazetteer rows must have been tokenized by the SAME tokenizer.
     """
     schema = annotated_schema(with_tokens)
-    slim = with_tokens == "context"
+    arrow = to_arrow_schema(schema)  # once, on the driver
     cols = [c for c in ("url", "warc_ts", "text", "lang") if c in pages_df.columns]
     bc_id = gazetteer_rows_bc._jbroadcast.id()  # stable unique cache key
 
     def process(batches):
-        from ..kernel.matcher import find_mentions, infer_extend, ner_spans
         lex = default_lexicon() if tokenizer is None else None
         gaz = _executor_gazetteer(gazetteer_rows_bc, bc_id, search_category)
-        for pdf in batches:
-            out = {k: [] for k in schema.fieldNames()}
-            for row in pdf.itertuples(index=False):
-                text = row.text or ""
-                toks = tokenize(text, lex) if tokenizer is None \
-                    else tokenizer(text)
-                mentions_kept, spans, triples = [], [], []
-                if toks:
-                    raw = find_mentions(toks, gaz)
-                    if infer:
-                        raw = infer_extend(raw, toks)
-                    span_objs = ner_spans(toks, raw)
-                    mentions_kept = [
-                        {"start": m.start, "end": m.end, "surface": m.surface,
-                         "large": m.large, "small": m.small} for m in raw]
-                    spans = [
-                        {"start": s.start, "end": s.end, "word": s.word,
-                         "large": s.large, "small": s.small} for s in span_objs]
-                    if with_triples:
-                        triples = [
-                            {"subj": t[0], "pred": t[1], "obj": t[2],
-                             "subj_start": t[3], "subj_end": t[4],
-                             "obj_start": t[5], "obj_end": t[6], "conf": t[7]}
-                            for t in extract_triples(toks, span_objs)]
-                out["url"].append(row.url)
-                out["warc_ts"].append(getattr(row, "warc_ts", None))
-                out["lang"].append(getattr(row, "lang", None))
-                out["extracted_text"].append(" ".join(words(toks)))
-                if with_tokens:
-                    out["tokens"].append(
-                        [{f: t[f] for f in _CTX_FIELDS} for t in toks]
-                        if slim else toks)
-                out["mentions"].append(mentions_kept)
-                out["spans"].append(spans)
-                out["triples"].append(triples)
-                out["n_tokens"].append(len(toks))
-            yield pd.DataFrame(out)
 
-    return pages_df.select(*cols).mapInPandas(process, schema=schema)
+        def doc(text):
+            toks = tokenizer(text) if tokenizer else tokenize(text, lex)
+            raw = find_mentions(toks, gaz)
+            raw = infer_extend(raw, toks) if infer else raw
+            spans = ner_spans(toks, raw)
+            triples = extract_triples(toks, spans) if with_triples else ()
+            return {"tokens": toks, "mentions": raw, "spans": spans,
+                    "triples": triples, "n_tokens": len(toks),
+                    "extracted_text": " ".join(words(toks))}
+        return _map_columnar(batches, arrow, doc)
+
+    return pages_df.select(*cols).mapInArrow(process, schema=schema)
 
 
 def tokenize_pages(pages_df):
     """pages (url, text) -> (url, tokens) with the FULL token struct —
     the input of surface-restoring consumers (posseq_candidates needs
-    reading/type/space for restore_tokens).  Tokenize-only: no
-    gazetteer, no matching — a strictly cheaper narrow stage than
-    annotate_pages for paths that only need token arrays."""
-    from pyspark.sql import types as T
-
-    from .schemas import TOKEN_STRUCT
-    schema = T.StructType([
-        T.StructField("url", T.StringType(), False),
-        T.StructField("tokens", T.ArrayType(TOKEN_STRUCT), True),
-    ])
+    reading/type/space for restore_tokens).  Tokenize-only: a strictly
+    cheaper narrow stage than annotate_pages (no gazetteer, no match)."""
+    arrow = to_arrow_schema(TOKENIZED_SCHEMA)
 
     def process(batches):
-        from ..kernel.lexicon import default_lexicon
-        from ..kernel.tokenizer import tokenize
         lex = default_lexicon()
-        for pdf in batches:
-            out = {"url": [], "tokens": []}
-            for row in pdf.itertuples(index=False):
-                out["url"].append(row.url)
-                out["tokens"].append(tokenize(row.text or "", lex))
-            yield pd.DataFrame(out)
+        return _map_columnar(batches, arrow,
+                             lambda text: {"tokens": tokenize(text, lex)})
 
-    return pages_df.select("url", "text").mapInPandas(process, schema=schema)
+    return pages_df.select("url", "text").mapInArrow(process, TOKENIZED_SCHEMA)
 
 
 def mentions_table(annotated_df):
     """Exploded mentions: (url, start, end, surface, large, small) —
     the FIXTURES.md §8 mentions table (token-index half-open spans)."""
-    from pyspark.sql import functions as F
     return (annotated_df
             .select("url", F.explode("mentions").alias("m"))
             .select("url", "m.start", "m.end", "m.surface", "m.large", "m.small"))
@@ -157,17 +163,12 @@ def tokens_table(annotated_df):
     scoring, and the char-span BIO alignment (requires
     annotate_pages(..., with_tokens=True or "context")).  Downstream operators
     select subsets; column pruning drops the rest."""
-    from pyspark.sql import functions as F
     return (annotated_df
             .select("url", F.posexplode("tokens").alias("idx", "t"))
-            .select("url", "idx", F.col("t.word").alias("word"),
-                    F.col("t.pos").alias("pos"),
-                    F.col("t.begin").alias("begin"),
-                    F.col("t.end").alias("end")))
+            .select("url", "idx", "t.word", "t.pos", "t.begin", "t.end"))
 
 
 def spans_table(annotated_df):
-    from pyspark.sql import functions as F
     return (annotated_df
             .select("url", F.explode("spans").alias("s"))
             .select("url", "s.start", "s.end", "s.word", "s.large", "s.small"))
@@ -175,7 +176,6 @@ def spans_table(annotated_df):
 
 def triples_table(annotated_df):
     """Exploded triples: (url, subj, pred, obj, spans, conf)."""
-    from pyspark.sql import functions as F
     return (annotated_df
             .select("url", "warc_ts", F.explode("triples").alias("t"))
             .select("url", "warc_ts", "t.subj", "t.pred", "t.obj",

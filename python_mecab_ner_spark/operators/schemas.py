@@ -67,6 +67,13 @@ TRIPLE_STRUCT = T.StructType([
 ])
 
 
+# tokenize_pages output: the full token arrays per page
+TOKENIZED_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType(), False),
+    T.StructField("tokens", T.ArrayType(TOKEN_STRUCT), True),
+])
+
+
 def annotated_schema(with_tokens=False) -> T.StructType:
     """with_tokens: False (no token column), True (full TOKEN_STRUCT),
     or "context" (slim CONTEXT_TOKEN_STRUCT)."""

@@ -289,8 +289,10 @@ def bottomk_quantiles(df: DataFrame, group_col: str, value_col,
     Exactness discipline: the reference quantile walks the per-group
     (value, count) HISTOGRAM with a cumulative window over DISTINCT
     values (robust_outliers' shape — never a corpus sort); the sample
-    side ranks at most k rows per group.  Quantile definition (both
-    sides, both engines): smallest v whose cumulative count reaches
+    side ranks at most k rows per group, by (pri, key, v): pri hashes
+    key, so v breaks ties between duplicate keys and both engines keep
+    the same sample rows.  Quantile definition (both sides, both
+    engines): smallest v whose cumulative count reaches
     ceil(q * n / 100) — integer ceil via (q*n + 99) div 100.
 
     Returns one row per (group, q_pct): n, ks (actual sample size),
@@ -306,7 +308,7 @@ def bottomk_quantiles(df: DataFrame, group_col: str, value_col,
     rows = rows.withColumn("pri", md5_int(F.col("key"), salt=salt))
     samp = (rows.withColumn(
         "rn", F.row_number().over(
-            Window.partitionBy("g").orderBy("pri", "key")))
+            Window.partitionBy("g").orderBy("pri", "key", "v")))
         .where(F.col("rn") <= k).drop("rn").persist())
     ks = samp.groupBy("g").agg(F.count("*").alias("ks"))
     qlit = F.explode(F.array(*[F.lit(q) for q in quantiles]))

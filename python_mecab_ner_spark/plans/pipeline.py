@@ -136,7 +136,7 @@ def extract_graph(spark, pages_df, canonicalize=True, learned_stats=True,
         # the annotate stage feeds ~10 downstream subplans (stats
         # builds, context joins, level-3/4 scoring, spans, triples);
         # without materialization each one re-executes the whole
-        # tokenize+match mapInPandas.  Lazy-plan variant: persist
+        # tokenize+match mapInArrow.  Lazy-plan variant: persist
         # (memory+disk); run_pipeline checkpoints it to Parquet.
         from pyspark import StorageLevel
         annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)

@@ -2,7 +2,7 @@
 
 The batch engine's annotate stage is stateless and row-local, so the
 SAME operator graph runs unchanged on a streaming pages source:
-readStream(parquet dir) -> annotate (mapInPandas) -> triples ->
+readStream(parquet dir) -> annotate (mapInArrow) -> triples ->
 writeStream(parquet, exactly-once via checkpoint).  A crawler keeps
 appending WARC-derived parquet files; each micro-batch extracts
 triples incrementally with per-batch lineage in the checkpoint log.
@@ -54,7 +54,7 @@ def stream_pages(spark: SparkSession, input_dir: str,
 def stream_triples(pages_stream: DataFrame, gazetteer_rows_bc,
                    search_category=None) -> DataFrame:
     """Streaming triples: the batch annotate stage applied verbatim
-    (stateless mapInPandas is streaming-compatible)."""
+    (stateless mapInArrow is streaming-compatible)."""
     ann = annotate_pages(pages_stream, gazetteer_rows_bc,
                          search_category=search_category)
     return triples_table(ann)

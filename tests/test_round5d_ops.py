@@ -144,7 +144,7 @@ def _py_bottomk_quantiles(rows, k, quantiles):
         grp = [(v, key) for gg, v, key in rows if gg == g]
         n = len(grp)
         samp = sorted(grp, key=lambda t: (md5_int_py(t[1], salt="bkq:"),
-                                          t[1]))[:k]
+                                          t[1], t[0]))[:k]
         sv = sorted(v for v, _ in samp)
         ev = sorted(v for v, _ in grp)
         ks = len(samp)
@@ -174,6 +174,24 @@ def test_bottomk_quantiles_matches_python_twin(spark):
     # sample error should be bounded for a 64-of-1000 uniform sample
     for (g, q), (n, ks, est, exact) in got.items():
         assert abs(est - exact) < 200
+
+
+def test_bottomk_duplicate_keys_match_python_twin(spark):
+    """Duplicate keys tie on (pri, key); v breaks the tie, so the
+    sample, and with it every estimate, is the same in both engines."""
+    from pyspark.sql import functions as F
+
+    from python_mecab_ner_spark.operators.sketch import bottomk_quantiles
+    rng = random.Random(6)
+    rows = [(f"g{rng.randrange(2)}", rng.randrange(1000), f"k{i % 40}")
+            for i in range(2000)]
+    df = spark.createDataFrame(rows, ["g", "v", "key"]).repartition(4)
+    out = bottomk_quantiles(df, "g", F.col("v"), "key", k=64)
+    got = {(r["g"], r["q_pct"]): (r["n"], r["ks"], r["est"], r["exact"])
+           for r in out.collect()}
+    out.unpersist_input()
+    assert got == _py_bottomk_quantiles(
+        rows, k=64, quantiles=(10, 25, 50, 75, 90))
 
 
 def test_bottomk_merge_law():
