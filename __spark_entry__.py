@@ -5653,7 +5653,9 @@ def _lsh_plan_oracle_sql(shingle_cte: str, max_df: int) -> str:
 def q228_fresh_rank(spark, sf_dir):
     """Freshness-decayed authority rank: customer->supplier order
     edges weighted by power-of-two recency decay (q92's shiftright
-    discipline — weight 1024 halves per year of age, floor 1), then
+    discipline — weight 1024 halves per year of age, floor 1; the
+    age is clamped to 30 in both engines, because Spark masks a shift
+    count mod 32 and DuckDB does not), then
     the q68-certified weighted integer PageRank.  The crawl-
     scheduling composition: a host whose inlinks are ALL stale
     outranks nothing, however many there are — authority with a
@@ -5672,9 +5674,9 @@ def q228_fresh_rank(spark, sf_dir):
              .crossJoin(F.broadcast(mx))
              .select((F.col("o_custkey") * 2).alias("c"),
                      (F.col("l_suppkey") * 2 + 1).alias("s"),
-                     F.expr("greatest(shiftright(1024,"
-                            " CAST((mx - unix_date(CAST(o_orderdate"
-                            " AS DATE))) div 365 AS INT)), 1)")
+                     F.expr("greatest(shiftright(1024, least("
+                            "CAST((mx - unix_date(CAST(o_orderdate"
+                            " AS DATE))) div 365 AS INT), 30)), 1)")
                      .alias("w"))
              .groupBy("c", "s").agg(F.sum("w").alias("w")))
     edges = (pairs.select(F.col("c").alias("src"),
@@ -5695,10 +5697,10 @@ def _fresh_rank_oracle_sql(iters: int = 3, scale: int = 1_000_000,
                                - DATE '1970-01-01') AS mx
                     FROM orders),
         pairs AS (SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-                         CAST(sum(greatest(1024 >> CAST(
+                         CAST(sum(greatest(1024 >> least(CAST(
                              (mx.mx - (CAST(o_orderdate AS DATE)
                                        - DATE '1970-01-01')) // 365
-                             AS INT), 1)) AS BIGINT) AS w
+                             AS INT), 30), 1)) AS BIGINT) AS w
                   FROM orders JOIN lineitem
                     ON o_orderkey = l_orderkey
                   CROSS JOIN mx

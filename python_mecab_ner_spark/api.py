@@ -56,7 +56,7 @@ class MecabParser:
     def get_word_from_mecab_compound(self, is_list: bool = False):
         """Space-joined expanded words — the byte-identity anchor
         (reference mecab_parser.py:219-231)."""
-        ws = [t["word"] for t in self._toks()]
+        ws = list(self._toks().word)
         return ws if is_list else " ".join(ws)
 
     def restore(self) -> str:

@@ -30,9 +30,9 @@ SURVEY.md §7.4 item 2.
 from __future__ import annotations
 
 from collections import deque
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from .tokenizer import restore_tokens
+from .tokenizer import TokenColumns, restore_range
 
 MIN_MEANING = 2
 ENTITY_POS_LIST = frozenset([
@@ -51,7 +51,7 @@ class GazEntry:
     token_gate_len: int   # len(' '.join(pattern)), precomputed
 
 
-@dataclass
+@dataclass(slots=True)
 class Mention:
     start: int            # token index, inclusive
     end: int              # token index, exclusive (reference: "항상 1크다")
@@ -60,7 +60,7 @@ class Mention:
     small: str
 
 
-@dataclass
+@dataclass(slots=True)
 class NerSpan:
     start: int
     end: int              # exclusive
@@ -69,65 +69,72 @@ class NerSpan:
     small: str
 
 
-class AhoCorasick:
-    """Sequence-alphabet Aho-Corasick (symbols are strings: token words
-    or single characters).  find() yields (end_index_exclusive,
-    pattern_id) for every occurrence in one pass."""
+def _bits(start: int, end: int) -> int:
+    """Token range [start, end) as an int bitmask."""
+    return ((1 << (end - start)) - 1) << start
 
-    def __init__(self, patterns):
+
+class AhoCorasick:
+    """Sequence-alphabet Aho-Corasick (symbols are strings: token words,
+    single characters or POS tags).  `keys[i]` labels patterns[i]
+    (default: i); each node's outputs are precomputed at build as
+    (key, pattern length), so find() is one pass with no per-hit
+    lookups."""
+
+    def __init__(self, patterns, keys=None):
+        patterns = list(patterns)
+        keys = range(len(patterns)) if keys is None else keys
         # trie as list of dicts; node 0 = root
-        self.goto: list[dict] = [{}]
-        self.out: list[list[int]] = [[]]
-        self.fail: list[int] = [0]
-        for pid, pat in enumerate(patterns):
+        goto: list[dict] = [{}]
+        out: list[list] = [[]]
+        for key, pat in zip(keys, patterns):
             node = 0
             for sym in pat:
-                nxt = self.goto[node].get(sym)
+                nxt = goto[node].get(sym)
                 if nxt is None:
-                    self.goto.append({})
-                    self.out.append([])
-                    self.fail.append(0)
-                    nxt = len(self.goto) - 1
-                    self.goto[node][sym] = nxt
+                    goto.append({})
+                    out.append([])
+                    nxt = goto[node][sym] = len(goto) - 1
                 node = nxt
-            self.out[node].append(pid)
-        # BFS failure links
-        q = deque()
-        for child in self.goto[0].values():
-            q.append(child)
+            out[node].append((key, len(pat)))
+        # BFS: failure links, inherited outputs, and the transitions
+        # completed along the fail chain (a DFA) minus the root's, so a
+        # step is delta[node].get(sym) or root.get(sym, 0)
+        root = self.root = goto[0]
+        fail = [0] * len(goto)
+        delta: list[dict] = [{} for _ in goto]
+        q = deque(root.values())
         while q:
             node = q.popleft()
-            for sym, child in self.goto[node].items():
+            f = fail[node]
+            delta[node] = {**delta[f], **goto[node]}
+            for sym, child in goto[node].items():
                 q.append(child)
-                f = self.fail[node]
-                while f and sym not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[child] = self.goto[f].get(sym, 0)
-                if self.fail[child] == child:
-                    self.fail[child] = 0
-                self.out[child].extend(self.out[self.fail[child]])
+                fail[child] = delta[f].get(sym) or root.get(sym, 0)
+                out[child].extend(out[fail[child]])
+        self.delta = delta
+        self.out: list[tuple] = [tuple(o) for o in out]
 
-    def find(self, seq):
-        # hot path: bound locals + root fast path (on web text most
-        # symbols stay at the root, where the while/fail walk and the
-        # empty-out scan are pure overhead)
-        goto = self.goto
-        out = self.out
-        fail = self.fail
-        root = goto[0]
+    def find(self, seq) -> dict:
+        """{key: [(start, end_exclusive), ...]} for every occurrence,
+        each key's hits in end order."""
+        delta, out, root = self.delta, self.out, self.root
+        hits: dict = {}
         node = 0
-        for i, sym in enumerate(seq):
+        for i, sym in enumerate(seq, 1):
             if node:
-                g = goto[node]
-                while node and sym not in g:
-                    node = fail[node]
-                    g = goto[node]
-                node = g.get(sym, 0)
+                node = delta[node].get(sym) or root.get(sym, 0)
             else:
                 node = root.get(sym, 0)
             if node:
-                for pid in out[node]:
-                    yield i + 1, pid
+                for key, n in out[node]:
+                    span = (i - n, i)
+                    got = hits.get(key)
+                    if got is None:
+                        hits[key] = [span]
+                    else:
+                        got.append(span)
+        return hits
 
 
 class CompiledGazetteer:
@@ -148,24 +155,20 @@ class CompiledGazetteer:
             GazEntry(i, large, small, surface, tuple(tokenized.split()),
                      len(" ".join(tokenized.split())))
             for i, (large, small, surface, tokenized) in enumerate(ordered)]
-        self.token_ac = AhoCorasick([e.pattern for e in self.entries])
-        # char-mode only for surfaces of >=2 chars (min_meaning=2,
-        # reference mecab_ner.py:159)
-        self.char_entries = [e for e in self.entries if len(e.surface) >= 2]
-        self.char_ac = AhoCorasick([tuple(e.surface) for e in self.char_entries])
-
-
-def _candidates(gaz: CompiledGazetteer, token_words):
-    """One AC pass per mode -> {eid: [(start, end), ...]} per mode."""
-    tok_hits: dict[int, list] = {}
-    for end, pid in gaz.token_ac.find(token_words):
-        e = gaz.entries[pid]
-        tok_hits.setdefault(e.eid, []).append((end - len(e.pattern), end))
-    char_hits: dict[int, list] = {}
-    for end, pid in gaz.char_ac.find(token_words):
-        e = gaz.char_entries[pid]
-        char_hits.setdefault(e.eid, []).append((end - len(e.surface), end))
-    return tok_hits, char_hits
+        # one automaton for both modes over the token words: key 2*eid
+        # is the token-mode pattern, 2*eid + 1 the char-mode one (its
+        # chars match single-char tokens), so sorted keys replay in
+        # canonical entry order, token mode first.  char-mode only for
+        # surfaces of >=2 chars (min_meaning=2, reference mecab_ner.py:159)
+        chars = [e for e in self.entries if len(e.surface) >= 2]
+        self.ac = AhoCorasick(
+            [e.pattern for e in self.entries] + [tuple(e.surface) for e in chars],
+            [2 * e.eid for e in self.entries] + [2 * e.eid + 1 for e in chars])
+        # per key: (category, short-entity POS gate applies, surface,
+        # large, small); the gate is never short in char mode
+        self.accept = [((e.large, e.small), short, e.surface, e.large, e.small)
+                       for e in self.entries
+                       for short in (e.token_gate_len < MIN_MEANING, False)]
 
 
 def find_mentions(tokens, gaz: CompiledGazetteer):
@@ -176,38 +179,31 @@ def find_mentions(tokens, gaz: CompiledGazetteer):
     later match, so validity of a candidate reduces to non-intersection
     with previously accepted spans of the same small category.
     """
-    token_words = [t["word"] for t in tokens]
-    tok_hits, char_hits = _candidates(gaz, token_words)
+    cols = TokenColumns.of(tokens)
+    hits = gaz.ac.find(cols.word)
+    poses = cols.pos
     mentions: list[Mention] = []
-    masked: set = set()        # token idxs accepted for the current small cat
+    masked = 0                 # token bitmask accepted for the current small cat
     cur_cat = None
     # only entries with at least one candidate matter: entries without
     # hits accept nothing, so they influence neither masking nor the
-    # per-category reset (eid order == canonical entry order)
-    for eid in sorted(tok_hits.keys() | char_hits.keys()):
-        e = gaz.entries[eid]
-        cat = (e.large, e.small)
+    # per-category reset
+    for key in sorted(hits):
+        cat, short, surface, large, small = gaz.accept[key]
         if cat != cur_cat:
             cur_cat = cat
-            masked = set()
-        for mode_hits, gate_len in ((tok_hits, e.token_gate_len),
-                                    (char_hits, len(e.surface))):
-            spans = mode_hits.get(e.eid)
-            if not spans:
+            masked = 0
+        accepted = 0
+        for s, t in hits[key]:
+            bits = _bits(s, t)
+            if masked & bits:
                 continue
-            if mode_hits is char_hits and gate_len < MIN_MEANING:
+            # short-entity POS gate (reference mecab_ner.py:161-165)
+            if short and poses[t - 1] not in ENTITY_POS_LIST:
                 continue
-            accepted = []
-            for s, t in spans:
-                if any(i in masked for i in range(s, t)):
-                    continue
-                # short-entity POS gate (reference mecab_ner.py:161-165)
-                if gate_len < MIN_MEANING and tokens[t - 1]["pos"] not in ENTITY_POS_LIST:
-                    continue
-                accepted.append((s, t))
-            for s, t in accepted:
-                masked.update(range(s, t))
-                mentions.append(Mention(s, t, e.surface, e.large, e.small))
+            accepted |= bits
+            mentions.append(Mention(s, t, surface, large, small))
+        masked |= accepted
     return mentions
 
 
@@ -215,11 +211,15 @@ def infer_extend(mentions, tokens):
     """Left-extension through preceding NNG/NNP tokens, replicating the
     reference's token-0 quirk: token 0 is only reachable when
     start_idx == 1 (reference mecab_ner.py:196-205)."""
+    if not mentions:
+        return mentions
+    cols = TokenColumns.of(tokens)
+    poses, mcomp = cols.pos, cols.mecab_compound
     for m in mentions:
         end_point = -1 if m.start == 1 else 0
         for i in range(m.start - 1, end_point, -1):
-            if tokens[i]["pos"] in INFER_ENTITY_POS_LIST:
-                m.start = tokens[i]["mecab_compound"]
+            if poses[i] in INFER_ENTITY_POS_LIST:
+                m.start = mcomp[i]
                 continue
             break
     return mentions
@@ -228,20 +228,19 @@ def infer_extend(mentions, tokens):
 def merge_runs(mentions, n_tokens):
     """Bitmap fill + maximal-run merge -> [(start, end_inclusive)]
     (reference mecab_ner.py:50-75,208-222)."""
-    blank = bytearray(n_tokens)
+    mask = 0
     for m in mentions:
-        for i in range(m.start, m.end):
-            blank[i] = 1
+        mask |= _bits(m.start, m.end)
     runs = []
-    s = None
-    for i, v in enumerate(blank):
-        if v and s is None:
-            s = i
-        elif not v and s is not None:
-            runs.append((s, i - 1))
-            s = None
-    if s is not None:
-        runs.append((s, n_tokens - 1))
+    base = 0
+    while mask:
+        zeros = (mask & -mask).bit_length() - 1
+        mask >>= zeros
+        base += zeros
+        ones = (mask ^ (mask + 1)).bit_length() - 1
+        runs.append((base, base + ones - 1))
+        mask >>= ones
+        base += ones
     return runs
 
 
@@ -249,37 +248,44 @@ def ner_spans(tokens, mentions):
     """Merged runs + category re-attachment: a run takes the category of
     every mention whose end matches the run end (reference
     START_IDX=False policy, mecab_ner.py:252-258)."""
-    runs = merge_runs(mentions, len(tokens))
+    if not mentions:
+        return []
+    cols = TokenColumns.of(tokens)
+    by_end: dict[int, list] = {}
+    for m in mentions:
+        by_end.setdefault(m.end, []).append(m)
     spans: list[NerSpan] = []
-    for s, e in runs:
-        end_idx = e + 1
-        word = " ".join(restore_tokens(tokens[s:end_idx]))
-        for m in mentions:
-            if m.end == end_idx:
-                spans.append(NerSpan(s, end_idx, word, m.large, m.small))
+    for s, e in merge_runs(mentions, len(cols)):
+        ends = by_end.get(e + 1)
+        if ends:
+            word = " ".join(restore_range(cols, s, e + 1))
+            for m in ends:
+                spans.append(NerSpan(s, e + 1, word, m.large, m.small))
     return spans
 
 
 def interleave(tokens, spans):
     """First-match-wins token/NER interleave (reference
     mecab_ner.py:260-291).  Returns [(word, pos, large|None, small|None)]."""
-    covered = set()
+    cols = TokenColumns.of(tokens)
+    covered = 0
+    first: dict[int, NerSpan] = {}
     for sp in spans:
-        covered.update(range(sp.start, sp.end))
+        covered |= _bits(sp.start, sp.end)
+        first.setdefault(sp.end, sp)
     out = []
-    for idx, t in enumerate(tokens):
-        for sp in spans:
-            if idx + 1 == sp.end:
-                out.append((sp.word, "ner", sp.large, sp.small))
-                break
-        if idx in covered:
-            continue
-        out.append((t["word"], t["pos"], None, None))
+    for idx, (w, p) in enumerate(zip(cols.word, cols.pos)):
+        sp = first.get(idx + 1)
+        if sp is not None:
+            out.append((sp.word, "ner", sp.large, sp.small))
+        if not covered >> idx & 1:
+            out.append((w, p, None, None))
     return out
 
 
 def ner_parse(tokens, gaz: CompiledGazetteer, infer=True):
     """Full per-sentence NER flow; returns (interleaved, spans)."""
+    tokens = TokenColumns.of(tokens)
     mentions = find_mentions(tokens, gaz)
     if infer:
         mentions = infer_extend(mentions, tokens)

@@ -31,10 +31,9 @@ class PosSeqScanner:
     def scan(self, pos_tags):
         """pos_tags: list of POS strings -> [(start, end_exclusive,
         pos_seq_string)] non-overlapping, longest-first priority."""
-        hits: list = []
-        for end, pid in self.ac.find(list(pos_tags)):
-            pat = self.patterns[pid]
-            hits.append((len(pat), pid, end - len(pat), end))
+        hits = [(e - s, pid, s, e)
+                for pid, spans in self.ac.find(pos_tags).items()
+                for s, e in spans]
         # longest pattern first, then pattern priority, then position
         hits.sort(key=lambda h: (-h[0], h[1], h[2]))
         taken = [False] * len(pos_tags)

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from .matcher import (ENTITY_POS_LIST, INFER_ENTITY_POS_LIST, MIN_MEANING,
                       Mention)
-from .tokenizer import restore_tokens, tokenize
+from .tokenizer import TokenColumns, restore_range, tokenize
 
 
 def _scan(pattern_syms, sent_words):
@@ -41,14 +41,15 @@ def pyref_mentions(tokens, rows, search_category=None):
         rows = [r for r in rows if r[0] in allow]
     ordered = sorted(rows, key=lambda r: (r[0], r[1], -len(r[2]), r[2]))
 
+    cols = TokenColumns.of(tokens)
     mentions = []
     cur_cat = None
     sent_words = None
-    poses = [t["pos"] for t in tokens]
+    poses = cols.pos
     for large, small, surface, tokenized in ordered:
         if (large, small) != cur_cat:
             cur_cat = (large, small)
-            sent_words = [t["word"] for t in tokens]  # fresh copy per small cat
+            sent_words = list(cols.word)  # fresh copy per small cat
         for pattern_str, syms, min_meaning in (
                 (tokenized, tokenized.split(), 0),
                 (surface, list(surface), 2)):
@@ -74,8 +75,8 @@ def pyref_spans(text, rows, search_category=None, infer=True):
         for m in mentions:
             end_point = -1 if m.start == 1 else 0
             for i in range(m.start - 1, end_point, -1):
-                if tokens[i]["pos"] in INFER_ENTITY_POS_LIST:
-                    m.start = tokens[i]["mecab_compound"]
+                if tokens.pos[i] in INFER_ENTITY_POS_LIST:
+                    m.start = tokens.mecab_compound[i]
                     continue
                 break
 
@@ -102,7 +103,7 @@ def pyref_spans(text, rows, search_category=None, infer=True):
     out = []
     for s, e in spans:
         end_idx = e + 1
-        word = " ".join(restore_tokens(tokens[s:end_idx]))
+        word = " ".join(restore_range(tokens, s, end_idx))
         for m in mentions:
             if m.end == end_idx:
                 out.append((s, end_idx, word, m.large, m.small))

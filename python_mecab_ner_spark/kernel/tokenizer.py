@@ -8,13 +8,26 @@ indexes (`space` whitespace-token index, `mecab_token` pre-expansion
 index, `mecab_compound` post-expansion index; reference
 mecab_domain.py:61-77) and char offsets.
 
-This module is pure Python with no Spark imports: it is executed inside
-Arrow-batched pandas UDFs on executors AND by the single-process pyref
-oracle, guaranteeing one source of truth for the byte-identity
-invariant (extracted text per url).
+Layout: one document's tokens are a TokenColumns, one list per field
+(struct of arrays), not one dict per token.  `word`, `pos`, `reading`,
+`type` and `space` are filled eagerly by extending with per-eojeol
+column tuples, memoized per distinct eojeol (web eojeol vocabulary is
+heavy-tailed).  The rest are computed on first access: `has_jongseong`
+and `begin`/`end`/`mecab_token` from the per-eojeol entries and the
+text, `mecab_compound` is the token index and `label` is always "O".
+TokenColumns still reads as a sequence of the reference's token dicts.
+
+This module is pure Python with no Spark imports: it runs inside the
+Arrow-batched mapInArrow on executors AND in the single-process pyref
+oracle, one source of truth for the byte-identity invariant (extracted
+text per url).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
+from itertools import chain
+from operator import itemgetter
 
 from .jamo import has_jongseong, is_syllable
 from .lexicon import Lexicon, default_lexicon
@@ -24,34 +37,94 @@ TOKEN_FIELDS = (
     "word", "pos", "has_jongseong", "reading", "type",
     "space", "mecab_token", "mecab_compound", "begin", "end", "label",
 )
+_EAGER = ("word", "pos", "reading", "type", "space")
 
 
-_JONG_CACHE: dict = {}
+class TokenColumns(Sequence):
+    """One document's tokens, one list per TOKEN_FIELDS field.
 
+    Indexing and iteration build the reference's token dict on access,
+    and a TokenColumns compares equal to the list of those dicts.  The
+    kernel's hot path reads the columns (`word`, `pos`, ...) directly.
+    """
 
-def _has_jongseong_cached(word: str) -> bool:
-    v = _JONG_CACHE.get(word)
-    if v is None:
-        if len(_JONG_CACHE) >= 500_000:
-            _JONG_CACHE.clear()
-        v = _JONG_CACHE[word] = has_jongseong(word)
-    return v
+    __slots__ = _EAGER + ("_text", "_entries", "_lazy")
 
+    def __init__(self, word, pos, reading, type, space, text="",
+                 entries=(), lazy=None):
+        self.word, self.pos, self.reading = word, pos, reading
+        self.type, self.space = type, space
+        self._text, self._entries = text, entries
+        self._lazy = {} if lazy is None else lazy
 
-def _token(word, pos, reading, gtype, space, mtok, mcomp, begin, end):
-    return {
-        "word": word,
-        "pos": pos,
-        "has_jongseong": _has_jongseong_cached(word),
-        "reading": reading,
-        "type": gtype,
-        "space": space,
-        "mecab_token": mtok,
-        "mecab_compound": mcomp,
-        "begin": begin,
-        "end": end,
-        "label": "O",
-    }
+    @classmethod
+    def from_records(cls, records) -> TokenColumns:
+        """[token dict] (TOKEN_FIELDS keys) -> columns, every field
+        taken from the records as given."""
+        cols = {f: [r[f] for r in records] for f in TOKEN_FIELDS}
+        return cls(*(cols.pop(f) for f in _EAGER), lazy=cols)
+
+    @classmethod
+    def of(cls, tokens) -> TokenColumns:
+        return tokens if isinstance(tokens, cls) else cls.from_records(tokens)
+
+    def _field(self, name):
+        col = self._lazy.get(name)
+        if col is None:
+            if name == "has_jongseong":
+                col = list(chain.from_iterable(e[4] for e in self._entries))
+            elif name == "mecab_compound":
+                col = range(len(self.word))
+            elif name == "label":
+                col = ["O"] * len(self.word)
+            else:
+                self._positions()
+                col = self._lazy[name]
+            self._lazy[name] = col
+        return col
+
+    def _positions(self):
+        """begin/end from each eojeol's char offset in the text plus the
+        entry's relative spans; mecab_token from the group counts."""
+        begin, end, mtok = [], [], []
+        at = base = 0
+        for ej, e in zip(self._text.split(), self._entries):
+            eb = self._text.index(ej, at)
+            at = eb + len(ej)
+            for rb, re_, g in e[5]:
+                begin.append(eb + rb)
+                end.append(eb + re_)
+                mtok.append(base + g)
+            base += e[6]
+        self._lazy.update(begin=begin, end=end, mecab_token=mtok)
+
+    has_jongseong = property(lambda self: self._field("has_jongseong"))
+    mecab_token = property(lambda self: self._field("mecab_token"))
+    mecab_compound = property(lambda self: self._field("mecab_compound"))
+    begin = property(lambda self: self._field("begin"))
+    end = property(lambda self: self._field("end"))
+    label = property(lambda self: self._field("label"))
+
+    def __len__(self):
+        return len(self.word)
+
+    def __iter__(self):
+        cols = [getattr(self, f) for f in TOKEN_FIELDS]
+        return (dict(zip(TOKEN_FIELDS, vals)) for vals in zip(*cols))
+
+    def __getitem__(self, i):
+        if isinstance(i, slice):
+            return [self[j] for j in range(*i.indices(len(self)))]
+        return {f: getattr(self, f)[i] for f in TOKEN_FIELDS}
+
+    def __eq__(self, other):
+        if not isinstance(other, Sequence) or isinstance(other, str):
+            return NotImplemented
+        return len(self) == len(other) and all(
+            a == b for a, b in zip(self, other))
+
+    def __repr__(self):
+        return f"TokenColumns({list(self)!r})"
 
 
 def _fallback_group(ej: str, i: int):
@@ -73,23 +146,6 @@ def _fallback_group(ej: str, i: int):
 
 
 def _segment_eojeol(ej: str, lex: Lexicon):
-    """Memoized per-eojeol segmentation: web-corpus eojeol vocabulary
-    is heavy-tailed, so the per-worker cache converts repeat eojeols to
-    one dict hit.  Bounded (cleared at 200k entries) so a pathological
-    corpus cannot grow worker memory unboundedly."""
-    cache = getattr(lex, "_seg_cache", None)
-    if cache is None:
-        cache = lex._seg_cache = {}
-    groups = cache.get(ej)
-    if groups is None:
-        groups = _segment_eojeol_uncached(ej, lex)
-        if len(cache) >= 200_000:
-            cache.clear()
-        cache[ej] = groups
-    return groups
-
-
-def _segment_eojeol_uncached(ej: str, lex: Lexicon):
     """Eojeol -> tuple of groups.  Pinned whole-eojeol entries win;
     otherwise greedy longest-prefix over the chunk table with run-based
     fallback.  Deterministic by construction (no dict-order effects)."""
@@ -121,173 +177,146 @@ def _segment_eojeol_uncached(ej: str, lex: Lexicon):
     return tuple(groups)
 
 
-def _eojeol_token_protos(ej: str, lex: Lexicon):
-    """Memoized per-eojeol token PROTOTYPES: everything about the
-    emitted tokens that does not depend on sentence position —
-    (word, pos, has_jongseong, reading, type, rel_begin, rel_end,
-    group_idx) — plus the group count.  The tokenize() fallthrough
-    (plain eojeols, the overwhelmingly common case on a heavy-tailed
-    web corpus) then emits by offset arithmetic instead of re-running
-    the group walk per occurrence (the emit loop was ~30% of kernel
-    CPU).  Phrase pins and remainders keep the full emit path."""
-    cache = getattr(lex, "_proto_cache", None)
-    if cache is None:
-        cache = lex._proto_cache = {}
-    entry = cache.get(ej)
-    if entry is None:
-        protos = []
-        pos_in_ej = 0
-        g = 0
-        for gtype, reading, words_pos in _segment_eojeol(ej, lex):
-            if reading is None:
-                reading = "".join(w for w, _ in words_pos)
-            g_begin = pos_in_ej
-            g_end = g_begin + len(reading)
-            pos_in_ej = g_end
-            if gtype == "Inflect":
-                for w, p in words_pos:
-                    protos.append((w, p, _has_jongseong_cached(w), reading,
-                                   gtype, g_begin, g_end, g))
-            else:
-                b = g_begin
-                for w, p in words_pos:
-                    protos.append((w, p, _has_jongseong_cached(w), reading,
-                                   gtype, b, b + len(w), g))
-                    b += len(w)
-            g += 1
-        if len(cache) >= 200_000:
-            cache.clear()
-        entry = cache[ej] = (tuple(protos), g)
-    return entry
-
-
-def _match_phrase(ejs_low, i, lex: Lexicon):
-    """Multi-eojeol phrase pin at eojeol index i; the final eojeol may
-    carry a particle suffix (segmented separately).  Returns
-    (n_eojeols, [groups per eojeol], remainder_str) or None."""
-    for ptuple, entries in lex.phrases.get(ejs_low[i], []):
-        k = len(ptuple)
-        if i + k > len(ejs_low):
-            continue
-        if any(ejs_low[i + j] != ptuple[j] for j in range(k - 1)):
-            continue
-        last = ejs_low[i + k - 1]
-        if not last.startswith(ptuple[-1]):
-            continue
-        return k, list(entries), last[len(ptuple[-1]):]
-    return None
-
-
-def tokenize(text: str, lex: Lexicon | None = None) -> list[dict]:
-    """Sentence -> expanded token records (the reference's
-    gen_mecab_compound_token_feature output, mecab_parser.py:208-217)."""
-    lex = lex or default_lexicon()
-    ejs = text.split()
-    ejs_low = [e.lower() for e in ejs]
-    # eojeol char offsets in the original text
-    begins = []
-    offset = 0
-    for ej in ejs:
-        b = text.index(ej, offset)
-        begins.append(b)
-        offset = b + len(ej)
-
-    tokens: list[dict] = []
-    mtok = 0
-    mcomp = 0
-
-    def emit(groups, ej_begin, space_idx, start_in_ej=0):
-        nonlocal mtok, mcomp
-        pos_in_ej = start_in_ej
-        for gtype, reading, words_pos in groups:
-            if reading is None:
-                reading = "".join(w for w, _ in words_pos)
-            g_begin = ej_begin + pos_in_ej
-            g_end = g_begin + len(reading)
-            pos_in_ej += len(reading)
+def _columns(groups, phrase_head=False):
+    """One eojeol's groups -> its column entry: the (word, pos, reading,
+    type, has_jongseong) tuples of its expanded tokens, each token's
+    (rel_begin, rel_end, group index) inside the eojeol, the group
+    count, and whether the eojeol can start a phrase pin."""
+    word, pos, reading, gtypes, layout = [], [], [], [], []
+    at = 0
+    for g, (gtype, rd, words_pos) in enumerate(groups):
+        if rd is None:
+            rd = "".join(w for w, _ in words_pos)
+        g_begin, b = at, at
+        at += len(rd)
+        for w, p in words_pos:
+            word.append(w)
+            pos.append(p)
+            reading.append(rd)
+            gtypes.append(gtype)
             if gtype == "Inflect":
                 # sub-tokens share the whole group span (reference
                 # mecab_parser.py:182-190)
-                for w, p in words_pos:
-                    tokens.append(_token(w, p, reading, gtype, space_idx,
-                                         mtok, mcomp, g_begin, g_end))
-                    mcomp += 1
+                layout.append((g_begin, at, g))
             else:
-                b = g_begin
-                for w, p in words_pos:
-                    tokens.append(_token(w, p, reading, gtype, space_idx,
-                                         mtok, mcomp, b, b + len(w)))
-                    b += len(w)
-                    mcomp += 1
-            mtok += 1
-        return pos_in_ej
+                layout.append((b, b + len(w), g))
+                b += len(w)
+    return (tuple(word), tuple(pos), tuple(reading), tuple(gtypes),
+            tuple(map(has_jongseong, word)), tuple(layout), len(groups),
+            phrase_head)
 
+
+def _eojeol_columns(ej: str, lex: Lexicon):
+    """Memoized per-eojeol column entry: web-corpus eojeol vocabulary is
+    heavy-tailed, so a repeat eojeol costs one dict hit.  Bounded
+    (cleared at 200k entries) so a pathological corpus cannot grow
+    worker memory unboundedly."""
+    cache = getattr(lex, "_col_cache", None)
+    if cache is None:
+        cache = lex._col_cache = {}
+    entry = cache.get(ej)
+    if entry is None:
+        entry = _columns(_segment_eojeol(ej, lex), ej.lower() in lex.phrases)
+        if len(cache) >= 200_000:
+            cache.clear()
+        cache[ej] = entry
+    return entry
+
+
+def _match_phrase(ejs, i, lex: Lexicon):
+    """Multi-eojeol phrase pin at eojeol index i -> one column entry per
+    eojeol it covers, or None.  The final eojeol may carry a particle
+    suffix, segmented separately and appended to that eojeol's groups."""
+    for ptuple, entries in lex.phrases.get(ejs[i].lower(), []):
+        k = len(ptuple)
+        if i + k > len(ejs):
+            continue
+        if any(ejs[i + j].lower() != ptuple[j] for j in range(k - 1)):
+            continue
+        last = ejs[i + k - 1].lower()
+        if not last.startswith(ptuple[-1]):
+            continue
+        groups = list(entries)
+        groups[-1] += _segment_eojeol(last[len(ptuple[-1]):], lex)
+        return [_columns(g) for g in groups]
+    return None
+
+
+def _pin_phrases(ejs, entries, lex: Lexicon):
+    """Replace the plain entries of every phrase-pinned eojeol run."""
+    out = []
     i = 0
     while i < len(ejs):
-        hit = _match_phrase(ejs_low, i, lex) if ejs_low[i] in lex.phrases else None
-        if hit is not None:
-            k, per_ej_groups, remainder = hit
-            for j in range(k):
-                consumed = emit(per_ej_groups[j], begins[i + j], i + j)
-                if j == k - 1 and remainder:
-                    emit(_segment_eojeol(remainder, lex), begins[i + j], i + j,
-                         start_in_ej=consumed)
-            i += k
-            continue
-        # plain-eojeol fast path: cached prototypes + offset arithmetic
-        # (byte-identical to emit(_segment_eojeol(...), ...))
-        protos, n_groups = _eojeol_token_protos(ejs[i], lex)
-        eb = begins[i]
-        for w, p, jong, reading, gtype, rb, re_, gi in protos:
-            tokens.append({
-                "word": w, "pos": p, "has_jongseong": jong,
-                "reading": reading, "type": gtype, "space": i,
-                "mecab_token": mtok + gi, "mecab_compound": mcomp,
-                "begin": eb + rb, "end": eb + re_, "label": "O"})
-            mcomp += 1
-        mtok += n_groups
-        i += 1
-    return tokens
+        hit = entries[i][7] and _match_phrase(ejs, i, lex)
+        out += hit or (entries[i],)
+        i += len(hit) if hit else 1
+    return out
 
 
-def words(tokens: list[dict]) -> list[str]:
-    return [t["word"] for t in tokens]
+_PHRASE_HEAD = itemgetter(7)
+
+
+def tokenize(text: str, lex: Lexicon | None = None) -> TokenColumns:
+    """Sentence -> expanded token columns (the reference's
+    gen_mecab_compound_token_feature output, mecab_parser.py:208-217)."""
+    lex = lex or default_lexicon()
+    get = getattr(lex, "_col_cache", {}).get
+    ejs = text.split()
+    entries = [get(ej) or _eojeol_columns(ej, lex) for ej in ejs]
+    if any(map(_PHRASE_HEAD, entries)):
+        entries = _pin_phrases(ejs, entries, lex)
+    word, pos, reading, gtype, space = [], [], [], [], []
+    for i, e in enumerate(entries):
+        w = e[0]
+        word += w
+        pos += e[1]
+        reading += e[2]
+        gtype += e[3]
+        space += [i] * len(w)
+    return TokenColumns(word, pos, reading, gtype, space, text, entries)
 
 
 def extracted_text(text: str, lex: Lexicon | None = None) -> str:
     """The byte-identity anchor: space-joined expanded words (reference
     get_word_from_mecab_compound, mecab_parser.py:219-231)."""
-    return " ".join(words(tokenize(text, lex)))
+    return " ".join(tokenize(text, lex).word)
 
 
 _INFLECT_WORD_POS = ("NNG", "NNP", "XSN", "UNA")
 
 
-def restore_tokens(tokens: list[dict]) -> list[str]:
-    """Token slice -> original eojeol surfaces, one string per distinct
-    `space` index in ascending order (reference
+def restore_tokens(tokens) -> list[str]:
+    """Token sequence -> original eojeol surfaces, one string per
+    distinct `space` index in ascending order (reference
     mecab_storage.py:54-88).  Inflect groups with non-nominal POS emit
     their `reading` once (consecutive same reading+space deduped)."""
-    data: dict[int, list[str]] = {}
+    return restore_range(TokenColumns.of(tokens), 0, len(tokens))
+
+
+def restore_range(cols: TokenColumns, start: int, stop: int) -> list[str]:
+    """restore_tokens over the token slice [start, stop) of `cols`."""
+    word, pos, reading, gtype, space = (
+        cols.word, cols.pos, cols.reading, cols.type, cols.space)
+    data: dict[int, str] = {}
     tmp_word = None
     tmp_space = None
-    for t in tokens:
-        sp = t["space"]
-        if t["type"] is None:
-            data.setdefault(sp, []).append(t["word"])
+    for i in range(start, stop):
+        sp = space[i]
+        if gtype[i] is None:
+            rv = word[i]
             tmp_word = None
+        elif tmp_word == reading[i] and tmp_space == sp:
             continue
-        if tmp_word == t["reading"] and tmp_space == sp:
-            continue
-        if t["type"] == "Inflect" and t["pos"] not in _INFLECT_WORD_POS:
-            rv = t["reading"]
         else:
-            rv = t["word"]
-        data.setdefault(sp, []).append(rv)
-        tmp_word = rv
-        tmp_space = sp
-    return ["".join(data[k]) for k in sorted(data)]
+            if gtype[i] == "Inflect" and pos[i] not in _INFLECT_WORD_POS:
+                rv = reading[i]
+            else:
+                rv = word[i]
+            tmp_word = rv
+            tmp_space = sp
+        data[sp] = data[sp] + rv if sp in data else rv
+    return [data[k] for k in sorted(data)]
 
 
-def restore_surface(tokens: list[dict]) -> str:
+def restore_surface(tokens) -> str:
     return " ".join(restore_tokens(tokens))

@@ -15,40 +15,36 @@ sentence-window extractor:
   (방문 + 하 -> 방문하);
 - confidence decays with the subject-object token gap.
 
-Pure Python; executed inside pandas UDFs and by the pyref oracle.
+Pure Python; reads the token columns (kernel.tokenizer.TokenColumns);
+executed inside annotate's mapInArrow and by the pyref oracle.
 """
 
 from __future__ import annotations
+
+from itertools import accumulate
+from operator import attrgetter
+
+from .tokenizer import TokenColumns
 
 PRED_POS_PREFIXES = ("VV", "VA", "XSV")
 SEGMENT_BREAKERS = frozenset([".", "!", "?"])
 
 
-def _is_pred(pos: str) -> bool:
-    return pos.startswith(PRED_POS_PREFIXES)
-
-
-def _pred_surface(tokens, pred_idx: int) -> str:
+def _pred_surface(cols: TokenColumns, pred_idx: int) -> str:
     """Verb-stem word, extended left through contiguous noun tokens of
     the same eojeol (light-verb stems: 방문+하 -> 방문하)."""
-    parts = [tokens[pred_idx]["word"]]
-    sp = tokens[pred_idx]["space"]
-    i = pred_idx - 1
-    while i >= 0 and tokens[i]["space"] == sp and tokens[i]["pos"].startswith("N"):
-        parts.append(tokens[i]["word"])
+    word, pos, space = cols.word, cols.pos, cols.space
+    sp = space[pred_idx]
+    i = pred_idx
+    while i > 0 and space[i - 1] == sp and pos[i - 1].startswith("N"):
         i -= 1
-    return "".join(reversed(parts))
+    return "".join(word[i:pred_idx + 1])
 
 
-def _segment_id(tokens):
-    """Token index -> sentence segment ordinal (splits at ./!/?)."""
-    seg = []
-    cur = 0
-    for t in tokens:
-        seg.append(cur)
-        if t["word"] in SEGMENT_BREAKERS:
-            cur += 1
-    return seg
+def _segment_id(word):
+    """Token index -> sentence segment ordinal (splits at ./!/?): the
+    number of breakers before the token."""
+    return list(accumulate(map(SEGMENT_BREAKERS.__contains__, word), initial=0))
 
 
 def extract_triples(tokens, spans):
@@ -59,12 +55,14 @@ def extract_triples(tokens, spans):
     """
     if len(spans) < 2:
         return []
-    seg = _segment_id(tokens)
+    cols = TokenColumns.of(tokens)
+    pos = cols.pos
+    seg = _segment_id(cols.word)
     # one span per distinct start (first category wins, matching the
     # reference's first-match-wins interleave), position order
     seen = set()
     ordered = []
-    for sp in sorted(spans, key=lambda s: (s.start, s.end)):
+    for sp in sorted(spans, key=attrgetter("start", "end")):
         if sp.start in seen:
             continue
         seen.add(sp.start)
@@ -75,21 +73,21 @@ def extract_triples(tokens, spans):
         if seg[m1.start] != seg[m2.start]:
             continue
         pred_idx = None
-        for i in range(m2.end, len(tokens)):
+        for i in range(m2.end, len(pos)):
             if seg[i] != seg[m2.start]:
                 break
-            if _is_pred(tokens[i]["pos"]):
+            if pos[i].startswith(PRED_POS_PREFIXES):
                 pred_idx = i
                 break
         if pred_idx is None:
             for i in range(m1.end, m2.start):
-                if _is_pred(tokens[i]["pos"]):
+                if pos[i].startswith(PRED_POS_PREFIXES):
                     pred_idx = i
                     break
         if pred_idx is None:
             continue
         gap = m2.start - m1.end
-        triples.append((m1.word, _pred_surface(tokens, pred_idx), m2.word,
+        triples.append((m1.word, _pred_surface(cols, pred_idx), m2.word,
                         m1.start, m1.end, m2.start, m2.end,
                         round(1.0 / (1.0 + gap), 6)))
     return triples

@@ -16,6 +16,7 @@ this stage (plans.pipeline does, for extract_graph and run_pipeline).
 
 from __future__ import annotations
 
+from itertools import chain
 from operator import attrgetter, itemgetter
 
 import pyarrow as pa
@@ -25,7 +26,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..kernel.lexicon import default_lexicon
 from ..kernel.matcher import (CompiledGazetteer, find_mentions,
                               infer_extend, ner_spans)
-from ..kernel.tokenizer import tokenize, words
+from ..kernel.tokenizer import TokenColumns, tokenize
 from ..kernel.triples import extract_triples
 from .schemas import TOKENIZED_SCHEMA, annotated_schema
 
@@ -45,42 +46,56 @@ def _executor_gazetteer(rows_bc, bc_id, search_category) -> CompiledGazetteer:
     return gaz
 
 
-def _list_array(list_type, getters, records, offsets) -> pa.ListArray:
-    """Dremel-style nested column: each struct field read off the whole
-    batch's records into one child array, under int32 row offsets."""
-    struct, n = list_type.value_type, len(records)
+def _list_array(list_type, values_of, docs, offsets) -> pa.ListArray:
+    """Dremel-style nested column: one child array per struct field,
+    from that field's values over the whole batch's docs, under int32
+    row offsets."""
+    struct = list_type.value_type
     return pa.ListArray.from_arrays(
         pa.array(offsets, pa.int32()),
         pa.StructArray.from_arrays(
-            [pa.array(map(get, records), f.type, size=n)
-             for get, f in zip(getters, struct)],
+            [pa.array(v, f.type)
+             for v, f in zip(values_of(struct, docs), struct)],
             fields=list(struct)), type=list_type)
 
 
-# how a nested column's kernel records yield struct field (i, name):
-# token dicts by key, Mention/NerSpan by attribute, triples by position
-_GETTERS = {"tokens": lambda i, name: itemgetter(name),
-            "mentions": lambda i, name: attrgetter(name),
-            "spans": lambda i, name: attrgetter(name),
-            "triples": lambda i, name: itemgetter(i)}
+# a nested column's per-doc kernel values over a batch -> one list per
+# struct field, made as it is converted: TokenColumns by column,
+# Mention/NerSpan by attribute, triple tuples by position.  Lists, not
+# iterators: pa.array converts a list about twice as fast.
+def _token_values(struct, docs):
+    return (list(chain.from_iterable(map(attrgetter(f.name), docs)))
+            for f in struct)
+
+
+def _record_values(struct, docs):
+    flat = list(chain.from_iterable(docs))
+    return (list(map(attrgetter(f.name), flat)) for f in struct)
+
+
+def _triple_values(struct, docs):
+    flat = list(chain.from_iterable(docs))
+    return (list(map(itemgetter(i), flat)) for i in range(len(struct)))
+
+
+_VALUES = {"tokens": _token_values, "mentions": _record_values,
+           "spans": _record_values, "triples": _triple_values}
 
 
 def _map_columnar(batches, arrow, doc):
     """Arrow page batches -> Arrow batches of `arrow`.  `doc(text)` gives
     a page's computed fields by name; input fields pass through, cast to
     the output type; a field neither one gives (warc_ts, lang) is null."""
-    getters = {f.name: [_GETTERS[f.name](i, g.name)
-                        for i, g in enumerate(f.type.value_type)]
-               for f in arrow if f.name in _GETTERS}
     for batch in batches:
-        nested = {k: (get, [], [0]) for k, get in getters.items()}
+        nested = {f.name: (_VALUES[f.name], [], [0])
+                  for f in arrow if f.name in _VALUES}
         flat = {f.name: [] for f in arrow
                 if f.name not in nested and f.name not in batch.schema.names}
         for text in batch.column("text").to_pylist():
             rec = doc(text or "")
-            for k, (_, records, offsets) in nested.items():
-                records.extend(rec[k])
-                offsets.append(len(records))
+            for k, (_, docs, offsets) in nested.items():
+                docs.append(rec[k])
+                offsets.append(offsets[-1] + len(rec[k]))
             for k, col in flat.items():
                 col.append(rec.get(k))
         yield pa.RecordBatch.from_arrays(
@@ -121,14 +136,15 @@ def annotate_pages(pages_df, gazetteer_rows_bc, search_category=None,
         gaz = _executor_gazetteer(gazetteer_rows_bc, bc_id, search_category)
 
         def doc(text):
-            toks = tokenizer(text) if tokenizer else tokenize(text, lex)
+            toks = (TokenColumns.from_records(tokenizer(text)) if tokenizer
+                    else tokenize(text, lex))
             raw = find_mentions(toks, gaz)
             raw = infer_extend(raw, toks) if infer else raw
             spans = ner_spans(toks, raw)
             triples = extract_triples(toks, spans) if with_triples else ()
             return {"tokens": toks, "mentions": raw, "spans": spans,
-                    "triples": triples, "n_tokens": len(toks),
-                    "extracted_text": " ".join(words(toks))}
+                    "triples": triples, "n_tokens": len(toks.word),
+                    "extracted_text": " ".join(toks.word)}
         return _map_columnar(batches, arrow, doc)
 
     return pages_df.select(*cols).mapInArrow(process, schema=schema)

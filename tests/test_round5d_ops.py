@@ -999,16 +999,16 @@ def test_lsh_plan_audit_matches_python_twin(spark):
 
 def test_fresh_rank_decay_expression(spark):
     # the q228 edge weight: 1024 halves per year of age, floor 1 —
-    # exact shiftright semantics, identical to python's >> on every
-    # age the data can produce
+    # identical to python's >> on every age, including 32+ years,
+    # where an unclamped shiftright count wraps mod 32 (1024 again)
     from pyspark.sql import functions as F
-    df = spark.range(0, 4000, 137).select(
-        F.col("id").alias("age"),
-        F.expr("greatest(shiftright(1024,"
-               " CAST(age div 365 AS INT)), 1)").alias("w"))
+    ages = list(range(0, 4000, 137)) + [y * 365 for y in (30, 31, 32, 33, 64)]
+    df = spark.createDataFrame([(a,) for a in ages], "age bigint").select(
+        "age",
+        F.expr("greatest(shiftright(1024, least("
+               "CAST(age div 365 AS INT), 30)), 1)").alias("w"))
     got = {r["age"]: r["w"] for r in df.collect()}
-    assert got == {a: max(1024 >> (a // 365), 1)
-                   for a in range(0, 4000, 137)}
+    assert got == {a: max(1024 >> (a // 365), 1) for a in ages}
     # a stale-only node's inbound mass is ~1/1024 of a fresh one's:
     # the decay spans three orders of magnitude across TPC-H's
     # seven-year order window
