@@ -5,9 +5,14 @@ match M1-M11, triple extraction) is row-local, so it runs as ONE
 Arrow-batched mapInArrow over the pages scan — a single narrow stage
 with zero shuffles that scales linearly with executors.  The compiled
 gazetteer rows are broadcast once; each executor builds the
-Aho-Corasick automaton lazily on first use and caches it
-process-wide (fixing the reference's per-sentence gazetteer re-read,
+Aho-Corasick automaton lazily on first use and keeps the latest one
+per category (fixing the reference's per-sentence gazetteer re-read,
 mecab_ner.py:146, and per-instance tagger load, mecab_parser.py:116).
+
+Batch invariant: a batch in flight holds only flat lists of ints and
+strings, one per output struct field.  A page's kernel records go into
+them as the page is done and die with it; held to batch end they made
+CPython's cyclic GC re-walk the worker's automaton and lexicon.
 
 Column pruning: only (url, warc_ts, text, lang) are read — the `html`
 binary column never leaves the scan when the caller selects before
@@ -16,7 +21,7 @@ this stage (plans.pipeline does, for extract_graph and run_pipeline).
 
 from __future__ import annotations
 
-from itertools import chain
+from functools import partial
 from operator import attrgetter, itemgetter
 
 import pyarrow as pa
@@ -30,79 +35,85 @@ from ..kernel.tokenizer import TokenColumns, tokenize
 from ..kernel.triples import extract_triples
 from .schemas import TOKENIZED_SCHEMA, annotated_schema
 
-# per-executor automaton cache: key -> CompiledGazetteer
+# per-executor automaton cache: search_category -> (broadcast id,
+# CompiledGazetteer), for the latest broadcast only (~1.4 MB each)
 _GAZ_CACHE: dict = {}
 
 
 def _executor_gazetteer(rows_bc, bc_id, search_category) -> CompiledGazetteer:
-    # keyed by Spark's monotonically increasing broadcast id (resolved
+    # bc_id is Spark's monotonically increasing broadcast id (resolved
     # driver-side in annotate_pages) — NOT id(rows_bc), which CPython
     # can reuse after GC and silently alias two different broadcasts
-    key = (bc_id, tuple(search_category) if search_category else None)
-    gaz = _GAZ_CACHE.get(key)
-    if gaz is None:
-        gaz = CompiledGazetteer(rows_bc.value, search_category)
-        _GAZ_CACHE[key] = gaz
-    return gaz
+    key = tuple(search_category) if search_category else None
+    if _GAZ_CACHE.get(key, (None,))[0] != bc_id:
+        _GAZ_CACHE[key] = (bc_id, CompiledGazetteer(rows_bc.value, search_category))
+    return _GAZ_CACHE[key][1]
 
 
-def _list_array(list_type, values_of, docs, offsets) -> pa.ListArray:
+def _list_array(list_type, children, offsets) -> pa.ListArray:
     """Dremel-style nested column: one child array per struct field,
-    from that field's values over the whole batch's docs, under int32
-    row offsets."""
+    from that field's values over the batch, under int32 row offsets."""
     struct = list_type.value_type
     return pa.ListArray.from_arrays(
         pa.array(offsets, pa.int32()),
         pa.StructArray.from_arrays(
-            [pa.array(v, f.type)
-             for v, f in zip(values_of(struct, docs), struct)],
+            [pa.array(v, f.type) for v, f in zip(children, struct)],
             fields=list(struct)), type=list_type)
 
 
-# a nested column's per-doc kernel values over a batch -> one list per
-# struct field, made as it is converted: TokenColumns by column,
-# Mention/NerSpan by attribute, triple tuples by position.  Lists, not
-# iterators: pa.array converts a list about twice as fast.
-def _token_values(struct, docs):
-    return (list(chain.from_iterable(map(attrgetter(f.name), docs)))
-            for f in struct)
-
-
-def _record_values(struct, docs):
-    flat = list(chain.from_iterable(docs))
-    return (list(map(attrgetter(f.name), flat)) for f in struct)
-
-
-def _triple_values(struct, docs):
-    flat = list(chain.from_iterable(docs))
-    return (list(map(itemgetter(i), flat)) for i in range(len(struct)))
-
-
-_VALUES = {"tokens": _token_values, "mentions": _record_values,
-           "spans": _record_values, "triples": _triple_values}
+def _field_readers(field):
+    """Per struct field, page value -> that field's values: TokenColumns
+    by column, Mention/NerSpan by attribute, triple tuples by position."""
+    struct = field.type.value_type
+    if field.name == "triples":
+        return [partial(map, itemgetter(i)) for i in range(len(struct))]
+    get = [attrgetter(f.name) for f in struct]
+    return get if field.name == "tokens" else [partial(map, g) for g in get]
 
 
 def _map_columnar(batches, arrow, doc):
     """Arrow page batches -> Arrow batches of `arrow`.  `doc(text)` gives
     a page's computed fields by name; input fields pass through, cast to
-    the output type; a field neither one gives (warc_ts, lang) is null."""
+    the output type; a field neither one gives (warc_ts, lang) is null.
+    Nested fields go into flat child lists as each page is done, so no
+    per-record object outlives its page (the batch invariant, above)."""
     for batch in batches:
-        nested = {f.name: (_VALUES[f.name], [], [0])
-                  for f in arrow if f.name in _VALUES}
+        nested = {f.name: (_field_readers(f),
+                           [[] for _ in f.type.value_type], [0])
+                  for f in arrow if pa.types.is_list(f.type)}
         flat = {f.name: [] for f in arrow
                 if f.name not in nested and f.name not in batch.schema.names}
         for text in batch.column("text").to_pylist():
             rec = doc(text or "")
-            for k, (_, docs, offsets) in nested.items():
-                docs.append(rec[k])
-                offsets.append(offsets[-1] + len(rec[k]))
+            for k, (readers, children, offsets) in nested.items():
+                value = rec[k]
+                offsets.append(offsets[-1] + len(value))
+                for read, child in zip(readers, children):
+                    child.extend(read(value))
             for k, col in flat.items():
                 col.append(rec.get(k))
         yield pa.RecordBatch.from_arrays(
-            [_list_array(f.type, *nested[f.name]) if f.name in nested
+            [_list_array(f.type, *nested[f.name][1:]) if f.name in nested
              else pa.array(flat[f.name], f.type) if f.name in flat
              else batch.column(f.name).cast(f.type) for f in arrow],
             schema=arrow)
+
+
+def _page_kernel(gaz, infer=True, with_triples=True, tokenizer=None):
+    """annotate_pages' per-page call: text -> its computed fields."""
+    lex = default_lexicon() if tokenizer is None else None
+
+    def doc(text):
+        toks = (TokenColumns.from_records(tokenizer(text)) if tokenizer
+                else tokenize(text, lex))
+        raw = find_mentions(toks, gaz)
+        raw = infer_extend(raw, toks) if infer else raw
+        spans = ner_spans(toks, raw)
+        triples = extract_triples(toks, spans) if with_triples else ()
+        return {"tokens": toks, "mentions": raw, "spans": spans,
+                "triples": triples, "n_tokens": len(toks.word),
+                "extracted_text": " ".join(toks.word)}
+    return doc
 
 
 def annotate_pages(pages_df, gazetteer_rows_bc, search_category=None,
@@ -132,20 +143,9 @@ def annotate_pages(pages_df, gazetteer_rows_bc, search_category=None,
     bc_id = gazetteer_rows_bc._jbroadcast.id()  # stable unique cache key
 
     def process(batches):
-        lex = default_lexicon() if tokenizer is None else None
         gaz = _executor_gazetteer(gazetteer_rows_bc, bc_id, search_category)
-
-        def doc(text):
-            toks = (TokenColumns.from_records(tokenizer(text)) if tokenizer
-                    else tokenize(text, lex))
-            raw = find_mentions(toks, gaz)
-            raw = infer_extend(raw, toks) if infer else raw
-            spans = ner_spans(toks, raw)
-            triples = extract_triples(toks, spans) if with_triples else ()
-            return {"tokens": toks, "mentions": raw, "spans": spans,
-                    "triples": triples, "n_tokens": len(toks.word),
-                    "extracted_text": " ".join(toks.word)}
-        return _map_columnar(batches, arrow, doc)
+        return _map_columnar(batches, arrow, _page_kernel(
+            gaz, infer, with_triples, tokenizer))
 
     return pages_df.select(*cols).mapInArrow(process, schema=schema)
 
