@@ -14,6 +14,13 @@ strings, one per output struct field.  A page's kernel records go into
 them as the page is done and die with it; held to batch end they made
 CPython's cyclic GC re-walk the worker's automaton and lexicon.
 
+Task entry: a reused Python worker calls importlib.invalidate_caches()
+before every task, and on CPython 3.11 each zipimporter cached in
+sys.path_importer_cache then re-parses its whole archive directory
+(pyspark.zip, py4j, the spark-core jar: ~27k entries, 16 importers in
+a warm worker).  Both stages drop those importers first thing, so the
+next task in the worker starts without that re-read.
+
 Column pruning: only (url, warc_ts, text, lang) are read — the `html`
 binary column never leaves the scan when the caller selects before
 this stage (plans.pipeline does, for extract_graph and run_pipeline).
@@ -21,6 +28,8 @@ this stage (plans.pipeline does, for extract_graph and run_pipeline).
 
 from __future__ import annotations
 
+import sys
+import zipimport
 from functools import partial
 from operator import attrgetter, itemgetter
 
@@ -38,6 +47,16 @@ from .schemas import TOKENIZED_SCHEMA, annotated_schema
 # per-executor automaton cache: search_category -> (broadcast id,
 # CompiledGazetteer), for the latest broadcast only (~1.4 MB each)
 _GAZ_CACHE: dict = {}
+
+
+def _drop_zip_importers() -> None:
+    """Delete every zipimporter from sys.path_importer_cache.  It is only
+    a cache: a later import through the same path entry builds a new
+    importer from zipimport's per-archive directory cache, without
+    reading the archive again (archives do not change under a worker)."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)
 
 
 def _executor_gazetteer(rows_bc, bc_id, search_category) -> CompiledGazetteer:
@@ -143,6 +162,7 @@ def annotate_pages(pages_df, gazetteer_rows_bc, search_category=None,
     bc_id = gazetteer_rows_bc._jbroadcast.id()  # stable unique cache key
 
     def process(batches):
+        _drop_zip_importers()
         gaz = _executor_gazetteer(gazetteer_rows_bc, bc_id, search_category)
         return _map_columnar(batches, arrow, _page_kernel(
             gaz, infer, with_triples, tokenizer))
@@ -158,6 +178,7 @@ def tokenize_pages(pages_df):
     arrow = to_arrow_schema(TOKENIZED_SCHEMA)
 
     def process(batches):
+        _drop_zip_importers()
         lex = default_lexicon()
         return _map_columnar(batches, arrow,
                              lambda text: {"tokens": tokenize(text, lex)})

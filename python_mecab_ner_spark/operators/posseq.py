@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# per-executor scanner cache: broadcast id -> PosSeqScanner, for the
+# latest broadcast only
 _SCANNER_CACHE: dict = {}
 
 CANDIDATE_SCHEMA = T.StructType([
@@ -58,6 +60,7 @@ def _scanner(patterns_bc, bc_id):
     sc = _SCANNER_CACHE.get(bc_id)
     if sc is None:
         sc = PosSeqScanner([tuple(p.split("+")) for p in patterns_bc.value])
+        _SCANNER_CACHE.clear()
         _SCANNER_CACHE[bc_id] = sc
     return sc
 

@@ -1,6 +1,9 @@
 """POS-sequence scan (reference L7 contains/get_pos_seq_category)."""
 
+from types import SimpleNamespace
+
 from python_mecab_ner_spark.kernel.posseq import PosSeqScanner
+from python_mecab_ner_spark.operators import posseq
 
 
 def test_scanner_longest_first_nonoverlap():
@@ -18,6 +21,16 @@ def test_scanner_reference_masking_semantics():
     sc = PosSeqScanner([("VA", "ETM", "NNG"), ("NNG",)])
     spans = sc.scan(["VA", "ETM", "NNG", "JKO"])
     assert spans == [(0, 3, "VA+ETM+NNG")]
+
+
+def test_one_scanner_per_worker(monkeypatch):
+    """A newer pattern broadcast replaces the worker's scanner instead of
+    adding one."""
+    monkeypatch.setattr(posseq, "_SCANNER_CACHE", {})
+    bc = SimpleNamespace(value=["NNG+NNG", "NNP"])
+    built = [posseq._scanner(bc, bc_id) for bc_id in (1, 2, 2)]
+    assert built[0] is not built[1] and built[1] is built[2]
+    assert list(posseq._SCANNER_CACHE.items()) == [(2, built[1])]
 
 
 def test_learn_and_scan_spark(spark):
