@@ -4468,9 +4468,8 @@ def q207_interval_join(spark, sf_dir):
     (operators.spans.interval_join): lineitem shipping intervals
     [shipdate, receiptdate] against 40 overlapping 80-day audit
     windows, aggregated per window — the interval x interval member
-    of the temporal-join family (q31 = point x latest as-of;
-    streaming/joins.py = watermarked stream case).  The rewrite
-    turns the theta-join Spark would BNL-plan into a partitionable
+    of the temporal-join family (q31 = point x latest as-of).  The
+    rewrite turns the theta-join Spark would BNL-plan into a partitionable
     equi-join on 64-day buckets, each pair counted once at its
     overlap-start bucket (no dedup shuffle).  Dates become
     NON-NEGATIVE epoch-day integers via unix_date (zone-free, the

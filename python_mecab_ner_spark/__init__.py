@@ -17,7 +17,8 @@ Layout:
     operators/  Spark DataFrame operators (tokenize, mentions, spans,
                 triples, linking, canonicalize, graph, dedup, ann).
     plans/      end-to-end pipeline orchestration, lineage + resume.
-    streaming/  batch-incremental checkpointed runner.
+    streaming/  the Structured-Streaming ingest query (pages -> triples,
+                exactly once per input file via its checkpoint).
 """
 
 __version__ = "0.1.0"

@@ -205,37 +205,6 @@ def _let(val, body) -> Column:
     return F.element_at(F.transform(F.array(val), body), 1)
 
 
-def simhash16(col) -> Column:
-    """ROW-LOCAL 16-bit SimHash over whitespace words: per bit, the
-    sign of the sum of +-1 votes from each word's portable hash —
-    identical bit semantics to operators.dedup.simhash64(n_bits=16)
-    but computed with array expressions (split -> transform ->
-    aggregate) instead of explode + groupBy, so it runs per-row with
-    no shuffle and no state: the streaming-safe near-dup key
-    (streaming.ingest.stream_neardup).  The hash array is _let-bound:
-    16 per-bit aggregates otherwise re-split + re-hash the text 16x."""
-    words = F.filter(F.split(F.lower(F.trim(col)), r"\s+"),
-                     lambda w: w != "")
-    hashes = F.transform(words, lambda w: md5_int(w))
-
-    def _assemble(hs):
-        def _vote(bit):
-            return F.aggregate(
-                hs, F.lit(0),
-                lambda acc, h: acc + F.when(
-                    F.shiftright(h, bit).bitwiseAND(F.lit(1)) == 1,
-                    F.lit(1)).otherwise(F.lit(-1)))
-
-        bit_terms = [F.when(_vote(i) > 0, F.lit(1 << i))
-                     .otherwise(F.lit(0)) for i in range(16)]
-        out = bit_terms[0]
-        for t in bit_terms[1:]:
-            out = out + t
-        return out
-
-    return _let(hashes, _assemble).cast("int")
-
-
 # PII patterns (applied in THIS order — the resident-ID pattern must
 # run before the phone pattern so its 6-digit prefix is never eaten
 # by a partial phone match).  Plain RE2-compatible syntax so the Java

@@ -354,24 +354,17 @@ def brute_link(unlinked: DataFrame, context_df: DataFrame,
 def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
                   context_df: DataFrame | None = None,
                   neighbor_stats_df: DataFrame | None = None,
-                  core_stats_df: DataFrame | None = None,
-                  disambig: str = "neighbor") -> DataFrame:
+                  core_stats_df: DataFrame | None = None) -> DataFrame:
     """mentions (url, start, end, surface, large, small) ->
     + (entity_id, link_level, link_score); unlinkable mentions keep
     entity_id NULL at level LEVEL_UNLINKED.
 
     Without context/stats the ladder is levels 0-2 (+ NULL); with them
     the full 6-level ladder runs and learned evidence disambiguates
-    multi-candidate spans inside the final rank-1 window.  `disambig`
-    selects WHICH of the reference's two homonym policies orders that
-    window:
-      "neighbor"  — delete_duplicate_value: +-3 capped-product
-                    neighbor score (mecab_category_storage.py:39-63);
-      "duplicate" — delete_duplicate: +-5 raw core+neighbor sum,
-                    POS-gated (mecab_category_storage.py:619-656).
-    The level-3 evidence GATE always uses the neighbor score (that is
-    the NEIGHBOR level's acceptance criterion, independent of the
-    rank-1 policy).
+    multi-candidate spans inside the final rank-1 window.  That window
+    is ordered by the reference's delete_duplicate_value policy: the
+    +-3 capped-product neighbor score (mecab_category_storage.py:39-63),
+    the same score that gates level-3 candidates.
 
     Deliberately ONE lazy job: the consumer's single action computes
     every persisted working set with full stage overlap.  The
@@ -382,8 +375,6 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
     ~15 MiB per-stage task binaries the monolithic plan serializes —
     buys nothing at scale, since task-binary size is bounded by PLAN
     size (a constant), not by data."""
-    if disambig not in ("neighbor", "duplicate"):
-        raise ValueError(f"unknown disambig policy: {disambig!r}")
     # persist the entity-dim projection: it is referenced by FOUR
     # candidate branches (l0/l1/l2/l3) which the ladder's windows,
     # scoring joins, and anti-joins then re-reference — un-cached, the
@@ -471,9 +462,6 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
                  .persist())  # anti-join + suffix join run once, not 3x
         candidates = cand_ws.unionByName(l3_ws)
 
-    with_dup = (with_stats and disambig == "duplicate"
-                and core_stats_df is not None)
-    if with_stats:
         # Evidence scoring is only DECISIVE for (a) level-3 candidates
         # (the n_score > 1 acceptance gate) and (b) spans whose
         # candidates carry MORE THAN ONE label — scores are keyed by
@@ -495,18 +483,8 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
                 .withColumn("n_score", F.lit(1).cast("bigint")))
         # ONE evidence-scoring pass over the decisive subset: scores
         # the level-3 evidence floor AND the in-window homonym
-        # disambiguation (reference delete_duplicate_value).  When the
-        # rank policy is "duplicate" BOTH scores are needed (the gate
-        # is always the neighbor score), so the fused scorer computes
-        # them from a single context join instead of two.
-        if with_dup:
-            scored = add_evidence_scores(need, context_df,
-                                         neighbor_stats_df,
-                                         core_stats_df)
-        else:
-            scored = add_neighbor_scores(need, context_df,
-                                         neighbor_stats_df)
-        scored = (scored
+        # disambiguation (reference delete_duplicate_value)
+        scored = (add_neighbor_scores(need, context_df, neighbor_stats_df)
                   .where((F.col("link_level") != 3)
                          | (F.col("n_score") > 1))
                   .withColumn(
@@ -514,24 +492,18 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
                       F.when(F.col("link_level") == 3,
                              F.col("n_score"))
                       .otherwise(F.col("link_score"))))
-        if with_dup:
-            solo = solo.withColumn("d_score", F.lit(0).cast("bigint"))
         candidates = scored.unionByName(solo)
     else:
         candidates = candidates.withColumn("n_score",
                                            F.lit(1).cast("bigint"))
 
-    # rank-1 per mention: best level, then the selected homonym
-    # evidence (the reference's disambiguation), then level score,
-    # stable id
-    rank_score = F.col("d_score") if with_dup else F.col("n_score")
+    # rank-1 per mention: best level, then the neighbor evidence (the
+    # reference's disambiguation), then level score, stable id
     w = Window.partitionBy(*SPAN_KEY).orderBy(
-        F.col("link_level").asc(), rank_score.desc(),
+        F.col("link_level").asc(), F.col("n_score").desc(),
         F.col("link_score").desc(), F.col("entity_id").asc())
-    drop_cols = ["_rn", "n_score", "n_label"] + \
-        (["d_score"] if with_dup else [])
     best = (candidates.withColumn("_rn", F.row_number().over(w))
-            .filter("_rn = 1").drop(*drop_cols)
+            .filter("_rn = 1").drop("_rn", "n_score", "n_label")
             .persist())
 
     linked_parts = [best.select(OUT_COLS)]

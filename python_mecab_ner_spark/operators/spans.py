@@ -405,8 +405,8 @@ def interval_join(left: DataFrame, right: DataFrame,
     keeping it only in the bucket where the overlap STARTS
     (bucket == greatest(l_start, r_start) div width) — no
     distinct/dedup shuffle.  The batch interval x interval member
-    of the temporal-join family: q31's as-of join handles point x
-    latest, streaming/joins.py the watermarked stream case.
+    of the temporal-join family; q31's as-of join handles point x
+    latest.
 
     Endpoints are inclusive integers and must be NON-NEGATIVE
     (div truncates toward zero, so negative starts would land in

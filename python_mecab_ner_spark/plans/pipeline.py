@@ -46,7 +46,7 @@ def _annotate(pages_df, bc, learned_stats=True):
 
 
 def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
-                 kb_holdout_mod=None, disambig="neighbor") -> dict:
+                 kb_holdout_mod=None) -> dict:
     """Everything after annotate, over an already-materialized
     `annotated` frame: the lazily planned graph dict plus its
     `release` hook."""
@@ -73,7 +73,7 @@ def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
     linked = link_mentions(
         spans.withColumnRenamed("word", "surface"), entities,
         context_df=context, neighbor_stats_df=nstats,
-        core_stats_df=cstats, disambig=disambig)
+        core_stats_df=cstats)
 
     canonical = canonical_map(entities) if canonicalize else None
     # label universe = the DETECTOR-side gazetteer larges (brute
@@ -111,7 +111,7 @@ def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
 
 
 def extract_graph(spark, pages_df, canonicalize=True, learned_stats=True,
-                  kb_holdout_mod=None, disambig="neighbor"):
+                  kb_holdout_mod=None):
     """Returns a dict of lazily-planned DataFrames:
     annotated, mentions, spans, triples, entities, linked, vertices,
     edges (+ canonical when canonicalize=True; + context/neighbor_stats
@@ -142,7 +142,7 @@ def extract_graph(spark, pages_df, canonicalize=True, learned_stats=True,
         annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
     g = _build_graph(annotated, gaz_df, canonicalize=canonicalize,
                      learned_stats=learned_stats,
-                     kb_holdout_mod=kb_holdout_mod, disambig=disambig)
+                     kb_holdout_mod=kb_holdout_mod)
     g["pages"] = pages_df
     return g
 

@@ -39,8 +39,6 @@ def main() -> int:
     ap.add_argument("--docs", type=int, default=50_000)
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=32)
-    ap.add_argument("--disambig", default="neighbor",
-                    choices=["neighbor", "duplicate"])
     ap.add_argument("--skew-pct", type=float, default=0.0,
                     help="inject --skew-entity into this fraction of "
                          "Korean docs (head-entity skew stressor)")
@@ -81,8 +79,7 @@ def main() -> int:
     def run_once(i):
         p = pages.where(F.col("url") != F.lit(f"zz{i}"))  # fresh lineage
         t0 = time.time()
-        g = extract_graph(spark, p, canonicalize=False, kb_holdout_mod=20,
-                          disambig=args.disambig)
+        g = extract_graph(spark, p, canonicalize=False, kb_holdout_mod=20)
         hist = {r.link_level: r.n for r in
                 g["linked"].groupBy("link_level")
                 .agg(F.count("*").alias("n")).collect()}
@@ -107,7 +104,6 @@ def main() -> int:
 
     print(json.dumps({
         "metric": "full_6level_link_wall",
-        "disambig": args.disambig,
         "skew_pct": args.skew_pct,
         "docs": args.docs,
         "cpus": args.cpus,

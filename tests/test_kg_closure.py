@@ -1,0 +1,80 @@
+"""Import closure of the knowledge-graph path, walked statically (no
+Spark, nothing imported): the package modules reachable from the batch
+build, the streaming ingest query, the public API and the kernel's
+pure-Python reference.
+
+The list below is the whole closure.  A module joining it (an operator
+import sneaking back into the KG path, say through a lazy
+function-level import) or leaving it must be a deliberate edit here."""
+
+import ast
+from pathlib import Path
+
+PKG = "python_mecab_ner_spark"
+PKG_DIR = Path(__file__).resolve().parent.parent / PKG
+
+ROOTS = ("plans.pipeline", "streaming.ingest", "api", "kernel.pyref")
+
+KG_CLOSURE = {
+    "api",
+    "functions.hashing",
+    "kernel.jamo",
+    "kernel.lexicon",
+    "kernel.matcher",
+    "kernel.pyref",
+    "kernel.stats",
+    "kernel.tokenizer",
+    "kernel.triples",
+    "operators.annotate",
+    "operators.canonicalize",
+    "operators.graph",
+    "operators.linking",
+    "operators.schemas",
+    "operators.weblinks",
+    "plans.lineage",
+    "plans.pipeline",
+    "sources.gazetteer",
+    "streaming.ingest",
+}
+
+
+def _is_module(mod: str) -> bool:
+    """A package-relative dotted name that is a .py module (a package's
+    __init__ holds no KG code and is not counted)."""
+    return PKG_DIR.joinpath(*mod.split(".")).with_suffix(".py").exists()
+
+
+def _imports(mod: str) -> set[str]:
+    """Package modules `mod` imports anywhere in its body: relative and
+    absolute, module-level and inside functions; `from X import sub`
+    counts the submodule X.sub when sub is one."""
+    src = PKG_DIR.joinpath(*mod.split(".")).with_suffix(".py")
+    parent = mod.split(".")[:-1]
+    names = []
+    for node in ast.walk(ast.parse(src.read_text(), str(src))):
+        if isinstance(node, ast.Import):
+            names += [a.name[len(PKG) + 1:] for a in node.names
+                      if a.name.startswith(PKG + ".")]
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = parent[:len(parent) - node.level + 1]
+                target = ".".join(base + [node.module or ""]).strip(".")
+            elif (node.module or "").startswith(PKG):
+                target = node.module[len(PKG) + 1:]
+            else:
+                continue
+            names += [target] + [f"{target}.{a.name}".lstrip(".")
+                                 for a in node.names]
+    return {n for n in names if n and _is_module(n)}
+
+
+def test_kg_closure_is_the_declared_list():
+    seen, todo = set(), list(ROOTS)
+    while todo:
+        mod = todo.pop()
+        if mod not in seen:
+            seen.add(mod)
+            todo.extend(_imports(mod))
+    # linking reaches kernel.jamo only through a function-level import
+    assert "kernel.jamo" in _imports("operators.linking")
+    assert seen == KG_CLOSURE

@@ -307,11 +307,10 @@ def test_ladder_levels_3_4_5(ladder, spark):
 
 
 def test_disambig_policy_selects_winner(spark):
-    """The two reference homonym policies can disagree, and `disambig`
-    selects which one orders the rank-1 window: neighbor evidence at
-    +-3 favors label A, while heavy CORE evidence at distance 4 (inside
-    the +-5 duplicate window, outside the +-3 neighbor window) favors
-    label B."""
+    """The neighbor policy orders the rank-1 window: neighbor evidence
+    at +-3 favors label A and wins, although heavy CORE evidence at
+    distance 4 (inside the reference's +-5 duplicate window, outside
+    the +-3 neighbor window) favors label B."""
     from python_mecab_ner_spark.operators.linking import (canonical_entities,
                                                           link_mentions)
     gaz = spark.createDataFrame(
@@ -333,17 +332,11 @@ def test_disambig_policy_selects_winner(spark):
         [("B", "마시", "VV", 100)],
         "label string, word string, pos string, cnt long")
 
-    def winner(policy):
-        out = link_mentions(mentions, entities, context_df=ctx,
-                            neighbor_stats_df=nstats, core_stats_df=cstats,
-                            disambig=policy).collect()
-        assert len(out) == 1 and out[0].link_level == 0
-        return out[0].large
-
-    assert winner("neighbor") == "A"
-    assert winner("duplicate") == "B"
-    with pytest.raises(ValueError):
-        link_mentions(mentions, entities, disambig="bogus")
+    out = link_mentions(mentions, entities, context_df=ctx,
+                        neighbor_stats_df=nstats,
+                        core_stats_df=cstats).collect()
+    assert len(out) == 1 and out[0].link_level == 0
+    assert out[0].large == "A"
 
 
 def test_ladder_backcompat_without_stats(spark):

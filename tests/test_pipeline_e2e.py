@@ -194,25 +194,6 @@ def test_run_stage_executes_fn_once(spark, tmp_path):
     assert acc.value == n_rows, f"stage fn processed {acc.value} rows, expected {n_rows}"
 
 
-def test_extract_graph_duplicate_policy(spark):
-    """extract_graph(disambig='duplicate') runs the full build with the
-    second reference policy: same span coverage as the neighbor policy
-    (the policy only reorders the rank-1 window), every level present
-    in both, and the UNLINKED contract holds."""
-    pages = pages_dataframe(spark, 80, seed=3, partitions=2).cache()
-    ga = extract_graph(spark, pages, canonicalize=False)
-    gb = extract_graph(spark, pages, canonicalize=False,
-                       disambig="duplicate")
-    a = {(r.url, r.start, r.end) for r in ga["linked"].collect()}
-    b = {(r.url, r.start, r.end) for r in gb["linked"].collect()}
-    assert a == b and a
-    for g in (ga, gb):
-        assert g["linked"].where(
-            "link_level = 5 and entity_id is not null").count() == 0
-        g["release"]()
-    pages.unpersist()
-
-
 def test_kg_khop_matches_duckdb_on_real_edges(spark):
     """khop_neighbors over the REAL extracted-KG edge table must
     reproduce a naive 1..2-hop SQL computed by DuckDB on the same

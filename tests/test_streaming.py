@@ -3,16 +3,12 @@ batch pipeline on the same pages, and incremental re-runs must
 process only new files (exactly-once via checkpoint)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.operators.annotate import (annotate_pages,
                                                        triples_table)
 from python_mecab_ner_spark.sources.corpus import pages_dataframe
 from python_mecab_ner_spark.sources.gazetteer import broadcast_rows
-from python_mecab_ner_spark.streaming.ingest import (run_ingest,
-                                                     stream_pages,
-                                                     stream_triples,
-                                                     windowed_pred_counts)
+from python_mecab_ner_spark.streaming.ingest import run_ingest
 
 
 @pytest.fixture(scope="module")
@@ -62,515 +58,3 @@ def test_incremental_resume_processes_only_new_files(spark, bc, tmp_path):
     # third run with NO new files adds nothing
     assert run_ingest(spark, src, out, ckpt, bc).awaitTermination(120)
     assert spark.read.parquet(out).count() == got.count()
-
-
-def test_windowed_pred_counts_rollup(spark, bc, tmp_path):
-    pages = pages_dataframe(spark, 40, seed=3).select(
-        "url", "warc_ts", "text", "lang")
-    src = str(tmp_path / "pages")
-    pages.write.parquet(src)
-
-    # complete mode for the memory sink: append emits a window only
-    # once the watermark passes it, and the newest windows never close
-    # in a drained availableNow run
-    counts = windowed_pred_counts(
-        stream_triples(stream_pages(spark, src), bc))
-    q = (counts.writeStream.format("memory").queryName("pred_counts")
-         .outputMode("complete")
-         .option("checkpointLocation", str(tmp_path / "ckpt2"))
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-
-    got = spark.sql("SELECT * FROM pred_counts")
-    want = (triples_table(annotate_pages(pages, bc))
-            .groupBy(F.window("warc_ts", "1 hour").alias("w"), "pred")
-            .agg(F.count("*").alias("n_triples"))
-            .select(F.col("w.start").alias("window_start"), "pred",
-                    "n_triples"))
-    assert {tuple(r) for r in got.collect()} == \
-        {tuple(r) for r in want.collect()}
-
-
-def test_stream_dedup_first_arrival_wins(spark, tmp_path):
-    """dropDuplicatesWithinWatermark keeps one row per fingerprint
-    across micro-batches within the horizon (streaming twin of
-    exact_dedup)."""
-    import datetime as dt
-
-    from python_mecab_ner_spark.streaming.ingest import (stream_dedup,
-                                                         stream_pages)
-    src, out, ckpt = (str(tmp_path / d) for d in ("p", "o", "c"))
-    t0 = dt.datetime(2026, 1, 1, 12, 0)
-    rows1 = [("u1", t0, "same text here", "en"),
-             ("u2", t0, "other text", "en")]
-    schema = "url string, warc_ts timestamp, text string, lang string"
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(src)
-
-    def drain():
-        q = (stream_dedup(stream_pages(spark, src)).writeStream
-             .format("parquet").option("path", out)
-             .option("checkpointLocation", ckpt)
-             .outputMode("append").trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-
-    drain()
-    # batch 2: a duplicate of u1's text (different url, later ts,
-    # inside the watermark) and one genuinely new text
-    rows2 = [("u3", t0 + dt.timedelta(minutes=5), "same text here", "en"),
-             ("u4", t0 + dt.timedelta(minutes=6), "brand new", "en")]
-    spark.createDataFrame(rows2, schema).coalesce(1) \
-        .write.mode("append").parquet(src)
-    drain()
-
-    got = {r.url for r in spark.read.parquet(out).collect()}
-    assert got == {"u1", "u2", "u4"}, got
-
-
-def test_stream_link_equals_batch_levels01(spark, bc, tmp_path):
-    """Stateless stream-side linking: for spans the batch ladder links
-    at level 0/1, the streaming operator links the SAME entity at the
-    SAME level; batch evidence levels come out UNLINKED (the periodic
-    batch re-link's contract)."""
-    from python_mecab_ner_spark.operators.annotate import spans_table
-    from python_mecab_ner_spark.operators.linking import (
-        canonical_entities, link_mentions)
-    from python_mecab_ner_spark.sources.gazetteer import \
-        gazetteer_df_from_tsv
-    from python_mecab_ner_spark.streaming.ingest import stream_pages
-    from python_mecab_ner_spark.streaming.link import stream_linked_spans
-
-    pages = pages_dataframe(spark, 50, seed=9).select(
-        "url", "warc_ts", "text", "lang")
-    src = str(tmp_path / "pages_link")
-    pages.write.parquet(src)
-    entities = canonical_entities(gazetteer_df_from_tsv(spark))
-
-    out = str(tmp_path / "linked_out")
-    q = (stream_linked_spans(stream_pages(spark, src), bc, entities)
-         .writeStream.format("parquet")
-         .option("path", out)
-         .option("checkpointLocation", str(tmp_path / "ckpt_link"))
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {(r.url, r.start, r.end): (r.entity_id, r.link_level)
-           for r in spark.read.parquet(out).collect()}
-
-    spans = spans_table(annotate_pages(pages, bc)) \
-        .withColumnRenamed("word", "surface")
-    batch = {(r.url, r.start, r.end): (r.entity_id, r.link_level)
-             for r in link_mentions(spans, entities).collect()}
-
-    assert set(got) == set(batch)
-    n01 = 0
-    for key, (b_ent, b_lvl) in batch.items():
-        s_ent, s_lvl = got[key]
-        if b_lvl in (0, 1):
-            assert (s_ent, s_lvl) == (b_ent, b_lvl), key
-            n01 += 1
-        elif s_lvl != 5:
-            # the stream may only ever link levels 0/1
-            assert s_lvl in (0, 1)
-    assert n01 > 0, "corpus produced no level-0/1 spans"
-
-
-def test_stream_link_plan_is_stateless(spark, bc, tmp_path):
-    """The stream-side linker must stay stateless: no state-store
-    operator anywhere in the streaming plan (the design contract that
-    makes it watermark-free and unbounded-safe)."""
-    from python_mecab_ner_spark.operators.linking import canonical_entities
-    from python_mecab_ner_spark.sources.gazetteer import \
-        gazetteer_df_from_tsv
-    from python_mecab_ner_spark.streaming.ingest import stream_pages
-    from python_mecab_ner_spark.streaming.link import stream_linked_spans
-
-    pages = pages_dataframe(spark, 10, seed=4).select(
-        "url", "warc_ts", "text", "lang")
-    src = str(tmp_path / "pages_plan")
-    pages.write.parquet(src)
-    entities = canonical_entities(gazetteer_df_from_tsv(spark))
-    linked = stream_linked_spans(stream_pages(spark, src), bc, entities)
-    q = (linked.writeStream.format("noop")
-         .option("checkpointLocation", str(tmp_path / "ckpt_plan"))
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    progress = q.lastProgress
-    assert progress is not None
-    assert progress["stateOperators"] == [], progress["stateOperators"]
-
-
-def test_simhash16_rowlocal_equals_batch(spark):
-    """functions.text.simhash16 (row-local array expressions) must
-    reproduce operators.dedup.simhash64(n_bits=16) (explode+groupBy)
-    bit-for-bit — the streaming near-dup key is the batch key."""
-    from python_mecab_ner_spark.functions.text import simhash16
-    from python_mecab_ner_spark.operators.dedup import simhash64
-
-    pages = pages_dataframe(spark, 40, seed=21).select(
-        F.col("url").alias("doc_id"), "text")
-    a = {r.doc_id: r.sh for r in
-         pages.select("doc_id", simhash16(F.col("text")).alias("sh"))
-         .collect()}
-    b = {r.doc_id: r.simhash for r in
-         simhash64(pages, "text", "doc_id", n_bits=16).collect()}
-    assert a == b and a
-
-
-def test_stream_neardup_first_arrival_wins(spark, tmp_path):
-    """stream_neardup keeps exactly one page per simhash bucket within
-    the watermark: boilerplate-identical near-copies are suppressed,
-    distinct texts pass through."""
-    from python_mecab_ner_spark.functions.text import simhash16
-    from python_mecab_ner_spark.streaming.ingest import (stream_neardup,
-                                                         stream_pages)
-
-    pages = pages_dataframe(spark, 40, seed=22).select(
-        "url", "warc_ts", "text", "lang")
-    # append exact re-fetches of 10 pages (same simhash by construction)
-    dupes = (pages.limit(10)
-             .withColumn("url", F.concat(F.col("url"), F.lit("#refetch")))
-             .withColumn("warc_ts",
-                         F.col("warc_ts") + F.expr("INTERVAL 5 MINUTES")))
-    src = str(tmp_path / "pages_nd")
-    pages.unionByName(dupes).write.parquet(src)
-
-    out = str(tmp_path / "nd_out")
-    q = (stream_neardup(stream_pages(spark, src))
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", str(tmp_path / "ckpt_nd"))
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    n_buckets = (pages.unionByName(dupes)
-                 .select(simhash16(F.col("text")).alias("sh"))
-                 .distinct().count())
-    assert got.count() == n_buckets
-    assert got.select("sh").distinct().count() == n_buckets
-
-
-def test_stream_quality_gate_rowlocal(spark, tmp_path):
-    """The streaming quality gate filters exactly like the batch
-    gates, row-locally: non-en, low-quality, and highly repetitive
-    pages drop; a clean page survives.  The plan must stay stateless
-    (no stateful operator in the explain)."""
-    import datetime as dt
-
-    from python_mecab_ner_spark.streaming.ingest import (stream_pages,
-                                                         stream_quality_gate)
-    src, out, ckpt = (str(tmp_path / d) for d in ("p", "o", "c"))
-    t0 = dt.datetime(2026, 1, 1, 12, 0)
-    clean = "the quick brown fox jumps over the lazy dog and keeps " \
-            "running through the quiet field toward a distant warm " \
-            "farm house near the old river bank before sunset tonight " \
-            "while birds circle slowly overhead in the evening air"
-    rows = [
-        ("keep", t0, clean, "en"),
-        ("kor", t0, "한국어 문장 " * 30, "ko"),          # lang gate
-        ("short", t0, "tiny", "en"),                      # quality gate
-        ("rep", t0, "spam spam " * 60, "en"),             # repetition gate
-    ]
-    schema = "url string, warc_ts timestamp, text string, lang string"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    gated = stream_quality_gate(stream_pages(spark, src))
-    q = (gated.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {r.url for r in spark.read.parquet(out).collect()}
-    assert got == {"keep"}, got
-    # statelessness: batch twin of the same plan has no state store
-    batch = stream_quality_gate(spark.read.parquet(src))
-    plan = batch._sc._jvm.PythonSQLUtils.explainString(
-        batch._jdf.queryExecution(), "formatted")
-    assert "StateStore" not in plan and "Exchange" not in plan, plan
-
-
-def test_stream_quality_gate_pii_redaction(spark, tmp_path):
-    """redact_pii=True scrubs surviving pages in-stream: same
-    stateless plan, text rewritten by the per-row regexp chain
-    (q47's oracled batch twin)."""
-    import datetime as dt
-
-    from python_mecab_ner_spark.streaming.ingest import (stream_pages,
-                                                         stream_quality_gate)
-    src, out, ckpt = (str(tmp_path / d) for d in ("p", "o", "c"))
-    t0 = dt.datetime(2026, 1, 1, 12, 0)
-    clean = "the quick brown fox jumps over the lazy dog and keeps " \
-            "running through the quiet field toward a distant warm " \
-            "farm house near the old river bank before sunset tonight " \
-            "and you can reach the farmer at farmer@example.com or " \
-            "010-123-4567 for a visit"
-    schema = "url string, warc_ts timestamp, text string, lang string"
-    spark.createDataFrame([("keep", t0, clean, "en")], schema) \
-        .coalesce(1).write.parquet(src)
-
-    gated = stream_quality_gate(stream_pages(spark, src), redact_pii=True)
-    q = (gated.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    [row] = spark.read.parquet(out).collect()
-    assert "<EMAIL>" in row.text and "<PHONE>" in row.text, row.text
-    assert "@" not in row.text and "010-123-4567" not in row.text
-
-
-def test_stream_decontaminate_agrees_with_batch(spark):
-    """The row-local pandas-UDF gram counter must reproduce the batch
-    ngram_collisions counts exactly (same tokenize/truncate/distinct
-    semantics) on a randomized corpus."""
-    import random
-
-    from python_mecab_ner_spark.operators.dedup import ngram_collisions
-    from python_mecab_ner_spark.streaming.ingest import (
-        bench_gram_broadcast, stream_decontaminate)
-    rng = random.Random(7)
-    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
-    docs = [(i, " ".join(rng.choice(vocab)
-                         for _ in range(rng.randint(0, 12))))
-            for i in range(40)]
-    bench = [(100 + i, " ".join(rng.choice(vocab) for _ in range(8)))
-             for i in range(5)]
-    d = spark.createDataFrame(docs, "doc_id int, text string")
-    b = spark.createDataFrame(bench, "doc_id int, text string")
-
-    batch = {r.doc_id: r.n_collide for r in
-             ngram_collisions(d, b, "text", "doc_id", k=3).collect()}
-    bc = bench_gram_broadcast(spark, b, k=3)
-    # max_collide=10**9 keeps every row so we can compare raw counts
-    got = {r.doc_id: r.n_collide for r in
-           stream_decontaminate(d, bc, k=3, max_collide=10**9).collect()}
-    assert len(got) == len(docs)
-    for i, _ in docs:
-        assert got[i] == batch.get(i, 0), (i, got[i], batch.get(i))
-
-
-def test_stream_decontaminate_filters_in_stream(spark, tmp_path):
-    from python_mecab_ner_spark.streaming.ingest import (
-        bench_gram_broadcast, stream_decontaminate, stream_pages)
-    import datetime as dt
-    src, out, ckpt = (str(tmp_path / d) for d in ("p", "o", "c"))
-    t0 = dt.datetime(2026, 1, 1, 12, 0)
-    rows = [
-        ("clean", t0, "entirely fresh words nothing shared here", "en"),
-        ("contam", t0, "held out eval question one verbatim copy", "en"),
-    ]
-    schema = "url string, warc_ts timestamp, text string, lang string"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    bench = spark.createDataFrame(
-        [(1, "held out eval question one verbatim copy")],
-        "doc_id int, text string")
-    bc = bench_gram_broadcast(spark, bench, k=3)
-
-    gated = stream_decontaminate(stream_pages(spark, src), bc, k=3)
-    # stateless plan: no state store operator may appear
-    q = (gated.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {r.url for r in spark.read.parquet(out).collect()}
-    assert got == {"clean"}, got
-
-
-def test_stream_host_link_counts_windows_and_watermark(spark, tmp_path):
-    """Watermarked windowed host-graph rollup: link counts land in
-    their warc_ts window, per (src_host, dst_host); batch agreement on
-    the same files."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from python_mecab_ner_spark.streaming.ingest import \
-        stream_host_link_counts
-
-    src, out, ckpt = (str(tmp_path / d) for d in ("p", "o", "c"))
-    t0 = dt.datetime(2026, 1, 1, 12, 0)
-    t1 = dt.datetime(2026, 1, 1, 13, 30)
-    a = b'<html><a href="https://b.com/x">x</a>' \
-        b'<a href="https://b.com/y">y</a></html>'
-    c = b'<html><a href="https://d.com/z">z</a></html>'
-    rows = [("https://a.com/1", t0, a), ("https://a.com/2", t0, c),
-            ("https://a.com/3", t1, a)]
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-    ])
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    # complete mode + memory sink: append emits a window only once the
-    # watermark passes it, and a drained availableNow run never closes
-    # the newest window (same pattern as the pred-counts rollup test)
-    q = (stream_host_link_counts(stream).writeStream.format("memory")
-         .queryName("host_links").outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {(r.window_start.hour, r.src_host, r.dst_host): r.n_links
-           for r in spark.sql("SELECT * FROM host_links").collect()}
-    assert got == {(12, "a.com", "b.com"): 2, (12, "a.com", "d.com"): 1,
-                   (13, "a.com", "b.com"): 2}
-
-
-def test_stream_seen_filter_parity_and_stateless(spark, tmp_path):
-    """The row-local bloom gate agrees bit-for-bit with the batch
-    bloom_probe (no false negatives: every inserted url is dropped),
-    and the plan stays stateless/shuffle-free."""
-    import datetime as dt
-
-    from python_mecab_ner_spark.operators.sketch import (bloom_build,
-                                                         bloom_probe)
-    from python_mecab_ner_spark.streaming.ingest import (
-        bloom_bits_array, stream_pages, stream_seen_filter)
-
-    seen_urls = [f"http://h{i}.com/p" for i in range(30)]
-    seen = spark.createDataFrame([(u,) for u in seen_urls], "url string")
-    bloom = bloom_build(seen, "url", m_words=8, k=3)
-    bits = bloom_bits_array(bloom, m_words=8)
-
-    src, out, ckpt = (str(tmp_path / d) for d in ("p", "o", "c"))
-    t0 = dt.datetime(2026, 1, 1, 12, 0)
-    cand_urls = seen_urls[:5] + [f"http://new{i}.org/x" for i in range(40)]
-    rows = [(u, t0, "text body", "en") for u in cand_urls]
-    schema = "url string, warc_ts timestamp, text string, lang string"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    gated = stream_seen_filter(stream_pages(spark, src), bits, k=3)
-    q = (gated.writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", ckpt)
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {r.url for r in spark.read.parquet(out).collect()}
-
-    # batch parity: kept == urls the batch probe calls maybe_member=0
-    cand = spark.createDataFrame([(u,) for u in cand_urls], "url string")
-    probe = bloom_probe(cand, bloom, "url", m_words=8, k=3)
-    expected = {r.term for r in probe.collect() if r.maybe_member == 0}
-    assert got == expected
-    # no false negatives: every inserted url was dropped
-    assert not (got & set(seen_urls))
-    # statelessness
-    batch = stream_seen_filter(spark.read.parquet(src), bits, k=3)
-    plan = batch._sc._jvm.PythonSQLUtils.explainString(
-        batch._jdf.queryExecution(), "formatted")
-    assert "StateStore" not in plan and "Exchange" not in plan, plan
-
-
-def test_stream_cm_counts_equals_batch_sketch_per_window(spark, tmp_path):
-    """The streaming windowed CM sketch's cells must equal the batch
-    cm_sketch of each window's pages (same hash family), proving the
-    batch/stream sketches are directly foldable."""
-    import datetime as dt
-
-    from python_mecab_ner_spark.operators.sketch import cm_sketch
-    from python_mecab_ner_spark.streaming.ingest import (stream_cm_counts,
-                                                         stream_pages)
-    src, out, ckpt = (str(tmp_path / d) for d in ("p", "o", "c"))
-    t0 = dt.datetime(2026, 1, 1, 12, 30)
-    t1 = dt.datetime(2026, 1, 1, 13, 30)
-    rows = [("u1", t0, "spark spark query", "en"),
-            ("u2", t0, "hash join query", "en"),
-            ("u3", t1, "spark stream", "en")]
-    schema = "url string, warc_ts timestamp, text string, lang string"
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-
-    # complete mode + memory sink: append emits a window only once
-    # the watermark passes it, and a drained availableNow run never
-    # closes the newest window (same pattern as the rollup tests)
-    q = (stream_cm_counts(stream_pages(spark, src), d=2, w=16)
-         .writeStream.format("memory").queryName("cm_cells")
-         .outputMode("complete")
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {(r.window_start.hour, r.r, r.b): r.cnt
-           for r in spark.sql("SELECT * FROM cm_cells").collect()}
-
-    batch = spark.read.parquet(src)
-    exp = {}
-    for hour in (12, 13):
-        win = batch.where(F.hour("warc_ts") == hour)
-        toks = (win.select(F.explode(F.split(F.lower(F.trim("text")),
-                                             r"\s+")).alias("word"))
-                .where("word <> ''"))
-        for r in cm_sketch(toks, "word", d=2, w=16).collect():
-            exp[(hour, r.r, r.b)] = r.cnt
-    assert got == exp and got
-
-
-def test_stream_fetch_attribution_interval_join(spark, tmp_path):
-    """Watermarked stream-stream interval join: a discovery joins
-    every fetch of its url within max_delay; later/earlier fetches
-    and foreign urls are excluded.  Exact batch-twin agreement on the
-    same files (watermarks are a no-op in batch)."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from python_mecab_ner_spark.streaming.joins import (
-        stream_fetch_attribution)
-
-    dsrc, fsrc, ckpt = (str(tmp_path / d) for d in ("d", "f", "c"))
-    t = dt.datetime(2026, 1, 1, 12, 0)
-
-    def ts(minute):
-        return t + dt.timedelta(minutes=minute)
-
-    disc_rows = [("u1", ts(0)), ("u2", ts(5)), ("u3", ts(10))]
-    fetch_rows = [("u1", ts(10)),    # in window  -> delay 600
-                  ("u1", ts(25)),    # second fetch, still in window
-                  ("u2", ts(40)),    # 35 min after disc -> excluded
-                  ("u9", ts(1)),     # never discovered -> excluded
-                  ("u3", ts(9))]     # fetched BEFORE discovery -> out
-    dschema = T.StructType([T.StructField("url", T.StringType()),
-                            T.StructField("disc_ts", T.TimestampType())])
-    fschema = T.StructType([T.StructField("url", T.StringType()),
-                            T.StructField("fetch_ts", T.TimestampType())])
-    spark.createDataFrame(disc_rows, dschema).coalesce(1) \
-        .write.parquet(dsrc)
-    spark.createDataFrame(fetch_rows, fschema).coalesce(1) \
-        .write.parquet(fsrc)
-
-    joined = stream_fetch_attribution(
-        spark.readStream.schema(dschema).parquet(dsrc),
-        spark.readStream.schema(fschema).parquet(fsrc),
-        max_delay_min=30)
-    q = (joined.writeStream.format("memory").queryName("attrib")
-         .outputMode("append").option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
-    assert q.awaitTermination(120)
-    got = {(r.url, r.delay_sec)
-           for r in spark.sql("SELECT * FROM attrib").collect()}
-    assert got == {("u1", 600), ("u1", 1500)}
-
-    # exact batch-twin parity on the same inputs
-    batch = stream_fetch_attribution(
-        spark.read.parquet(dsrc), spark.read.parquet(fsrc),
-        max_delay_min=30)
-    assert {(r.url, r.delay_sec) for r in batch.collect()} == got
-
-
-def test_stream_fetch_attribution_is_stateful_join(spark, tmp_path):
-    """The plan must be a genuine stream-stream join (stateful
-    symmetric hash join), not a broadcast of a static side."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from python_mecab_ner_spark.streaming.joins import (
-        stream_fetch_attribution)
-
-    dsrc, fsrc = str(tmp_path / "d"), str(tmp_path / "f")
-    t = dt.datetime(2026, 1, 1)
-    dschema = T.StructType([T.StructField("url", T.StringType()),
-                            T.StructField("disc_ts", T.TimestampType())])
-    fschema = T.StructType([T.StructField("url", T.StringType()),
-                            T.StructField("fetch_ts", T.TimestampType())])
-    spark.createDataFrame([("u", t)], dschema).write.parquet(dsrc)
-    spark.createDataFrame([("u", t)], fschema).write.parquet(fsrc)
-    joined = stream_fetch_attribution(
-        spark.readStream.schema(dschema).parquet(dsrc),
-        spark.readStream.schema(fschema).parquet(fsrc))
-    assert joined.isStreaming
-    plan = joined._jdf.queryExecution().analyzed().toString()
-    assert "EventTimeWatermark" in plan
