@@ -342,60 +342,6 @@ def q22_salt_distribution(spark, sf_dir):
                  F.count("*").alias("total")))
 
 
-# ---- multimodal (binary columns; fake decode is md5-derived so the
-# ---- SQL oracle reproduces it exactly; see operators.multimodal) ----------
-
-def q23_blob_meta(spark, sf_dir):
-    """Binary-column metadata scan: synthesize deterministic blobs from
-    documents, extract (mime, n_bytes, checksum) JVM-side."""
-    from python_mecab_ner_spark.operators.multimodal import (blob_metadata,
-                                                             synthesize_blobs)
-    d = _load(spark, sf_dir, "documents")
-    return blob_metadata(synthesize_blobs(d))
-
-
-def q24_image_features(spark, sf_dir):
-    """mapInPandas Arrow-batched decode (codec stubbed deterministic):
-    per-doc fake (width, height, n_channels, mean_luma)."""
-    from python_mecab_ner_spark.operators.multimodal import (image_features,
-                                                             synthesize_blobs)
-    d = _loadp(spark, sf_dir, "documents")
-    return image_features(synthesize_blobs(d))
-
-
-def q25_frame_sample(spark, sf_dir):
-    """Video frame sampling: fixed-size fake frames sliced from the
-    binary column (sequence+explode, JVM-side), every 4th frame."""
-    from python_mecab_ner_spark.operators.multimodal import (sample_frames,
-                                                             synthesize_blobs)
-    d = _loadp(spark, sf_dir, "documents")
-    video = synthesize_blobs(d).filter("meta.mime = 'video/mp4'")
-    return sample_frames(video, every_k=4)
-
-
-def q41_audio_features(spark, sf_dir):
-    """Audio twin of q24: Arrow-batched fake decode (sample_rate,
-    n_samples, rms) over the audio-mime blobs."""
-    from python_mecab_ner_spark.operators.multimodal import (audio_features,
-                                                             synthesize_blobs)
-    d = _loadp(spark, sf_dir, "documents")
-    audio = synthesize_blobs(d).filter("meta.mime = 'audio/wav'")
-    return audio_features(audio)
-
-
-def q42_image_resize(spark, sf_dir):
-    """Aspect-preserving resize plan over the decoded image features:
-    exact integer target-box fit (the numbers a vision pipeline's
-    resample step consumes), pure codegen."""
-    from python_mecab_ner_spark.operators.multimodal import (image_features,
-                                                             resize_plan,
-                                                             synthesize_blobs)
-    d = _loadp(spark, sf_dir, "documents")
-    imgs = synthesize_blobs(d).filter("meta.mime = 'image/png'")
-    return (resize_plan(image_features(imgs), target=224)
-            .select("doc_id", "width", "height", "new_width", "new_height"))
-
-
 def q26_embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-dup pairs via banded corpus-scaled
     sign-LSH self-join (the dedup family's ANN member; output pairs are
@@ -1186,30 +1132,6 @@ def q58_neighbor_jaccard(spark, sf_dir):
             .limit(100))
 
 
-BLOOM_WORDS = 32   # 1024-bit filter: small enough that sf0.01's 250
-BLOOM_K = 3        # seen keys produce auditable false positives
-
-
-def q90_bloom_seen(spark, sf_dir):
-    """Crawl-frontier seen-filter (operators.sketch.bloom_build/
-    bloom_probe): a 1024-bit Bloom filter over the even-doc_id "already
-    crawled" half, probed with every doc_id — maybe_seen vs truly_seen
-    makes the false-positive behaviour (never-negative, deterministic)
-    part of the checked output rather than a hidden property."""
-    from python_mecab_ner_spark.operators.sketch import (bloom_build,
-                                                         bloom_probe)
-    d = _load(spark, sf_dir, "documents")
-    keyed = d.select(F.col("doc_id").cast("string").alias("k"), "doc_id")
-    bloom = bloom_build(keyed.where(F.col("doc_id") % 2 == 0), "k",
-                        m_words=BLOOM_WORDS, k=BLOOM_K)
-    probed = bloom_probe(keyed, bloom, "k",
-                         m_words=BLOOM_WORDS, k=BLOOM_K)
-    return (probed.select(F.col("term").cast("bigint").alias("doc_id"),
-                          F.col("maybe_member").alias("maybe_seen"))
-            .withColumn("truly_seen",
-                        (F.col("doc_id") % 2 == 0).cast("int")))
-
-
 def q91_adamic_adar(spark, sf_dir):
     """Adamic-Adar link prediction (operators.graph.adamic_adar) over
     the q49/q58 part<->supplier bipartite graph: common-neighbor score
@@ -1312,27 +1234,6 @@ def q96_cooccurrence(spark, sf_dir):
     ctx = _doc_context(spark, sf_dir)
     return cooccurrence_counts(ctx, window=5, min_pairs=5).select(
         "w1", "w2", "n_pairs", "w_sum")
-
-
-def q97_bpe_fertility(spark, sf_dir):
-    """Tokenizer fertility per source: chars-per-BPE-token in integer
-    ppm under the q73-learned merges — the dataset-release dashboard
-    number that decides whether a source is token-efficient enough to
-    keep.  Composes bpe_token_counts (per-DISTINCT-word segmentation,
-    broadcast back) with one per-source aggregate."""
-    from python_mecab_ner_spark.operators.bpe import bpe_token_counts
-    d = _loadp(spark, sf_dir, "documents")
-    tc = bpe_token_counts(spark, d, "text", "doc_id", iters=3)
-    return (tc.join(d.select("doc_id", "source", "n_chars"), "doc_id")
-            .groupBy("source")
-            .agg(F.count("*").cast("bigint").alias("n_docs"),
-                 F.sum("n_chars").cast("bigint").alias("sum_chars"),
-                 F.sum("n_bpe_tokens").cast("bigint")
-                 .alias("sum_bpe_tokens"))
-            .withColumn("chars_per_token_ppm",
-                        F.floor(F.col("sum_chars") * F.lit(1_000_000)
-                                / F.col("sum_bpe_tokens"))
-                        .cast("bigint")))
 
 
 def q98_walk_skipgrams(spark, sf_dir):
@@ -1628,20 +1529,6 @@ def _messy_text():
                F.lit(" " + _MESSY_LIT.strip())).otherwise(F.lit("")))
 
 
-def q112_hashed_classifier(spark, sf_dir):
-    """FastText-style hashed linear classifier inference
-    (operators.classify.hashed_linear_score): unigram+bigram feature
-    hashing into 4096 buckets + integer weight sum, label by sign —
-    the model-based quality-filter slot (CCNet / FineWeb-Edu gate)
-    with deterministic stand-in weights and an exact DuckDB twin.
-    Feature hashing is per-row codegen; the only shuffle is the
-    per-doc sum."""
-    from python_mecab_ner_spark.operators.classify import (
-        hashed_linear_score)
-    d = _loadp(spark, sf_dir, "documents")
-    return hashed_linear_score(d, "text", "doc_id", n_buckets=4096)
-
-
 def q113_normalize(spark, sf_dir):
     """Canonical text normalization (functions.text.normalize_text):
     smart quotes/dashes/NBSP -> ASCII, lowercase, whitespace collapse
@@ -1844,70 +1731,6 @@ def q124_pq_topk(spark, sf_dir):
     return pq_topk(e, qvec, k=10)
 
 
-def q125_trained_classifier(spark, sf_dir):
-    """Train + serve the hashed classifier end-to-end (operators
-    .classify.nb_train_weights -> hashed_linear_score): Naive-Bayes
-    integer log-odds weights learned on the TRAIN hash-split (q69
-    rule, bucket <= 7) against the q121 blocklist weak label, then the
-    whole corpus scored through the SAME broadcast-weights seam q112
-    exercises with stand-ins.  The CCNet/FineWeb pattern: train a
-    linear model on weak labels, score 100 TB with it.  Output carries
-    the weak label and split so accuracy/leakage audits read off this
-    one table.  Measured held-out AUC 0.835 — the gate is a RANKER
-    (thresholds tuned downstream); exact phrase recovery is bounded by
-    honest unigram leakage (docs rich in the phrase's words score high
-    without the phrase), the documented limit of any linear
-    bag-of-features gate."""
-    from python_mecab_ner_spark.functions.hashing import bucket
-    from python_mecab_ner_spark.operators.classify import (
-        hashed_linear_score, nb_train_weights)
-    d = _load(spark, sf_dir, "documents")
-    hits = d.select("doc_id", "text",
-                    *TX.blocklist_phrase_counts(F.col("text")))
-    total = sum((F.col(c) for c in hits.columns
-                 if c.startswith("bl_")), F.lit(0))
-    lab = hits.select("doc_id", "text",
-                      (total > 0).cast("int").alias("y"),
-                      (bucket(F.col("doc_id").cast("string"), 10,
-                              salt="split:") <= 7).cast("int")
-                      .alias("is_train"))
-    weights = nb_train_weights(lab.where("is_train = 1"), "text", "y")
-    scored = hashed_linear_score(d, "text", "doc_id", weights=weights)
-    return (scored.join(lab.select("doc_id", "y", "is_train"), "doc_id")
-            .select("doc_id", "n_feats", "score", "label", "y",
-                    "is_train"))
-
-
-def q126_calibration(spark, sf_dir):
-    """Reliability bins of the q125 trained gate on its HELD-OUT
-    split (operators.classify.calibration_bins): equal-width integer
-    score bins between the observed min/max (1-row broadcast agg, no
-    global sort/ntile) x per-bin positive counts — the calibration
-    audit published next to every model-based quality filter.  A
-    monotone pos_ppm across bins is what licenses using the score as
-    a threshold knob downstream."""
-    from python_mecab_ner_spark.operators.classify import calibration_bins
-    scored = q125_trained_classifier(spark, sf_dir)
-    return calibration_bins(scored.where("is_train = 0"),
-                            score_col="score", label_col="y", n_bins=10)
-
-
-def q229_calibration_summary(spark, sf_dir):
-    """One-row gate-health summary (operators.classify
-    .calibration_summary) over q126's reliability bins: Murphy
-    resolution (bin-weighted |pos_ppm - pool|; the discrimination a
-    retrain must not lose) + adjacent-bin monotonicity inversions
-    (count + worst magnitude; each one is a score region where
-    thresholding misorders documents).  Classic ECE needs a
-    probability reading a raw integer score lacks — these are the
-    decomposition parts that survive without a calibration map,
-    exact in ppm.  Completes the eval family: q183 AUC, q126 bins,
-    q130 confusion, q131 kappa, this is the trend line."""
-    from python_mecab_ner_spark.operators.classify import (
-        calibration_summary)
-    return calibration_summary(q126_calibration(spark, sf_dir))
-
-
 EMB_OUTLIER_Z10 = 30  # |z| > 3.0, cross-multiplied exact-integer test
 
 
@@ -1982,46 +1805,6 @@ def q129_robots_gate(spark, sf_dir):
                  F.sum("blocked").cast("bigint").alias("n_blocked"),
                  F.sum(1 - F.col("blocked")).cast("bigint")
                  .alias("n_allowed")))
-
-
-CONF_THRESHOLDS = [-200, -100, 0, 100, 200, 400]
-
-
-def q130_threshold_confusion(spark, sf_dir):
-    """Operating-point sheet of the q125 trained gate on its HELD-OUT
-    split (operators.classify.threshold_confusion): full confusion
-    matrix + precision/recall/F1 in exact-integer ppm at six
-    candidate thresholds in ONE combinable aggregate (thresholds ride
-    as an exploded literal dimension — no per-threshold rescan).
-    q126 says the score is monotone; this says what each cut costs."""
-    from python_mecab_ner_spark.operators.classify import (
-        threshold_confusion)
-    scored = q125_trained_classifier(spark, sf_dir)
-    return threshold_confusion(scored.where("is_train = 0"),
-                               CONF_THRESHOLDS,
-                               score_col="score", label_col="y")
-
-
-def q131_gate_kappa(spark, sf_dir):
-    """Cohen's kappa between the heuristic keep gate (q39 rule:
-    lang_id == 'en' AND quality_score >= 60) and the q125 trained
-    classifier's keep (score > 0) over the whole corpus (operators
-    .classify.gate_agreement) — the chance-corrected agreement audit
-    run before swapping one filter for the other.  Exact integer
-    kappa_ppm via the +den floor-division offset (Spark `div`
-    truncates, DuckDB `//` floors; the offset keeps operands
-    non-negative so they agree)."""
-    from python_mecab_ner_spark.operators.classify import gate_agreement
-    d = _load(spark, sf_dir, "documents")
-    heur = d.select(
-        "doc_id",
-        ((TX.lang_id(F.col("text")) == "en")
-         & (TX.quality_score(F.col("text")) >= 60))
-        .cast("int").alias("a"))
-    scored = q125_trained_classifier(spark, sf_dir)
-    both = heur.join(scored.select(
-        "doc_id", (F.col("score") > 0).cast("int").alias("b")), "doc_id")
-    return gate_agreement(both, "a", "b")
 
 
 HEAD_KS = (1, 10, 100, 1000)
@@ -3612,7 +3395,6 @@ SSSP_ROUNDS = 12    # q191: unweighted diameter bound, shared with the oracle
 COVER_K = 5     # q193 greedy-coverage rounds, shared with the oracle
 KCENTER_K = 5   # q194 farthest-first rounds, shared with the oracle
 JSONL_FILES = 8   # q203: shard count, shared with the oracle
-AMS_K = 16        # q204: AMS estimator count, shared with the oracle
 COLOR_BUDGET = 6  # q205: color budget (measured 3 at sf0.01, 4 at
                   # sf0.1 on the qty<=2 graph), shared with the oracle
 COLOR_MIS_ROUNDS = 5  # q205: per-color Luby budget (measured <= 3)
@@ -3748,20 +3530,6 @@ def q182_bipartiteness(spark, sf_dir):
     return (bipartiteness_audit(paths.unionByName(closing))
             .select(F.col("comp").cast("bigint").alias("comp"),
                     "n_nodes", "bipartite"))
-
-
-def q183_auc(spark, sf_dir):
-    """Exact ROC AUC of the q125 trained gate per split
-    (operators.classify.auc_ranksum): tie-corrected Mann-Whitney 2U
-    as an exact integer over the per-split SCORE HISTOGRAM (the
-    q95/q166 cumulative-walk discipline — the window never touches
-    corpus rows), auc_ppm = 2U*1e6 div (2*P*N).  Two rows (train /
-    held-out) = the generalization-gap sheet; q125's docstring quotes
-    this number ("held-out AUC 0.835") — now it is oracled instead of
-    anecdotal."""
-    from python_mecab_ner_spark.operators.classify import auc_ranksum
-    scored = q125_trained_classifier(spark, sf_dir)
-    return auc_ranksum(scored, group_col="is_train")
 
 
 def q184_bootstrap_ci(spark, sf_dir):
@@ -4387,25 +4155,6 @@ def q203_jsonl_ledger(spark, sf_dir):
                     .alias("payload_sum")))
 
 
-def q204_ams_f2(spark, sf_dir):
-    """AMS second-moment sketch vs exact F2 (operators.sketch
-    .ams_f2) over the corpus unigram stream: 16 deterministic
-    +-1-sign estimators in ONE combinable aggregate estimate the
-    self-join size of the token table — the number the blocking
-    family (q171/q172) wants BEFORE running a key join, and the
-    third house sketch (HLL=F0 q75, CM=frequency q71, AMS=F2).
-    Exact F2 (count + sum of squares) rides along as the
-    calibration twin; per-estimator error ppm is part of the hash
-    contract, so both engines certify the estimator VALUES, not
-    just the mean."""
-    from python_mecab_ner_spark.operators.sketch import ams_f2
-    d = _loadp(spark, sf_dir, "documents")
-    w = F.filter(F.split(F.lower(F.trim("text")), r"\s+"),
-                 lambda s: s != F.lit(""))
-    tok = d.select(F.explode(w).alias("word"))
-    return ams_f2(tok, "word", k=AMS_K)
-
-
 def q205_coloring(spark, sf_dir):
     """Greedy distributed graph coloring by iterated Luby MIS
     (operators.graph.mis_coloring) on the THIN qty<=2 co-purchase
@@ -4683,76 +4432,6 @@ def _zorder_oracle_sql(bits: int = 6, file_bits: int = 6) -> str:
         FROM u GROUP BY 1, 2"""
 
 
-def q211_bottomk_quantiles(spark, sf_dir):
-    """Mergeable bottom-k quantile sketch vs exact histogram walk
-    (operators.sketch.bottomk_quantiles): per event_type, the k=128
-    smallest-md5-priority events form a deterministic uniform
-    sample whose order statistics estimate p10/p25/p50/p75/p90 of
-    the milli-unit value, compared against the exact
-    histogram-cumulative quantiles (the q95/q166 no-corpus-sort
-    discipline).  The quantile member of the sketch family — HLL
-    (q75) counts distinct, CM (q71) counts frequencies, AMS (q204)
-    sizes joins, bottom-k locates the distribution; the merge law
-    bottomk(A∪B) == bottomk(bottomk(A)∪bottomk(B)) is pinned by
-    test.  Values are floor(value*1000): a per-row IEEE multiply +
-    floor, identical in both engines (the float traps are division
-    and aggregation order, not scalar scaling)."""
-    from python_mecab_ner_spark.operators.sketch import (
-        bottomk_quantiles)
-    ev = _load(spark, sf_dir, "events")
-    out = bottomk_quantiles(
-        ev, "event_type", F.floor(F.col("value") * 1000),
-        "event_id", k=128)
-    res = out.orderBy("event_type", "q_pct")
-    res.unpersist_input = out.unpersist_input
-    return res
-
-
-def _bottomk_oracle_sql(k: int = 128,
-                        quantiles: tuple = (10, 25, 50, 75, 90)) -> str:
-    """Generated DuckDB twin of q211: same md5 priorities, same
-    ceil-free quantile rule cum*100 >= q*n on both the sample and
-    the exact histogram."""
-    pri = md5_int_sql("CAST(event_id AS VARCHAR)", salt="bkq:")
-    qlist = ", ".join(str(q) for q in quantiles)
-    return f"""
-        WITH rows_ AS (SELECT event_type AS g,
-                              CAST(floor(value * 1000) AS BIGINT) AS v,
-                              CAST(event_id AS VARCHAR) AS key,
-                              {pri} AS pri
-                       FROM events),
-        samp AS MATERIALIZED (
-            SELECT g, v, key FROM (
-              SELECT g, v, key,
-                     row_number() OVER (PARTITION BY g
-                                        ORDER BY pri, key, v) AS rn
-              FROM rows_)
-            WHERE rn <= {k}),
-        ks AS (SELECT g, count(*) AS ks FROM samp GROUP BY 1),
-        qs AS (SELECT unnest([{qlist}]) AS q_pct),
-        sr AS (SELECT g, v,
-                      row_number() OVER (PARTITION BY g
-                                         ORDER BY v, key) AS vr
-               FROM samp),
-        est AS (SELECT g, q_pct, min(v) AS est
-                FROM sr JOIN ks USING (g) CROSS JOIN qs
-                WHERE vr * 100 >= q_pct * ks GROUP BY 1, 2),
-        hist AS (SELECT g, v, count(*) AS c FROM rows_ GROUP BY 1, 2),
-        cum AS (SELECT g, v,
-                       sum(c) OVER (PARTITION BY g ORDER BY v) AS cum
-                FROM hist),
-        tot AS (SELECT g, sum(c) AS n FROM hist GROUP BY 1),
-        ex AS (SELECT g, q_pct, min(v) AS exact, max(n) AS n
-               FROM cum JOIN tot USING (g) CROSS JOIN qs
-               WHERE cum * 100 >= q_pct * n GROUP BY 1, 2)
-        SELECT g AS event_type, CAST(q_pct AS INT) AS q_pct,
-               CAST(n AS BIGINT) AS n, CAST(ks AS BIGINT) AS ks,
-               CAST(est AS BIGINT) AS est,
-               CAST(exact AS BIGINT) AS exact,
-               CAST(abs(est - exact) AS BIGINT) AS abs_err
-        FROM est JOIN ex USING (g, q_pct) JOIN ks USING (g)"""
-
-
 def q212_spam_mass(spark, sf_dir):
     """TrustRank spam mass (operators.graph.trust_spam_mass) on the
     q62 part<->supplier bipartite graph: global PageRank minus
@@ -4930,38 +4609,6 @@ _ARI_ORACLE_SQL = (
         " label AS g FROM embeddings"))
 
 
-def q214_loo_valuation(spark, sf_dir):
-    """Leave-one-source-out data valuation (operators.classify
-    .loo_source_valuation): for every source, the q125 hashed NB
-    classifier retrained WITHOUT that source's training docs — via
-    count subtraction, never a per-source retraining pass (NB
-    evidence is additive) — and held-out accuracy re-read;
-    delta_ppm prices the source by utility (Data-Shapley's exact
-    first-order term).  The mixture-curation complement of q143:
-    q143 sizes sources by count, this prices them by what the
-    quality model loses when they leave.  Same weak label, split
-    rule, feature hashing, and integer weight formula as q125 —
-    one shared oracle-certified training stack."""
-    from python_mecab_ner_spark.functions.hashing import bucket
-    from python_mecab_ner_spark.operators.classify import (
-        loo_source_valuation)
-    d = _load(spark, sf_dir, "documents")
-    hits = d.select("doc_id", "text", "source",
-                    *TX.blocklist_phrase_counts(F.col("text")))
-    total = sum((F.col(c) for c in hits.columns
-                 if c.startswith("bl_")), F.lit(0))
-    lab = hits.select("doc_id", "text", "source",
-                      (total > 0).cast("int").alias("y"),
-                      (bucket(F.col("doc_id").cast("string"), 10,
-                              salt="split:") <= 7).cast("int")
-                      .alias("is_train"))
-    out = loo_source_valuation(lab, "text", "doc_id", "source",
-                               "y", "is_train")
-    res = out.orderBy("source")
-    res.unpersist_input = out.unpersist_input
-    return res
-
-
 def q215_cdc_dedup(spark, sf_dir):
     """Content-defined chunking transfer savings on a recrawl
     (operators.dedup.cdc_chunks vs the fixed_chunks control):
@@ -5075,86 +4722,6 @@ def _cdc_oracle_sql() -> str:
             _fixed_chunks_sql("fixed1", "documents") + "," +
             _fixed_chunks_sql("fixed2", "snap2") +
             blocks[0] + "\n        UNION ALL" + blocks[1])
-
-
-def q216_kmv_overlap(spark, sf_dir):
-    """KMV sketched source-overlap matrix (operators.sketch
-    .kmv_overlap_estimates) on 8-char shingle sets: per-source
-    k=256 minimum 48-bit hash values estimate distinct counts,
-    merged pair sketches + inclusion-exclusion estimate every
-    |A ∩ B| — the SCALE path of q106's exact vocabulary-overlap
-    join (q106 joins full key sets; sketches are 256 rows per
-    source, mergeable like the rest of the sketch family: HLL
-    counts one set, KMV prices every pairwise overlap).  Estimates
-    ship next to the exact intersection + err_ppm, the q204/q211
-    error-visibility convention."""
-    from python_mecab_ner_spark.operators.sketch import (
-        kmv_overlap_estimates)
-    d = _loadp(spark, sf_dir, "documents")
-    sh = d.select(
-        "source",
-        F.explode(F.expr(
-            "transform(sequence(1, greatest(length(text) - 7, 1)),"
-            " i -> substring(text, i, 8))")).alias("key"))
-    out = kmv_overlap_estimates(sh, "source", "key", k=256)
-    res = out.orderBy("ga", "gb")
-    res.unpersist_input = out.unpersist_input
-    return res
-
-
-def _kmv_oracle_sql(k: int = 256, m_bits: int = 48) -> str:
-    """Generated DuckDB twin of q216."""
-    m = 1 << m_bits
-    h = md5_int_sql("key", bits_hex=m_bits // 4, salt="kmv:")
-    est_case = (f"CAST(CASE WHEN count(*) < {k} THEN count(*)"
-                f" ELSE ({k - 1} * {m}) // max(h) END AS BIGINT)")
-    return f"""
-        WITH shp AS (SELECT source, text,
-                            unnest(range(1, greatest(length(text) - 7,
-                                                     1) + 1)) AS i
-                     FROM documents),
-        keys AS (SELECT DISTINCT source AS g,
-                        substr(text, CAST(i AS INT), 8) AS key
-                 FROM shp),
-        kh AS MATERIALIZED (SELECT g, key, {h} AS h FROM keys),
-        hs AS (SELECT DISTINCT g, h FROM kh),
-        sk AS MATERIALIZED (
-            SELECT g, h FROM (
-              SELECT g, h, row_number() OVER (PARTITION BY g
-                                              ORDER BY h) AS rn
-              FROM hs) WHERE rn <= {k}),
-        est AS (SELECT g, {est_case} AS est_n FROM sk GROUP BY g),
-        gs AS (SELECT DISTINCT g FROM sk),
-        gp AS (SELECT x.g AS ga, y.g AS gb
-               FROM gs x JOIN gs y ON x.g < y.g),
-        pairs AS (SELECT ga, gb, h FROM gp JOIN sk ON sk.g = gp.ga
-                  UNION
-                  SELECT ga, gb, h FROM gp JOIN sk ON sk.g = gp.gb),
-        uni AS (SELECT ga, gb, {est_case} AS est_union FROM (
-                  SELECT ga, gb, h,
-                         row_number() OVER (PARTITION BY ga, gb
-                                            ORDER BY h) AS rn
-                  FROM pairs) WHERE rn <= {k} GROUP BY 1, 2),
-        ex AS (SELECT x.g AS ga, y.g AS gb,
-                      count(*) AS exact_inter
-               FROM kh x JOIN kh y
-                 ON x.key = y.key AND x.g < y.g
-               GROUP BY 1, 2)
-        SELECT ga, gb, est_a, est_b, est_union, est_inter,
-               exact_inter,
-               CAST((abs(est_inter - exact_inter) * 1000000)
-                    // greatest(exact_inter, 1) AS BIGINT) AS err_ppm
-        FROM (
-          SELECT uni.ga, uni.gb,
-                 ea.est_n AS est_a, eb.est_n AS est_b, est_union,
-                 CAST(greatest(0, ea.est_n + eb.est_n - est_union)
-                      AS BIGINT) AS est_inter,
-                 CAST(coalesce(ex.exact_inter, 0) AS BIGINT)
-                     AS exact_inter
-          FROM uni
-          JOIN est ea ON ea.g = uni.ga
-          JOIN est eb ON eb.g = uni.gb
-          LEFT JOIN ex ON ex.ga = uni.ga AND ex.gb = uni.gb)"""
 
 
 def q217_node2vec(spark, sf_dir):
@@ -5279,46 +4846,6 @@ def _katz_oracle_sql(iters: int = 3, scale: int = 1_000_000,
                  FROM nodes n LEFT JOIN m{i} ON m{i}.node = n.node)"""
     return s + f"""
         SELECT CAST(node AS BIGINT) AS node, k FROM k{iters}"""
-
-
-def q219_weak_vote(spark, sf_dir):
-    """Weak-supervision label fusion (operators.classify
-    .weak_vote_fusion): five real heuristic gates — length >= 300,
-    >= 56 words, >= 5.5 chars/word, no blocklist phrase, >= 46%
-    distinct words (all at the corpus medians, see the threshold
-    note below) — majority-vote, earn chance-centered reliability
-    weights, and re-vote weighted; `flipped` marks docs where the
-    weighted vote overrules the raw majority.  The data-programming
-    rung between q56's single gate and q125's trained gate (whose
-    weak label this fusion would replace); gates share byte-level
-    expressions with the oracle."""
-    from python_mecab_ner_spark.operators.classify import (
-        weak_vote_fusion)
-    d = _load(spark, sf_dir, "documents")
-    hits = d.select("doc_id", "text",
-                    *TX.blocklist_phrase_counts(F.col("text")))
-    blsum = sum((F.col(c) for c in hits.columns
-                 if c.startswith("bl_")), F.lit(0))
-    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"),
-                    lambda s: s != F.lit(""))
-    # thresholds sit at the corpus MEDIANS (measured: length 306,
-    # words 56, chars/word 5.5, distinct-word ratio 46%) so the
-    # gates genuinely disagree — the first cut used tail thresholds
-    # plus a digit gate the corpus never fires, and the vote was
-    # unanimous (majority 498/2, zero flips: a fusion that fuses
-    # nothing certifies nothing)
-    gates = hits.select(
-        "doc_id",
-        (F.length("text") >= 300).cast("int").alias("g_len"),
-        (F.size(toks) >= 56).cast("int").alias("g_words"),
-        (F.length("text") * 10 >= F.size(toks) * 55)
-        .cast("int").alias("g_wlen"),
-        (blsum == 0).cast("int").alias("g_block"),
-        (F.size(F.array_distinct(toks)) * 100 >= F.size(toks) * 46)
-        .cast("int").alias("g_uniq"))
-    return weak_vote_fusion(
-        gates, "doc_id",
-        ["g_len", "g_words", "g_wlen", "g_block", "g_uniq"])
 
 
 def q220_reshard(spark, sf_dir):
@@ -6276,112 +5803,6 @@ def _hits_oracle_sql(iters: int = 2, scale: int = 1_000_000) -> str:
         JOIN h{iters} h ON h.node = n.node"""
 
 
-def q71_cm_heavy_hitters(spark, sf_dir):
-    """Count-min sketch heavy hitters (operators/sketch.py): a d=4 x
-    w=256 integer sketch built in one combinable aggregate, probed for
-    the exact top-20 words — output shows exact count next to the CM
-    estimate, making the sketch's overestimate bias auditable instead
-    of float-hidden.  At 100 TB the sketch is the only state whose
-    size does not grow with vocabulary."""
-    from python_mecab_ner_spark.operators.sketch import (cm_estimate,
-                                                         cm_sketch)
-    d = _loadp(spark, sf_dir, "documents")
-    toks = (d.select(F.explode(
-        F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
-        .where("word <> ''"))
-    top = (toks.groupBy("word").agg(F.count("*").alias("n"))
-           .orderBy(F.col("n").desc(), F.col("word").asc()).limit(20))
-    sk = cm_sketch(toks, "word", d=4, w=256)
-    est = cm_estimate(top, sk, "word", d=4, w=256)
-    return (top.join(est, top["word"] == est["term"])
-            .select("word", F.col("n").cast("bigint").alias("exact_n"),
-                    "cm_est"))
-
-
-def q73_bpe_merges(spark, sf_dir):
-    """Distributed BPE vocabulary induction (operators/bpe.py): one
-    corpus pass to the weighted word-frequency table, then vocab-sized
-    merge rounds (pair explode -> combinable weight sum -> argmax ->
-    literal sentinel-replace).  The 3-round merge table is bit-exact
-    vs the generated unrolled-SQL twin."""
-    from python_mecab_ner_spark.operators.bpe import bpe_merge_table
-    d = _loadp(spark, sf_dir, "documents")
-    return bpe_merge_table(spark, d, "text", iters=3)
-
-
-def _bpe_cte(iters: int = 3, keep_word: bool = False) -> str:
-    """Shared unrolled BPE CTE chain (q73 + q74): same symbol
-    sentinels, same pair weights, same bytewise tie-break, same 3-pass
-    literal replace.  keep_word threads the word key through every
-    round (q74 needs word -> final segmentation)."""
-    w = ", word" if keep_word else ""
-    s = """
-        WITH tok AS (SELECT unnest(regexp_split_to_array(
-                         lower(trim(text)), '\\s+')) AS word
-                     FROM documents),
-        wf AS (SELECT word, CAST(count(*) AS BIGINT) AS n FROM tok
-               WHERE word <> '' GROUP BY 1),
-        s0 AS (SELECT ' ' || trim(regexp_replace(word, '(.)', '\\1 ',
-                                                 'g')) || ' ' AS sym,
-                      n{w}
-               FROM wf)""".replace("{w}", w)
-    for k in range(1, iters + 1):
-        sw = ", s.word" if keep_word else ""
-        s += f""",
-        a{k} AS (SELECT regexp_split_to_array(trim(sym), ' ') AS arr, n
-                 FROM s{k - 1}),
-        p{k} AS (SELECT arr[i + 1] || ' ' || arr[i + 2] AS pair,
-                        CAST(sum(n) AS BIGINT) AS cnt
-                 FROM (SELECT arr, n,
-                              unnest(range(0, greatest(len(arr) - 1, 0)))
-                                  AS i
-                       FROM a{k})
-                 GROUP BY 1),
-        b{k} AS (SELECT pair, cnt FROM p{k}
-                 ORDER BY cnt DESC, pair LIMIT 1),
-        s{k} AS (SELECT replace(replace(replace(s.sym, x.t, x.r),
-                                        x.t, x.r), x.t, x.r) AS sym,
-                        s.n{sw}
-                 FROM s{k - 1} s CROSS JOIN
-                      (SELECT ' ' || pair || ' ' AS t,
-                              ' ' || replace(pair, ' ', '') || ' ' AS r
-                       FROM b{k}) x)"""
-    return s
-
-
-def _bpe_oracle_sql(iters: int = 3) -> str:
-    finals = " UNION ALL ".join(
-        f"SELECT CAST({k - 1} AS INT) AS rank, pair, cnt FROM b{k}"
-        for k in range(1, iters + 1))
-    return _bpe_cte(iters) + f" {finals}"
-
-
-def q74_bpe_token_counts(spark, sf_dir):
-    """Apply the learned BPE (q73's merge table) to the corpus:
-    per-doc token counts under the induced vocabulary — segmentation
-    runs once per DISTINCT word (vocab-sized) and broadcasts back, so
-    corpus cost is one explode + one broadcast join + one combinable
-    sum."""
-    from python_mecab_ner_spark.operators.bpe import bpe_token_counts
-    d = _loadp(spark, sf_dir, "documents")
-    return bpe_token_counts(spark, d, "text", "doc_id", iters=3)
-
-
-def q75_hll_registers(spark, sf_dir):
-    """HyperLogLog register table over the corpus vocabulary
-    (operators/sketch.py::hll_registers): approximate-distinct state
-    that is integer-exact, mergeable, and 64 rows at ANY corpus size.
-    The float harmonic-mean estimate is a documented client-side
-    formula (hll_estimate) kept out of the engine so the oracle stays
-    bit-exact."""
-    from python_mecab_ner_spark.operators.sketch import hll_registers
-    d = _loadp(spark, sf_dir, "documents")
-    toks = (d.select(F.explode(
-        F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
-        .where("word <> ''"))
-    return hll_registers(toks, "word", n_registers=64)
-
-
 def q78_source_mix(spark, sf_dir):
     """Deterministic source mixing (the data-mixing step of corpus
     assembly): cap every source at C expected docs (C = total /
@@ -6422,19 +5843,6 @@ def q77_embedding_gram(spark, sf_dir):
     from python_mecab_ner_spark.operators.ann import gram_matrix
     e = _load(spark, sf_dir, "embeddings")
     return gram_matrix(e)
-
-
-def q76_source_vocab_hll(spark, sf_dir):
-    """Per-source vocabulary-richness sketches: one HLL register table
-    per source (the sketch-per-partition layout hll_merge folds into
-    the global q75 sketch) — the 'is this source template spam or real
-    language' curation signal, at 64 integers per source forever."""
-    from python_mecab_ner_spark.operators.sketch import hll_registers
-    d = _loadp(spark, sf_dir, "documents")
-    toks = (d.select("source", F.explode(
-        F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
-        .where("word <> ''"))
-    return hll_registers(toks, "word", n_registers=64, by=["source"])
 
 
 def q72_training_prep(spark, sf_dir):
@@ -7471,13 +6879,14 @@ def kg_coverage_docs(spark, sf_dir):
 # queries() entries (README: snapshot cap).  Insertion order therefore
 # decides which operator families get the externally-computed hard
 # signal: the 50 below span core SQL, NER/linking, text quality,
-# dedup, ANN, BPE, graph, ontology, retrieval, sampling, monitoring,
-# sketches, crawl/web, multimodal, and kg rows-only (round-4 verdict
-# task 2).  The full suite is unchanged — check_oracle.py runs all
-# entries regardless of order.
+# dedup, ANN, graph, ontology, retrieval, sampling, monitoring,
+# crawl/web, and kg rows-only (round-4 verdict task 2).  The full
+# suite is unchanged — check_oracle.py runs all entries regardless of
+# order.
 _SNAPSHOT_FIRST_50 = [
     # core SQL
-    "q01_pricing_summary", "q04_event_islands",
+    "q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
+    "q05_nearest_click", "q08_word_freq", "q09_neighbor_window",
     # NER / linking / disambiguation
     "q19_mention_firstpos", "q33_neighbor_stats", "q34_context_argmax",
     "q36_bio_export", "q44_evidence_scores",
@@ -7486,12 +6895,10 @@ _SNAPSHOT_FIRST_50 = [
     "q139_c4_line_rules",
     # dedup / blocking family
     "q15_exact_dedup", "q16_jaccard_pairs", "q17_lsh_pairs",
-    "q48_line_dedup", "q171_sorted_neighborhood",
+    "q18_simhash", "q48_line_dedup", "q171_sorted_neighborhood",
     "q174_multi_blocking_audit",
     # ANN / embeddings
     "q21_ann_lsh", "q29_ann_ivf",
-    # BPE
-    "q73_bpe_merges", "q97_bpe_fertility",
     # graph
     "q40_pagerank", "q49_khop", "q154_modularity", "q161_wl_classes",
     "q162_scc", "q173_ktruss", "q175_incremental_cc",
@@ -7506,12 +6913,8 @@ _SNAPSHOT_FIRST_50 = [
     "q165_epoch_allocation",
     # monitoring / profiling
     "q166_robust_outliers", "q169_heaps_law",
-    # sketches
-    "q71_cm_heavy_hitters", "q75_hll_registers",
     # crawl / web
     "q66_url_canonical", "q145_warc_roundtrip",
-    # multimodal plumbing
-    "q24_image_features",
     # real-KG rows-only
     "kg_link_levels", "kg_triples_by_pred", "kg_host_scc",
 ]
@@ -7548,9 +6951,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q20_ann_bruteforce": q20_ann_bruteforce,
         "q21_ann_lsh": q21_ann_lsh,
         "q22_salt_distribution": q22_salt_distribution,
-        "q23_blob_meta": q23_blob_meta,
-        "q24_image_features": q24_image_features,
-        "q25_frame_sample": q25_frame_sample,
         "q26_embedding_neardup": q26_embedding_neardup,
         "q27_neardup_clusters": q27_neardup_clusters,
         "q28_sessionize": q28_sessionize,
@@ -7566,8 +6966,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q38_tfidf_topk": q38_tfidf_topk,
         "q39_clean_corpus": q39_clean_corpus,
         "q40_pagerank": q40_pagerank,
-        "q41_audio_features": q41_audio_features,
-        "q42_image_resize": q42_image_resize,
         "q43_dup_argmax": q43_dup_argmax,
         "q44_evidence_scores": q44_evidence_scores,
         "q45_repetition_ppm": q45_repetition_ppm,
@@ -7596,12 +6994,7 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q68_weighted_rank": q68_weighted_rank,
         "q69_hash_split": q69_hash_split,
         "q70_communities": q70_communities,
-        "q71_cm_heavy_hitters": q71_cm_heavy_hitters,
         "q72_training_prep": q72_training_prep,
-        "q73_bpe_merges": q73_bpe_merges,
-        "q74_bpe_token_counts": q74_bpe_token_counts,
-        "q75_hll_registers": q75_hll_registers,
-        "q76_source_vocab_hll": q76_source_vocab_hll,
         "q77_embedding_gram": q77_embedding_gram,
         "q78_source_mix": q78_source_mix,
         "q79_hits": q79_hits,
@@ -7615,14 +7008,12 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q87_rrf_fusion": q87_rrf_fusion,
         "q88_tfidf_cosine_pairs": q88_tfidf_cosine_pairs,
         "q89_edge_diff": q89_edge_diff,
-        "q90_bloom_seen": q90_bloom_seen,
         "q91_adamic_adar": q91_adamic_adar,
         "q92_recency_decay": q92_recency_decay,
         "q93_random_walks": q93_random_walks,
         "q94_kcore": q94_kcore,
         "q95_quality_hist_gate": q95_quality_hist_gate,
         "q96_cooccurrence": q96_cooccurrence,
-        "q97_bpe_fertility": q97_bpe_fertility,
         "q98_walk_skipgrams": q98_walk_skipgrams,
         "q99_degree_histogram": q99_degree_histogram,
         "q100_incremental_lsh": q100_incremental_lsh,
@@ -7637,7 +7028,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q109_containment": q109_containment,
         "q110_clustering": q110_clustering,
         "q111_dup_coverage": q111_dup_coverage,
-        "q112_hashed_classifier": q112_hashed_classifier,
         "q113_normalize": q113_normalize,
         "q114_winnow": q114_winnow,
         "q115_source_dup_matrix": q115_source_dup_matrix,
@@ -7650,13 +7040,9 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q122_postings": q122_postings,
         "q123_hyperball": q123_hyperball,
         "q124_pq_topk": q124_pq_topk,
-        "q125_trained_classifier": q125_trained_classifier,
-        "q126_calibration": q126_calibration,
         "q127_embedding_outliers": q127_embedding_outliers,
         "q128_blocking_audit": q128_blocking_audit,
         "q129_robots_gate": q129_robots_gate,
-        "q130_threshold_confusion": q130_threshold_confusion,
-        "q131_gate_kappa": q131_gate_kappa,
         "q132_vocab_head": q132_vocab_head,
         "q133_fetch_rounds": q133_fetch_rounds,
         "q134_gate_funnel": q134_gate_funnel,
@@ -7708,7 +7094,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q180_semantic_decon": q180_semantic_decon,
         "q181_event_transitions": q181_event_transitions,
         "q182_bipartiteness": q182_bipartiteness,
-        "q183_auc": q183_auc,
         "q184_bootstrap_ci": q184_bootstrap_ci,
         "q185_wilson": q185_wilson,
         "q186_hearst": q186_hearst,
@@ -7729,22 +7114,17 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q201_taxonomy_reduce": q201_taxonomy_reduce,
         "q202_good_turing": q202_good_turing,
         "q203_jsonl_ledger": q203_jsonl_ledger,
-        "q204_ams_f2": q204_ams_f2,
         "q205_coloring": q205_coloring,
         "q206_temporal_reach": q206_temporal_reach,
         "q207_interval_join": q207_interval_join,
         "q208_scd2_history": q208_scd2_history,
         "q209_textrank": q209_textrank,
         "q210_zorder_layout": q210_zorder_layout,
-        "q211_bottomk_quantiles": q211_bottomk_quantiles,
         "q212_spam_mass": q212_spam_mass,
         "q213_rand_ari": q213_rand_ari,
-        "q214_loo_valuation": q214_loo_valuation,
         "q215_cdc_dedup": q215_cdc_dedup,
-        "q216_kmv_overlap": q216_kmv_overlap,
         "q217_node2vec": q217_node2vec,
         "q218_katz": q218_katz,
-        "q219_weak_vote": q219_weak_vote,
         "q220_reshard": q220_reshard,
         "q221_postings_gaps": q221_postings_gaps,
         "q222_class_terms": q222_class_terms,
@@ -7754,7 +7134,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q226_attack_vs_failure": q226_attack_vs_failure,
         "q227_lsh_plan": q227_lsh_plan,
         "q228_fresh_rank": q228_fresh_rank,
-        "q229_calibration_summary": q229_calibration_summary,
         "kg_triples_by_pred": kg_triples_by_pred,
         "kg_modularity": kg_modularity,
         "kg_edge_cut": kg_edge_cut,
@@ -8089,38 +7468,6 @@ def oracle_sql() -> dict[str, str]:
     _mst.append(")")
     mst_sql = "".join(_mst)
 
-    # q204 AMS F2: k conditional-sign sums in one aggregate + exact
-    # sum-of-squares twin; sign convention 1 - 2*(md5 % 2) on BOTH
-    # engines
-    _ams_signs = ", ".join(
-        f"sum(CASE WHEN {md5_int_sql('word', salt=f'ams{i}:')} % 2 = 0"
-        f" THEN 1 ELSE -1 END) AS z{i}"
-        for i in range(AMS_K))
-    _ams_mean = ("(" + " + ".join(f"z{i} * z{i}" for i in range(AMS_K))
-                 + f") // {AMS_K}")
-    _ams_rows = " UNION ALL ".join(
-        f"SELECT {i} AS est_id, z{i} AS z_sum, z{i} * z{i} AS est_f2,"
-        f" f2, mf FROM m"
-        for i in range(AMS_K))
-    ams_sql = f"""
-        WITH t AS (SELECT list_filter(regexp_split_to_array(
-                       lower(trim(text)), '\\s+'), s -> s <> '') AS w
-                   FROM documents),
-        tok AS (SELECT unnest(w) AS word FROM t),
-        one AS (SELECT {_ams_signs} FROM tok),
-        ex AS (SELECT sum(c * c) AS f2 FROM (
-                 SELECT word, count(*) AS c FROM tok GROUP BY 1)),
-        m AS (SELECT *, {_ams_mean} AS mf FROM one, ex),
-        u AS ({_ams_rows})
-        SELECT CAST(est_id AS BIGINT) AS est_id,
-               CAST(z_sum AS BIGINT) AS z_sum,
-               CAST(est_f2 AS BIGINT) AS est_f2,
-               CAST(f2 AS BIGINT) AS exact_f2,
-               CAST(mf AS BIGINT) AS mean_f2,
-               CAST((abs(est_f2 - f2) * 1000000) // f2 AS BIGINT)
-                   AS err_ppm
-        FROM u
-    """
 
     # q205 iterated-MIS coloring, unrolled colors x Luby rounds: each
     # color block is the q177 MIS oracle restricted to the uncolored
@@ -8340,201 +7687,6 @@ def oracle_sql() -> dict[str, str]:
     _bl_names = ", ".join(n for _, n in _bl)
     _bl_sum = " + ".join(n for _, n in _bl)
 
-    # trained-classifier oracle (q125): q112's hashed feature space,
-    # NB centered-rate weights from the train split, broadcast-scored
-    _tc_bucket = (f"CAST({md5_int_sql('f', salt='feat:')} % 4096 "
-                  f"AS BIGINT)")
-    _tc_split = bucket_sql("CAST(doc_id AS VARCHAR)", 10, salt="split:")
-    trained_cls_sql = f"""
-        WITH t AS (
-          SELECT doc_id,
-                 regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS w
-          FROM documents
-        ),
-        uni AS (SELECT doc_id, unnest(w) AS f FROM t),
-        bidx AS (SELECT doc_id, w,
-                        unnest(range(0, greatest(len(w) - 1, 0))) AS i
-                 FROM t),
-        big AS (SELECT doc_id, w[i + 1] || '_' || w[i + 2] AS f
-                FROM bidx),
-        feats AS (SELECT doc_id, f FROM uni WHERE f <> ''
-                  UNION ALL
-                  SELECT doc_id, f FROM big WHERE f <> ''),
-        fb AS (SELECT doc_id, {_tc_bucket} AS bucket FROM feats),
-        lab AS (SELECT doc_id,
-                       CASE WHEN {_bl_sum} > 0 THEN 1 ELSE 0 END AS y,
-                       CASE WHEN {_tc_split} <= 7 THEN 1 ELSE 0 END
-                           AS is_train
-                FROM (SELECT doc_id, {_bl_defs} FROM documents)),
-        cnt AS (SELECT bucket,
-                       sum(CASE WHEN lab.y = 1 THEN 1 ELSE 0 END) AS c1,
-                       sum(CASE WHEN lab.y = 0 THEN 1 ELSE 0 END) AS c0
-                FROM fb JOIN lab
-                  ON lab.doc_id = fb.doc_id AND lab.is_train = 1
-                GROUP BY 1),
-        tot AS (SELECT sum(c1) AS n1, sum(c0) AS n0 FROM cnt),
-        wt AS (SELECT bucket,
-                      CASE WHEN n1 > 0 THEN
-                        ((c1 * (n1 + n0) + 200 * n1) * 1000)
-                            // ((c1 + c0 + 200) * n1) - 1000
-                      ELSE 0 END AS weight
-               FROM cnt CROSS JOIN tot),
-        sc AS (SELECT fb.doc_id, count(*) AS n_feats,
-                      sum(coalesce(wt.weight, 0)) AS score
-               FROM fb LEFT JOIN wt USING (bucket)
-               GROUP BY 1)
-        SELECT sc.doc_id, CAST(n_feats AS BIGINT) AS n_feats,
-               CAST(score AS BIGINT) AS score,
-               CASE WHEN score > 0 THEN 'keep' ELSE 'drop' END AS label,
-               lab.y AS y, lab.is_train AS is_train
-        FROM sc JOIN lab ON lab.doc_id = sc.doc_id
-    """
-
-    # q214: the q125 training stack + per-source count subtraction
-    # (NB evidence is additive) + held-out accuracy per ablation
-    loo_sql = f"""
-        WITH t AS (
-          SELECT doc_id,
-                 regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS w
-          FROM documents
-        ),
-        uni AS (SELECT doc_id, unnest(w) AS f FROM t),
-        bidx AS (SELECT doc_id, w,
-                        unnest(range(0, greatest(len(w) - 1, 0))) AS i
-                 FROM t),
-        big AS (SELECT doc_id, w[i + 1] || '_' || w[i + 2] AS f
-                FROM bidx),
-        feats AS (SELECT doc_id, f FROM uni WHERE f <> ''
-                  UNION ALL
-                  SELECT doc_id, f FROM big WHERE f <> ''),
-        fb AS MATERIALIZED (
-            SELECT doc_id, {_tc_bucket} AS bucket FROM feats),
-        lab AS MATERIALIZED (
-            SELECT doc_id,
-                   CASE WHEN {_bl_sum} > 0 THEN 1 ELSE 0 END AS y,
-                   CASE WHEN {_tc_split} <= 7 THEN 1 ELSE 0 END
-                       AS is_train
-            FROM (SELECT doc_id, {_bl_defs} FROM documents)),
-        srcd AS (SELECT doc_id, source FROM documents),
-        trf AS MATERIALIZED (
-            SELECT fb.bucket, srcd.source, lab.y
-            FROM fb JOIN lab USING (doc_id) JOIN srcd USING (doc_id)
-            WHERE lab.is_train = 1),
-        pb AS MATERIALIZED (
-            SELECT bucket,
-                   sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS c1,
-                   sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS c0
-            FROM trf GROUP BY 1),
-        sb AS (SELECT source, bucket,
-                      sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS s1,
-                      sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS s0
-               FROM trf GROUP BY 1, 2),
-        tot AS (SELECT sum(c1) AS n1, sum(c0) AS n0 FROM pb),
-        st AS (SELECT source,
-                      sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS t1,
-                      sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS t0
-               FROM trf GROUP BY 1),
-        srcs AS (SELECT DISTINCT source FROM documents),
-        ab AS (SELECT srcs.source, pb.bucket,
-                      pb.c1 - coalesce(sb.s1, 0) AS ac1,
-                      pb.c0 - coalesce(sb.s0, 0) AS ac0,
-                      tot.n1 - st.t1 AS an1,
-                      tot.n0 - st.t0 AS an0
-               FROM pb CROSS JOIN srcs
-               LEFT JOIN sb ON sb.source = srcs.source
-                AND sb.bucket = pb.bucket
-               JOIN st ON st.source = srcs.source
-               CROSS JOIN tot),
-        abw AS MATERIALIZED (
-            SELECT source, bucket,
-                   CASE WHEN an1 > 0 THEN
-                     ((ac1 * (an1 + an0) + 200 * an1) * 1000)
-                         // ((ac1 + ac0 + 200) * an1) - 1000
-                   ELSE 0 END AS weight FROM ab),
-        fw AS (SELECT bucket,
-                      CASE WHEN n1 > 0 THEN
-                        ((c1 * (n1 + n0) + 200 * n1) * 1000)
-                            // ((c1 + c0 + 200) * n1) - 1000
-                      ELSE 0 END AS weight
-               FROM pb CROSS JOIN tot),
-        ev AS MATERIALIZED (
-            SELECT fb.doc_id, fb.bucket, lab.y
-            FROM fb JOIN lab USING (doc_id) WHERE lab.is_train = 0),
-        fullsc AS (SELECT ev.doc_id, max(ev.y) AS y,
-                          sum(coalesce(fw.weight, 0)) AS score
-                   FROM ev LEFT JOIN fw USING (bucket) GROUP BY 1),
-        fullacc AS (SELECT sum(CASE WHEN (score > 0) = (y = 1)
-                                    THEN 1 ELSE 0 END) * 1000000
-                           // count(*) AS acc_full_ppm
-                    FROM fullsc),
-        loosc AS (SELECT srcs.source, ev.doc_id, max(ev.y) AS y,
-                         sum(coalesce(abw.weight, 0)) AS score
-                  FROM ev CROSS JOIN srcs
-                  LEFT JOIN abw ON abw.source = srcs.source
-                   AND abw.bucket = ev.bucket
-                  GROUP BY 1, 2),
-        looacc AS (SELECT source,
-                          sum(CASE WHEN (score > 0) = (y = 1)
-                                   THEN 1 ELSE 0 END) * 1000000
-                          // count(*) AS acc_loo_ppm
-                   FROM loosc GROUP BY 1),
-        ntr AS (SELECT d.source, count(*) AS n_train_docs
-                FROM documents d JOIN lab ON lab.doc_id = d.doc_id
-                WHERE lab.is_train = 1 GROUP BY 1)
-        SELECT looacc.source,
-               CAST(n_train_docs AS BIGINT) AS n_train_docs,
-               CAST(acc_full_ppm AS BIGINT) AS acc_full_ppm,
-               CAST(acc_loo_ppm AS BIGINT) AS acc_loo_ppm,
-               CAST(acc_loo_ppm - acc_full_ppm AS BIGINT) AS delta_ppm
-        FROM looacc JOIN ntr USING (source) CROSS JOIN fullacc
-    """
-
-    # q219: five heuristic gates -> majority -> agreement-ppm
-    # reliability weights -> weighted re-vote (weak_vote_fusion twin)
-    _wv_gates = ["g_len", "g_words", "g_wlen", "g_block", "g_uniq"]
-    _wv_w = ", ".join(
-        f"2 * (sum(CASE WHEN {g} = maj THEN 1 ELSE 0 END) * 1000000"
-        f" // count(*)) - 1000000 AS w{i}"
-        for i, g in enumerate(_wv_gates))
-    _wv_score = " + ".join(
-        f"(2 * {g} - 1) * w{i}" for i, g in enumerate(_wv_gates))
-    weak_vote_sql = f"""
-        WITH t AS (SELECT doc_id, text,
-                          list_filter(regexp_split_to_array(
-                              trim(text), '\\s+'), s -> s <> '') AS w
-                   FROM documents),
-        bl AS (SELECT doc_id, {_bl_sum} AS blsum
-               FROM (SELECT doc_id, {_bl_defs} FROM documents)),
-        g AS (SELECT t.doc_id,
-                     CASE WHEN length(text) >= 300
-                          THEN 1 ELSE 0 END AS g_len,
-                     CASE WHEN len(w) >= 56 THEN 1 ELSE 0 END
-                         AS g_words,
-                     CASE WHEN length(text) * 10 >= len(w) * 55
-                          THEN 1 ELSE 0 END AS g_wlen,
-                     CASE WHEN blsum = 0 THEN 1 ELSE 0 END AS g_block,
-                     CASE WHEN len(list_distinct(w)) * 100
-                               >= len(w) * 46
-                          THEN 1 ELSE 0 END AS g_uniq
-              FROM t JOIN bl USING (doc_id)),
-        m AS (SELECT *,
-                     g_len + g_words + g_wlen + g_block + g_uniq
-                         AS n_pos,
-                     CASE WHEN 2 * (g_len + g_words + g_wlen
-                                    + g_block + g_uniq) > 5
-                          THEN 1 ELSE 0 END AS maj
-              FROM g),
-        wt AS (SELECT {_wv_w} FROM m)
-        SELECT doc_id, CAST(n_pos AS INT) AS n_pos,
-               CAST(maj AS INT) AS majority,
-               CAST({_wv_score} AS BIGINT) AS score,
-               CAST(CASE WHEN ({_wv_score}) > 0 THEN 1 ELSE 0 END
-                    AS INT) AS fused,
-               CAST(CASE WHEN (CASE WHEN ({_wv_score}) > 0
-                               THEN 1 ELSE 0 END) <> maj
-                    THEN 1 ELSE 0 END AS INT) AS flipped
-        FROM m CROSS JOIN wt
-    """
 
     # PQ oracle (q124): same int8 quantization as q51, seeds = 16
     # smallest md5("pq:"||id), codebook = their subvectors, encode =
@@ -8769,51 +7921,6 @@ def oracle_sql() -> dict[str, str]:
         UNION ALL {_audit_stat('prefix_filter', 'pfcand')}
     """
 
-    # calibration oracle (q126): q125's chain nested as a CTE, then
-    # equal-width integer bins over the held-out split
-    calibration_sql = f"""
-        WITH sc_all AS ({trained_cls_sql}),
-        held AS (SELECT score, y FROM sc_all WHERE is_train = 0),
-        rng AS (SELECT min(score) AS lo, max(score) AS hi FROM held),
-        b AS (SELECT ((score - lo) * 10) // (hi - lo + 1) AS bin,
-                     score, y
-              FROM held CROSS JOIN rng)
-        SELECT CAST(bin AS INT) AS bin,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(y) AS BIGINT) AS n_pos,
-               CAST(min(score) AS BIGINT) AS lo_score,
-               CAST(max(score) AS BIGINT) AS hi_score,
-               CAST((sum(y) * 1000000) // count(*) AS BIGINT) AS pos_ppm
-        FROM b GROUP BY 1
-    """
-
-    # q229: the q126 bins wrapped in a resolution + inversion summary
-    calib_summary_sql = f"""
-        WITH bins AS ({calibration_sql}),
-        pool AS (SELECT count(*) AS nb, sum(n_docs) AS nn,
-                        sum(n_pos) * 1000000 // sum(n_docs)
-                            AS pool_ppm
-                 FROM bins),
-        res AS (SELECT sum(n_docs * abs(pos_ppm - pool.pool_ppm))
-                           // max(pool.nn) AS resolution_ppm
-                FROM bins CROSS JOIN pool),
-        inv AS (SELECT sum(CASE WHEN pos_ppm < prev THEN 1
-                            ELSE 0 END) AS n_inversions,
-                       coalesce(max(CASE WHEN pos_ppm < prev
-                                    THEN prev - pos_ppm
-                                    ELSE 0 END), 0)
-                           AS max_inversion_ppm
-                FROM (SELECT pos_ppm,
-                             lag(pos_ppm) OVER (ORDER BY bin) AS prev
-                      FROM bins))
-        SELECT CAST(nb AS BIGINT) AS n_bins,
-               CAST(nn AS BIGINT) AS n_docs,
-               CAST(pool_ppm AS BIGINT) AS pool_ppm,
-               CAST(resolution_ppm AS BIGINT) AS resolution_ppm,
-               CAST(n_inversions AS BIGINT) AS n_inversions,
-               CAST(max_inversion_ppm AS BIGINT) AS max_inversion_ppm
-        FROM pool CROSS JOIN res CROSS JOIN inv
-    """
 
     # embedding outlier oracle (q127): q51's floor-clip int8
     # quantization, per-dim (n, s, ss), cross-multiplied z-test
@@ -8900,71 +8007,6 @@ def oracle_sql() -> dict[str, str]:
         FROM rd GROUP BY 1
     """
 
-    # threshold-confusion oracle (q130): q125's chain as a CTE, six
-    # literal thresholds, one grouped conditional-sum pass
-    _conf_values = ", ".join(f"({t})" for t in CONF_THRESHOLDS)
-    threshold_confusion_sql = f"""
-        WITH sc_all AS ({trained_cls_sql}),
-        held AS (SELECT score, y FROM sc_all WHERE is_train = 0),
-        th(thr) AS (VALUES {_conf_values}),
-        ag AS (SELECT thr,
-                      sum(CASE WHEN score > thr AND y = 1
-                               THEN 1 ELSE 0 END) AS tp,
-                      sum(CASE WHEN score > thr AND y = 0
-                               THEN 1 ELSE 0 END) AS fp,
-                      sum(CASE WHEN score <= thr AND y = 1
-                               THEN 1 ELSE 0 END) AS fn,
-                      sum(CASE WHEN score <= thr AND y = 0
-                               THEN 1 ELSE 0 END) AS tn
-               FROM held CROSS JOIN th GROUP BY 1)
-        SELECT CAST(thr AS BIGINT) AS thr,
-               CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-               CAST(fn AS BIGINT) AS fn, CAST(tn AS BIGINT) AS tn,
-               CAST((tp * 1000000) // greatest(tp + fp, 1)
-                    AS BIGINT) AS precision_ppm,
-               CAST((tp * 1000000) // greatest(tp + fn, 1)
-                    AS BIGINT) AS recall_ppm,
-               CAST((2 * tp * 1000000) // greatest(2 * tp + fp + fn, 1)
-                    AS BIGINT) AS f1_ppm
-        FROM ag
-    """
-
-    # gate-kappa oracle (q131): heuristic rule x trained keep, 2x2
-    # cells, exact-floor kappa via the +den offset
-    gate_kappa_sql = f"""
-        WITH sc_all AS ({trained_cls_sql}),
-        h AS (SELECT doc_id,
-                     CASE WHEN {lang_sql} = 'en' AND {qual_sql} >= 60
-                          THEN 1 ELSE 0 END AS a
-              FROM documents),
-        g AS (SELECT h.a,
-                     CASE WHEN sc_all.score > 0 THEN 1 ELSE 0 END AS b
-              FROM h JOIN sc_all ON sc_all.doc_id = h.doc_id),
-        cells AS (SELECT sum(a * b) AS n_both,
-                         sum(a * (1 - b)) AS n_a_only,
-                         sum((1 - a) * b) AS n_b_only,
-                         sum((1 - a) * (1 - b)) AS n_neither
-                  FROM g),
-        k AS (SELECT *,
-                     n_both + n_a_only + n_b_only + n_neither AS n,
-                     (n_both + n_a_only) * (n_both + n_b_only)
-                       + (n_b_only + n_neither) * (n_a_only + n_neither)
-                       AS pe_n2
-              FROM cells)
-        SELECT CAST(n AS BIGINT) AS n_docs,
-               CAST(n_both AS BIGINT) AS n_both,
-               CAST(n_a_only AS BIGINT) AS n_a_only,
-               CAST(n_b_only AS BIGINT) AS n_b_only,
-               CAST(n_neither AS BIGINT) AS n_neither,
-               CAST(((n_both + n_neither) * 1000000) // greatest(n, 1)
-                    AS BIGINT) AS po_ppm,
-               CAST(CASE WHEN n * n - pe_n2 = 0 THEN 0
-                    ELSE ((n * (n_both + n_neither) - pe_n2
-                           + n * n - pe_n2) * 1000000)
-                         // (n * n - pe_n2) - 1000000 END
-                    AS BIGINT) AS kappa_ppm
-        FROM k
-    """
 
     # head-coverage oracle (q132): same tokenization as the Spark
     # side, rank + running sum over the vocab, rows at the k knots
@@ -9540,35 +8582,6 @@ def oracle_sql() -> dict[str, str]:
             FROM per JOIN gdf USING (gram)
             GROUP BY 1
         """,
-        # unigram+bigram feature hashing -> md5 stand-in weights ->
-        # per-doc integer sum (q112's exact plan, relationally)
-        "q112_hashed_classifier": f"""
-            WITH t AS (
-              SELECT doc_id,
-                     regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS w
-              FROM documents
-            ),
-            uni AS (SELECT doc_id, unnest(w) AS f FROM t),
-            bidx AS (SELECT doc_id, w,
-                            unnest(range(0, greatest(len(w) - 1, 0))) AS i
-                     FROM t),
-            big AS (SELECT doc_id, w[i + 1] || '_' || w[i + 2] AS f
-                    FROM bidx),
-            feats AS (SELECT doc_id, f FROM uni WHERE f <> ''
-                      UNION ALL
-                      SELECT doc_id, f FROM big WHERE f <> ''),
-            wtd AS (SELECT doc_id,
-                           (({md5_int_sql(
-                               "CAST(" + md5_int_sql('f', salt='feat:')
-                               + " % 4096 AS VARCHAR)", salt='wt:')}
-                             % 17) - 8) AS wgt
-                    FROM feats)
-            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-                   CAST(sum(wgt) AS BIGINT) AS score,
-                   CASE WHEN sum(wgt) > 0 THEN 'keep' ELSE 'drop' END
-                       AS label
-            FROM wtd GROUP BY 1
-        """,
         "q113_normalize": f"""
             WITH m AS (SELECT doc_id, {_MESSY_TEXT_SQL} AS mt
                        FROM documents)
@@ -9749,16 +8762,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q123_hyperball": hyperball_sql,
         "q124_pq_topk": pq_sql,
-        "q125_trained_classifier": trained_cls_sql,
-        "q214_loo_valuation": loo_sql,
-        "q219_weak_vote": weak_vote_sql,
-        "q126_calibration": calibration_sql,
-        "q229_calibration_summary": calib_summary_sql,
         "q127_embedding_outliers": emb_outliers_sql,
         "q128_blocking_audit": blocking_audit_sql,
         "q129_robots_gate": robots_gate_sql,
-        "q130_threshold_confusion": threshold_confusion_sql,
-        "q131_gate_kappa": gate_kappa_sql,
         "q132_vocab_head": vocab_head_sql,
         "q133_fetch_rounds": fetch_rounds_sql,
         "q134_gate_funnel": gate_funnel_sql,
@@ -10051,63 +9057,6 @@ def oracle_sql() -> dict[str, str]:
             FROM s ORDER BY cos DESC, vec_id LIMIT 10
         """,
         "q21_ann_lsh": _ann_lsh_sql(),
-        # blob = utf-8 bytes of text, so DuckDB's md5(text) equals
-        # Spark's md5(binary); documents text is single-byte-safe
-        # (asserted in tests/test_multimodal.py), so varchar substring
-        # equals byte slicing
-        "q23_blob_meta": """
-            SELECT doc_id,
-                   (['image/png', 'audio/wav', 'video/mp4'])[(doc_id % 3) + 1] AS mime,
-                   CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-                   ('0x' || substr(md5(text), 1, 15))::bigint AS checksum
-            FROM documents
-        """,
-        "q24_image_features": """
-            WITH h AS (SELECT doc_id,
-                              ('0x' || substr(md5(text), 1, 15))::bigint AS hv
-                       FROM documents)
-            SELECT doc_id,
-                   CAST(32 + hv % 480 AS INT) AS width,
-                   CAST(32 + (hv >> 9) % 480 AS INT) AS height,
-                   CAST(1 + hv % 4 AS INT) AS n_channels,
-                   CAST(hv % 256 AS INT) AS mean_luma
-            FROM h
-        """,
-        "q25_frame_sample": """
-            WITH v AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 2),
-            f AS (SELECT doc_id, text,
-                         unnest(range(0, CAST(floor(octet_length(encode(text)) / 64) AS BIGINT), 4)) AS frame_idx
-                  FROM v)
-            SELECT doc_id, CAST(frame_idx AS INT) AS frame_idx,
-                   ('0x' || substr(md5(substring(text, CAST(frame_idx * 64 + 1 AS INT), 64)), 1, 15))::bigint AS frame_sig
-            FROM f
-        """,
-        "q41_audio_features": """
-            WITH h AS (SELECT doc_id, text,
-                              ('0x' || substr(md5(text), 1, 15))::bigint AS hv
-                       FROM documents WHERE doc_id % 3 = 1)
-            SELECT doc_id,
-                   CAST(([8000, 16000, 22050, 44100])[(hv % 4) + 1] AS INT)
-                       AS sample_rate,
-                   CAST(octet_length(encode(text)) * 4 AS BIGINT) AS n_samples,
-                   CAST(hv % 1024 AS INT) AS rms
-            FROM h
-        """,
-        "q42_image_resize": """
-            WITH h AS (SELECT doc_id,
-                              ('0x' || substr(md5(text), 1, 15))::bigint AS hv
-                       FROM documents WHERE doc_id % 3 = 0),
-            dims AS (SELECT doc_id,
-                            CAST(32 + hv % 480 AS INT) AS width,
-                            CAST(32 + (hv >> 9) % 480 AS INT) AS height
-                     FROM h)
-            SELECT doc_id, width, height,
-                   CAST(width * 224 // greatest(width, height) AS INT)
-                       AS new_width,
-                   CAST(height * 224 // greatest(width, height) AS INT)
-                       AS new_height
-            FROM dims
-        """,
         "q26_embedding_neardup": _embedding_neardup_sql(),
         "q31_asof_join": f"""
             WITH e AS (SELECT event_id, user_id, {minute.format(c='ts')} AS pos
@@ -10221,22 +9170,6 @@ def oracle_sql() -> dict[str, str]:
             FROM ag
         """,
         "q68_weighted_rank": _wpr_oracle_sql(iters=3),
-        # d=4 x w=256 count-min sketch: same salted md5 bucket hashes,
-        # same min-over-rows probe as operators/sketch.py
-        # bucket = h & 63, payload = h >> 6 (54 bits), rho = 55 -
-        # bit_length(payload) — the same length(bin(x)) idiom as q38
-        "q75_hll_registers": f"""
-            WITH tok AS (SELECT unnest(regexp_split_to_array(
-                             lower(trim(text)), '\\s+')) AS word
-                         FROM documents),
-            hh AS (SELECT {md5_int_sql('word', salt='hll:')} AS h
-                   FROM tok WHERE word <> '')
-            SELECT CAST(h & 63 AS INT) AS bucket,
-                   CAST(max(CASE WHEN (h >> 6) > 0
-                            THEN 55 - length(bin(h >> 6))
-                            ELSE 55 END) AS INT) AS max_rho
-            FROM hh GROUP BY 1
-        """,
         "q78_source_mix": f"""
             WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s
                        FROM documents GROUP BY 1),
@@ -10272,40 +9205,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
                    CAST(sum(qe[i + 1] * qe[j + 1]) AS BIGINT) AS s
             FROM cell GROUP BY 1, 2
-        """,
-        "q76_source_vocab_hll": f"""
-            WITH tok AS (SELECT source, unnest(regexp_split_to_array(
-                             lower(trim(text)), '\\s+')) AS word
-                         FROM documents),
-            hh AS (SELECT source, {md5_int_sql('word', salt='hll:')} AS h
-                   FROM tok WHERE word <> '')
-            SELECT source, CAST(h & 63 AS INT) AS bucket,
-                   CAST(max(CASE WHEN (h >> 6) > 0
-                            THEN 55 - length(bin(h >> 6))
-                            ELSE 55 END) AS INT) AS max_rho
-            FROM hh GROUP BY 1, 2
-        """,
-        "q71_cm_heavy_hitters": f"""
-            WITH wtok AS (SELECT unnest(regexp_split_to_array(
-                                  lower(trim(text)), '\\s+')) AS word
-                          FROM documents),
-            wt AS (SELECT word FROM wtok WHERE word <> ''),
-            top AS (SELECT word, CAST(count(*) AS BIGINT) AS exact_n
-                    FROM wt GROUP BY 1
-                    ORDER BY exact_n DESC, word LIMIT 20),
-            cells AS ({" UNION ALL ".join(
-                f"SELECT {r} AS r, ({md5_int_sql('word', salt=f'cm{r}:')})"
-                f" % 256 AS b FROM wt" for r in range(4))}),
-            sk AS (SELECT r, b, CAST(count(*) AS BIGINT) AS cnt
-                   FROM cells GROUP BY 1, 2),
-            keys AS ({" UNION ALL ".join(
-                f"SELECT word, {r} AS r, "
-                f"({md5_int_sql('word', salt=f'cm{r}:')}) % 256 AS b "
-                f"FROM top" for r in range(4))}),
-            est AS (SELECT word, min(coalesce(cnt, 0)) AS cm_est
-                    FROM keys LEFT JOIN sk USING (r, b) GROUP BY 1)
-            SELECT t.word, t.exact_n, CAST(e.cm_est AS BIGINT) AS cm_est
-            FROM top t JOIN est e USING (word)
         """,
         "q70_communities": _lpa_oracle_sql(iters=2),
         "q79_hits": _hits_oracle_sql(iters=2),
@@ -10355,39 +9254,6 @@ def oracle_sql() -> dict[str, str]:
                         ELSE 'kept' END AS status,
                    CAST(count(*) AS BIGINT) AS n_edges
             FROM u GROUP BY 1
-        """,
-        # 1024-bit bloom: 3 salted md5 positions per key, 32-bit words
-        # (low bits of a BIGINT only — 1<<63 overflow is engine-
-        # dependent, 1<<31 is not), bit_or build, all-k-bits probe
-        "q90_bloom_seen": f"""
-            WITH ks AS (SELECT doc_id, CAST(doc_id AS VARCHAR) AS k
-                        FROM documents),
-            pos AS (
-              SELECT doc_id,
-                     {md5_int_sql('k', salt='bloom0:')} % 1024 AS pos
-              FROM ks
-              UNION ALL SELECT doc_id,
-                     {md5_int_sql('k', salt='bloom1:')} % 1024 FROM ks
-              UNION ALL SELECT doc_id,
-                     {md5_int_sql('k', salt='bloom2:')} % 1024 FROM ks),
-            bloom AS (SELECT CAST(pos // 32 AS INT) AS word_idx,
-                             bit_or(CAST(1 AS BIGINT)
-                                    << CAST(pos % 32 AS INT)) AS bits
-                      FROM pos WHERE doc_id % 2 = 0 GROUP BY 1),
-            probe AS (SELECT doc_id, CAST(pos // 32 AS INT) AS word_idx,
-                             CAST(1 AS BIGINT)
-                                 << CAST(pos % 32 AS INT) AS mask
-                      FROM pos),
-            m AS (SELECT probe.doc_id,
-                         min(CASE WHEN (COALESCE(b.bits, 0) & probe.mask)
-                                      = probe.mask
-                                  THEN 1 ELSE 0 END) AS maybe_seen
-                  FROM probe LEFT JOIN bloom b USING (word_idx)
-                  GROUP BY 1)
-            SELECT doc_id, CAST(maybe_seen AS INT) AS maybe_seen,
-                   CAST(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END
-                        AS INT) AS truly_seen
-            FROM m
         """,
         "q107_next_word": """
             WITH t AS (SELECT doc_id, regexp_split_to_array(
@@ -10576,29 +9442,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(count(*) AS BIGINT) AS n_pairs,
                    CAST(sum(60 // d) AS BIGINT) AS w_sum
             FROM p GROUP BY 1, 2 HAVING count(*) >= 5
-        """,
-        "q97_bpe_fertility": _bpe_cte(3, keep_word=True) + """,
-            v AS (SELECT word,
-                         CAST(len(regexp_split_to_array(trim(sym), ' '))
-                              AS BIGINT) AS n_tok
-                  FROM s3),
-            dtok AS (SELECT doc_id,
-                            unnest(regexp_split_to_array(
-                                lower(trim(text)), '\\s+')) AS word
-                     FROM documents),
-            tc AS (SELECT doc_id,
-                          CAST(sum(v.n_tok) AS BIGINT) AS n_tok
-                   FROM dtok JOIN v USING (word)
-                   WHERE dtok.word <> ''
-                   GROUP BY 1)
-            SELECT d.source,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(d.n_chars) AS BIGINT) AS sum_chars,
-                   CAST(sum(tc.n_tok) AS BIGINT) AS sum_bpe_tokens,
-                   CAST(sum(d.n_chars) * 1000000 // sum(tc.n_tok)
-                        AS BIGINT) AS chars_per_token_ppm
-            FROM tc JOIN documents d USING (doc_id)
-            GROUP BY 1
         """,
         "q93_random_walks": _walks_oracle_sql(
             walk_len=WALK_LEN, walks_per_node=WALKS_PER_NODE),
@@ -11027,7 +9870,6 @@ def oracle_sql() -> dict[str, str]:
         "q177_mis": mis_sql,
         "q197_boruvka_mst": mst_sql,
         "q198_densest": peel_sql,
-        "q204_ams_f2": ams_sql,
         "q205_coloring": coloring_sql,
         "q206_temporal_reach": temporal_sql,
         "q208_scd2_history": f"""
@@ -11079,11 +9921,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q209_textrank": _textrank_oracle_sql(iters=3, n_stop=8),
         "q210_zorder_layout": _zorder_oracle_sql(),
-        "q211_bottomk_quantiles": _bottomk_oracle_sql(),
         "q212_spam_mass": _spam_mass_oracle_sql(),
         "q213_rand_ari": _ARI_ORACLE_SQL,
         "q215_cdc_dedup": _cdc_oracle_sql(),
-        "q216_kmv_overlap": _kmv_oracle_sql(),
         "q217_node2vec": _n2v_oracle_sql(),
         "q218_katz": _katz_oracle_sql(),
         "q220_reshard": _reshard_oracle_sql(),
@@ -11309,38 +10149,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST((p.n * 1000000) // t.tot AS BIGINT) AS prob_ppm
             FROM pairs p JOIN tot t ON t.src_type = p.src_type
         """,
-        # q182: residue chains closed into cycles — bipartiteness is
-        # ANALYTIC from the residue counts (cycle length parity; odd
-        # residues skip one node, leaving a tail that does not affect
-        # the verdict), so the O(log n) double-cover engine gets an
-        # exact oracle with no recursion (the q176 construction)
-        # q183: tie-corrected Mann-Whitney over the per-split score
-        # histogram — 2U exact integer, auc_ppm = 2U*1e6 // (2*P*N)
-        "q183_auc": f"""
-            WITH sc_all AS ({trained_cls_sql}),
-            hist AS (SELECT is_train, score,
-                            sum(y) AS p, sum(1 - y) AS q
-                     FROM sc_all GROUP BY 1, 2),
-            cum AS (SELECT is_train, p, q,
-                           coalesce(sum(q) OVER (
-                               PARTITION BY is_train ORDER BY score
-                               ROWS BETWEEN UNBOUNDED PRECEDING
-                                        AND 1 PRECEDING), 0) AS qb
-                    FROM hist),
-            ag AS (SELECT is_train, sum(p) AS n_pos, sum(q) AS n_neg,
-                          count(*) AS n_scores,
-                          sum(p * (2 * qb + q)) AS u2
-                   FROM cum GROUP BY 1)
-            SELECT is_train,
-                   CAST(n_pos AS BIGINT) AS n_pos,
-                   CAST(n_neg AS BIGINT) AS n_neg,
-                   CAST(n_scores AS BIGINT) AS n_scores,
-                   CAST(u2 AS BIGINT) AS u2,
-                   CAST((u2 * 1000000)
-                        // greatest(2 * n_pos * n_neg, 1)
-                        AS BIGINT) AS auc_ppm
-            FROM ag
-        """,
         # q184: deterministic Poisson(1) weights (md5 -> CDF ppm
         # ladder), B=200 replicate means, percentile ranks 5/195
         "q184_bootstrap_ci": f"""
@@ -11421,6 +10229,11 @@ def oracle_sql() -> dict[str, str]:
             WHERE hypernym <> '' AND hyponym <> ''
             GROUP BY 1, 2, 3
         """,
+        # q182: residue chains closed into cycles — bipartiteness is
+        # ANALYTIC from the residue counts (cycle length parity; odd
+        # residues skip one node, leaving a tail that does not affect
+        # the verdict), so the O(log n) double-cover engine gets an
+        # exact oracle with no recursion (the q176 construction)
         "q182_bipartiteness": """
             WITH r AS (SELECT event_id % 8 AS r, count(*) AS cnt,
                               min(event_id) AS mn
@@ -11970,21 +10783,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(coalesce(r.cont_right, 0) AS BIGINT) AS cont_right
             FROM u LEFT JOIN l ON l.word = u.word
             LEFT JOIN r ON r.word = u.word
-        """,
-        "q73_bpe_merges": _bpe_oracle_sql(iters=3),
-        "q74_bpe_token_counts": _bpe_cte(3, keep_word=True) + """,
-            v AS (SELECT word,
-                         CAST(len(regexp_split_to_array(trim(sym), ' '))
-                              AS BIGINT) AS n_tok
-                  FROM s3),
-            dtok AS (SELECT doc_id,
-                            unnest(regexp_split_to_array(
-                                lower(trim(text)), '\\s+')) AS word
-                     FROM documents)
-            SELECT doc_id, CAST(sum(v.n_tok) AS BIGINT) AS n_bpe_tokens
-            FROM dtok JOIN v USING (word)
-            WHERE dtok.word <> ''
-            GROUP BY 1
         """,
         "q69_hash_split": f"""
             WITH b AS (SELECT {bucket_sql("CAST(doc_id AS VARCHAR)", 10,

@@ -14,8 +14,9 @@ Layout:
     sources/    corpus synthesis, gazetteer ingest, table catalog.
     functions/  reusable Column helpers (portable hashing, text stats,
                 similarity).
-    operators/  Spark DataFrame operators (tokenize, mentions, spans,
-                triples, linking, canonicalize, graph, dedup, ann).
+    operators/  Spark DataFrame operators: the KG path (annotate,
+                linking, canonicalize, graph) plus the driver-contract
+                families (dedup, ann, spans, retrieval, sampling, ...).
     plans/      end-to-end pipeline orchestration, lineage + resume.
     streaming/  the Structured-Streaming ingest query (pages -> triples,
                 exactly once per input file via its checkpoint).

@@ -1010,18 +1010,17 @@ def hyperball(edges: DataFrame, iters: int = 2, n_registers: int = 16,
     at any radius.  Neighborhood-function / effective-diameter /
     centrality estimation all read off this table.
 
-    Integer contract: registers use the same shift/mask rho as
-    sketch.hll_registers (md5-int hash, bucket = h & (m-1), rho =
-    payload_bits + 1 - bit_length(h >> log2 m)); the register TABLE
-    is the oracle artifact, the float estimate stays client-side
-    (sketch.hll_estimate over a collected row).
+    Integer contract: registers are HyperLogLog's (md5-int hash,
+    bucket = h & (m-1), rho = payload_bits + 1 - bit_length(h >>
+    log2 m)); the register TABLE is the oracle artifact, the float
+    estimate stays client-side (hll_estimate over a collected row).
 
     Scale shape per round: one equi-join (edges.dst = regs.node) +
     one map-side-combinable (node, bucket) max — the pagerank_int
     shuffle pattern; regs localCheckpoint'ed per round (unrolled
     iterations otherwise replicate the plan, the kg_entity_rank
     driver-OOM lesson).  Long/sparse register layout: absent
-    (node, bucket) rows mean rho 0, exactly as hll_merge treats them.
+    (node, bucket) rows mean rho 0.
 
     Returns (node, bucket, max_rho) after `iters` rounds."""
     from ..functions.hashing import md5_int
@@ -1052,6 +1051,22 @@ def hyperball(edges: DataFrame, iters: int = 2, n_registers: int = 16,
                 .agg(F.max("max_rho").alias("max_rho"))
                 .localCheckpoint(eager=True))
     return regs
+
+
+def hll_estimate(registers: list[int], n_registers: int = 64) -> float:
+    """Client-side harmonic-mean estimate (documented formula; floats
+    deliberately OUTSIDE the engine).  registers: max_rho per bucket,
+    0 for empty buckets."""
+    m = n_registers
+    alpha = 0.709 if m == 64 else 0.7213 / (1 + 1.079 / m)
+    z = sum(2.0 ** -r for r in registers)
+    est = alpha * m * m / z
+    if est <= 2.5 * m:
+        zeros = sum(1 for r in registers if r == 0)
+        if zeros:
+            import math
+            est = m * math.log(m / zeros)
+    return est
 
 
 def connected_components_star(edges: DataFrame, src: str = "src",

@@ -498,10 +498,7 @@ def textrank_keywords(docs: DataFrame, text_col: str, id_col: str,
 def word_bigrams(toks):
     """Null-padded zip_with word-bigram array over an already-
     FILTERED token array column — the shared widening idiom of
-    postings_gap_audit and class_tfidf_terms (classify's
-    _feature_array builds the same shape over its own unfiltered
-    split; its hash-salted oracle twins pin it separately, so it
-    stays independent by design)."""
+    postings_gap_audit and class_tfidf_terms."""
     n = F.size(toks)
     lead = F.greatest(n - 1, F.lit(1))
     return F.filter(

@@ -22,8 +22,7 @@ Two parsers, same output schema (url, warc_ts, html):
   ASCII payloads (test-pinned agreement with the byte-exact parser).
 
 ``synthesize_warc`` builds spec-shaped WARC bytes from a page table
-(deterministic, for round-trip tests and the q145 oracle — the same
-strategy as the multimodal blob synthesizer).
+(deterministic, for round-trip tests and the q145 oracle).
 
 Scale shape: one WARC file per input row (the Common-Crawl layout is
 ~1 GB gzip members; upstream splitting into per-file rows is the

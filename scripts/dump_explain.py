@@ -22,16 +22,15 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q60_pack_sequences", "q61_semdedup", "q62_ppr", "q63_funnel",
         "q64_cohort_retention", "q65_dedup_survivors", "q66_url_canonical",
         "q67_chunk_overlap", "q68_weighted_rank", "q69_hash_split",
-        "q70_communities", "q71_cm_heavy_hitters", "q72_training_prep",
-        "q73_bpe_merges", "q74_bpe_token_counts", "q75_hll_registers",
-        "q76_source_vocab_hll", "q77_embedding_gram", "q78_source_mix",
+        "q70_communities", "q72_training_prep", "q77_embedding_gram",
+        "q78_source_mix",
         "q79_hits", "q80_kn_continuation", "q81_crawl_budget",
         "q82_negative_samples", "q83_fuzzy_alias",
         "q84_importance_weights", "q85_burst_days", "q86_length_deciles",
         "q87_rrf_fusion", "q88_tfidf_cosine_pairs", "q89_edge_diff",
-        "q90_bloom_seen", "q91_adamic_adar", "q92_recency_decay",
+        "q91_adamic_adar", "q92_recency_decay",
         "q93_random_walks", "q94_kcore", "q95_quality_hist_gate",
-        "q96_cooccurrence", "q97_bpe_fertility", "q98_walk_skipgrams",
+        "q96_cooccurrence", "q98_walk_skipgrams",
         "q99_degree_histogram", "q100_incremental_lsh", "q101_kwic", "q102_split_leakage", "q103_weighted_simhash", "q104_butterflies", "q105_source_risk", "q106_source_overlap", "q107_next_word", "q108_eval_sample",
         # round 4
         "q153_rank_eval", "q154_modularity", "q155_entity_alignment",
@@ -48,7 +47,7 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q180_semantic_decon", "q181_event_transitions",
         "q182_bipartiteness",
         # final round-5 sweep
-        "q183_auc", "q184_bootstrap_ci", "q185_wilson", "q186_hearst",
+        "q184_bootstrap_ci", "q185_wilson", "q186_hearst",
         "q187_taxonomy_layers", "q188_merge_matching", "q189_cusum",
         "q190_betweenness", "q191_sssp", "q192_stitch",
         "q193_coverage_selection", "q194_kcenter",
@@ -56,19 +55,18 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         # round-5 continuation
         "q197_boruvka_mst", "q198_densest", "q199_k_anonymity",
         "q200_pareto", "q201_taxonomy_reduce", "q202_good_turing",
-        "q203_jsonl_ledger", "q204_ams_f2", "q205_coloring",
+        "q203_jsonl_ledger", "q205_coloring",
         "q206_temporal_reach", "q207_interval_join",
         "q208_scd2_history",
         # post-closeout
         "q209_textrank", "q210_zorder_layout",
-        "q211_bottomk_quantiles", "q212_spam_mass", "q213_rand_ari",
-        "q214_loo_valuation", "q215_cdc_dedup", "q216_kmv_overlap",
-        "q217_node2vec", "q218_katz", "q219_weak_vote",
+        "q212_spam_mass", "q213_rand_ari", "q215_cdc_dedup",
+        "q217_node2vec", "q218_katz",
         "q220_reshard", "q221_postings_gaps",
         "q222_class_terms", "q223_neyman",
         "q224_seasonal_outliers", "q225_robustness",
         "q226_attack_vs_failure", "q227_lsh_plan",
-        "q228_fresh_rank", "q229_calibration_summary"]
+        "q228_fresh_rank"]
 
 
 def main() -> int:

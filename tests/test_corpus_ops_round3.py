@@ -241,37 +241,6 @@ def test_canonical_url_cross_engine_agreement(spark):
     assert got == want
 
 
-# ---- count-min sketch -----------------------------------------------------
-
-def test_cm_sketch_overestimates_and_probes_exact(spark):
-    from python_mecab_ner_spark.operators.sketch import (cm_estimate,
-                                                         cm_sketch)
-    toks = spark.createDataFrame(
-        [("a",)] * 50 + [("b",)] * 7 + [(f"t{i}",) for i in range(40)],
-        "word string")
-    sk = cm_sketch(toks, "word", d=4, w=64)
-    # total mass preserved per row
-    per_row = {r.r: 0 for r in sk.collect()}
-    for r in sk.collect():
-        per_row[r.r] += r.cnt
-    assert set(per_row.values()) == {97}
-    terms = spark.createDataFrame([("a",), ("b",), ("zz",)],
-                                  "word string")
-    est = {r.term: r.cm_est
-           for r in cm_estimate(terms, sk, "word", d=4, w=64).collect()}
-    # CM guarantee: estimate >= true count; unseen term close to 0
-    assert est["a"] >= 50 and est["b"] >= 7
-    assert est["zz"] <= 40  # bounded by colliding tail mass
-
-
-def test_cm_sketch_is_single_aggregate(spark):
-    from python_mecab_ner_spark.operators.sketch import cm_sketch
-    toks = spark.createDataFrame([("a",)], "word string")
-    plan = (cm_sketch(toks, "word")
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("Exchange") <= 1  # one combinable agg, one scan
-
-
 # ---- randomized agreement sweeps ------------------------------------------
 
 def test_chunk_documents_randomized_vs_python(spark):
@@ -321,65 +290,7 @@ def test_survivor_selection_randomized_vs_python(spark):
     assert got == want
 
 
-# ---- BPE vocabulary induction ---------------------------------------------
-
-def test_bpe_merge_table_golden(spark):
-    """Classic BPE toy corpus: weighted counts, bytewise tie-break
-    ('l o' beats 'o w' at equal weight), merges feed later rounds."""
-    from python_mecab_ner_spark.operators.bpe import bpe_merge_table
-    d = spark.createDataFrame(
-        [(1, "low low low"), (2, "lower lower"), (3, "newest")],
-        "doc_id long, text string")
-    got = [(r.rank, r.pair, r.cnt)
-           for r in bpe_merge_table(spark, d, "text", iters=3)
-           .orderBy("rank").collect()]
-    assert got == [(0, "l o", 5), (1, "lo w", 5), (2, "e r", 2)]
-
-
-def test_bpe_merge_applies_across_repeat_runs(spark):
-    """The 3-pass literal replace merges EVERY occurrence in an
-    alternating run ('ababab' -> ab ab ab), not just the first — the
-    round-2 pair counts prove the application was complete."""
-    from python_mecab_ner_spark.operators.bpe import bpe_merge_table
-    d = spark.createDataFrame([(1, "ababab ababab")],
-                              "doc_id long, text string")
-    got = [(r.rank, r.pair, r.cnt)
-           for r in bpe_merge_table(spark, d, "text", iters=2)
-           .orderBy("rank").collect()]
-    assert got == [(0, "a b", 6), (1, "ab ab", 4)]
-
-
-def test_bpe_token_counts_golden(spark):
-    """low/lower/newest corpus after 3 merges (l o, lo w, e r):
-    low -> [low]=1, lower -> [low, er]=2, newest -> 6 chars."""
-    from python_mecab_ner_spark.operators.bpe import bpe_token_counts
-    d = spark.createDataFrame(
-        [(1, "low low low"), (2, "lower lower"), (3, "newest")],
-        "doc_id long, text string")
-    got = {r.doc_id: r.n_bpe_tokens
-           for r in bpe_token_counts(spark, d, "text", "doc_id",
-                                     iters=3).collect()}
-    assert got == {1: 3, 2: 4, 3: 6}
-
-
 # ---- sketch mergeability (incremental maintenance) ------------------------
-
-def test_cm_sketch_merge_equals_sketch_of_union(spark):
-    """sketch(A ∪ B) == cellwise-merge(sketch(A), sketch(B)) — the
-    property that lets a daily crawl fold per-day sketches without
-    re-reading history."""
-    from python_mecab_ner_spark.operators.sketch import cm_merge, cm_sketch
-    a = spark.createDataFrame([(w,) for w in "x y x z".split()],
-                              "word string")
-    b = spark.createDataFrame([(w,) for w in "y y q x".split()],
-                              "word string")
-    both = a.unionByName(b)
-    want = {(r.r, r.b): r.cnt
-            for r in cm_sketch(both, "word", d=3, w=32).collect()}
-    got = {(r.r, r.b): r.cnt
-           for r in cm_merge(cm_sketch(a, "word", d=3, w=32),
-                             cm_sketch(b, "word", d=3, w=32)).collect()}
-    assert got == want
 
 
 def test_minhash_merge_equals_signature_of_union(spark):
@@ -401,65 +312,6 @@ def test_minhash_merge_equals_signature_of_union(spark):
                minhash_signatures(a, "text", "doc_id"),
                minhash_signatures(b, "text", "doc_id")).collect()}
     assert got == want
-
-
-def test_hll_registers_merge_and_estimate(spark):
-    """hll(A ∪ B) == elementwise-max merge (exact), and the
-    client-side estimate lands within 20% of the true distinct count
-    on 5000 terms (deterministic hashes -> deterministic estimate)."""
-    from python_mecab_ner_spark.operators.sketch import (hll_estimate,
-                                                         hll_merge,
-                                                         hll_registers)
-    a = spark.createDataFrame([(f"t{i}",) for i in range(3000)],
-                              "word string")
-    b = spark.createDataFrame([(f"t{i}",) for i in range(2000, 5000)],
-                              "word string")
-    both = a.unionByName(b)
-    want = {r.bucket: r.max_rho
-            for r in hll_registers(both, "word").collect()}
-    got = {r.bucket: r.max_rho
-           for r in hll_merge(hll_registers(a, "word"),
-                              hll_registers(b, "word")).collect()}
-    assert got == want
-    regs = [want.get(i, 0) for i in range(64)]
-    est = hll_estimate(regs)
-    assert abs(est - 5000) / 5000 < 0.20, est
-
-
-def test_hll_rho_integer_exact_vs_python(spark):
-    """Register values equal a direct python recompute of the same
-    hash/shift arithmetic (guards the 60-bit/no-float-division
-    contract)."""
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    from python_mecab_ner_spark.operators.sketch import hll_registers
-    words = [f"w{i}" for i in range(500)]
-    d = spark.createDataFrame([(w,) for w in words], "word string")
-    got = {r.bucket: r.max_rho
-           for r in hll_registers(d, "word").collect()}
-    want = {}
-    for w in words:
-        h = md5_int_py(w, salt="hll:")
-        b, hp = h & 63, h >> 6
-        rho = 55 - hp.bit_length() if hp > 0 else 55
-        want[b] = max(want.get(b, 0), rho)
-    assert got == want
-
-
-def test_cm_estimate_empty_cells_count_zero(spark):
-    """A term hashing to any untouched cell must estimate 0 (the cell
-    exists implicitly with count 0) — regression for the inner-join
-    version that dropped such probes."""
-    from python_mecab_ner_spark.operators.sketch import (cm_estimate,
-                                                         cm_sketch)
-    toks = spark.createDataFrame([("a",), ("b",)], "word string")
-    sk = cm_sketch(toks, "word", d=4, w=4096)  # 8 touched cells of 16k
-    terms = spark.createDataFrame(
-        [(f"unseen{i}",) for i in range(50)] + [("a",)], "word string")
-    est = {r.term: r.cm_est
-           for r in cm_estimate(terms, sk, "word", d=4, w=4096).collect()}
-    assert len(est) == 51          # nothing dropped
-    assert est["a"] >= 1
-    assert min(est[f"unseen{i}"] for i in range(50)) == 0
 
 
 def _minhash_py(text, n_hashes=8, k=3):

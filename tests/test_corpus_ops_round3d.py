@@ -168,7 +168,7 @@ def test_hyperball_two_rounds_is_two_hops(spark):
 
 def test_hyperball_estimate_tracks_exact_ball(spark):
     from python_mecab_ner_spark.operators.graph import hyperball
-    from python_mecab_ner_spark.operators.sketch import hll_estimate
+    from python_mecab_ner_spark.operators.graph import hll_estimate
     # deterministic 3-regular-ish digraph on 200 nodes
     n = 200
     edges = [(i, (i * 7 + 3) % n) for i in range(n)] + \
@@ -265,54 +265,3 @@ def test_pq_seed_query_retrieves_itself_at_zero(spark):
     assert top[0].vec_id == seed and top[0].pq_dist == 0
 
 
-def test_nb_train_weights_golden(spark):
-    from python_mecab_ner_spark.operators.classify import (
-        _feature_array, nb_train_weights)
-    # 2 docs: label-1 doc is "bad bad", label-0 doc is "ok ok"
-    # feature occurrences: label1 -> {bad x2, bad_bad}, n1 = 3
-    #                      label0 -> {ok x2, ok_ok},   n0 = 3
-    d = spark.createDataFrame([(1, "bad bad"), (0, "ok ok")],
-                              "y int, text string")
-    # 4096 buckets: at 64 'bad_bad' collides with 'ok' (found the
-    # hard way — collisions fold counts together by design)
-    w = {r.bucket: r.weight
-         for r in nb_train_weights(d, "text", "y", n_buckets=4096,
-                                   scale=1000, shrink=10).collect()}
-    import pyspark.sql.functions as F
-    buckets = {r.t: r.fb[0] for r in spark.createDataFrame(
-        [("bad",), ("ok",), ("bad_bad",), ("ok_ok",)], "t string")
-        .select("t", _feature_array(F.col("t"), 4096).alias("fb"))
-        .collect()}
-    # bad: c1=2 c0=0 -> (2*6 + 10*3)*1000 div ((12)*3) - 1000 = 166
-    assert w[buckets["bad"]] == 166
-    # bad_bad: c1=1 c0=0 -> (1*6 + 30)*1000 div (11*3) - 1000 = 90
-    assert w[buckets["bad_bad"]] == 90
-    # ok: c1=0 c0=2 -> (0 + 30)*1000 div (12*3) - 1000 = -167
-    assert w[buckets["ok"]] == -167
-
-
-def test_trained_classifier_learns_separable_task(spark):
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    from python_mecab_ner_spark.operators.classify import (
-        hashed_linear_score, nb_train_weights)
-    # 200 docs, positive docs carry the marker phrase; vocab otherwise
-    # shared.  Train on hash-split, expect perfect held-out ordering.
-    base = ["the", "quick", "brown", "fox", "jumps", "over", "lazy"]
-    docs = []
-    for i in range(200):
-        words = [base[(i * 7 + j) % len(base)] for j in range(12)]
-        y = 1 if i % 5 == 0 else 0
-        if y:
-            words[3:3] = ["xx", "yy"]
-        docs.append((i, " ".join(words), y))
-    d = spark.createDataFrame(docs, "doc_id int, text string, y int")
-    train = d.where((F.pmod(
-        F.conv(F.substring(F.md5(F.concat(F.lit("split:"),
-                                          F.col("doc_id").cast("string"))),
-                           1, 15), 16, 10).cast("bigint"), F.lit(10)) <= 7))
-    w = nb_train_weights(train, "text", "y", shrink=50)
-    scored = (hashed_linear_score(d, "text", "doc_id", weights=w)
-              .join(d.select("doc_id", "y"), "doc_id").collect())
-    pos = [r.score for r in scored if r.y == 1]
-    neg = [r.score for r in scored if r.y == 0]
-    assert min(pos) > max(neg)   # fully separable -> fully separated

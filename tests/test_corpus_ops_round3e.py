@@ -1,36 +1,10 @@
-"""Round-3 additions (batch e): classifier calibration bins,
-exact-integer embedding dim outliers, dedup blocking audit, robots
-prefix gating — hand-computed goldens and edge cases."""
-
-from pyspark.sql import functions as F
+"""Round-3 additions (batch e): exact-integer embedding dim outliers,
+dedup blocking audit, robots prefix gating — hand-computed goldens and
+edge cases."""
 
 from python_mecab_ner_spark.operators.ann import embedding_dim_outliers
-from python_mecab_ner_spark.operators.classify import calibration_bins
 from python_mecab_ner_spark.operators.crawl import robots_gate
 from python_mecab_ner_spark.operators.dedup import blocking_audit
-
-
-def test_calibration_bins_golden(spark):
-    rows = [(0, 0), (1, 0), (2, 0), (3, 1), (4, 0),
-            (5, 1), (6, 1), (7, 0), (8, 1), (9, 1)]
-    d = spark.createDataFrame(rows, "score int, y int")
-    got = {r.bin: (r.n_docs, r.n_pos, r.lo_score, r.hi_score, r.pos_ppm)
-           for r in calibration_bins(d, "score", "y", n_bins=5).collect()}
-    # lo=0, hi=9 -> bin = score * 5 div 10 = score // 2
-    assert got == {0: (2, 0, 0, 1, 0),
-                   1: (2, 1, 2, 3, 500000),
-                   2: (2, 1, 4, 5, 500000),
-                   3: (2, 1, 6, 7, 500000),
-                   4: (2, 2, 8, 9, 1000000)}
-
-
-def test_calibration_bins_constant_score_single_bin(spark):
-    d = spark.createDataFrame([(7, 1), (7, 0), (7, 1)], "score int, y int")
-    rows = calibration_bins(d, "score", "y", n_bins=10).collect()
-    # hi == lo -> width 1, every doc lands in bin 0, no div-by-zero
-    assert len(rows) == 1 and rows[0].bin == 0
-    assert rows[0].n_docs == 3 and rows[0].n_pos == 2
-    assert rows[0].pos_ppm == 666666
 
 
 def test_embedding_outliers_single_hot_dim(spark):

@@ -1,72 +1,8 @@
-"""Round-3 additions (batch f): threshold confusion sheet, Cohen's
-kappa gate agreement, Zipf head coverage, politeness fetch rounds —
-hand-computed goldens and edge cases."""
+"""Round-3 additions (batch f): Zipf head coverage, politeness fetch
+rounds — hand-computed goldens and edge cases."""
 
-from pyspark.sql import functions as F
-
-from python_mecab_ner_spark.operators.classify import (
-    gate_agreement, threshold_confusion)
 from python_mecab_ner_spark.operators.crawl import fetch_rounds
 from python_mecab_ner_spark.operators.profile import vocab_head_coverage
-
-
-def test_threshold_confusion_golden(spark):
-    # scores 1..6, y = score >= 4 (perfectly separable at thr=3)
-    rows = [(1, 0), (2, 0), (3, 0), (4, 1), (5, 1), (6, 1)]
-    d = spark.createDataFrame(rows, "score int, y int")
-    got = {r.thr: (r.tp, r.fp, r.fn, r.tn, r.precision_ppm,
-                   r.recall_ppm, r.f1_ppm)
-           for r in threshold_confusion(d, [0, 3, 5]).collect()}
-    assert got[3] == (3, 0, 0, 3, 1_000_000, 1_000_000, 1_000_000)
-    # thr=0: everything predicted positive
-    assert got[0] == (3, 3, 0, 0, 500_000, 1_000_000, 666_666)
-    # thr=5: only score 6 predicted positive
-    assert got[5] == (1, 0, 2, 3, 1_000_000, 333_333, 500_000)
-
-
-def test_threshold_confusion_empty_positive_class(spark):
-    d = spark.createDataFrame([(1, 0), (2, 0)], "score int, y int")
-    row = threshold_confusion(d, [0]).collect()[0]
-    assert (row.tp, row.fn) == (0, 0)
-    assert row.precision_ppm == 0 and row.recall_ppm == 0
-    assert row.f1_ppm == 0
-
-
-def test_gate_agreement_perfect_and_chance(spark):
-    # perfect agreement with both classes present: kappa = 1
-    d = spark.createDataFrame([(1, 1), (1, 1), (0, 0), (0, 0)],
-                              "a int, b int")
-    row = gate_agreement(d, "a", "b").collect()[0]
-    assert row.n_docs == 4 and row.po_ppm == 1_000_000
-    assert row.kappa_ppm == 1_000_000
-    # independent raters at 50/50: po = 0.5, pe = 0.5, kappa = 0
-    d2 = spark.createDataFrame([(1, 1), (1, 0), (0, 1), (0, 0)],
-                               "a int, b int")
-    row2 = gate_agreement(d2, "a", "b").collect()[0]
-    assert row2.po_ppm == 500_000 and row2.kappa_ppm == 0
-
-
-def test_gate_agreement_negative_kappa_exact_floor(spark):
-    # systematic disagreement: a = 1-b always -> kappa = -1 exactly
-    d = spark.createDataFrame([(1, 0), (1, 0), (0, 1), (0, 1)],
-                              "a int, b int")
-    row = gate_agreement(d, "a", "b").collect()[0]
-    assert row.po_ppm == 0 and row.kappa_ppm == -1_000_000
-    # mild disagreement: hand-computed fractional negative kappa
-    # a: 1,1,0,0,0 ; b: 0,1,1,1,1 -> cells a=1 b=1 c=3 d=0, n=5
-    # po=1/5, pe_n2=(2*4)+(3*1)=11, num=5*1-11=-6, den=25-11=14
-    # kappa=-6/14 -> floor(-428571.43) = -428572 (floor, not trunc)
-    d3 = spark.createDataFrame([(1, 0), (1, 1), (0, 1), (0, 1), (0, 1)],
-                               "a int, b int")
-    row3 = gate_agreement(d3, "a", "b").collect()[0]
-    assert row3.kappa_ppm == -428572
-
-
-def test_gate_agreement_constant_raters_den_zero(spark):
-    d = spark.createDataFrame([(1, 1), (1, 1)], "a int, b int")
-    row = gate_agreement(d, "a", "b").collect()[0]
-    # pe = 1 -> kappa undefined -> reported 0 by convention
-    assert row.po_ppm == 1_000_000 and row.kappa_ppm == 0
 
 
 def test_vocab_head_coverage_golden(spark):

@@ -1,6 +1,6 @@
 """Round-3 late additions, batch 2: containment pairs, cross-doc
 duplicated-window coverage, local clustering coefficient, winnowing
-fingerprints, hashed linear classifier, text normalization —
+fingerprints, text normalization —
 hand-computed goldens on tiny graphs/corpora (the DuckDB cross-engine
 checks live in the q109-q114 oracles)."""
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.functions.hashing import md5_int_py
 from python_mecab_ner_spark.functions.text import normalize_text
-from python_mecab_ner_spark.operators.classify import hashed_linear_score
 from python_mecab_ner_spark.operators.dedup import (
     containment_pairs, cross_doc_ngram_coverage, winnow_fingerprints)
 from python_mecab_ner_spark.operators.graph import clustering_coefficient
@@ -101,38 +100,6 @@ def test_winnow_matches_python_reference(spark):
     assert got[1] & got[2]
     # density: never more fingerprints than grams
     assert len(got[1]) <= len("a b c d e f g h i j".split()) - 2
-
-
-def _py_classifier(text: str, n_buckets: int = 4096):
-    toks = text.lower().strip().split()
-    feats = toks + [f"{a}_{b}" for a, b in zip(toks, toks[1:])]
-    score = 0
-    for f_ in feats:
-        b = md5_int_py("feat:" + f_) % n_buckets
-        score += (md5_int_py("wt:" + str(b)) % 17) - 8
-    return len(feats), score
-
-
-def test_hashed_classifier_matches_python_reference(spark):
-    docs = [(1, "alpha beta gamma"), (2, "one"),
-            (3, "q w e r t y u i o p")]
-    d = spark.createDataFrame(docs, "doc_id int, text string")
-    rows = hashed_linear_score(d, "text", "doc_id").collect()
-    got = {r.doc_id: (r.n_feats, r.score, r.label) for r in rows}
-    for i, t in docs:
-        n, s = _py_classifier(t)
-        assert got[i] == (n, s, "keep" if s > 0 else "drop"), f"doc {i}"
-
-
-def test_hashed_classifier_broadcast_weights(spark):
-    # a supplied (bucket, weight) table overrides the stand-in;
-    # unmatched buckets contribute 0
-    d = spark.createDataFrame([(1, "alpha beta")],
-                              "doc_id int, text string")
-    b_alpha = md5_int_py("feat:alpha") % 4096
-    wt = spark.createDataFrame([(b_alpha, 7)], "bucket long, weight int")
-    r = hashed_linear_score(d, "text", "doc_id", weights=wt).collect()[0]
-    assert (r.n_feats, r.score, r.label) == (3, 7, "keep")
 
 
 def test_weighted_priority_sample_pps_and_determinism(spark):

@@ -217,56 +217,8 @@ def test_crawl_budget_sums_to_budget_randomized(spark):
 
 
 # ---------------------------------------------------------------------------
-# bloom filter / adamic-adar / recency decay (q90-q92 session)
+# adamic-adar / recency decay (q91-q92 session)
 # ---------------------------------------------------------------------------
-
-def _bloom_py(keys, m_words=8, k=3):
-    """Pure-python twin of sketch.bloom_build (same salted positions)."""
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    words = {}
-    for key in keys:
-        for i in range(k):
-            pos = md5_int_py(key, salt=f"bloom{i}:") % (32 * m_words)
-            words[pos // 32] = words.get(pos // 32, 0) | (1 << (pos % 32))
-    return words
-
-
-def test_bloom_no_false_negatives_and_python_twin(spark):
-    from python_mecab_ner_spark.operators.sketch import (bloom_build,
-                                                         bloom_probe)
-    keys = [f"url{i}" for i in range(40)]
-    df = spark.createDataFrame([(s,) for s in keys], "k string")
-    bloom = bloom_build(df, "k", m_words=8, k=3)
-    got = {r.word_idx: r.bits for r in bloom.collect()}
-    assert got == _bloom_py(keys, m_words=8, k=3)
-    # every inserted key probes positive — the no-false-negative law
-    probed = bloom_probe(df, bloom, "k", m_words=8, k=3)
-    assert all(r.maybe_member == 1 for r in probed.collect())
-
-
-def test_bloom_absent_key_with_empty_word_is_negative(spark):
-    from python_mecab_ner_spark.operators.sketch import (bloom_build,
-                                                         bloom_probe)
-    df = spark.createDataFrame([("a",)], "k string")
-    bloom = bloom_build(df, "k", m_words=64, k=3)  # 2048 bits, 1 key
-    cand = spark.createDataFrame([("definitely-new-url",)], "k string")
-    got = bloom_probe(cand, bloom, "k", m_words=64, k=3).collect()
-    # with 3 bits set in 2048 the probe must miss (left-join coalesce-0
-    # path: absent word rows read as all-zero words, not dropped rows)
-    assert got[0].maybe_member == 0
-
-
-def test_bloom_merge_equals_build_of_union(spark):
-    from python_mecab_ner_spark.operators.sketch import (bloom_build,
-                                                         bloom_merge)
-    a = spark.createDataFrame([(f"a{i}",) for i in range(20)], "k string")
-    b = spark.createDataFrame([(f"b{i}",) for i in range(20)], "k string")
-    merged = bloom_merge(bloom_build(a, "k", m_words=8),
-                         bloom_build(b, "k", m_words=8))
-    union = bloom_build(a.unionByName(b), "k", m_words=8)
-    assert ({(r.word_idx, r.bits) for r in merged.collect()}
-            == {(r.word_idx, r.bits) for r in union.collect()})
-
 
 def _aa_py(edges, min_common=1, cap=None, scale=1_000_000):
     """Pure-python twin of graph.adamic_adar."""

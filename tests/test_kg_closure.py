@@ -5,13 +5,18 @@ pure-Python reference.
 
 The list below is the whole closure.  A module joining it (an operator
 import sneaking back into the KG path, say through a lazy
-function-level import) or leaving it must be a deliberate edit here."""
+function-level import) or leaving it must be a deliberate edit here.
+
+Every other package module must be reached from the driver contract
+(`__spark_entry__.py`) or be a declared reference twin, so retiring
+driver entries cannot leave a dead module behind."""
 
 import ast
 from pathlib import Path
 
 PKG = "python_mecab_ner_spark"
-PKG_DIR = Path(__file__).resolve().parent.parent / PKG
+REPO = Path(__file__).resolve().parent.parent
+PKG_DIR = REPO / PKG
 
 ROOTS = ("plans.pipeline", "streaming.ingest", "api", "kernel.pyref")
 
@@ -37,6 +42,12 @@ KG_CLOSURE = {
     "streaming.ingest",
 }
 
+# Kept although no import reaches them: kernel.bio is the pure-Python
+# twin that tests check operators/bio.py against, and
+# kernel.tagger_adapter is the real-MeCab seam a caller hands to
+# annotate_pages(tokenizer=...).
+REFERENCE_TWINS = {"kernel.bio", "kernel.tagger_adapter"}
+
 
 def _is_module(mod: str) -> bool:
     """A package-relative dotted name that is a .py module (a package's
@@ -44,11 +55,12 @@ def _is_module(mod: str) -> bool:
     return PKG_DIR.joinpath(*mod.split(".")).with_suffix(".py").exists()
 
 
-def _imports(mod: str) -> set[str]:
+def _imports(mod: str, src: Path | None = None) -> set[str]:
     """Package modules `mod` imports anywhere in its body: relative and
     absolute, module-level and inside functions; `from X import sub`
-    counts the submodule X.sub when sub is one."""
-    src = PKG_DIR.joinpath(*mod.split(".")).with_suffix(".py")
+    counts the submodule X.sub when sub is one.  `src` reads a file
+    outside the package instead (absolute imports only)."""
+    src = src or PKG_DIR.joinpath(*mod.split(".")).with_suffix(".py")
     parent = mod.split(".")[:-1]
     names = []
     for node in ast.walk(ast.parse(src.read_text(), str(src))):
@@ -68,13 +80,27 @@ def _imports(mod: str) -> set[str]:
     return {n for n in names if n and _is_module(n)}
 
 
-def test_kg_closure_is_the_declared_list():
-    seen, todo = set(), list(ROOTS)
+def _closure(roots) -> set[str]:
+    seen, todo = set(), list(roots)
     while todo:
         mod = todo.pop()
         if mod not in seen:
             seen.add(mod)
             todo.extend(_imports(mod))
+    return seen
+
+
+def test_kg_closure_is_the_declared_list():
     # linking reaches kernel.jamo only through a function-level import
     assert "kernel.jamo" in _imports("operators.linking")
-    assert seen == KG_CLOSURE
+    assert _closure(ROOTS) == KG_CLOSURE
+
+
+def test_every_module_is_reached():
+    """A module nothing reaches is dead code: delete it with the last
+    driver entry that used it."""
+    driver = _imports("__spark_entry__", REPO / "__spark_entry__.py")
+    reached = _closure(ROOTS) | _closure(driver) | REFERENCE_TWINS
+    modules = {".".join(p.relative_to(PKG_DIR).with_suffix("").parts)
+               for p in PKG_DIR.rglob("*.py") if p.name != "__init__.py"}
+    assert modules - reached == set()

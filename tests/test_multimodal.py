@@ -1,91 +1,8 @@
-"""Multimodal binary-column operators: schema, Arrow batch plumbing,
-deterministic fake decode, frame sampling; plus the embedding
-near-dup pair operator."""
-
-import hashlib
-
-import pytest
-from pyspark.sql import functions as F
+"""ANN / embedding operators: banded sign-LSH near-dup pairs against a
+numpy twin, the adaptive LSH width, and IVF recall against brute
+force."""
 
 from python_mecab_ner_spark.operators.ann import embedding_neardup_pairs
-from python_mecab_ner_spark.operators.multimodal import (
-    FRAME_BYTES, blob_metadata, decode_image_real, fake_image_features,
-    image_features, sample_frames, synthesize_blobs)
-
-
-@pytest.fixture(scope="module")
-def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-@pytest.fixture(scope="module")
-def blobs(docs):
-    return synthesize_blobs(docs).cache()
-
-
-def test_blob_is_binary_with_typed_meta(blobs):
-    types = dict(blobs.dtypes)
-    assert types["blob"] == "binary"
-    assert types["meta"].startswith("struct<mime:string,n_bytes:bigint")
-    row = blobs.first()
-    assert isinstance(row.blob, (bytes, bytearray))
-    assert row.meta.n_bytes == len(row.blob)
-
-
-def test_documents_are_single_byte_safe(docs):
-    """The q23-q25 oracles slice VARCHARs byte-wise; valid only while
-    the corpus is single-byte text."""
-    assert docs.filter(F.octet_length("text") != F.length("text")).count() == 0
-
-
-def test_blob_metadata_checksum(blobs):
-    row = blob_metadata(blobs).orderBy("doc_id").first()
-    src = blobs.orderBy("doc_id").first()
-    want = int(hashlib.md5(bytes(src.blob)).hexdigest()[:15], 16)
-    assert row.checksum == want
-    assert row.n_bytes == len(src.blob)
-
-
-def test_real_codec_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"\x89PNG")
-
-
-def test_image_features_match_fake_decode(blobs):
-    out = {r.doc_id: r for r in image_features(blobs).collect()}
-    src = blobs.select("doc_id", "blob").collect()
-    assert len(out) == len(src)
-    for row in src[:50]:
-        w, h, c, l = fake_image_features(bytes(row.blob))
-        got = out[row.doc_id]
-        assert (got.width, got.height, got.n_channels, got.mean_luma) == (w, h, c, l)
-    feat_types = dict(image_features(blobs).dtypes)
-    assert feat_types == {"doc_id": "bigint", "width": "int",
-                          "height": "int", "n_channels": "int",
-                          "mean_luma": "int"}
-
-
-def test_frame_sample_indices_and_sigs(blobs):
-    video = blobs.filter("meta.mime = 'video/mp4'")
-    frames = sample_frames(video, every_k=4)
-    rows = frames.collect()
-    assert rows, "expected at least one sampled frame"
-    assert all(r.frame_idx % 4 == 0 for r in rows)
-    # cross-check one doc against python slicing
-    src = video.orderBy("doc_id").first()
-    n_frames = len(src.blob) // FRAME_BYTES
-    want_idx = [i for i in range(n_frames) if i % 4 == 0]
-    got = sorted((r.frame_idx, r.frame_sig) for r in rows
-                 if r.doc_id == src.doc_id)
-    assert [i for i, _ in got] == want_idx
-    for i, sig in got:
-        frame = bytes(src.blob)[i * FRAME_BYTES:(i + 1) * FRAME_BYTES]
-        assert sig == int(hashlib.md5(frame).hexdigest()[:15], 16)
-
-
-def test_frame_sample_empty_blob(spark):
-    df = spark.createDataFrame([(1, b"x" * 10)], "doc_id long, blob binary")
-    assert sample_frames(df).count() == 0  # < one frame -> no rows
 
 
 def test_embedding_neardup_pairs(spark, sf_dir):
@@ -149,32 +66,3 @@ def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     exact_pos = {v: i for i, v in enumerate(exact)}
     shared = [v for v in ivf if v in exact_pos]
     assert shared == sorted(shared, key=lambda v: exact_pos[v])
-
-
-def test_audio_features_deterministic(spark, sf_dir):
-    from python_mecab_ner_spark.operators.multimodal import (
-        audio_features, fake_audio_features, synthesize_blobs)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(30)
-    audio = synthesize_blobs(d).filter("meta.mime = 'audio/wav'")
-    rows = audio_features(audio).collect()
-    assert rows
-    blobs = {r.doc_id: bytes(r.blob) for r in audio.collect()}
-    for r in rows:
-        rate, n, rms = fake_audio_features(blobs[r.doc_id])
-        assert (r.sample_rate, r.n_samples, r.rms) == (rate, n, rms)
-        assert r.sample_rate in (8000, 16000, 22050, 44100)
-
-
-def test_resize_plan_fits_box(spark):
-    from python_mecab_ner_spark.operators.multimodal import resize_plan
-    df = spark.createDataFrame(
-        [(1, 640, 480), (2, 100, 400), (3, 224, 224), (4, 50, 50)],
-        "doc_id long, width int, height int")
-    out = {r.doc_id: r for r in resize_plan(df, target=224).collect()}
-    for r in out.values():
-        # the longest side hits the box exactly, nothing exceeds it
-        assert max(r.new_width, r.new_height) == 224
-    assert (out[1].new_width, out[1].new_height) == (224, 168)
-    assert (out[2].new_width, out[2].new_height) == (56, 224)
-    assert (out[3].new_width, out[3].new_height) == (224, 224)
-    assert (out[4].new_width, out[4].new_height) == (224, 224)

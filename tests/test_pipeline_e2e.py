@@ -274,7 +274,7 @@ def test_kg_reach_registers_exact_and_estimate_tracks_ball(spark):
     balls hit the linear-counting regime so tolerance is modest)."""
     import __spark_entry__ as entry
     from python_mecab_ner_spark.functions.hashing import md5_int_py
-    from python_mecab_ner_spark.operators.sketch import hll_estimate
+    from python_mecab_ner_spark.operators.graph import hll_estimate
 
     g = entry._kg_graph(spark)
     from pyspark.sql import functions as F

@@ -268,14 +268,6 @@ def test_neighbor_jaccard_broadcasts_degree_dims(spark, sf01):
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
-def test_q71_sketch_probe_broadcasts(spark, sf01):
-    """The CM probe joins top terms against the d*w-row sketch — that
-    side must broadcast, never shuffle."""
-    plan = _plan(entry.q71_cm_heavy_hitters(spark, sf01))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
 def test_q66_canonical_url_single_aggregate(spark, sf01):
     """URL canonicalization is projection-only before ONE combinable
     aggregate: no join, no window; the regexp chain stays in the
@@ -298,16 +290,6 @@ def test_q68_weighted_rank_partial_aggregates(spark, sf01):
     aggregation on the inbound-mass groupBy (sum is combinable)."""
     plan = _plan(entry.q68_weighted_rank(spark, sf01))
     assert plan.count("HashAggregate") >= 6, plan  # 3 iters x partial+final
-
-
-def test_q90_bloom_build_and_probe_shapes(spark, sf01):
-    """Bloom build is ONE combinable aggregate (partial + final
-    HashAggregate, no window); the probe joins the m_words-row filter
-    by BROADCAST, never a shuffled join."""
-    plan = _plan(entry.q90_bloom_seen(spark, sf01))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-    assert "Window" not in plan, plan
 
 
 def test_q91_adamic_adar_weight_rides_wedge(spark, sf01):
@@ -353,18 +335,6 @@ def test_q96_cooccurrence_equijoin_no_range_join(spark, sf01):
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert plan.count("HashAggregate") >= 2, plan  # partial + final
-
-
-def test_q112_classifier_no_python_udf_single_exchange(spark, sf01):
-    """Feature hashing + weight lookup are per-row JVM expressions;
-    the ONLY corpus exchange is the per-doc sum (partial + final
-    aggregate) — no UDF, no join in the default stand-in-weights
-    path."""
-    plan = _plan(entry.q112_hashed_classifier(spark, sf01))
-    assert "BatchEvalPython" not in plan, plan
-    assert "ArrowEvalPython" not in plan, plan
-    assert "Join" not in plan, plan
-    assert plan.count("HashAggregate") >= 2, plan
 
 
 def test_q114_winnow_zero_shuffle(spark, sf01):
@@ -450,16 +420,6 @@ def test_q124_pq_broadcasts_codebook_and_lut(spark, sf01):
     plan = _plan(entry.q124_pq_topk(spark, sf01))
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "TakeOrderedAndProject" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_q125_trained_weights_broadcast_single_corpus_agg(spark, sf01):
-    """The model table (n_buckets rows) must BROADCAST into the
-    feature stream — the corpus never shuffles on the bucket key; the
-    scoring exchange is the per-doc sum only."""
-    plan = _plan(entry.q125_trained_classifier(spark, sf01))
-    assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
 

@@ -1,9 +1,9 @@
-"""Round-5 late additions: exact rank-sum AUC, Poisson-bootstrap CI,
-Wilson lower bound, Hearst hypernym harvesting.
+"""Round-5 late additions: Poisson-bootstrap CI, Wilson lower bound,
+Hearst hypernym harvesting.
 
 Discipline as in test_round5_ops.py: every test recomputes the
 expected answer with plain Python on small randomized or hand-built
-inputs, so the DuckDB oracles (q183-q186) are not the only
+inputs, so the DuckDB oracles (q184-q186) are not the only
 cross-check.
 """
 
@@ -11,53 +11,9 @@ import math
 import random
 
 from python_mecab_ner_spark.functions.hashing import md5_int_py
-from python_mecab_ner_spark.operators.classify import auc_ranksum
 from python_mecab_ner_spark.operators.ontology import hearst_hypernyms
 from python_mecab_ner_spark.operators.sample import (
     POISSON1_CDF_PPM, poisson_bootstrap_ci, wilson_lower_bound)
-
-
-# ----------------------------------------------------------------- AUC
-
-def _auc2u_twin(pairs):
-    """2U by brute pairwise counting: 2*#(pos>neg) + #(pos==neg)."""
-    pos = [s for s, y in pairs if y == 1]
-    neg = [s for s, y in pairs if y == 0]
-    u2 = sum(2 * (p > n) + (p == n) for p in pos for n in neg)
-    return u2, len(pos), len(neg)
-
-
-def test_auc_ranksum_matches_pairwise_twin(spark):
-    rng = random.Random(11)
-    rows = [(rng.randrange(-5, 6), rng.randrange(2)) for _ in range(400)]
-    df = spark.createDataFrame(rows, ["score", "y"])
-    got = auc_ranksum(df).collect()[0]
-    u2, p, n = _auc2u_twin(rows)
-    assert (got.u2, got.n_pos, got.n_neg) == (u2, p, n)
-    assert got.auc_ppm == (u2 * 1_000_000) // (2 * p * n)
-    assert got.n_scores == len({s for s, _ in rows})
-
-
-def test_auc_ranksum_grouped_and_degenerate(spark):
-    rng = random.Random(12)
-    # group 'a': informative scores; group 'b': all one class
-    rows = [("a", y * 3 + rng.randrange(3), y)
-            for y in (0, 1) for _ in range(50)]
-    rows = [("a", s, y) for _, s, y in rows]
-    rows += [("b", rng.randrange(5), 1) for _ in range(20)]
-    df = spark.createDataFrame(rows, ["g", "score", "y"])
-    got = {r.g: r for r in auc_ranksum(df, group_col="g").collect()}
-    u2, p, n = _auc2u_twin([(s, y) for g, s, y in rows if g == "a"])
-    assert got["a"].u2 == u2
-    assert got["a"].auc_ppm == (u2 * 1_000_000) // (2 * p * n)
-    # all-positive group: no pairs, guarded div -> 0
-    assert (got["b"].n_neg, got["b"].auc_ppm) == (0, 0)
-
-
-def test_auc_perfect_ranker_is_one(spark):
-    rows = [(i, int(i >= 10)) for i in range(20)]
-    df = spark.createDataFrame(rows, ["score", "y"])
-    assert auc_ranksum(df).collect()[0].auc_ppm == 1_000_000
 
 
 # ----------------------------------------------- Poisson bootstrap CI

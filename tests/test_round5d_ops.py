@@ -1,9 +1,7 @@
 """Round-5 post-closeout additions (q209-q225): TextRank, Z-order
-layout audit, bottom-k quantile sketch, TrustRank spam mass,
-Rand/ARI, LOO source valuation, CDC chunking, KMV overlap, node2vec
-walks, Katz, weak-vote fusion, resharding audit, postings gaps,
-Neyman allocation, c-TF-IDF class terms, seasonal outliers,
-hub-attack robustness.
+layout audit, TrustRank spam mass, Rand/ARI, CDC chunking, node2vec
+walks, Katz, resharding audit, postings gaps, Neyman allocation,
+c-TF-IDF class terms, seasonal outliers, hub-attack robustness.
 
 Discipline as in test_round5_ops.py: every test recomputes the
 expected answer with plain Python on small hand-built or randomized
@@ -133,80 +131,6 @@ def test_zorder_bounds_both_spans_linear_does_not(spark):
         assert r["n_rows"] == 64
 
 
-# ------------------------------------------------ bottom-k quantiles
-
-def _py_bottomk_quantiles(rows, k, quantiles):
-    """rows = (g, v, key).  Returns {(g, q): (n, ks, est, exact)}."""
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    out = {}
-    groups = sorted({g for g, _, _ in rows})
-    for g in groups:
-        grp = [(v, key) for gg, v, key in rows if gg == g]
-        n = len(grp)
-        samp = sorted(grp, key=lambda t: (md5_int_py(t[1], salt="bkq:"),
-                                          t[1], t[0]))[:k]
-        sv = sorted(v for v, _ in samp)
-        ev = sorted(v for v, _ in grp)
-        ks = len(samp)
-        for q in quantiles:
-            est = next(v for i, v in enumerate(sv, 1)
-                       if i * 100 >= q * ks)
-            exact = next(v for i, v in enumerate(ev, 1)
-                         if i * 100 >= q * n)
-            out[(g, q)] = (n, ks, est, exact)
-    return out
-
-
-def test_bottomk_quantiles_matches_python_twin(spark):
-    from pyspark.sql import functions as F
-
-    from python_mecab_ner_spark.operators.sketch import bottomk_quantiles
-    rng = random.Random(5)
-    rows = [(f"g{rng.randrange(3)}", rng.randrange(1000), f"k{i}")
-            for i in range(3000)]
-    df = spark.createDataFrame(rows, ["g", "v", "key"])
-    out = bottomk_quantiles(df, "g", F.col("v"), "key", k=64)
-    got = {(r["g"], r["q_pct"]): (r["n"], r["ks"], r["est"], r["exact"])
-           for r in out.collect()}
-    out.unpersist_input()
-    exp = _py_bottomk_quantiles(rows, k=64, quantiles=(10, 25, 50, 75, 90))
-    assert got == exp
-    # sample error should be bounded for a 64-of-1000 uniform sample
-    for (g, q), (n, ks, est, exact) in got.items():
-        assert abs(est - exact) < 200
-
-
-def test_bottomk_duplicate_keys_match_python_twin(spark):
-    """Duplicate keys tie on (pri, key); v breaks the tie, so the
-    sample, and with it every estimate, is the same in both engines."""
-    from pyspark.sql import functions as F
-
-    from python_mecab_ner_spark.operators.sketch import bottomk_quantiles
-    rng = random.Random(6)
-    rows = [(f"g{rng.randrange(2)}", rng.randrange(1000), f"k{i % 40}")
-            for i in range(2000)]
-    df = spark.createDataFrame(rows, ["g", "v", "key"]).repartition(4)
-    out = bottomk_quantiles(df, "g", F.col("v"), "key", k=64)
-    got = {(r["g"], r["q_pct"]): (r["n"], r["ks"], r["est"], r["exact"])
-           for r in out.collect()}
-    out.unpersist_input()
-    assert got == _py_bottomk_quantiles(
-        rows, k=64, quantiles=(10, 25, 50, 75, 90))
-
-
-def test_bottomk_merge_law():
-    # bottomk(A∪B) == bottomk(bottomk(A) ∪ bottomk(B)) as multisets
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    rng = random.Random(9)
-    a = [(rng.randrange(500), f"a{i}") for i in range(400)]
-    b = [(rng.randrange(500), f"b{i}") for i in range(300)]
-
-    def bk(rows, k=32):
-        return sorted(rows, key=lambda t: (md5_int_py(t[1], salt="bkq:"),
-                                           t[1]))[:k]
-    assert bk(a + b) == bk(bk(a) + bk(b))
-
-
 # ------------------------------------------------------- spam mass
 
 def _py_spam_mass(edges, seeds, iters, scale=1_000_000, dn=85, dd=100):
@@ -306,91 +230,6 @@ def test_pair_agreement_perfect_and_chance(spark):
     assert tuple(row2)[:3] == (50, 50, 1)
 
 
-# --------------------------------------------- LOO source valuation
-
-def _py_feats(text, n_buckets=4096):
-    import re
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    toks = re.sub(r"\s+", " ", text.lower().strip()).split(" ")
-    feats = list(toks) + [f"{a}_{b}" for a, b in zip(toks, toks[1:])]
-    return [md5_int_py(f, salt="feat:") % n_buckets
-            for f in feats if f != ""]
-
-
-def _py_loo(docs, scale=1000, k=200):
-    """docs = (id, text, source, y, is_train) ->
-    {source: (n_train, acc_full, acc_loo, delta)}."""
-    def weights(rows):
-        c1, c0 = Counter(), Counter()
-        for _, t, _, y, _ in rows:
-            for b in _py_feats(t):
-                (c1 if y else c0)[b] += 1
-        n1, n0 = sum(c1.values()), sum(c0.values())
-        w = {}
-        for b in set(c1) | set(c0):
-            if n1 > 0:
-                w[b] = ((c1[b] * (n1 + n0) + k * n1) * scale) \
-                    // ((c1[b] + c0[b] + k) * n1) - scale
-            else:
-                w[b] = 0
-        return w
-
-    def acc(w, ev):
-        ok = tot = 0
-        for _, t, _, y, _ in ev:
-            fs = _py_feats(t)
-            if not fs:
-                continue
-            score = sum(w.get(b, 0) for b in fs)
-            ok += int((score > 0) == (y == 1))
-            tot += 1
-        return (ok * 1_000_000) // tot
-    train = [d for d in docs if d[4] == 1]
-    ev = [d for d in docs if d[4] == 0]
-    full = acc(weights(train), ev)
-    out = {}
-    for s in sorted({d[2] for d in docs}):
-        loo = acc(weights([d for d in train if d[2] != s]), ev)
-        out[s] = (sum(1 for d in train if d[2] == s), full, loo,
-                  loo - full)
-    return out
-
-
-def test_loo_valuation_matches_python_twin(spark):
-    # graded multi-word evidence (word w carries signal vote v_w in
-    # [-2, 2]; y = sign of the doc's vote sum) produces BOUNDARY
-    # docs whose decisions genuinely move under per-source count
-    # ablation — a single-strong-word corpus yields all-zero deltas
-    # (measured: dilution shrinks magnitudes, never flips signs).
-    # s3's labels are flipped = planted noise.  Direction assertions
-    # on synthetic NB boundaries are brittle; the contract here is
-    # EXACT equality with the python twin + non-degenerate movement
-    # (the real-corpus direction spread is q214's job).
-    from python_mecab_ner_spark.operators.classify import (
-        loo_source_valuation)
-    rng = random.Random(17)
-    vote = {f"w{j}": (j % 5) - 2 for j in range(20)}
-    docs = []
-    for i in range(300):
-        s = f"s{i % 4}"
-        words = [f"w{rng.randrange(20)}" for _ in range(6)]
-        y = int(sum(vote[w] for w in words) > 0)
-        if s == "s3":
-            y = 1 - y
-        docs.append((i, " ".join(words), s, y, int(i % 5 != 0)))
-    df = spark.createDataFrame(
-        docs, ["doc_id", "text", "source", "y", "is_train"])
-    out = loo_source_valuation(df, "text", "doc_id", "source",
-                               "y", "is_train")
-    got = {r["source"]: (r["n_train_docs"], r["acc_full_ppm"],
-                         r["acc_loo_ppm"], r["delta_ppm"])
-           for r in out.collect()}
-    out.unpersist_input()
-    exp = _py_loo(docs)
-    assert got == exp
-    assert any(v[3] != 0 for v in got.values())
-
-
 # ------------------------------------------------------ CDC chunking
 
 def _py_cdc(text, gram=8, divisor=64):
@@ -442,77 +281,6 @@ def test_cdc_survives_front_insertion_fixed_does_not(spark):
         share = reused / total
         assert share > 0.8 if expect_high else share < 0.2, \
             (fn.__name__, share)
-
-
-# ------------------------------------------------------- KMV overlap
-
-def _py_kmv(rows, k=64, m_bits=48):
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    m = 1 << m_bits
-
-    def est(hset):
-        sk = sorted(hset)[:k]
-        return len(sk) if len(sk) < k else ((k - 1) * m) // sk[-1]
-    groups = {}
-    for g, key in rows:
-        groups.setdefault(g, set()).add(
-            md5_int_py(key, bits_hex=m_bits // 4, salt="kmv:"))
-    keysets = {}
-    for g, key in rows:
-        keysets.setdefault(g, set()).add(key)
-    out = {}
-    gs = sorted(groups)
-    for i, ga in enumerate(gs):
-        for gb in gs[i + 1:]:
-            sa = sorted(groups[ga])[:k]
-            sb = sorted(groups[gb])[:k]
-            eu = est(set(sa) | set(sb))
-            ea, eb = est(groups[ga]), est(groups[gb])
-            ei = max(0, ea + eb - eu)
-            ex = len(keysets[ga] & keysets[gb])
-            err = (abs(ei - ex) * 1_000_000) // max(ex, 1)
-            out[(ga, gb)] = (ea, eb, eu, ei, ex, err)
-    return out
-
-
-def test_kmv_overlap_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.sketch import (
-        kmv_overlap_estimates)
-    rng = random.Random(41)
-    shared = [f"c{i}" for i in range(800)]
-    rows = []
-    for g in range(4):
-        own = [f"g{g}x{i}" for i in range(100 * (g + 1))]
-        pool = own + shared
-        rows += [(f"g{g}", x) for x in pool]
-        rows += [(f"g{g}", rng.choice(pool)) for _ in range(200)]
-    df = spark.createDataFrame(rows, ["g", "key"])
-    out = kmv_overlap_estimates(df, "g", "key", k=64)
-    got = {(r["ga"], r["gb"]): (r["est_a"], r["est_b"], r["est_union"],
-                                r["est_inter"], r["exact_inter"],
-                                r["err_ppm"])
-           for r in out.collect()}
-    out.unpersist_input()
-    exp = _py_kmv(rows, k=64)
-    assert got == exp
-    # every pair shares the 800-key pool (overlap >= ~2/3 of union),
-    # where inclusion-exclusion at k=64 resolves: err bounded.  For
-    # SMALL overlap fractions the estimate is noise (measured: a
-    # 100-of-1000 overlap read 22) — intersection error scales with
-    # the UNION size, the honest cost err_ppm exists to expose
-    for (ga, gb), (ea, eb, eu, ei, ex, err) in got.items():
-        assert ex == 800
-        assert err < 400_000, ((ga, gb), got[(ga, gb)])
-
-
-def test_kmv_small_groups_are_exact():
-    # below k distinct keys the sketch IS the set: est == exact
-    rows = [("a", f"x{i}") for i in range(30)] + \
-           [("b", f"x{i}") for i in range(10, 50)]
-    exp = _py_kmv(rows, k=64)
-    (ea, eb, eu, ei, ex, err) = exp[("a", "b")]
-    assert (ea, eb, eu) == (30, 40, 50)
-    assert ei == ex == 20 and err == 0
 
 
 # --------------------------------------------------- node2vec walks
@@ -623,45 +391,6 @@ def test_katz_counts_hub_endorsements_whole(spark):
     pr = {r["node"]: r["pr"] for r in pagerank_int(df, iters=1).collect()}
     assert katz[1] == katz[12]          # both get one full endorsement
     assert pr[1] < pr[12]               # PR dilutes the hub's vote
-
-
-# -------------------------------------------------- weak-vote fusion
-
-def _py_weak_vote(rows, k):
-    n = len(rows)
-    maj = {i: int(2 * sum(g) > k) for i, g in rows}
-    w = [2 * (sum(1 for i, g in rows if g[j] == maj[i])
-              * 1_000_000 // n) - 1_000_000 for j in range(k)]
-    out = {}
-    for i, g in rows:
-        score = sum((2 * g[j] - 1) * w[j] for j in range(k))
-        fused = int(score > 0)
-        out[i] = (sum(g), maj[i], score, fused,
-                  int(fused != maj[i]))
-    return out
-
-
-def test_weak_vote_fusion_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.classify import (
-        weak_vote_fusion)
-    rng = random.Random(59)
-    # g0..g2 track a latent label with noise; g3 is ANTI-correlated
-    rows = []
-    for i in range(400):
-        y = rng.randrange(2)
-        g = [y if rng.random() < 0.85 else 1 - y for _ in range(3)]
-        g.append(1 - y if rng.random() < 0.8 else y)
-        rows.append((i, tuple(g)))
-    df = spark.createDataFrame(
-        [(i, *g) for i, g in rows], ["id", "g0", "g1", "g2", "g3"])
-    out = weak_vote_fusion(df, "id", ["g0", "g1", "g2", "g3"])
-    got = {r["id"]: (r["n_pos"], r["majority"], r["score"],
-                     r["fused"], r["flipped"]) for r in out.collect()}
-    exp = _py_weak_vote(rows, 4)
-    assert got == exp
-    # the anti-correlated gate must earn a NEGATIVE weight and the
-    # fusion must actually overrule some majorities
-    assert any(v[4] == 1 for v in got.values())
 
 
 # ---------------------------------------------------- reshard audit
@@ -1014,29 +743,3 @@ def test_fresh_rank_decay_expression(spark):
     # seven-year order window
     assert max(got.values()) == 1024 and min(got.values()) == 1
 
-
-# ------------------------------------------- calibration summary
-
-def test_calibration_summary_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.classify import (
-        calibration_summary)
-    bins = [(0, 40, 2), (1, 30, 3), (2, 25, 5), (3, 20, 3),
-            (4, 15, 6), (5, 10, 7)]
-    rows = [(b, n, p, 0, 0, (p * 1_000_000) // n)
-            for b, n, p in bins]
-    df = spark.createDataFrame(
-        rows, ["bin", "n_docs", "n_pos", "lo_score", "hi_score",
-               "pos_ppm"])
-    r = calibration_summary(df).collect()[0]
-    nn = sum(n for _, n, _ in bins)
-    pool = sum(p for _, _, p in bins) * 1_000_000 // nn
-    ppms = [(p * 1_000_000) // n for _, n, p in bins]
-    resolution = sum(n * abs(pp - pool)
-                     for (_, n, _), pp in zip(bins, ppms)) // nn
-    invs = [(a - b) for a, b in zip(ppms, ppms[1:]) if b < a]
-    assert (r["n_bins"], r["n_docs"], r["pool_ppm"]) == (6, nn, pool)
-    assert r["resolution_ppm"] == resolution
-    assert (r["n_inversions"], r["max_inversion_ppm"]) == (
-        len(invs), max(invs))
-    # the planted inversion (bin 2 -> 3: 200000 -> 150000) is seen
-    assert r["n_inversions"] == 1
