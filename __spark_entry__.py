@@ -762,24 +762,6 @@ def q51_quantized_ann(spark, sf_dir):
     return quantized_topk(e, qvec, k=10)
 
 
-def q52_triangles(spark, sf_dir):
-    """Per-node triangle counts (operators.graph.triangle_counts,
-    degree-oriented wedge join) over the parts-co-purchased graph
-    (parts sharing an order): the KG cohesion statistic.  The oracle
-    enumerates x<y<z triangles naively — orientation independence of
-    the per-node counts is exactly what the hash match certifies."""
-    from python_mecab_ner_spark.operators.graph import triangle_counts
-    li = _load(spark, sf_dir, "lineitem")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    edges = (l1.join(l2, (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-                     & (F.col("l1.l_partkey") < F.col("l2.l_partkey")))
-             .select(F.col("l1.l_partkey").alias("src"),
-                     F.col("l2.l_partkey").alias("dst"))
-             .distinct())
-    return (triangle_counts(edges)
-            .select(F.col("node").cast("bigint").alias("node"), "n_tri"))
-
-
 def q53_surprisal(spark, sf_dir):
     """Unigram-LM rarity quality score (operators.colloc
     .doc_surprisal): integer bit-length idf summed per doc, mean in
@@ -908,25 +890,6 @@ def q88_tfidf_cosine_pairs(spark, sf_dir):
                     "dot", "cos2_ppm"))
 
 
-def q89_edge_diff(spark, sf_dir):
-    """KG snapshot diff (operators.graph.edge_diff): the
-    customer->supplier edge sets of two crawl windows (orders before /
-    from 1998) compared in ONE combinable aggregate — added/removed/
-    kept counts, the incremental-maintenance work list."""
-    from python_mecab_ner_spark.operators.graph import edge_diff
-    o = _load(spark, sf_dir, "orders")
-    li = _load(spark, sf_dir, "lineitem")
-    e = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-         .select("o_custkey", "l_suppkey", "o_orderdate"))
-    old = e.where(F.col("o_orderdate") < "1998-01-01") \
-        .select(F.col("o_custkey").alias("src"),
-                F.col("l_suppkey").alias("dst"))
-    new = e.where(F.col("o_orderdate") >= "1998-01-01") \
-        .select(F.col("o_custkey").alias("src"),
-                F.col("l_suppkey").alias("dst"))
-    return edge_diff(old, new)
-
-
 def q87_rrf_fusion(spark, sf_dir):
     """Reciprocal-rank fusion (operators.retrieval.rrf_fuse): the
     BM25 top-20 (q59's query bag) fused with the surprisal top-20
@@ -1007,25 +970,6 @@ def q84_importance_weights(spark, sf_dir):
                                n_buckets=64)
             .select(F.col("doc_id").cast("bigint").alias("doc_id"),
                     "n_toks", "score"))
-
-
-def q82_negative_samples(spark, sf_dir):
-    """Deterministic corrupted-tail negative sampling (operators.graph
-    .negative_samples): k=2 hash-chosen fake tails per true
-    part->supplier edge, true edges anti-joined away — the TransE-
-    family training-pair generator, reproducible on any engine or
-    cluster size (a rand() sampler could never oracle-match)."""
-    from python_mecab_ner_spark.operators.graph import negative_samples
-    li = _load(spark, sf_dir, "lineitem")
-    edges = (li.where(F.col("l_partkey") <= 200)
-             .select((F.col("l_partkey") * 2).alias("src"),
-                     (F.col("l_suppkey") * 2 + 1).alias("dst"))
-             .distinct())
-    return negative_samples(edges, k=2).select(
-        F.col("src").cast("bigint").alias("src"),
-        F.col("dst").cast("bigint").alias("dst"),
-        F.col("i").cast("int").alias("i"),
-        F.col("dst_neg").cast("bigint").alias("dst_neg"))
 
 
 def q81_crawl_budget(spark, sf_dir):
@@ -1132,25 +1076,6 @@ def q58_neighbor_jaccard(spark, sf_dir):
             .limit(100))
 
 
-def q91_adamic_adar(spark, sf_dir):
-    """Adamic-Adar link prediction (operators.graph.adamic_adar) over
-    the q49/q58 part<->supplier bipartite graph: common-neighbor score
-    weighted by scale div bit_length(deg(center)) — rare shared
-    neighbors count more than hubs, the integer twin of 1/log(deg).
-    Top-100 with a total-order tiebreak."""
-    from python_mecab_ner_spark.operators.graph import adamic_adar
-    li = _load(spark, sf_dir, "lineitem")
-    pairs = li.select((F.col("l_partkey") * 2).alias("p"),
-                      (F.col("l_suppkey") * 2 + 1).alias("s")).distinct()
-    edges = (pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("p").alias("dst"))))
-    return (adamic_adar(edges, min_common=2, max_center_degree=256)
-            .orderBy(F.col("aa_micro").desc(), F.col("n1").asc(),
-                     F.col("n2").asc())
-            .limit(100))
-
-
 def q92_recency_decay(spark, sf_dir):
     """Recency-weighted activity (operators.crawl.decay_activity):
     per-event-type scores under an exact power-of-two half-life decay
@@ -1162,48 +1087,6 @@ def q92_recency_decay(spark, sf_dir):
     return (decay_activity(ev, "ts", "event_type", half_life_days=7)
             .select(F.col("key").alias("event_type"), "n_events",
                     "decayed"))
-
-
-WALK_LEN = 3          # q93 walk corpus shape
-WALKS_PER_NODE = 2
-KCORE_K = 2           # q94 peel threshold
-KCORE_ITERS = 8
-
-
-def q93_random_walks(spark, sf_dir):
-    """Deterministic DeepWalk corpus (operators.graph.random_walks)
-    over the q58 part<->supplier bipartite graph: 2 walks x 3 steps
-    per node, next hop = content-hash mod outdegree into the
-    id-ordered adjacency list — the node2vec training-sequence
-    generator, reproducible at any cluster size and bit-exact against
-    the unrolled-SQL oracle."""
-    from python_mecab_ner_spark.operators.graph import random_walks
-    li = _load(spark, sf_dir, "lineitem")
-    pairs = li.select((F.col("l_partkey") * 2).alias("p"),
-                      (F.col("l_suppkey") * 2 + 1).alias("s")).distinct()
-    edges = (pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("p").alias("dst"))))
-    return random_walks(edges, walk_len=WALK_LEN,
-                        walks_per_node=WALKS_PER_NODE, seed="walk")
-
-
-def q94_kcore(spark, sf_dir):
-    """k-core decomposition (operators.graph.kcore) of the sparse
-    thin-order customer<->supplier graph (1998 orders, quantity <= 2):
-    iterative degree-< k peeling — the web-graph spam/tendril filter;
-    fixed 8 rounds to stay bit-exact against the unrolled oracle
-    (the peel reaches its fixpoint well before round 8 here, asserted
-    in tests)."""
-    from python_mecab_ner_spark.operators.graph import kcore
-    o = _load(spark, sf_dir, "orders")
-    li = _load(spark, sf_dir, "lineitem")
-    e = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-         .where((F.col("o_orderdate") >= "1998-01-01")
-                & (F.col("l_quantity") <= 2))
-         .select((F.col("o_custkey") * 2).alias("src"),
-                 (F.col("l_suppkey") * 2 + 1).alias("dst")))
-    return kcore(e, k=KCORE_K, iters=KCORE_ITERS)
 
 
 def q95_quality_hist_gate(spark, sf_dir):
@@ -1234,24 +1117,6 @@ def q96_cooccurrence(spark, sf_dir):
     ctx = _doc_context(spark, sf_dir)
     return cooccurrence_counts(ctx, window=5, min_pairs=5).select(
         "w1", "w2", "n_pairs", "w_sum")
-
-
-def q98_walk_skipgrams(spark, sf_dir):
-    """Skip-gram training pairs from the q93 walk corpus — the
-    node2vec step between "walks" and "embedding training": unordered
-    node pairs within +-2 walk steps, distance-weighted (the same
-    cooccurrence_counts operator as q96, applied to walks instead of
-    text — one engine primitive, two modalities)."""
-    from python_mecab_ner_spark.operators.colloc import \
-        cooccurrence_counts
-    walks = q93_random_walks(spark, sf_dir)
-    ctx = walks.select(
-        (F.col("start") * 8 + F.col("wid")).alias("url"),
-        F.col("step").alias("idx"), F.col("node").alias("word"))
-    return (cooccurrence_counts(ctx, window=2, min_pairs=2, scale=60)
-            .select(F.col("w1").cast("bigint").alias("n1"),
-                    F.col("w2").cast("bigint").alias("n2"),
-                    "n_pairs", "w_sum"))
 
 
 def q99_degree_histogram(spark, sf_dir):
@@ -1347,24 +1212,6 @@ def q103_weighted_simhash(spark, sf_dir):
     from python_mecab_ner_spark.operators.dedup import simhash_weighted
     d = _loadp(spark, sf_dir, "documents")
     return simhash_weighted(d, "text", "doc_id", n_bits=16)
-
-
-def q104_butterflies(spark, sf_dir):
-    """Bipartite butterfly counts (operators.graph.butterfly_counts):
-    2x2-biclique participation per node on the part<->supplier graph
-    — the bipartite cohesion motif behind spam-farm/collusion
-    detection; C(common, 2) re-aggregated from the q58 wedge pair
-    table.  Top-100 with a total-order tiebreak."""
-    from python_mecab_ner_spark.operators.graph import butterfly_counts
-    li = _load(spark, sf_dir, "lineitem")
-    pairs = li.select((F.col("l_partkey") * 2).alias("p"),
-                      (F.col("l_suppkey") * 2 + 1).alias("s")).distinct()
-    edges = (pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("p").alias("dst"))))
-    return (butterfly_counts(edges, max_center_degree=256)
-            .orderBy(F.col("n_bfly").desc(), F.col("node").asc())
-            .limit(100))
 
 
 def q105_source_risk(spark, sf_dir):
@@ -1480,26 +1327,6 @@ def q109_containment(spark, sf_dir):
     d = _loadp(spark, sf_dir, "documents")
     return containment_pairs(d, "text", "doc_id", k=3, min_shared=2,
                              max_df=256, min_containment_ppm=500_000)
-
-
-def q110_clustering(spark, sf_dir):
-    """Per-node local clustering coefficient in integer ppm
-    (operators.graph.clustering_coefficient) on the q52 parts-
-    co-purchased graph: 2*tri/(deg*(deg-1)) — the organic-hub vs
-    link-farm-star separator.  Rides the degree-oriented wedge join;
-    the oracle recomputes from the naive x<y<z triangle table."""
-    from python_mecab_ner_spark.operators.graph import (
-        clustering_coefficient)
-    li = _load(spark, sf_dir, "lineitem")
-    l1, l2 = li.alias("l1"), li.alias("l2")
-    edges = (l1.join(l2, (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
-                     & (F.col("l1.l_partkey") < F.col("l2.l_partkey")))
-             .select(F.col("l1.l_partkey").alias("src"),
-                     F.col("l2.l_partkey").alias("dst"))
-             .distinct())
-    return (clustering_coefficient(edges)
-            .select(F.col("node").cast("bigint").alias("node"),
-                    "deg", "n_tri", "cc_ppm"))
 
 
 def q111_dup_coverage(spark, sf_dir):
@@ -1949,45 +1776,6 @@ def q136_truth_finding(spark, sf_dir):
     return adjudicate_claims(_claim_table(spark, sf_dir))
 
 
-REDIR_ROUNDS = 6   # pointer doubling covers chains up to 2^6 = 64 deep
-
-
-def _redirect_table(spark, sf_dir):
-    """Deterministic functional redirect graph for q137: 80% of doc
-    ids redirect 1..4 ids downward (hash-chosen hop — guarantees
-    acyclic chains terminating at a canonical node), plus one planted
-    3-cycle on negative ids (-1 -> -2 -> -3 -> -1) so the unresolved
-    path is exercised.  Byte-identical DuckDB twin."""
-    from python_mecab_ner_spark.functions.hashing import md5_int
-    d = _load(spark, sf_dir, "documents")
-    id_s = F.col("doc_id").cast("string")
-    is_redir = (md5_int(id_s, salt="redir:") % 5 < 4) \
-        & (F.col("doc_id") >= 1)
-    dst = (F.col("doc_id")
-           - (F.lit(1) + md5_int(id_s, salt="hop:")
-              % F.least(F.lit(4), F.col("doc_id"))))
-    redirects = (d.where(is_redir)
-                 .select(F.col("doc_id").cast("bigint").alias("src"),
-                         dst.cast("bigint").alias("dst")))
-    cycle = spark.createDataFrame([(-1, -2), (-2, -3), (-3, -1)],
-                                  "src bigint, dst bigint")
-    return redirects.unionByName(cycle)
-
-
-def q137_redirect_resolution(spark, sf_dir):
-    """Redirect/alias-chain flattening (operators.graph
-    .resolve_redirects): pointer doubling over a functional redirect
-    table — log2(depth) self-joins instead of depth sequential ones,
-    the canonicalization pass run over wiki-style redirect dumps and
-    the alias maps entity resolution emits.  The planted 3-cycle
-    surfaces as resolved = 0 with the deterministic
-    position-after-64-steps target; the DuckDB twin follows chains
-    with a depth-capped recursive CTE."""
-    from python_mecab_ner_spark.operators.graph import resolve_redirects
-    return resolve_redirects(_redirect_table(spark, sf_dir),
-                             rounds=REDIR_ROUNDS)
-
-
 SKEW_CANDIDATES = (8, 32, 128)
 
 
@@ -2149,43 +1937,6 @@ def q142_inverse_preds(spark, sf_dir):
     from python_mecab_ner_spark.operators.ontology import (
         inverse_predicates)
     return inverse_predicates(_ontology_triples(spark, sf_dir))
-
-
-def _moments_edges(spark, sf_dir):
-    """Deterministic directed graph for q144 with planted structure:
-    every doc_id >= 1 emits one hash-chosen downward base edge (span
-    50), every third doc a second short edge (span 7 — varied
-    out-degrees), every seventh doc the REVERSE of its base edge
-    (planted reciprocity).  Byte-identical DuckDB twin."""
-    from python_mecab_ner_spark.functions.hashing import md5_int
-    d = _load(spark, sf_dir, "documents").where(F.col("doc_id") >= 1)
-    id_s = F.col("doc_id").cast("string")
-
-    def down(span, salt):
-        return (F.col("doc_id")
-                - (F.lit(1) + md5_int(id_s, salt=salt)
-                   % F.least(F.lit(span), F.col("doc_id"))))
-
-    base = d.select(F.col("doc_id").cast("bigint").alias("src"),
-                    down(50, "gm1:").cast("bigint").alias("dst"))
-    fan = (d.where(F.col("doc_id") % 3 == 0)
-           .select(F.col("doc_id").cast("bigint").alias("src"),
-                   down(7, "gm2:").cast("bigint").alias("dst")))
-    rev = (base.where(F.col("src") % 7 == 0)
-           .select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    return base.unionByName(fan).unionByName(rev)
-
-
-def q144_graph_moments(spark, sf_dir):
-    """Directed-graph structural sheet (operators.graph.graph_moments):
-    edge count, reciprocity ppm, and the exact integer
-    (outdeg(src), indeg(dst)) moments behind degree assortativity
-    (Newman 2002) — the one-row health check a KG build runs on its
-    materialized edge table to catch extraction pathologies (spam
-    cliques read reciprocal + assortative, organic link graphs
-    disassortative).  The planted reverse edges pin recip_ppm > 0."""
-    from python_mecab_ner_spark.operators.graph import graph_moments
-    return graph_moments(_moments_edges(spark, sf_dir))
 
 
 WARC_FILES = 8   # synthetic WARC files the corpus is packed into
@@ -2402,25 +2153,6 @@ def q152_term_salience(spark, sf_dir):
                          min_len=5, pos_cap=500)
 
 
-def q153_rank_eval(spark, sf_dir):
-    """Link-prediction ranking eval (operators.metrics.rank_eval):
-    MRR + Hits@k of the in-degree popularity baseline over the q82
-    edge set and its deterministic negatives — the eval half of the
-    KG-embedding training-prep pair (q82 generates the pairs, this
-    scores a model over them; the popularity floor is what a learned
-    model must beat).  No window, no per-query sort: ranks are
-    strictly-better counts on the (src, dst) key, floor-exact MRR in
-    ppm."""
-    from python_mecab_ner_spark.operators.graph import negative_samples
-    from python_mecab_ner_spark.operators.metrics import rank_eval
-    li = _load(spark, sf_dir, "lineitem")
-    edges = (li.where(F.col("l_partkey") <= 200)
-             .select((F.col("l_partkey") * 2).alias("src"),
-                     (F.col("l_suppkey") * 2 + 1).alias("dst"))
-             .distinct())
-    return rank_eval(edges, negative_samples(edges, k=2))
-
-
 def q154_modularity(spark, sf_dir):
     """Modularity Q of the q70 LPA partition (operators.graph.
     modularity_ppm): exact-integer partition-quality score over the
@@ -2530,52 +2262,12 @@ def q157_edge_cut(spark, sf_dir):
     return edge_cut_audit(edges, layouts)
 
 
-def _harmonic_oracle_sql(radius: int = 3, scale: int = 1000) -> str:
-    """Unrolled exact-BFS harmonic-centrality twin of q158: ball
-    tables per distance, MATERIALIZED (each later round anti-joins
-    the union of all earlier rounds — inlining re-expands the whole
-    frontier chain per reference)."""
-    s = """
-        WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
-                              l_suppkey * 2 + 1 AS s FROM lineitem),
-        e AS (SELECT p AS src, s AS dst FROM pairs
-              UNION ALL SELECT s, p FROM pairs),
-        r AS (SELECT p_partkey * 2 AS root FROM part
-              WHERE p_partkey <= 200),
-        b1 AS MATERIALIZED (
-            SELECT DISTINCT e.src AS root, e.dst AS v
-            FROM e JOIN r ON r.root = e.src
-            WHERE e.dst <> e.src)"""
-    prev_union = "SELECT root, v FROM b1"
-    for k in range(2, radius + 1):
-        s += f""",
-        f{k} AS MATERIALIZED (
-            SELECT DISTINCT b.root, e.dst AS v
-            FROM b{k - 1} b JOIN e ON e.src = b.v
-            WHERE e.dst <> b.root),
-        b{k} AS MATERIALIZED (
-            SELECT f.root, f.v FROM f{k} f
-            LEFT JOIN ({prev_union}) u
-              ON u.root = f.root AND u.v = f.v
-            WHERE u.root IS NULL)"""
-        prev_union += f" UNION ALL SELECT root, v FROM b{k}"
-    reach = " UNION ALL ".join(
-        f"SELECT root, v, {k} AS d FROM b{k}"
-        for k in range(1, radius + 1))
-    return s + f""",
-        reach AS ({reach})
-        SELECT CAST(root AS BIGINT) AS root,
-               CAST(count(*) AS BIGINT) AS n_reached,
-               CAST(sum({scale} // d) AS BIGINT) AS harmonic_milli
-        FROM reach GROUP BY 1"""
-
-
 def _betweenness_oracle_sql(radius: int = 3,
                             scale: int = 1_000_000) -> str:
     """Unrolled Brandes twin of q190: forward sigma-carrying BFS
     levels, then the backward floor-div dependency per level.  Level
     and delta CTEs MATERIALIZED — each feeds multiple later
-    consumers (the q94 lesson)."""
+    consumers, and inlining would re-expand them per reference."""
     s = """
         WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
                               l_suppkey * 2 + 1 AS s FROM lineitem),
@@ -2625,36 +2317,6 @@ def _betweenness_oracle_sql(radius: int = 3,
                CAST(count(*) AS BIGINT) AS n_roots,
                CAST(sum(delta) AS BIGINT) AS bw_scaled
         FROM alld GROUP BY 1"""
-
-
-def _sssp_oracle_sql(rounds: int = 12) -> str:
-    """Unrolled Bellman-Ford twin of q191: per round the per-node min
-    of {carry} U {relaxed predecessor + weight}.  Distance tables
-    MATERIALIZED (each feeds the carry arm and the relax join)."""
-    s = """
-        WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
-                              l_suppkey * 2 + 1 AS s FROM lineitem),
-        pw AS (SELECT p, s, (p + s) % 7 + 1 AS w FROM pairs),
-        e AS (SELECT p AS src, s AS dst, w FROM pw
-              UNION ALL SELECT s, p, w FROM pw),
-        em AS MATERIALIZED (
-            SELECT src, dst, min(w) AS w FROM e GROUP BY 1, 2),
-        d0 AS MATERIALIZED (
-            SELECT p_partkey * 2 AS node, CAST(0 AS BIGINT) AS dist
-            FROM part WHERE p_partkey <= 50)"""
-    for k in range(1, rounds + 1):
-        s += f""",
-        d{k} AS MATERIALIZED (
-            SELECT node, min(dist) AS dist FROM (
-              SELECT node, dist FROM d{k - 1}
-              UNION ALL
-              SELECT e.dst, d.dist + e.w
-              FROM d{k - 1} d JOIN em e ON e.src = d.node)
-            GROUP BY 1)"""
-    return s + f"""
-        SELECT CAST(node AS BIGINT) AS node,
-               CAST(dist AS BIGINT) AS dist
-        FROM d{rounds}"""
 
 
 def _coverage_oracle_sql(k: int = 5) -> str:
@@ -2828,30 +2490,6 @@ _MODULARITY_FINAL = """,
                     // (w_tot * w_tot) - 1000000 AS BIGINT)
                    AS modularity_ppm
         FROM sums, tot"""
-
-
-def q158_harmonic(spark, sf_dir):
-    """Exact bounded-radius harmonic centrality (operators.graph.
-    harmonic_centrality, radius 3) for a 200-part root sample of the
-    symmetrized part<->supplier graph — the exact-audit twin of the
-    HyperBall sketch path (q123/kg_entity_reach), hash-matched
-    against the unrolled-BFS oracle."""
-    from python_mecab_ner_spark.operators.graph import \
-        harmonic_centrality
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part")
-    pairs = (li.select((F.col("l_partkey") * 2).alias("p"),
-                       (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    edges = (pairs.select(F.col("p").alias("src"),
-                          F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("p").alias("dst"))))
-    roots = (part.where(F.col("p_partkey") <= 200)
-             .select((F.col("p_partkey") * 2).alias("node")))
-    return (harmonic_centrality(edges, radius=3, roots=roots)
-            .select(F.col("root").cast("bigint").alias("root"),
-                    "n_reached", "harmonic_milli"))
 
 
 def q159_warm_pagerank(spark, sf_dir):
@@ -3297,7 +2935,7 @@ def q173_ktruss(spark, sf_dir):
     """k-truss peel (operators.graph.ktruss) of the thin co-purchase
     graph (parts sharing an order, quantity <= 15): every surviving
     edge sits in >= k-2 triangles among survivors — the edge-level
-    cohesion filter that cuts star spam hubs k-core (q94) keeps.
+    cohesion filter that cuts the star spam hubs a k-core keeps.
     Fixed 3 rounds against the unrolled oracle; the peel cascades
     genuinely here (3874 -> 3639 -> 3637 edges at sf0.01, fixpoint at
     round 3) and support is recomputed on the final survivor set."""
@@ -3327,46 +2965,6 @@ def q174_multi_blocking_audit(spark, sf_dir):
     return res
 
 
-def q175_incremental_cc(spark, sf_dir):
-    """Warm-start connected components (operators.graph
-    .incremental_components): the thin customer<->supplier graph is
-    hash-split 3:1 into yesterday's edges and today's delta;
-    yesterday's labeling (batch connected_components) plus the delta
-    goes through the CONTRACTED-graph merge, and the oracle recomputes
-    components on the FULL union from scratch — the hash match IS the
-    exact-equivalence contract that makes the incremental path safe
-    to run instead of the recompute at 100 TB."""
-    from python_mecab_ner_spark.functions.hashing import md5_int
-    from python_mecab_ner_spark.operators.canonicalize import \
-        connected_components
-    from python_mecab_ner_spark.operators.graph import \
-        incremental_components
-    o = _load(spark, sf_dir, "orders")
-    li = _load(spark, sf_dir, "lineitem")
-    e = (o.join(li, o["o_orderkey"] == li["l_orderkey"])
-         .where((F.col("o_orderdate") >= "1998-01-01")
-                & (F.col("l_quantity") <= 2))
-         .select((F.col("o_custkey") * 2).alias("src"),
-                 (F.col("l_suppkey") * 2 + 1).alias("dst"))
-         .distinct())
-    h = F.pmod(md5_int(F.concat(F.col("src").cast("string"), F.lit(":"),
-                                F.col("dst").cast("string")),
-                       salt="ccd:"), F.lit(4))
-    old = e.where(h != 0)
-    delta = e.where(h == 0)
-    verts = (old.select(F.col("src").alias("entity_id"))
-             .unionByName(old.select(F.col("dst").alias("entity_id")))
-             .distinct())
-    labels_old = (connected_components(
-        old.select(F.col("src").alias("a_id"),
-                   F.col("dst").alias("b_id")), verts)
-        .select(F.col("entity_id").alias("id"),
-                F.col("canonical_id").alias("comp")))
-    out = incremental_components(labels_old, delta)
-    return out.select(F.col("id").cast("bigint").alias("id"),
-                      F.col("comp").cast("bigint").alias("comp"))
-
-
 def q176_star_cc(spark, sf_dir):
     """Web-scale connected components via alternating large-star /
     small-star (operators.graph.connected_components_star): the input
@@ -3391,13 +2989,9 @@ def q176_star_cc(spark, sf_dir):
 
 MIS_ROUNDS = 8
 MATCH_ROUNDS = 10   # q188: converges well inside this at both SFs
-SSSP_ROUNDS = 12    # q191: unweighted diameter bound, shared with the oracle
 COVER_K = 5     # q193 greedy-coverage rounds, shared with the oracle
 KCENTER_K = 5   # q194 farthest-first rounds, shared with the oracle
 JSONL_FILES = 8   # q203: shard count, shared with the oracle
-COLOR_BUDGET = 6  # q205: color budget (measured 3 at sf0.01, 4 at
-                  # sf0.1 on the qty<=2 graph), shared with the oracle
-COLOR_MIS_ROUNDS = 5  # q205: per-color Luby budget (measured <= 3)
 TEMPORAL_ORACLE_ROUNDS = 10  # q206: oracle unroll (7 measured at
                              # sf0.01); Spark runs TEMPORAL_BUDGET
 IJ_WINDOWS = 40   # q207: audit-window count, shared with the oracle
@@ -3411,7 +3005,6 @@ MST_ROUNDS = 10   # q197: Boruvka budget, shared with the oracle
                   #  operator raises rather than truncates)
 PEEL_ROUNDS = 12  # q198: densest-peel budget, shared with the oracle
                   # (measured 6 rounds at sf0.01/sf0.1 incl. the ring)
-TAXO_ROUNDS = 8     # q187: the part-catalog DAG is 5 layers deep
 
 
 def q177_mis(spark, sf_dir):
@@ -3499,37 +3092,6 @@ def q181_event_transitions(spark, sf_dir):
     from python_mecab_ner_spark.operators.spans import event_transitions
     ev = _load(spark, sf_dir, "events")
     return event_transitions(ev, tiebreak_col="event_id")
-
-
-def q182_bipartiteness(spark, sf_dir):
-    """Per-component bipartiteness via double-cover star-CC
-    (operators.graph.bipartiteness_audit): q176's 8 residue path
-    chains, each CLOSED into a cycle — even residues close max->min
-    (cycle length = chain size), odd residues close max->(min+8)
-    (length = size-1, the min node left as a tail that must not
-    affect the verdict).  Ground truth is ANALYTIC from the residue
-    counts (bipartite iff cycle length even) — no recursion in the
-    oracle, while the engine genuinely runs two O(log n) star-CC
-    jobs over diameter-~n/8 components.  Which parities are bipartite
-    flips with SF (chain size 1250 even at sf0.01, 125 odd at
-    sf0.001) — the oracle derives it from the data either way."""
-    from python_mecab_ner_spark.operators.graph import \
-        bipartiteness_audit
-    ev = _load(spark, sf_dir, "events").select("event_id")
-    a, b = ev.alias("a"), ev.alias("b")
-    paths = (a.join(b, F.col("b.event_id") == F.col("a.event_id") + 8)
-             .select(F.col("a.event_id").alias("src"),
-                     F.col("b.event_id").alias("dst")))
-    res = (ev.groupBy((F.col("event_id") % 8).alias("r"))
-           .agg(F.min("event_id").alias("mn"),
-                F.max("event_id").alias("mx")))
-    closing = res.select(
-        F.col("mx").alias("src"),
-        F.when(F.col("r") % 2 == 0, F.col("mn"))
-        .otherwise(F.col("mn") + 8).alias("dst"))
-    return (bipartiteness_audit(paths.unionByName(closing))
-            .select(F.col("comp").cast("bigint").alias("comp"),
-                    "n_nodes", "bipartite"))
 
 
 def q184_bootstrap_ci(spark, sf_dir):
@@ -3687,41 +3249,6 @@ def q186_hearst(spark, sf_dir):
     return hearst_hypernyms(withh, "text", "doc_id")
 
 
-def q187_taxonomy_layers(spark, sf_dir):
-    """Taxonomy layering + ancestor closure (operators.graph
-    .dag_layers): Kahn-peel longest-path-to-root layers and
-    distinct-ancestor counts over the product-category DAG derived
-    from part — part -> name-noun category -> root, part -> type ->
-    root, and part -> brand -> derived mfgr -> root, so every part
-    reaches the root by THREE routes (the closure's distinct count
-    is exercised: 5 distinct ancestors from 7 path-ancestors).  The
-    downstream half of q186's Hearst harvest: is-a edges in, depth
-    sheet + closure sizes out; cycles raise instead of layering
-    (harvest noise must surface).  Oracle = recursive-CTE closure
-    with layer = max path length, MATERIALIZED edge CTE."""
-    from python_mecab_ner_spark.operators.graph import dag_layers
-    part = _load(spark, sf_dir, "part")
-    pnode = F.concat(F.lit("part:"), F.col("p_partkey").cast("string"))
-    cat = F.concat(F.lit("cat:"), F.split(F.col("p_name"), " ")[1])
-    typ = F.concat(F.lit("type:"), F.col("p_type"))
-    brand = F.concat(F.lit("brand:"), F.col("p_brand"))
-    mfgr = F.concat(
-        F.lit("mfgr:"),
-        F.pmod(F.expr("CAST(substring(p_brand, 7) AS INT)"),
-               F.lit(5)).cast("string"))
-    root = F.lit("root:catalog")
-    fams = [(pnode, cat), (cat, root), (pnode, typ), (typ, root),
-            (pnode, brand), (brand, mfgr), (mfgr, root)]
-    edges = None
-    for c, p in fams:
-        e = part.select(c.alias("child"), p.alias("parent"))
-        edges = e if edges is None else edges.unionByName(e)
-    return (dag_layers(edges.distinct(), max_rounds=TAXO_ROUNDS)
-            .select("node", F.col("layer").cast("int").alias("layer"),
-                    "n_ancestors")
-            .orderBy("node"))
-
-
 def q188_merge_matching(spark, sf_dir):
     """Deterministic parallel maximal matching (operators.graph
     .maximal_matching) on the thin co-purchase graph (q173/q177's
@@ -3753,10 +3280,9 @@ def q190_betweenness(spark, sf_dir):
     floor-div scaled dependency backward, over the symmetrized
     part<->supplier graph with a 100-part root sample at radius 3 —
     the bridge-node sheet (which nodes sit on inter-cluster shortest
-    paths) complementing q158's harmonic (closeness) and q40's
-    PageRank (flow) on the same graph.  Both sampling caps (pivots,
-    radius) are explicit; the oracle unrolls the same BFS + backward
-    recurrence level by level."""
+    paths) complementing q40's PageRank (flow) on the same graph.
+    Both sampling caps (pivots, radius) are explicit; the oracle
+    unrolls the same BFS + backward recurrence level by level."""
     from python_mecab_ner_spark.operators.graph import betweenness_sampled
     li = _load(spark, sf_dir, "lineitem")
     part = _load(spark, sf_dir, "part")
@@ -3772,35 +3298,6 @@ def q190_betweenness(spark, sf_dir):
     return (betweenness_sampled(edges, roots, radius=3)
             .select(F.col("node").cast("bigint").alias("node"),
                     "n_roots", "bw_scaled"))
-
-
-def q191_sssp(spark, sf_dir):
-    """Multi-source weighted shortest paths (operators.graph
-    .sssp_int, distributed Bellman-Ford) from a 50-part seed set over
-    the part<->supplier graph with deterministic integer weights
-    ((p+s) % 7 + 1, symmetric by construction) — the crawl-latency /
-    hop-cost sheet, weighted where q158's harmonic BFS is unit-cost.
-    Spark exits at the fixpoint (and RAISES if still relaxing at the
-    budget); the oracle unrolls the identical min-relax recurrence
-    for the full budget — post-fixpoint rounds are no-ops, so the
-    shared budget hash-matches."""
-    from python_mecab_ner_spark.operators.graph import sssp_int
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part")
-    pairs = (li.select((F.col("l_partkey") * 2).alias("p"),
-                       (F.col("l_suppkey") * 2 + 1).alias("s"))
-             .distinct())
-    pw = pairs.select(
-        "p", "s", (F.pmod(F.col("p") + F.col("s"), F.lit(7)) + 1).alias("w"))
-    edges = (pw.select(F.col("p").alias("src"), F.col("s").alias("dst"),
-                       "w")
-             .unionByName(pw.select(F.col("s").alias("src"),
-                                    F.col("p").alias("dst"), "w")))
-    roots = (part.where(F.col("p_partkey") <= 50)
-             .select((F.col("p_partkey") * 2).alias("node")))
-    return (sssp_int(edges, roots, max_rounds=SSSP_ROUNDS)
-            .select(F.col("node").cast("bigint").alias("node"),
-                    F.col("dist").cast("bigint").alias("dist")))
 
 
 def q193_coverage_selection(spark, sf_dir):
@@ -3921,14 +3418,14 @@ def q196_rake(spark, sf_dir):
     return rake_keyphrases(d, "text", "doc_id")
 
 
-def _copurchase_pairs(spark, sf_dir, max_qty: int = 15):
+def _copurchase_pairs(spark, sf_dir):
     """The thin co-purchase graph shared by q173/q177/q197/q198
-    (quantity <= 15) and, at max_qty=2, by q205: distinct same-order
-    part pairs a < b.  Every quantity-thinned co-purchase query MUST
-    route through here — the inline copies this replaced desynced
-    once already (review finding)."""
+    (quantity <= 15): distinct same-order part pairs a < b.  Every
+    quantity-thinned co-purchase query MUST route through here — the
+    inline copies this replaced desynced once already (review
+    finding)."""
     li = (_load(spark, sf_dir, "lineitem")
-          .where(F.col("l_quantity") <= max_qty))
+          .where(F.col("l_quantity") <= 15))
     l1, l2 = li.alias("l1"), li.alias("l2")
     return (l1.join(l2, (F.col("l1.l_orderkey") == F.col("l2.l_orderkey"))
                     & (F.col("l1.l_partkey") < F.col("l2.l_partkey")))
@@ -4043,42 +3540,6 @@ def q200_pareto(spark, sf_dir):
     return pareto_frontier(m, "doc_id", "n_tokens", "ldiv_ppm")
 
 
-def q201_taxonomy_reduce(spark, sf_dir):
-    """Exact transitive reduction marking (operators.graph
-    .dag_transitive_reduce) on the q187 product-category DAG with
-    two PLANTED shortcut families (part -> mfgr skipping brand,
-    brand -> root skipping mfgr — the q47 injection convention):
-    an is-a edge is redundant iff its parent is reachable by a
-    2+-hop path, the standard cleanup after a Hearst harvest (q186)
-    before dag_layers (q187) prices the closure.  Exactly the
-    planted families come back flagged; a cyclic input raises
-    explicitly (a cycle's closure CONVERGES, so the budget alone
-    cannot catch it — measured by the cycle test)."""
-    from python_mecab_ner_spark.operators.graph import \
-        dag_transitive_reduce
-    part = _load(spark, sf_dir, "part")
-    pnode = F.concat(F.lit("part:"), F.col("p_partkey").cast("string"))
-    cat = F.concat(F.lit("cat:"), F.split(F.col("p_name"), " ")[1])
-    typ = F.concat(F.lit("type:"), F.col("p_type"))
-    brand = F.concat(F.lit("brand:"), F.col("p_brand"))
-    mfgr = F.concat(
-        F.lit("mfgr:"),
-        F.pmod(F.expr("CAST(substring(p_brand, 7) AS INT)"),
-               F.lit(5)).cast("string"))
-    root = F.lit("root:catalog")
-    fams = [(pnode, cat), (cat, root), (pnode, typ), (typ, root),
-            (pnode, brand), (brand, mfgr), (mfgr, root),
-            (pnode, mfgr), (brand, root)]  # last two: shortcuts
-    edges = None
-    for c, p in fams:
-        e = part.select(c.alias("child"), p.alias("parent"))
-        edges = e if edges is None else edges.unionByName(e)
-    return (dag_transitive_reduce(edges.distinct(),
-                                  max_rounds=TAXO_ROUNDS)
-            .select("child", "parent",
-                    F.col("redundant").cast("int").alias("redundant")))
-
-
 def q202_good_turing(spark, sf_dir):
     """Good-Turing count-of-counts sheet (operators.colloc
     .good_turing) over the corpus unigram frequencies: N_r per raw
@@ -4153,25 +3614,6 @@ def q203_jsonl_ledger(spark, sf_dir):
                     F.col("sum_ids").cast("bigint").alias("sum_ids"),
                     F.col("payload_sum").cast("bigint")
                     .alias("payload_sum")))
-
-
-def q205_coloring(spark, sf_dir):
-    """Greedy distributed graph coloring by iterated Luby MIS
-    (operators.graph.mis_coloring) on the THIN qty<=2 co-purchase
-    graph (q175's density class — the qty<=15 graph needs ~15+
-    colors and an o(15x25)-CTE oracle): color = conflict-free
-    maintenance WAVE (no two adjacent jobs share one), the node
-    twin of q188's edge-matching waves.  3 colors at sf0.01, 4 at
-    sf0.1 (measured); both engines run the shared color x MIS-round
-    budget and every per-color Luby trajectory is the q177-certified
-    kernel, so the full color assignment is hash-pinned."""
-    from python_mecab_ner_spark.operators.graph import mis_coloring
-    edges = _copurchase_pairs(spark, sf_dir, max_qty=2).select(
-        F.col("a").alias("src"), F.col("b").alias("dst"))
-    return (mis_coloring(edges, max_colors=COLOR_BUDGET,
-                         mis_rounds=COLOR_MIS_ROUNDS)
-            .select(F.col("node").cast("bigint").alias("node"),
-                    F.col("color").cast("int").alias("color")))
 
 
 def q206_temporal_reach(spark, sf_dir):
@@ -4724,130 +4166,6 @@ def _cdc_oracle_sql() -> str:
             blocks[0] + "\n        UNION ALL" + blocks[1])
 
 
-def q217_node2vec(spark, sf_dir):
-    """node2vec second-order biased walks (operators.graph
-    .node2vec_walks, wp=1/w1=4/wq=2 ~ p=4, q=2) on the qty<=15
-    co-purchase graph — the biased complement of q93's first-order
-    DeepWalk corpus: candidates are weighted by distance to the
-    PREVIOUS node (return / triangle-closing / outward), so the
-    corpus interpolates BFS-like and DFS-like exploration.  The
-    co-purchase graph, not the q93 bipartite one: a bipartite graph
-    has no triangles, so the distance-1 weight class would never
-    fire (here all three do, asserted by test).  Hash-pinned by the
-    per-step unrolled oracle: uniform step 1, then candidate
-    cumulative-weight walks under the same md5 clock."""
-    from python_mecab_ner_spark.operators.graph import node2vec_walks
-    pairs = _copurchase_pairs(spark, sf_dir)
-    edges = (pairs.select(F.col("a").alias("src"),
-                          F.col("b").alias("dst"))
-             .unionByName(pairs.select(F.col("b").alias("src"),
-                                       F.col("a").alias("dst"))))
-    return node2vec_walks(edges, walk_len=3, walks_per_node=1)
-
-
-def _n2v_oracle_sql(walk_len: int = 3, wp: int = 1, w1: int = 4,
-                    wq: int = 2, seed: str = "n2v") -> str:
-    """Generated DuckDB twin of q217: the _walks_oracle_sql skeleton
-    with per-step candidate weighting + cumulative-weight pick."""
-    def h(t, node="node"):
-        return md5_int_sql(
-            f"concat_ws(':', '{seed}', CAST(start AS VARCHAR), "
-            f"CAST(wid AS VARCHAR), '{t}', CAST({node} AS VARCHAR))")
-    s = f"""
-        WITH li AS (SELECT DISTINCT l1.l_partkey AS a,
-                           l2.l_partkey AS b
-                    FROM lineitem l1 JOIN lineitem l2
-                      ON l1.l_orderkey = l2.l_orderkey
-                     AND l1.l_partkey < l2.l_partkey
-                    WHERE l1.l_quantity <= 15
-                      AND l2.l_quantity <= 15),
-        e AS (SELECT a AS src, b AS dst FROM li
-              UNION ALL SELECT b, a FROM li),
-        adj AS MATERIALIZED (
-            SELECT DISTINCT src AS node, dst AS nbr FROM e
-            WHERE src <> dst),
-        adjidx AS MATERIALIZED (
-            SELECT node, nbr,
-                   row_number() OVER (PARTITION BY node
-                                      ORDER BY nbr) - 1 AS i
-            FROM adj),
-        deg AS (SELECT node, count(*) AS deg FROM adj GROUP BY 1),
-        nodes AS (SELECT DISTINCT src AS node FROM e),
-        s0 AS (SELECT node AS start, 0 AS wid,
-                      CAST(NULL AS BIGINT) AS prev, node
-               FROM nodes),
-        s1 AS (SELECT s.start, s.wid, s.node AS prev, a.nbr AS node
-               FROM s0 s JOIN deg d ON d.node = s.node
-               JOIN adjidx a ON a.node = s.node
-                AND a.i = {h(1, "s.node")} % d.deg)"""
-    for t in range(2, walk_len + 1):
-        s += f""",
-        c{t} AS (SELECT s.start, s.wid, s.prev, s.node,
-                        a.nbr, a.i,
-                        CASE WHEN a.nbr = s.prev THEN {wp}
-                             WHEN p.nbr IS NOT NULL THEN {w1}
-                             ELSE {wq} END AS w
-                 FROM s{t - 1} s
-                 JOIN adjidx a ON a.node = s.node
-                 LEFT JOIN adj p ON p.node = s.prev
-                  AND p.nbr = a.nbr),
-        k{t} AS (SELECT *,
-                        sum(w) OVER (PARTITION BY start, wid) AS tw,
-                        sum(w) OVER (PARTITION BY start, wid
-                                     ORDER BY i) AS cum
-                 FROM c{t}),
-        s{t} AS (SELECT start, wid, node AS prev, nbr AS node
-                 FROM k{t}
-                 WHERE {h(t)} % tw >= cum - w
-                   AND {h(t)} % tw < cum)"""
-    sel = "\n            UNION ALL ".join(
-        f"SELECT CAST(start AS BIGINT) AS start, "
-        f"CAST(wid AS INT) AS wid, CAST({t} AS INT) AS step, "
-        f"CAST(node AS BIGINT) AS node FROM s{t}"
-        for t in range(walk_len + 1))
-    return s + "\n            " + sel
-
-
-def q218_katz(spark, sf_dir):
-    """Integer Katz centrality (operators.graph.katz_int, beta=1/2)
-    on the q62 part<->supplier graph: attenuated walk counts with
-    NO out-degree normalization — the rank-family member where a
-    prolific linker boosts all its targets (PageRank dilutes; Katz
-    counts walks whole), the influence-propagation semantics.
-    Same unrolled-oracle certification as q40/q62/q68."""
-    from python_mecab_ner_spark.operators.graph import katz_int
-    li = _load(spark, sf_dir, "lineitem")
-    pairs = li.select((F.col("l_partkey") * 2).alias("p"),
-                      (F.col("l_suppkey") * 2 + 1).alias("s")).distinct()
-    edges = (pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-             .unionByName(pairs.select(F.col("s").alias("src"),
-                                       F.col("p").alias("dst"))))
-    return (katz_int(edges, iters=3)
-            .select(F.col("node").cast("bigint").alias("node"), "k"))
-
-
-def _katz_oracle_sql(iters: int = 3, scale: int = 1_000_000,
-                     den: int = 2) -> str:
-    """Generated DuckDB twin of q218."""
-    s = f"""
-        WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
-                              l_suppkey * 2 + 1 AS s FROM lineitem),
-        e AS (SELECT p AS src, s AS dst FROM pairs
-              UNION ALL SELECT s, p FROM pairs),
-        nodes AS (SELECT DISTINCT src AS node FROM e),
-        k0 AS (SELECT node, CAST({scale} AS BIGINT) AS k FROM nodes)"""
-    for i in range(1, iters + 1):
-        s += f""",
-        m{i} AS (SELECT e.dst AS node, SUM(p.k) AS m
-                 FROM e JOIN k{i - 1} p ON p.node = e.src GROUP BY 1),
-        k{i} AS (SELECT n.node,
-                        CAST({scale} + coalesce(m{i}.m, 0) // {den}
-                             AS BIGINT) AS k
-                 FROM nodes n LEFT JOIN m{i} ON m{i}.node = n.node)"""
-    return s + f"""
-        SELECT CAST(node AS BIGINT) AS node, k FROM k{iters}"""
-
-
 def q220_reshard(spark, sf_dir):
     """Elastic-resharding audit (operators.layout.reshard_audit):
     keys moved when the cluster grows 16 -> 17 shards under
@@ -5085,24 +4403,6 @@ _SEASONAL_ORACLE_SQL = f"""
     FROM agg"""
 
 
-def q226_attack_vs_failure(spark, sf_dir):
-    """Targeted attack vs random failure (the Albert-Jeong-Barabasi
-    2000 contrast) on the q225 graph: the same robustness curve
-    computed twice — degree-ranked removal vs md5-ranked removal —
-    in one table.  A heavy-tailed graph shrugs off random failure
-    at levels where the hub attack has already shattered it; both
-    rank orders, all anti-joins, and all eight star-CC runs are
-    hash-certified by the per-method generated oracle."""
-    from python_mecab_ner_spark.operators.graph import robustness_curve
-    pairs = _copurchase_pairs(spark, sf_dir, max_qty=5)
-    out = None
-    for m in ("degree", "random"):
-        r = (robustness_curve(pairs, rank_by=m)
-             .select(F.lit(m).alias("method"), "*"))
-        out = r if out is None else out.unionByName(r)
-    return out.orderBy("method", "pct_removed")
-
-
 def q227_lsh_plan(spark, sf_dir):
     """LSH parameter planner (operators.dedup.lsh_plan_audit): for
     every (bands, rows) split of the 16-hash budget, the expected
@@ -5248,100 +4548,6 @@ def _fresh_rank_oracle_sql(iters: int = 3, scale: int = 1_000_000,
                   FROM nodes n LEFT JOIN m{k} ON m{k}.node = n.node)"""
     return s + f"""
         SELECT CAST(node AS BIGINT) AS node, pr FROM pr{iters}"""
-
-
-def q225_robustness(spark, sf_dir):
-    """Targeted hub-attack robustness curve (operators.graph
-    .robustness_curve) on the qty<=5 co-purchase graph — the graph
-    sits just past its percolation threshold there (giant component
-    215 of 301 nodes at sf0.01; qty<=2 is subcritical and already
-    shattered, certifying nothing — measured both): remove
-    the top 0/10/20/40% highest-degree parts, largest surviving
-    component + edge/component counts per level — how fast the
-    graph SHATTERS when exactly the central nodes go (the
-    infrastructure-audit complement of the rank family).  Star-CC
-    per level; the oracle re-derives every level's components from
-    a recursive-CTE closure, so removal rank, anti-joins, singleton
-    accounting, and all four CC runs are hash-certified."""
-    from python_mecab_ner_spark.operators.graph import robustness_curve
-    pairs = _copurchase_pairs(spark, sf_dir, max_qty=5)
-    return robustness_curve(pairs).orderBy("pct_removed")
-
-
-RANDOM_RANK_SQL = md5_int_sql("CAST(node AS VARCHAR)", salt="rrm:")
-
-
-def _robustness_oracle_sql(pcts=(0, 10, 20, 40),
-                           methods=None) -> str:
-    """Generated DuckDB twin of q225 (methods=None: degree rank
-    only, no method column) and q226 (methods=("degree","random"):
-    one rank CTE + closure chain per method, method column out)."""
-    s = """
-        WITH RECURSIVE li AS (
-            SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-            FROM lineitem l1 JOIN lineitem l2
-              ON l1.l_orderkey = l2.l_orderkey
-             AND l1.l_partkey < l2.l_partkey
-            WHERE l1.l_quantity <= 5 AND l2.l_quantity <= 5),
-        e AS MATERIALIZED (SELECT a, b FROM li WHERE a <> b),
-        sym AS (SELECT a AS s, b AS d FROM e
-                UNION ALL SELECT b, a FROM e),
-        deg AS (SELECT s AS node, count(*) AS deg
-                FROM sym GROUP BY 1),
-        nn AS (SELECT count(*) AS n FROM deg)"""
-    orders = {
-        "degree": "deg DESC, node ASC",
-        "random": RANDOM_RANK_SQL + ", node ASC",
-    }
-    mtags = [("", "degree")] if methods is None else [
-        (m, m) for m in methods]
-    sels = []
-    for tag, m in mtags:
-        s += f""",
-        rk{tag} AS MATERIALIZED (
-            SELECT node, row_number() OVER (ORDER BY {orders[m]})
-                AS rk
-            FROM deg)"""
-        for p in pcts:
-            t = f"{tag}{p}"
-            s += f""",
-        rem{t} AS (SELECT node FROM rk{tag} CROSS JOIN nn
-                   WHERE rk <= (nn.n * {p}) // 100),
-        ke{t} AS MATERIALIZED (
-            SELECT a, b FROM e
-            WHERE a NOT IN (SELECT node FROM rem{t})
-              AND b NOT IN (SELECT node FROM rem{t})),
-        se{t} AS (SELECT a AS s, b AS d FROM ke{t}
-                  UNION ALL SELECT b, a FROM ke{t}),
-        reach{t}(s, d) AS (
-            SELECT s, d FROM se{t}
-            UNION
-            SELECT r.s, x.d FROM reach{t} r
-            JOIN se{t} x ON x.s = r.d),
-        comp{t} AS (SELECT s AS node, least(s, min(d)) AS comp
-                    FROM reach{t} GROUP BY s),
-        sz{t} AS (SELECT comp, count(*) AS sz
-                  FROM comp{t} GROUP BY 1),
-        st{t} AS (SELECT coalesce(max(sz), 0) AS mx,
-                         count(*) AS ncc,
-                         coalesce(sum(sz), 0) AS in_cc
-                  FROM sz{t}),
-        ne{t} AS (SELECT count(*) AS ne FROM ke{t}),
-        kk{t} AS (SELECT (nn.n * {p}) // 100 AS k, nn.n AS n
-                  FROM nn)"""
-            mcol = "" if methods is None else \
-                f"'{m}' AS method,\n               "
-            sels.append(f"""
-        SELECT {mcol}CAST({p} AS INT) AS pct_removed,
-               CAST(k AS BIGINT) AS n_removed,
-               CAST(n - k AS BIGINT) AS n_nodes_left,
-               CAST(ne AS BIGINT) AS n_edges_left,
-               CAST(greatest(mx, CASE WHEN n - k > in_cc
-                                 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS largest_cc,
-               CAST(ncc + (n - k) - in_cc AS BIGINT) AS n_components
-        FROM st{t} CROSS JOIN ne{t} CROSS JOIN kk{t}""")
-    return s + "\n        UNION ALL".join(sels)
 
 
 def q189_cusum(spark, sf_dir):
@@ -5619,84 +4825,6 @@ def _wpr_oracle_sql(iters: int = 3, scale: int = 1_000_000,
         SELECT CAST(node AS BIGINT) AS node, pr FROM pr{iters}"""
 
 
-def _walks_oracle_sql(walk_len: int = 3, walks_per_node: int = 2,
-                      seed: str = "walk", tail: str | None = None) -> str:
-    """Unrolled random-walk SQL twin of q93: one CTE per step, the
-    same md5(seed:start:wid:step:node) mod outdeg neighbor pick into
-    the same row_number-indexed adjacency list.  With `tail`, the
-    walk union becomes a `walks` CTE and `tail` (CTEs + final SELECT)
-    is appended — q98 composes its skip-gram join this way."""
-    wids = ", ".join(f"({i})" for i in range(walks_per_node))
-    s = f"""
-        WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
-                                       l_suppkey * 2 + 1 AS s
-                       FROM lineitem),
-        e AS (SELECT p AS src, s AS dst FROM pairs
-              UNION ALL SELECT s, p FROM pairs),
-        adj AS (SELECT DISTINCT src AS node, dst AS nbr FROM e
-                WHERE src <> dst),
-        adjidx AS (SELECT node, nbr,
-                          row_number() OVER (PARTITION BY node
-                                             ORDER BY nbr) - 1 AS i
-                   FROM adj),
-        deg AS (SELECT node, count(*) AS deg FROM adj GROUP BY 1),
-        nodes AS (SELECT DISTINCT src AS node FROM e
-                  UNION SELECT dst FROM e),
-        s0 AS (SELECT n.node AS start, w.wid, n.node AS node
-               FROM nodes n CROSS JOIN (VALUES {wids}) AS w(wid))"""
-    for t in range(1, walk_len + 1):
-        h = md5_int_sql(
-            f"concat_ws(':', '{seed}', CAST(s.start AS VARCHAR), "
-            f"CAST(s.wid AS VARCHAR), '{t}', CAST(s.node AS VARCHAR))")
-        s += f""",
-        s{t} AS (SELECT s.start, s.wid, a.nbr AS node
-                 FROM s{t - 1} s JOIN deg d ON d.node = s.node
-                 JOIN adjidx a ON a.node = s.node
-                  AND a.i = {h} % d.deg)"""
-    sel = "\n            UNION ALL ".join(
-        f"SELECT CAST(start AS BIGINT) AS start, "
-        f"CAST(wid AS INT) AS wid, CAST({t} AS INT) AS step, "
-        f"CAST(node AS BIGINT) AS node FROM s{t}"
-        for t in range(walk_len + 1))
-    if tail is not None:
-        return s + f""",
-        walks AS ({sel})
-        {tail}"""
-    return s + "\n            " + sel
-
-
-def _kcore_oracle_sql(k: int = 2, iters: int = 8) -> str:
-    """Unrolled k-core peel twin of q94: one degree-filter + edge-
-    restrict round per CTE pair."""
-    s = f"""
-        WITH raw AS (SELECT DISTINCT o_custkey * 2 AS a,
-                                     l_suppkey * 2 + 1 AS b
-                     FROM orders JOIN lineitem
-                       ON o_orderkey = l_orderkey
-                     WHERE o_orderdate >= '1998-01-01'
-                       AND l_quantity <= 2),
-        e0 AS MATERIALIZED (
-               SELECT a AS node, b AS nbr FROM raw WHERE a <> b
-               UNION ALL SELECT b, a FROM raw WHERE a <> b)"""
-    # MATERIALIZED is load-bearing: each round references the previous
-    # round TWICE, so inlined CTEs would expand 3^iters scans deep
-    # (DuckDB runs out of file handles re-opening the parquet)
-    for r in range(1, iters + 1):
-        s += f""",
-        k{r} AS MATERIALIZED (
-                 SELECT node FROM (SELECT node, count(*) AS c
-                                   FROM e{r - 1} GROUP BY 1)
-                 WHERE c >= {k}),
-        e{r} AS MATERIALIZED (
-                 SELECT e.node, e.nbr FROM e{r - 1} e
-                 JOIN k{r} x ON x.node = e.node
-                 JOIN k{r} y ON y.node = e.nbr)"""
-    return s + f"""
-        SELECT CAST(node AS BIGINT) AS node,
-               CAST(count(*) AS BIGINT) AS core_deg
-        FROM e{iters} GROUP BY 1"""
-
-
 def q70_communities(spark, sf_dir):
     """Label-propagation communities (operators.graph.
     label_propagation_int) on the weighted part<->supplier graph:
@@ -5752,55 +4880,6 @@ def _lpa_oracle_sql(iters: int = 2, id_bits: int = 44,
         SELECT CAST(node AS BIGINT) AS node, lab AS community
         FROM lab{iters}"""
     return s + final
-
-
-def q79_hits(spark, sf_dir):
-    """Integer fixed-point HITS (operators.graph.hits_int) on the
-    directed part->supplier graph: hubs (parts sourced from many good
-    suppliers) vs authorities (suppliers serving many good hubs) — the
-    web-link eigenvector pair PageRank conflates, all 64-bit integer
-    with max-renormalization so the generated unrolled-SQL oracle is
-    bit-exact."""
-    from python_mecab_ner_spark.operators.graph import hits_int
-    li = _load(spark, sf_dir, "lineitem")
-    edges = (li.select((F.col("l_partkey") * 2).alias("src"),
-                       (F.col("l_suppkey") * 2 + 1).alias("dst"))
-             .distinct())
-    return hits_int(edges, iters=2).select(
-        F.col("node").cast("bigint").alias("node"), "authority", "hub")
-
-
-def _hits_oracle_sql(iters: int = 2, scale: int = 1_000_000) -> str:
-    """Unrolled HITS SQL twin of q79 (same integer recurrence +
-    max-renormalize per iteration, generated per iteration)."""
-    s = f"""
-        WITH e AS (SELECT DISTINCT l_partkey * 2 AS src,
-                          l_suppkey * 2 + 1 AS dst FROM lineitem),
-        nodes AS (SELECT DISTINCT src AS node FROM e
-                  UNION SELECT dst FROM e),
-        a0 AS (SELECT node, CAST({scale} AS BIGINT) AS a FROM nodes)"""
-    for k in range(1, iters + 1):
-        s += f""",
-        hr{k} AS (SELECT e.src AS node, sum(p.a) AS hr
-                  FROM e JOIN a{k - 1} p ON p.node = e.dst GROUP BY 1),
-        hm{k} AS (SELECT max(hr) AS hmx FROM hr{k}),
-        h{k} AS (SELECT n.node,
-                        CAST((coalesce(hr, 0) * {scale}) // hmx
-                             AS BIGINT) AS h
-                 FROM nodes n LEFT JOIN hr{k} ON hr{k}.node = n.node
-                 CROSS JOIN hm{k}),
-        ar{k} AS (SELECT e.dst AS node, sum(p.h) AS ar
-                  FROM e JOIN h{k} p ON p.node = e.src GROUP BY 1),
-        am{k} AS (SELECT max(ar) AS amx FROM ar{k}),
-        a{k} AS (SELECT n.node,
-                        CAST((coalesce(ar, 0) * {scale}) // amx
-                             AS BIGINT) AS a
-                 FROM nodes n LEFT JOIN ar{k} ON ar{k}.node = n.node
-                 CROSS JOIN am{k})"""
-    return s + f"""
-        SELECT CAST(n.node AS BIGINT) AS node, a.a AS authority, h.h AS hub
-        FROM nodes n JOIN a{iters} a ON a.node = n.node
-        JOIN h{iters} h ON h.node = n.node"""
 
 
 def q78_source_mix(spark, sf_dir):
@@ -6252,7 +5331,7 @@ def kg_entity_cooc(spark, sf_dir):
     unordered pairs of gazetteer mention surfaces whose token starts
     sit within 20 tokens on the same page — the q96 cooccurrence
     operator applied to the mention stream instead of raw text (one
-    engine primitive, three modalities with q98's walks).  The
+    engine primitive, two modalities).  The
     'related entities' / KG-relatedness-edge signal.  Rows-only gate;
     the kernel is DuckDB-cross-checked on the real mention table in
     tests/test_pipeline_e2e.py."""
@@ -6696,7 +5775,7 @@ def kg_host_cocitation(spark, sf_dir):
     neighbor_jaccard over the host edge list) — the classic
     'related sites' signal of Dean & Henzinger, and the host-level
     alias-candidate generator (mirrors cite like their canonical).
-    Rows-only gate; the operator is oracled at q58/q91."""
+    Rows-only gate; the operator is oracled at q58."""
     from python_mecab_ner_spark.operators.graph import neighbor_jaccard
     from python_mecab_ner_spark.operators.weblinks import host_graph
     g = _kg_graph(spark)
@@ -6901,8 +5980,7 @@ _SNAPSHOT_FIRST_50 = [
     "q21_ann_lsh", "q29_ann_ivf",
     # graph
     "q40_pagerank", "q49_khop", "q154_modularity", "q161_wl_classes",
-    "q162_scc", "q173_ktruss", "q175_incremental_cc",
-    "q176_star_cc",
+    "q162_scc", "q173_ktruss", "q176_star_cc", "q177_mis",
     # ontology / schema induction
     "q140_pred_functionality", "q141_domain_range",
     "q142_inverse_preds", "q155_entity_alignment",
@@ -6975,7 +6053,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q49_khop": q49_khop,
         "q50_bigram_pmi": q50_bigram_pmi,
         "q51_quantized_ann": q51_quantized_ann,
-        "q52_triangles": q52_triangles,
         "q53_surprisal": q53_surprisal,
         "q54_window_dedup": q54_window_dedup,
         "q55_stratified_sample": q55_stratified_sample,
@@ -6997,36 +6074,27 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q72_training_prep": q72_training_prep,
         "q77_embedding_gram": q77_embedding_gram,
         "q78_source_mix": q78_source_mix,
-        "q79_hits": q79_hits,
         "q80_kn_continuation": q80_kn_continuation,
         "q81_crawl_budget": q81_crawl_budget,
-        "q82_negative_samples": q82_negative_samples,
         "q83_fuzzy_alias": q83_fuzzy_alias,
         "q84_importance_weights": q84_importance_weights,
         "q85_burst_days": q85_burst_days,
         "q86_length_deciles": q86_length_deciles,
         "q87_rrf_fusion": q87_rrf_fusion,
         "q88_tfidf_cosine_pairs": q88_tfidf_cosine_pairs,
-        "q89_edge_diff": q89_edge_diff,
-        "q91_adamic_adar": q91_adamic_adar,
         "q92_recency_decay": q92_recency_decay,
-        "q93_random_walks": q93_random_walks,
-        "q94_kcore": q94_kcore,
         "q95_quality_hist_gate": q95_quality_hist_gate,
         "q96_cooccurrence": q96_cooccurrence,
-        "q98_walk_skipgrams": q98_walk_skipgrams,
         "q99_degree_histogram": q99_degree_histogram,
         "q100_incremental_lsh": q100_incremental_lsh,
         "q101_kwic": q101_kwic,
         "q102_split_leakage": q102_split_leakage,
         "q103_weighted_simhash": q103_weighted_simhash,
-        "q104_butterflies": q104_butterflies,
         "q105_source_risk": q105_source_risk,
         "q106_source_overlap": q106_source_overlap,
         "q107_next_word": q107_next_word,
         "q108_eval_sample": q108_eval_sample,
         "q109_containment": q109_containment,
-        "q110_clustering": q110_clustering,
         "q111_dup_coverage": q111_dup_coverage,
         "q113_normalize": q113_normalize,
         "q114_winnow": q114_winnow,
@@ -7048,14 +6116,12 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q134_gate_funnel": q134_gate_funnel,
         "q135_recrawl_schedule": q135_recrawl_schedule,
         "q136_truth_finding": q136_truth_finding,
-        "q137_redirect_resolution": q137_redirect_resolution,
         "q138_partition_skew": q138_partition_skew,
         "q139_c4_line_rules": q139_c4_line_rules,
         "q140_pred_functionality": q140_pred_functionality,
         "q141_domain_range": q141_domain_range,
         "q142_inverse_preds": q142_inverse_preds,
         "q143_mix_weights": q143_mix_weights,
-        "q144_graph_moments": q144_graph_moments,
         "q145_warc_roundtrip": q145_warc_roundtrip,
         "q146_template_prefixes": q146_template_prefixes,
         "q147_bcubed_eval": q147_bcubed_eval,
@@ -7064,12 +6130,10 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q150_rule_mining": q150_rule_mining,
         "q151_edge_lifespan": q151_edge_lifespan,
         "q152_term_salience": q152_term_salience,
-        "q153_rank_eval": q153_rank_eval,
         "q154_modularity": q154_modularity,
         "q155_entity_alignment": q155_entity_alignment,
         "q156_type_propagation": q156_type_propagation,
         "q157_edge_cut": q157_edge_cut,
-        "q158_harmonic": q158_harmonic,
         "q159_warm_pagerank": q159_warm_pagerank,
         "q160_contrastive_pairs": q160_contrastive_pairs,
         "q161_wl_classes": q161_wl_classes,
@@ -7086,23 +6150,19 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q172_prefix_filter_join": q172_prefix_filter_join,
         "q173_ktruss": q173_ktruss,
         "q174_multi_blocking_audit": q174_multi_blocking_audit,
-        "q175_incremental_cc": q175_incremental_cc,
         "q176_star_cc": q176_star_cc,
         "q177_mis": q177_mis,
         "q178_funnel": q178_funnel,
         "q179_cohort_retention": q179_cohort_retention,
         "q180_semantic_decon": q180_semantic_decon,
         "q181_event_transitions": q181_event_transitions,
-        "q182_bipartiteness": q182_bipartiteness,
         "q184_bootstrap_ci": q184_bootstrap_ci,
         "q185_wilson": q185_wilson,
         "q186_hearst": q186_hearst,
         "q192_stitch": q192_stitch,
-        "q187_taxonomy_layers": q187_taxonomy_layers,
         "q188_merge_matching": q188_merge_matching,
         "q189_cusum": q189_cusum,
         "q190_betweenness": q190_betweenness,
-        "q191_sssp": q191_sssp,
         "q193_coverage_selection": q193_coverage_selection,
         "q194_kcenter": q194_kcenter,
         "q195_url_templates": q195_url_templates,
@@ -7111,10 +6171,8 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q198_densest": q198_densest,
         "q199_k_anonymity": q199_k_anonymity,
         "q200_pareto": q200_pareto,
-        "q201_taxonomy_reduce": q201_taxonomy_reduce,
         "q202_good_turing": q202_good_turing,
         "q203_jsonl_ledger": q203_jsonl_ledger,
-        "q205_coloring": q205_coloring,
         "q206_temporal_reach": q206_temporal_reach,
         "q207_interval_join": q207_interval_join,
         "q208_scd2_history": q208_scd2_history,
@@ -7123,15 +6181,11 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q212_spam_mass": q212_spam_mass,
         "q213_rand_ari": q213_rand_ari,
         "q215_cdc_dedup": q215_cdc_dedup,
-        "q217_node2vec": q217_node2vec,
-        "q218_katz": q218_katz,
         "q220_reshard": q220_reshard,
         "q221_postings_gaps": q221_postings_gaps,
         "q222_class_terms": q222_class_terms,
         "q223_neyman": q223_neyman,
         "q224_seasonal_outliers": q224_seasonal_outliers,
-        "q225_robustness": q225_robustness,
-        "q226_attack_vs_failure": q226_attack_vs_failure,
         "q227_lsh_plan": q227_lsh_plan,
         "q228_fresh_rank": q228_fresh_rank,
         "kg_triples_by_pred": kg_triples_by_pred,
@@ -7274,8 +6328,7 @@ def oracle_sql() -> dict[str, str]:
     # HyperBall unrolled rounds (q123): r0 = own-id register, each
     # round = elementwise max with out-neighbors' previous round.
     # CTEs MUST be MATERIALIZED — each round references the previous
-    # twice (own arm + join arm), inlining explodes 2^iters (the q94
-    # k-core lesson).
+    # twice (own arm + join arm), inlining explodes 2^iters.
     _hb_shift = HYPERBALL_REGS.bit_length() - 1
     _hb_rho0 = 60 - _hb_shift + 1
     _hb_h = md5_int_sql("CAST(node AS VARCHAR)", salt="hb:")
@@ -7313,11 +6366,10 @@ def oracle_sql() -> dict[str, str]:
 
     # k-truss unrolled peel rounds (q173): per round, naive x<y<z
     # triangle enumeration over the surviving canonical edge set
-    # (orientation independence is what the hash match certifies, as
-    # in q52's oracle), per-edge support via the three sides, filter
-    # support >= k-2.  CTEs MUST be MATERIALIZED — each round's edge
-    # set feeds three self-join arms AND the next round (the q94
-    # lesson: inlining explodes 3^rounds).
+    # (orientation independence is what the hash match certifies),
+    # per-edge support via the three sides, filter support >= k-2.
+    # CTEs MUST be MATERIALIZED — each round's edge set feeds three
+    # self-join arms AND the next round (inlining explodes 3^rounds).
     _kt = [f"""
         WITH e0 AS MATERIALIZED (
           SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
@@ -7359,7 +6411,7 @@ def oracle_sql() -> dict[str, str]:
     # sf0.01/sf0.1; both engines run the same 8-round budget, rounds
     # past the fixpoint are empty no-ops).  CTEs MUST be MATERIALIZED
     # — each round's active set feeds the edge restriction twice, the
-    # winner anti-join, and the next round (the q94 lesson).
+    # winner anti-join, and the next round.
     _mis = ["""
         WITH e0 AS MATERIALIZED (
           SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
@@ -7410,7 +6462,7 @@ def oracle_sql() -> dict[str, str]:
     # per-round RECURSIVE min-label CC over the winner component
     # graph (tiny: one edge per component).  RECURSIVE prefixes the
     # whole chain (DuckDB rule); everything non-recursive MUST be
-    # MATERIALIZED (the q94 lesson).  Rounds past the fixpoint are
+    # MATERIALIZED.  Rounds past the fixpoint are
     # empty no-ops under the shared MST_ROUNDS budget.
     _mstw = md5_int_sql("CAST(a AS VARCHAR) || '#' || CAST(b AS VARCHAR)",
                         salt="mstw:")
@@ -7468,78 +6520,6 @@ def oracle_sql() -> dict[str, str]:
     _mst.append(")")
     mst_sql = "".join(_mst)
 
-
-    # q205 iterated-MIS coloring, unrolled colors x Luby rounds: each
-    # color block is the q177 MIS oracle restricted to the uncolored
-    # subgraph, plus the isolated-in-remaining complement (nodes with
-    # no surviving edge join the color unconditionally).  Rounds and
-    # colors past their fixpoints are empty no-ops under the shared
-    # budgets.  CTEs MUST be MATERIALIZED (the q94 lesson).
-    _clr = ["""
-        WITH e0 AS MATERIALIZED (
-          SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-          FROM lineitem l1 JOIN lineitem l2
-            ON l2.l_orderkey = l1.l_orderkey
-           AND l1.l_partkey < l2.l_partkey
-          WHERE l1.l_quantity <= 2 AND l2.l_quantity <= 2),
-        r0 AS MATERIALIZED (
-          SELECT a AS node FROM e0 UNION SELECT b FROM e0)
-    """]
-    for _c in range(1, COLOR_BUDGET + 1):
-        _clr.append(f"""
-        , ce{_c} AS MATERIALIZED (
-          SELECT e.a, e.b FROM e0 e
-          JOIN r{_c - 1} ra ON ra.node = e.a
-          JOIN r{_c - 1} rb ON rb.node = e.b)
-        , sym{_c} AS MATERIALIZED (
-          SELECT a AS u, b AS v FROM ce{_c}
-          UNION ALL SELECT b, a FROM ce{_c})
-        , a{_c}x0 AS MATERIALIZED (
-          SELECT u AS node,
-                 md5(CAST(u AS VARCHAR)) || '#' || CAST(u AS VARCHAR)
-                     AS pri
-          FROM (SELECT DISTINCT u FROM sym{_c}))
-        """)
-        for _r in range(1, COLOR_MIS_ROUNDS + 1):
-            _clr.append(f"""
-        , er{_c}x{_r} AS MATERIALIZED (
-          SELECT s.u, s.v, av.pri AS pri_v
-          FROM sym{_c} s JOIN a{_c}x{_r - 1} au ON au.node = s.u
-          JOIN a{_c}x{_r - 1} av ON av.node = s.v)
-        , mn{_c}x{_r} AS MATERIALIZED (
-          SELECT u, min(pri_v) AS mp FROM er{_c}x{_r} GROUP BY 1)
-        , w{_c}x{_r} AS MATERIALIZED (
-          SELECT a.node FROM a{_c}x{_r - 1} a
-          LEFT JOIN mn{_c}x{_r} m ON m.u = a.node
-          WHERE m.u IS NULL OR a.pri < m.mp)
-        , rm{_c}x{_r} AS MATERIALIZED (
-          SELECT DISTINCT e.v AS node
-          FROM er{_c}x{_r} e JOIN w{_c}x{_r} w ON w.node = e.u)
-        , a{_c}x{_r} AS MATERIALIZED (
-          SELECT a.node, a.pri FROM a{_c}x{_r - 1} a
-          WHERE a.node NOT IN (SELECT node FROM w{_c}x{_r})
-            AND a.node NOT IN (SELECT node FROM rm{_c}x{_r}))
-            """)
-        _wu = " UNION ALL ".join(
-            f"SELECT node FROM w{_c}x{_r}"
-            for _r in range(1, COLOR_MIS_ROUNDS + 1))
-        _clr.append(f"""
-        , col{_c} AS MATERIALIZED (
-          SELECT node FROM ({_wu})
-          UNION
-          SELECT node FROM r{_c - 1}
-          WHERE node NOT IN (SELECT node FROM a{_c}x0))
-        , r{_c} AS MATERIALIZED (
-          SELECT node FROM r{_c - 1}
-          WHERE node NOT IN (SELECT node FROM col{_c}))
-        """)
-    _clr.append("SELECT CAST(node AS BIGINT) AS node, "
-                "CAST(c AS INT) AS color FROM (")
-    _clr.append(" UNION ALL ".join(
-        f"SELECT node, {_c} AS c FROM col{_c}"
-        for _c in range(1, COLOR_BUDGET + 1)))
-    _clr.append(")")
-    coloring_sql = "".join(_clr)
 
     # q206 temporal reachability, unrolled min-arrival rounds (the
     # SSSP oracle pattern with the time-respecting guard arr <= t);
@@ -7641,7 +6621,7 @@ def oracle_sql() -> dict[str, str]:
     # edge wins iff it is the min at BOTH endpoints, then every edge
     # touching a matched node retires.  CTEs MUST be MATERIALIZED —
     # each round's active set feeds the endpoint expansion, both
-    # winner joins, and the next round (the q94 lesson).
+    # winner joins, and the next round.
     _mm = ["""
         WITH e0 AS MATERIALIZED (
           SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
@@ -8153,43 +7133,6 @@ def oracle_sql() -> dict[str, str]:
         FROM o JOIN c0 ON c0.subj = o.subj
     """
 
-    # redirect-resolution oracle (q137): same hash-built redirect
-    # table, chains followed one step at a time by a depth-capped
-    # recursive CTE; cap = 2^rounds matches the doubling horizon
-    _rr_cap = 1 << REDIR_ROUNDS
-    _rr_redir = md5_int_sql("CAST(doc_id AS VARCHAR)", salt="redir:")
-    _rr_hop = md5_int_sql("CAST(doc_id AS VARCHAR)", salt="hop:")
-    redirect_resolution_sql = f"""
-        WITH RECURSIVE r AS (
-            SELECT doc_id AS src,
-                   doc_id - (1 + {_rr_hop} % least(4, doc_id)) AS dst
-            FROM documents
-            WHERE doc_id >= 1 AND {_rr_redir} % 5 < 4
-            UNION ALL
-            SELECT * FROM (VALUES (-1, -2), (-2, -3), (-3, -1))
-                t(src, dst)
-        ),
-        walk(u, v, hops) AS (
-            SELECT src, dst, 1 FROM r
-            UNION ALL
-            SELECT w.u, r.dst, w.hops + 1
-            FROM walk w JOIN r ON r.src = w.v
-            WHERE w.hops < {_rr_cap}
-        ),
-        can AS (SELECT u, v, hops FROM walk
-                WHERE v NOT IN (SELECT src FROM r)),
-        unres AS (SELECT u, v, hops FROM walk
-                  WHERE hops = {_rr_cap}
-                    AND u NOT IN (SELECT u FROM can))
-        SELECT CAST(u AS BIGINT) AS src, CAST(v AS BIGINT) AS canonical,
-               CAST(hops AS BIGINT) AS hops, CAST(1 AS INT) AS resolved
-        FROM can
-        UNION ALL
-        SELECT CAST(u AS BIGINT), CAST(v AS BIGINT),
-               CAST(hops AS BIGINT), CAST(0 AS INT)
-        FROM unres
-    """
-
     # partition-skew oracle (q138): same md5 bucketing over both key
     # choices, candidate counts as a VALUES dimension
     _ps_cand = ", ".join(f"({n})" for n in SKEW_CANDIDATES)
@@ -8362,43 +7305,6 @@ def oracle_sql() -> dict[str, str]:
                CAST((w_ppm * 1000000) // greatest(nat_ppm, 1)
                     AS BIGINT) AS boost_ppm
         FROM w
-    """
-
-    # graph-moments oracle (q144): same hash-built edge table,
-    # degrees + reversed-pair reciprocity join
-    _gm1 = md5_int_sql("CAST(doc_id AS VARCHAR)", salt="gm1:")
-    _gm2 = md5_int_sql("CAST(doc_id AS VARCHAR)", salt="gm2:")
-    graph_moments_sql = f"""
-        WITH b AS (SELECT doc_id AS src,
-                          doc_id - (1 + {_gm1} % least(50, doc_id))
-                              AS dst
-                   FROM documents WHERE doc_id >= 1),
-        f AS (SELECT doc_id AS src,
-                     doc_id - (1 + {_gm2} % least(7, doc_id)) AS dst
-              FROM documents WHERE doc_id >= 1 AND doc_id % 3 = 0),
-        r AS (SELECT dst AS src, src AS dst FROM b WHERE src % 7 = 0),
-        e AS (SELECT DISTINCT src, dst FROM
-                  (SELECT * FROM b UNION ALL SELECT * FROM f
-                   UNION ALL SELECT * FROM r)),
-        od AS (SELECT src, count(*) AS xd FROM e GROUP BY 1),
-        idg AS (SELECT dst, count(*) AS yd FROM e GROUP BY 1),
-        m AS (SELECT count(*) AS n_edges, sum(xd) AS sum_x,
-                     sum(yd) AS sum_y, sum(xd * yd) AS sum_xy,
-                     sum(xd * xd) AS sum_x2, sum(yd * yd) AS sum_y2
-              FROM e JOIN od USING (src) JOIN idg USING (dst)),
-        rc AS (SELECT count(*) AS recip_edges
-               FROM e a JOIN e b2
-                 ON a.src = b2.dst AND a.dst = b2.src)
-        SELECT CAST(n_edges AS BIGINT) AS n_edges,
-               CAST(sum_x AS BIGINT) AS sum_x,
-               CAST(sum_y AS BIGINT) AS sum_y,
-               CAST(sum_xy AS BIGINT) AS sum_xy,
-               CAST(sum_x2 AS BIGINT) AS sum_x2,
-               CAST(sum_y2 AS BIGINT) AS sum_y2,
-               CAST(recip_edges AS BIGINT) AS recip_edges,
-               CAST((recip_edges * 1000000) // n_edges AS BIGINT)
-                   AS recip_ppm
-        FROM m CROSS JOIN rc
     """
 
     stat_labels_in = ", ".join(f"'{s}'" for s in STAT_LABELS)
@@ -8770,14 +7676,12 @@ def oracle_sql() -> dict[str, str]:
         "q134_gate_funnel": gate_funnel_sql,
         "q135_recrawl_schedule": recrawl_schedule_sql,
         "q136_truth_finding": truth_finding_sql,
-        "q137_redirect_resolution": redirect_resolution_sql,
         "q138_partition_skew": partition_skew_sql,
         "q139_c4_line_rules": c4_line_rules_sql,
         "q140_pred_functionality": pred_functionality_sql,
         "q141_domain_range": domain_range_sql,
         "q142_inverse_preds": inverse_preds_sql,
         "q143_mix_weights": mix_weights_sql,
-        "q144_graph_moments": graph_moments_sql,
         "q148_encoding_audit": """
             WITH p AS (SELECT source,
                               text
@@ -9207,7 +8111,6 @@ def oracle_sql() -> dict[str, str]:
             FROM cell GROUP BY 1, 2
         """,
         "q70_communities": _lpa_oracle_sql(iters=2),
-        "q79_hits": _hits_oracle_sql(iters=2),
         "q88_tfidf_cosine_pairs": """
             WITH toks AS (SELECT p_partkey AS d,
                                  unnest(regexp_split_to_array(
@@ -9235,25 +8138,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(dot AS BIGINT) AS dot,
                    CAST(c AS BIGINT) AS cos2_ppm
             FROM res WHERE c >= 500000
-        """,
-        "q89_edge_diff": """
-            WITH e AS (SELECT o_custkey, l_suppkey, o_orderdate
-                       FROM orders JOIN lineitem
-                         ON o_orderkey = l_orderkey),
-            o AS (SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
-                  FROM e WHERE o_orderdate < '1998-01-01'),
-            n AS (SELECT DISTINCT o_custkey AS src, l_suppkey AS dst
-                  FROM e WHERE o_orderdate >= '1998-01-01'),
-            u AS (SELECT src, dst, max(o) AS in_old, max(n) AS in_new
-                  FROM (SELECT src, dst, 1 AS o, 0 AS n FROM o
-                        UNION ALL
-                        SELECT src, dst, 0, 1 FROM n)
-                  GROUP BY 1, 2)
-            SELECT CASE WHEN in_old = 0 THEN 'added'
-                        WHEN in_new = 0 THEN 'removed'
-                        ELSE 'kept' END AS status,
-                   CAST(count(*) AS BIGINT) AS n_edges
-            FROM u GROUP BY 1
         """,
         "q107_next_word": """
             WITH t AS (SELECT doc_id, regexp_split_to_array(
@@ -9331,65 +8215,6 @@ def oracle_sql() -> dict[str, str]:
                        AS nonen_ppm
             FROM f GROUP BY 1
         """,
-        # q58's wedge pair table re-aggregated: C(common, 2) to both
-        # endpoints
-        "q104_butterflies": """
-            WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
-                                           l_suppkey * 2 + 1 AS s
-                           FROM lineitem),
-            e AS (SELECT p AS src, s AS dst FROM pairs
-                  UNION ALL SELECT s, p FROM pairs),
-            adj1 AS (SELECT DISTINCT least(src, dst) AS node,
-                                     greatest(src, dst) AS nbr
-                     FROM e WHERE src <> dst),
-            adj AS (SELECT node, nbr FROM adj1
-                    UNION SELECT nbr, node FROM adj1),
-            deg AS (SELECT node, count(*) AS deg FROM adj GROUP BY 1),
-            ctr AS (SELECT a.nbr AS center, a.node AS leaf
-                    FROM adj a JOIN deg d ON d.node = a.nbr
-                    WHERE d.deg <= 256),
-            cm AS (SELECT a.leaf AS n1, b.leaf AS n2,
-                          count(*) AS common
-                   FROM ctr a JOIN ctr b
-                     ON a.center = b.center AND a.leaf < b.leaf
-                   GROUP BY 1, 2 HAVING count(*) >= 2),
-            bf AS (SELECT n1 AS node,
-                          (common * (common - 1)) // 2 AS b FROM cm
-                   UNION ALL
-                   SELECT n2, (common * (common - 1)) // 2 FROM cm)
-            SELECT CAST(node AS BIGINT) AS node,
-                   CAST(sum(b) AS BIGINT) AS n_bfly
-            FROM bf GROUP BY 1 HAVING sum(b) > 0
-            ORDER BY n_bfly DESC, node LIMIT 100
-        """,
-        # q58's wedge join with the center's 1e6 div bit_length(deg)
-        # weight riding each wedge row
-        "q91_adamic_adar": """
-            WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
-                                           l_suppkey * 2 + 1 AS s
-                           FROM lineitem),
-            e AS (SELECT p AS src, s AS dst FROM pairs
-                  UNION ALL SELECT s, p FROM pairs),
-            adj1 AS (SELECT DISTINCT least(src, dst) AS node,
-                                     greatest(src, dst) AS nbr
-                     FROM e WHERE src <> dst),
-            adj AS (SELECT node, nbr FROM adj1
-                    UNION SELECT nbr, node FROM adj1),
-            deg AS (SELECT node, count(*) AS deg FROM adj GROUP BY 1),
-            ctr AS (SELECT a.nbr AS center, a.node AS leaf,
-                           1000000 // length(bin(d.deg)) AS aa_w
-                    FROM adj a JOIN deg d ON d.node = a.nbr
-                    WHERE d.deg <= 256),
-            cm AS (SELECT a.leaf AS n1, b.leaf AS n2,
-                          count(*) AS common, sum(a.aa_w) AS aa
-                   FROM ctr a JOIN ctr b
-                     ON a.center = b.center AND a.leaf < b.leaf
-                   GROUP BY 1, 2 HAVING count(*) >= 2)
-            SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-                   CAST(common AS BIGINT) AS common,
-                   CAST(aa AS BIGINT) AS aa_micro
-            FROM cm ORDER BY aa_micro DESC, n1, n2 LIMIT 100
-        """,
         # power-of-two half-life: weight = 2^20 >> (age_days div 7),
         # age anchored at the newest event DAY (1-row broadcast)
         "q92_recency_decay": """
@@ -9443,24 +8268,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(60 // d) AS BIGINT) AS w_sum
             FROM p GROUP BY 1, 2 HAVING count(*) >= 5
         """,
-        "q93_random_walks": _walks_oracle_sql(
-            walk_len=WALK_LEN, walks_per_node=WALKS_PER_NODE),
-        "q94_kcore": _kcore_oracle_sql(k=KCORE_K, iters=KCORE_ITERS),
-        "q98_walk_skipgrams": _walks_oracle_sql(
-            walk_len=WALK_LEN, walks_per_node=WALKS_PER_NODE,
-            tail="""
-            , wctx AS (SELECT start * 8 + wid AS url, step AS idx,
-                              node AS word
-                       FROM walks),
-            p AS (SELECT a.word AS wa, b.word AS wb, b.idx - a.idx AS d
-                  FROM wctx a JOIN wctx b
-                    ON a.url = b.url AND b.idx > a.idx
-                   AND b.idx <= a.idx + 2)
-            SELECT CAST(least(wa, wb) AS BIGINT) AS n1,
-                   CAST(greatest(wa, wb) AS BIGINT) AS n2,
-                   CAST(count(*) AS BIGINT) AS n_pairs,
-                   CAST(sum(60 // d) AS BIGINT) AS w_sum
-            FROM p GROUP BY 1, 2 HAVING count(*) >= 2"""),
         "q99_degree_histogram": """
             WITH pairs AS (SELECT DISTINCT l_partkey * 2 AS p,
                                            l_suppkey * 2 + 1 AS s
@@ -9597,88 +8404,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(count(*) AS BIGINT) AS n_toks,
                    CAST(sum(w.w) AS BIGINT) AS score
             FROM tk JOIN w USING (b) GROUP BY 1
-        """,
-        "q82_negative_samples": f"""
-            WITH e AS (SELECT DISTINCT l_partkey * 2 AS src,
-                              l_suppkey * 2 + 1 AS dst
-                       FROM lineitem WHERE l_partkey <= 200),
-            nv AS (SELECT node,
-                          row_number() OVER (ORDER BY node) - 1 AS rid
-                   FROM (SELECT DISTINCT src AS node FROM e
-                         UNION SELECT dst FROM e)),
-            nn AS (SELECT count(*) AS n FROM nv),
-            cand AS (SELECT src, dst, i,
-                            ({md5_int_sql(
-                                "concat_ws(':', src, dst, i)")}) % nn.n
-                            AS rid
-                     FROM e
-                     CROSS JOIN (SELECT 0 AS i UNION ALL SELECT 1)
-                     CROSS JOIN nn),
-            c2 AS (SELECT src, dst, i, node AS dst_neg
-                   FROM cand JOIN nv USING (rid))
-            SELECT CAST(c2.src AS BIGINT) AS src,
-                   CAST(c2.dst AS BIGINT) AS dst,
-                   CAST(c2.i AS INT) AS i,
-                   CAST(c2.dst_neg AS BIGINT) AS dst_neg
-            FROM c2 LEFT JOIN e t
-                 ON t.src = c2.src AND t.dst = c2.dst_neg
-            WHERE t.src IS NULL
-        """,
-        # q153: metrics.rank_eval over the q82 negatives — same
-        # negative-sampling CTE chain, then rank = 1 + strictly-
-        # better count against the in-degree popularity scorer
-        "q153_rank_eval": f"""
-            WITH e AS (SELECT DISTINCT l_partkey * 2 AS src,
-                              l_suppkey * 2 + 1 AS dst
-                       FROM lineitem WHERE l_partkey <= 200),
-            nv AS (SELECT node,
-                          row_number() OVER (ORDER BY node) - 1 AS rid
-                   FROM (SELECT DISTINCT src AS node FROM e
-                         UNION SELECT dst FROM e)),
-            nn AS (SELECT count(*) AS n FROM nv),
-            cand AS (SELECT src, dst, i,
-                            ({md5_int_sql(
-                                "concat_ws(':', src, dst, i)")}) % nn.n
-                            AS rid
-                     FROM e
-                     CROSS JOIN (SELECT 0 AS i UNION ALL SELECT 1)
-                     CROSS JOIN nn),
-            c2 AS (SELECT src, dst, i, node AS dst_neg
-                   FROM cand JOIN nv USING (rid)),
-            negs AS (SELECT c2.src, c2.dst, c2.dst_neg AS cand
-                     FROM c2 LEFT JOIN e t
-                          ON t.src = c2.src AND t.dst = c2.dst_neg
-                     WHERE t.src IS NULL),
-            deg AS (SELECT dst AS node, count(*) AS score
-                    FROM e GROUP BY 1),
-            nsc AS (SELECT n.src, n.dst, n.cand,
-                           coalesce(d.score, 0) AS score
-                    FROM negs n LEFT JOIN deg d ON d.node = n.cand),
-            tsc AS (SELECT e.src, e.dst,
-                           coalesce(d.score, 0) AS true_score
-                    FROM e LEFT JOIN deg d ON d.node = e.dst),
-            rk AS (SELECT n.src, n.dst,
-                          sum(CASE WHEN n.score > t.true_score
-                                     OR (n.score = t.true_score
-                                         AND n.cand < n.dst)
-                                   THEN 1 ELSE 0 END) AS n_better
-                   FROM nsc n JOIN tsc t
-                     ON t.src = n.src AND t.dst = n.dst
-                   GROUP BY 1, 2),
-            rr AS (SELECT t.src, t.dst,
-                          coalesce(rk.n_better, 0) + 1 AS rank
-                   FROM tsc t LEFT JOIN rk
-                     ON rk.src = t.src AND rk.dst = t.dst)
-            SELECT CAST(count(*) AS BIGINT) AS n_queries,
-                   CAST(sum(1000000 // rank) // count(*) AS BIGINT)
-                       AS mrr_ppm,
-                   CAST(sum(CASE WHEN rank <= 1 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS hits1,
-                   CAST(sum(CASE WHEN rank <= 3 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS hits3,
-                   CAST(sum(CASE WHEN rank <= 10 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS hits10
-            FROM rr
         """,
         # q154: the unrolled-LPA chain + modularity arithmetic (the
         # +W^2 shift keeps the dividend non-negative -> div == //)
@@ -9870,7 +8595,6 @@ def oracle_sql() -> dict[str, str]:
         "q177_mis": mis_sql,
         "q197_boruvka_mst": mst_sql,
         "q198_densest": peel_sql,
-        "q205_coloring": coloring_sql,
         "q206_temporal_reach": temporal_sql,
         "q208_scd2_history": f"""
             WITH b AS (
@@ -9924,25 +8648,14 @@ def oracle_sql() -> dict[str, str]:
         "q212_spam_mass": _spam_mass_oracle_sql(),
         "q213_rand_ari": _ARI_ORACLE_SQL,
         "q215_cdc_dedup": _cdc_oracle_sql(),
-        "q217_node2vec": _n2v_oracle_sql(),
-        "q218_katz": _katz_oracle_sql(),
         "q220_reshard": _reshard_oracle_sql(),
         "q221_postings_gaps": _POSTINGS_GAP_ORACLE_SQL,
         "q222_class_terms": _CLASS_TERMS_ORACLE_SQL,
         "q223_neyman": _neyman_oracle_sql(),
         "q224_seasonal_outliers": _SEASONAL_ORACLE_SQL,
-        "q225_robustness": _robustness_oracle_sql(),
-        "q226_attack_vs_failure": _robustness_oracle_sql(
-            methods=("degree", "random")),
         "q227_lsh_plan": _lsh_plan_oracle_sql(shingle_cte, MAX_SH_DF),
         "q228_fresh_rank": _fresh_rank_oracle_sql(),
         "q188_merge_matching": matching_sql,
-        # q187: recursive-CTE ancestor closure over the part-catalog
-        # DAG; layer = max upward path length (== the Kahn peel
-        # round), n_ancestors = distinct closure size.  WITH
-        # RECURSIVE prefixes the whole chain (DuckDB rule); depth is
-        # 4 so the (node, anc, d) recursion stays tiny.  DuckDB
-        # string_split is 1-BASED (Spark's split[] is 0-based).
         # q192: suffix-prefix boundary join over the injected stitch
         # grams — same split convention as q08, k = 4 hardcoded to
         # match suffix_prefix_stitch's default (DuckDB slices are
@@ -9966,45 +8679,6 @@ def oracle_sql() -> dict[str, str]:
             FROM sfx JOIN pfx USING (boundary)
             WHERE doc_a <> doc_b
             ORDER BY 1, 2
-        """,
-        "q187_taxonomy_layers": """
-            WITH RECURSIVE e AS MATERIALIZED (
-              SELECT DISTINCT * FROM (
-                SELECT 'part:' || CAST(p_partkey AS VARCHAR) AS c,
-                       'cat:' || string_split(p_name, ' ')[2] AS p
-                FROM part
-                UNION ALL
-                SELECT 'cat:' || string_split(p_name, ' ')[2],
-                       'root:catalog' FROM part
-                UNION ALL
-                SELECT 'part:' || CAST(p_partkey AS VARCHAR),
-                       'type:' || p_type FROM part
-                UNION ALL
-                SELECT 'type:' || p_type, 'root:catalog' FROM part
-                UNION ALL
-                SELECT 'part:' || CAST(p_partkey AS VARCHAR),
-                       'brand:' || p_brand FROM part
-                UNION ALL
-                SELECT 'brand:' || p_brand,
-                       'mfgr:' || CAST(CAST(substr(p_brand, 7) AS INT)
-                                       % 5 AS VARCHAR)
-                FROM part
-                UNION ALL
-                SELECT 'mfgr:' || CAST(CAST(substr(p_brand, 7) AS INT)
-                                       % 5 AS VARCHAR),
-                       'root:catalog' FROM part)),
-            anc AS (
-              SELECT c AS node, p AS anc, 1 AS d FROM e
-              UNION
-              SELECT a.node, e.p, a.d + 1
-              FROM anc a JOIN e ON e.c = a.anc),
-            n AS (SELECT c AS node FROM e UNION SELECT p FROM e)
-            SELECT n.node AS node,
-                   CAST(coalesce(max(a.d), 0) AS INT) AS layer,
-                   CAST(count(DISTINCT a.anc) AS BIGINT) AS n_ancestors
-            FROM n LEFT JOIN anc a ON a.node = n.node
-            GROUP BY 1
-            ORDER BY 1
         """,
         # q189: integer CUSUM |T*S_t - t*S_T| over per-type daily
         # counts, packed-integer argmax (2^20 pack, earliest-split
@@ -10229,22 +8903,6 @@ def oracle_sql() -> dict[str, str]:
             WHERE hypernym <> '' AND hyponym <> ''
             GROUP BY 1, 2, 3
         """,
-        # q182: residue chains closed into cycles — bipartiteness is
-        # ANALYTIC from the residue counts (cycle length parity; odd
-        # residues skip one node, leaving a tail that does not affect
-        # the verdict), so the O(log n) double-cover engine gets an
-        # exact oracle with no recursion (the q176 construction)
-        "q182_bipartiteness": """
-            WITH r AS (SELECT event_id % 8 AS r, count(*) AS cnt,
-                              min(event_id) AS mn
-                       FROM events GROUP BY 1)
-            SELECT CAST(mn AS BIGINT) AS comp,
-                   CAST(cnt AS BIGINT) AS n_nodes,
-                   CAST(CASE WHEN (CASE WHEN r % 2 = 0 THEN cnt
-                                        ELSE cnt - 1 END) % 2 = 0
-                             THEN 1 ELSE 0 END AS INT) AS bipartite
-            FROM r
-        """,
         # q176: path-chain components — ground truth is analytic
         # (chain component = min id of the residue class), no
         # recursion needed; the ENGINE side does real O(log n) CC
@@ -10259,25 +8917,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(min(id) OVER (PARTITION BY id % 8) AS BIGINT)
                        AS comp
             FROM verts
-        """,
-        # q175: full-recompute components on old UNION delta — the
-        # exact-equivalence twin of the warm-start incremental path
-        "q175_incremental_cc": """
-            WITH RECURSIVE raw AS (
-                SELECT DISTINCT o_custkey * 2 AS src,
-                                l_suppkey * 2 + 1 AS dst
-                FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-                WHERE o_orderdate >= '1998-01-01' AND l_quantity <= 2),
-            edges AS (SELECT src AS a, dst AS b FROM raw
-                      UNION SELECT dst, src FROM raw),
-            nodes AS (SELECT DISTINCT a AS n FROM edges),
-            reach(n, m) AS (
-                SELECT n, n FROM nodes
-                UNION
-                SELECT r.n, e.b FROM reach r JOIN edges e ON e.a = r.m)
-            SELECT CAST(n AS BIGINT) AS id,
-                   CAST(min(m) AS BIGINT) AS comp
-            FROM reach GROUP BY 1
         """,
         # q166: histogram-cumulative median/MAD twin
         "q166_robust_outliers": """
@@ -10470,9 +9109,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST((cut_mod * 1000000) // n_edges AS BIGINT)
             FROM c
         """,
-        "q158_harmonic": _harmonic_oracle_sql(radius=3),
         "q190_betweenness": _betweenness_oracle_sql(radius=3),
-        "q191_sssp": _sssp_oracle_sql(rounds=SSSP_ROUNDS),
         "q193_coverage_selection": _coverage_oracle_sql(COVER_K),
         "q194_kcenter": _kcenter_oracle_sql(KCENTER_K),
         "q195_url_templates": _url_templates_oracle_sql(),
@@ -10496,52 +9133,6 @@ def oracle_sql() -> dict[str, str]:
                             {md5_int_sql("text")} % 4294967296 END)
                         AS BIGINT) AS payload_sum
             FROM b GROUP BY 1
-        """,
-        "q201_taxonomy_reduce": """
-            WITH RECURSIVE e AS MATERIALIZED (
-              SELECT DISTINCT * FROM (
-                SELECT 'part:' || CAST(p_partkey AS VARCHAR) AS c,
-                       'cat:' || string_split(p_name, ' ')[2] AS p
-                FROM part
-                UNION ALL
-                SELECT 'cat:' || string_split(p_name, ' ')[2],
-                       'root:catalog' FROM part
-                UNION ALL
-                SELECT 'part:' || CAST(p_partkey AS VARCHAR),
-                       'type:' || p_type FROM part
-                UNION ALL
-                SELECT 'type:' || p_type, 'root:catalog' FROM part
-                UNION ALL
-                SELECT 'part:' || CAST(p_partkey AS VARCHAR),
-                       'brand:' || p_brand FROM part
-                UNION ALL
-                SELECT 'brand:' || p_brand,
-                       'mfgr:' || CAST(CAST(substr(p_brand, 7) AS INT)
-                                       % 5 AS VARCHAR)
-                FROM part
-                UNION ALL
-                SELECT 'mfgr:' || CAST(CAST(substr(p_brand, 7) AS INT)
-                                       % 5 AS VARCHAR),
-                       'root:catalog' FROM part
-                UNION ALL
-                SELECT 'part:' || CAST(p_partkey AS VARCHAR),
-                       'mfgr:' || CAST(CAST(substr(p_brand, 7) AS INT)
-                                       % 5 AS VARCHAR)
-                FROM part
-                UNION ALL
-                SELECT 'brand:' || p_brand, 'root:catalog' FROM part)
-              WHERE c <> p),
-            reach(c, p) AS (
-              SELECT c, p FROM e
-              UNION
-              SELECT r.c, e.p FROM reach r JOIN e ON e.c = r.p),
-            two_plus AS MATERIALIZED (
-              SELECT DISTINCT e.c, r.p
-              FROM e JOIN reach r ON r.c = e.p)
-            SELECT e.c AS child, e.p AS parent,
-                   CAST(CASE WHEN t.c IS NOT NULL THEN 1 ELSE 0 END
-                        AS INT) AS redundant
-            FROM e LEFT JOIN two_plus t ON t.c = e.c AND t.p = e.p
         """,
         "q202_good_turing": """
             WITH t AS (SELECT list_filter(regexp_split_to_array(
@@ -11059,51 +9650,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(ROW_NUMBER() OVER (ORDER BY qdot DESC, vec_id)
                         AS INT) AS rank
             FROM s ORDER BY qdot DESC, vec_id LIMIT 10
-        """,
-        # naive x<y<z triangle enumeration; per-node counts are
-        # orientation-independent, so this certifies the Spark side's
-        # degree-oriented wedge join
-        "q52_triangles": """
-            WITH e AS (SELECT DISTINCT l1.l_partkey AS a,
-                                       l2.l_partkey AS b
-                       FROM lineitem l1 JOIN lineitem l2
-                         ON l1.l_orderkey = l2.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey),
-            tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                    FROM e e1 JOIN e e2 ON e2.a = e1.b
-                    JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-            corners AS (SELECT x AS node FROM tri
-                        UNION ALL SELECT y FROM tri
-                        UNION ALL SELECT z FROM tri)
-            SELECT CAST(node AS BIGINT) AS node,
-                   CAST(count(*) AS BIGINT) AS n_tri
-            FROM corners GROUP BY 1
-        """,
-        # q52's naive triangle table + degree -> 2*tri/(deg*(deg-1)) ppm
-        "q110_clustering": """
-            WITH e AS (SELECT DISTINCT l1.l_partkey AS a,
-                                       l2.l_partkey AS b
-                       FROM lineitem l1 JOIN lineitem l2
-                         ON l1.l_orderkey = l2.l_orderkey
-                        AND l1.l_partkey < l2.l_partkey),
-            deg AS (SELECT node, count(*) AS deg FROM (
-                      SELECT a AS node FROM e
-                      UNION ALL SELECT b FROM e) GROUP BY 1),
-            tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                    FROM e e1 JOIN e e2 ON e2.a = e1.b
-                    JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-            corners AS (SELECT x AS node FROM tri
-                        UNION ALL SELECT y FROM tri
-                        UNION ALL SELECT z FROM tri),
-            tc AS (SELECT node, count(*) AS n_tri FROM corners GROUP BY 1)
-            SELECT CAST(deg.node AS BIGINT) AS node,
-                   CAST(deg.deg AS BIGINT) AS deg,
-                   CAST(coalesce(tc.n_tri, 0) AS BIGINT) AS n_tri,
-                   CAST(CASE WHEN deg.deg >= 2
-                             THEN (2 * coalesce(tc.n_tri, 0) * 1000000)
-                                  // (deg.deg * (deg.deg - 1))
-                             ELSE 0 END AS BIGINT) AS cc_ppm
-            FROM deg LEFT JOIN tc ON tc.node = deg.node
         """,
         # bit-length idf rarity (same integer log2 family as q38)
         "q53_surprisal": """

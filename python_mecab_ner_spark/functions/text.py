@@ -113,13 +113,6 @@ def strip_ne_tags(col) -> Column:
     return F.regexp_replace(col, NE_TAG_PATTERN, r"$1")
 
 
-def regex_entities_sql(expr: str) -> str:
-    """DuckDB twin of regex_entities (exploded downstream by the
-    caller): list_zip of the two capture-group extractions."""
-    return (f"list_zip(regexp_extract_all({expr}, '{NE_TAG_PATTERN}', 1), "
-            f"regexp_extract_all({expr}, '{NE_TAG_PATTERN}', 2))")
-
-
 # smart quotes / unicode dashes -> ASCII; kept as two parallel literal
 # strings so the Spark translate() and DuckDB translate() twins can
 # never drift (one definition, two renderers)

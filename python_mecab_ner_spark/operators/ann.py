@@ -3,9 +3,9 @@
 - brute_force_topk: exact cosine top-k against a query vector, pure
   SQL (zip_with + aggregate stay in codegen; the top-k is a global
   TakeOrderedAndProject — no full sort materialization).
-- sign_lsh_buckets / bucketed_topk: the scale path.  Bucket key =
-  sign bits of the first b dimensions (a fixed random-hyperplane LSH
-  with axis-aligned planes — deterministic and cross-engine
+- banded_sign_buckets / bucketed_topk: the scale path.  Bucket key =
+  sign bits of strided dimensions per band (a fixed random-hyperplane
+  LSH with axis-aligned planes — deterministic and cross-engine
   reproducible).  Candidates come only from the query's bucket, so a
   1000-executor scan prunes ~2^-b of the corpus per probe; the
   brute-force operator doubles as the recall baseline.
@@ -48,15 +48,6 @@ def brute_force_topk(df: DataFrame, qvec: list[float], k: int = 10,
     w = Window.orderBy(F.col("cos").desc(), F.col(id_col).asc())
     return (topk.withColumn("rank", F.row_number().over(w))
             .select(id_col, "rank"))
-
-
-def sign_lsh_buckets(df: DataFrame, b: int = 8,
-                     emb_col: str = "embedding") -> DataFrame:
-    """Append an integer LSH bucket: bit i set iff dim i >= 0."""
-    bucket = sum((F.when(F.element_at(F.col(emb_col), i + 1) >= 0,
-                         F.lit(1 << i)).otherwise(F.lit(0)) for i in range(b)),
-                 F.lit(0))
-    return df.withColumn("bucket", bucket.cast("int"))
 
 
 def adaptive_bits(n_vectors: int, target_bucket_size: int = 64,

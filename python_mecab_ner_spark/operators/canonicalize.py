@@ -135,8 +135,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
     chains, path-shaped dedup graphs) use
     operators.graph.connected_components_star — O(log n) alternations
     regardless of diameter (q176: diameter-1250 chains, ~a dozen
-    rounds).  For daily edge deltas over an existing labeling, use
-    operators.graph.incremental_components (q175).
+    rounds).
     """
     e = edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
     e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

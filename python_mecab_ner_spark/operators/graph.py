@@ -6,9 +6,12 @@ is COMPUTED, not guessed (SURVEY.md §7.3): a frequency pass counts
 edges per src_id; keys above `head_threshold` x mean get a salt column
 pmod(md5(url), n_salt) so downstream repartition/write spreads each hot
 key over n_salt tasks.  AQE skew-join splitting stays on as the second
-line of defense.
+line of defense.  materialize_graph writes partitioned Parquet.
 
-Writes partitioned Parquet through sources.catalog (Iceberg-gated).
+The rest of the module holds the iterative graph operators the queries
+of `__spark_entry__.py` run (PageRank/PPR, k-hop, k-truss, components,
+SCC, MIS, matching, betweenness, MST, densest peel, ...), each
+value-checked against a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -385,214 +388,10 @@ def neighbor_jaccard(edges: DataFrame, src: str = "src", dst: str = "dst",
                     .cast("bigint").alias("jac_ppm")))
 
 
-def random_walks(edges: DataFrame, walk_len: int = 3,
-                 walks_per_node: int = 1, seed: str = "walk",
-                 src: str = "src", dst: str = "dst") -> DataFrame:
-    """Deterministic DeepWalk-style walk corpus over a directed edge
-    list (pass both directions for undirected): walks_per_node walks
-    of walk_len steps from every node, the training-sequence generator
-    for node2vec/DeepWalk-family KG embeddings.
-
-    The RNG is replaced by the house content-hash discipline: step t
-    from node v in walk (start, wid) follows neighbor number
-    md5(seed:start:wid:t:v) mod outdeg(v) of v's id-ordered adjacency
-    list.  Same walk corpus at any cluster size, on re-runs, and in
-    the unrolled DuckDB oracle — a seeded RNG gives none of those.
-
-    Scale shape: the adjacency list is indexed ONCE with a per-node
-    row_number (the only sort; partition = one node's out-edges, so
-    skew equals max out-degree — cap hubs upstream if that bites),
-    then each step is a broadcast-free pair of shuffled joins keyed
-    on the current node.  The frontier is localCheckpointed per step:
-    walk state is (start, wid, node)-thin, while the UNROLLED lineage
-    would replicate the adjacency plan per step (the kg_entity_rank
-    driver-OOM lesson).  Sinks end their walks early, exactly like
-    the reference random-walk corpus generators.
-
-    Returns (start, wid, step, node) — step 0 is the start row."""
-    adj = (edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-           .where(F.col("node") != F.col("nbr")).distinct())
-    w = Window.partitionBy("node").orderBy("nbr")
-    adjidx = (adj.withColumn("_i", F.row_number().over(w) - 1)
-              .localCheckpoint())
-    deg = adjidx.groupBy("node").agg(F.count("*").alias("_deg"))
-    nodes = (edges.select(F.col(src).alias("node"))
-             .unionByName(edges.select(F.col(dst).alias("node")))
-             .distinct())
-    frontier = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.array(*[F.lit(i) for i in range(walks_per_node)]))
-        .alias("wid"),
-        F.col("node"))
-    out = frontier.withColumn("step", F.lit(0))
-    for step in range(1, walk_len + 1):
-        pick = F.pmod(
-            md5_int(F.concat_ws(
-                ":", F.lit(seed), F.col("start").cast("string"),
-                F.col("wid").cast("string"), F.lit(str(step)),
-                F.col("node").cast("string"))),
-            F.col("_deg"))
-        # NOTE measured dead end (sf0.1, fresh sessions, A/B): forcing
-        # F.broadcast(deg) here DOUBLES the walk time (9.3/6.3s ->
-        # 17.9/59s warm) — the hint rebuilds the driver-side broadcast
-        # from deg's full lineage once per step, while the plain join
-        # lets AQE reuse the step's existing exchanges.  Leave the
-        # join strategy to AQE.
-        frontier = (frontier.join(deg, "node")
-                    .withColumn("_pick", pick)
-                    .join(adjidx.select("node",
-                                        F.col("_i").alias("_pick"),
-                                        F.col("nbr").alias("_next")),
-                          ["node", "_pick"])
-                    .select("start", "wid", F.col("_next").alias("node"))
-                    .localCheckpoint())
-        out = out.unionByName(frontier.withColumn("step", F.lit(step)))
-    return out.select(F.col("start").cast("bigint").alias("start"),
-                      F.col("wid").cast("int").alias("wid"),
-                      F.col("step").cast("int").alias("step"),
-                      F.col("node").cast("bigint").alias("node"))
-
-
-def kcore(edges: DataFrame, k: int = 2, iters: int = 8,
-          src: str = "src", dst: str = "dst") -> DataFrame:
-    """k-core decomposition by iterative peeling over an undirected
-    edge list: drop every node of degree < k, re-count, repeat — the
-    standard spam/boilerplate-host filter on web graphs (low-core
-    nodes are leaves and tendrils; the dense core is where real
-    communities and authority live).
-
-    Fixed iteration count so the unrolled DuckDB oracle is bit-exact;
-    run with iters >= the peel depth (each round strictly shrinks the
-    node set or the result is already the fixpoint, so convergence is
-    detectable by an unchanged count — at production scale loop until
-    the removed-count accumulator reads 0 instead of a fixed bound).
-
-    Each round is ONE combinable degree aggregate + two semi-joins;
-    the surviving edge list is localCheckpointed per round (iterative-
-    operator house rule: unrolled lineage replicates the input plan
-    per iteration and planning alone can OOM the driver).
-
-    Returns (node, core_deg) for nodes surviving the k-core."""
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
-                      F.greatest(F.col(src), F.col(dst)).alias("b"))
-         .where(F.col("a") != F.col("b")).distinct())
-    e = (e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-         .unionByName(e.select(F.col("b").alias("node"),
-                               F.col("a").alias("nbr")))
-         .localCheckpoint())
-    for _ in range(iters):
-        deg = e.groupBy("node").agg(F.count("*").alias("_d"))
-        keep = deg.where(F.col("_d") >= k).select("node")
-        e = (e.join(keep, "node", "left_semi")
-             .join(keep.withColumnRenamed("node", "nbr"), "nbr",
-                   "left_semi")
-             .localCheckpoint())
-    return e.groupBy("node").agg(
-        F.count("*").cast("bigint").alias("core_deg"))
-
-
-def adamic_adar(edges: DataFrame, src: str = "src", dst: str = "dst",
-                min_common: int = 2,
-                max_center_degree: int | None = None,
-                scale: int = 1_000_000) -> DataFrame:
-    """Adamic-Adar link prediction over an undirected edge list: for
-    every node pair sharing >= min_common neighbors, the sum over the
-    COMMON neighbors z of scale div bit_length(deg(z)) — the integer
-    twin of the classic 1/log(deg(z)) weighting (rare shared neighbors
-    count more than hubs), the second standard KG link-prediction /
-    entity-merge score next to neighbor_jaccard.
-
-    Columns: (n1, n2, common, aa_micro) with n1 < n2.  bit_length via
-    length(bin(x)) — the same integer-log idiom as the q38 idf — so
-    the DuckDB oracle hash-matches exactly; a float 1/ln(d) would not.
-
-    Scale shape is neighbor_jaccard's wedge join with the weight
-    riding the wedge: pairs are generated ONLY through shared
-    neighbors, the per-center weight joins in from the broadcast
-    degree dimension BEFORE the self-join (one wedge row carries its
-    center's weight, so the pair aggregate is a single combinable
-    sum), and hub centers above max_center_degree are dropped before
-    the quadratic step — exactly the hubs whose AA weight is smallest,
-    making the cap a principled truncation, not just a safety valve."""
-    adj = (edges.select(F.least(F.col(src), F.col(dst)).alias("node"),
-                        F.greatest(F.col(src), F.col(dst)).alias("nbr"))
-           .where(F.col("node") != F.col("nbr")))
-    adj = (adj.unionByName(adj.select(F.col("nbr").alias("node"),
-                                      F.col("node").alias("nbr")))
-           .distinct())
-    deg = adj.groupBy("node").agg(F.count("*").alias("deg"))
-    # a center needs >= 2 leaves to make a wedge, so deg >= 2 and
-    # bit_length(deg) >= 2 on every surviving row — no division hazard
-    cdeg = deg.select(F.col("node").alias("center"),
-                      F.floor(F.lit(scale)
-                              / F.length(F.bin(F.col("deg"))))
-                      .cast("bigint").alias("aa_w"),
-                      F.col("deg").alias("cdeg"))
-    if max_center_degree is not None:
-        cdeg = cdeg.where(F.col("cdeg") <= max_center_degree)
-    centers = (adj.select(F.col("nbr").alias("center"),
-                          F.col("node").alias("leaf"))
-               .join(F.broadcast(cdeg.select("center", "aa_w")), "center"))
-    a, b = centers.alias("a"), centers.alias("b")
-    return (a.join(b, (F.col("a.center") == F.col("b.center"))
-                   & (F.col("a.leaf") < F.col("b.leaf")))
-            .groupBy(F.col("a.leaf").alias("n1"),
-                     F.col("b.leaf").alias("n2"))
-            .agg(F.count("*").alias("common"),
-                 F.sum(F.col("a.aa_w")).alias("aa_micro"))
-            .where(F.col("common") >= min_common)
-            .select(F.col("n1").cast("bigint").alias("n1"),
-                    F.col("n2").cast("bigint").alias("n2"),
-                    F.col("common").cast("bigint").alias("common"),
-                    F.col("aa_micro").cast("bigint").alias("aa_micro")))
-
-
-def triangle_counts(edges: DataFrame,
-                    src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per-node triangle participation count over an undirected edge
-    list (self-loops and duplicate/reverse edges tolerated): the KG
-    cohesion statistic behind clustering coefficients and community
-    seeds.
-
-    Degree-oriented wedge enumeration (the standard distributed
-    algorithm): canonical a<b edges are re-oriented from the
-    (degree, id)-SMALLER endpoint to the larger, wedges are built by
-    joining the oriented list with itself on the wedge center, and a
-    final join against the canonical edge set closes each wedge.
-    Orientation bounds the wedge fan-out per center by the MINIMUM
-    endpoint degree, so a head node of degree d contributes O(d)
-    wedges instead of O(d^2) — the skew lever that makes the join
-    survive power-law graphs at 100 TB.  Per-node counts are
-    orientation-independent (each triangle contributes exactly once
-    to each of its three corners).
-
-    MEASURED DEAD END (round 4, do not redo): persisting the
-    canonical edge set e (and adamic_adar's adj) to stop the apparent
-    "4x upstream replay" makes these operators 3-5x SLOWER (q52 18 ->
-    67 s, q91 4.2 -> 22 s at sf0.1): the replayed subtrees end in
-    IDENTICAL shuffle exchanges, which Spark already deduplicates via
-    ReusedExchange, while an InMemoryRelation blocks that reuse AND
-    hides stats from AQE's join planning.  Persist pays off only when
-    the repeated subtrees are NOT exchange-identical (domain_range's
-    two modal sides, q100's signature tables) — measure, never
-    pattern-match, before caching."""
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
-                      F.greatest(F.col(src), F.col(dst)).alias("b"))
-         .where(F.col("a") != F.col("b"))
-         .distinct())
-    closed = _closed_triangles(e)
-    corners = (closed.select(F.col("x").alias("node"))
-               .unionByName(closed.select(F.col("y").alias("node")))
-               .unionByName(closed.select(F.col("z").alias("node"))))
-    return corners.groupBy("node").agg(
-        F.count("*").cast("bigint").alias("n_tri"))
-
-
 def _closed_triangles(e: DataFrame) -> DataFrame:
     """One (x, y, z) row per triangle of a canonical (a < b, distinct)
-    edge list — the degree-oriented wedge enumeration shared by
-    triangle_counts (corners) and _edge_support / ktruss (sides), so
-    an orientation or join-strategy fix lands in both.
+    edge list — the degree-oriented wedge enumeration behind
+    _edge_support / ktruss (each triangle's sides).
 
     Orients each edge from the (deg, id)-smaller endpoint, builds
     wedges by self-joining on the center, and closes them against the
@@ -630,7 +429,7 @@ def _edge_support(e: DataFrame) -> DataFrame:
     fan-out per center by the MIN endpoint degree — the power-law
     survival lever); each closed triangle emits its THREE canonical
     edges instead of its three corners.  Do NOT persist the
-    oriented/wedge subtrees (the triangle_counts measured dead end:
+    oriented/wedge subtrees (a measured dead end:
     they are exchange-identical, ReusedExchange already dedups them
     and InMemoryRelation would block it + AQE stats)."""
     closed = _closed_triangles(e)
@@ -649,10 +448,10 @@ def ktruss(edges: DataFrame, k: int = 4, rounds: int = 3,
     """k-truss peel (Cohen 2008): iteratively delete edges whose
     triangle support among REMAINING edges is < k-2; the surviving
     subgraph is the k-truss — a strictly stronger cohesion filter
-    than the k-core's degree peel (q94): every edge must sit in k-2
+    than a k-core's degree peel: every edge must sit in k-2
     triangles, so star spam hubs (degree-high, triangle-free) are cut
     where k-core keeps them.  Fixed `rounds` to stay bit-exact
-    against the unrolled DuckDB oracle, exactly the q94 contract —
+    against the unrolled DuckDB oracle —
     the peel is monotone (edges only leave), so a fixpoint reached
     before round `rounds` just makes later rounds no-ops (asserted at
     the suite graph in tests).
@@ -684,73 +483,6 @@ def ktruss(edges: DataFrame, k: int = 4, rounds: int = 3,
             .select("a", "b",
                     F.coalesce(F.col("support"), F.lit(0))
                     .cast("bigint").alias("support")))
-
-
-def clustering_coefficient(edges: DataFrame, src: str = "src",
-                           dst: str = "dst",
-                           scale: int = 1_000_000) -> DataFrame:
-    """Per-node local clustering coefficient in integer ppm:
-    cc(v) = 2 * triangles(v) / (deg(v) * (deg(v) - 1)) for deg >= 2
-    (0 otherwise) — the node-level cohesion score used to separate
-    organically-linked hubs (high cc neighborhoods) from spam/link-farm
-    hubs (star-shaped, cc ~ 0) on web host graphs.
-
-    Rides triangle_counts' degree-oriented wedge join unchanged; the
-    coefficient itself is one broadcast-joinable projection over the
-    per-node (deg, n_tri) pair.  2*tri*scale fits 64-bit for any
-    realistic scale; integer floor division keeps the DuckDB oracle
-    bit-exact."""
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
-                      F.greatest(F.col(src), F.col(dst)).alias("b"))
-         .where(F.col("a") != F.col("b"))
-         .distinct())
-    deg = (e.select(F.col("a").alias("node"))
-           .unionByName(e.select(F.col("b").alias("node")))
-           .groupBy("node").agg(F.count("*").cast("bigint").alias("deg")))
-    tri = triangle_counts(e, src="a", dst="b")
-    return (deg.join(tri, "node", "left")
-            .select("node", "deg",
-                    F.coalesce(F.col("n_tri"), F.lit(0))
-                    .cast("bigint").alias("n_tri"))
-            .withColumn(
-                "cc_ppm",
-                F.when(F.col("deg") >= 2,
-                       F.floor(F.lit(2) * F.col("n_tri") * F.lit(scale)
-                               / (F.col("deg") * (F.col("deg") - 1))))
-                .otherwise(F.lit(0)).cast("bigint")))
-
-
-def butterfly_counts(edges: DataFrame, src: str = "src",
-                     dst: str = "dst",
-                     max_center_degree: int | None = None) -> DataFrame:
-    """Per-node butterfly counts over an undirected (typically
-    bipartite) edge list: a butterfly is a 2x2 biclique — the
-    bipartite analogue of the triangle, the cohesion motif behind
-    spam-farm and collusion detection on page<->host / user<->item
-    graphs (two nodes sharing TWO+ common neighbors form
-    C(common, 2) butterflies).
-
-    Rides the neighbor_jaccard wedge machinery: the same-side pair
-    table (n1, n2, common) already counts shared neighbors, so each
-    pair contributes common*(common-1)/2 butterflies to BOTH
-    endpoints — one extra combinable aggregate, no new join.  Exact
-    64-bit integers throughout.  max_center_degree mirrors the wedge
-    hub cap (documented truncation under skew).
-
-    Returns (node, n_bfly) for nodes in >= 1 butterfly."""
-    pairs = neighbor_jaccard(edges, src=src, dst=dst, min_common=2,
-                             max_center_degree=max_center_degree)
-    # C(common, 2) via shift, not float division: common*(common-1)
-    # is even, and a double round-trip loses bits past 2^53
-    contrib = F.shiftright(F.col("common") * (F.col("common") - 1), 1) \
-        .cast("bigint")
-    both = (pairs.select(F.col("n1").alias("node"),
-                         contrib.alias("_b"))
-            .unionByName(pairs.select(F.col("n2").alias("node"),
-                                      contrib.alias("_b"))))
-    return (both.groupBy("node")
-            .agg(F.sum("_b").cast("bigint").alias("n_bfly"))
-            .where(F.col("n_bfly") > 0))
 
 
 def pagerank_weighted_int(edges: DataFrame, iters: int = 3,
@@ -793,150 +525,6 @@ def pagerank_weighted_int(edges: DataFrame, iters: int = 3,
                                 f"div {damping_den}"))
                       .cast("bigint").alias("pr")))
     return pr
-
-
-def edge_diff(old_edges: DataFrame, new_edges: DataFrame,
-              src: str = "src", dst: str = "dst") -> DataFrame:
-    """Snapshot diff between two KG edge sets — the graph analogue of
-    crawl.recrawl_stats and the driver of incremental graph
-    maintenance (only `added` edges need embedding/index updates,
-    `removed` need tombstones, `kept` reuse their lineage
-    partition): per-status distinct-edge counts.
-
-    One union + ONE combinable aggregate keyed by the (src, dst)
-    edge — no join: each side contributes a presence bit and max()
-    merges them, so the full-outer-join formulation's shuffle of two
-    corpus-scale relations collapses into a single hash aggregate
-    (same trick as merge_crawls)."""
-    o = (old_edges.select(F.col(src).alias("src"),
-                          F.col(dst).alias("dst")).distinct()
-         .select("src", "dst", F.lit(1).alias("o"), F.lit(0).alias("n")))
-    n = (new_edges.select(F.col(src).alias("src"),
-                          F.col(dst).alias("dst")).distinct()
-         .select("src", "dst", F.lit(0).alias("o"), F.lit(1).alias("n")))
-    u = (o.unionByName(n).groupBy("src", "dst")
-         .agg(F.max("o").alias("in_old"), F.max("n").alias("in_new")))
-    status = (F.when(F.col("in_old") == 0, "added")
-              .when(F.col("in_new") == 0, "removed")
-              .otherwise("kept"))
-    return (u.select(status.alias("status"))
-            .groupBy("status")
-            .agg(F.count("*").cast("bigint").alias("n_edges")))
-
-
-def negative_samples(edges: DataFrame, k: int = 2,
-                     src: str = "src", dst: str = "dst") -> DataFrame:
-    """Deterministic corrupted-tail negative sampling — the training-
-    pair generator for KG-embedding objectives (TransE-family): for
-    every true (src, dst) edge emit up to k (src, dst_neg, i) rows
-    where dst_neg is a content-hash-chosen node, with TRUE edges
-    filtered out (no false negatives).
-
-    Determinism contract: dst_neg = node at dense rank
-    md5(src:dst:i) % n_nodes in the sorted node dimension — the same
-    sample set on any run, engine, or cluster size (a rand()-based
-    sampler can never be oracle-checked or resumed).  Collisions with
-    a real edge are DROPPED, not resampled, so some edges yield < k
-    negatives (documented; resampling would need data-dependent
-    iteration).  Self-corruptions (dst_neg == src) are kept when not
-    a true edge — TransE scores them like any negative.
-
-    Scale shape: the node dimension gets a dense rank via ONE window
-    over the corpus-bounded node vocabulary (dimension-sized, same
-    caveat as crawl_budget's rank); candidates are edges x k
-    (explode of a k-literal array — narrow), resolved to node ids by
-    a JOIN on the rank key against the node dimension (broadcast —
-    vocabulary-sized), and de-falsed by ONE left-anti join on the
-    true edge set, shuffled on the same (src, dst) key the edge
-    table already carries."""
-    from pyspark.sql import Window
-    from ..functions.hashing import md5_int
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select("dst")).distinct())
-    nodes = nodes.withColumn(
-        "rid", F.row_number().over(Window.orderBy("node")) - 1)
-    n_nodes = nodes.agg(F.count("*").alias("n"))
-    cand = (e.select("src", "dst",
-                     F.explode(F.array(*[F.lit(i) for i in range(k)]))
-                     .alias("i"))
-            .crossJoin(F.broadcast(n_nodes))
-            .select("src", "dst", "i",
-                    F.pmod(md5_int(F.concat_ws(":", F.col("src"),
-                                               F.col("dst"),
-                                               F.col("i"))),
-                           F.col("n")).alias("rid")))
-    cand = (cand.join(F.broadcast(nodes), "rid")
-            .select("src", "dst", "i", F.col("node").alias("dst_neg")))
-    return (cand.join(e.select("src", F.col("dst").alias("dst_neg"))
-                      .distinct(),
-                      ["src", "dst_neg"], "left_anti")
-            .select("src", "dst", "i", "dst_neg"))
-
-
-def hits_int(edges: DataFrame, iters: int = 2, scale: int = 1_000_000,
-             src: str = "src", dst: str = "dst") -> DataFrame:
-    """Integer fixed-point HITS (hubs & authorities) over a directed
-    edge list — the OTHER classic web-link eigenvector pair: a page is
-    a good HUB when it points at good authorities, a good AUTHORITY
-    when good hubs point at it.  For a crawl corpus this separates
-    directory/portal pages (hubs) from canonical content pages
-    (authorities), which PageRank's single score conflates.
-
-        a0(v) = h0(v) = scale
-        h'(u) = sum_{u->v} a(v)        (raw, exact integer sum)
-        a'(v) = sum_{u->v} h'(u)
-        then each vector is renormalized to max = scale:
-        x(v) = (x_raw(v) * scale) div max_u x_raw(u)
-
-    Max-normalization (not L2) keeps every step in 64-bit integer
-    arithmetic: sums and max are order-independent and floor division
-    is deterministic, so the unrolled-SQL oracle hash-matches —
-    float HITS never could.  Overflow bound: raw sums <= deg_max *
-    scale, times scale for the renormalize ~ deg_max * 1e12 << 2^63
-    for any real degree distribution.
-
-    Scale shape per iteration: two join+partial-agg passes (one per
-    vector) plus two tiny single-row max aggregates that Spark
-    collapses to a broadcast.  UNLIKE pagerank_int, the lazy unroll
-    is NOT bounded-linear here: hub depends on auth and auth on the
-    new hub within one iteration, so the un-truncated plan replicates
-    the edge subtree ~4^iters times (measured: a 9k-line formatted
-    plan at iters=2 vs pagerank's 1.2k).  The vectors are therefore
-    localCheckpoint'ed every iteration — same per-round pattern as
-    canonicalize.connected_components — which makes each iteration's
-    plan constant-size."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .localCheckpoint(eager=True))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select("dst")).distinct()
-             .localCheckpoint(eager=True))
-    auth = nodes.withColumn("a", F.lit(scale).cast("bigint"))
-    hub = nodes.withColumn("h", F.lit(scale).cast("bigint"))
-    for _ in range(iters):
-        h_raw = (e.join(auth.withColumnRenamed("node", "dst"), "dst")
-                 .groupBy(F.col("src").alias("node"))
-                 .agg(F.sum("a").alias("hr")))
-        h_max = h_raw.agg(F.max("hr").alias("hmx"))
-        hub = (nodes.join(h_raw, "node", "left")
-               .crossJoin(F.broadcast(h_max))
-               .select("node",
-                       F.expr(f"(coalesce(hr, 0) * {scale}) div hmx")
-                       .cast("bigint").alias("h"))
-               .localCheckpoint(eager=True))
-        a_raw = (e.join(hub.withColumnRenamed("node", "src"), "src")
-                 .groupBy(F.col("dst").alias("node"))
-                 .agg(F.sum("h").alias("ar")))
-        a_max = a_raw.agg(F.max("ar").alias("amx"))
-        auth = (nodes.join(a_raw, "node", "left")
-                .crossJoin(F.broadcast(a_max))
-                .select("node",
-                        F.expr(f"(coalesce(ar, 0) * {scale}) div amx")
-                        .cast("bigint").alias("a"))
-                .localCheckpoint(eager=True))
-    return (auth.join(hub, "node")
-            .select("node", F.col("a").alias("authority"),
-                    F.col("h").alias("hub")))
 
 
 def label_propagation_int(edges: DataFrame, iters: int = 2,
@@ -1170,184 +758,6 @@ def connected_components_star(edges: DataFrame, src: str = "src",
             .select("id", F.coalesce("comp", F.col("id")).alias("comp")))
 
 
-def incremental_components(labels_old: DataFrame, delta_edges: DataFrame,
-                           id_col: str = "id", comp_col: str = "comp",
-                           src: str = "src", dst: str = "dst",
-                           max_rounds: int = 12) -> DataFrame:
-    """Warm-start connected components from a previous run's labels
-    plus an edge DELTA — the daily-graph-delta path (the CC analogue
-    of warm-start PageRank, q159): yesterday's labeling of a 100 TB
-    graph is a materialized table, today's crawl adds edges, and
-    re-propagating min-labels across every settled vertex repays
-    nothing.  Instead, propagation runs on the CONTRACTED graph —
-    each old component collapsed to its label, delta edges mapped to
-    component endpoints — whose size is bounded by the DELTA (touched
-    components), not the corpus; members are relabeled by one
-    broadcast-sized mapping join at the end.
-
-    EXACT equivalence contract (oracled, q175): old labels are
-    min-vertex-id per component (what connected_components emits), so
-    the contracted min-propagation yields precisely the full-recompute
-    labeling of (old ∪ delta) — min over merged old components = min
-    vertex id over the merged vertex set; delta-only vertices enter as
-    their own singleton components.
-
-    Raises RuntimeError if the contracted graph has not reached its
-    fixpoint within max_rounds (the SCC discipline: never return a
-    partially-merged labeling) — its diameter is the number of OLD
-    components chained by the delta, so 12 rounds covers any sane
-    daily delta; raise max_rounds for pathological chains.
-
-    Returns (id, comp) for every vertex of old ∪ delta."""
-    lab = labels_old.select(F.col(id_col).alias("id"),
-                            F.col(comp_col).alias("comp"))
-    de = (delta_edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-          .where(F.col("u") != F.col("v")))
-    # map delta endpoints to old component labels (unknown -> own id)
-    lu = lab.withColumnRenamed("id", "u").withColumnRenamed("comp", "cu")
-    lv = lab.withColumnRenamed("id", "v").withColumnRenamed("comp", "cv")
-    mapped = (de.join(lu, "u", "left").join(lv, "v", "left")
-              .select(F.coalesce("cu", "u").alias("ca"),
-                      F.coalesce("cv", "v").alias("cb")))
-    ce = (mapped.where(F.col("ca") != F.col("cb"))
-          .select("ca", "cb").distinct())
-    sym = (ce.unionByName(ce.select(F.col("cb").alias("ca"),
-                                    F.col("ca").alias("cb")))
-           .distinct().localCheckpoint(eager=True))
-    cl = (sym.select(F.col("ca").alias("cid"))
-          .distinct()
-          .select("cid", F.col("cid").alias("newc"))
-          .localCheckpoint(eager=True))
-    converged = False
-    for _ in range(max_rounds):
-        msgs = (sym.join(cl.withColumnRenamed("cid", "ca"), "ca")
-                .select(F.col("cb").alias("cid"), "newc"))
-        nxt = (cl.unionByName(msgs)
-               .groupBy("cid").agg(F.min("newc").alias("newc"))
-               .localCheckpoint(eager=True))
-        changed = (nxt.alias("n").join(cl.alias("o"), "cid")
-                   .where(F.col("n.newc") != F.col("o.newc"))
-                   .limit(1).count())
-        cl = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            "incremental_components: contracted-graph min-propagation "
-            "did not converge within max_rounds — returning now would "
-            "split a merged component; raise max_rounds")
-    # relabel: old members through the touched-component mapping,
-    # plus delta-only vertices (their singleton 'component' is the id)
-    m = cl.withColumnRenamed("cid", "comp")
-    old_out = (lab.join(m, "comp", "left")
-               .select("id", F.coalesce("newc", "comp").alias("comp")))
-    dv = (de.select(F.col("u").alias("id"))
-          .unionByName(de.select(F.col("v").alias("id")))
-          .distinct()
-          .join(lab.select("id"), "id", "left_anti"))
-    new_out = (dv.join(m.withColumnRenamed("comp", "id"), "id", "left")
-               .select("id", F.coalesce("newc", "id").alias("comp")))
-    return old_out.unionByName(new_out)
-
-
-def resolve_redirects(redirects: DataFrame, src_col: str = "src",
-                      dst_col: str = "dst",
-                      rounds: int = 6) -> DataFrame:
-    """Redirect/alias-chain resolution by pointer doubling: given a
-    FUNCTIONAL edge set (each src has exactly one redirect target —
-    the shape of wiki redirect dumps, URL-shortener tables, and the
-    alias maps entity canonicalization emits), flatten every chain to
-    its terminal canonical node.  The standard log-rounds trick:
-    each round composes the map with itself (ptr[u] <- ptr[ptr[u]]),
-    so `rounds` rounds resolve chains up to 2^rounds deep — 6 rounds
-    cover depth 64, vs 64 sequential joins for naive following.
-
-    Returns (src, canonical, hops, resolved): resolved = 0 marks
-    nodes whose pointer still lands on a redirect after 2^rounds
-    compositions — a cycle (a<->b redirect vandalism) or an
-    over-deep chain; `canonical` is then the position after exactly
-    2^rounds steps (deterministic, and what the SQL twin computes).
-    hops = true chain depth for resolved nodes.
-
-    Scale shape: one self-equi-join per round on the current target
-    key — log2(max_depth) shuffles TOTAL, each over the (shrinking-
-    payload) pointer table; localCheckpoint per round keeps the
-    unrolled plan flat (the pagerank_int driver-OOM lesson).  The
-    final canonical-or-not flag is one more join against the src key
-    set.  No window, no driver-side iteration over rows."""
-    ptr = (redirects.select(F.col(src_col).alias("u"),
-                            F.col(dst_col).alias("v"),
-                            F.lit(1).cast("bigint").alias("hops"))
-           .localCheckpoint(eager=True))
-    srcs = ptr.select(F.col("u").alias("_s")).distinct()
-    for _ in range(rounds):
-        nxt = ptr.select(F.col("u").alias("_nu"),
-                         F.col("v").alias("_nv"),
-                         F.col("hops").alias("_nh"))
-        ptr = (ptr.join(nxt, ptr["v"] == nxt["_nu"], "left")
-               .select(F.col("u"),
-                       F.coalesce(F.col("_nv"), F.col("v")).alias("v"),
-                       (F.col("hops")
-                        + F.coalesce(F.col("_nh"), F.lit(0)))
-                       .alias("hops"))
-               .localCheckpoint(eager=True))
-    out = (ptr.join(srcs, ptr["v"] == srcs["_s"], "left")
-           .select(F.col("u").alias("src"),
-                   F.col("v").alias("canonical"),
-                   F.col("hops").cast("bigint").alias("hops"),
-                   F.col("_s").isNull().cast("int").alias("resolved")))
-    return out
-
-
-def graph_moments(edges: DataFrame, src_col: str = "src",
-                  dst_col: str = "dst") -> DataFrame:
-    """One-row structural sheet of a directed graph: edge count,
-    reciprocity, and the exact integer moments of the per-edge
-    (outdeg(src), indeg(dst)) degree pairing — the inputs to degree
-    assortativity (Newman 2002).  Pearson r is a float RATIO of these
-    integer moments, so the sheet stays hash-exact cross-engine and
-    the analyst divides offline:
-
-        r = (n*Sxy - Sx*Sy) / sqrt((n*Sx2 - Sx^2) * (n*Sy2 - Sy^2))
-
-    reciprocity_ppm = 1e6 * |{(u,v) : (v,u) also an edge}| div n_edges
-    (directed count — a fully symmetric graph scores 1e6).  Self-loops
-    count as their own reverse by this definition.
-
-    Scale shape: edges dedup once (persisted — four consumers:
-    two degree aggregates, the moments join, the reciprocity join);
-    degrees are node-keyed combinable aggregates joined back on the
-    edge endpoints; reciprocity is the reversed-pair hash join
-    co-partitioned on the pair key (same shape as
-    ontology.inverse_predicates, never all-pairs).  Output is ONE row.
-    """
-    e = (edges.select(F.col(src_col).alias("src"),
-                      F.col(dst_col).alias("dst"))
-         .distinct().persist())
-    out_deg = e.groupBy("src").agg(F.count("*").alias("xd"))
-    in_deg = e.groupBy("dst").agg(F.count("*").alias("yd"))
-    m = (e.join(out_deg, "src").join(in_deg, "dst")
-         .agg(F.count("*").cast("bigint").alias("n_edges"),
-              F.sum("xd").cast("bigint").alias("sum_x"),
-              F.sum("yd").cast("bigint").alias("sum_y"),
-              F.sum(F.col("xd") * F.col("yd")).cast("bigint")
-              .alias("sum_xy"),
-              F.sum(F.col("xd") * F.col("xd")).cast("bigint")
-              .alias("sum_x2"),
-              F.sum(F.col("yd") * F.col("yd")).cast("bigint")
-              .alias("sum_y2")))
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    recip = (e.join(rev, ["src", "dst"])
-             .agg(F.count("*").cast("bigint").alias("recip_edges")))
-    out = (m.crossJoin(F.broadcast(recip))
-           .withColumn("recip_ppm",
-                       F.expr("(recip_edges * 1000000) div n_edges")
-                       .cast("bigint")))
-    out.unpersist_input = e.unpersist
-    return out
-
-
 def modularity_ppm(edges: DataFrame, communities: DataFrame,
                    src: str = "src", dst: str = "dst",
                    weight: str | None = None,
@@ -1472,57 +882,6 @@ def edge_cut_audit(edges: DataFrame, layouts: dict,
     for o in outs[1:]:
         out = out.unionByName(o)
     return out
-
-
-def harmonic_centrality(edges: DataFrame, radius: int = 2,
-                        roots: DataFrame | None = None,
-                        src: str = "src", dst: str = "dst",
-                        scale: int = 1000) -> DataFrame:
-    """Exact bounded-radius harmonic centrality (Boldi & Vigna 2014):
-    for each root, sum of 1/d over nodes at shortest-path distance
-    d <= radius, as the integer sum of (scale div d) — cross-engine
-    exact, so the unrolled-SQL oracle can hash-match it (unlike the
-    HyperBall estimate in `hyperball`, which is the sketch path for
-    unbounded radius at 100 TB; this is the exact path for small
-    radii / audit subsets).
-
-    ``roots`` (optional one-column "node" DataFrame) restricts which
-    sources are expanded — at scale you audit a sampled root set, not
-    all nodes; the frontier join filters to those roots BEFORE the
-    first expansion, so cost is O(|roots| * ball size), not O(V).
-
-    Scale shape per round: frontier-at-distance-(k-1) joins edges on
-    the frontier's endpoint (thin, shrinking key), LEFT ANTI against
-    the reached set to keep only first visits, localCheckpoint each
-    round (the pagerank_int lineage lesson).  Output: one row per
-    root, (root, n_reached, harmonic_milli).
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")) \
-        .distinct()
-    first = e.select(F.col("src").alias("root"),
-                     F.col("dst").alias("v"))
-    if roots is not None:
-        first = first.join(
-            F.broadcast(roots.select(F.col("node").alias("root"))),
-            "root")
-    reached = (first.where(F.col("v") != F.col("root"))
-               .withColumn("d", F.lit(1)).localCheckpoint())
-    frontier = reached
-    for k in range(2, radius + 1):
-        nxt = (frontier.join(
-            e.withColumnRenamed("src", "v"), "v")
-            .select("root", F.col("dst").alias("v"))
-            .where(F.col("v") != F.col("root"))
-            .distinct()
-            .join(reached.select("root", "v"), ["root", "v"],
-                  "left_anti")
-            .withColumn("d", F.lit(k)).localCheckpoint())
-        reached = reached.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return (reached.groupBy("root")
-            .agg(F.count("*").cast("bigint").alias("n_reached"),
-                 F.sum(F.expr(f"{scale} div d")).cast("bigint")
-                 .alias("harmonic_milli")))
 
 
 def _wl_neighbor_strings(e: DataFrame, lab: DataFrame,
@@ -1847,53 +1206,6 @@ def maximal_independent_set(edges: DataFrame, src: str = "src",
     return out
 
 
-def bipartiteness_audit(edges: DataFrame, src: str = "src",
-                        dst: str = "dst",
-                        max_rounds: int = 30) -> DataFrame:
-    """Per-component bipartiteness via the DOUBLE COVER: replace each
-    undirected edge {u, v} with {u+, v-} and {u-, v+} (node parities
-    encoded as 2*id / 2*id+1) and run connected components on the
-    cover — a component is bipartite iff its cover splits into TWO
-    components (the two sides), while any odd cycle fuses them into
-    one.  This turns odd-cycle detection — naively a BFS-parity
-    problem, diameter-bound and unrunnable on a 100 TB web graph —
-    into two O(log n)-round star-CC jobs (connected_components_star),
-    inheriting their convergence signature and
-    raise-on-round-exhaustion contract.  Web use: bipartite-ish link
-    structures (directory/forum mirrors, some link farms) behave
-    pathologically under co-citation and community analyses; this is
-    the audit that flags which components those are.
-
-    Returns one row per original component:
-    (comp, n_nodes, bipartite) with bipartite 1/0.
-
-    Scale shape: exactly two star-CC runs (the cover doubles edges,
-    same O(log n) alternations) + one node-keyed join + one
-    combinable per-component aggregate (countDistinct over a
-    two-value cover-component key)."""
-    e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-         .where(F.col("a") != F.col("b")))
-    cc = connected_components_star(e, src="a", dst="b",
-                                   max_rounds=max_rounds)
-    cover = (e.select((F.col("a") * 2).alias("src"),
-                      (F.col("b") * 2 + 1).alias("dst"))
-             .unionByName(e.select((F.col("a") * 2 + 1).alias("src"),
-                                   (F.col("b") * 2).alias("dst"))))
-    cc2 = connected_components_star(cover, max_rounds=max_rounds)
-    # attach both cover parities of every node to its original comp
-    plus = cc.select("id", "comp", (F.col("id") * 2).alias("cid"))
-    minus = cc.select("id", "comp", (F.col("id") * 2 + 1).alias("cid"))
-    m = (plus.unionByName(minus)
-         .join(cc2.select(F.col("id").alias("cid"),
-                          F.col("comp").alias("comp2")), "cid"))
-    return (m.groupBy("comp")
-            .agg(F.countDistinct("id").cast("bigint").alias("n_nodes"),
-                 F.countDistinct("comp2").alias("nc"))
-            .select("comp", "n_nodes",
-                    F.when(F.col("nc") == 2, 1).otherwise(0)
-                    .cast("int").alias("bipartite")))
-
-
 def maximal_matching(edges: DataFrame, src: str = "src",
                      dst: str = "dst",
                      max_rounds: int = 12) -> DataFrame:
@@ -1976,105 +1288,6 @@ def maximal_matching(edges: DataFrame, src: str = "src",
     for p in rounds[1:]:
         out = out.unionByName(p)
     return out
-
-
-def dag_layers(edges: DataFrame, child: str = "child",
-               parent: str = "parent", max_rounds: int = 32,
-               count_ancestors: bool = True) -> DataFrame:
-    """Taxonomy layering + ancestor closure over a DAG of
-    child -> parent edges (the is-a graph a Hearst/WebIsA harvest or
-    a category rollup produces): layer(v) = length of the LONGEST
-    upward path from v to any root (parentless node), computed by
-    Kahn peeling — round r removes exactly the nodes whose every
-    parent was already peeled, so roots land in layer 0 and a node
-    lands one past its deepest parent.  Rounds = taxonomy depth + 1
-    (single digits for real taxonomies), each round one anti-join +
-    one zero-out-degree test; peeled/remaining sets are
-    localCheckpoint'ed per round (iterative-operator house rule).
-
-    A CYCLE never peels: if active nodes remain after max_rounds
-    (or a round peels nothing), raises RuntimeError instead of
-    returning partial layers — is-a cycles are harvest noise that
-    must surface, not be silently layered (the SCC/MIS discipline).
-
-    count_ancestors additionally computes |ancestors(v)| — the
-    transitive-closure row count per node, distinct-counted so
-    reconvergent DAG paths (a node reaching the same ancestor two
-    ways) count once.  Frontier expansion to fixpoint with the seen
-    set anti-join (khop discipline), depth-bound by the same
-    max_rounds.  Scale note: the closure PAIR set is O(n x depth x
-    branching) — for layering alone pass count_ancestors=False,
-    which keeps everything node-sized.
-
-    Returns (node, layer, n_ancestors) — n_ancestors -1 when
-    count_ancestors=False."""
-    e = (edges.select(F.col(child).alias("c"), F.col(parent).alias("p"))
-         .where(F.col("c") != F.col("p"))
-         .distinct()
-         .localCheckpoint(eager=True))
-    nodes = (e.select(F.col("c").alias("node"))
-             .unionByName(e.select(F.col("p").alias("node")))
-             .distinct())
-    act = nodes.localCheckpoint(eager=True)   # not yet layered
-    rem = e                                   # edges among active nodes
-    layers: list[DataFrame] = []
-    r = 0
-    while r <= max_rounds:
-        if act.limit(1).count() == 0:
-            break
-        # peel: active nodes with no remaining parent edge
-        peel = (act.join(rem.select(F.col("c").alias("node")).distinct(),
-                         "node", "left_anti")
-                .localCheckpoint(eager=True))
-        if peel.limit(1).count() == 0:
-            raise RuntimeError(
-                "dag_layers: no parentless node among remaining — "
-                "the input has a cycle")
-        layers.append(
-            peel.select("node", F.lit(r).cast("int").alias("layer")))
-        act = act.join(peel, "node", "left_anti").localCheckpoint(eager=True)
-        rem = (rem.join(peel.select(F.col("node").alias("p")), "p",
-                        "left_anti")
-               .localCheckpoint(eager=True))
-        r += 1
-    if act.limit(1).count() != 0:
-        raise RuntimeError(
-            "dag_layers: max_rounds exhausted with nodes still "
-            "unlayered — deeper taxonomy than max_rounds or a cycle")
-    if not layers:  # edgeless input: no nodes, same schema
-        return act.select("node", F.lit(0).cast("int").alias("layer"),
-                          F.lit(0).cast("bigint").alias("n_ancestors"))
-    lay = layers[0]
-    for p in layers[1:]:
-        lay = lay.unionByName(p)
-    if not count_ancestors:
-        return lay.select("node", "layer",
-                          F.lit(-1).cast("bigint").alias("n_ancestors"))
-    # ancestor closure: frontier expansion with distinct + seen anti-join
-    seen = e.select(F.col("c").alias("node"), F.col("p").alias("anc")) \
-        .localCheckpoint(eager=True)
-    frontier = seen
-    for _ in range(max_rounds):
-        if frontier.limit(1).count() == 0:
-            break
-        nxt = (frontier.join(e.select(F.col("c").alias("anc"),
-                                      F.col("p").alias("anc2")), "anc")
-               .select("node", F.col("anc2").alias("anc"))
-               .distinct()
-               .join(seen, ["node", "anc"], "left_anti")
-               .localCheckpoint(eager=True))
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    if frontier.limit(1).count() != 0:
-        raise RuntimeError(
-            "dag_layers: ancestor closure did not reach fixpoint in "
-            "max_rounds")
-    cnt = seen.groupBy("node").agg(
-        F.countDistinct("anc").cast("bigint").alias("n_ancestors"))
-    return (lay.join(cnt, "node", "left")
-            .select("node", "layer",
-                    F.coalesce(F.col("n_ancestors"), F.lit(0))
-                    .cast("bigint").alias("n_ancestors")))
 
 
 def betweenness_sampled(edges: DataFrame, roots: DataFrame,
@@ -2163,60 +1376,6 @@ def betweenness_sampled(edges: DataFrame, roots: DataFrame,
     return (alld.groupBy(F.col("v").alias("node"))
             .agg(F.count("*").cast("bigint").alias("n_roots"),
                  F.sum("delta").cast("bigint").alias("bw_scaled")))
-
-
-def sssp_int(edges: DataFrame, sources: DataFrame,
-             max_rounds: int = 15, src: str = "src", dst: str = "dst",
-             weight: str = "w", node: str = "node") -> DataFrame:
-    """Multi-source single-shortest-path with integer edge weights
-    (distributed Bellman-Ford): dist(v) = min over seed set of the
-    cheapest weighted path — the crawl-latency / hop-cost distance a
-    scheduler runs from its seed hosts, and the weighted complement
-    of harmonic_centrality's unit-BFS.  Per round, relax every edge
-    out of the current table and keep the per-node min of {old
-    distance} ∪ {predecessor distance + weight}:
-
-        d_k(v) = min(d_{k-1}(v), min over (u,v,w): d_{k-1}(u) + w)
-
-    — one join + one combinable min per round, monotone
-    non-increasing, localCheckpoint'ed (iterative house rule).
-    Rounds needed = longest shortest path in EDGE COUNT, so
-    negative-free weights converge within the unweighted diameter;
-    raises RuntimeError if the table still changes after max_rounds
-    (the SCC/MIS discipline — a truncated Bellman-Ford silently
-    overstates distances).  The oracle unrolls the same recurrence;
-    rounds past the fixpoint are no-ops, so a fixed shared budget
-    hash-matches.
-
-    Returns (node, dist) for every node reachable from the seed set
-    (seeds at 0)."""
-    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
-                      F.col(weight).cast("bigint").alias("w"))
-         .where(F.col("src") != F.col("dst"))
-         .groupBy("src", "dst").agg(F.min("w").alias("w"))
-         .localCheckpoint(eager=True))
-    dist = (sources.select(F.col(node).alias("node")).distinct()
-            .select("node", F.lit(0).cast("bigint").alias("dist"))
-            .localCheckpoint(eager=True))
-    for _r in range(max_rounds):
-        relax = (dist.join(e.withColumnRenamed("src", "node"), "node")
-                 .select(F.col("dst").alias("node"),
-                         (F.col("dist") + F.col("w")).alias("dist")))
-        nxt = (dist.unionByName(relax)
-               .groupBy("node").agg(F.min("dist").alias("dist"))
-               .localCheckpoint(eager=True))
-        # converged when no node's distance improved and no new node
-        changed = (nxt.join(dist.withColumnRenamed("dist", "old"),
-                            "node", "left")
-                   .where(F.col("old").isNull()
-                          | (F.col("dist") < F.col("old")))
-                   .limit(1).count())
-        dist = nxt
-        if changed == 0:
-            return dist
-    raise RuntimeError(
-        "sssp_int: still relaxing after max_rounds — raise max_rounds "
-        "(longest shortest path exceeds the budget)")
 
 
 def boruvka_mst(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -2329,7 +1488,7 @@ def densest_subgraph_peel(edges: DataFrame, src: str = "src",
     2(1+eps)-approximate densest subgraph.  The web-graph
     spam-farm / link-exchange detector (a dense co-citation core
     peels last), and the dense-community complement of k-core's
-    fixed-threshold peel (q94: fixed k; this: the threshold tracks
+    fixed-threshold peel (there a fixed k; here the threshold tracks
     the surviving graph's own density).
 
     All arithmetic is exact int64 (the house cross-engine rule):
@@ -2384,143 +1543,6 @@ def densest_subgraph_peel(edges: DataFrame, src: str = "src",
              "density_ppm bigint, is_best int")
 
 
-def dag_transitive_reduce(edges: DataFrame, child: str = "child",
-                          parent: str = "parent",
-                          max_rounds: int = 12) -> DataFrame:
-    """Exact transitive reduction marking for a DAG: an is-a edge is
-    REDUNDANT iff its parent is also reachable through a path of two
-    or more edges — the standard cleanup after a Hearst-style
-    hypernym harvest (q186) or a taxonomy merge, where "part is-a
-    root" shortcuts coexist with the real chain and bloat the
-    closure dag_layers (q187) computes.  Marks rather than drops, so
-    the caller keeps both the cleaned edge set and the audit count.
-
-    Reachability is the bounded-depth closure: extend by one hop per
-    round (frontier join + union-distinct, localCheckpoint'ed per
-    round — iterative house rule) until the pair count stops
-    growing.  A DAG converges within its depth; a cycle ALSO
-    converges (its closure is finite), so cycle detection is
-    explicit: any self-reachable pair in the converged closure
-    raises (the dag_layers never-mislabel discipline — on a cyclic
-    input every cycle edge would be spuriously "redundant").
-    Redundant = edge composed with any path, i.e. paths of length
-    >= 2, one extra join.  Closure size is bounded by depth x edges
-    — taxonomy-shaped inputs (shallow, fan-in to a root) stay
-    small; do not run this on a general deep graph.
-
-    Returns (child, parent, redundant int 0/1)."""
-    e = (edges.select(F.col(child).alias("c"), F.col(parent).alias("p"))
-         .where(F.col("c") != F.col("p"))
-         .distinct()
-         .localCheckpoint(eager=True))
-    reach = e
-    prev = reach.count()
-    converged = False
-    for _ in range(max_rounds):
-        ext = (reach.join(e.select(F.col("c").alias("p"),
-                                   F.col("p").alias("p2")), "p")
-               .select("c", F.col("p2").alias("p")))
-        reach = (reach.unionByName(ext).distinct()
-                 .localCheckpoint(eager=True))
-        cur = reach.count()
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            "dag_transitive_reduce: closure still growing after "
-            "max_rounds — depth exceeds the budget")
-    if reach.where(F.col("c") == F.col("p")).limit(1).count() != 0:
-        raise RuntimeError(
-            "dag_transitive_reduce: input contains a cycle — "
-            "reduction on cyclic edges would mark every cycle edge "
-            "redundant; break the cycle upstream (dag_layers locates "
-            "it)")
-    two_plus = (e.select(F.col("c"), F.col("p").alias("mid"))
-                .join(reach.select(F.col("c").alias("mid"),
-                                   F.col("p").alias("far")), "mid")
-                .select("c", F.col("far").alias("p"))
-                .distinct())
-    return (e.join(two_plus.select("c", "p",
-                                   F.lit(1).alias("_r")),
-                   ["c", "p"], "left")
-            .select(F.col("c").alias(child), F.col("p").alias(parent),
-                    F.coalesce("_r", F.lit(0)).cast("int")
-                    .alias("redundant")))
-
-
-def mis_coloring(edges: DataFrame, src: str = "src", dst: str = "dst",
-                 max_colors: int = 8,
-                 mis_rounds: int = 12) -> DataFrame:
-    """Greedy distributed graph coloring by iterated MIS (Luby's
-    reduction): color c = a maximal independent set of the still-
-    uncolored subgraph, repeated until every node is colored — the
-    conflict-free SCHEDULE of a 100 TB maintenance plan (color =
-    wave; no two adjacent entity-merge / partition-compaction jobs
-    run in the same wave; maximal_matching waves pairs, this waves
-    NODES), and the classic O(Delta log n) parallel coloring.  Each
-    per-color MIS is the q177-certified deterministic Luby kernel
-    (md5 priorities, bit-stable trajectory), so the COLOR assignment
-    is a pure function of the edge set.
-
-    Nodes isolated in the remaining subgraph (all neighbors already
-    colored) have no surviving edges, so they join the current color
-    unconditionally — the anti-join complement of the MIS's edge
-    universe.
-
-    Raises RuntimeError when max_colors is exhausted with nodes
-    still uncolored (greedy needs at most Delta+1 colors; budget =
-    the never-truncate discipline), and propagates the inner MIS
-    budget raise.
-
-    Returns (node, color), 1-based colors."""
-    e0 = (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
-                       F.greatest(F.col(src), F.col(dst)).alias("b"))
-          .where(F.col("a") != F.col("b"))
-          .distinct()
-          .localCheckpoint(eager=True))
-    remaining = (e0.select(F.col("a").alias("node"))
-                 .unionByName(e0.select(F.col("b").alias("node")))
-                 .distinct()
-                 .localCheckpoint(eager=True))
-    cur = e0
-    parts: list[DataFrame] = []
-    for c in range(1, max_colors + 1):
-        if remaining.limit(1).count() == 0:
-            break
-        edge_nodes = (cur.select(F.col("a").alias("node"))
-                      .unionByName(cur.select(F.col("b").alias("node")))
-                      .distinct())
-        isolated = remaining.join(edge_nodes, "node", "left_anti")
-        mis = maximal_independent_set(
-            cur.select(F.col("a").alias("src"),
-                       F.col("b").alias("dst")),
-            max_rounds=mis_rounds).select("node")
-        colored = (mis.unionByName(isolated).distinct()
-                   .localCheckpoint(eager=True))
-        parts.append(colored.select(
-            "node", F.lit(c).cast("int").alias("color")))
-        remaining = (remaining.join(colored, "node", "left_anti")
-                     .localCheckpoint(eager=True))
-        cur = (cur.join(colored.select(F.col("node").alias("a")),
-                        "a", "left_anti")
-               .join(colored.select(F.col("node").alias("b")),
-                     "b", "left_anti")
-               .localCheckpoint(eager=True))
-    if remaining.limit(1).count() != 0:
-        raise RuntimeError(
-            "mis_coloring: max_colors exhausted with nodes uncolored "
-            "— raise max_colors (greedy needs at most Delta+1)")
-    if not parts:  # edgeless input: nothing to color
-        return remaining.select(
-            "node", F.lit(0).cast("int").alias("color"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def trust_spam_mass(edges: DataFrame, seeds: list, iters: int = 3,
                     scale: int = 1_000_000,
                     src: str = "src", dst: str = "dst") -> DataFrame:
@@ -2571,224 +1593,3 @@ def trust_spam_mass(edges: DataFrame, seeds: list, iters: int = 3,
     return out
 
 
-def node2vec_walks(edges: DataFrame, walk_len: int = 3,
-                   walks_per_node: int = 1, wp: int = 1, w1: int = 4,
-                   wq: int = 2, seed: str = "n2v",
-                   src: str = "src", dst: str = "dst") -> DataFrame:
-    """Deterministic node2vec walk corpus (Grover & Leskovec 2016):
-    the second-order biased form of random_walks — from node v with
-    previous node u, candidate x is weighted by its distance to u:
-
-        w(x) = wp  if x == u                (return,   1/p)
-               w1  if u->x is an edge       (BFS-ish,  1  )
-               wq  otherwise                (DFS-ish,  1/q)
-
-    integer weights instead of the paper's 1/p, 1, 1/q floats (set
-    wp=1, w1=4, wq=2 for p=4, q=2).  Step 1 is uniform (no previous
-    node), as in the reference implementation.  The RNG is the house
-    content hash: r = md5(seed:start:wid:t:v) mod total_weight walks
-    the candidate list's cumulative weights in id order — the same
-    walk corpus at any cluster size and in the unrolled DuckDB twin.
-
-    Scale shape: per step, one join frontier x adjacency (keyed on
-    the current node), one LEFT join against the edge set keyed on
-    (prev, candidate) for the distance-1 flag, and one per-frontier-
-    row cumulative window (partition size = out-degree — the same
-    hub bound as random_walks' adjacency index; cap hubs upstream).
-    Frontier localCheckpointed per step (the kg_entity_rank lesson).
-    Sinks end walks early.
-
-    Returns (start, wid, step, node), step 0 = the start row."""
-    adj = (edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-           .where(F.col("node") != F.col("nbr")).distinct())
-    w = Window.partitionBy("node").orderBy("nbr")
-    adjidx = (adj.withColumn("_i", F.row_number().over(w) - 1)
-              .localCheckpoint())
-    deg = adjidx.groupBy("node").agg(F.count("*").alias("_deg"))
-    prevadj = adjidx.select(F.col("node").alias("prev"),
-                            F.col("nbr").alias("_cand"),
-                            F.lit(1).alias("_padj"))
-    nodes = (edges.select(F.col(src).alias("node"))
-             .unionByName(edges.select(F.col(dst).alias("node")))
-             .distinct())
-    frontier = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.array(*[F.lit(i) for i in range(walks_per_node)]))
-        .alias("wid"),
-        F.lit(None).cast(nodes.schema["node"].dataType).alias("prev"),
-        F.col("node"))
-    out = frontier.select("start", "wid", F.lit(0).alias("step"),
-                          "node")
-
-    def _r(step):
-        return md5_int(F.concat_ws(
-            ":", F.lit(seed), F.col("start").cast("string"),
-            F.col("wid").cast("string"), F.lit(str(step)),
-            F.col("node").cast("string")))
-    # step 1: uniform over neighbors (no previous node yet)
-    frontier = (frontier.join(deg, "node")
-                .withColumn("_pick", F.pmod(_r(1), F.col("_deg")))
-                .join(adjidx.select("node", F.col("_i").alias("_pick"),
-                                    F.col("nbr").alias("_next")),
-                      ["node", "_pick"])
-                .select("start", "wid", F.col("node").alias("prev"),
-                        F.col("_next").alias("node"))
-                .localCheckpoint())
-    out = out.unionByName(
-        frontier.select("start", "wid", F.lit(1).alias("step"), "node"))
-    for step in range(2, walk_len + 1):
-        cand = (frontier.join(
-            adjidx.select("node", F.col("nbr").alias("_cand"),
-                          "_i"), "node")
-            .join(prevadj, ["prev", "_cand"], "left"))
-        wexpr = (F.when(F.col("_cand") == F.col("prev"), F.lit(wp))
-                 .when(F.col("_padj") == 1, F.lit(w1))
-                 .otherwise(F.lit(wq)).cast("bigint"))
-        pw = Window.partitionBy("start", "wid")
-        cum_w = pw.orderBy("_i").rowsBetween(
-            Window.unboundedPreceding, 0)
-        cand = (cand.withColumn("_w", wexpr)
-                .withColumn("_tw", F.sum("_w").over(pw))
-                .withColumn("_cum", F.sum("_w").over(cum_w))
-                .withColumn("_r", F.pmod(_r(step), F.col("_tw"))))
-        frontier = (cand.where((F.col("_r") >= F.col("_cum")
-                                - F.col("_w"))
-                               & (F.col("_r") < F.col("_cum")))
-                    .select("start", "wid",
-                            F.col("node").alias("prev"),
-                            F.col("_cand").alias("node"))
-                    .localCheckpoint())
-        out = out.unionByName(
-            frontier.select("start", "wid",
-                            F.lit(step).alias("step"), "node"))
-    return out.select(F.col("start").cast("bigint").alias("start"),
-                      F.col("wid").cast("int").alias("wid"),
-                      F.col("step").cast("int").alias("step"),
-                      F.col("node").cast("bigint").alias("node"))
-
-
-def katz_int(edges: DataFrame, iters: int = 3,
-             scale: int = 1_000_000, atten_den: int = 2,
-             src: str = "src", dst: str = "dst") -> DataFrame:
-    """Integer Katz centrality — attenuated walk counts INTO each
-    node:
-
-        k0(v) = scale
-        k'(v) = scale + (sum_{u->v} k(u)) div atten_den
-
-    (beta = 1/atten_den).  The un-normalized member of the rank
-    family: PageRank (q40) divides each node's mass over its
-    out-edges, so a hub's endorsement is diluted; Katz counts every
-    attenuated walk whole, so prolific linkers boost ALL their
-    targets — the right semantics for influence/threat propagation
-    where linking is not a budget.  All 64-bit integer floor
-    arithmetic, bit-exact vs the unrolled-SQL twin.
-
-    Divergence bound: values grow ~ (max_in_degree / atten_den) per
-    iteration; with iters fixed at 3 the bound is
-    scale * (deg_max/atten_den)^3 — int64-safe to deg_max ~ 5e4 at
-    the defaults.  Raise atten_den (stronger attenuation) on
-    heavier-tailed graphs; the operator asserts nothing because the
-    overflow surface depends on the degree sequence the CALLER
-    knows.  Same per-iteration shape as pagerank_int (one join +
-    one combinable groupBy); localCheckpoint deep inputs first."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (e.select(F.col("src").alias("node"))
-             .union(e.select("dst")).distinct())
-    k = nodes.withColumn("k", F.lit(scale).cast("bigint"))
-    for _ in range(iters):
-        inmass = (e.join(k.withColumnRenamed("node", "src"), "src")
-                  .groupBy(F.col("dst").alias("node"))
-                  .agg(F.sum("k").alias("m")))
-        k = (nodes.join(inmass, "node", "left")
-             .select("node",
-                     (F.lit(scale)
-                      + F.expr(f"coalesce(m, 0) div {atten_den}"))
-                     .cast("bigint").alias("k")))
-    return k
-
-
-def robustness_curve(pairs: DataFrame,
-                     removal_pcts: tuple = (0, 10, 20, 40),
-                     a: str = "a", b: str = "b",
-                     max_rounds: int = 20,
-                     rank_by: str = "degree",
-                     salt: str = "rrm:") -> DataFrame:
-    """Targeted-attack robustness curve (Albert, Jeong & Barabasi
-    2000): remove the top pct% highest-degree nodes and measure what
-    survives — largest component, edge count, component count — per
-    removal level.  The infrastructure-audit complement of the
-    centrality family: q40/q218 say who MATTERS, this says how fast
-    the graph SHATTERS when exactly those nodes go (scale-free
-    graphs survive random failure but crumble under hub attack; a
-    flat curve here means the crawl/KG connectivity has no
-    single-host dependency).
-
-    Input is a canonical undirected pair list (a < b).
-    rank_by="degree" is the targeted attack; rank_by="random"
-    removes md5-ranked nodes instead — the Albert-Barabasi CONTRAST:
-    a heavy-tailed graph shrugs off random failure at removal
-    levels where the hub attack has already shattered it (q226
-    runs both on one graph).  Removal
-    rank = (degree desc, node asc) over the NODE DIMENSION (one
-    dimension-sized window, the LPA dense-relabel precedent — never
-    a corpus-sized sort); per level, surviving edges anti-join the
-    removed set on both endpoints and components come from
-    connected_components_star (O(log n) rounds, budget-raising).
-    Nodes whose every neighbor was removed survive as singleton
-    components and are counted as such.
-
-    Scale shape: len(removal_pcts) independent CC runs over
-    shrinking edge sets; each is star-CC's alternation loop with
-    per-round localCheckpoints.  Returns one row per level:
-    (pct_removed, n_removed, n_nodes_left, n_edges_left,
-    largest_cc, n_components)."""
-    e = pairs.select(F.col(a).alias("a"), F.col(b).alias("b")) \
-        .where(F.col(a) != F.col(b)).distinct().localCheckpoint()
-    sym = e.unionByName(e.select(F.col("b").alias("a"),
-                                 F.col("a").alias("b")))
-    deg = sym.groupBy(F.col("a").alias("node")).agg(
-        F.count("*").alias("deg"))
-    if rank_by == "degree":
-        order = [F.col("deg").desc(), F.col("node").asc()]
-    elif rank_by == "random":
-        order = [md5_int(F.col("node").cast("string"), salt=salt),
-                 F.col("node").asc()]
-    else:
-        raise ValueError(f"rank_by must be degree|random: {rank_by}")
-    rk = (deg.withColumn(
-        "rk", F.row_number().over(Window.orderBy(*order)))
-        .localCheckpoint())
-    n = rk.count()
-    out = None
-    for pct in removal_pcts:
-        k = (n * pct) // 100
-        removed = rk.where(F.col("rk") <= k).select("node")
-        kept = (e.join(removed.withColumnRenamed("node", "a"),
-                       "a", "left_anti")
-                .join(removed.withColumnRenamed("node", "b"),
-                      "b", "left_anti"))
-        cc = connected_components_star(
-            kept.select(F.col("a").alias("src"),
-                        F.col("b").alias("dst")),
-            max_rounds=max_rounds)
-        sizes = cc.groupBy("comp").agg(F.count("*").alias("sz"))
-        stats = (sizes.agg(
-            F.coalesce(F.max("sz"), F.lit(0)).alias("mx"),
-            F.count("*").alias("ncc"),
-            F.coalesce(F.sum("sz"), F.lit(0)).alias("in_cc"))
-            .crossJoin(kept.agg(F.count("*").alias("ne"))))
-        row = stats.select(
-            F.lit(pct).cast("int").alias("pct_removed"),
-            F.lit(k).cast("bigint").alias("n_removed"),
-            F.lit(n - k).cast("bigint").alias("n_nodes_left"),
-            F.col("ne").cast("bigint").alias("n_edges_left"),
-            # all-neighbors-removed survivors are singleton comps
-            F.greatest(F.col("mx"),
-                       F.when(F.lit(n - k) > F.col("in_cc"),
-                              F.lit(1)).otherwise(F.lit(0)))
-            .cast("bigint").alias("largest_cc"),
-            (F.col("ncc") + F.lit(n - k) - F.col("in_cc"))
-            .cast("bigint").alias("n_components"))
-        out = row if out is None else out.unionByName(row)
-    return out

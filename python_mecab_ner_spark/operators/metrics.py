@@ -134,72 +134,6 @@ def bcubed_ppm(assign_df: DataFrame, item: str = "item",
                        "(b3_precision_ppm + b3_recall_ppm) END")))
 
 
-def rank_eval(edges: DataFrame, negatives: DataFrame,
-              src: str = "src", dst: str = "dst",
-              ks: tuple = (1, 3, 10)) -> DataFrame:
-    """Link-prediction ranking evaluation (MRR + Hits@k, the KG-
-    embedding eval protocol of Bordes et al. 2013) against the
-    in-degree popularity baseline — the model-free scorer every
-    KG-completion paper reports as the floor.
-
-    For each true edge (src, dst), the candidate set is {dst} plus
-    its sampled negatives (``negatives`` as produced by
-    graph.negative_samples: src, dst, i, dst_neg).  Candidates are
-    scored by in-degree over the TRUE edge set; the true tail's rank
-    is 1 + the number of strictly-better candidates, where better =
-    higher score, or equal score with a smaller node id (the
-    deterministic tie-break — without it MRR is engine-dependent).
-
-    Exact-integer outputs: one row with n_queries, mrr_ppm =
-    (sum over queries of 1e6 div rank) div n_queries (floor at both
-    levels, matching the DuckDB twin), and hits@k counts.
-
-    Scale shape: the in-degree scorer is one aggregate to a node
-    dimension (broadcast); ranks need no window and no per-query
-    sort — ONE groupBy on the (src, dst) query key counting
-    strictly-better candidates, then ONE global aggregate.  Skew
-    follows the true edge key, same layout as the edge table.
-    """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    deg = (e.groupBy(F.col("dst").alias("node"))
-           .agg(F.count("*").cast("bigint").alias("score")))
-    neg = (negatives.select("src", "dst",
-                            F.col("dst_neg").alias("cand"))
-           .join(F.broadcast(deg),
-                 F.col("cand") == F.col("node"), "left")
-           .select("src", "dst", "cand",
-                   F.coalesce("score", F.lit(0)).alias("score")))
-    true_sc = (e.join(F.broadcast(deg),
-                      F.col("dst") == F.col("node"), "left")
-               .select("src", "dst",
-                       F.coalesce("score", F.lit(0))
-                       .alias("true_score")))
-    better = (F.col("score") > F.col("true_score")) | \
-        ((F.col("score") == F.col("true_score"))
-         & (F.col("cand") < F.col("dst")))
-    ranks = (neg.join(true_sc, ["src", "dst"])
-             .groupBy("src", "dst")
-             .agg(F.sum(F.when(better, 1).otherwise(0))
-                  .alias("n_better")))
-    # queries whose negatives were ALL dropped as accidental truths
-    # still rank their tail (rank 1 among {dst} alone): left join
-    ranks = (true_sc.select("src", "dst")
-             .join(ranks, ["src", "dst"], "left")
-             .select("src", "dst",
-                     (F.coalesce("n_better", F.lit(0)) + 1)
-                     .cast("bigint").alias("rank")))
-    aggs = [F.count("*").cast("bigint").alias("n_queries"),
-            F.sum(F.expr("1000000 div rank")).alias("_rr_sum")]
-    for k in ks:
-        aggs.append(F.sum(F.when(F.col("rank") <= k, 1).otherwise(0))
-                    .cast("bigint").alias(f"hits{k}"))
-    return (ranks.agg(*aggs)
-            .select("n_queries",
-                    F.expr("_rr_sum div n_queries").cast("bigint")
-                    .alias("mrr_ppm"),
-                    *[f"hits{k}" for k in ks]))
-
-
 def pair_agreement_ppm(assign_df: DataFrame, item: str = "item",
                        cluster: str = "cluster",
                        gold: str = "gold") -> DataFrame:
@@ -226,7 +160,7 @@ def pair_agreement_ppm(assign_df: DataFrame, item: str = "item",
     beyond that, or read the raw components this row also carries.
     A+B-2E = 0 (both clusterings chance-degenerate) yields ari_ppm
     NULL by SQL division semantics in both engines.  C(x,2) via
-    shiftright (the q104 discipline — never float-halve).
+    shiftright — never float-halve.
 
     Scale shape: three partial-aggregable groupBys + 1-row folds;
     no window, no self-join.  Same input contract as bcubed_ppm

@@ -152,7 +152,7 @@ def rule_mining(triples: DataFrame, min_support: int = 2,
     caps it per (pred, node): a-side rows whose (pred, obj) in-degree
     exceeds the cap and b-side rows whose (pred, subj) out-degree
     exceeds the cap are dropped BEFORE the join (the degree-capped
-    wedge-join pattern from graph.butterfly_counts; at web scale hub
+    wedge-join pattern; at web scale hub
     entities — countries, years — would otherwise square).  The cap
     is part of the rule semantics and must be mirrored by any oracle
     (q150 runs uncapped so the fixture stays cap-free; the cap path

@@ -8,9 +8,7 @@ reference's hand-rolled index loops (SURVEY.md §2.6):
   as a row_number() = 1 window;
 - nearest_join: entity-intent nearest pairing by index distance
   (reference get_matched, mecab_category_storage.py:598-616) as a
-  rank-over-abs-distance join;
-- overlap_dedup: longest-first interval overlap rejection (the SQL
-  form of the masking policy M5) — window-ordered greedy sweep.
+  rank-over-abs-distance join.
 
 All pure DataFrame/SQL: Catalyst plans the shuffles; at scale each
 window partitions by a high-cardinality key (url / user) so no single
@@ -19,7 +17,7 @@ partition grows with corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -71,33 +69,6 @@ def nearest_join(left: DataFrame, right: DataFrame, on: list,
     w = Window.partitionBy(left_id).orderBy(*order)
     return (joined.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
-
-
-def overlap_dedup(df: DataFrame, part_col: str, start_col: str, end_col: str,
-                  priority: list | None = None) -> DataFrame:
-    """Greedy longest-first interval selection per partition key (the
-    masking policy M5 as SQL): accept an interval iff it does not
-    overlap any previously accepted (higher-priority) interval.
-
-    Implemented as a running max of accepted end per priority order —
-    exact for the longest-first policy when intervals are half-open
-    [start, end).  priority defaults to (length desc, start asc).
-    """
-    length = (F.col(end_col) - F.col(start_col)).alias("_len")
-    df = df.withColumn("_len", length)
-    order = priority or [F.col("_len").desc(), F.col(start_col).asc()]
-    w = Window.partitionBy(part_col).orderBy(*order)
-    ranked = df.withColumn("_rn", F.row_number().over(w))
-    # self-join: reject rows overlapping a better-ranked row
-    a, b = ranked.alias("a"), ranked.alias("b")
-    clash = (a.join(b, on=part_col)
-             .where((F.col("b._rn") < F.col("a._rn"))
-                    & (F.col(f"a.{start_col}") < F.col(f"b.{end_col}"))
-                    & (F.col(f"b.{start_col}") < F.col(f"a.{end_col}")))
-             .select(part_col, F.col("a._rn").alias("_rn")).distinct())
-    kept = (ranked.join(clash, on=[part_col, "_rn"], how="left_anti")
-            .drop("_rn", "_len"))
-    return kept
 
 
 def sessionize(df: DataFrame, part_col: str, pos_col: str,

@@ -90,9 +90,9 @@ def temporal_reachability(edges: DataFrame, seeds: DataFrame,
     node is reached at time t' if a path exists whose contact times
     never decrease — the semantics of influence/contagion over a
     temporal contact graph (who COULD have received a fact from the
-    seeds, in causal order), and the temporal complement of
-    sssp_int's weighted distance (there cost accumulates; here time
-    must flow forward).  An edge is usable only from arrival
+    seeds, in causal order), and the temporal complement of a
+    shortest-path distance (there cost accumulates; here time must
+    flow forward).  An edge is usable only from arrival
     onward:  arr(v) = min over edges (u, v, t) with t >= arr(u) of
     t,  seeds at 0.
 

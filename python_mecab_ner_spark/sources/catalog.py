@@ -1,36 +1,14 @@
-"""Thin table catalog: partitioned Parquet now, Iceberg when present.
+"""Table helpers over plain Parquet: bucketed managed tables and
+versioned snapshots.
 
-The north rule targets Iceberg tables; this sandbox has no Iceberg
-runtime jar, so the catalog writes an Iceberg-compatible *layout*
-(partitioned Parquet + explicit schema) and transparently switches to
-real `writeTo(...).using('iceberg')` when the extension is on the
-classpath.  No fake Iceberg metadata is written (SURVEY.md §7.4.6).
+There is no Iceberg runtime here; the snapshot helpers below provide
+the subset of Iceberg's table format the pipeline depends on.  No fake
+Iceberg metadata is written (SURVEY.md §7.4.6).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def iceberg_available(spark) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
-
-
-def write_table(df: DataFrame, path: str, partition_by: list | None = None,
-                mode: str = "overwrite") -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def read_table(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def write_bucketed(df: DataFrame, table: str, bucket_col: str,

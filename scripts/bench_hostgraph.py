@@ -1,6 +1,6 @@
 """Real-host-graph benchmark: the round-4 task of exercising the
-host-level KG operators (weighted PageRank, co-citation, butterflies)
-on the NON-TRIVIAL host graph the 200-host Zipf corpus now emits —
+host-level KG operators (weighted PageRank, co-citation) on the
+NON-TRIVIAL host graph the 200-host Zipf corpus now emits —
 round 3's 5-host pool made these demonstrations structurally tiny.
 
 Synthesizes --docs pages (distributed mapInPandas, same generator as
@@ -45,7 +45,7 @@ def main() -> int:
 
     from python_mecab_ner_spark.functions.text import md5_int
     from python_mecab_ner_spark.operators.graph import (
-        butterfly_counts, neighbor_jaccard, pagerank_weighted_int)
+        neighbor_jaccard, pagerank_weighted_int)
     from python_mecab_ner_spark.operators.weblinks import host_graph
     from python_mecab_ner_spark.sources.corpus import pages_dataframe
 
@@ -70,12 +70,7 @@ def main() -> int:
         return neighbor_jaccard(ids.select("src", "dst"),
                                 min_common=1).count()
 
-    def run_bfly():
-        return butterfly_counts(ids.select("src", "dst"),
-                                max_center_degree=256).count()
-
-    ops = {"pagerank_weighted": run_pr, "cocitation": run_cocite,
-           "butterflies": run_bfly}
+    ops = {"pagerank_weighted": run_pr, "cocitation": run_cocite}
     out = {"docs": args.docs, "cpus": args.cpus, "n_hosts": n_hosts,
            "n_edges": n_edges, "n_links": int(n_links),
            "extract_sec": round(extract_sec, 3), "ops": {}}

@@ -1,9 +1,19 @@
 """Dump formatted physical plans of the headline queries to
 EXPLAIN.md so plan hygiene is reviewable without running Spark.
-Regenerate: python scripts/dump_explain.py"""
+Regenerate: python scripts/dump_explain.py
+
+Spark numbers expression ids (`#N`), exchange ids (`plan_id=N`) and
+RDD ids (`RDD[N]`) across the whole session, so each section renumbers
+them from 1 in order of first appearance.  An RDD's call site names the
+JVM's reflective-call frame, which reads `NativeMethodAccessorImpl.java`
+until the JVM has inflated that method's accessor after enough calls
+and `<unknown>` after, so it is written as one fixed token.  A section
+then reads the same whatever ran before it, and a diff shows only real
+plan changes."""
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -16,7 +26,7 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q36_bio_export", "q40_pagerank", "q43_dup_argmax",
         "q44_evidence_scores", "q46_decontaminate", "q47_pii_redact",
         "q48_line_dedup", "q49_khop", "q50_bigram_pmi",
-        "q51_quantized_ann", "q52_triangles", "q53_surprisal",
+        "q51_quantized_ann", "q53_surprisal",
         "q54_window_dedup", "q55_stratified_sample", "q56_quality_gate",
         "q57_source_profile", "q58_neighbor_jaccard", "q59_bm25",
         "q60_pack_sequences", "q61_semdedup", "q62_ppr", "q63_funnel",
@@ -24,17 +34,18 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q67_chunk_overlap", "q68_weighted_rank", "q69_hash_split",
         "q70_communities", "q72_training_prep", "q77_embedding_gram",
         "q78_source_mix",
-        "q79_hits", "q80_kn_continuation", "q81_crawl_budget",
-        "q82_negative_samples", "q83_fuzzy_alias",
+        "q80_kn_continuation", "q81_crawl_budget", "q83_fuzzy_alias",
         "q84_importance_weights", "q85_burst_days", "q86_length_deciles",
-        "q87_rrf_fusion", "q88_tfidf_cosine_pairs", "q89_edge_diff",
-        "q91_adamic_adar", "q92_recency_decay",
-        "q93_random_walks", "q94_kcore", "q95_quality_hist_gate",
-        "q96_cooccurrence", "q98_walk_skipgrams",
-        "q99_degree_histogram", "q100_incremental_lsh", "q101_kwic", "q102_split_leakage", "q103_weighted_simhash", "q104_butterflies", "q105_source_risk", "q106_source_overlap", "q107_next_word", "q108_eval_sample",
+        "q87_rrf_fusion", "q88_tfidf_cosine_pairs",
+        "q92_recency_decay", "q95_quality_hist_gate",
+        "q96_cooccurrence",
+        "q99_degree_histogram", "q100_incremental_lsh", "q101_kwic",
+        "q102_split_leakage", "q103_weighted_simhash",
+        "q105_source_risk", "q106_source_overlap", "q107_next_word",
+        "q108_eval_sample",
         # round 4
-        "q153_rank_eval", "q154_modularity", "q155_entity_alignment",
-        "q156_type_propagation", "q157_edge_cut", "q158_harmonic",
+        "q154_modularity", "q155_entity_alignment",
+        "q156_type_propagation", "q157_edge_cut",
         "q159_warm_pagerank", "q160_contrastive_pairs",
         "q161_wl_classes", "q163_itemsets", "q164_graph_contraction",
         "q165_epoch_allocation", "q166_robust_outliers",
@@ -42,31 +53,44 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         # round 5
         "q170_symspell_d2", "q171_sorted_neighborhood",
         "q172_prefix_filter_join", "q173_ktruss",
-        "q174_multi_blocking_audit", "q175_incremental_cc",
+        "q174_multi_blocking_audit",
         "q177_mis", "q178_funnel", "q179_cohort_retention",
         "q180_semantic_decon", "q181_event_transitions",
-        "q182_bipartiteness",
         # final round-5 sweep
         "q184_bootstrap_ci", "q185_wilson", "q186_hearst",
-        "q187_taxonomy_layers", "q188_merge_matching", "q189_cusum",
-        "q190_betweenness", "q191_sssp", "q192_stitch",
+        "q188_merge_matching", "q189_cusum",
+        "q190_betweenness", "q192_stitch",
         "q193_coverage_selection", "q194_kcenter",
         "q195_url_templates", "q196_rake",
         # round-5 continuation
         "q197_boruvka_mst", "q198_densest", "q199_k_anonymity",
-        "q200_pareto", "q201_taxonomy_reduce", "q202_good_turing",
-        "q203_jsonl_ledger", "q205_coloring",
+        "q200_pareto", "q202_good_turing",
+        "q203_jsonl_ledger",
         "q206_temporal_reach", "q207_interval_join",
         "q208_scd2_history",
         # post-closeout
         "q209_textrank", "q210_zorder_layout",
         "q212_spam_mass", "q213_rand_ari", "q215_cdc_dedup",
-        "q217_node2vec", "q218_katz",
         "q220_reshard", "q221_postings_gaps",
         "q222_class_terms", "q223_neyman",
-        "q224_seasonal_outliers", "q225_robustness",
-        "q226_attack_vs_failure", "q227_lsh_plan",
+        "q224_seasonal_outliers", "q227_lsh_plan",
         "q228_fresh_rank"]
+
+
+_SESSION_ID = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+_REFLECTIVE_FRAME = re.compile(r"(?:NativeMethodAccessorImpl\.java|<unknown>):0")
+
+
+def stable_ids(plan: str) -> str:
+    """Renumber each kind of session-global id from 1, in order of
+    first appearance in `plan`, and fix the reflective call-site frame."""
+    seen: dict[str, dict[str, int]] = {}
+
+    def renumber(m: re.Match) -> str:
+        ids = seen.setdefault(m.group(1), {})
+        return m.group(1) + str(ids.setdefault(m.group(2), len(ids) + 1))
+
+    return _REFLECTIVE_FRAME.sub("<py4j>", _SESSION_ID.sub(renumber, plan))
 
 
 def main() -> int:
@@ -83,8 +107,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     def plan(df) -> str:
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
+        return stable_ids(df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"))
 
     out = ["# EXPLAIN — physical plans of headline queries",
            "",

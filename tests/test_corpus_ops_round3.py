@@ -129,21 +129,30 @@ def test_quantized_topk_golden(spark):
 
 
 def test_triangle_counts_k4(spark):
-    from python_mecab_ner_spark.operators.graph import triangle_counts
+    from python_mecab_ner_spark.operators.graph import _closed_triangles
     k4 = [(a, b) for a in range(1, 5) for b in range(1, 5) if a < b]
-    e = spark.createDataFrame(k4, "src bigint, dst bigint")
-    got = {r.node: r.n_tri for r in triangle_counts(e).collect()}
+    e = spark.createDataFrame(k4, "a bigint, b bigint")
+    tris = [tuple(r) for r in _closed_triangles(e).collect()]
+    # K4 holds four triangles, each closed exactly once; every node
+    # is a corner of three of them
+    assert len(tris) == 4 and len({frozenset(t) for t in tris}) == 4
+    got = {}
+    for t in tris:
+        for n in t:
+            got[n] = got.get(n, 0) + 1
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
 
 
 def test_triangle_counts_pendant_and_reverse_edges(spark):
-    from python_mecab_ner_spark.operators.graph import triangle_counts
+    from python_mecab_ner_spark.operators.graph import ktruss
     # one triangle + a pendant; reverse duplicates must not double-count
+    # the triangle support of an edge
     e = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (1, 3), (3, 4)],
         "src bigint, dst bigint")
-    got = {r.node: r.n_tri for r in triangle_counts(e).collect()}
-    assert got == {1: 1, 2: 1, 3: 1}
+    got = {(r.a, r.b): r.support
+           for r in ktruss(e, k=3, rounds=1).collect()}
+    assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 1}
 
 
 def test_doc_surprisal_golden(spark):

@@ -1,6 +1,6 @@
 """Round-3 additions (batch g): gate funnel, recrawl change-rate
-scheduling, truth-finding claim adjudication, redirect-chain
-resolution — hand-computed goldens and edge cases."""
+scheduling, truth-finding claim adjudication — hand-computed goldens
+and edge cases."""
 
 from pyspark.sql import functions as F
 
@@ -104,42 +104,6 @@ def test_adjudicate_claims_deterministic_tie_breaks(spark):
     # trust: B=(1+1)e6/3=666666 (agrees), A=(0+1)e6/3=333333
     assert r.support_ppm == (666666 * 1_000_000) // 999_999
     out.unpersist_input()
-
-
-def test_resolve_redirects_chain_golden(spark):
-    from python_mecab_ner_spark.operators.graph import resolve_redirects
-    # chain 5 -> 4 -> 3 -> 0 (canonical), plus 9 -> 0 direct
-    r = spark.createDataFrame([(5, 4), (4, 3), (3, 0), (9, 0)],
-                              "src bigint, dst bigint")
-    got = {x.src: (x.canonical, x.hops, x.resolved)
-           for x in resolve_redirects(r, rounds=3).collect()}
-    assert got[5] == (0, 3, 1)
-    assert got[4] == (0, 2, 1)
-    assert got[3] == (0, 1, 1)
-    assert got[9] == (0, 1, 1)
-
-
-def test_resolve_redirects_cycle_flagged(spark):
-    from python_mecab_ner_spark.operators.graph import resolve_redirects
-    # 2-cycle 1 <-> 2; after 2^2 = 4 steps each node is back at its
-    # OWN position's target: 1 -> ... 4 hops -> 1
-    r = spark.createDataFrame([(1, 2), (2, 1)], "src bigint, dst bigint")
-    got = {x.src: (x.canonical, x.hops, x.resolved)
-           for x in resolve_redirects(r, rounds=2).collect()}
-    assert got[1] == (1, 4, 0)
-    assert got[2] == (2, 4, 0)
-
-
-def test_resolve_redirects_overdeep_chain_unresolved(spark):
-    from python_mecab_ner_spark.operators.graph import resolve_redirects
-    # chain of depth 6 with rounds=2 (horizon 4): lands mid-chain
-    r = spark.createDataFrame([(i, i - 1) for i in range(6, 0, -1)],
-                              "src bigint, dst bigint")
-    got = {x.src: (x.canonical, x.hops, x.resolved)
-           for x in resolve_redirects(r, rounds=2).collect()}
-    assert got[6] == (2, 4, 0)   # 4 of 6 steps taken, still a redirect
-    assert got[4] == (0, 4, 1)   # exactly at horizon -> resolved
-    assert got[3] == (0, 3, 1)
 
 
 def test_partition_skew_golden(spark):

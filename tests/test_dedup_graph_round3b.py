@@ -1,5 +1,5 @@
 """Round-3 late additions, batch 2: containment pairs, cross-doc
-duplicated-window coverage, local clustering coefficient, winnowing
+duplicated-window coverage, winnowing
 fingerprints, text normalization —
 hand-computed goldens on tiny graphs/corpora (the DuckDB cross-engine
 checks live in the q109-q114 oracles)."""
@@ -10,7 +10,6 @@ from python_mecab_ner_spark.functions.hashing import md5_int_py
 from python_mecab_ner_spark.functions.text import normalize_text
 from python_mecab_ner_spark.operators.dedup import (
     containment_pairs, cross_doc_ngram_coverage, winnow_fingerprints)
-from python_mecab_ner_spark.operators.graph import clustering_coefficient
 
 
 def test_containment_golden(spark):
@@ -59,21 +58,6 @@ def test_cross_doc_ngram_coverage_golden(spark):
     assert got[2] == (2, 1, 500_000)
     # "z z" repeats WITHIN doc 3 only -> g_df == 1, not cross-doc dup
     assert got[3] == (2, 0, 0)
-
-
-def test_clustering_coefficient_triangle_plus_pendant(spark):
-    # triangle 1-2-3 with pendant 4 off node 3; duplicate reverse edge
-    # tolerated.  cc: deg-2 triangle corners 1.0; node 3 deg 3 ->
-    # 2*1/(3*2) = 333333 ppm; pendant deg 1 -> 0.
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4), (2, 1)],
-        "src int, dst int")
-    got = {r.node: (r.deg, r.n_tri, r.cc_ppm)
-           for r in clustering_coefficient(e).collect()}
-    assert got[1] == (2, 1, 1_000_000)
-    assert got[2] == (2, 1, 1_000_000)
-    assert got[3] == (3, 1, 333_333)
-    assert got[4] == (1, 0, 0)
 
 
 def _py_winnow(text: str, k: int = 3, w: int = 4) -> set:

@@ -1,4 +1,4 @@
-"""Session additions: integer HITS, Kneser-Ney continuation counts,
+"""Session additions: Kneser-Ney continuation counts,
 largest-remainder crawl-budget apportionment — hand goldens + exact
 python-twin recomputes (the operators are all-integer, so the twins
 must agree bit-for-bit)."""
@@ -9,47 +9,6 @@ from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.operators.colloc import kn_continuation_counts
 from python_mecab_ner_spark.operators.crawl import crawl_budget
-from python_mecab_ner_spark.operators.graph import hits_int
-
-SCALE = 1_000_000
-
-
-def _hits_py(edges, iters=2, scale=SCALE):
-    """Pure-python twin of graph.hits_int (same integer recurrence)."""
-    nodes = sorted({x for e in edges for x in e})
-    a = {n: scale for n in nodes}
-    h = dict(a)
-    for _ in range(iters):
-        hr = {n: 0 for n in nodes}
-        for s, d in edges:
-            hr[s] += a[d]
-        hmx = max(hr.values())
-        h = {n: (hr[n] * scale) // hmx for n in nodes}
-        ar = {n: 0 for n in nodes}
-        for s, d in edges:
-            ar[d] += h[s]
-        amx = max(ar.values())
-        a = {n: (ar[n] * scale) // amx for n in nodes}
-    return a, h
-
-
-def test_hits_star_separates_hubs_from_authorities(spark):
-    # 1 and 2 point at 3: pure hubs vs a pure authority
-    e = spark.createDataFrame([(1, 3), (2, 3)], "src bigint, dst bigint")
-    got = {r.node: (r.authority, r.hub) for r in hits_int(e).collect()}
-    assert got == {1: (0, SCALE), 2: (0, SCALE), 3: (SCALE, 0)}
-
-
-def test_hits_randomized_vs_python(spark):
-    rng = random.Random(79)
-    edges = sorted({(rng.randrange(12), rng.randrange(12))
-                    for _ in range(40)})
-    edges = [(s, d) for s, d in edges if s != d]
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
-    a_py, h_py = _hits_py(edges, iters=3)
-    got = {r.node: (r.authority, r.hub)
-           for r in hits_int(e, iters=3).collect()}
-    assert got == {n: (a_py[n], h_py[n]) for n in a_py}
 
 
 def test_kn_continuation_golden(spark):
@@ -70,23 +29,6 @@ def test_crawl_budget_hamilton_golden(spark):
            for r in crawl_budget(s, budget=10).collect()}
     # total=11: bases 4/2/2, remainders 6/8/8 -> b,c take the leftovers
     assert got == {"a": (4, 4), "b": (2, 3), "c": (2, 3)}
-
-
-def test_negative_samples_python_twin(spark):
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    from python_mecab_ner_spark.operators.graph import negative_samples
-    edges = [(1, 2), (1, 3), (2, 3), (4, 1), (3, 4)]
-    nodes = sorted({x for e in edges for x in e})
-    want = set()
-    for s, d in edges:
-        for i in range(3):
-            neg = nodes[md5_int_py(f"{s}:{d}:{i}") % len(nodes)]
-            if (s, neg) not in edges:
-                want.add((s, d, i, neg))
-    e = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r.src, r.dst, r.i, r.dst_neg)
-           for r in negative_samples(e, k=3).collect()}
-    assert got == want and len(got) > 0
 
 
 def test_fuzzy_alias_pairs_golden_and_blocking_miss(spark):
@@ -184,15 +126,6 @@ def test_tfidf_cosine_pairs_golden(spark):
                    (1, 3): (1, 20_000), (2, 3): (1, 20_000)}
 
 
-def test_edge_diff_golden(spark):
-    from python_mecab_ner_spark.operators.graph import edge_diff
-    old = spark.createDataFrame([(1, 2), (1, 3)], "src int, dst int")
-    new = spark.createDataFrame([(1, 3), (2, 4), (2, 4)],
-                                "src int, dst int")
-    got = {r.status: r.n_edges for r in edge_diff(old, new).collect()}
-    assert got == {"added": 1, "removed": 1, "kept": 1}
-
-
 def test_rrf_fuse_golden(spark):
     from python_mecab_ner_spark.operators.retrieval import rrf_fuse
     a = spark.createDataFrame([(1, 1), (2, 2), (3, 3)],
@@ -217,68 +150,8 @@ def test_crawl_budget_sums_to_budget_randomized(spark):
 
 
 # ---------------------------------------------------------------------------
-# adamic-adar / recency decay (q91-q92 session)
+# recency decay (q92 session)
 # ---------------------------------------------------------------------------
-
-def _aa_py(edges, min_common=1, cap=None, scale=1_000_000):
-    """Pure-python twin of graph.adamic_adar."""
-    adj = {}
-    for s, d in edges:
-        if s == d:
-            continue
-        adj.setdefault(s, set()).add(d)
-        adj.setdefault(d, set()).add(s)
-    deg = {n: len(v) for n, v in adj.items()}
-    out = {}
-    for z, leaves in adj.items():
-        if cap is not None and deg[z] > cap:
-            continue
-        w = scale // deg[z].bit_length()
-        ls = sorted(leaves)
-        for i, x in enumerate(ls):
-            for y in ls[i + 1:]:
-                c, aa = out.get((x, y), (0, 0))
-                out[(x, y)] = (c + 1, aa + w)
-    return {p: v for p, v in out.items() if v[0] >= min_common}
-
-
-def test_adamic_adar_rare_neighbor_outweighs_hub(spark):
-    from python_mecab_ner_spark.operators.graph import adamic_adar
-    # (1,2) share rare node 10 (deg 2); (3,4) share hub 20 (deg 6)
-    e = [(1, 10), (2, 10), (3, 20), (4, 20),
-         (5, 20), (6, 20), (7, 20), (8, 20)]
-    df = spark.createDataFrame(e, "src bigint, dst bigint")
-    got = {(r.n1, r.n2): r.aa_micro
-           for r in adamic_adar(df, min_common=1).collect()}
-    # bit_length(2)=2 -> 500000; bit_length(6)=3 -> 333333
-    assert got[(1, 2)] == 500_000
-    assert got[(3, 4)] == 333_333
-    assert got[(1, 2)] > got[(3, 4)]
-
-
-def test_adamic_adar_randomized_vs_python(spark):
-    import random
-    from python_mecab_ner_spark.operators.graph import adamic_adar
-    rng = random.Random(91)
-    edges = list({(rng.randrange(12), rng.randrange(12))
-                  for _ in range(40)})
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r.n1, r.n2): (r.common, r.aa_micro)
-           for r in adamic_adar(df, min_common=1).collect()}
-    assert got == _aa_py(edges, min_common=1)
-
-
-def test_adamic_adar_center_cap_mirrors_python(spark):
-    import random
-    from python_mecab_ner_spark.operators.graph import adamic_adar
-    rng = random.Random(92)
-    edges = list({(rng.randrange(10), rng.randrange(10))
-                  for _ in range(35)})
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r.n1, r.n2): (r.common, r.aa_micro)
-           for r in adamic_adar(df, min_common=1,
-                                max_center_degree=3).collect()}
-    assert got == _aa_py(edges, min_common=1, cap=3)
 
 
 def test_decay_activity_golden_and_shift_cap(spark):
@@ -300,104 +173,8 @@ def test_decay_activity_golden_and_shift_cap(spark):
 
 
 # ---------------------------------------------------------------------------
-# random walks / k-core / histogram quality gate (q93-q95 session)
+# histogram quality gate (q95 session)
 # ---------------------------------------------------------------------------
-
-def _walks_py(edges, walk_len=3, walks_per_node=2, seed="walk"):
-    """Pure-python twin of graph.random_walks."""
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    adj = {}
-    for s, d in edges:
-        if s != d:
-            adj.setdefault(s, set()).add(d)
-    adj = {n: sorted(v) for n, v in adj.items()}
-    nodes = sorted({x for e in edges for x in e})
-    rows = set()
-    for start in nodes:
-        for wid in range(walks_per_node):
-            cur = start
-            rows.add((start, wid, 0, cur))
-            for step in range(1, walk_len + 1):
-                nbrs = adj.get(cur)
-                if not nbrs:
-                    break
-                h = md5_int_py(f"walk:{start}:{wid}:{step}:{cur}")
-                cur = nbrs[h % len(nbrs)]
-                rows.add((start, wid, step, cur))
-    return rows
-
-
-def test_random_walks_python_twin_and_sink_stop(spark):
-    import random
-    from python_mecab_ner_spark.operators.graph import random_walks
-    rng = random.Random(93)
-    edges = list({(rng.randrange(10), rng.randrange(10))
-                  for _ in range(25)})
-    # add a guaranteed sink: node 99 has an inbound edge only
-    edges.append((0, 99))
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r.start, r.wid, r.step, r.node)
-           for r in random_walks(df, walk_len=3,
-                                 walks_per_node=2).collect()}
-    assert got == _walks_py(edges, walk_len=3, walks_per_node=2)
-    # the sink starts its walks but never advances past step 0
-    assert (99, 0, 0, 99) in got
-    assert not any(s == 99 and st > 0 for s, _, st, _ in got)
-
-
-def test_random_walks_follow_real_edges(spark):
-    from python_mecab_ner_spark.operators.graph import random_walks
-    edges = [(1, 2), (2, 3), (3, 1), (1, 3)]
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    walks = random_walks(df, walk_len=4, walks_per_node=1).collect()
-    eset = set(edges)
-    by_walk = {}
-    for r in walks:
-        by_walk.setdefault((r.start, r.wid), {})[r.step] = r.node
-    for steps in by_walk.values():
-        for t in range(1, max(steps) + 1):
-            assert (steps[t - 1], steps[t]) in eset
-
-
-def _kcore_py(edges, k=2):
-    """Peel to the fixpoint."""
-    adj = {}
-    for s, d in edges:
-        if s == d:
-            continue
-        adj.setdefault(s, set()).add(d)
-        adj.setdefault(d, set()).add(s)
-    changed = True
-    while changed:
-        drop = [n for n, v in adj.items() if len(v) < k]
-        changed = bool(drop)
-        for n in drop:
-            for m in adj[n]:
-                adj[m].discard(n)
-            del adj[n]
-        adj = {n: v for n, v in adj.items() if True}
-    return {n: len(v) for n, v in adj.items() if v}
-
-
-def test_kcore_path_peels_fully_clique_survives(spark):
-    from python_mecab_ner_spark.operators.graph import kcore
-    # path 1-2-3-4 dissolves under k=2; triangle 10-11-12 survives
-    e = [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12)]
-    df = spark.createDataFrame(e, "src bigint, dst bigint")
-    got = {r.node: r.core_deg for r in kcore(df, k=2, iters=8).collect()}
-    assert got == {10: 2, 11: 2, 12: 2}
-
-
-def test_kcore_randomized_reaches_python_fixpoint(spark):
-    import random
-    from python_mecab_ner_spark.operators.graph import kcore
-    rng = random.Random(94)
-    edges = list({(rng.randrange(14), rng.randrange(14))
-                  for _ in range(30)})
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {r.node: r.core_deg
-           for r in kcore(df, k=2, iters=14).collect()}
-    assert got == _kcore_py(edges, k=2)
 
 
 def test_quality_gate_histogram_equals_full_sort_gate(spark):
@@ -443,18 +220,3 @@ def test_cooccurrence_counts_golden_and_python_twin(spark):
     assert got == exp
 
 
-def test_butterfly_counts_k23_golden(spark):
-    from python_mecab_ner_spark.operators.graph import butterfly_counts
-    # K(2,3): 3 butterflies total; each left node is in all 3, each
-    # right node in 2.  Left {1,2}, right {10,11,12}.
-    e = [(u, w) for u in (1, 2) for w in (10, 11, 12)]
-    df = spark.createDataFrame(e, "src bigint, dst bigint")
-    got = {r.node: r.n_bfly for r in butterfly_counts(df).collect()}
-    assert got == {1: 3, 2: 3, 10: 2, 11: 2, 12: 2}
-
-
-def test_butterfly_counts_path_has_none(spark):
-    from python_mecab_ner_spark.operators.graph import butterfly_counts
-    df = spark.createDataFrame([(1, 2), (2, 3), (3, 4)],
-                               "src bigint, dst bigint")
-    assert butterfly_counts(df).count() == 0

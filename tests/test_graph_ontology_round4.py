@@ -1,5 +1,5 @@
-"""Round-4 operators: modularity, edge-cut audit, exact harmonic
-centrality, PARIS instance alignment, seeded type propagation.
+"""Round-4 operators: modularity, edge-cut audit, PARIS instance
+alignment, seeded type propagation.
 
 Each test recomputes the expected answer with plain Python on a tiny
 hand-built graph — the engine-vs-python agreement discipline of
@@ -10,8 +10,7 @@ only cross-check.
 from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.operators.graph import (
-    edge_cut_audit, harmonic_centrality, label_propagation_int,
-    modularity_ppm)
+    edge_cut_audit, label_propagation_int, modularity_ppm)
 from python_mecab_ner_spark.operators.ontology import (
     align_entities, propagate_types)
 
@@ -88,27 +87,6 @@ def test_edge_cut_audit_exact_counts(spark):
     assert out["div8"].cut_ppm == 200000
     # mod2: every (even, odd) pair crosses except (0,8)
     assert out["mod2"].cut_edges == 4
-
-
-def test_harmonic_centrality_path_graph(spark):
-    # path 1-2-3-4: from node 1, d(2)=1, d(3)=2, d(4)=3
-    edges = _sym(spark, [(1, 2), (2, 3), (3, 4)])
-    roots = spark.createDataFrame([(1,)], ["node"])
-    rows = harmonic_centrality(edges, radius=3, roots=roots).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert r.root == 1 and r.n_reached == 3
-    assert r.harmonic_milli == 1000 + 500 + 333
-
-
-def test_harmonic_centrality_radius_bound_and_min_dist(spark):
-    # diamond 1-2, 1-3, 2-4, 3-4 plus tail 4-5: node 4 is at min
-    # distance 2 (two paths — counted once); radius 2 excludes node 5
-    edges = _sym(spark, [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5)])
-    roots = spark.createDataFrame([(1,)], ["node"])
-    r = harmonic_centrality(edges, radius=2, roots=roots).collect()[0]
-    assert r.n_reached == 3  # 2, 3 at d1; 4 at d2; 5 excluded
-    assert r.harmonic_milli == 1000 + 1000 + 500
 
 
 def test_align_entities_recovers_mapping(spark):

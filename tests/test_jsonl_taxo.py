@@ -1,16 +1,13 @@
 """Round-5 closeout additions: JSONL source with corrupt-record
-ledger (q203), exact DAG transitive reduction (q201), Good-Turing
-count-of-counts (q202) — each against Python twins / real files."""
+ledger (q203) and Good-Turing count-of-counts (q202) — each against
+Python twins / real files."""
 
 import random
 from collections import Counter
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.operators.colloc import good_turing
-from python_mecab_ner_spark.operators.graph import dag_transitive_reduce
 from python_mecab_ner_spark.sources.jsonl import (
     CORRUPT_COL, parse_jsonl_lines, read_jsonl_ledger, write_jsonl)
 
@@ -68,66 +65,6 @@ def test_parse_jsonl_lines_flags_malformed(spark):
     assert by[2][CORRUPT_COL] is not None
     # a legitimate null field is NOT corrupt
     assert by[3][CORRUPT_COL] is None and by[3]["b"] == "ok"
-
-
-# ------------------------------------------------------- transitive reduce
-
-def _py_reduce(edges):
-    es = {(c, p) for c, p in edges if c != p}
-    adj = {}
-    for c, p in es:
-        adj.setdefault(c, set()).add(p)
-
-    def reach2plus(c, p):
-        # path c ->* p of length >= 2
-        frontier = {w for w in adj.get(c, ()) if (c, w) in es}
-        seen = set()
-        depth = 0
-        while frontier:
-            depth += 1
-            nxt = set()
-            for w in frontier:
-                if w == p and depth >= 2:
-                    return True
-                if w not in seen:
-                    seen.add(w)
-                    nxt |= adj.get(w, set())
-            frontier = nxt - seen | {x for x in nxt if x == p}
-            if depth > 50:
-                break
-        return False
-
-    return {(c, p): int(reach2plus(c, p)) for c, p in es}
-
-
-def test_reduce_random_dag_matches_python(spark):
-    rng = random.Random(13)
-    edges = set()
-    for _ in range(120):
-        a, b = sorted(rng.sample(range(30), 2))
-        edges.add((a, b))  # i < j: acyclic by construction
-    df = spark.createDataFrame(sorted(edges), "child int, parent int")
-    got = {(r["child"], r["parent"]): r["redundant"]
-           for r in dag_transitive_reduce(df).collect()}
-    assert got == _py_reduce(edges)
-
-
-def test_reduce_cycle_raises(spark):
-    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0)],
-                               "child int, parent int")
-    with pytest.raises(RuntimeError):
-        dag_transitive_reduce(df, max_rounds=5).collect()
-
-
-def test_reduce_diamond(spark):
-    # a->b->d, a->c->d, plus shortcut a->d: only a->d is redundant
-    df = spark.createDataFrame(
-        [("a", "b"), ("b", "d"), ("a", "c"), ("c", "d"), ("a", "d")],
-        "child string, parent string")
-    got = {(r["child"], r["parent"]): r["redundant"]
-           for r in dag_transitive_reduce(df).collect()}
-    assert got == {("a", "b"): 0, ("b", "d"): 0, ("a", "c"): 0,
-                   ("c", "d"): 0, ("a", "d"): 1}
 
 
 # ------------------------------------------------------------ good-turing

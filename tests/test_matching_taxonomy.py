@@ -1,6 +1,5 @@
-"""Round-5 gap fills: deterministic maximal matching (q188),
-taxonomy layering + ancestor closure (q187), and the integer CUSUM
-change-point (q189).
+"""Round-5 gap fills: deterministic maximal matching (q188) and the
+integer CUSUM change-point (q189).
 
 Discipline as in test_mis_funnel.py: every test recomputes the
 expected answer with plain Python on small randomized or hand-built
@@ -13,8 +12,7 @@ import random
 
 import pytest
 
-from python_mecab_ner_spark.operators.graph import (dag_layers,
-                                                    maximal_matching)
+from python_mecab_ner_spark.operators.graph import maximal_matching
 from python_mecab_ner_spark.operators.spans import cusum_changepoint
 
 
@@ -72,75 +70,6 @@ def test_matching_raises_on_round_exhaustion(spark):
 def test_matching_self_loops_only(spark):
     df = spark.createDataFrame([(1, 1)], ["src", "dst"])
     assert maximal_matching(df).collect() == []
-
-
-def _py_layers(edges):
-    """Longest upward path + distinct ancestor closure."""
-    parents = {}
-    nodes = set()
-    for c, p in edges:
-        parents.setdefault(c, set()).add(p)
-        nodes |= {c, p}
-    layer, anc = {}, {}
-
-    def go(v, stack=()):
-        if v in layer:
-            return
-        assert v not in stack, "cycle"
-        ps = parents.get(v, set())
-        for p in ps:
-            go(p, stack + (v,))
-        layer[v] = 1 + max((layer[p] for p in ps), default=-1)
-        anc[v] = set(ps)
-        for p in ps:
-            anc[v] |= anc[p]
-
-    for v in nodes:
-        go(v)
-    return {v: (layer[v], len(anc[v])) for v in nodes}
-
-
-def test_dag_layers_known_reconvergent_shape(spark):
-    # diamond + tail: d -> b -> a, d -> c -> a, a -> r; e -> d
-    edges = [("d", "b"), ("d", "c"), ("b", "a"), ("c", "a"),
-             ("a", "r"), ("e", "d")]
-    got = {r.node: (r.layer, r.n_ancestors)
-           for r in dag_layers(
-               spark.createDataFrame(edges, ["child", "parent"]))
-           .collect()}
-    assert got == {"r": (0, 0), "a": (1, 1), "b": (2, 2), "c": (2, 2),
-                   "d": (3, 4),   # b, c, a, r — a/r counted ONCE
-                   "e": (4, 5)}
-
-
-def test_dag_layers_random_dag_twin(spark):
-    rng = random.Random(7)
-    # random DAG: edges only low -> high id, so acyclic by construction
-    edges = list({(rng.randrange(30), rng.randrange(30))
-                  for _ in range(120)})
-    edges = [(a, b) for a, b in edges if a < b]
-    want = _py_layers(edges)
-    got = {r.node: (r.layer, r.n_ancestors)
-           for r in dag_layers(
-               spark.createDataFrame(edges, ["child", "parent"]))
-           .collect()}
-    assert got == want
-
-
-def test_dag_layers_cycle_raises(spark):
-    edges = [(1, 2), (2, 3), (3, 1), (4, 1)]
-    df = spark.createDataFrame(edges, ["child", "parent"])
-    with pytest.raises(Exception, match="cycle"):
-        dag_layers(df).collect()
-
-
-def test_dag_layers_without_ancestors(spark):
-    edges = [(1, 2), (2, 3)]
-    got = {r.node: (r.layer, r.n_ancestors)
-           for r in dag_layers(
-               spark.createDataFrame(edges, ["child", "parent"]),
-               count_ancestors=False).collect()}
-    assert got == {3: (0, -1), 2: (1, -1), 1: (2, -1)}
 
 
 def _py_cusum(rows):
@@ -265,51 +194,6 @@ def test_betweenness_star_center(spark):
     # each non-root leaf is a d=2 endpoint for the other 4 roots
     for v in range(1, 6):
         assert got[v] == (4, 0)
-
-
-def test_sssp_random_twin(spark):
-    import heapq
-
-    from python_mecab_ner_spark.operators.graph import sssp_int
-    rng = random.Random(61)
-    edges = list({(rng.randrange(40), rng.randrange(40))
-                  for _ in range(120)})
-    edges = [(a, b, rng.randrange(1, 9)) for a, b in edges if a != b]
-    roots = [0, 1, 2]
-    df = spark.createDataFrame(edges, ["src", "dst", "w"])
-    rdf = spark.createDataFrame([(r,) for r in roots], ["node"])
-    got = {r.node: r.dist for r in sssp_int(df, rdf).collect()}
-    # python twin: multi-source Dijkstra over min-weight parallel edges
-    best = {}
-    for a, b, w in edges:
-        best[(a, b)] = min(w, best.get((a, b), w))
-    adj = {}
-    for (a, b), w in best.items():
-        adj.setdefault(a, []).append((b, w))
-    dist = {r: 0 for r in roots}
-    pq = [(0, r) for r in roots]
-    heapq.heapify(pq)
-    while pq:
-        d, v = heapq.heappop(pq)
-        if d > dist.get(v, 1 << 60):
-            continue
-        for w, c in adj.get(v, ()):
-            nd = d + c
-            if nd < dist.get(w, 1 << 60):
-                dist[w] = nd
-                heapq.heappush(pq, (nd, w))
-    assert got == dist
-
-
-def test_sssp_raises_on_budget(spark):
-    edges = [(i, i + 1, 1) for i in range(30)]  # 30-hop path
-    df = spark.createDataFrame(edges, ["src", "dst", "w"])
-    rdf = spark.createDataFrame([(0,)], ["node"])
-    with pytest.raises(Exception, match="max_rounds"):
-        sssp_from = __import__(
-            "python_mecab_ner_spark.operators.graph",
-            fromlist=["sssp_int"]).sssp_int
-        sssp_from(df, rdf, max_rounds=3).collect()
 
 
 def test_suffix_prefix_stitch(spark):

@@ -221,49 +221,3 @@ def test_event_transitions_python_twin(spark):
     assert got == want
 
 
-def test_bipartiteness_audit_known_shapes(spark):
-    from python_mecab_ner_spark.operators.graph import bipartiteness_audit
-    edges = (
-        [(1, 2), (2, 3), (3, 1)] +            # triangle: odd
-        [(10, 11), (11, 12), (12, 13), (13, 10)] +  # square: even
-        [(20, 21), (21, 22)] +                # path: bipartite
-        # pentagon with a tail: odd cycle, tail must not flip it
-        [(30, 31), (31, 32), (32, 33), (33, 34), (34, 30), (30, 39)]
-    )
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r.comp: (r.n_nodes, r.bipartite)
-           for r in bipartiteness_audit(df).collect()}
-    assert got == {1: (3, 0), 10: (4, 1), 20: (3, 1), 30: (6, 0)}
-
-
-def test_bipartiteness_audit_random_twin(spark):
-    from python_mecab_ner_spark.operators.graph import bipartiteness_audit
-    rng = random.Random(23)
-    edges = list({(rng.randrange(40), rng.randrange(40))
-                  for _ in range(60)})
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r.comp: (r.n_nodes, r.bipartite)
-           for r in bipartiteness_audit(df).collect()}
-    # python twin: union-find components + BFS 2-coloring
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    seen, want = set(), {}
-    for start in sorted(adj):
-        if start in seen:
-            continue
-        color, queue, nodes, bip = {start: 0}, [start], set(), True
-        while queue:
-            v = queue.pop()
-            nodes.add(v)
-            for u in adj[v]:
-                if u not in color:
-                    color[u] = color[v] ^ 1
-                    queue.append(u)
-                elif color[u] == color[v]:
-                    bip = False
-        seen |= nodes
-        want[min(nodes)] = (len(nodes), int(bip))
-    assert got == want

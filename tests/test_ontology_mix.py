@@ -113,27 +113,6 @@ def test_temperature_mix_boost_direction(spark):
     assert got["head"].nat_ppm == 100 * 1_000_000 // 101
 
 
-def test_graph_moments_golden(spark):
-    from python_mecab_ner_spark.operators.graph import graph_moments
-    e = spark.createDataFrame(
-        [(1, 2), (2, 1), (2, 3), (3, 1), (2, 3)],  # dup collapses
-        "src bigint, dst bigint")
-    df = graph_moments(e)
-    r = df.collect()[0]
-    df.unpersist_input()
-    # outdeg: 1->1, 2->2, 3->1; indeg: 2->1, 1->2, 3->1
-    assert r.n_edges == 4
-    assert (r.sum_x, r.sum_y) == (6, 6)
-    assert (r.sum_xy, r.sum_x2, r.sum_y2) == (9, 10, 10)
-    assert r.recip_edges == 2 and r.recip_ppm == 500_000
-    df2 = graph_moments(
-        spark.createDataFrame([(5, 5)], "src bigint, dst bigint"))
-    r2 = df2.collect()[0]
-    df2.unpersist_input()
-    # a self-loop is its own reverse by the documented definition
-    assert (r2.n_edges, r2.recip_edges, r2.recip_ppm) == (1, 1, 1_000_000)
-
-
 def test_template_prefixes_golden(spark):
     from python_mecab_ner_spark.operators.profile import (
         template_prefixes)

@@ -215,9 +215,10 @@ def test_quantized_ann_uses_take_ordered(spark, sf01):
 
 
 def test_triangles_broadcast_degrees_no_cartesian(spark, sf01):
-    plan = _plan(entry.q52_triangles(spark, sf01))
-    # degree tables come back as broadcasts; the wedge/closure joins
-    # are equi-joins, never a cartesian product
+    plan = _plan(entry.q173_ktruss(spark, sf01))
+    # the triangle enumeration under the k-truss peel: degree tables
+    # come back as broadcasts; the wedge/closure joins are equi-joins,
+    # never a cartesian product
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -290,16 +291,6 @@ def test_q68_weighted_rank_partial_aggregates(spark, sf01):
     aggregation on the inbound-mass groupBy (sum is combinable)."""
     plan = _plan(entry.q68_weighted_rank(spark, sf01))
     assert plan.count("HashAggregate") >= 6, plan  # 3 iters x partial+final
-
-
-def test_q91_adamic_adar_weight_rides_wedge(spark, sf01):
-    """The AA weight joins in from the BROADCAST degree dimension
-    before the wedge self-join — the pair aggregate is a single
-    combinable sum; no per-pair re-join against degrees afterward."""
-    plan = _plan(entry.q91_adamic_adar(spark, sf01))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
 def test_q92_decay_single_aggregate_no_window(spark, sf01):
@@ -460,17 +451,6 @@ def test_q143_mix_weights_single_count_no_window(spark, sf01):
     assert "Window" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     assert "BroadcastExchange" in plan, plan
-
-
-def test_q144_moments_reciprocity_is_hash_join(spark, sf01):
-    """Degrees join back on edge endpoints; the reciprocity probe is
-    the reversed-pair equi-join — no cartesian/nested-loop anywhere
-    except the final 1-row x 1-row broadcast combine."""
-    df = entry.q144_graph_moments(spark, sf01)
-    plan = _plan(df)
-    assert "CartesianProduct" not in plan, plan
-    assert "Window" not in plan, plan
-    df.unpersist_input()
 
 
 def test_q146_template_audit_single_agg_no_window(spark, sf01):

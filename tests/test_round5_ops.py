@@ -242,7 +242,7 @@ def test_modularity_empty_graph_returns_zero_row(spark):
             row.modularity_ppm) == (0, 0, 0, 0)
 
 
-# ------------------------------------------- incremental components
+# ------------------------------------------------ star components
 
 def _cc_twin(pairs):
     comp = {}
@@ -261,39 +261,6 @@ def _cc_twin(pairs):
         if ru != rv:
             comp[max(ru, rv)] = min(ru, rv)
     return {n: find(n) for n in comp}
-
-
-def test_incremental_components_equals_full_recompute(spark):
-    from python_mecab_ner_spark.operators.graph import \
-        incremental_components
-    rng = random.Random(17)
-    for trial in range(3):
-        all_edges = list({tuple(sorted((rng.randrange(40),
-                                        rng.randrange(40))))
-                          for _ in range(35)})
-        all_edges = [e for e in all_edges if e[0] != e[1]]
-        old = [e for e in all_edges if (e[0] * 7 + e[1]) % 3 != 0]
-        delta = [e for e in all_edges if (e[0] * 7 + e[1]) % 3 == 0]
-        if not delta or not old:
-            continue
-        old_lab = _cc_twin(old)
-        lab_df = spark.createDataFrame(list(old_lab.items()),
-                                       ["id", "comp"])
-        de = spark.createDataFrame(delta, ["src", "dst"])
-        got = {r.id: r.comp
-               for r in incremental_components(lab_df, de).collect()}
-        assert got == _cc_twin(all_edges), f"trial {trial}"
-
-
-def test_incremental_components_delta_only_vertices(spark):
-    from python_mecab_ner_spark.operators.graph import \
-        incremental_components
-    lab = spark.createDataFrame([(1, 1), (2, 1), (5, 5)], ["id", "comp"])
-    de = spark.createDataFrame([(2, 5), (10, 11), (11, 5)],
-                               ["src", "dst"])
-    got = {r.id: r.comp for r in incremental_components(lab, de).collect()}
-    # delta chains 10-11-5 into the {1,2} component via 2-5
-    assert got == {1: 1, 2: 1, 5: 1, 10: 1, 11: 1}
 
 
 def test_star_cc_python_twin_random(spark):
@@ -334,14 +301,3 @@ def test_star_cc_raises_on_round_exhaustion(spark):
         connected_components_star(df, max_rounds=1)
 
 
-def test_incremental_components_raises_on_round_exhaustion(spark):
-    from python_mecab_ner_spark.operators.graph import \
-        incremental_components
-    # a 8-singleton chain has contracted diameter 7 > max_rounds=2
-    lab = spark.createDataFrame([(i, i) for i in range(8)],
-                                ["id", "comp"])
-    de = spark.createDataFrame([(i, i + 1) for i in range(7)],
-                               ["src", "dst"])
-    import pytest
-    with pytest.raises(RuntimeError, match="did not converge"):
-        incremental_components(lab, de, max_rounds=2)

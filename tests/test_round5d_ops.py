@@ -1,7 +1,7 @@
 """Round-5 post-closeout additions (q209-q225): TextRank, Z-order
-layout audit, TrustRank spam mass, Rand/ARI, CDC chunking, node2vec
-walks, Katz, resharding audit, postings gaps, Neyman allocation,
-c-TF-IDF class terms, seasonal outliers, hub-attack robustness.
+layout audit, TrustRank spam mass, Rand/ARI, CDC chunking,
+resharding audit, postings gaps, Neyman allocation, c-TF-IDF class
+terms, seasonal outliers.
 
 Discipline as in test_round5_ops.py: every test recomputes the
 expected answer with plain Python on small hand-built or randomized
@@ -283,116 +283,6 @@ def test_cdc_survives_front_insertion_fixed_does_not(spark):
             (fn.__name__, share)
 
 
-# --------------------------------------------------- node2vec walks
-
-def _py_node2vec(edges, walk_len, wp, w1, wq, seed="n2v"):
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    adj = {}
-    eset = set()
-    for a, b in edges:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            eset.add((a, b))
-    adjidx = {n: sorted(v) for n, v in adj.items()}
-    nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
-    rows, classes = [], set()
-    for start in nodes:
-        prev, node = None, start
-        rows.append((start, 0, 0, node))
-        for t in range(1, walk_len + 1):
-            if node not in adjidx:
-                break
-            r = md5_int_py(f"{seed}:{start}:0:{t}:{node}")
-            cands = adjidx[node]
-            if prev is None:
-                nxt = cands[r % len(cands)]
-            else:
-                ws = []
-                for x in cands:
-                    if x == prev:
-                        ws.append(wp); classes.add("p")
-                    elif (prev, x) in eset:
-                        ws.append(w1); classes.add("1")
-                    else:
-                        ws.append(wq); classes.add("q")
-                pick = r % sum(ws)
-                cum = 0
-                for x, wgt in zip(cands, ws):
-                    cum += wgt
-                    if pick < cum:
-                        nxt = x
-                        break
-            rows.append((start, 0, t, nxt))
-            prev, node = node, nxt
-    return rows, classes
-
-
-def test_node2vec_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.graph import node2vec_walks
-    rng = random.Random(47)
-    und = {(rng.randrange(25), rng.randrange(25)) for _ in range(80)}
-    edges = [(a, b) for a, b in und if a != b]
-    edges += [(b, a) for a, b in edges]
-    df = spark.createDataFrame(sorted(set(edges)), ["src", "dst"])
-    got = sorted(tuple(r) for r in
-                 node2vec_walks(df, walk_len=3, wp=1, w1=4,
-                                wq=2).collect())
-    exp, classes = _py_node2vec(sorted(set(edges)), 3, 1, 4, 2)
-    assert got == sorted(exp)
-    # the graph must exercise ALL THREE weight classes or the test
-    # certifies nothing second-order
-    assert classes == {"p", "1", "q"}
-
-
-def test_node2vec_pure_return_bias_backtracks(spark):
-    # wp huge, others tiny on a path graph: step 2 must return to
-    # the start whenever the walker has a choice
-    from python_mecab_ner_spark.operators.graph import node2vec_walks
-    edges = [(i, i + 1) for i in range(6)]
-    edges += [(b, a) for a, b in edges]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    out = node2vec_walks(df, walk_len=2, wp=1000, w1=1, wq=1)
-    walks = {}
-    for r in out.collect():
-        walks.setdefault(r["start"], {})[r["step"]] = r["node"]
-    for start, w in walks.items():
-        if 2 in w:
-            assert w[2] == start, (start, w)
-
-
-# ---------------------------------------------------- Katz centrality
-
-def test_katz_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.graph import katz_int
-    rng = random.Random(53)
-    edges = sorted({(rng.randrange(20), rng.randrange(20))
-                    for _ in range(60)})
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {r["node"]: r["k"]
-           for r in katz_int(df, iters=3, atten_den=2).collect()}
-    nodes = sorted({a for a, _ in edges} | {b for _, b in edges})
-    k = {n: 1_000_000 for n in nodes}
-    for _ in range(3):
-        m = Counter()
-        for a, b in edges:
-            m[b] += k[a]
-        k = {n: 1_000_000 + m.get(n, 0) // 2 for n in nodes}
-    assert got == k
-
-
-def test_katz_counts_hub_endorsements_whole(spark):
-    # hub 0 points at 1..10; PageRank splits the hub's mass ten
-    # ways, Katz gives each target the full attenuated count
-    from python_mecab_ner_spark.operators.graph import (katz_int,
-                                                        pagerank_int)
-    edges = [(0, i) for i in range(1, 11)] + [(11, 12)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    katz = {r["node"]: r["k"] for r in katz_int(df, iters=1).collect()}
-    pr = {r["node"]: r["pr"] for r in pagerank_int(df, iters=1).collect()}
-    assert katz[1] == katz[12]          # both get one full endorsement
-    assert pr[1] < pr[12]               # PR dilutes the hub's vote
-
-
 # ---------------------------------------------------- reshard audit
 
 def test_reshard_audit_matches_python_twin(spark):
@@ -587,100 +477,6 @@ def test_seasonal_outliers_matches_python_twin(spark):
                    - datetime.date(1970, 1, 1)).days + d
                   for d in (9, 20)}
     assert {-d for _, d, _ in outs} == spike_days
-
-
-# ------------------------------------------------- robustness curve
-
-def _py_robustness(pairs, pcts):
-    pairs = sorted({(a, b) for a, b in pairs if a != b})
-    nodes = sorted({a for a, _ in pairs} | {b for _, b in pairs})
-    deg = Counter()
-    for a, b in pairs:
-        deg[a] += 1
-        deg[b] += 1
-    rank = sorted(nodes, key=lambda v: (-deg[v], v))
-    n = len(nodes)
-    out = []
-    for p in pcts:
-        k = (n * p) // 100
-        rem = set(rank[:k])
-        kept = [(a, b) for a, b in pairs
-                if a not in rem and b not in rem]
-        adj = {}
-        for a, b in kept:
-            adj.setdefault(a, []).append(b)
-            adj.setdefault(b, []).append(a)
-        seen, comps = set(), []
-        for v in adj:
-            if v in seen:
-                continue
-            stack, size = [v], 0
-            seen.add(v)
-            while stack:
-                x = stack.pop()
-                size += 1
-                for y in adj[x]:
-                    if y not in seen:
-                        seen.add(y)
-                        stack.append(y)
-            comps.append(size)
-        in_cc = sum(comps)
-        singles = (n - k) - in_cc
-        largest = max(comps + ([1] if singles else [0]))
-        out.append((p, k, n - k, len(kept), largest,
-                    len(comps) + singles))
-    return out
-
-
-def test_robustness_curve_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.graph import robustness_curve
-    rng = random.Random(79)
-    pairs = {tuple(sorted((rng.randrange(60), rng.randrange(60))))
-             for _ in range(120)}
-    pairs = [(a, b) for a, b in pairs if a != b]
-    df = spark.createDataFrame(pairs, ["a", "b"])
-    got = [tuple(r) for r in
-           robustness_curve(df, removal_pcts=(0, 15, 30)).collect()]
-    assert sorted(got) == sorted(_py_robustness(pairs, (0, 15, 30)))
-
-
-def test_robustness_hub_star_shatters(spark):
-    # a 30-leaf star: removing ~4% of nodes (= the hub) drops the
-    # largest component from 31 to 1 — the scale-free attack story
-    from python_mecab_ner_spark.operators.graph import robustness_curve
-    pairs = [(0, i) for i in range(1, 31)]
-    df = spark.createDataFrame(pairs, ["a", "b"])
-    rows = {r["pct_removed"]: r for r in
-            robustness_curve(df, removal_pcts=(0, 4)).collect()}
-    assert rows[0]["largest_cc"] == 31
-    assert rows[4]["n_removed"] == 1
-    assert rows[4]["largest_cc"] == 1
-    assert rows[4]["n_components"] == 30
-
-
-def test_robustness_random_mode_matches_twin_and_is_gentler(spark):
-    from python_mecab_ner_spark.operators.graph import robustness_curve
-    # hub-and-spoke forest: 6 stars of 9 leaves each, chained — the
-    # heavy-tailed shape where the contrast shows
-    pairs = []
-    for h in range(6):
-        hub = h * 10
-        pairs += [(hub, hub + i) for i in range(1, 10)]
-        if h:
-            pairs.append(((h - 1) * 10, hub))
-    df = spark.createDataFrame(pairs, ["a", "b"])
-    res = {}
-    for mode in ("degree", "random"):
-        res[mode] = {r["pct_removed"]: r["largest_cc"] for r in
-                     robustness_curve(df, removal_pcts=(10,),
-                                      rank_by=mode).collect()}
-    # removing 10% by degree takes all 6 hubs (60 nodes -> 6 removed)
-    assert res["degree"][10] == 1
-    # degree twin sanity + the contrast: random removal by md5 rank
-    # hits mostly leaves, so the graph survives it
-    exp = _py_robustness(pairs, (10,))
-    assert exp[0][4] == 1
-    assert res["random"][10] > res["degree"][10]
 
 
 # ---------------------------------------------------- LSH planner

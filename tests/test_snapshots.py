@@ -1,8 +1,7 @@
 """Snapshot versioning + time travel over the graph tables
 (sources.catalog): versioned immutable commits, latest/pinned reads,
 incremental diff — the honest Parquet subset of the Iceberg table
-format the north rule targets (no fake Iceberg metadata; the real
-writeTo path activates when the jar is present, see iceberg_available).
+format the north rule targets (no fake Iceberg metadata).
 """
 
 import pytest
