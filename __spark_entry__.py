@@ -21,6 +21,7 @@ pyref-oracle P/R suite in tests/.
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -254,12 +255,6 @@ def q14_fingerprint(spark, sf_dir):
     return d.select("doc_id", TX.fingerprint(F.col("text")).alias("fp"))
 
 
-def q15_exact_dedup(spark, sf_dir):
-    from python_mecab_ner_spark.operators.dedup import exact_dedup
-    d = _loadp(spark, sf_dir, "documents")
-    return exact_dedup(d, "text", "doc_id")
-
-
 def q16_jaccard_pairs(spark, sf_dir):
     """Exact capped-Jaccard pairs: shingles appearing in > MAX_SH_DF
     documents are dropped BEFORE the self-join, bounding per-key join
@@ -342,16 +337,6 @@ def q22_salt_distribution(spark, sf_dir):
                  F.count("*").alias("total")))
 
 
-def q26_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs via banded corpus-scaled
-    sign-LSH self-join (the dedup family's ANN member; output pairs are
-    float-free; membership gated on a bit-stable rounded cosine)."""
-    from python_mecab_ner_spark.operators.ann import embedding_neardup_pairs
-    e = _loadp(spark, sf_dir, "embeddings")
-    return embedding_neardup_pairs(e, threshold=0.4, n_bands=LSH_BANDS,
-                                   target_bucket_size=LSH_TARGET_BUCKET)
-
-
 def q28_sessionize(spark, sf_dir):
     """Timeout sessionization (30-min gap) per user over the events
     stream table: the arbitrary-gap generalization of gaps-and-islands."""
@@ -361,17 +346,6 @@ def q28_sessionize(spark, sf_dir):
                   _MINUTE(F.col("ts")).alias("m"))
     return sessionize(m, "user_id", "m", gap=30,
                       order_cols=["event_id"])
-
-
-def q29_ann_ivf(spark, sf_dir):
-    """IVF ANN: coarse-quantize vectors to n_cells centroids (rank-1
-    broadcast assignment), probe the query's 4 nearest cells, exact
-    top-10 inside them."""
-    from python_mecab_ner_spark.operators.ann import ivf_topk
-    e = _loadp(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in
-            e.filter("vec_id = 0").select("embedding").first()[0]]
-    return ivf_topk(e, qvec, k=10, n_cells=16, n_probe=4)
 
 
 def q30_rollup(spark, sf_dir):
@@ -411,28 +385,6 @@ def q32_trailing_window(spark, sf_dir):
          .rangeBetween(-30, 0))
     return m.select("event_id",
                     F.count("*").over(w).alias("n_trailing"))
-
-
-def q27_neardup_clusters(spark, sf_dir):
-    """Near-dup clustering: connected components (iterative min-label
-    join loop with localCheckpoint truncation) over LSH-verified pairs
-    — candidates come from the banded-LSH join (O(docs x bands), no
-    shingle-keyed self-join anywhere in the plan), then only the
-    candidates get exact shingle-intersection verification; cluster
-    id = min doc_id of the component."""
-    from python_mecab_ner_spark.operators.canonicalize import \
-        connected_components
-    from python_mecab_ner_spark.operators.dedup import lsh_verified_pairs
-    d = _loadp(spark, sf_dir, "documents")
-    pairs = (lsh_verified_pairs(d, "text", "doc_id", k=3, n_hashes=8,
-                                bands=4, min_shared=2)
-             .select(F.col("doc_a").alias("a_id"),
-                     F.col("doc_b").alias("b_id")))
-    nodes = (pairs.select(F.col("a_id").alias("entity_id"))
-             .union(pairs.select("b_id")).distinct())
-    cc = connected_components(pairs, nodes)
-    return cc.select(F.col("entity_id").alias("doc_id"),
-                     F.col("canonical_id").alias("cluster_id"))
 
 
 def q35_regex_entities(spark, sf_dir):
@@ -599,7 +551,8 @@ def q40_pagerank(spark, sf_dir):
         F.col("pr").alias("pr"))
 
 
-KLUE_FIXTURE = "/root/repo/tests/data/klue_fixture.json"
+KLUE_FIXTURE = str(Path(__file__).resolve().parent
+                   / "tests" / "data" / "klue_fixture.json")
 
 
 def _doc_mentions(spark, sf_dir):
@@ -730,36 +683,6 @@ def q45_repetition_ppm(spark, sf_dir):
     return d.select("doc_id",
                     TX.duplicate_ngram_ppm(F.col("text"), n=2)
                     .alias("rep_ppm"))
-
-
-DECON_BENCH_MOD = 97   # deterministic held-out "benchmark" slice
-
-
-def q46_decontaminate(spark, sf_dir):
-    """Benchmark decontamination (operators.dedup.ngram_collisions):
-    the docs with doc_id % DECON_BENCH_MOD == 0 act as the held-out
-    eval set; every other doc is screened for exact 3-gram collisions
-    with it.  Output: the contaminated docs and their distinct
-    colliding-gram counts."""
-    from python_mecab_ner_spark.operators.dedup import ngram_collisions
-    d = _loadp(spark, sf_dir, "documents")
-    bench = d.where(F.pmod(F.col("doc_id"), F.lit(DECON_BENCH_MOD)) == 0)
-    rest = d.where(F.pmod(F.col("doc_id"), F.lit(DECON_BENCH_MOD)) != 0)
-    return (ngram_collisions(rest, bench, "text", "doc_id", k=3)
-            .select("doc_id", F.col("n_collide").cast("bigint")
-                    .alias("n_collide")))
-
-
-def q51_quantized_ann(spark, sf_dir):
-    """Int8-quantized ANN (operators.ann.quantized_topk): clip(floor(
-    x*127)) symmetric quantization + exact integer dot-product top-k —
-    the 4x-compression scan path for billion-vector corpora, with a
-    hash-exact oracle (integer scores, unlike float cosine)."""
-    from python_mecab_ner_spark.operators.ann import quantized_topk
-    e = _load(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in
-            e.where("vec_id = 0").select("embedding").first()[0]]
-    return quantized_topk(e, qvec, k=10)
 
 
 def q53_surprisal(spark, sf_dir):
@@ -1138,33 +1061,6 @@ def q99_degree_histogram(spark, sf_dir):
                  F.max("deg").cast("bigint").alias("max_deg")))
 
 
-def q100_incremental_lsh(spark, sf_dir):
-    """Incremental LSH dedup (operators.dedup.incremental_lsh_pairs):
-    the delta (doc_id % 3 == 0, "today's crawl") probes the stored
-    signatures of the rest of the corpus — old x old pairs never
-    exist in the plan, verification is signature-side (equal-minhash
-    count), and the old text never loads.  The maintenance half of
-    the q17/q27 batch LSH family."""
-    from python_mecab_ner_spark.operators.dedup import (
-        incremental_lsh_pairs, minhash_signatures)
-    d = _loadp(spark, sf_dir, "documents")
-    # persisted: each signature table feeds BOTH the band probe and
-    # the match join — in production these are STORED tables (that is
-    # the operator's point), so the cache stands in for the store and
-    # halves the shingle aggregations in this self-contained form
-    old_sigs = minhash_signatures(
-        d.where(F.col("doc_id") % 3 != 0), "text", "doc_id",
-        k=3, n_hashes=8).persist()
-    new_sigs = minhash_signatures(
-        d.where(F.col("doc_id") % 3 == 0), "text", "doc_id",
-        k=3, n_hashes=8).persist()
-    return (incremental_lsh_pairs(old_sigs, new_sigs,
-                                  n_hashes=8, bands=4)
-            .select(F.col("doc_a").cast("bigint").alias("doc_a"),
-                    F.col("doc_b").cast("bigint").alias("doc_b"),
-                    "side", "sig_matches"))
-
-
 def q101_kwic(spark, sf_dir):
     """Keyword-in-context concordance (operators.retrieval
     .kwic_snippets): every occurrence of 'spark' with its +-3-token
@@ -1173,45 +1069,6 @@ def q101_kwic(spark, sf_dir):
     from python_mecab_ner_spark.operators.retrieval import kwic_snippets
     d = _loadp(spark, sf_dir, "documents")
     return kwic_snippets(d, "text", "doc_id", term="spark", window=3)
-
-
-def q102_split_leakage(spark, sf_dir):
-    """Train/val/test leakage audit: LSH-verified near-dup pairs
-    (the q27 candidate+verify path) classified by the q69 hash-split
-    membership of their endpoints — pairs crossing split boundaries
-    are exactly the contamination "Deduplicating Training Data"
-    warns about; the release gate every dataset card should print."""
-    from python_mecab_ner_spark.functions.hashing import bucket
-    from python_mecab_ner_spark.operators.dedup import lsh_verified_pairs
-    d = _loadp(spark, sf_dir, "documents")
-    pairs = lsh_verified_pairs(d, "text", "doc_id",
-                               k=3, n_hashes=8, bands=4, min_shared=2)
-    b = bucket(F.col("doc_id").cast("string"), 10, salt="split:")
-    split = (F.when(b <= 7, "train").when(b == 8, "val")
-             .otherwise("test"))
-    sp = d.select("doc_id", split.alias("split"))
-    sa = sp.select(F.col("doc_id").alias("doc_a"),
-                   F.col("split").alias("_sa"))
-    sb = sp.select(F.col("doc_id").alias("doc_b"),
-                   F.col("split").alias("_sb"))
-    return (pairs.join(sa, "doc_a").join(sb, "doc_b")
-            .groupBy(F.least("_sa", "_sb").alias("split_1"),
-                     F.greatest("_sa", "_sb").alias("split_2"))
-            .agg(F.count("*").cast("bigint").alias("n_pairs"))
-            .withColumn("crossing",
-                        (F.col("split_1") != F.col("split_2"))
-                        .cast("int")))
-
-
-def q103_weighted_simhash(spark, sf_dir):
-    """IDF-weighted SimHash fingerprints (operators.dedup
-    .simhash_weighted): words vote with bit-length-idf weight so
-    template boilerplate barely moves the fingerprint — the
-    precision upgrade over q18's unweighted SimHash for near-dup
-    detection on template-heavy web text."""
-    from python_mecab_ner_spark.operators.dedup import simhash_weighted
-    d = _loadp(spark, sf_dir, "documents")
-    return simhash_weighted(d, "text", "doc_id", n_bits=16)
 
 
 def q105_source_risk(spark, sf_dir):
@@ -1317,30 +1174,6 @@ def q108_eval_sample(spark, sf_dir):
                     F.col("rk").cast("int").alias("rk")))
 
 
-def q109_containment(spark, sf_dir):
-    """Near-containment pairs (operators.dedup.containment_pairs):
-    Broder containment |A∩B|/min(|A|,|B|) in integer ppm over the
-    q16 DF-capped shingle sets — catches a short doc quoted whole
-    inside a longer one (containment ~1, jaccard low), the asymmetric
-    duplication a jaccard-only dedup gate ships twice."""
-    from python_mecab_ner_spark.operators.dedup import containment_pairs
-    d = _loadp(spark, sf_dir, "documents")
-    return containment_pairs(d, "text", "doc_id", k=3, min_shared=2,
-                             max_df=256, min_containment_ppm=500_000)
-
-
-def q111_dup_coverage(spark, sf_dir):
-    """Cross-doc duplicated-window coverage (operators.dedup
-    .cross_doc_ngram_coverage): ppm of each doc's positional 5-gram
-    windows whose gram occurs in >= 1 other document — the window-
-    granular ExactSubstr-dedup signal (Lee et al. 2022) that flags
-    mosaic copying q16/q17's whole-doc pair tests miss."""
-    from python_mecab_ner_spark.operators.dedup import (
-        cross_doc_ngram_coverage)
-    d = _loadp(spark, sf_dir, "documents")
-    return cross_doc_ngram_coverage(d, "text", "doc_id", k=5)
-
-
 # deterministic messy-decoration appended to every 3rd doc (the
 # DuckDB twin is _MESSY_TEXT_SQL below; the corpus itself is already
 # normalized, so `changed` isolates exactly the decorated docs)
@@ -1370,45 +1203,6 @@ def q113_normalize(spark, sf_dir):
                     md5_int(norm).alias("norm_fp"))
 
 
-def q114_winnow(spark, sf_dir):
-    """Winnowing fingerprints (operators.dedup.winnow_fingerprints,
-    MOSS/SIGMOD-2003): min-hash per sliding window of 4 consecutive
-    3-gram hashes, distinct per doc — guarantees any shared >= 6-word
-    run between docs shares a fingerprint at ~2/5 shingle density.
-    Entirely per-row array exprs; the explode is the only
-    row-multiplier."""
-    from python_mecab_ner_spark.operators.dedup import winnow_fingerprints
-    d = _loadp(spark, sf_dir, "documents")
-    return winnow_fingerprints(d, "text", "doc_id", k=3, w=4)
-
-
-def q115_source_dup_matrix(spark, sf_dir):
-    """Cross-source near-duplicate matrix: LSH-verified near-dup
-    pairs (the q27/q102 candidate+verify path) bucketed by the source
-    pair of their endpoints — the DOC-level redundancy complement of
-    q106's vocabulary overlap: two sources with high cross rates are
-    re-crawls/mirrors of each other and should be mixture-weighted as
-    one.  Source dims broadcast into the pair stream; one final
-    config-sized aggregate."""
-    from python_mecab_ner_spark.operators.dedup import lsh_verified_pairs
-    d = _loadp(spark, sf_dir, "documents")
-    pairs = lsh_verified_pairs(d, "text", "doc_id",
-                               k=3, n_hashes=8, bands=4, min_shared=2)
-    src = d.select("doc_id", "source")
-    sa = src.select(F.col("doc_id").alias("doc_a"),
-                    F.col("source").alias("_sa"))
-    sb = src.select(F.col("doc_id").alias("doc_b"),
-                    F.col("source").alias("_sb"))
-    return (pairs.join(F.broadcast(sa), "doc_a")
-            .join(F.broadcast(sb), "doc_b")
-            .groupBy(F.least("_sa", "_sb").alias("source_1"),
-                     F.greatest("_sa", "_sb").alias("source_2"))
-            .agg(F.count("*").cast("bigint").alias("n_pairs"))
-            .withColumn("cross_source",
-                        (F.col("source_1") != F.col("source_2"))
-                        .cast("int")))
-
-
 def q116_weighted_sample(spark, sf_dir):
     """Sequential Poisson pps sample (operators.sample
     .weighted_priority_sample, Ohlsson 1998): 10 docs per source with
@@ -1435,33 +1229,6 @@ def q117_script_mix(spark, sf_dir):
     d = _load(spark, sf_dir, "documents")
     return (d.select("doc_id", _pii_text().alias("t"))
             .select("doc_id", *TX.script_mix_ppm(F.col("t"))))
-
-
-DUPSPAN_K = 5   # ExactSubstr length threshold: runs >= 5 words are cut
-
-
-def q118_dup_spans(spark, sf_dir):
-    """Maximal cross-doc duplicated spans (operators.dedup
-    .dup_substring_runs) — the span-structured half of ExactSubstr
-    dedup (Lee et al. 2022): WHERE the copied text lives, as (start,
-    length) word intervals, not just how much (q111).  k=5 on this
-    corpus isolates genuine template copies (71 runs at sf0.01) from
-    small-vocab random collisions.  Gaps-and-islands over the
-    duplicated positional grams costs ONE doc-keyed exchange."""
-    from python_mecab_ner_spark.operators.dedup import dup_substring_runs
-    d = _loadp(spark, sf_dir, "documents")
-    return dup_substring_runs(d, "text", "doc_id", k=DUPSPAN_K)
-
-
-def q119_dup_span_removal(spark, sf_dir):
-    """ExactSubstr span REMOVAL (operators.dedup.remove_dup_spans):
-    cut every q118 interval out of every copy, rejoin the survivors
-    in order, fingerprint the cleaned text (the post-removal exact-
-    dedup key).  The cut itself is a per-row indexed array filter —
-    no range join, no second corpus shuffle."""
-    from python_mecab_ner_spark.operators.dedup import remove_dup_spans
-    d = _loadp(spark, sf_dir, "documents")
-    return remove_dup_spans(d, "text", "doc_id", k=DUPSPAN_K)
 
 
 def q120_vocab_drift(spark, sf_dir):
@@ -1539,52 +1306,6 @@ def q123_hyperball(spark, sf_dir):
                       n_registers=HYPERBALL_REGS)
             .select(F.col("node").cast("bigint").alias("node"),
                     "bucket", "max_rho"))
-
-
-def q124_pq_topk(spark, sf_dir):
-    """Product-quantization ANN (operators.ann.pq_topk, Jegou 2011):
-    8 subspace codebooks over the int8-quantized embeddings, vectors
-    stored as 8 codes, query scanned via a broadcast ADC lookup table
-    — the billion-vector RAM lever (dims*4 bytes -> m bytes) next to
-    q51's int8 scan.  Every distance is an exact bigint (deterministic
-    seeded-sample codebooks; kmeans_codebook plugs into the same
-    (j, c, cent) shape for trained cells).  Honest recall@10 vs the
-    exact int8 scan: 0.5 on these near-isotropic embeddings (32-bit
-    codes; same caveat as q21/q29)."""
-    from python_mecab_ner_spark.operators.ann import pq_topk
-    e = _load(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in
-            e.where("vec_id = 0").select("embedding").first()[0]]
-    return pq_topk(e, qvec, k=10)
-
-
-EMB_OUTLIER_Z10 = 30  # |z| > 3.0, cross-multiplied exact-integer test
-
-
-def q127_embedding_outliers(spark, sf_dir):
-    """Per-dimension embedding outlier audit (operators.ann
-    .embedding_dim_outliers): exact-integer cross-multiplied z-test
-    over the int8-quantized table — flags broken encodes before ANN /
-    SemDeDup indexing.  One dim-keyed aggregate (64 rows, broadcast
-    back) + one per-vector combinable aggregate; no sqrt, no floats,
-    no window."""
-    from python_mecab_ner_spark.operators.ann import embedding_dim_outliers
-    e = _load(spark, sf_dir, "embeddings")
-    return embedding_dim_outliers(e, z10=EMB_OUTLIER_Z10)
-
-
-def q128_blocking_audit(spark, sf_dir):
-    """Dedup blocking-quality audit (operators.dedup.blocking_audit):
-    recall/precision of the q17 banded-LSH blocker against the q16
-    capped-exact-Jaccard ground truth (jaccard >= 0.5 by integer
-    cross-multiply) — the sample-corpus sheet that licenses running
-    ONLY the blocker at 100 TB.  One pair-key join + two 1-row
-    aggregates on top of the two existing bounded pair plans."""
-    from python_mecab_ner_spark.operators.dedup import blocking_audit
-    d = _loadp(spark, sf_dir, "documents")
-    return blocking_audit(d, "text", "doc_id", k=3, min_shared=2,
-                          max_df=MAX_SH_DF, n_hashes=8, bands=4,
-                          jaccard_ppm=500_000)
 
 
 # robots.txt-style disallow rules for the synthetic frontier (q129):
@@ -2009,7 +1730,7 @@ def q147_bcubed_eval(spark, sf_dir):
     leading p_type word as gold classes.  Three partial-aggregable
     groupBys + a 1-row broadcast total, no windows; every division is
     the two-level integer floor (Spark `div` == DuckDB `//`), so the
-    oracle matches bit-for-bit (the q26/q29 float-trap rule).  The
+    oracle matches bit-for-bit (the cross-engine float-trap rule).  The
     real consumer is kg_canonical_bcubed, which scores the LSH+CC
     alias canonicalization on the extracted entity dimension."""
     from python_mecab_ner_spark.operators.metrics import bcubed_ppm
@@ -2355,50 +2076,6 @@ def _coverage_oracle_sql(k: int = 5) -> str:
     return s + f"""
         SELECT CAST(round AS INT) AS round,
                CAST(item AS BIGINT) AS item, gain
-        FROM ({unions})"""
-
-
-def _kcenter_oracle_sql(k: int = 5) -> str:
-    """Unrolled Gonzalez farthest-first twin of q194: int8
-    quantization (the q51 rule), per round the (max dist, min id)
-    winner over the running min-distance table, then one least() fold
-    of the new center.  Distance tables MATERIALIZED (each feeds the
-    argmax and the next fold)."""
-    l2 = ("list_sum(list_transform(range(1, len(z.qe) + 1), "
-          "i -> (z.qe[i] - c.qe[i]) * (z.qe[i] - c.qe[i])))")
-    s = """
-        WITH qz AS MATERIALIZED (
-            SELECT vec_id,
-                   list_transform(embedding,
-                       x -> CAST(greatest(-128, least(127,
-                            floor(CAST(x AS DOUBLE) * 127)))
-                            AS BIGINT)) AS qe
-            FROM embeddings),
-        w1 AS MATERIALIZED (
-            SELECT vec_id AS cid, CAST(0 AS BIGINT) AS d FROM qz
-            ORDER BY vec_id LIMIT 1),
-        d1 AS MATERIALIZED (
-            SELECT z.vec_id, """ + l2 + """ AS d
-            FROM qz z, (SELECT qe FROM qz JOIN w1 ON vec_id = cid) c)"""
-    for r in range(2, k + 1):
-        s += f""",
-        w{r} AS MATERIALIZED (
-            SELECT vec_id AS cid, CAST(d AS BIGINT) AS d FROM d{r - 1}
-            ORDER BY d DESC, vec_id LIMIT 1)"""
-        if r < k:
-            s += f""",
-        d{r} AS MATERIALIZED (
-            SELECT z.vec_id, least(p.d, {l2}) AS d
-            FROM qz z
-            JOIN d{r - 1} p ON p.vec_id = z.vec_id
-            CROSS JOIN (SELECT qe FROM qz JOIN w{r} ON vec_id = cid)
-                AS c)"""
-    unions = " UNION ALL ".join(
-        f"SELECT {r} AS round, cid, d FROM w{r}" for r in range(1, k + 1))
-    return s + f"""
-        SELECT CAST(round AS INT) AS round,
-               CAST(cid AS BIGINT) AS center_id,
-               CAST(d AS BIGINT) AS dist
         FROM ({unions})"""
 
 
@@ -2908,25 +2585,6 @@ def q171_sorted_neighborhood(spark, sf_dir):
     return res
 
 
-def q172_prefix_filter_join(spark, sf_dir):
-    """Exact set-similarity self-join at Jaccard >= 0.9 via prefix
-    filtering (operators.dedup.prefix_filter_pairs, the PPJoin
-    family): candidates COMPLETE at the threshold with no df cap and
-    no LSH recall loss — rare-token prefixes are the join keys, hot
-    stopwords never enter one (and the higher the threshold the
-    shorter the prefix: at 0.9 a doc contributes ~n/10 join keys).
-    The oracle recomputes the same df-ordered prefixes and full-set
-    integer Jaccard in DuckDB."""
-    from python_mecab_ner_spark.operators.dedup import prefix_filter_pairs
-    docs = _load(spark, sf_dir, "documents")
-    out = prefix_filter_pairs(docs, "text", "doc_id", t_ppm=900_000)
-    res = out.select(F.col("doc_a").cast("bigint").alias("doc_a"),
-                     F.col("doc_b").cast("bigint").alias("doc_b"),
-                     "inter", "uni")
-    res.unpersist_input = out.unpersist_input
-    return res
-
-
 KTRUSS_K = 4
 KTRUSS_ROUNDS = 3
 
@@ -2945,24 +2603,6 @@ def q173_ktruss(spark, sf_dir):
     return (ktruss(edges, k=KTRUSS_K, rounds=KTRUSS_ROUNDS)
             .select(F.col("a").cast("bigint").alias("a"),
                     F.col("b").cast("bigint").alias("b"), "support"))
-
-
-def q174_multi_blocking_audit(spark, sf_dir):
-    """Three-strategy blocking audit (operators.dedup
-    .multi_blocking_audit): recall/precision of banded LSH (q17),
-    sorted-neighborhood (q171), and prefix-filter (q172) candidate
-    sets against the SAME exact capped-Jaccard truth (q16 at >= 0.5)
-    — one row per strategy, the sheet that picks the production
-    blocker before any of them runs at 100 TB."""
-    from python_mecab_ner_spark.operators.dedup import \
-        multi_blocking_audit
-    d = _loadp(spark, sf_dir, "documents")
-    out = multi_blocking_audit(d, "text", "doc_id", k=3, min_shared=2,
-                               max_df=MAX_SH_DF)
-    res = out.select("strategy", "n_truth", "n_cand", "n_hit",
-                     "recall_ppm", "precision_ppm")
-    res.unpersist_input = out.unpersist_input
-    return res
 
 
 def q176_star_cc(spark, sf_dir):
@@ -2990,7 +2630,6 @@ def q176_star_cc(spark, sf_dir):
 MIS_ROUNDS = 8
 MATCH_ROUNDS = 10   # q188: converges well inside this at both SFs
 COVER_K = 5     # q193 greedy-coverage rounds, shared with the oracle
-KCENTER_K = 5   # q194 farthest-first rounds, shared with the oracle
 JSONL_FILES = 8   # q203: shard count, shared with the oracle
 TEMPORAL_ORACLE_ROUNDS = 10  # q206: oracle unroll (7 measured at
                              # sf0.01); Spark runs TEMPORAL_BUDGET
@@ -3068,9 +2707,9 @@ def q180_semantic_decon(spark, sf_dir):
     hash-split into a benchmark side (vec_id % 41 == 0) and the
     corpus; corpus vectors whose int8-exact cosine against any bench
     vector reaches 3/10 are flagged with hit count + max integer dot.
-    The semantic twin of q46's n-gram screen — catches paraphrased
-    eval leakage; threshold 0.3 because the synthetic payload is
-    near-isotropic (corpus max cosine 0.455, measured)."""
+    Catches paraphrased eval leakage that an n-gram screen misses;
+    threshold 0.3 because the synthetic payload is near-isotropic
+    (corpus max cosine 0.455, measured)."""
     from python_mecab_ner_spark.operators.ann import \
         semantic_decontaminate
     emb = _load(spark, sf_dir, "embeddings")
@@ -3330,20 +2969,6 @@ def q193_coverage_selection(spark, sf_dir):
     return greedy_max_coverage(pairs, "doc_id", "gram", k=COVER_K)
 
 
-def q194_kcenter(spark, sf_dir):
-    """Farthest-first k-center exemplars (operators.ann
-    .kcenter_centers) over the int8-quantized embeddings: 5
-    maximally-spread vectors with their selection-time min squared
-    distances — the diversity-selection complement of SemDeDup (q61
-    removes the redundant; this picks the spread, for eval seeding
-    and annotation-batch diversity).  Exact integer L2 keeps the
-    trajectory hash-stable cross-engine; the oracle unrolls the same
-    argmax + running-least recurrence with the q51 quantization."""
-    from python_mecab_ner_spark.operators.ann import kcenter_centers
-    e = _load(spark, sf_dir, "embeddings")
-    return kcenter_centers(e, k=KCENTER_K)
-
-
 def _template_urls():
     """Deterministic route-shaped synthetic URLs (q47 injection
     convention): four md5-chosen route classes exercising every q195
@@ -3521,8 +3146,8 @@ def q200_pareto(spark, sf_dir):
     length-vs-diversity tradeoff set — the selection curve read when
     two curation objectives compete and a single gate (q95) would
     pick a point, not the curve.  Token arrays are materialized in
-    their own projection before size/array_distinct (the winnow HOF
-    lesson); diversity is exact integer div; the oracle is the
+    their own projection before size/array_distinct (the HOF
+    re-evaluation lesson); diversity is exact integer div; the oracle is the
     recursion-free NOT EXISTS dominance test, so the hash certifies
     the bucketed two-phase prune against brute-force dominance."""
     from python_mecab_ner_spark.operators.sample import pareto_frontier
@@ -3965,7 +3590,7 @@ def q213_rand_ari(spark, sf_dir):
     """Pair-counting clustering agreement (operators.metrics
     .pair_agreement_ppm): exact-integer Rand index + ARI of the
     sign-pattern clustering (bucket = sign bits of the first 8
-    embedding dims — the 1-bit SimHash face of q18/q103) against
+    embedding dims — the 1-bit SimHash face of q18) against
     the gold labels.  The pair-weighted complement of q147's
     B-cubed: B3 weights every item, Rand weights every PAIR, so a
     shattered giant cluster that B3 forgives Rand punishes.
@@ -4049,121 +3674,6 @@ _ARI_ORACLE_SQL = (
         "SELECT vec_id AS i, CAST(CASE WHEN vec_id % 10 = 0"
         " THEN (label + 1) % 10 ELSE label END AS BIGINT) AS c,"
         " label AS g FROM embeddings"))
-
-
-def q215_cdc_dedup(spark, sf_dir):
-    """Content-defined chunking transfer savings on a recrawl
-    (operators.dedup.cdc_chunks vs the fixed_chunks control):
-    snapshot 2 PREPENDS an md5-derived marker to ~1/3 of pages (the
-    q47/q208 injection convention; a front insertion is the
-    worst case for offset-addressed blocks), then each chunking
-    uploads only snapshot-2 chunks whose hash is NOT already in the
-    snapshot-1 store.  Content-anchored boundaries (8-char window,
-    cut at md5 % 64 == 0) localize the insertion to the head
-    chunk(s), so CDC re-uses almost everything; fixed 64-char
-    blocks shift wholesale and re-upload every changed page.  The
-    storage/transfer layer of the dedup family (q15 exact pages,
-    q48 frequent lines, q111 copied windows) — 2 rows, reuse_ppm
-    is the headline.  Within-snapshot chunk collisions at sf0.01
-    are ~500 ppm (measured), which is exactly why the per-source
-    dedup sheet certifies nothing and the recrawl contrast is the
-    demo."""
-    from python_mecab_ner_spark.operators.dedup import (cdc_chunks,
-                                                        fixed_chunks)
-    d = _loadp(spark, sf_dir, "documents").select("doc_id", "text")
-    changed = F.pmod(md5_int(F.col("doc_id").cast("string"),
-                             salt="cdcm:"), F.lit(3)) == 0
-    d2 = d.select(
-        "doc_id",
-        F.when(changed,
-               F.concat(F.lit("upd "),
-                        F.substring(F.md5("text"), 1, 8),
-                        F.lit(" "), F.col("text")))
-        .otherwise(F.col("text")).alias("text"))
-    rows = None
-    for method, fn in (("cdc", cdc_chunks), ("fixed", fixed_chunks)):
-        store = (fn(d, "text", "doc_id")
-                 .select("chunk_md5").distinct())
-        s2 = fn(d2, "text", "doc_id")
-        r = (s2.join(store.withColumn("_hit", F.lit(1)),
-                     "chunk_md5", "left")
-             .agg(F.sum("chunk_len").cast("bigint")
-                  .alias("total_chars"),
-                  F.sum(F.when(F.col("_hit") == 1, F.col("chunk_len"))
-                        .otherwise(0)).cast("bigint")
-                  .alias("reused_chars"))
-             .select(F.lit(method).alias("method"), "total_chars",
-                     "reused_chars",
-                     (F.col("total_chars") - F.col("reused_chars"))
-                     .cast("bigint").alias("new_chars"),
-                     F.expr("(reused_chars * 1000000) div total_chars")
-                     .cast("bigint").alias("reuse_ppm")))
-        rows = r if rows is None else rows.unionByName(r)
-    return rows
-
-
-def _cdc_chunks_sql(suffix: str, src: str) -> str:
-    """CDC chunk CTE chain over text source CTE `src` (doc_id,
-    text); emits chunks{suffix} (doc_id, chunk_len, h).  Twin of
-    dedup.cdc_chunks (gram 8, divisor 64, salt cdc:)."""
-    h = md5_int_sql("substr(text, CAST(i AS INT), 8)", salt="cdc:")
-    return f"""
-    t{suffix} AS (SELECT doc_id, text, length(text) AS n FROM {src}),
-    pos{suffix} AS (SELECT doc_id, text, n,
-                   unnest(range(1, greatest(n - 7, 1) + 1)) AS i
-            FROM t{suffix}),
-    cuts{suffix} AS (SELECT doc_id, text, n, i FROM pos{suffix}
-             WHERE i = 1 OR ({h} % 64 = 0)),
-    ch{suffix} AS (SELECT doc_id, text, n, i AS start,
-                  coalesce(lead(i) OVER (PARTITION BY doc_id
-                                         ORDER BY i), n + 1) AS nxt
-           FROM cuts{suffix}),
-    chunks{suffix} AS (SELECT doc_id, nxt - start AS chunk_len,
-                      md5(substr(text, CAST(start AS INT),
-                                 CAST(nxt - start AS INT))) AS h
-               FROM ch{suffix} WHERE nxt > start)"""
-
-
-def _fixed_chunks_sql(suffix: str, src: str, size: int = 64) -> str:
-    """Fixed-block chunk CTE chain — twin of dedup.fixed_chunks."""
-    return f"""
-    t{suffix} AS (SELECT doc_id, text, length(text) AS n FROM {src}
-                  WHERE length(text) > 0),
-    pos{suffix} AS (SELECT doc_id, text, n,
-                   unnest(range(1, n + 1, {size})) AS start
-            FROM t{suffix}),
-    chunks{suffix} AS (SELECT doc_id,
-                      least({size}, n - start + 1) AS chunk_len,
-                      md5(substr(text, CAST(start AS INT), {size}))
-                          AS h
-               FROM pos{suffix})"""
-
-
-def _cdc_oracle_sql() -> str:
-    mut = md5_int_sql("CAST(doc_id AS VARCHAR)", salt="cdcm:")
-    blocks = []
-    for method, gen in (("cdc", _cdc_chunks_sql),
-                        ("fixed", _fixed_chunks_sql)):
-        blocks.append(f"""
-        SELECT '{method}' AS method,
-               CAST(total_chars AS BIGINT) AS total_chars,
-               CAST(reused_chars AS BIGINT) AS reused_chars,
-               CAST(total_chars - reused_chars AS BIGINT)
-                   AS new_chars,
-               CAST((reused_chars * 1000000) // total_chars
-                    AS BIGINT) AS reuse_ppm
-        FROM (SELECT sum(chunk_len) AS total_chars,
-                     sum(CASE WHEN h IN (SELECT h FROM chunks{method}1)
-                         THEN chunk_len ELSE 0 END) AS reused_chars
-              FROM chunks{method}2)""")
-    return ("WITH snap2 AS (SELECT doc_id, CASE WHEN " + mut +
-            " % 3 = 0 THEN 'upd ' || substr(md5(text), 1, 8) || ' '"
-            " || text ELSE text END AS text FROM documents)," +
-            _cdc_chunks_sql("cdc1", "documents") + "," +
-            _cdc_chunks_sql("cdc2", "snap2") + "," +
-            _fixed_chunks_sql("fixed1", "documents") + "," +
-            _fixed_chunks_sql("fixed2", "snap2") +
-            blocks[0] + "\n        UNION ALL" + blocks[1])
 
 
 def q220_reshard(spark, sf_dir):
@@ -4403,79 +3913,6 @@ _SEASONAL_ORACLE_SQL = f"""
     FROM agg"""
 
 
-def q227_lsh_plan(spark, sf_dir):
-    """LSH parameter planner (operators.dedup.lsh_plan_audit): for
-    every (bands, rows) split of the 16-hash budget, the expected
-    candidate probability 1-(1-s^r)^b averaged over the REAL q16
-    Jaccard pair distribution — overall, over near-dups (s >= 0.7),
-    and over junk (s < 0.3) — all fixed-point-integer so the sheet
-    is hash-exact.  The design rationale behind q17/q21's (4,4)
-    banding, computed instead of asserted: OR-heavy bands drag junk
-    into verification, AND-heavy rows drop true near-dups."""
-    from python_mecab_ner_spark.operators.dedup import (jaccard_pairs,
-                                                        lsh_plan_audit)
-    d = _loadp(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(d, "text", "doc_id", k=3, min_shared=2,
-                          max_df=MAX_SH_DF)
-    out = lsh_plan_audit(pairs)
-    res = out.orderBy("bands")
-    res.unpersist_input = pairs.unpersist_input
-    return res
-
-
-def _lsh_plan_oracle_sql(shingle_cte: str, max_df: int) -> str:
-    """DuckDB twin of q227: the q16 pair CTEs + the shared
-    fixed-point collision expressions + one aggregate + a UNION-ALL
-    row per config."""
-    from python_mecab_ner_spark.operators.dedup import (
-        LSH_PLAN_CONFIGS, lsh_collision_ppm_expr)
-    aggs = ["count(*) AS n",
-            "sum(CASE WHEN sim >= 700000 THEN 1 ELSE 0 END) AS nh",
-            "sum(CASE WHEN sim < 300000 THEN 1 ELSE 0 END) AS nl"]
-    sels = []
-    for i, (b, r) in enumerate(LSH_PLAN_CONFIGS):
-        p = lsh_collision_ppm_expr("sim", b, r, "//")
-        aggs += [
-            f"sum({p}) AS s{i}",
-            f"sum(CASE WHEN sim >= 700000 THEN {p} ELSE 0 END)"
-            f" AS sh{i}",
-            f"sum(CASE WHEN sim < 300000 THEN {p} ELSE 0 END)"
-            f" AS sl{i}"]
-        sels.append(f"""
-            SELECT CAST({b} AS INT) AS bands, CAST({r} AS INT) AS rows,
-                   CAST(n AS BIGINT) AS n_pairs,
-                   CAST(nh AS BIGINT) AS n_hi,
-                   CAST(nl AS BIGINT) AS n_lo,
-                   CAST(s{i} // greatest(n, 1) AS BIGINT)
-                       AS exp_recall_ppm,
-                   CAST(sh{i} // greatest(nh, 1) AS BIGINT)
-                       AS hi_recall_ppm,
-                   CAST(sl{i} // greatest(nl, 1) AS BIGINT)
-                       AS lo_catch_ppm
-            FROM one""")
-    return shingle_cte + f"""
-        , keep AS (SELECT shingle FROM sh
-                   GROUP BY shingle HAVING count(*) <= {max_df}),
-        shc AS (SELECT sh.doc_id, sh.shingle FROM sh
-                JOIN keep USING (shingle)),
-        sizes AS (SELECT doc_id, count(*) AS n_sh
-                  FROM shc GROUP BY 1),
-        pairs AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 count(*) AS inter
-          FROM shc a JOIN shc b
-            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        jp AS (SELECT (inter * 1000000)
-                          // (sa.n_sh + sb.n_sh - inter) AS sim
-               FROM pairs
-               JOIN sizes sa ON sa.doc_id = doc_a
-               JOIN sizes sb ON sb.doc_id = doc_b
-               WHERE inter >= 2),
-        one AS (SELECT {', '.join(aggs)} FROM jp)
-        {' UNION ALL '.join(sels)}"""
-
-
 def q228_fresh_rank(spark, sf_dir):
     """Freshness-decayed authority rank: customer->supplier order
     edges weighted by power-of-two recency decay (q92's shiftright
@@ -4596,7 +4033,7 @@ def q59_bm25(spark, sf_dir):
     .bm25_topk): top-20 documents for a fixed query bag — all
     fractions cleared to 64-bit integers (k1=6/5, b=3/4, bit-length
     idf), so ranking is bit-identical across engines.  The lexical
-    retrieval path next to the ANN family (q20/q21/q29/q51)."""
+    retrieval path next to the ANN family (q20/q21)."""
     from python_mecab_ner_spark.operators.retrieval import bm25_topk
     ctx = _doc_context(spark, sf_dir)
     return (bm25_topk(ctx, BM25_TERMS, k=20)
@@ -4618,21 +4055,6 @@ def q60_pack_sequences(spark, sf_dir):
                            budget=PACK_BUDGET, n_buckets=PACK_BUCKETS)
             .select("doc_id", F.col("bucket").cast("int").alias("bucket"),
                     "bin_id", "start_off", "spill_bins"))
-
-
-SEMDEDUP_THRESHOLD = 6000   # int8-dot near-dup gate (self-dot ~16k)
-
-
-def q61_semdedup(spark, sf_dir):
-    """Semantic deduplication (operators.ann.semdedup_pairs, the
-    SemDeDup recipe): seeded-k-means clustering caps the pair search
-    at O(sum cell_size^2), int8 integer dots verify within cells —
-    composed entirely from oracled pieces (q29 codebook + q51
-    quantized kernel), and itself hash-exact against the unrolled
-    Lloyd + quantized-dot SQL twin."""
-    from python_mecab_ner_spark.operators.ann import semdedup_pairs
-    e = _load(spark, sf_dir, "embeddings")
-    return semdedup_pairs(e, threshold=SEMDEDUP_THRESHOLD, n_cells=16)
 
 
 PPR_SEEDS = [2, 4]   # part nodes 1 and 2 in the q40/q49 bipartite graph
@@ -4737,23 +4159,6 @@ def q64_cohort_retention(spark, sf_dir):
             .select(F.col("cohort_day").cast("int").alias("cohort_day"),
                     F.col("day_off").cast("int").alias("day_off"),
                     "n_users"))
-
-
-def q65_dedup_survivors(spark, sf_dir):
-    """Dedup survivor selection: q27's near-dup clusters + quality-
-    argmax keep-one-per-cluster (RefinedWeb keeps the best copy, not
-    an arbitrary one).  Ties broken by min doc_id via the packed-
-    integer max — ONE combinable aggregate over the cluster table, no
-    window (see operators/dedup.py::survivor_selection)."""
-    from python_mecab_ner_spark.operators.dedup import survivor_selection
-    d = _loadp(spark, sf_dir, "documents")
-    clusters = q27_neardup_clusters(spark, sf_dir)
-    members = clusters.join(
-        d.select("doc_id", TX.quality_score(F.col("text")).alias("q")),
-        "doc_id")
-    return (survivor_selection(members, "cluster_id", "doc_id", "q")
-            .select(F.col("cluster").alias("cluster_id"),
-                    "survivor_id", "best_score", "n_members"))
 
 
 def q69_hash_split(spark, sf_dir):
@@ -4910,18 +4315,6 @@ def q78_source_mix(spark, sf_dir):
                  F.max("rate").cast("bigint").alias("rate"),
                  F.sum(F.when(F.col("h") < F.col("rate"), 1)
                        .otherwise(0)).cast("bigint").alias("n_kept")))
-
-
-def q77_embedding_gram(spark, sf_dir):
-    """Integer Gram matrix of the int8-quantized embeddings
-    (operators/ann.py::gram_matrix): the exact second-moment statistic
-    behind whitening / dominant-component removal, reduced to a fixed
-    2080-key space regardless of corpus size.  The float eigen step is
-    client-side (dominant_component), keeping the plan and oracle
-    bit-exact."""
-    from python_mecab_ner_spark.operators.ann import gram_matrix
-    e = _load(spark, sf_dir, "embeddings")
-    return gram_matrix(e)
 
 
 def q72_training_prep(spark, sf_dir):
@@ -5973,11 +5366,10 @@ _SNAPSHOT_FIRST_50 = [
     "q12_lang_id", "q13_quality_score", "q47_pii_redact",
     "q139_c4_line_rules",
     # dedup / blocking family
-    "q15_exact_dedup", "q16_jaccard_pairs", "q17_lsh_pairs",
-    "q18_simhash", "q48_line_dedup", "q171_sorted_neighborhood",
-    "q174_multi_blocking_audit",
+    "q16_jaccard_pairs", "q17_lsh_pairs", "q18_simhash",
+    "q48_line_dedup", "q54_window_dedup", "q171_sorted_neighborhood",
     # ANN / embeddings
-    "q21_ann_lsh", "q29_ann_ivf",
+    "q20_ann_bruteforce", "q21_ann_lsh", "q180_semantic_decon",
     # graph
     "q40_pagerank", "q49_khop", "q154_modularity", "q161_wl_classes",
     "q162_scc", "q173_ktruss", "q176_star_cc", "q177_mis",
@@ -6021,7 +5413,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q12_lang_id": q12_lang_id,
         "q13_quality_score": q13_quality_score,
         "q14_fingerprint": q14_fingerprint,
-        "q15_exact_dedup": q15_exact_dedup,
         "q16_jaccard_pairs": q16_jaccard_pairs,
         "q17_lsh_pairs": q17_lsh_pairs,
         "q18_simhash": q18_simhash,
@@ -6029,10 +5420,7 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q20_ann_bruteforce": q20_ann_bruteforce,
         "q21_ann_lsh": q21_ann_lsh,
         "q22_salt_distribution": q22_salt_distribution,
-        "q26_embedding_neardup": q26_embedding_neardup,
-        "q27_neardup_clusters": q27_neardup_clusters,
         "q28_sessionize": q28_sessionize,
-        "q29_ann_ivf": q29_ann_ivf,
         "q30_rollup": q30_rollup,
         "q31_asof_join": q31_asof_join,
         "q32_trailing_window": q32_trailing_window,
@@ -6047,12 +5435,10 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q43_dup_argmax": q43_dup_argmax,
         "q44_evidence_scores": q44_evidence_scores,
         "q45_repetition_ppm": q45_repetition_ppm,
-        "q46_decontaminate": q46_decontaminate,
         "q47_pii_redact": q47_pii_redact,
         "q48_line_dedup": q48_line_dedup,
         "q49_khop": q49_khop,
         "q50_bigram_pmi": q50_bigram_pmi,
-        "q51_quantized_ann": q51_quantized_ann,
         "q53_surprisal": q53_surprisal,
         "q54_window_dedup": q54_window_dedup,
         "q55_stratified_sample": q55_stratified_sample,
@@ -6061,18 +5447,15 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q58_neighbor_jaccard": q58_neighbor_jaccard,
         "q59_bm25": q59_bm25,
         "q60_pack_sequences": q60_pack_sequences,
-        "q61_semdedup": q61_semdedup,
         "q62_ppr": q62_ppr,
         "q63_funnel": q63_funnel,
         "q64_cohort_retention": q64_cohort_retention,
-        "q65_dedup_survivors": q65_dedup_survivors,
         "q66_url_canonical": q66_url_canonical,
         "q67_chunk_overlap": q67_chunk_overlap,
         "q68_weighted_rank": q68_weighted_rank,
         "q69_hash_split": q69_hash_split,
         "q70_communities": q70_communities,
         "q72_training_prep": q72_training_prep,
-        "q77_embedding_gram": q77_embedding_gram,
         "q78_source_mix": q78_source_mix,
         "q80_kn_continuation": q80_kn_continuation,
         "q81_crawl_budget": q81_crawl_budget,
@@ -6086,30 +5469,18 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q95_quality_hist_gate": q95_quality_hist_gate,
         "q96_cooccurrence": q96_cooccurrence,
         "q99_degree_histogram": q99_degree_histogram,
-        "q100_incremental_lsh": q100_incremental_lsh,
         "q101_kwic": q101_kwic,
-        "q102_split_leakage": q102_split_leakage,
-        "q103_weighted_simhash": q103_weighted_simhash,
         "q105_source_risk": q105_source_risk,
         "q106_source_overlap": q106_source_overlap,
         "q107_next_word": q107_next_word,
         "q108_eval_sample": q108_eval_sample,
-        "q109_containment": q109_containment,
-        "q111_dup_coverage": q111_dup_coverage,
         "q113_normalize": q113_normalize,
-        "q114_winnow": q114_winnow,
-        "q115_source_dup_matrix": q115_source_dup_matrix,
         "q116_weighted_sample": q116_weighted_sample,
         "q117_script_mix": q117_script_mix,
-        "q118_dup_spans": q118_dup_spans,
-        "q119_dup_span_removal": q119_dup_span_removal,
         "q120_vocab_drift": q120_vocab_drift,
         "q121_blocklist": q121_blocklist,
         "q122_postings": q122_postings,
         "q123_hyperball": q123_hyperball,
-        "q124_pq_topk": q124_pq_topk,
-        "q127_embedding_outliers": q127_embedding_outliers,
-        "q128_blocking_audit": q128_blocking_audit,
         "q129_robots_gate": q129_robots_gate,
         "q132_vocab_head": q132_vocab_head,
         "q133_fetch_rounds": q133_fetch_rounds,
@@ -6147,9 +5518,7 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q169_heaps_law": q169_heaps_law,
         "q170_symspell_d2": q170_symspell_d2,
         "q171_sorted_neighborhood": q171_sorted_neighborhood,
-        "q172_prefix_filter_join": q172_prefix_filter_join,
         "q173_ktruss": q173_ktruss,
-        "q174_multi_blocking_audit": q174_multi_blocking_audit,
         "q176_star_cc": q176_star_cc,
         "q177_mis": q177_mis,
         "q178_funnel": q178_funnel,
@@ -6164,7 +5533,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q189_cusum": q189_cusum,
         "q190_betweenness": q190_betweenness,
         "q193_coverage_selection": q193_coverage_selection,
-        "q194_kcenter": q194_kcenter,
         "q195_url_templates": q195_url_templates,
         "q196_rake": q196_rake,
         "q197_boruvka_mst": q197_boruvka_mst,
@@ -6180,13 +5548,11 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q210_zorder_layout": q210_zorder_layout,
         "q212_spam_mass": q212_spam_mass,
         "q213_rand_ari": q213_rand_ari,
-        "q215_cdc_dedup": q215_cdc_dedup,
         "q220_reshard": q220_reshard,
         "q221_postings_gaps": q221_postings_gaps,
         "q222_class_terms": q222_class_terms,
         "q223_neyman": q223_neyman,
         "q224_seasonal_outliers": q224_seasonal_outliers,
-        "q227_lsh_plan": q227_lsh_plan,
         "q228_fresh_rank": q228_fresh_rank,
         "kg_triples_by_pred": kg_triples_by_pred,
         "kg_modularity": kg_modularity,
@@ -6291,39 +5657,6 @@ def oracle_sql() -> dict[str, str]:
     """
 
     shingle_cte = _shingle_cte(3)
-
-    # shared dup-span CTE (q118/q119): positional k-gram hashes ->
-    # >=2-doc duplicated grams -> gaps-and-islands maximal runs;
-    # matches operators.dedup.dup_substring_runs exactly (same salt,
-    # same truncated-gram edge for docs shorter than k)
-    _ds_gram = md5_int_sql(
-        f"array_to_string(w[i + 1 : least(i + {DUPSPAN_K}, len(w))], ' ')",
-        salt="ds:")
-    dupspan_cte = f"""
-        WITH t AS (
-          SELECT doc_id,
-                 regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS w
-          FROM documents
-        ),
-        g AS (SELECT doc_id, w,
-                     list_transform(range(0, greatest(len(w) - {DUPSPAN_K}, 0) + 1),
-                                    i -> {_ds_gram}) AS hs
-              FROM t),
-        p AS (SELECT doc_id, i AS pos, hs[i + 1] AS gh
-              FROM (SELECT doc_id, hs, unnest(range(0, len(hs))) AS i
-                    FROM g)),
-        dup AS (SELECT gh FROM p GROUP BY gh
-                HAVING count(DISTINCT doc_id) >= 2),
-        m AS (SELECT doc_id, pos FROM p
-              WHERE gh IN (SELECT gh FROM dup)),
-        isl AS (SELECT doc_id, pos,
-                       pos - row_number() OVER (PARTITION BY doc_id
-                                                ORDER BY pos) AS grp
-                FROM m),
-        runs AS (SELECT doc_id, min(pos) AS run_start,
-                        max(pos) - min(pos) + {DUPSPAN_K} AS run_len
-                 FROM isl GROUP BY doc_id, grp)
-    """
 
     # HyperBall unrolled rounds (q123): r0 = own-id register, each
     # round = elementwise max with out-neighbors' previous round.
@@ -6668,47 +6001,6 @@ def oracle_sql() -> dict[str, str]:
     _bl_sum = " + ".join(n for _, n in _bl)
 
 
-    # PQ oracle (q124): same int8 quantization as q51, seeds = 16
-    # smallest md5("pq:"||id), codebook = their subvectors, encode =
-    # packed-min argmin, ADC = the query row's own dist rows as LUT
-    _pq_h = md5_int_sql("CAST(vec_id AS VARCHAR)", salt="pq:")
-    pq_sql = f"""
-        WITH qz AS (SELECT vec_id,
-                           list_transform(embedding,
-                               x -> CAST(greatest(-128, least(127,
-                                    floor(CAST(x AS DOUBLE) * 127)))
-                                    AS BIGINT)) AS qe
-                    FROM embeddings),
-        seeds AS (SELECT qe, rn - 1 AS c FROM (
-                    SELECT qe, row_number() OVER
-                               (ORDER BY {_pq_h}, vec_id) AS rn
-                    FROM qz) WHERE rn <= 16),
-        cent AS (SELECT c, j, qe[j * 8 + 1 : (j + 1) * 8] AS cent
-                 FROM (SELECT c, qe, unnest(range(0, 8)) AS j
-                       FROM seeds)),
-        sub AS (SELECT vec_id, j, qe[j * 8 + 1 : (j + 1) * 8] AS sv
-                FROM (SELECT vec_id, qe, unnest(range(0, 8)) AS j
-                      FROM qz)),
-        dist AS (SELECT s.vec_id, s.j, c.c,
-                        list_sum(list_transform(range(1, 9),
-                            i -> (s.sv[i] - c.cent[i])
-                                 * (s.sv[i] - c.cent[i]))) AS d2
-                 FROM sub s JOIN cent c ON c.j = s.j),
-        codes AS (SELECT vec_id, j,
-                         CAST(min(d2 * 1024 + c) % 1024 AS INT) AS code
-                  FROM dist GROUP BY 1, 2),
-        lut AS (SELECT j, c AS code, d2 AS qd
-                FROM dist WHERE vec_id = 0),
-        s AS (SELECT codes.vec_id, sum(l.qd) AS pq_dist
-              FROM codes JOIN lut l
-                ON l.j = codes.j AND l.code = codes.code
-              GROUP BY 1)
-        SELECT vec_id, CAST(pq_dist AS BIGINT) AS pq_dist,
-               CAST(row_number() OVER (ORDER BY pq_dist ASC, vec_id)
-                    AS INT) AS rank
-        FROM s ORDER BY pq_dist, vec_id LIMIT 10
-    """
-
     minhash_cols = ", ".join(
         f"CAST(min({md5_int_sql('shingle', salt=f'mh{i}:')}) AS BIGINT) AS mh{i}"
         for i in range(8))
@@ -6716,219 +6008,12 @@ def oracle_sql() -> dict[str, str]:
         f"SELECT doc_id, {b} AS band_idx, md5(concat_ws(',', mh{b*2}, mh{b*2+1})) AS band_key FROM sig"
         for b in range(4))
 
-    # shared connected-components fixpoint (q27 + q65): LSH-verified
-    # pairs -> transitive closure; `reach(n, m)` holds every (node,
-    # reachable node) — min(m) per n is the cluster id
-    cc_cte = shingle_cte.replace(
-        "WITH t AS", "WITH RECURSIVE t AS", 1) + f"""
-            , sig AS (SELECT doc_id, {minhash_cols} FROM sh GROUP BY doc_id),
-            banded AS ({band_keys}),
-            cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                     FROM banded a JOIN banded b
-                       ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                      AND a.doc_id < b.doc_id),
-            p0 AS (
-              SELECT c.doc_a, c.doc_b, count(*) AS inter
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.doc_a
-              JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-              GROUP BY 1, 2),
-            pairs AS (SELECT doc_a, doc_b FROM p0 WHERE inter >= 2),
-            edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-                      UNION SELECT doc_b, doc_a FROM pairs),
-            nodes AS (SELECT DISTINCT a AS n FROM edges),
-            reach(n, m) AS (
-              SELECT n, n FROM nodes
-              UNION
-              SELECT r.n, e.b FROM reach r JOIN edges e ON r.m = e.a)
-    """
-
     simhash_votes = ", ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
         for i in range(16))
     simhash_bits = " + ".join(
         f"CASE WHEN v{i} > 0 THEN CAST({1 << i} AS BIGINT) ELSE 0 END"
         for i in range(16))
-    # idf-weighted vote twin (q103): same bits, wt instead of +-1
-    simhash_wvotes = ", ".join(
-        f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN wt ELSE -wt END) AS v{i}"
-        for i in range(16))
-    # non-recursive prefix of cc_cte: LSH-verified pairs only (q102)
-    lsh_pairs_cte = shingle_cte + f"""
-            , sig AS (SELECT doc_id, {minhash_cols} FROM sh GROUP BY doc_id),
-            banded AS ({band_keys}),
-            cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                     FROM banded a JOIN banded b
-                       ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                      AND a.doc_id < b.doc_id),
-            p0 AS (
-              SELECT c.doc_a, c.doc_b, count(*) AS inter
-              FROM cand c
-              JOIN sh sa ON sa.doc_id = c.doc_a
-              JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-              GROUP BY 1, 2),
-            pairs AS (SELECT doc_a, doc_b FROM p0 WHERE inter >= 2)
-    """
-
-    # blocking-audit oracle (q128): q16's capped-exact truth side x
-    # q17's raw banded candidates, one pair-key join, ppm ratios
-    blocking_audit_sql = shingle_cte + f"""
-        , keep AS (SELECT shingle FROM sh
-                   GROUP BY shingle HAVING count(*) <= {MAX_SH_DF}),
-        shc AS (SELECT sh.doc_id, sh.shingle FROM sh
-                JOIN keep USING (shingle)),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY 1),
-        ex AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                      count(*) AS inter
-               FROM shc a JOIN shc b
-                 ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-               GROUP BY 1, 2),
-        truth AS (SELECT doc_a, doc_b FROM ex
-                  JOIN sizes sa ON sa.doc_id = ex.doc_a
-                  JOIN sizes sb ON sb.doc_id = ex.doc_b
-                  WHERE inter >= 2
-                    AND inter * 1000000
-                        >= 500000 * (sa.n_sh + sb.n_sh - inter)),
-        sig AS (SELECT doc_id, {minhash_cols} FROM sh GROUP BY doc_id),
-        banded AS ({band_keys}),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                 FROM banded a JOIN banded b
-                   ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-                  AND a.doc_id < b.doc_id),
-        tt AS (SELECT count(*) AS n_truth,
-                      coalesce(sum(CASE WHEN c.doc_a IS NOT NULL
-                                        THEN 1 ELSE 0 END), 0) AS n_hit
-               FROM truth t LEFT JOIN cand c
-                 ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b),
-        cc AS (SELECT count(*) AS n_cand FROM cand)
-        SELECT CAST(n_truth AS BIGINT) AS n_truth,
-               CAST(n_cand AS BIGINT) AS n_cand,
-               CAST(n_hit AS BIGINT) AS n_hit,
-               CAST((n_hit * 1000000) // greatest(n_truth, 1)
-                    AS BIGINT) AS recall_ppm,
-               CAST((n_hit * 1000000) // greatest(n_cand, 1)
-                    AS BIGINT) AS precision_ppm
-        FROM tt CROSS JOIN cc
-    """
-
-    # three-strategy blocking audit (q174): q128's truth + LSH cand,
-    # plus sorted-neighborhood (q171 fragment, canonicalized pair
-    # key) and prefix-filter (q172 candidate fragment) — one stat row
-    # per strategy via a shared folding template
-    def _audit_stat(name: str, cand_cte: str) -> str:
-        return f"""
-        SELECT '{name}' AS strategy,
-               CAST(t.n_truth AS BIGINT) AS n_truth,
-               CAST(c.n_cand AS BIGINT) AS n_cand,
-               CAST(t.n_hit AS BIGINT) AS n_hit,
-               CAST((t.n_hit * 1000000) // greatest(t.n_truth, 1)
-                    AS BIGINT) AS recall_ppm,
-               CAST((t.n_hit * 1000000) // greatest(c.n_cand, 1)
-                    AS BIGINT) AS precision_ppm
-        FROM (SELECT count(*) AS n_truth,
-                     coalesce(sum(CASE WHEN c.doc_a IS NOT NULL
-                                       THEN 1 ELSE 0 END), 0) AS n_hit
-              FROM truth t LEFT JOIN {cand_cte} c
-                ON c.doc_a = t.doc_a AND c.doc_b = t.doc_b) t
-        CROSS JOIN (SELECT count(*) AS n_cand FROM {cand_cte}) c
-        """
-
-    multi_audit_sql = shingle_cte + f"""
-        , keep AS (SELECT shingle FROM sh
-                   GROUP BY shingle HAVING count(*) <= {MAX_SH_DF}),
-        shc AS (SELECT sh.doc_id, sh.shingle FROM sh
-                JOIN keep USING (shingle)),
-        sizes AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY 1),
-        ex AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                      count(*) AS inter
-               FROM shc a JOIN shc b
-                 ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-               GROUP BY 1, 2),
-        truth AS (SELECT doc_a, doc_b FROM ex
-                  JOIN sizes sa ON sa.doc_id = ex.doc_a
-                  JOIN sizes sb ON sb.doc_id = ex.doc_b
-                  WHERE inter >= 2
-                    AND inter * 1000000
-                        >= 500000 * (sa.n_sh + sb.n_sh - inter)),
-        sig AS (SELECT doc_id, {minhash_cols} FROM sh GROUP BY doc_id),
-        banded AS ({band_keys}),
-        lshcand AS (SELECT DISTINCT a.doc_id AS doc_a,
-                           b.doc_id AS doc_b
-                    FROM banded a JOIN banded b
-                      ON a.band_idx = b.band_idx
-                     AND a.band_key = b.band_key
-                     AND a.doc_id < b.doc_id),
-        snbase AS (SELECT substr(regexp_replace(lower(trim(text)),
-                          '\\s+', ' ', 'g'), 1, 16) AS blk,
-                          CAST(doc_id AS BIGINT) AS doc_id
-                   FROM documents),
-        snranked AS (SELECT blk, doc_id,
-                            row_number() OVER (ORDER BY blk, doc_id)
-                                AS rn
-                     FROM snbase),
-        sncand AS (SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
-                          greatest(a.doc_id, b.doc_id) AS doc_b
-                   FROM snranked a JOIN snranked b
-                     ON b.rn > a.rn AND b.rn <= a.rn + 3),
-        ptok AS (SELECT DISTINCT doc_id, token FROM (
-                    SELECT doc_id, unnest(regexp_split_to_array(
-                        regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                       'g'), ' ')) AS token
-                    FROM documents)
-                 WHERE token <> ''),
-        ptdf AS (SELECT token, count(*) AS tdf FROM ptok GROUP BY 1),
-        psizes AS (SELECT doc_id, count(*) AS n FROM ptok GROUP BY 1),
-        pord AS (SELECT t.doc_id, t.token, s.n,
-                        row_number() OVER (PARTITION BY t.doc_id
-                                           ORDER BY d.tdf, t.token)
-                            AS rn
-                 FROM ptok t JOIN ptdf d USING (token)
-                 JOIN psizes s USING (doc_id)),
-        pprefix AS (SELECT doc_id, token, n, rn FROM pord
-                    WHERE rn <= n - ((900000 * n + 999999) // 1000000)
-                              + 1),
-        pfcand AS (SELECT DISTINCT a.doc_id AS doc_a,
-                          b.doc_id AS doc_b
-                   FROM pprefix a JOIN pprefix b
-                     ON b.token = a.token AND a.doc_id < b.doc_id
-                    AND 900000 * greatest(a.n, b.n)
-                        <= 1000000 * least(a.n, b.n)
-                    AND least(a.n - a.rn, b.n - b.rn) + 1
-                        >= (900000 * (a.n + b.n) + 1899999)
-                           // 1900000)
-        {_audit_stat('lsh', 'lshcand')}
-        UNION ALL {_audit_stat('sorted_neighborhood', 'sncand')}
-        UNION ALL {_audit_stat('prefix_filter', 'pfcand')}
-    """
-
-
-    # embedding outlier oracle (q127): q51's floor-clip int8
-    # quantization, per-dim (n, s, ss), cross-multiplied z-test
-    emb_outliers_sql = f"""
-        WITH qz AS (SELECT vec_id,
-                           list_transform(embedding,
-                               x -> CAST(greatest(-128, least(127,
-                                    floor(CAST(x AS DOUBLE) * 127)))
-                                    AS BIGINT)) AS qe
-                    FROM embeddings),
-        dims AS (SELECT vec_id, j, qe[j + 1] AS x
-                 FROM (SELECT vec_id, qe,
-                              unnest(range(0, len(qe))) AS j
-                       FROM qz)),
-        st AS (SELECT j, count(*) AS n, sum(x) AS s, sum(x * x) AS ss
-               FROM dims GROUP BY 1),
-        fl AS (SELECT vec_id, d.j,
-                      CASE WHEN (x * n - s) * (x * n - s) * 100
-                                > {EMB_OUTLIER_Z10 * EMB_OUTLIER_Z10}
-                                  * (n * ss - s * s)
-                           THEN 1 ELSE 0 END AS f
-               FROM dims d JOIN st ON st.j = d.j)
-        SELECT vec_id, CAST(sum(f) AS BIGINT) AS n_extreme,
-               CAST(coalesce(min(CASE WHEN f = 1 THEN j END), -1)
-                    AS INT) AS first_dim
-        FROM fl GROUP BY 1
-    """
-
     mini_gaz_values = ", ".join(f"('{s}')" for s in MINI_GAZ)
 
     # robots-gate oracle (q129): md5-derived synthetic frontier +
@@ -7409,11 +6494,6 @@ def oracle_sql() -> dict[str, str]:
         "q12_lang_id": f"SELECT doc_id, {lang_sql} AS lang_pred FROM documents",
         "q13_quality_score": f"SELECT doc_id, {qual_sql} AS quality FROM documents",
         "q14_fingerprint": f"SELECT doc_id, {fp_sql} AS fp FROM documents",
-        "q15_exact_dedup": f"""
-            SELECT {fp_sql.replace('text', 'text')} AS fp,
-                   min(doc_id) AS doc_id, count(*) AS dup_count
-            FROM documents GROUP BY 1
-        """,
         "q16_jaccard_pairs": shingle_cte + f"""
             , keep AS (SELECT shingle FROM sh
                        GROUP BY shingle HAVING count(*) <= {MAX_SH_DF}),
@@ -7431,63 +6511,6 @@ def oracle_sql() -> dict[str, str]:
             JOIN sizes sb ON sb.doc_id = doc_b
             WHERE inter >= 2
         """,
-        # Broder containment over the same capped shingle sets as q16
-        "q109_containment": shingle_cte + f"""
-            , keep AS (SELECT shingle FROM sh
-                       GROUP BY shingle HAVING count(*) <= {MAX_SH_DF}),
-            shc AS (SELECT sh.doc_id, sh.shingle FROM sh
-                    JOIN keep USING (shingle)),
-            sizes AS (SELECT doc_id, count(*) AS n_sh FROM shc GROUP BY 1),
-            pairs AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-              FROM shc a JOIN shc b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-            j AS (SELECT doc_a, doc_b, inter,
-                         sa.n_sh AS n_a, sb.n_sh AS n_b,
-                         sa.n_sh + sb.n_sh - inter AS uni
-                  FROM pairs
-                  JOIN sizes sa ON sa.doc_id = doc_a
-                  JOIN sizes sb ON sb.doc_id = doc_b
-                  WHERE inter >= 2)
-            SELECT doc_a, doc_b, CAST(inter AS BIGINT) AS inter,
-                   CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-                   CAST((inter * 1000000) // least(n_a, n_b) AS BIGINT)
-                       AS containment_ppm,
-                   CAST((inter * 1000000) // uni AS BIGINT) AS jaccard_ppm
-            FROM j
-            WHERE (inter * 1000000) // least(n_a, n_b) >= 500000
-        """,
-        # positional (non-distinct) 5-gram windows; dup = gram seen in
-        # >= 2 docs anywhere in the corpus
-        "q111_dup_coverage": """
-            WITH t AS (
-              SELECT doc_id,
-                     regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS w
-              FROM documents
-            ),
-            idx AS (
-              SELECT doc_id, w,
-                     unnest(range(0, greatest(len(w) - 5, 0) + 1)) AS i
-              FROM t
-            ),
-            g AS (
-              SELECT doc_id,
-                     array_to_string(w[i + 1 : least(i + 5, len(w))], ' ') AS gram
-              FROM idx
-              WHERE array_to_string(w[i + 1 : least(i + 5, len(w))], ' ') <> ''
-            ),
-            per AS (SELECT doc_id, gram, count(*) AS c
-                    FROM g GROUP BY 1, 2),
-            gdf AS (SELECT gram, count(*) AS g_df FROM per GROUP BY 1)
-            SELECT doc_id,
-                   CAST(sum(c) AS BIGINT) AS n_windows,
-                   CAST(sum(CASE WHEN g_df >= 2 THEN c ELSE 0 END)
-                        AS BIGINT) AS n_dup_windows,
-                   CAST((sum(CASE WHEN g_df >= 2 THEN c ELSE 0 END)
-                         * 1000000) // sum(c) AS BIGINT) AS dup_ppm
-            FROM per JOIN gdf USING (gram)
-            GROUP BY 1
-        """,
         "q113_normalize": f"""
             WITH m AS (SELECT doc_id, {_MESSY_TEXT_SQL} AS mt
                        FROM documents)
@@ -7498,28 +6521,6 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS norm_fp
             FROM m
         """,
-        # winnowing: min of each 4-window over positional 3-gram
-        # hashes, list_distinct per doc (MOSS fingerprints)
-        "q114_winnow": """
-            WITH t AS (
-              SELECT doc_id,
-                     regexp_split_to_array(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS w
-              FROM documents
-            ),
-            g AS (SELECT doc_id,
-                         list_transform(range(0, greatest(len(w) - 3, 0) + 1),
-                                        i -> array_to_string(w[i + 1 : least(i + 3, len(w))], ' ')) AS grams
-                  FROM t),
-            h AS (SELECT doc_id,
-                         list_transform(grams,
-                                        s -> ('0x' || substr(md5(concat('wn:', s)), 1, 15))::bigint) AS hs
-                  FROM g),
-            mm AS (SELECT doc_id,
-                          list_distinct(list_transform(range(0, greatest(len(hs) - 4, 0) + 1),
-                                        j -> list_min(hs[j + 1 : least(j + 4, len(hs))]))) AS fps
-                   FROM h)
-            SELECT doc_id, CAST(unnest(fps) AS BIGINT) AS fp FROM mm
-        """,
         "q17_lsh_pairs": shingle_cte + f"""
             , sig AS (SELECT doc_id, {minhash_cols} FROM sh GROUP BY doc_id),
             banded AS ({band_keys})
@@ -7527,65 +6528,6 @@ def oracle_sql() -> dict[str, str]:
             FROM banded a JOIN banded b
               ON a.band_idx = b.band_idx AND a.band_key = b.band_key
              AND a.doc_id < b.doc_id
-        """,
-        # delta-probe form of q17: nb (doc_id % 3 == 0) probes all
-        # band keys; old x old pairs structurally absent; signature-
-        # side verification = count of equal minhash components
-        "q100_incremental_lsh": shingle_cte + f"""
-            , sig AS (SELECT doc_id, {minhash_cols} FROM sh
-                      GROUP BY doc_id),
-            banded AS ({band_keys}),
-            nb AS (SELECT * FROM banded WHERE doc_id % 3 = 0),
-            cand AS (SELECT DISTINCT
-                            least(a.doc_id, b.doc_id) AS doc_a,
-                            greatest(a.doc_id, b.doc_id) AS doc_b,
-                            CASE WHEN b.doc_id % 3 = 0
-                                 THEN 1 ELSE 0 END AS bn
-                     FROM nb a JOIN banded b
-                       ON a.band_idx = b.band_idx
-                      AND a.band_key = b.band_key
-                      AND a.doc_id <> b.doc_id)
-            SELECT CAST(c.doc_a AS BIGINT) AS doc_a,
-                   CAST(c.doc_b AS BIGINT) AS doc_b,
-                   CASE WHEN c.bn = 1 THEN 'new_new'
-                        ELSE 'new_old' END AS side,
-                   CAST({" + ".join(
-                       f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-                       for i in range(8))} AS INT) AS sig_matches
-            FROM cand c JOIN sig sa ON sa.doc_id = c.doc_a
-                        JOIN sig sb ON sb.doc_id = c.doc_b
-        """,
-        "q102_split_leakage": lsh_pairs_cte + f"""
-            , sp AS (SELECT doc_id,
-                            CASE WHEN {bucket_sql(
-                                "CAST(doc_id AS VARCHAR)", 10,
-                                salt="split:")} <= 7 THEN 'train'
-                                 WHEN {bucket_sql(
-                                "CAST(doc_id AS VARCHAR)", 10,
-                                salt="split:")} = 8 THEN 'val'
-                                 ELSE 'test' END AS split
-                     FROM documents)
-            SELECT least(a.split, b.split) AS split_1,
-                   greatest(a.split, b.split) AS split_2,
-                   CAST(count(*) AS BIGINT) AS n_pairs,
-                   CAST(CASE WHEN least(a.split, b.split)
-                                  <> greatest(a.split, b.split)
-                             THEN 1 ELSE 0 END AS INT) AS crossing
-            FROM pairs p JOIN sp a ON a.doc_id = p.doc_a
-                         JOIN sp b ON b.doc_id = p.doc_b
-            GROUP BY 1, 2
-        """,
-        "q115_source_dup_matrix": lsh_pairs_cte + """
-            , src AS (SELECT doc_id, source FROM documents)
-            SELECT least(a.source, b.source) AS source_1,
-                   greatest(a.source, b.source) AS source_2,
-                   CAST(count(*) AS BIGINT) AS n_pairs,
-                   CAST(CASE WHEN least(a.source, b.source)
-                                  <> greatest(a.source, b.source)
-                             THEN 1 ELSE 0 END AS INT) AS cross_source
-            FROM pairs p JOIN src a ON a.doc_id = p.doc_a
-                         JOIN src b ON b.doc_id = p.doc_b
-            GROUP BY 1, 2
         """,
         # sequential Poisson pps: priority = h32 * 1e6 div weight,
         # bottom-10 per source
@@ -7608,33 +6550,6 @@ def oracle_sql() -> dict[str, str]:
                        FROM documents)
             SELECT doc_id, {", ".join(TX.script_mix_ppm_sql('t'))}
             FROM m
-        """,
-        "q118_dup_spans": dupspan_cte + """
-            SELECT doc_id, CAST(run_start AS BIGINT) AS run_start,
-                   CAST(run_len AS BIGINT) AS run_len
-            FROM runs
-        """,
-        "q119_dup_span_removal": dupspan_cte + f"""
-            , wp AS (SELECT doc_id, i AS pos, w[i + 1] AS word
-                     FROM (SELECT doc_id, w,
-                                  unnest(range(0, len(w))) AS i
-                           FROM t)),
-            cov AS (SELECT DISTINCT wp.doc_id, wp.pos
-                    FROM wp JOIN runs
-                      ON wp.doc_id = runs.doc_id
-                     AND wp.pos >= runs.run_start
-                     AND wp.pos < runs.run_start + runs.run_len),
-            kept AS (SELECT wp.doc_id, wp.pos, wp.word
-                     FROM wp LEFT JOIN cov
-                       ON wp.doc_id = cov.doc_id AND wp.pos = cov.pos
-                     WHERE cov.doc_id IS NULL),
-            k2 AS (SELECT doc_id, count(*) AS kw,
-                          string_agg(word, ' ' ORDER BY pos) AS ktext
-                   FROM kept GROUP BY doc_id)
-            SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_words,
-                   CAST(coalesce(k2.kw, 0) AS BIGINT) AS kept_words,
-                   {md5_int_sql("coalesce(k2.ktext, '')")} AS kept_fp
-            FROM t LEFT JOIN k2 ON t.doc_id = k2.doc_id
         """,
         "q120_vocab_drift": """
             WITH d AS (SELECT CAST(regexp_extract(source, '(\\d+)', 1)
@@ -7667,9 +6582,6 @@ def oracle_sql() -> dict[str, str]:
             FROM h
         """,
         "q123_hyperball": hyperball_sql,
-        "q124_pq_topk": pq_sql,
-        "q127_embedding_outliers": emb_outliers_sql,
-        "q128_blocking_audit": blocking_audit_sql,
         "q129_robots_gate": robots_gate_sql,
         "q132_vocab_head": vocab_head_sql,
         "q133_fetch_rounds": fetch_rounds_sql,
@@ -7914,27 +6826,6 @@ def oracle_sql() -> dict[str, str]:
                    posting_sample
             FROM agg WHERE df >= 2
         """,
-        "q103_weighted_simhash": f"""
-            WITH words AS (
-              SELECT doc_id,
-                     unnest(regexp_split_to_array(lower(trim(text)),
-                                                  '\\s+')) AS w
-              FROM documents),
-            w2 AS (SELECT doc_id, w FROM words WHERE w <> ''),
-            dfc AS (SELECT w, count(DISTINCT doc_id) AS df
-                    FROM w2 GROUP BY 1),
-            tot AS (SELECT CAST(count(*) AS BIGINT) AS n
-                    FROM documents),
-            wts AS (SELECT w, CAST(length(bin(CAST(n // df AS BIGINT)))
-                                   AS BIGINT) AS wt
-                    FROM dfc CROSS JOIN tot),
-            h AS (SELECT doc_id, {md5_int_sql('w2.w')} AS h, wt
-                  FROM w2 JOIN wts ON wts.w = w2.w),
-            votes AS (SELECT doc_id, {simhash_wvotes}
-                      FROM h GROUP BY doc_id)
-            SELECT doc_id, CAST({simhash_bits} AS BIGINT) AS simhash_w
-            FROM votes
-        """,
         "q18_simhash": f"""
             WITH words AS (
               SELECT doc_id,
@@ -7961,7 +6852,6 @@ def oracle_sql() -> dict[str, str]:
             FROM s ORDER BY cos DESC, vec_id LIMIT 10
         """,
         "q21_ann_lsh": _ann_lsh_sql(),
-        "q26_embedding_neardup": _embedding_neardup_sql(),
         "q31_asof_join": f"""
             WITH e AS (SELECT event_id, user_id, {minute.format(c='ts')} AS pos
                        FROM events WHERE event_type = 'error'),
@@ -7983,8 +6873,6 @@ def oracle_sql() -> dict[str, str]:
                    AS n_trailing
             FROM events
         """,
-        "q29_ann_ivf": _ann_ivf_sql(),
-        "q61_semdedup": _semdedup_sql(SEMDEDUP_THRESHOLD),
         "q62_ppr": _ppr_sql(PPR_SEEDS),
         # strict-order funnel: each stage's min time gates the next
         "q63_funnel": f"""
@@ -8043,36 +6931,6 @@ def oracle_sql() -> dict[str, str]:
                    max(m) AS session_end, count(*) AS n_events
             FROM s GROUP BY 1, 2
         """,
-        # connected components as a recursive CTE over LSH-VERIFIED
-        # pairs: candidates from the banded minhash join (q17's exact
-        # machinery composed), exact shingle-intersection verification
-        # of the candidates only, transitive closure, min reachable id
-        # per node (the Spark side's iterative min-label propagation
-        # converges to the same fixpoint)
-        "q27_neardup_clusters": cc_cte + """
-            SELECT n AS doc_id, min(m) AS cluster_id FROM reach GROUP BY n
-        """,
-        # q27's component fixpoint + packed-integer quality argmax
-        # (score * 2^44 + (2^44-1 - id): max is (max score, min id) —
-        # the exact twin of dedup.survivor_selection's single combinable
-        # aggregate; 2^44 = 17592186044416)
-        "q65_dedup_survivors": cc_cte + f"""
-            , cc AS (SELECT n AS doc_id, min(m) AS cluster_id
-                     FROM reach GROUP BY n),
-            mem AS (SELECT cc.cluster_id, cc.doc_id, {qual_sql} AS q
-                    FROM cc JOIN documents d ON d.doc_id = cc.doc_id),
-            ag AS (SELECT cluster_id,
-                          max(q * 17592186044416
-                              + (17592186044415 - doc_id)) AS mx,
-                          CAST(count(*) AS BIGINT) AS n_members
-                   FROM mem GROUP BY 1)
-            SELECT cluster_id,
-                   CAST(17592186044415 - (mx & 17592186044415) AS BIGINT)
-                       AS survivor_id,
-                   CAST(mx >> 44 AS INT) AS best_score,
-                   n_members
-            FROM ag
-        """,
         "q68_weighted_rank": _wpr_oracle_sql(iters=3),
         "q78_source_mix": f"""
             WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s
@@ -8094,21 +6952,6 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS n_kept
             FROM k JOIN r ON r.source = k.source
             GROUP BY 1
-        """,
-        # upper-triangle integer outer-product reduce over the q51
-        # quantization (list indexing is 1-based in DuckDB)
-        "q77_embedding_gram": """
-            WITH qz AS (SELECT list_transform(embedding,
-                            x -> CAST(greatest(-128, least(127,
-                                 floor(CAST(x AS DOUBLE) * 127)))
-                                 AS BIGINT)) AS qe
-                        FROM embeddings),
-            idx AS (SELECT qe, unnest(range(0, len(qe))) AS i FROM qz),
-            cell AS (SELECT qe, i, unnest(range(i, len(qe))) AS j
-                     FROM idx)
-            SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j,
-                   CAST(sum(qe[i + 1] * qe[j + 1]) AS BIGINT) AS s
-            FROM cell GROUP BY 1, 2
         """,
         "q70_communities": _lpa_oracle_sql(iters=2),
         "q88_tfidf_cosine_pairs": """
@@ -8546,52 +7389,7 @@ def oracle_sql() -> dict[str, str]:
             FROM ranked a JOIN ranked b
               ON b.rn > a.rn AND b.rn <= a.rn + 3
         """,
-        # q172: prefix-filtering exact Jaccard join — same df-ordered
-        # prefixes, full-set integer verify
-        "q172_prefix_filter_join": """
-            WITH toks AS (
-                SELECT DISTINCT doc_id, token FROM (
-                    SELECT doc_id, unnest(regexp_split_to_array(
-                        regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                       'g'), ' ')) AS token
-                    FROM documents)
-                WHERE token <> ''),
-            tdf AS (SELECT token, count(*) AS tdf FROM toks GROUP BY 1),
-            sizes AS (SELECT doc_id, count(*) AS n FROM toks GROUP BY 1),
-            ordered AS (
-                SELECT t.doc_id, t.token, s.n,
-                       row_number() OVER (PARTITION BY t.doc_id
-                                          ORDER BY d.tdf, t.token) AS rn
-                FROM toks t JOIN tdf d USING (token)
-                JOIN sizes s USING (doc_id)),
-            prefix AS (
-                SELECT doc_id, token, n, rn FROM ordered
-                WHERE rn <= n - ((900000 * n + 999999) // 1000000) + 1),
-            cand AS (
-                SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM prefix a JOIN prefix b
-                  ON b.token = a.token AND a.doc_id < b.doc_id
-                 AND 900000 * greatest(a.n, b.n)
-                     <= 1000000 * least(a.n, b.n)
-                 AND least(a.n - a.rn, b.n - b.rn) + 1
-                     >= (900000 * (a.n + b.n) + 1899999) // 1900000),
-            i AS (
-                SELECT c.doc_a, c.doc_b, count(*) AS inter
-                FROM cand c
-                JOIN toks ta ON ta.doc_id = c.doc_a
-                JOIN toks tb ON tb.doc_id = c.doc_b
-                 AND tb.token = ta.token
-                GROUP BY 1, 2)
-            SELECT CAST(i.doc_a AS BIGINT) AS doc_a,
-                   CAST(i.doc_b AS BIGINT) AS doc_b,
-                   CAST(inter AS BIGINT) AS inter,
-                   CAST(sa.n + sb.n - inter AS BIGINT) AS uni
-            FROM i JOIN sizes sa ON sa.doc_id = i.doc_a
-            JOIN sizes sb ON sb.doc_id = i.doc_b
-            WHERE inter * 1000000 >= 900000 * (sa.n + sb.n - inter)
-        """,
         "q173_ktruss": ktruss_sql,
-        "q174_multi_blocking_audit": multi_audit_sql,
         "q177_mis": mis_sql,
         "q197_boruvka_mst": mst_sql,
         "q198_densest": peel_sql,
@@ -8647,13 +7445,11 @@ def oracle_sql() -> dict[str, str]:
         "q210_zorder_layout": _zorder_oracle_sql(),
         "q212_spam_mass": _spam_mass_oracle_sql(),
         "q213_rand_ari": _ARI_ORACLE_SQL,
-        "q215_cdc_dedup": _cdc_oracle_sql(),
         "q220_reshard": _reshard_oracle_sql(),
         "q221_postings_gaps": _POSTINGS_GAP_ORACLE_SQL,
         "q222_class_terms": _CLASS_TERMS_ORACLE_SQL,
         "q223_neyman": _neyman_oracle_sql(),
         "q224_seasonal_outliers": _SEASONAL_ORACLE_SQL,
-        "q227_lsh_plan": _lsh_plan_oracle_sql(shingle_cte, MAX_SH_DF),
         "q228_fresh_rank": _fresh_rank_oracle_sql(),
         "q188_merge_matching": matching_sql,
         # q192: suffix-prefix boundary join over the injected stitch
@@ -8773,8 +7569,8 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS retention_ppm
             FROM act a JOIN sz s ON s.cohort = a.cohort
         """,
-        # q180: embedding-level decontamination — q51's floor-clip
-        # int8 quantization, cosine >= 3/10 by integer
+        # q180: embedding-level decontamination — floor-clip int8
+        # quantization, cosine >= 3/10 by integer
         # cross-multiplication of squares (no sqrt, no float div)
         "q180_semantic_decon": """
             WITH qz AS (SELECT vec_id,
@@ -9111,7 +7907,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q190_betweenness": _betweenness_oracle_sql(radius=3),
         "q193_coverage_selection": _coverage_oracle_sql(COVER_K),
-        "q194_kcenter": _kcenter_oracle_sql(KCENTER_K),
         "q195_url_templates": _url_templates_oracle_sql(),
         # q196: same derived-stoplist + islands-window recurrence;
         # DuckDB windows default to RANGE-to-current-row, identical
@@ -9569,17 +8364,6 @@ def oracle_sql() -> dict[str, str]:
                    {TX.duplicate_ngram_ppm_sql('text', n=2)} AS rep_ppm
             FROM documents
         """,
-        # exact 3-gram collision screening against the deterministic
-        # held-out slice (doc_id % 97 == 0): reuses the q16 shingle
-        # semantics (same tokenization, tail truncation, distinct set)
-        "q46_decontaminate": shingle_cte + """
-            , bench AS (SELECT DISTINCT shingle FROM sh
-                        WHERE doc_id % 97 = 0)
-            SELECT s.doc_id, count(*) AS n_collide
-            FROM sh s JOIN bench USING (shingle)
-            WHERE s.doc_id % 97 <> 0
-            GROUP BY 1
-        """,
         # sequential ID -> phone -> email redaction on the same
         # synthetic-PII injection expression the Spark side builds
         "q47_pii_redact": f"""
@@ -9632,24 +8416,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT CAST(node AS BIGINT) AS node,
                    CAST(count(*) AS BIGINT) AS n_khop
             FROM reach WHERE nbr <> node GROUP BY 1
-        """,
-        # int8 clip(floor(x*127)) quantization + exact integer dot
-        "q51_quantized_ann": """
-            WITH qz AS (SELECT vec_id,
-                               list_transform(embedding,
-                                   x -> CAST(greatest(-128, least(127,
-                                        floor(CAST(x AS DOUBLE) * 127)))
-                                        AS BIGINT)) AS qe
-                        FROM embeddings),
-            q AS (SELECT qe AS qq FROM qz WHERE vec_id = 0),
-            s AS (SELECT vec_id,
-                         list_sum(list_transform(range(1, len(qe) + 1),
-                                                 i -> qe[i] * qq[i])) AS qdot
-                  FROM qz, q)
-            SELECT vec_id, CAST(qdot AS BIGINT) AS qdot,
-                   CAST(ROW_NUMBER() OVER (ORDER BY qdot DESC, vec_id)
-                        AS INT) AS rank
-            FROM s ORDER BY qdot DESC, vec_id LIMIT 10
         """,
         # bit-length idf rarity (same integer log2 family as q38)
         "q53_surprisal": """
@@ -9985,12 +8751,8 @@ def oracle_sql() -> dict[str, str]:
     }
 
 
-# corpus-scaled bits per band (twin of operators.ann.adaptive_bits):
-# log2 of an exact power of two is IEEE-exact, so ceil agrees across
-# engines; band b, bit i (1-based) reads dim b + (i-1)*n_bands + 1
-_BITS_CTE = (f"p AS (SELECT greatest(1, least(16, CAST(ceil(log2(greatest("
-             f"count(*), 1) / {LSH_TARGET_BUCKET}.0)) AS INT))) AS bits "
-             f"FROM embeddings)")
+# banded sign keys (twin of operators.ann._band_key): band b, bit i
+# (1-based) reads dim b + (i-1)*n_bands + 1
 _BAND_IDX_VALUES = ", ".join(f"({b})" for b in range(LSH_BANDS))
 
 
@@ -9998,134 +8760,6 @@ def _band_key_sql(emb: str) -> str:
     return (f"CAST(coalesce(list_sum(list_transform(range(1, bits + 1), "
             f"i -> CASE WHEN {emb}[band_idx + (i - 1) * {LSH_BANDS} + 1] >= 0 "
             f"THEN 1 << (i - 1) ELSE 0 END)), 0) AS INT)")
-
-
-def _embedding_neardup_sql() -> str:
-    # double-cast embeddings + 6-dp rounded threshold comparison: the
-    # exact twin of operators.ann.embedding_neardup_pairs' bit-stable
-    # membership gate; candidates from the banded corpus-scaled LSH
-    return f"""
-        WITH {_BITS_CTE},
-        banded AS (
-          SELECT vec_id, {_band_key_sql('embedding')} AS band_key, band_idx
-          FROM embeddings, p, (VALUES {_BAND_IDX_VALUES}) b(band_idx)),
-        cand AS (
-          SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-          FROM banded a JOIN banded c
-            ON a.band_idx = c.band_idx AND a.band_key = c.band_key
-           AND a.vec_id < c.vec_id)
-        SELECT vec_a, vec_b
-        FROM cand
-        JOIN embeddings ea ON ea.vec_id = vec_a
-        JOIN embeddings eb ON eb.vec_id = vec_b
-        WHERE round(list_cosine_similarity(ea.embedding::DOUBLE[],
-                                           eb.embedding::DOUBLE[]), 6) >= 0.4
-    """
-
-
-def _kmeans_assign_cte(n_cells: int = 16, iters: int = 2) -> tuple[str, str]:
-    """Shared DuckDB twin of operators.ann.kmeans_codebook +
-    ivf_cells: seeded sample init (smallest md5('km:'||id)), `iters`
-    unrolled Lloyd iterations with 6-dp-rounded per-dimension means
-    (absorbing engine-order float summation), final assignment `af`
-    (vec_id, e, cell_id).  Returns (cte_fragment, final_cents_name);
-    callers prepend WITH and append their own CTEs/SELECT."""
-    seed_hash = md5_int_sql("CAST(vec_id AS VARCHAR)", salt="km:")
-
-    def assign(cents: str, out: str) -> str:
-        return f"""
-            {out}_r AS (
-              SELECT v.vec_id, v.e, c.cell_id,
-                     ROW_NUMBER() OVER (PARTITION BY v.vec_id
-                         ORDER BY list_cosine_similarity(v.e, c.cent) DESC,
-                                  c.cell_id) AS rn
-              FROM v CROSS JOIN {cents} c),
-            {out} AS (SELECT vec_id, e, cell_id FROM {out}_r WHERE rn = 1)"""
-
-    def recompute(assigned: str, out: str) -> str:
-        return f"""
-            {out}_d AS (
-              SELECT cell_id, generate_subscripts(e, 1) AS dim,
-                     unnest(e) AS val
-              FROM {assigned}),
-            {out} AS (
-              SELECT cell_id, list(mv ORDER BY dim) AS cent FROM (
-                SELECT cell_id, dim, round(avg(val), 6) AS mv
-                FROM {out}_d GROUP BY 1, 2) GROUP BY cell_id)"""
-
-    iter_ctes = []
-    cents = "c0"
-    for i in range(iters):
-        iter_ctes.append(assign(cents, f"a{i + 1}"))
-        iter_ctes.append(recompute(f"a{i + 1}", f"c{i + 1}"))
-        cents = f"c{i + 1}"
-    chain = ",".join(iter_ctes)
-
-    frag = f"""
-        v AS (SELECT vec_id,
-                     list_transform(embedding,
-                                    x -> round(x::DOUBLE, 6)) AS e
-              FROM embeddings),
-        seed AS (SELECT vec_id, e, {seed_hash} AS h FROM v),
-        c0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS INT)
-                      AS cell_id, e AS cent
-               FROM (SELECT * FROM seed ORDER BY h, vec_id LIMIT {n_cells})),
-        {chain},
-        {assign(cents, 'af')}"""
-    return frag, cents
-
-
-def _semdedup_sql(threshold: int, n_cells: int = 16, iters: int = 2) -> str:
-    """DuckDB twin of operators.ann.semdedup_pairs: k-means
-    assignment chain + int8 floor quantization of the 6-dp-rounded
-    vectors + exact integer dot over same-cell pairs."""
-    frag, _ = _kmeans_assign_cte(n_cells, iters)
-    return f"""
-        WITH {frag},
-        qz AS (SELECT vec_id, cell_id,
-                      list_transform(e, x -> CAST(greatest(-128,
-                          least(127, floor(x * 127))) AS BIGINT)) AS qe
-               FROM af),
-        pr AS (SELECT a.vec_id AS a, b.vec_id AS b,
-                      a.cell_id AS cell_id,
-                      list_sum(list_transform(range(1, len(a.qe) + 1),
-                                              i -> a.qe[i] * b.qe[i]))
-                          AS qdot
-               FROM qz a JOIN qz b
-                 ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id)
-        SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
-               CAST(cell_id AS INT) AS cell_id,
-               CAST(qdot AS BIGINT) AS qdot
-        FROM pr WHERE qdot >= {threshold}
-    """
-
-
-def _ann_ivf_sql(n_cells: int = 16, n_probe: int = 4, iters: int = 2,
-                 k: int = 10) -> str:
-    """DuckDB twin of operators.ann kmeans_codebook + ivf_topk:
-    the shared assignment chain, probe the query's nearest cells,
-    exact top-k inside them."""
-    frag, cents = _kmeans_assign_cte(n_cells, iters)
-    return f"""
-        WITH {frag},
-        q AS (SELECT embedding AS qe,
-                     list_transform(embedding,
-                                    x -> round(x::DOUBLE, 6)) AS qr
-              FROM embeddings WHERE vec_id = 0),
-        probe AS (SELECT cell_id FROM (
-          SELECT c.cell_id,
-                 ROW_NUMBER() OVER (ORDER BY
-                     list_cosine_similarity(c.cent, q.qr) DESC,
-                     c.cell_id) AS pr
-          FROM {cents} c, q) WHERE pr <= {n_probe}),
-        cand AS (SELECT af.vec_id, af.e FROM af JOIN probe USING (cell_id))
-        SELECT vec_id,
-               CAST(ROW_NUMBER() OVER (ORDER BY
-                    list_cosine_similarity(e, qe::DOUBLE[]) DESC,
-                    vec_id) AS INT) AS rank
-        FROM cand, q
-        ORDER BY rank LIMIT {k}
-    """
 
 
 def _ann_lsh_sql() -> str:

@@ -1,13 +1,16 @@
 """Document deduplication operators for the training-data pipeline:
 
-- exact_dedup: fingerprint groupBy (map-side combinable, one shuffle);
 - shingle / jaccard_pairs: n-gram shingling + intersection/union counts
   (integers, so the DuckDB oracle hash-matches exactly);
 - minhash_signatures + lsh_candidate_pairs: MinHash over md5-salted
   hashes, banded LSH self-join on band keys (the scale path: candidate
   generation never compares all pairs);
 - simhash64: 64-bit SimHash over word hashes (near-dup by Hamming
-  distance).
+  distance);
+- doc_lines / frequent_line_dedup / window_dup_stats: line- and
+  window-level duplicate removal and coverage;
+- global_rank / sorted_neighborhood_pairs: sorted-neighborhood
+  blocking over a global key order.
 
 All hashes are the portable md5-int family (functions.hashing) so each
 operator has an exact cross-engine oracle.
@@ -19,16 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_int
-from ..functions.text import fingerprint
-
-
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep the min-id representative per normalized-text fingerprint.
-    Single hash-aggregate shuffle; partial aggregation (map-side
-    combine) makes this linear at 100 TB."""
-    return (df.withColumn("fp", fingerprint(F.col(text_col)))
-            .groupBy("fp")
-            .agg(F.min(id_col).alias(id_col), F.count("*").alias("dup_count")))
 
 
 def shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3,
@@ -51,7 +44,7 @@ def shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3,
     gram lambda: higher-order functions are interpreted, and a lambda
     referencing an outer *expression* re-evaluates it per element —
     the split would otherwise run once per gram index (O(n^2) chars
-    per doc; the winnow_fingerprints lesson)."""
+    per doc)."""
     toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " ")
     base = df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
     t = F.col("_t")
@@ -83,7 +76,7 @@ def jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     for sane caps, and bounds the self-join fan-out per shingle key at
     max_df^2 — the 100 TB-safe shape.  Without a cap the self-join is
     exact but its hottest key grows with the corpus; prefer
-    lsh_verified_pairs at scale."""
+    lsh_candidate_pairs at scale."""
     # the shingle table feeds three subplans (both self-join sides +
     # the per-doc sizes); persist materializes the explode once — the
     # DataFrame analogue of a materialized CTE.  NOTE Dataset.persist
@@ -109,33 +102,6 @@ def jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                      *(["n_a", "n_b"] if keep_sizes else [])))
     pairs.unpersist_input = sh.unpersist  # session-cache release hook
     return pairs
-
-
-def ngram_collisions(df: DataFrame, bench_df: DataFrame,
-                     text_col: str, id_col: str, k: int = 3,
-                     broadcast_bench: bool = True) -> DataFrame:
-    """Benchmark decontamination (exact n-gram collision screening,
-    the GPT-3/PaLM-style eval-set contamination check): per corpus
-    document, the count of DISTINCT word k-grams that also occur
-    anywhere in the benchmark corpus.  Docs with n_collide > 0 are
-    the contamination candidates a training pipeline drops or audits.
-
-    Scale shape: the benchmark gram set is benchmark-sized (eval
-    suites are tiny relative to a 100 TB corpus) -> distinct bench
-    grams are BROADCAST against the exploded corpus grams, so the
-    corpus side never shuffles; the only exchange is the final
-    per-doc count (map-side combinable).  Per-gram fan-out is the
-    number of corpus docs containing that gram x1 (an equi-join into
-    a set, never a self-join), so there is no quadratic key.  Set
-    broadcast_bench=False for an oversized benchmark (falls back to a
-    shuffle join on the gram key)."""
-    corpus = shingles(df, text_col, id_col, k)        # distinct per doc
-    bench = (shingles(bench_df, text_col, id_col, k)
-             .select("shingle").distinct())
-    b = F.broadcast(bench) if broadcast_bench else bench
-    return (corpus.join(b, "shingle")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_collide")))
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
@@ -170,58 +136,6 @@ def band_keys(sig: DataFrame, n_hashes: int = 16,
                     F.col("bk.band_key").alias("band_key")))
 
 
-def incremental_lsh_pairs(old_sigs: DataFrame, new_sigs: DataFrame,
-                          n_hashes: int = 8,
-                          bands: int = 4) -> DataFrame:
-    """Incremental near-dup candidates for a recrawl/ingest DELTA:
-    only pairs touching a NEW document are generated — the old corpus
-    contributes its (stored) minhash signature table, never its text,
-    and old x old pairs are structurally absent from the plan.
-
-    This is the maintenance half the batch LSH lacks: a 100 TB corpus
-    ingesting 0.1% a day must not re-band 100 TB per day.  The delta's
-    band keys probe old ∪ new band keys; candidate verification is
-    SIGNATURE-side (count of equal minhash components — the unbiased
-    Jaccard estimator, n_hashes integers per doc), so the old TEXT can
-    stay in cold storage.  Signatures fold across days with
-    minhash_merge; inputs must carry disjoint doc_ids (run
-    crawl.merge_crawls first so a re-fetched url replaces its old row).
-
-    Cost: O(new x bands) probe + matches.  Returns
-    (doc_a, doc_b, side, sig_matches) with side in
-    {'new_new', 'new_old'}; sig_matches / n_hashes estimates Jaccard.
-    """
-    nb = band_keys(new_sigs, n_hashes, bands)
-    allb = (band_keys(old_sigs, n_hashes, bands)
-            .withColumn("_new", F.lit(0))
-            .unionByName(nb.withColumn("_new", F.lit(1))))
-    # a-side is ALWAYS a new doc, so the pair's side is just the
-    # partner's flag; new_new pairs arrive twice (a=x,b=y and a=y,b=x)
-    # with identical (doc_a, doc_b, _bn) and dedup in the distinct
-    cand = (nb.alias("a").join(allb.alias("b"),
-                               ["band_idx", "band_key"])
-            .where(F.col("a.doc_id") != F.col("b.doc_id"))
-            .select(F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-                    F.col("b._new").alias("_bn"))
-            .distinct())
-    sigs = old_sigs.unionByName(new_sigs)
-    sa = sigs.select(F.col("doc_id").alias("doc_a"),
-                     *[F.col(f"mh{i}").alias(f"_a{i}")
-                       for i in range(n_hashes)])
-    sb = sigs.select(F.col("doc_id").alias("doc_b"),
-                     *[F.col(f"mh{i}").alias(f"_b{i}")
-                       for i in range(n_hashes)])
-    matches = sum(
-        F.when(F.col(f"_a{i}") == F.col(f"_b{i}"), 1).otherwise(0)
-        for i in range(n_hashes))
-    return (cand.join(sa, "doc_a").join(sb, "doc_b")
-            .select("doc_a", "doc_b",
-                    F.when(F.col("_bn") == 1, "new_new")
-                    .otherwise("new_old").alias("side"),
-                    matches.cast("int").alias("sig_matches")))
-
-
 def lsh_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
                         k: int = 3, n_hashes: int = 16,
                         bands: int = 4) -> DataFrame:
@@ -242,49 +156,6 @@ def lsh_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
     # persist pins blocks in the SQL CacheManager until explicitly
     # released; expose the handle for callers that loop over corpora
     out.unpersist_input = sig.unpersist
-    return out
-
-
-def lsh_verified_pairs(df: DataFrame, text_col: str, id_col: str,
-                       k: int = 3, n_hashes: int = 8, bands: int = 4,
-                       min_shared: int = 2) -> DataFrame:
-    """The 100 TB near-dup pair path: banded-LSH candidate generation
-    (O(docs x bands), never all-pairs) + EXACT shingle-intersection
-    verification of the candidates only.
-
-    Verification is relational: candidates join the shingle table once
-    per side on the document id (high-cardinality key, candidate set is
-    LSH-bounded), so per-pair work is O(|smaller shingle set|) and no
-    shingle-keyed self-join ever exists in the plan — the q16-style
-    hot-shingle quadratic key is structurally absent.
-
-    Output: (doc_a, doc_b, inter, uni) for candidates with
-    inter >= min_shared — same schema/semantics as jaccard_pairs
-    restricted to the LSH candidate set.
-    """
-    cand = lsh_candidate_pairs(df, text_col, id_col, k, n_hashes, bands)
-    cand_release = cand.unpersist_input  # the sig table persisted inside
-    sh = shingles(df, text_col, id_col, k).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    inter = (cand
-             .join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-             .join(sh.alias("sb"),
-                   (F.col("doc_b") == F.col("sb.doc_id"))
-                   & (F.col("sa.shingle") == F.col("sb.shingle")))
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count("*").alias("inter")))
-    out = (inter.join(sizes.withColumnRenamed("doc_id", "doc_a")
-                      .withColumnRenamed("n_sh", "n_a"), on="doc_a")
-           .join(sizes.withColumnRenamed("doc_id", "doc_b")
-                 .withColumnRenamed("n_sh", "n_b"), on="doc_b")
-           .withColumn("uni", F.col("n_a") + F.col("n_b") - F.col("inter"))
-           .where(F.col("inter") >= min_shared)
-           .select("doc_a", "doc_b", "inter", "uni"))
-
-    def _release():
-        cand_release()
-        sh.unpersist()
-    out.unpersist_input = _release
     return out
 
 
@@ -387,7 +258,7 @@ def doc_lines(df: DataFrame, text_col: str, id_col: str,
                 lambda g: g != "")
 
         # toks _let-bound: the chunk lambda re-evaluates captured
-        # outer expressions per element (the winnowing lesson)
+        # outer expressions per element (see shingles())
         lines_arr = _let(toks, _chunks)
     return (df.select(F.col(id_col).alias("doc_id"),
                       F.explode(lines_arr).alias("line")))
@@ -421,383 +292,6 @@ def frequent_line_dedup(df: DataFrame, text_col: str, id_col: str,
             .agg(F.count("*").cast("bigint").alias("n_lines"),
                  F.sum(F.when(F.col("_hit").isNotNull(), 1).otherwise(0))
                  .cast("bigint").alias("n_dropped")))
-
-
-def survivor_selection(members: DataFrame, cluster_col: str, id_col: str,
-                       score_col: str, id_bits: int = 44) -> DataFrame:
-    """Per-cluster survivor choice: after near-dup clustering, every
-    production dedup pipeline keeps exactly ONE member per cluster —
-    and which one matters (RefinedWeb/FineWeb keep the highest-quality
-    copy, not an arbitrary one).  Returns one row per cluster:
-    (cluster, survivor_id, best_score, n_members).
-
-    Survivor = argmax(score), ties broken by MIN id — encoded as a
-    single packed-integer max:  packed = score * 2^id_bits +
-    (2^id_bits - 1 - id), so ordering by packed is lexicographic on
-    (score asc, id desc) and the max is exactly (max score, min id).
-    Requires 0 <= id < 2^id_bits and 0 <= score < 2^(62 - id_bits) —
-    both engine-exact BIGINT, no floats, no argmax tie ambiguity
-    (DuckDB's arg_max tie order is unspecified; this is not).
-
-    Scale shape: ONE map-side-combinable hash aggregate keyed by the
-    cluster id (max + count both combine partially) — no window, no
-    second shuffle; output is cluster-cardinality (small).  A mega-
-    cluster is just a heavy key for a combinable agg, which AQE skew
-    splitting already handles."""
-    cap = 1 << id_bits
-    packed = (F.col(score_col).cast("bigint") * F.lit(cap)
-              + (F.lit(cap - 1) - F.col(id_col).cast("bigint")))
-    agg = (members
-           .select(F.col(cluster_col).alias("cluster"),
-                   packed.alias("_packed"))
-           .groupBy("cluster")
-           .agg(F.max("_packed").alias("_mx"),
-                F.count("*").cast("bigint").alias("n_members")))
-    return agg.select(
-        "cluster",
-        (F.lit(cap - 1) - F.col("_mx").bitwiseAND(F.lit(cap - 1)))
-        .cast("bigint").alias("survivor_id"),
-        F.shiftright(F.col("_mx"), id_bits).cast("int").alias("best_score"),
-        "n_members")
-
-
-def minhash_merge(a: DataFrame, b: DataFrame,
-                  n_hashes: int = 16) -> DataFrame:
-    """Merge per-doc minhash signatures across corpus slices by
-    elementwise MIN — signatures are mergeable exactly like the
-    underlying min aggregates, so a re-crawled/amended document's
-    signature folds into the standing one without re-shingling history:
-    sig(A ∪ B) == merge(sig(A), sig(B)) (proven by test).  One
-    combinable aggregate keyed by doc."""
-    u = a.unionByName(b)
-    aggs = [F.min(f"mh{i}").alias(f"mh{i}") for i in range(n_hashes)]
-    return u.groupBy("doc_id").agg(*aggs)
-
-
-def simhash_weighted(df: DataFrame, text_col: str, id_col: str,
-                     n_bits: int = 16) -> DataFrame:
-    """IDF-weighted SimHash: each word votes with weight
-    bit_length(n_docs div df(word)) instead of +-1, so boilerplate
-    stopwords (df ~ n_docs, weight 1) barely move the fingerprint
-    while rare content words dominate — the standard precision upgrade
-    over unweighted SimHash for near-dup detection on template-heavy
-    web text (Manku et al. 2007 use exactly this weighting slot).
-
-    The weight is the q38/q53 integer idf (length(bin(x))), so the
-    whole fingerprint stays in 64-bit integers with an exact DuckDB
-    twin.  Scale shape: df counts are ONE combinable aggregate on the
-    word vocabulary; the 1-row corpus total crossJoin-broadcasts back;
-    the weight table is vocabulary-DIMENSION-sized and broadcast into
-    the token stream; the per-doc fingerprint is the same wide
-    conditional-sum single aggregate as simhash64 — still exactly one
-    corpus-scale shuffle."""
-    words = (df.select(F.col(id_col).alias("doc_id"),
-                       F.explode(F.split(F.lower(F.trim(F.col(text_col))),
-                                         r"\s+")).alias("w"))
-             .where(F.col("w") != ""))
-    dfc = words.groupBy("w").agg(F.count_distinct("doc_id").alias("_df"))
-    total = df.agg(F.count("*").alias("_n"))
-    wt = (dfc.crossJoin(F.broadcast(total))
-          .select("w", F.length(F.bin(F.floor(F.col("_n") / F.col("_df"))
-                                      .cast("bigint")))
-                  .cast("bigint").alias("_wt")))
-    h = (words.join(F.broadcast(wt), "w")
-         .withColumn("h", md5_int(F.col("w"))))
-    votes = [F.sum(F.when(F.shiftright(F.col("h"), i)
-                          .bitwiseAND(F.lit(1)) == 1,
-                          F.col("_wt")).otherwise(-F.col("_wt")))
-             .alias(f"v{i}") for i in range(n_bits)]
-    per_doc = h.groupBy("doc_id").agg(*votes)
-    sim = sum((F.when(F.col(f"v{i}") > 0, F.lit(1 << i).cast("bigint"))
-               .otherwise(F.lit(0).cast("bigint"))
-               for i in range(n_bits)),
-              F.lit(0).cast("bigint"))
-    return per_doc.select("doc_id", sim.cast("bigint").alias("simhash_w"))
-
-
-def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,
-                        k: int = 3, w: int = 4,
-                        salt: str = "wn:") -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD 2003 — the MOSS algorithm): hash every positional word
-    k-gram, slide a window of w consecutive hashes, keep the MINIMUM
-    of each window, distinct the kept mins.  Guarantees every shared
-    run of >= k+w-1 words between two documents shares >= 1
-    fingerprint, at ~2/(w+1) the density of full shingling — the
-    position-robust local fingerprint q14 (whole-doc) and q16
-    (all-shingles) bracket.
-
-    Scale shape: grams, hashes, window minima, and the per-doc
-    distinct are ALL per-row array expressions (zero shuffle, zero
-    UDF); the only row-multiplier is the final explode of the
-    (deduplicated, w-fold sparser) fingerprint array.  Docs shorter
-    than k+w-1 words degrade gracefully: truncated windows/grams,
-    >= 1 fingerprint per non-empty doc.
-
-    Returns (doc_id, fp) distinct-per-doc fingerprint rows.
-
-    NOTE each array (tokens, gram hashes) is materialized in its OWN
-    projection before the lambda that slices it: higher-order
-    functions are interpreted and a lambda referencing an outer
-    *expression* (rather than a column) re-evaluates it per element —
-    the original single-projection form recomputed the full md5 hash
-    array once per window position, O(n^2) md5 calls per row
-    (measured 13.5 s; this form 1.3 s at sf0.1/local[32])."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                    r"\s+", " "), " ")
-    base = df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
-    t = F.col("_t")
-    gidx = F.sequence(F.lit(0), F.greatest(F.size(t) - k, F.lit(0)))
-    h = F.transform(
-        gidx,
-        lambda i: F.conv(F.substring(F.md5(F.concat(
-            F.lit(salt), F.array_join(F.slice(t, i + 1, k), " "))),
-            1, 15), 16, 10).cast("bigint"))
-    hashed = base.select("doc_id", h.alias("_hs"))
-    hs = F.col("_hs")
-    widx = F.sequence(F.lit(0), F.greatest(F.size(hs) - w, F.lit(0)))
-    mins = F.transform(widx,
-                       lambda j: F.array_min(F.slice(hs, j + 1, w)))
-    return (hashed.select("doc_id",
-                          F.explode(F.array_distinct(mins)).alias("fp"))
-            .where(F.col("fp").isNotNull()))
-
-
-def containment_pairs(df: DataFrame, text_col: str, id_col: str,
-                      k: int = 3, min_shared: int = 2,
-                      max_df: int | None = None,
-                      min_containment_ppm: int = 500_000) -> DataFrame:
-    """Near-CONTAINMENT pairs: C(A,B) = |A∩B| / min(|A|,|B|) in integer
-    ppm, over the same capped shingle sets as jaccard_pairs.  Broder's
-    containment catches the asymmetric duplication Jaccard misses — a
-    short post quoted whole inside a long aggregator page has low
-    resemblance (union is dominated by the long doc) but containment
-    ~1.0; dedup pipelines that gate only on Jaccard ship the quoted
-    copy twice.  Reported alongside jaccard_ppm so the caller can see
-    exactly the containment-high/jaccard-low corner.
-
-    Scale shape: identical to jaccard_pairs (DF-capped shingle
-    self-join, per-key fan-out <= max_df^2) — the ppm columns are one
-    extra integer projection, no new shuffle."""
-    pairs = jaccard_pairs(df, text_col, id_col, k=k,
-                          min_shared=min_shared, max_df=max_df,
-                          keep_sizes=True)
-    out = (pairs.withColumn(
-               "containment_ppm",
-               F.floor(F.col("inter") * F.lit(1_000_000)
-                       / F.least("n_a", "n_b")).cast("bigint"))
-           .withColumn("jaccard_ppm",
-                       F.floor(F.col("inter") * F.lit(1_000_000)
-                               / F.col("uni")).cast("bigint"))
-           .where(F.col("containment_ppm") >= min_containment_ppm)
-           .select("doc_a", "doc_b", "inter", "n_a", "n_b",
-                   "containment_ppm", "jaccard_ppm"))
-    out.unpersist_input = pairs.unpersist_input
-    return out
-
-
-def cross_doc_ngram_coverage(df: DataFrame, text_col: str, id_col: str,
-                             k: int = 5) -> DataFrame:
-    """Per-document CROSS-DOC duplicated-window coverage: the fraction
-    (integer ppm) of a document's positional word k-gram windows whose
-    gram also occurs in at least one OTHER document — the window-
-    granular approximation of ExactSubstr dedup ("Deduplicating
-    Training Data Makes Language Models Better", Lee et al. 2022):
-    docs with high coverage are verbatim-copied content even when no
-    single whole-doc near-dup pair exists (mosaic plagiarism /
-    boilerplate stitching).  Distinct from q45 (WITHIN-doc repetition)
-    and q16/q17 (whole-doc pair resemblance).
-
-    Scale shape: one explode of positional windows (n-k+1 per doc),
-    a (doc, gram) count aggregate, a gram-keyed doc-frequency
-    aggregate over the distinct (doc, gram) pairs (both map-side
-    combinable), and a final per-doc sum — joins are equi-joins into a
-    gram-keyed count table, never a self-join, so there is no
-    quadratic key at any corpus size.  All counts 64-bit integers.
-
-    Returns (doc_id, n_windows, n_dup_windows, dup_ppm)."""
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                    r"\s+", " "), " ")
-    # token array materialized before the gram lambda (HOF lambdas
-    # re-evaluate outer expressions per element — see shingles())
-    base = df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
-    t = F.col("_t")
-    n = F.size(t)
-    idxs = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(idxs, lambda i: F.array_join(F.slice(t, i + 1, k),
-                                                  " "))
-    grams = (base.select("doc_id", F.explode(sh).alias("gram"))
-             .where(F.col("gram") != ""))
-    per = grams.groupBy("doc_id", "gram").agg(F.count("*").alias("c"))
-    gram_df = (per.groupBy("gram")
-               .agg(F.count("*").alias("g_df")))
-    return (per.join(gram_df, "gram")
-            .groupBy("doc_id")
-            .agg(F.sum("c").cast("bigint").alias("n_windows"),
-                 F.sum(F.when(F.col("g_df") >= 2, F.col("c"))
-                       .otherwise(F.lit(0)))
-                 .cast("bigint").alias("n_dup_windows"))
-            .withColumn("dup_ppm",
-                        F.floor(F.col("n_dup_windows") * F.lit(1_000_000)
-                                / F.col("n_windows")).cast("bigint")))
-
-
-def dup_substring_runs(df: DataFrame, text_col: str, id_col: str,
-                       k: int = 3, min_docs: int = 2,
-                       salt: str = "ds:") -> DataFrame:
-    """Maximal cross-document duplicated SPANS — the span-structured
-    core of ExactSubstr dedup (Lee et al. 2022, "Deduplicating
-    Training Data Makes Language Models Better"): q111 tells you HOW
-    MUCH of a doc is copied; this tells you WHERE, as (start, length)
-    word intervals a removal pass can actually cut.  A positional word
-    k-gram is "duplicated" when the same gram occurs in >= min_docs
-    distinct documents; consecutive duplicated gram positions merge
-    into one maximal run covering max_pos - min_pos + k words (the
-    distributed analogue of the suffix-array pass: every shared run of
-    >= k words is found, runs shorter than k are invisible — k is the
-    ExactSubstr length threshold).
-
-    Scale shape: one positional-gram explode (n-k+1 rows per doc), a
-    gram-keyed distinct-doc-count aggregate (map-side combinable), a
-    LEFT SEMI equi-join of the gram stream against the duplicated-gram
-    keys (both sides hash on the gram — never a self-join, no
-    quadratic key), then a per-doc window (row_number over pos) whose
-    doc_id shuffle also satisfies the (doc_id, island) grouping that
-    follows — gaps-and-islands costs ONE exchange.  All integers.
-
-    Returns (doc_id, run_start, run_len): run covers word indices
-    [run_start, run_start + run_len - 1], 0-based."""
-    from pyspark.sql import Window
-
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                    r"\s+", " "), " ")
-    # token array materialized before the gram lambda (HOF lambdas
-    # re-evaluate outer expressions per element — see shingles())
-    base = df.select(F.col(id_col).alias("doc_id"), toks.alias("_t"))
-    t = F.col("_t")
-    n = F.size(t)
-    gidx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    hashes = F.transform(
-        gidx,
-        lambda i: md5_int(F.concat(
-            F.lit(salt),
-            F.array_join(F.slice(t, i + 1, k), " "))))
-    g = base.select("doc_id",
-                    F.posexplode(hashes).alias("pos", "gh"))
-    dup_keys = (g.groupBy("gh")
-                .agg(F.countDistinct("doc_id").alias("g_df"))
-                .where(F.col("g_df") >= min_docs)
-                .select("gh"))
-    marked = g.join(dup_keys, "gh", "left_semi")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    isl = marked.withColumn("isl",
-                            F.col("pos") - F.row_number().over(w))
-    return (isl.groupBy("doc_id", "isl")
-            .agg(F.min("pos").alias("_s"), F.max("pos").alias("_e"))
-            .select("doc_id",
-                    F.col("_s").cast("bigint").alias("run_start"),
-                    (F.col("_e") - F.col("_s") + k).cast("bigint")
-                    .alias("run_len")))
-
-
-def remove_dup_spans(df: DataFrame, text_col: str, id_col: str,
-                     k: int = 3, min_docs: int = 2,
-                     salt: str = "ds:") -> DataFrame:
-    """ExactSubstr REMOVAL: cut every word covered by a
-    dup_substring_runs interval out of every document (the symmetric
-    cut — all copies lose the span; keep-one-copy policies compose
-    this with survivor_selection upstream), re-join the kept words in
-    order, and fingerprint the cleaned text.  Overlapping runs (two
-    islands whose covered word ranges overlap because their gram
-    positions differ by < k) are handled by membership testing against
-    the run SET, i.e. the interval union — no double counting.
-
-    Scale shape: dup_substring_runs' one exchange, a per-doc
-    collect_list of the (few) runs (same doc_id key — co-partitioned),
-    one equi-join back to the documents on doc_id, then the cut is a
-    per-row indexed array filter (F.filter's (word, i) lambda) — no
-    range join, no second corpus shuffle.
-
-    Returns (doc_id, n_words, kept_words, kept_fp) — kept_fp is the
-    md5-int of the cleaned text (the post-removal exact-dedup key)."""
-    runs = (dup_substring_runs(df, text_col, id_col, k=k,
-                               min_docs=min_docs, salt=salt)
-            .groupBy("doc_id")
-            .agg(F.collect_list(
-                F.struct(F.col("run_start").alias("s"),
-                         F.col("run_len").alias("l"))).alias("runs")))
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                    r"\s+", " "), " ")
-    base = df.select(F.col(id_col).alias("doc_id"), toks.alias("w"))
-    joined = base.join(runs, "doc_id", "left")
-    rs = F.coalesce(F.col("runs"),
-                    F.expr("array()").cast(
-                        "array<struct<s:bigint,l:bigint>>"))
-    kept = F.filter(
-        F.col("w"),
-        lambda x, i: ~F.exists(
-            rs, lambda r: (i >= r["s"]) & (i < r["s"] + r["l"])))
-    return joined.select(
-        "doc_id",
-        F.size("w").cast("bigint").alias("n_words"),
-        F.size(kept).cast("bigint").alias("kept_words"),
-        md5_int(F.array_join(kept, " ")).alias("kept_fp"))
-
-
-def blocking_audit(df: DataFrame, text_col: str, id_col: str,
-                   k: int = 3, min_shared: int = 2,
-                   max_df: int | None = None, n_hashes: int = 8,
-                   bands: int = 4,
-                   jaccard_ppm: int = 500_000) -> DataFrame:
-    """Blocking-quality audit: measure, on a sample corpus, how much
-    of the exact near-dup ground truth the banded-LSH blocking
-    actually reaches — the recall/precision sheet every production
-    dedup pipeline publishes before trusting its blocker at full
-    scale (the exact path is affordable on the audit sample; only the
-    blocker runs on the 100 TB corpus).
-
-        truth = capped-exact-Jaccard pairs with
-                inter * 1e6 >= jaccard_ppm * union   (integer test)
-        cand  = banded-LSH candidate pairs (pre-verification)
-        hit   = truth pairs present in cand
-
-    Returns ONE row: (n_truth, n_cand, n_hit, recall_ppm,
-    precision_ppm) — all integers (ppm ratios by integer div,
-    max(1, denominator) guards the empty edge), exact DuckDB twin.
-
-    Scale shape: both pair tables are already fan-out-bounded (truth
-    by the max_df shingle cap, candidates by banding); the audit adds
-    one equi-join on the (doc_a, doc_b) pair key and two single-row
-    aggregates joined by broadcast.  The audit corpus is a sample by
-    construction — the exact side's cost is the reason this is an
-    AUDIT, not the production path."""
-    exact = jaccard_pairs(df, text_col, id_col, k=k,
-                          min_shared=min_shared, max_df=max_df)
-    truth_release = exact.unpersist_input
-    truth = (exact.where(F.col("inter") * F.lit(1_000_000)
-                         >= F.lit(jaccard_ppm) * F.col("uni"))
-             .select("doc_a", "doc_b"))
-    lsh = lsh_candidate_pairs(df, text_col, id_col, k=k,
-                              n_hashes=n_hashes, bands=bands)
-    cand_release = lsh.unpersist_input
-    cand = lsh.withColumn("_c", F.lit(1))
-    hits = (truth.join(cand, ["doc_a", "doc_b"], "left")
-            .agg(F.count("*").cast("bigint").alias("n_truth"),
-                 F.coalesce(F.sum("_c"), F.lit(0)).cast("bigint")
-                 .alias("n_hit")))
-    totals = cand.agg(F.count("*").cast("bigint").alias("n_cand"))
-    out = (hits.crossJoin(F.broadcast(totals))
-           .select("n_truth", "n_cand", "n_hit",
-                   F.expr("(n_hit * 1000000) div greatest(n_truth, 1)")
-                   .cast("bigint").alias("recall_ppm"),
-                   F.expr("(n_hit * 1000000) div greatest(n_cand, 1)")
-                   .cast("bigint").alias("precision_ppm")))
-
-    def _release():
-        truth_release()
-        cand_release()
-    out.unpersist_input = _release
-    return out
 
 
 def global_rank(df: DataFrame, order_cols: list[str],
@@ -883,343 +377,3 @@ def sorted_neighborhood_pairs(df: DataFrame, key_col: str, id_col: str,
                    F.col("gap").cast("int").alias("gap")))
     out.unpersist_input = release
     return out
-
-
-def prefix_filter_pairs(df: DataFrame, text_col: str, id_col: str,
-                        t_ppm: int = 500_000,
-                        candidates_only: bool = False) -> DataFrame:
-    """Exact set-similarity join at Jaccard >= t via PREFIX FILTERING
-    (the PPJoin family, Xiao et al. 2008): order each document's
-    distinct tokens by ascending global document frequency (rarest
-    first, ties by token string), keep only the first
-    |s| - ceil(t*|s|) + 1 tokens as join keys — two sets with
-    Jaccard >= t MUST share a token inside these prefixes, so the
-    candidate set is COMPLETE at the threshold with no df cap
-    (jaccard_pairs' max_df trades exactness for boundedness; LSH
-    trades recall).  The skew lever is the ordering itself: hot
-    stopword tokens sort LAST and never enter a prefix, so join-key
-    fan-out concentrates on rare tokens — the higher the threshold,
-    the shorter the prefixes and the rarer the keys.
-
-    Verification is exact integer Jaccard over the FULL token sets,
-    computed by joining the (bounded) candidate pair list back
-    against the token table on (doc, token) composite keys — never a
-    raw token self-join.
-
-    ceil is exact-integer both engines: ceil(t*n) =
-    (t_ppm*n + 999_999) div 1_000_000.
-
-    POSITIONAL FILTER (the third PPJoin prune, after prefix + length):
-    Jaccard >= t forces overlap O >= ceil(t/(1+t) * (n_a+n_b)) = alpha
-    (from O >= t*(n_a+n_b-O)).  Both prefixes are sorted by the SAME
-    global token order, so at the pair's FIRST common token — which
-    the prefix guarantee places inside both prefixes at positions
-    (rn_a, rn_b) — every other common token sits strictly after it in
-    BOTH orderings, giving O <= min(n_a - rn_a, n_b - rn_b) + 1.  A
-    match row is kept only when that bound reaches alpha; the
-    first-common-token row of every true pair always passes, so the
-    candidate set stays COMPLETE while matches on late prefix
-    positions (where too little of either set remains) are dropped
-    before the distinct.  alpha is exact-integer:
-    (t_ppm*(n_a+n_b) + 1e6+t_ppm-1) div (1e6+t_ppm).
-
-    Returns (doc_a, doc_b, inter, uni) with
-    inter * 1e6 >= t_ppm * uni; with candidates_only=True, the
-    pre-verification (doc_a, doc_b) candidate set instead (the
-    blocking-audit input)."""
-    from pyspark.sql import Window
-
-    norm = F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                    r"\s+", " "), " ")
-    toks = (df.select(F.col(id_col).alias("doc_id"),
-                      F.explode(F.array_distinct(norm)).alias("token"))
-            .where(F.col("token") != ""))
-    # token table feeds: df counts, prefix build, and two verify sides
-    toks = toks.persist()
-    tdf = toks.groupBy("token").agg(F.count("*").alias("tdf"))
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    w = Window.partitionBy("doc_id").orderBy("tdf", "token")
-    ordered = (toks.join(tdf, "token")
-               .withColumn("rn", F.row_number().over(w))
-               .join(sizes, "doc_id"))
-    # exact integer div (never float `/` + floor: double spacing
-    # exceeds the 1e-6 quotient step once t_ppm*n passes ~2^52 — the
-    # CLAUDE.md cross-engine float trap, and exactly the 100 TB
-    # regime); `div` matches the oracle's `//` bit-for-bit
-    plen = F.expr(f"n - (({t_ppm} * n + 999999) div 1000000) + 1")
-    prefix = (ordered.where(F.col("rn") <= plen)
-              .select("doc_id", "token", "n", "rn"))
-    a, b = prefix.alias("pa"), prefix.alias("pb")
-    # PPJoin length filter: Jaccard >= t forces
-    # t * max(|a|,|b|) <= min(|a|,|b|) (inter <= min and
-    # inter >= t*uni >= t*max), so size-incompatible pairs are pruned
-    # INSIDE the prefix join — on mixed-length corpora this is the
-    # second big candidate cut after the prefix itself
-    denom = 1_000_000 + t_ppm
-    pos_ok = F.expr(
-        f"least(pa.n - pa.rn, pb.n - pb.rn) + 1"
-        f" >= ({t_ppm} * (pa.n + pb.n) + {denom - 1}) div {denom}")
-    cand = (a.join(b, on="token")
-            .where((F.col("pa.doc_id") < F.col("pb.doc_id"))
-                   & (F.lit(t_ppm)
-                      * F.greatest(F.col("pa.n"), F.col("pb.n"))
-                      <= F.lit(1_000_000)
-                      * F.least(F.col("pa.n"), F.col("pb.n")))
-                   & pos_ok)
-            .select(F.col("pa.doc_id").alias("doc_a"),
-                    F.col("pb.doc_id").alias("doc_b"))
-            .distinct())
-    if candidates_only:
-        cand.unpersist_input = toks.unpersist
-        return cand
-    ta = toks.select(F.col("doc_id").alias("doc_a"), "token")
-    tb = toks.select(F.col("doc_id").alias("doc_b"), "token")
-    inter = (cand.join(ta, "doc_a").join(tb, ["doc_b", "token"])
-             .groupBy("doc_a", "doc_b")
-             .agg(F.count("*").alias("inter")))
-    out = (inter
-           .join(sizes.select(F.col("doc_id").alias("doc_a"),
-                              F.col("n").alias("n_a")), "doc_a")
-           .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                              F.col("n").alias("n_b")), "doc_b")
-           .withColumn("uni", F.col("n_a") + F.col("n_b") - F.col("inter"))
-           .where(F.col("inter") * F.lit(1_000_000)
-                  >= F.lit(t_ppm) * F.col("uni"))
-           .select("doc_a", "doc_b",
-                   F.col("inter").cast("bigint").alias("inter"),
-                   F.col("uni").cast("bigint").alias("uni")))
-    out.unpersist_input = toks.unpersist
-    return out
-
-
-def multi_blocking_audit(df: DataFrame, text_col: str, id_col: str,
-                         k: int = 3, min_shared: int = 2,
-                         max_df: int | None = None, n_hashes: int = 8,
-                         bands: int = 4, jaccard_ppm: int = 500_000,
-                         sn_key_chars: int = 16, sn_window: int = 4,
-                         prefix_t_ppm: int = 900_000) -> DataFrame:
-    """Three-strategy blocking audit: recall/precision of banded LSH
-    (token-key), sorted-neighborhood (order-key), and prefix-filter
-    (rare-token-key) candidate generation against the SAME exact
-    capped-Jaccard truth — the sheet that picks the production
-    blocker per corpus before any of them runs at 100 TB.  Extends
-    blocking_audit (q128, LSH only): the three families fail
-    differently (LSH misses by probability, SN by key-prefix
-    divergence, prefix-filter by its different similarity space —
-    token sets vs k-gram shingles), so one number per strategy on
-    identical truth is the only fair comparison.
-
-    One row per strategy: (strategy, n_truth, n_cand, n_hit,
-    recall_ppm, precision_ppm), integers only.
-
-    Scale shape: truth is persisted (three consumers — the
-    multi-consumer-dimension persist rule); each candidate set keeps
-    its own generator's bounded shape and is folded by one pair-key
-    join + single-row aggregates."""
-    exact = jaccard_pairs(df, text_col, id_col, k=k,
-                          min_shared=min_shared, max_df=max_df)
-    truth_release = exact.unpersist_input
-    truth = (exact.where(F.col("inter") * F.lit(1_000_000)
-                         >= F.lit(jaccard_ppm) * F.col("uni"))
-             .select("doc_a", "doc_b").persist())
-    releases = [truth_release, truth.unpersist]
-
-    lsh = lsh_candidate_pairs(df, text_col, id_col, k=k,
-                              n_hashes=n_hashes, bands=bands)
-    releases.append(lsh.unpersist_input)
-
-    blk = F.substring(
-        F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "),
-        1, sn_key_chars)
-    sn_raw = sorted_neighborhood_pairs(
-        df.select(blk.alias("blk"), F.col(id_col).alias("sid")),
-        "blk", "sid", window=sn_window)
-    releases.append(sn_raw.unpersist_input)
-    # SN emits pairs in blocking-key order; canonicalize to the
-    # truth's (doc_a < doc_b) pair key
-    sn = sn_raw.select(F.least("id_a", "id_b").alias("doc_a"),
-                       F.greatest("id_a", "id_b").alias("doc_b"))
-
-    pf = prefix_filter_pairs(df, text_col, id_col, t_ppm=prefix_t_ppm,
-                             candidates_only=True)
-    releases.append(pf.unpersist_input)
-
-    out = None
-    for name, cand in (("lsh", lsh), ("sorted_neighborhood", sn),
-                       ("prefix_filter", pf)):
-        c = cand.select("doc_a", "doc_b").withColumn("_c", F.lit(1))
-        hits = (truth.join(c, ["doc_a", "doc_b"], "left")
-                .agg(F.count("*").cast("bigint").alias("n_truth"),
-                     F.coalesce(F.sum("_c"), F.lit(0)).cast("bigint")
-                     .alias("n_hit")))
-        totals = c.agg(F.count("*").cast("bigint").alias("n_cand"))
-        row = (hits.crossJoin(F.broadcast(totals))
-               .select(F.lit(name).alias("strategy"),
-                       "n_truth", "n_cand", "n_hit",
-                       F.expr("(n_hit * 1000000) div greatest(n_truth, 1)")
-                       .cast("bigint").alias("recall_ppm"),
-                       F.expr("(n_hit * 1000000) div greatest(n_cand, 1)")
-                       .cast("bigint").alias("precision_ppm")))
-        out = row if out is None else out.unionByName(row)
-
-    def _release():
-        for r in releases:
-            r()
-    out.unpersist_input = _release
-    return out
-
-
-def cdc_chunks(df: DataFrame, text_col: str, id_col: str,
-               gram: int = 8, divisor: int = 64,
-               salt: str = "cdc:") -> DataFrame:
-    """Content-defined chunking (the Rabin/Gear CDC idea behind
-    storage dedup in LBFS/restic/borg, md5-deterministic here): a
-    chunk boundary opens at every position whose `gram`-char window
-    hashes to 0 mod `divisor` — boundaries are CONTENT-anchored, so
-    an insertion early in a page shifts only the chunk it lands in,
-    and every identical passage yields identical chunk fingerprints
-    regardless of its offset.  Fixed-size blocks lose all alignment
-    after one insertion; whole-doc hashing (q15) catches only exact
-    pages.  CDC is the storage/transfer-dedup layer under a recrawl
-    pipeline: store chunk fingerprints once, re-upload only chunks
-    whose hash is new (expected chunk length ~= divisor chars).
-
-    This emits the chunk table; dedup ratios / survivor maps are
-    downstream aggregates (q215 reads per-source storage savings).
-    No min/max chunk-size clamps: clamps need sequential scan state
-    (cut legality depends on the previous cut), which breaks both
-    row-local parallelism and the SQL twin — the no-clamp form is
-    the textbook baseline and keeps every boundary independent.
-
-    Scale shape: one positional explode (corpus-length rows) for
-    the boundary scan — the same cost class as the positional
-    n-gram family (q111/q114) — then one per-doc lead() window over
-    CUT rows only (~len/divisor rows per doc) to close chunks;
-    chunk text is re-sliced from the carried doc text, never
-    assembled from grams.
-
-    Returns (doc, start, chunk_len, chunk_md5)."""
-    from pyspark.sql import Window
-    t = df.select(F.col(id_col).alias("doc"),
-                  F.col(text_col).alias("_txt"),
-                  F.length(text_col).alias("_n"))
-    pos = t.select(
-        "doc", "_txt", "_n",
-        F.explode(F.sequence(
-            F.lit(1), F.greatest(F.col("_n") - gram + 1, F.lit(1))))
-        .alias("i"))
-    cuts = pos.where(
-        (F.col("i") == 1)
-        | (F.pmod(md5_int(F.expr(f"substring(_txt, i, {gram})"),
-                          salt=salt),
-                  F.lit(divisor)) == 0))
-    w = Window.partitionBy("doc").orderBy("i")
-    chunks = (cuts.withColumn(
-        "nxt", F.coalesce(F.lead("i").over(w), F.col("_n") + 1))
-        .where(F.col("nxt") > F.col("i"))
-        .select("doc", F.col("i").alias("start"),
-                (F.col("nxt") - F.col("i")).cast("bigint")
-                .alias("chunk_len"),
-                F.md5(F.expr("substring(_txt, i, nxt - i)"))
-                .alias("chunk_md5")))
-    return chunks
-
-
-def fixed_chunks(df: DataFrame, text_col: str, id_col: str,
-                 size: int = 64) -> DataFrame:
-    """Fixed-size chunking — the CDC control: blocks at offsets
-    1, size+1, 2*size+1, ...  One insertion near the front of a page
-    shifts EVERY later block boundary, so a recrawl re-uploads the
-    whole page; cdc_chunks' content-anchored boundaries localize the
-    damage to one chunk.  Same output contract as cdc_chunks
-    (doc, start, chunk_len, chunk_md5) so the two feed one
-    reuse-accounting aggregate (q215)."""
-    t = df.select(F.col(id_col).alias("doc"),
-                  F.col(text_col).alias("_txt"),
-                  F.length(text_col).alias("_n"))
-    return (t.where(F.col("_n") > 0)
-            .select("doc", "_txt", "_n",
-                    F.explode(F.sequence(
-                        F.lit(1), F.col("_n"), F.lit(size)))
-                    .alias("start"))
-            .select("doc", "start",
-                    F.least(F.lit(size),
-                            F.col("_n") - F.col("start") + 1)
-                    .cast("bigint").alias("chunk_len"),
-                    F.md5(F.expr(f"substring(_txt, start, {size})"))
-                    .alias("chunk_md5")))
-
-
-LSH_PLAN_CONFIGS = ((16, 1), (8, 2), (4, 4), (2, 8), (1, 16))
-
-
-def lsh_collision_ppm_expr(sim: str, bands: int, rows: int,
-                           divop: str = "div") -> str:
-    """Fixed-point LSH candidate probability 1 - (1 - s^r)^b in ppm,
-    as an engine-neutral SQL expression over an integer ppm
-    similarity `sim` (divop = 'div' for Spark, '//' for DuckDB).
-    Every power step floors ((x*s) divop 1e6), so both engines and
-    the python twin agree bit-for-bit — float pow can never
-    hash-match.  Expression size is O(bands*rows) references to
-    `sim` (the 16-hash budget keeps it tiny)."""
-    def powp(x: str, n: int) -> str:
-        e = f"({x})"
-        for _ in range(n - 1):
-            e = f"((({e}) * ({x})) {divop} 1000000)"
-        return e
-    q = f"(1000000 - {powp(sim, rows)})"
-    return f"(1000000 - {powp(q, bands)})"
-
-
-def lsh_plan_audit(pairs: DataFrame, inter: str = "inter",
-                   uni: str = "uni",
-                   configs=LSH_PLAN_CONFIGS) -> DataFrame:
-    """LSH parameter planner grounded on OBSERVED pair similarities:
-    for each (bands, rows) split of the signature budget, the
-    expected candidate probability 1-(1-s^r)^b averaged over the
-    real Jaccard pair distribution — overall, over true near-dups
-    (sim >= 0.7), and over junk pairs (sim < 0.3).  This is the
-    sheet that justifies a banding choice BEFORE building the index:
-    more bands (OR-heavy) buys near-dup recall but drags junk into
-    the verify stage; more rows (AND-heavy) inverts the trade.  The
-    q17/q21 (4,4)-at-16-hashes choice reads straight off it.
-
-    All fixed-point integer (lsh_collision_ppm_expr), so the sheet
-    is hash-exact cross-engine.  ONE aggregate over the pair table
-    computes every config's three averages (3*len(configs) CASE
-    sums), then a stack projection emits one row per config — no
-    per-config scans.
-
-    Returns (bands, rows, n_pairs, n_hi, n_lo, exp_recall_ppm,
-    hi_recall_ppm, lo_catch_ppm)."""
-    base = pairs.select(
-        F.expr(f"({inter} * 1000000) div {uni}")
-        .cast("bigint").alias("sim"))
-    aggs = [F.count("*").alias("n"),
-            F.expr("sum(CASE WHEN sim >= 700000 THEN 1 ELSE 0 END)")
-            .alias("nh"),
-            F.expr("sum(CASE WHEN sim < 300000 THEN 1 ELSE 0 END)")
-            .alias("nl")]
-    for i, (b, r) in enumerate(configs):
-        p = lsh_collision_ppm_expr("sim", b, r, "div")
-        aggs += [
-            F.expr(f"sum({p})").alias(f"s{i}"),
-            F.expr(f"sum(CASE WHEN sim >= 700000 THEN {p}"
-                   f" ELSE 0 END)").alias(f"sh{i}"),
-            F.expr(f"sum(CASE WHEN sim < 300000 THEN {p}"
-                   f" ELSE 0 END)").alias(f"sl{i}")]
-    one = base.agg(*aggs)
-    rows_sql = ", ".join(
-        f"CAST({b} AS INT), CAST({r} AS INT), "
-        f"CAST(s{i} div greatest(n, 1) AS BIGINT), "
-        f"CAST(sh{i} div greatest(nh, 1) AS BIGINT), "
-        f"CAST(sl{i} div greatest(nl, 1) AS BIGINT)"
-        for i, (b, r) in enumerate(configs))
-    return (one.selectExpr(
-        f"stack({len(configs)}, {rows_sql}) AS "
-        "(bands, rows, exp_recall_ppm, hi_recall_ppm, lo_catch_ppm)",
-        "CAST(n AS BIGINT) AS n_pairs",
-        "CAST(nh AS BIGINT) AS n_hi",
-        "CAST(nl AS BIGINT) AS n_lo")
-        .select("bands", "rows", "n_pairs", "n_hi", "n_lo",
-                "exp_recall_ppm", "hi_recall_ppm", "lo_catch_ppm"))

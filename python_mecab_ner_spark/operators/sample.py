@@ -530,7 +530,7 @@ def greedy_max_coverage(pairs: DataFrame, item_col: str, elem_col: str,
     per round (iterative house rule), so plan depth stays O(1) per
     round; per-round cost is one aggregate + one anti-join, k is a
     small constant, and only k (round, item, gain) scalars ever
-    reach the driver (codebook-sized, the kmeans_codebook rule).
+    reach the driver.
 
     Stops early when the live table runs dry (every element
     covered).  Requires 0 <= item < 2^id_bits and per-item degree

@@ -338,58 +338,3 @@ def recrawl_page(doc_id: int, seed: int = 42, alt_seed: int = 43,
     row["url"] = base["url"]
     row["warc_ts"] = base["warc_ts"] + _dt.timedelta(minutes=ts_shift_min)
     return row
-
-
-def clustered_embeddings(spark, n_vecs: int, dim: int = 64,
-                         n_clusters: int = 32, seed: int = 7,
-                         spread: float = 0.18,
-                         partitions: int | None = None):
-    """Mixture-of-Gaussians embedding table — the payload real encoders
-    emit (round-3 verdict task 7).  The testdata embeddings are
-    near-isotropic, which UNDERSTATES LSH/IVF recall: real sentence
-    embeddings cluster by topic, so bucketing recovers neighbors far
-    more often.  This synthesizer provides the clustered twin for the
-    recall/scan frontier (scripts/ann_recall.py clustered:<n>).
-
-    Deterministic at any parallelism: centers come from
-    RandomState(seed) on the driver (tiny, closed over by the UDF);
-    each vector's cluster choice and noise come from
-    RandomState(f(seed, vec_id)) — content-keyed, never
-    partition-keyed.  Cluster sizes are skewed (quadratic transform of
-    a uniform draw) because topic clusters are never uniform.  Schema
-    matches testdata embeddings.parquet: (vec_id long, embedding
-    array<float>, label int = true cluster id).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rs = np.random.RandomState(seed)
-    centers = rs.randn(n_clusters, dim).astype("float64")
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType()), False),
-        T.StructField("label", T.IntegerType(), False),
-    ])
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                vid = int(i)
-                vrs = np.random.RandomState((seed * 1_000_003 + vid)
-                                            % (2 ** 31 - 1))
-                c = int(n_clusters * (vrs.rand() ** 2))  # skewed sizes
-                vec = centers[c] + spread * vrs.randn(dim)
-                rows.append((vid,
-                             [float(x) for x in vec.astype("float32")],
-                             c))
-            yield pd.DataFrame(rows, columns=["vec_id", "embedding",
-                                              "label"])
-
-    rng_df = spark.range(0, n_vecs,
-                         numPartitions=partitions
-                         or spark.sparkContext.defaultParallelism)
-    return rng_df.mapInPandas(gen, schema=schema)

@@ -2,9 +2,10 @@
 EXPLAIN.md so plan hygiene is reviewable without running Spark.
 Regenerate: python scripts/dump_explain.py
 
-Spark numbers expression ids (`#N`), exchange ids (`plan_id=N`) and
-RDD ids (`RDD[N]`) across the whole session, so each section renumbers
-them from 1 in order of first appearance.  An RDD's call site names the
+Spark numbers expression ids (`#N`), exchange ids (`plan_id=N`), RDD
+ids (`RDD[N]`) and higher-order-function lambda variables (`lambda
+x_N`) across the whole session, so each section renumbers them from 1
+in order of first appearance.  An RDD's call site names the
 JVM's reflective-call frame, which reads `NativeMethodAccessorImpl.java`
 until the JVM has inflated that method's accessor after enough calls
 and `<unknown>` after, so it is written as one fixed token.  A section
@@ -24,23 +25,22 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q16_jaccard_pairs", "q17_lsh_pairs", "q20_ann_bruteforce",
         "q21_ann_lsh", "q33_neighbor_stats", "q34_context_argmax",
         "q36_bio_export", "q40_pagerank", "q43_dup_argmax",
-        "q44_evidence_scores", "q46_decontaminate", "q47_pii_redact",
+        "q44_evidence_scores", "q47_pii_redact",
         "q48_line_dedup", "q49_khop", "q50_bigram_pmi",
-        "q51_quantized_ann", "q53_surprisal",
+        "q53_surprisal",
         "q54_window_dedup", "q55_stratified_sample", "q56_quality_gate",
         "q57_source_profile", "q58_neighbor_jaccard", "q59_bm25",
-        "q60_pack_sequences", "q61_semdedup", "q62_ppr", "q63_funnel",
-        "q64_cohort_retention", "q65_dedup_survivors", "q66_url_canonical",
+        "q60_pack_sequences", "q62_ppr", "q63_funnel",
+        "q64_cohort_retention", "q66_url_canonical",
         "q67_chunk_overlap", "q68_weighted_rank", "q69_hash_split",
-        "q70_communities", "q72_training_prep", "q77_embedding_gram",
+        "q70_communities", "q72_training_prep",
         "q78_source_mix",
         "q80_kn_continuation", "q81_crawl_budget", "q83_fuzzy_alias",
         "q84_importance_weights", "q85_burst_days", "q86_length_deciles",
         "q87_rrf_fusion", "q88_tfidf_cosine_pairs",
         "q92_recency_decay", "q95_quality_hist_gate",
         "q96_cooccurrence",
-        "q99_degree_histogram", "q100_incremental_lsh", "q101_kwic",
-        "q102_split_leakage", "q103_weighted_simhash",
+        "q99_degree_histogram", "q101_kwic",
         "q105_source_risk", "q106_source_overlap", "q107_next_word",
         "q108_eval_sample",
         # round 4
@@ -52,15 +52,14 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q167_phrase_search", "q168_symspell",
         # round 5
         "q170_symspell_d2", "q171_sorted_neighborhood",
-        "q172_prefix_filter_join", "q173_ktruss",
-        "q174_multi_blocking_audit",
+        "q173_ktruss",
         "q177_mis", "q178_funnel", "q179_cohort_retention",
         "q180_semantic_decon", "q181_event_transitions",
         # final round-5 sweep
         "q184_bootstrap_ci", "q185_wilson", "q186_hearst",
         "q188_merge_matching", "q189_cusum",
         "q190_betweenness", "q192_stitch",
-        "q193_coverage_selection", "q194_kcenter",
+        "q193_coverage_selection",
         "q195_url_templates", "q196_rake",
         # round-5 continuation
         "q197_boruvka_mst", "q198_densest", "q199_k_anonymity",
@@ -70,14 +69,14 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q208_scd2_history",
         # post-closeout
         "q209_textrank", "q210_zorder_layout",
-        "q212_spam_mass", "q213_rand_ari", "q215_cdc_dedup",
+        "q212_spam_mass", "q213_rand_ari",
         "q220_reshard", "q221_postings_gaps",
         "q222_class_terms", "q223_neyman",
-        "q224_seasonal_outliers", "q227_lsh_plan",
+        "q224_seasonal_outliers",
         "q228_fresh_rank"]
 
 
-_SESSION_ID = re.compile(r"(#|plan_id=|RDD\[)(\d+)")
+_SESSION_ID = re.compile(r"(#|plan_id=|RDD\[|lambda \w+?_)(\d+)")
 _REFLECTIVE_FRAME = re.compile(r"(?:NativeMethodAccessorImpl\.java|<unknown>):0")
 
 
@@ -87,7 +86,8 @@ def stable_ids(plan: str) -> str:
     seen: dict[str, dict[str, int]] = {}
 
     def renumber(m: re.Match) -> str:
-        ids = seen.setdefault(m.group(1), {})
+        # lambda variables share one counter, as in Spark
+        ids = seen.setdefault(m.group(1).split(" ")[0], {})
         return m.group(1) + str(ids.setdefault(m.group(2), len(ids) + 1))
 
     return _REFLECTIVE_FRAME.sub("<py4j>", _SESSION_ID.sub(renumber, plan))

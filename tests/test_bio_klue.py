@@ -6,11 +6,14 @@ tests/test_category_save.py:108 answer — the entity 좋은 차 labels as
 span->BIO operator (the reference reaches the same vector via
 set_bi_tag + set_mecab_label)."""
 
+from pathlib import Path
+
 from python_mecab_ner_spark.kernel.bio import (bio_from_char_spans,
                                                bio_vector,
                                                char_spans_to_token_spans)
 
-KLUE_FIXTURE = "/root/repo/tests/data/klue_fixture.json"
+KLUE_FIXTURE = str(Path(__file__).resolve().parent / "data"
+                   / "klue_fixture.json")
 
 
 def test_bio_vector_reference_golden():

@@ -106,26 +106,12 @@ def test_bigram_pmi_golden(spark):
 
 
 def test_quantize_embeddings_golden(spark):
-    from python_mecab_ner_spark.operators.ann import (quantize_embeddings,
-                                                      quantize_vec)
+    from python_mecab_ner_spark.operators.ann import quantize_embeddings
     d = spark.createDataFrame([(1, [0.5, -0.5, 1.5, -1.5, 0.0])],
                               "vec_id int, embedding array<float>")
     [row] = quantize_embeddings(d).collect()
     # floor(0.5*127)=63, floor(-0.5*127)=-64, clip at +-[127,-128]
     assert row.qemb == [63, -64, 127, -128, 0]
-    assert quantize_vec([0.5, -0.5, 1.5, -1.5, 0.0]) == row.qemb
-
-
-def test_quantized_topk_golden(spark):
-    from python_mecab_ner_spark.operators.ann import quantized_topk
-    d = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [-1.0, 0.0]),
-         (3, [0.0, 1.0])],
-        "vec_id int, embedding array<float>")
-    rows = quantized_topk(d, [1.0, 0.0], k=3).collect()
-    got = [(r.vec_id, r.qdot, r.rank) for r in rows]
-    # q=[127,0]; dots: v0=127*127, v1=floor(.9*127)=114*127, v3=0
-    assert got == [(0, 16129, 1), (1, 14478, 2), (3, 0, 3)]
 
 
 def test_triangle_counts_k4(spark):
@@ -164,37 +150,6 @@ def test_doc_surprisal_golden(spark):
            for r in doc_surprisal(ctx).collect()}
     # N=5: idf(a)=bitlen(5 div 3)=1, idf(b)=idf(c)=bitlen(5)=3
     assert got == {1: (3, 5, 1666), 2: (2, 4, 2000)}
-
-
-# ---- survivor selection (packed-integer argmax) ---------------------------
-
-def test_survivor_selection_argmax_and_ties(spark):
-    from python_mecab_ner_spark.operators.dedup import survivor_selection
-    rows = [
-        # cluster 10: clear quality winner (id 7, q 90)
-        (10, 3, 50), (10, 7, 90), (10, 9, 40),
-        # cluster 20: tie at q 80 -> MIN id (4) wins, not max
-        (20, 8, 80), (20, 4, 80), (20, 6, 10),
-        # singleton cluster
-        (30, 5, 0),
-    ]
-    m = spark.createDataFrame(rows, "cluster_id long, doc_id long, q int")
-    got = {r.cluster: (r.survivor_id, r.best_score, r.n_members)
-           for r in survivor_selection(m, "cluster_id", "doc_id",
-                                       "q").collect()}
-    assert got == {10: (7, 90, 3), 20: (4, 80, 3), 30: (5, 0, 1)}
-
-
-def test_survivor_selection_is_single_aggregate_no_window(spark):
-    from python_mecab_ner_spark.operators.dedup import survivor_selection
-    m = spark.createDataFrame([(1, 2, 3)],
-                              "cluster_id long, doc_id long, q int")
-    plan = (survivor_selection(m, "cluster_id", "doc_id", "q")
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window" not in plan
-    # partial (map-side) aggregation present: two HashAggregate levels,
-    # one Exchange
-    assert plan.count("Exchange") <= 1
 
 
 # ---- URL canonicalization -------------------------------------------------
@@ -275,145 +230,3 @@ def test_chunk_documents_randomized_vs_python(spark):
             if chunk:
                 want[(i, ci)] = len(chunk)
     assert got == want
-
-
-def test_survivor_selection_randomized_vs_python(spark):
-    import random
-
-    from python_mecab_ner_spark.operators.dedup import survivor_selection
-    rng = random.Random(11)
-    rows = [(rng.randrange(40), i, rng.randrange(5))  # dense score ties
-            for i in range(500)]
-    m = spark.createDataFrame(rows, "c long, id long, q int")
-    got = {r.cluster: (r.survivor_id, r.best_score, r.n_members)
-           for r in survivor_selection(m, "c", "id", "q").collect()}
-    want = {}
-    for c, i, q in rows:
-        cur = want.get(c)
-        if cur is None or (q, -i) > (cur[1], -cur[0]):
-            want[c] = (i, q, 0)
-    counts = {}
-    for c, *_ in rows:
-        counts[c] = counts.get(c, 0) + 1
-    want = {c: (i, q, counts[c]) for c, (i, q, _) in want.items()}
-    assert got == want
-
-
-# ---- sketch mergeability (incremental maintenance) ------------------------
-
-
-def test_minhash_merge_equals_signature_of_union(spark):
-    """sig over the union of two text slices == elementwise min of the
-    per-slice signatures (same doc split across slices)."""
-    from python_mecab_ner_spark.operators.dedup import (minhash_merge,
-                                                        minhash_signatures)
-    a = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "one two three four")],
-        "doc_id long, text string")
-    b = spark.createDataFrame(
-        [(1, "beta gamma epsilon zeta"), (2, "five six seven eight")],
-        "doc_id long, text string")
-    both = a.unionByName(b)
-    want = {r.doc_id: tuple(r[f"mh{i}"] for i in range(16))
-            for r in minhash_signatures(both, "text", "doc_id").collect()}
-    got = {r.doc_id: tuple(r[f"mh{i}"] for i in range(16))
-           for r in minhash_merge(
-               minhash_signatures(a, "text", "doc_id"),
-               minhash_signatures(b, "text", "doc_id")).collect()}
-    assert got == want
-
-
-def _minhash_py(text, n_hashes=8, k=3):
-    import re
-
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    w = re.sub(r"\s+", " ", text.lower().strip()).split(" ")
-    # windows start only at 0..len-k (one truncated gram iff len < k)
-    # — operators.dedup.shingles' exact semantics
-    grams = {" ".join(w[i:i + k])
-             for i in range(max(len(w) - k, 0) + 1)} - {""}
-    return [min(md5_int_py(g, salt=f"mh{i}:") for g in grams)
-            for i in range(n_hashes)]
-
-
-def test_incremental_lsh_equals_full_lsh_on_delta_pairs(spark):
-    """incremental_lsh_pairs(old_sigs, new_sigs) finds EXACTLY the
-    full-corpus LSH candidate pairs that touch a new doc — no pair
-    missed, no old x old pair emitted — and its signature-side
-    verification count matches the python minhash twin."""
-    from pyspark.sql import functions as F
-
-    from python_mecab_ner_spark.operators.dedup import (
-        incremental_lsh_pairs, lsh_candidate_pairs, minhash_signatures)
-
-    base = ["alpha beta gamma delta epsilon zeta eta theta",
-            "one two three four five six seven eight nine",
-            "lorem ipsum dolor sit amet consectetur adipiscing"]
-    rows = []
-    for i in range(24):
-        t = base[i % 3] + (" extra tail" if i % 6 >= 3 else "")
-        rows.append((i, t))
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-
-    full = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(
-        df, "text", "doc_id", k=3, n_hashes=8, bands=4).collect()}
-    expected = {(a, b) for a, b in full if a % 3 == 0 or b % 3 == 0}
-
-    old_sigs = minhash_signatures(df.where(F.col("doc_id") % 3 != 0),
-                                  "text", "doc_id", k=3, n_hashes=8)
-    new_sigs = minhash_signatures(df.where(F.col("doc_id") % 3 == 0),
-                                  "text", "doc_id", k=3, n_hashes=8)
-    inc = incremental_lsh_pairs(old_sigs, new_sigs,
-                                n_hashes=8, bands=4).collect()
-    got = {(r.doc_a, r.doc_b) for r in inc}
-    assert got == expected and got  # non-trivial
-
-    texts = dict(rows)
-    for r in inc:
-        # side classification and the signature-match verification
-        assert r.side == ("new_new" if (r.doc_a % 3 == 0
-                                        and r.doc_b % 3 == 0)
-                          else "new_old")
-        ma, mb = _minhash_py(texts[r.doc_a]), _minhash_py(texts[r.doc_b])
-        assert r.sig_matches == sum(x == y for x, y in zip(ma, mb))
-
-
-def test_simhash_weighted_python_twin_and_boilerplate_damping(spark):
-    """Bit-exact python recompute, plus the property the weighting
-    buys: two docs sharing only template boilerplate (df = n_docs,
-    weight 1) land FARTHER apart than the unweighted simhash puts
-    them relative to their rare-word content."""
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    from python_mecab_ner_spark.operators.dedup import simhash_weighted
-
-    rows = [(1, "the quick brown fox copyright footer nav"),
-            (2, "the lazy green dog copyright footer nav"),
-            (3, "the quick brown fox copyright footer nav"),
-            (4, "zebra quark xylem vortex copyright footer nav")]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {r.doc_id: r.simhash_w
-           for r in simhash_weighted(df, "text", "doc_id",
-                                     n_bits=16).collect()}
-
-    import re
-    texts = dict(rows)
-    n = len(rows)
-    dfc = {}
-    for t in texts.values():
-        for w in set(re.split(r"\s+", t.lower().strip())) - {""}:
-            dfc[w] = dfc.get(w, 0) + 1
-    exp = {}
-    for d, t in texts.items():
-        votes = [0] * 16
-        for w in re.split(r"\s+", t.lower().strip()):
-            if not w:
-                continue
-            wt = (n // dfc[w]).bit_length()
-            h = md5_int_py(w)
-            for i in range(16):
-                votes[i] += wt if (h >> i) & 1 else -wt
-        exp[d] = sum(1 << i for i in range(16) if votes[i] > 0)
-    assert got == exp
-    # identical docs collide exactly; boilerplate-only overlap doesn't
-    assert got[1] == got[3]
-    assert got[1] != got[4]

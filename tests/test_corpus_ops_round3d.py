@@ -1,77 +1,12 @@
-"""Round-3 final additions: ExactSubstr dup spans + removal, vocab
-drift, phrase blocklist, postings table — hand-computed goldens and
-interval-union edge cases."""
+"""Round-3 final additions: vocab drift, phrase blocklist, postings
+table, HyperBall — hand-computed goldens and edge cases."""
 
 from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.functions.hashing import md5_int_py
 from python_mecab_ner_spark.functions.text import blocklist_phrase_counts
-from python_mecab_ner_spark.operators.dedup import (dup_substring_runs,
-                                                    remove_dup_spans)
 from python_mecab_ner_spark.operators.profile import vocab_drift
 from python_mecab_ner_spark.operators.retrieval import postings_table
-
-# docs 1 and 2 share the 5-word phrase "alpha beta gamma delta eps"
-# (positions 1..5 in doc 1, 0..4 in doc 2); doc 3 is disjoint
-SPAN_DOCS = [
-    (1, "x alpha beta gamma delta eps y z"),
-    (2, "alpha beta gamma delta eps q r s"),
-    (3, "totally unrelated words only here now"),
-]
-
-
-def test_dup_runs_golden(spark):
-    d = spark.createDataFrame(SPAN_DOCS, "doc_id int, text string")
-    got = {(r.doc_id, r.run_start, r.run_len)
-           for r in dup_substring_runs(d, "text", "doc_id", k=3).collect()}
-    # shared 5-word phrase => 3-gram positions {1,2,3} in doc 1 and
-    # {0,1,2} in doc 2 merge into one run of 3 + 3 - 1 + ... = 5 words
-    assert got == {(1, 1, 5), (2, 0, 5)}
-
-
-def test_dup_runs_short_doc_truncated_gram(spark):
-    # two identical 2-word docs: single truncated "gram" at pos 0,
-    # run covers max-min+k = 3 word slots (clipped at doc end by the
-    # removal pass, invisible here) — the winnow-family edge
-    d = spark.createDataFrame([(1, "aa bb"), (2, "aa bb")],
-                              "doc_id int, text string")
-    got = {(r.doc_id, r.run_start, r.run_len)
-           for r in dup_substring_runs(d, "text", "doc_id", k=3).collect()}
-    assert got == {(1, 0, 3), (2, 0, 3)}
-
-
-def test_remove_dup_spans_union_and_fp(spark):
-    d = spark.createDataFrame(SPAN_DOCS, "doc_id int, text string")
-    rows = {r.doc_id: r for r in
-            remove_dup_spans(d, "text", "doc_id", k=3).collect()}
-    # doc 1 loses words 1..5, keeps "x y z"; doc 2 loses 0..4
-    assert (rows[1].n_words, rows[1].kept_words) == (8, 3)
-    assert rows[1].kept_fp == md5_int_py("x y z")
-    assert (rows[2].n_words, rows[2].kept_words) == (8, 3)
-    assert rows[2].kept_fp == md5_int_py("q r s")
-    # doc 3 untouched
-    assert (rows[3].n_words, rows[3].kept_words) == (6, 6)
-    assert rows[3].kept_fp == md5_int_py(
-        "totally unrelated words only here now")
-
-
-def test_remove_dup_spans_overlapping_runs_no_double_cut(spark):
-    # "p q r" duplicated at positions 0 and 2 of doc 1 (overlap at
-    # word 2): islands are separate (gram positions 0 and 2 are not
-    # adjacent) but the interval UNION covers words 0..4 exactly once
-    d = spark.createDataFrame(
-        [(1, "p q p q r tail1 tail2"),
-         (2, "p q r xx yy"),       # shares gram "p q r" (pos 2 of doc1)
-         (3, "p q p zz ww")],      # shares gram "p q p" (pos 0 of doc1)
-        "doc_id int, text string")
-    runs = {(r.doc_id, r.run_start, r.run_len)
-            for r in dup_substring_runs(d, "text", "doc_id", k=3).collect()}
-    assert (1, 0, 3) in runs and (1, 2, 3) in runs
-    rows = {r.doc_id: r for r in
-            remove_dup_spans(d, "text", "doc_id", k=3).collect()}
-    # union [0,2] U [2,4] = words 0..4 -> keeps the 2 tail words
-    assert (rows[1].n_words, rows[1].kept_words) == (7, 2)
-    assert rows[1].kept_fp == md5_int_py("tail1 tail2")
 
 
 def test_vocab_drift_golden(spark):
@@ -193,75 +128,3 @@ def test_hyperball_estimate_tracks_exact_ball(spark):
     mean = sum(ratios) / n
     assert 0.8 < mean < 1.2, mean
     assert sum(1 for x in ratios if 0.5 < x < 1.5) >= int(0.9 * n)
-
-
-def _pq_py(vecs, qvec, m, ks, k=10, scale=127):
-    """Pure-python twin of pq_topk (same seeds, packing, tie rules)."""
-    import math
-
-    def quant(v):
-        return [max(-128, min(127, math.floor(float(x) * scale)))
-                for x in v]
-
-    qz = {i: quant(v) for i, v in vecs.items()}
-    dims = len(next(iter(vecs.values())))
-    sub = dims // m
-    seeds = sorted(qz, key=lambda i: (md5_int_py(str(i), salt="pq:"), i))
-    cents = {(j, c): qz[seeds[c]][j * sub:(j + 1) * sub]
-             for j in range(m) for c in range(ks)}
-
-    def l2(a, b):
-        return sum((x - y) ** 2 for x, y in zip(a, b))
-
-    def encode(qv):
-        return [min(range(ks),
-                    key=lambda c: (l2(qv[j * sub:(j + 1) * sub],
-                                      cents[(j, c)]), c))
-                for j in range(m)]
-
-    qq = quant(qvec)
-    lut = {(j, c): l2(qq[j * sub:(j + 1) * sub], cents[(j, c)])
-           for j in range(m) for c in range(ks)}
-    scored = sorted(
-        ((sum(lut[(j, code)] for j, code in enumerate(encode(qz[i]))), i)
-         for i in qz))
-    return [(i, d) for d, i in scored[:k]]
-
-
-def test_pq_topk_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.ann import pq_topk
-    # deterministic 40 x 16 synthetic embeddings
-    vecs = {i: [((i * 31 + d * 17 + 7) % 101 - 50) / 50.0
-                for d in range(16)] for i in range(40)}
-    q = vecs[5]
-    d = spark.createDataFrame(
-        [(i, v) for i, v in vecs.items()],
-        "vec_id int, embedding array<float>")
-    # NOTE float32 storage: quantize floors the FLOAT->double widening,
-    # python must see the same float32 values
-    import struct
-    vecs32 = {i: [struct.unpack('f', struct.pack('f', x))[0] for x in v]
-              for i, v in vecs.items()}
-    q32 = vecs32[5]
-    got = [(r.vec_id, r.pq_dist)
-           for r in pq_topk(d, q32, k=10, m=4, ks=8, dims=16).collect()]
-    assert got == _pq_py(vecs32, q32, m=4, ks=8, k=10)
-
-
-def test_pq_seed_query_retrieves_itself_at_zero(spark):
-    from python_mecab_ner_spark.operators.ann import (pq_codebook,
-                                                      pq_encode, pq_topk)
-    vecs = {i: [((i * 13 + d * 23 + 3) % 97 - 48) / 48.0
-                for d in range(16)] for i in range(30)}
-    d = spark.createDataFrame(
-        [(i, v) for i, v in vecs.items()],
-        "vec_id int, embedding array<float>")
-    # find one actual seed id (smallest pq-hash)
-    seed = min(range(30), key=lambda i: (md5_int_py(str(i), salt="pq:"), i))
-    qvec = [float(x) for x in
-            d.where(f"vec_id = {seed}").first()["embedding"]]
-    top = pq_topk(d, qvec, k=3, m=4, ks=8, dims=16).collect()
-    # a seed's subvectors ARE centroids: its own ADC distance is 0
-    assert top[0].vec_id == seed and top[0].pq_dist == 0
-
-

@@ -1,13 +1,11 @@
 """Corpus-quality operators: within-doc repetition (Gopher duplicate
-n-gram rule) and benchmark decontamination (exact n-gram collision
-screening) — hand-computed goldens + edge cases."""
+n-gram rule) — hand-computed goldens + edge cases."""
 
 import duckdb
 from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.functions.text import (duplicate_ngram_ppm,
                                                    duplicate_ngram_ppm_sql)
-from python_mecab_ner_spark.operators.dedup import ngram_collisions
 
 DOCS = [
     # "a b a b a": bigrams [a b, b a, a b, b a] -> 4 total, 2 distinct
@@ -37,34 +35,6 @@ def test_duplicate_ngram_ppm_duckdb_twin():
         f"SELECT doc_id, {duplicate_ngram_ppm_sql('text', n=2)} AS ppm "
         f"FROM documents ORDER BY doc_id").fetchall()
     assert dict(rows) == {1: 500000, 2: 0, 3: 0, 4: 0, 5: 666666}
-
-
-def test_ngram_collisions_golden(spark):
-    bench = spark.createDataFrame(
-        [(100, "the quick brown fox jumps")], "doc_id int, text string")
-    corpus = spark.createDataFrame(
-        [(1, "lazy quick brown fox sleeps"),   # 1 colliding trigram
-         (2, "the quick brown fox jumps far"), # 3 colliding trigrams
-         (3, "nothing shared here at all")],
-        "doc_id int, text string")
-    got = {r.doc_id: r.n_collide for r in
-           ngram_collisions(corpus, bench, "text", "doc_id", k=3).collect()}
-    # doc 3 has zero collisions -> absent (contamination candidates only)
-    assert got == {1: 1, 2: 3}
-
-
-def test_ngram_collisions_counts_distinct_grams_once(spark):
-    """A gram repeated inside a corpus doc counts once (the shingle
-    set is distinct per doc), and the shuffle-join fallback agrees
-    with the broadcast path."""
-    bench = spark.createDataFrame([(9, "a b c")], "doc_id int, text string")
-    corpus = spark.createDataFrame([(1, "a b c x a b c")],
-                                   "doc_id int, text string")
-    for bc in (True, False):
-        got = {r.doc_id: r.n_collide for r in
-               ngram_collisions(corpus, bench, "text", "doc_id", k=3,
-                                broadcast_bench=bc).collect()}
-        assert got == {1: 1}
 
 
 def test_duplicate_ngram_ppm_cross_engine_random(spark):

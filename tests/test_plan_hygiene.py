@@ -58,30 +58,6 @@ def test_ann_topk_uses_take_ordered(spark, sf01):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_lsh_verified_pairs_has_no_shingle_selfjoin(spark, sf01):
-    """The scale-killer the round-1 audit flagged: q27's candidate
-    pairs must come from the banded-LSH join (band_key), never a raw
-    shingle = shingle self-join (O(df^2) fan-out on stopword
-    trigrams).  A shingle key may appear in a join only alongside a
-    doc-id key (the per-candidate verification join)."""
-    import re
-
-    from python_mecab_ner_spark.operators.dedup import lsh_verified_pairs
-    d = spark.read.parquet(f"{sf01}/documents.parquet")
-    plan = _plan(lsh_verified_pairs(d, "text", "doc_id"))
-    assert "band_key#" in plan, plan
-    # formatted explain renders each join's keys as
-    # "Left keys [k]: [...]": shingle must never be the SOLE key
-    sole_key_lines = re.findall(r"(?:Left|Right) keys \[1\]: \[[^\]]*\]", plan)
-    assert sole_key_lines, plan  # sanity: the band/size joins exist
-    for line in sole_key_lines:
-        assert "shingle#" not in line, f"shingle-only join key: {line}"
-    # and the verification join keys shingle TOGETHER with a doc id
-    multi = [l for l in re.findall(r"(?:Left|Right) keys \[2\]: \[[^\]]*\]", plan)
-             if "shingle#" in l]
-    assert all("doc" in l for l in multi), multi
-
-
 def test_q16_shingle_cap_in_plan(spark, sf01):
     """q16's capped-jaccard must aggregate shingle document frequency
     (the cap) before the self-join: two extra HashAggregates over
@@ -163,17 +139,6 @@ def test_fused_evidence_scoring_joins_context_once(spark):
     assert ctx_scans(stepwise) == 2
 
 
-def test_q46_decontaminate_broadcasts_bench_grams(spark, sf01):
-    """Decontamination screening must broadcast the benchmark gram
-    set against the corpus grams — a shuffle join would exchange the
-    whole exploded corpus by gram key; and no self-join / cartesian
-    may appear anywhere."""
-    plan = _plan(entry.q46_decontaminate(spark, sf01))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-
-
 def test_q43_stats_joins_broadcast(spark, sf01):
     """The additive-argmax scoring joins its (vocab-sized) stats table
     broadcast — a shuffle join on the stats side would shuffle the
@@ -205,13 +170,6 @@ def test_pii_redact_is_shuffle_free(spark, sf01):
     plan = _plan(entry.q47_pii_redact(spark, sf01))
     # pure per-row regexp map: scan -> project, zero exchanges
     assert "Exchange" not in plan, plan
-
-
-def test_quantized_ann_uses_take_ordered(spark, sf01):
-    plan = _plan(entry.q51_quantized_ann(spark, sf01))
-    # integer dot-product scan -> distributed TakeOrderedAndProject;
-    # never a global sort of the full corpus
-    assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_triangles_broadcast_degrees_no_cartesian(spark, sf01):
@@ -279,13 +237,6 @@ def test_q66_canonical_url_single_aggregate(spark, sf01):
     assert plan.count("HashAggregate") >= 2, plan  # partial + final
 
 
-def test_q65_survivors_no_window(spark, sf01):
-    """Survivor selection adds ONE aggregate on top of the q27
-    cluster plan — no window anywhere."""
-    plan = _plan(entry.q65_dedup_survivors(spark, sf01))
-    assert "Window" not in plan, plan
-
-
 def test_q68_weighted_rank_partial_aggregates(spark, sf01):
     """Each weighted-PageRank iteration must keep map-side partial
     aggregation on the inbound-mass groupBy (sum is combinable)."""
@@ -328,17 +279,6 @@ def test_q96_cooccurrence_equijoin_no_range_join(spark, sf01):
     assert plan.count("HashAggregate") >= 2, plan  # partial + final
 
 
-def test_q114_winnow_zero_shuffle(spark, sf01):
-    """Winnowing is grams -> hashes -> window-mins -> distinct, ALL
-    per-row array expressions: no hash/range shuffle anywhere — the
-    only Exchange allowed is _loadp's deliberate round-robin
-    repartition of the single-row-group test parquet."""
-    plan = _plan(entry.q114_winnow(spark, sf01))
-    assert "hashpartitioning" not in plan, plan
-    assert "rangepartitioning" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
 def test_q116_pps_sample_windows_per_stratum(spark, sf01):
     """Sequential-Poisson sampling ranks INSIDE each source partition
     (hashpartitioning by source before the window), never a global
@@ -346,36 +286,6 @@ def test_q116_pps_sample_windows_per_stratum(spark, sf01):
     plan = _plan(entry.q116_weighted_sample(spark, sf01))
     assert "Window" in plan, plan
     assert "hashpartitioning(source" in plan, plan
-
-
-def test_q109_containment_materializes_shingles_once(spark, sf01):
-    """Containment rides jaccard_pairs' persisted shingle table: the
-    three consumers (both self-join sides + sizes) must read it back
-    as InMemoryTableScan instead of re-running the explode."""
-    plan = _plan(entry.q109_containment(spark, sf01))
-    assert plan.count("InMemoryTableScan") >= 3, plan
-
-
-def test_q118_dup_spans_one_doc_exchange(spark, sf01):
-    """Gaps-and-islands costs ONE doc-keyed exchange: the window's
-    hashpartitioning(doc_id) also satisfies the (doc_id, island)
-    grouping that follows; gram df-filter is a LEFT SEMI equi-join,
-    never a self-join."""
-    plan = _plan(entry.q118_dup_spans(spark, sf01))
-    assert plan.count("hashpartitioning(doc_id") == 1, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_q119_removal_no_range_join_no_udf(spark, sf01):
-    """The span cut is a per-row indexed array filter joined back by
-    doc_id equality — no range join, no Python UDF anywhere."""
-    plan = _plan(entry.q119_dup_span_removal(spark, sf01))
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_q120_drift_single_term_agg_takeordered(spark, sf01):
@@ -402,17 +312,6 @@ def test_q122_postings_two_aggs_no_window(spark, sf01):
     assert "Window" not in plan, plan
     assert "Join" not in plan, plan
     assert plan.count("HashAggregate") >= 4, plan  # 2x (partial+final)
-
-
-def test_q124_pq_broadcasts_codebook_and_lut(spark, sf01):
-    """PQ encode + ADC must broadcast the tiny codebook/LUT into the
-    corpus stream (never shuffle the corpus by centroid key) and the
-    top-k must be TakeOrderedAndProject, not a global sort."""
-    plan = _plan(entry.q124_pq_topk(spark, sf01))
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
 
 
 def test_q140_functionality_no_window_no_udf(spark, sf01):

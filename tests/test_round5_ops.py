@@ -1,19 +1,17 @@
 """Round-5 operators: scale-safe global rank, sorted-neighborhood ER
-blocking, prefix-filtering exact set-similarity join, k-truss peel.
+blocking, k-truss peel.
 
 Discipline as in test_graph_ontology_round4.py: every test recomputes
 the expected answer with plain Python on small randomized or
-hand-built inputs, so the DuckDB oracles (q171-q173) are not the only
+hand-built inputs, so the DuckDB oracles (q171, q173) are not the only
 cross-check.
 """
 
 import itertools
 import random
 
-from pyspark.sql import functions as F
-
 from python_mecab_ner_spark.operators.dedup import (
-    global_rank, prefix_filter_pairs, sorted_neighborhood_pairs)
+    global_rank, sorted_neighborhood_pairs)
 from python_mecab_ner_spark.operators.graph import _edge_support, ktruss
 
 
@@ -81,46 +79,6 @@ def test_sorted_neighborhood_pair_count_is_skew_free(spark):
     out.unpersist_input()
 
 
-# ------------------------------------------------ prefix-filter join
-
-def _jaccard_twin(docs, t_ppm):
-    sets = {i: set(txt.lower().split()) for i, txt in docs}
-    out = {}
-    for (a, sa), (b, sb) in itertools.combinations(sorted(sets.items()), 2):
-        inter = len(sa & sb)
-        uni = len(sa | sb)
-        if uni and inter * 1_000_000 >= t_ppm * uni:
-            out[(a, b)] = (inter, uni)
-    return out
-
-
-def test_prefix_filter_exact_and_complete(spark):
-    # random docs over a tiny vocab so true near-dups exist; the
-    # twin enumerates ALL pairs — completeness at the threshold is
-    # exactly what prefix filtering must preserve
-    rng = random.Random(7)
-    vocab = ["w%d" % i for i in range(30)]
-    docs = [(i, " ".join(rng.sample(vocab, rng.randrange(4, 12))))
-            for i in range(80)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"]).repartition(5)
-    got = prefix_filter_pairs(df, "text", "doc_id", t_ppm=500_000)
-    rows = {(r.doc_a, r.doc_b): (r.inter, r.uni) for r in got.collect()}
-    got.unpersist_input()
-    assert rows == _jaccard_twin(docs, 500_000)
-
-
-def test_prefix_filter_high_threshold_shrinks_prefixes(spark):
-    # identical docs always pair; at t=0.9 a 10-token doc keeps a
-    # 2-token prefix (n - ceil(0.9n) + 1)
-    docs = [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j"),
-            (3, "zz yy xx ww vv uu tt ss rr qq")]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    got = prefix_filter_pairs(df, "text", "doc_id", t_ppm=900_000)
-    rows = {(r.doc_a, r.doc_b): (r.inter, r.uni) for r in got.collect()}
-    got.unpersist_input()
-    assert rows == {(1, 2): (10, 10)}
-
-
 # ------------------------------------------------------------ k-truss
 
 def _truss_twin(pairs, k, rounds):
@@ -175,51 +133,6 @@ def test_ktruss_python_twin_random(spark):
         got = {(r.a, r.b): r.support
                for r in ktruss(df, k=k, rounds=3).collect()}
         assert got == _truss_twin(pairs, k, 3)
-
-
-def test_multi_blocking_audit_invariants(spark):
-    # near-dup pairs planted by duplication; every strategy's counts
-    # must satisfy hits <= min(truth, cand) and recall/precision <=
-    # 1e6; prefix-filter on near-identical docs must reach the truth
-    rng = random.Random(9)
-    vocab = ["tok%d" % i for i in range(40)]
-    base = [" ".join(rng.sample(vocab, 12)) for _ in range(30)]
-    docs = [(i, t) for i, t in enumerate(base)]
-    docs += [(100 + i, t) for i, t in enumerate(base[:10])]  # exact dups
-    df = spark.createDataFrame(docs, ["doc_id", "text"]).repartition(4)
-    from python_mecab_ner_spark.operators.dedup import \
-        multi_blocking_audit
-    out = multi_blocking_audit(df, "text", "doc_id", k=3, min_shared=2)
-    rows = {r.strategy: r for r in out.collect()}
-    out.unpersist_input()
-    assert set(rows) == {"lsh", "sorted_neighborhood", "prefix_filter"}
-    truths = {r.n_truth for r in rows.values()}
-    assert len(truths) == 1 and truths.pop() > 0
-    for r in rows.values():
-        assert r.n_hit <= min(r.n_truth, r.n_cand)
-        assert 0 <= r.recall_ppm <= 1_000_000
-        assert 0 <= r.precision_ppm <= 1_000_000
-    # exact duplicates share every token AND every 16-char prefix:
-    # the prefix-filter and sorted-neighborhood blockers must see them
-    assert rows["prefix_filter"].recall_ppm == 1_000_000
-    assert rows["sorted_neighborhood"].n_hit > 0
-
-
-def test_prefix_filter_candidates_only_superset(spark):
-    docs = [(1, "a b c d"), (2, "a b c d"), (3, "x y z w"),
-            (4, "a q r s")]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    from python_mecab_ner_spark.operators.dedup import \
-        prefix_filter_pairs
-    cand = prefix_filter_pairs(df, "text", "doc_id", t_ppm=500_000,
-                               candidates_only=True)
-    cpairs = {(r.doc_a, r.doc_b) for r in cand.collect()}
-    cand.unpersist_input()
-    ver = prefix_filter_pairs(df, "text", "doc_id", t_ppm=500_000)
-    vpairs = {(r.doc_a, r.doc_b) for r in ver.collect()}
-    ver.unpersist_input()
-    assert vpairs <= cpairs
-    assert (1, 2) in vpairs
 
 
 def test_ktruss_fixpoint_extra_round_is_noop(spark):
@@ -299,5 +212,3 @@ def test_star_cc_raises_on_round_exhaustion(spark):
     import pytest
     with pytest.raises(RuntimeError, match="still moving"):
         connected_components_star(df, max_rounds=1)
-
-

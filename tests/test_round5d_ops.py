@@ -1,7 +1,7 @@
 """Round-5 post-closeout additions (q209-q225): TextRank, Z-order
-layout audit, TrustRank spam mass, Rand/ARI, CDC chunking,
-resharding audit, postings gaps, Neyman allocation, c-TF-IDF class
-terms, seasonal outliers.
+layout audit, TrustRank spam mass, Rand/ARI, resharding audit,
+postings gaps, Neyman allocation, c-TF-IDF class terms, seasonal
+outliers.
 
 Discipline as in test_round5_ops.py: every test recomputes the
 expected answer with plain Python on small hand-built or randomized
@@ -230,59 +230,6 @@ def test_pair_agreement_perfect_and_chance(spark):
     assert tuple(row2)[:3] == (50, 50, 1)
 
 
-# ------------------------------------------------------ CDC chunking
-
-def _py_cdc(text, gram=8, divisor=64):
-    from python_mecab_ner_spark.functions.hashing import md5_int_py
-    n = len(text)
-    cuts = [1] + [i for i in range(2, max(n - gram + 1, 1) + 1)
-                  if md5_int_py(text[i - 1:i - 1 + gram],
-                                salt="cdc:") % divisor == 0]
-    cuts = sorted(set(cuts)) + [n + 1]
-    return [(s, e - s, text[s - 1:e - 1])
-            for s, e in zip(cuts, cuts[1:]) if e > s]
-
-
-def test_cdc_chunks_partition_text_and_match_twin(spark):
-    from python_mecab_ner_spark.operators.dedup import cdc_chunks
-    rng = random.Random(31)
-    docs = [(i, "".join(rng.choice("abcdef ") for _ in
-                        range(rng.randrange(1, 400))))
-            for i in range(30)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    got = {}
-    for r in cdc_chunks(df, "text", "doc_id").collect():
-        got.setdefault(r["doc"], []).append(
-            (r["start"], r["chunk_len"], r["chunk_md5"]))
-    import hashlib
-    for i, text in docs:
-        exp = [(s, ln, hashlib.md5(c.encode()).hexdigest())
-               for s, ln, c in _py_cdc(text)]
-        assert sorted(got[i]) == sorted(exp)
-        # chunks partition the text exactly
-        assert sum(ln for _, ln, _ in exp) == len(text)
-
-
-def test_cdc_survives_front_insertion_fixed_does_not(spark):
-    from python_mecab_ner_spark.operators.dedup import (cdc_chunks,
-                                                        fixed_chunks)
-    rng = random.Random(33)
-    base = "".join(rng.choice("abcdefgh ") for _ in range(2000))
-    mut = "INSERTED " + base
-    df = spark.createDataFrame([(1, base), (2, mut)],
-                               ["doc_id", "text"])
-    for fn, expect_high in ((cdc_chunks, True), (fixed_chunks, False)):
-        ch = fn(df, "text", "doc_id").collect()
-        h1 = {r["chunk_md5"] for r in ch if r["doc"] == 1}
-        rows2 = [r for r in ch if r["doc"] == 2]
-        reused = sum(r["chunk_len"] for r in rows2
-                     if r["chunk_md5"] in h1)
-        total = sum(r["chunk_len"] for r in rows2)
-        share = reused / total
-        assert share > 0.8 if expect_high else share < 0.2, \
-            (fn.__name__, share)
-
-
 # ---------------------------------------------------- reshard audit
 
 def test_reshard_audit_matches_python_twin(spark):
@@ -479,47 +426,6 @@ def test_seasonal_outliers_matches_python_twin(spark):
     assert {-d for _, d, _ in outs} == spike_days
 
 
-# ---------------------------------------------------- LSH planner
-
-def _py_lsh_p(sim, b, r):
-    x = sim
-    for _ in range(r - 1):
-        x = (x * sim) // 1_000_000
-    q = 1_000_000 - x
-    y = q
-    for _ in range(b - 1):
-        y = (y * q) // 1_000_000
-    return 1_000_000 - y
-
-
-def test_lsh_plan_audit_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.dedup import lsh_plan_audit
-    rng = random.Random(83)
-    rows = [(rng.randrange(1, 50), 50) for _ in range(500)]
-    df = spark.createDataFrame(rows, ["inter", "uni"])
-    got = {(r["bands"], r["rows"]):
-           (r["n_pairs"], r["n_hi"], r["n_lo"], r["exp_recall_ppm"],
-            r["hi_recall_ppm"], r["lo_catch_ppm"])
-           for r in lsh_plan_audit(df).collect()}
-    sims = [(i * 1_000_000) // u for i, u in rows]
-    hi = [s for s in sims if s >= 700_000]
-    lo = [s for s in sims if s < 300_000]
-    exp = {}
-    for b, r in ((16, 1), (8, 2), (4, 4), (2, 8), (1, 16)):
-        ps = [_py_lsh_p(s, b, r) for s in sims]
-        ph = [_py_lsh_p(s, b, r) for s in hi]
-        pl = [_py_lsh_p(s, b, r) for s in lo]
-        exp[(b, r)] = (len(sims), len(hi), len(lo),
-                       sum(ps) // max(len(sims), 1),
-                       sum(ph) // max(len(hi), 1),
-                       sum(pl) // max(len(lo), 1))
-    assert got == exp
-    # the trade must be visible: OR-heavy catches the most junk,
-    # AND-heavy drops the most near-dups
-    assert got[(16, 1)][5] == max(v[5] for v in got.values())
-    assert got[(1, 16)][4] == min(v[4] for v in got.values())
-
-
 # ---------------------------------------------------- fresh rank
 
 def test_fresh_rank_decay_expression(spark):
@@ -538,4 +444,3 @@ def test_fresh_rank_decay_expression(spark):
     # the decay spans three orders of magnitude across TPC-H's
     # seven-year order window
     assert max(got.values()) == 1024 and min(got.values()) == 1
-

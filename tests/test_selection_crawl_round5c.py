@@ -1,16 +1,13 @@
-"""Round-5 closing additions: greedy max-coverage selection (q193),
-farthest-first k-center (q194), URL path-template mining (q195), and
-RAKE keyphrase extraction (q196).
+"""Round-5 closing additions: greedy max-coverage selection (q193), URL
+path-template mining (q195), and RAKE keyphrase extraction (q196).
 
 Discipline as in test_matching_taxonomy.py: every test recomputes the
 expected answer with plain Python on small randomized or hand-built
 inputs, so the DuckDB oracles are not the only cross-check.
 """
 
-import math
 import random
 
-from python_mecab_ner_spark.operators.ann import kcenter_centers
 from python_mecab_ner_spark.operators.crawl import url_path_templates
 from python_mecab_ner_spark.operators.sample import greedy_max_coverage
 
@@ -54,56 +51,6 @@ def test_coverage_early_stop_and_ties(spark):
     # round 1: gain-2 tie between items 1 and 2 -> min item wins;
     # item 2's pairs vanish with the covered elems; round 3 is dry
     assert got == [(1, 1, 2), (2, 3, 1)]
-
-
-def _py_kcenter(vecs, k):
-    """Plain-python Gonzalez with the same int8 floor quantization and
-    (max dist, min id) tie rule."""
-    q = {i: [max(-128, min(127, math.floor(float(x) * 127))) for x in v]
-         for i, v in vecs.items()}
-    c0 = min(q)
-    out = [(1, c0, 0)]
-    dist = {i: sum((a - b) * (a - b) for a, b in zip(q[i], q[c0]))
-            for i in q}
-    for rnd in range(2, k + 1):
-        win = min(dist, key=lambda i: (-dist[i], i))
-        out.append((rnd, win, dist[win]))
-        dist = {i: min(dist[i],
-                       sum((a - b) * (a - b)
-                           for a, b in zip(q[i], q[win])))
-                for i in q}
-    return out
-
-
-def test_kcenter_random_twin(spark):
-    rng = random.Random(23)
-    vecs = {i: [rng.uniform(-1, 1) for _ in range(8)] for i in range(40)}
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in vecs.items()],
-        "vec_id bigint, embedding array<float>")
-    got = [(r.round, r.center_id, r.dist)
-           for r in kcenter_centers(df, k=6).orderBy("round").collect()]
-    # the python twin must quantize from the same float32-rounded
-    # values Spark stores (array<float> narrows the doubles)
-    import struct
-    f32 = {i: [struct.unpack("f", struct.pack("f", x))[0] for x in v]
-           for i, v in vecs.items()}
-    assert got == _py_kcenter(f32, 6)
-
-
-def test_kcenter_radius_monotone_and_spread(spark):
-    # 3 tight clusters -> the first 3 centers land in distinct clusters
-    base = {0: 0.9, 100: -0.9, 200: 0.1}
-    rows = []
-    for off, c in base.items():
-        for j in range(5):
-            rows.append((off + j, [c + 0.001 * j] * 4))
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    got = kcenter_centers(df, k=3).orderBy("round").collect()
-    clusters = {r.center_id // 100 for r in got}
-    assert clusters == {0, 1, 2}
-    dists = [r.dist for r in got[1:]]
-    assert dists == sorted(dists, reverse=True)  # radius certificate
 
 
 def test_url_templates(spark):
