@@ -222,17 +222,6 @@ def q09_neighbor_window(spark, sf_dir):
                      F.sum(_cents(F.col("value"))).over(w).alias("w_sum_c"))
 
 
-def q10_latest_per_user(spark, sf_dir):
-    """Rank-1 per group (reference L12 homonym disambiguation): the
-    latest event per user."""
-    from python_mecab_ner_spark.operators.spans import rank1_per_group
-    ev = _load(spark, sf_dir, "events")
-    out = rank1_per_group(
-        ev.select("user_id", "event_id", _MINUTE(F.col("ts")).alias("m")),
-        ["user_id"], [F.col("m").desc(), F.col("event_id").desc()])
-    return out.select("user_id", "event_id")
-
-
 # ---- training-data / text operators --------------------------------------
 
 def q11_token_count(spark, sf_dir):
@@ -335,17 +324,6 @@ def q22_salt_distribution(spark, sf_dir):
     return (salted.groupBy("event_type")
             .agg(F.countDistinct("salt").alias("n_salts"),
                  F.count("*").alias("total")))
-
-
-def q28_sessionize(spark, sf_dir):
-    """Timeout sessionization (30-min gap) per user over the events
-    stream table: the arbitrary-gap generalization of gaps-and-islands."""
-    from python_mecab_ner_spark.operators.spans import sessionize
-    ev = _load(spark, sf_dir, "events")
-    m = ev.select("user_id", F.col("event_id"),
-                  _MINUTE(F.col("ts")).alias("m"))
-    return sessionize(m, "user_id", "m", gap=30,
-                      order_cols=["event_id"])
 
 
 def q30_rollup(spark, sf_dir):
@@ -792,80 +770,6 @@ def q80_kn_continuation(spark, sf_dir):
         "word", "n_uni", "cont_left", "cont_right")
 
 
-def q88_tfidf_cosine_pairs(spark, sf_dir):
-    """Inverted-index all-pairs similarity (operators.retrieval
-    .tfidf_cosine_pairs): tf*idf sparse vectors, pairs generated only
-    through shared terms (df-capped), squared cosine in integer ppm —
-    the topical near-dup detector that complements q16's exact-shingle
-    Jaccard.  Part names here are a heavily-duplicated surface pool
-    (64 distinct among 2000), so exact-dup pairs surface at
-    cos2_ppm = 1e6."""
-    from python_mecab_ner_spark.operators.retrieval import \
-        tfidf_cosine_pairs
-    p = _load(spark, sf_dir, "part")
-    ctx = (p.where(F.col("p_partkey") <= 1000)
-           .select(F.col("p_partkey").alias("url"),
-                   F.explode(F.split(F.lower("p_name"), " "))
-                   .alias("word")))
-    return (tfidf_cosine_pairs(ctx, max_df=512, min_cos2_ppm=500_000)
-            .select(F.col("d1").cast("bigint").alias("d1"),
-                    F.col("d2").cast("bigint").alias("d2"),
-                    "dot", "cos2_ppm"))
-
-
-def q87_rrf_fusion(spark, sf_dir):
-    """Reciprocal-rank fusion (operators.retrieval.rrf_fuse): the
-    BM25 top-20 (q59's query bag) fused with the surprisal top-20
-    (q53's rarity score) by integer RRF — the calibration-free hybrid-
-    retrieval combiner; ranks in, one combinable aggregate out."""
-    from pyspark.sql import Window
-    from python_mecab_ner_spark.operators.colloc import doc_surprisal
-    from python_mecab_ner_spark.operators.retrieval import (bm25_topk,
-                                                            rrf_fuse)
-    ctx = _doc_context(spark, sf_dir)
-    bm = bm25_topk(ctx, BM25_TERMS, k=20)
-    bm_r = bm.withColumn(
-        "rank", F.row_number().over(
-            Window.orderBy(F.col("bm25_milli").desc(),
-                           F.col("doc_id").asc())))
-    sup = (doc_surprisal(ctx)
-           .orderBy(F.col("rarity_milli").desc(), F.col("url").asc())
-           .limit(20)
-           .select(F.col("url").alias("doc_id"), "rarity_milli"))
-    sup_r = sup.withColumn(
-        "rank", F.row_number().over(
-            Window.orderBy(F.col("rarity_milli").desc(),
-                           F.col("doc_id").asc())))
-    return (rrf_fuse([bm_r.select("doc_id", "rank"),
-                      sup_r.select("doc_id", "rank")])
-            .select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                    "n_systems", "rrf_micro"))
-
-
-def q85_burst_days(spark, sf_dir):
-    """Daily burst detection (operators.spans.burst_days): event-type
-    days whose count exceeds 1.2x the type's mean daily rate, decided
-    in integer arithmetic — the trending-entity / recrawl-priority
-    temporal signal, cross-engine exact where a float z-score is
-    not."""
-    from python_mecab_ner_spark.operators.spans import burst_days
-    ev = _load(spark, sf_dir, "events")
-    return burst_days(ev, "ts", "event_type", factor_num=6,
-                      factor_den=5)
-
-
-def q86_length_deciles(spark, sf_dir):
-    """Per-source length deciles from a fixed-bin integer histogram
-    (operators.profile.histogram_deciles): the engine-exact
-    approx-quantile stand-in — histogram state is fixed-size and
-    combinable, quantile extraction runs over the histogram, never
-    the corpus."""
-    from python_mecab_ner_spark.operators.profile import \
-        histogram_deciles
-    d = _loadp(spark, sf_dir, "documents")
-    return histogram_deciles(d, "n_chars", "source", bin_width=64)
-
-
 def q83_fuzzy_alias(spark, sf_dir):
     """Blocked edit-distance alias pairing (operators.canonicalize
     .fuzzy_alias_pairs): lev<=1 customer-name pairs generated ONLY
@@ -968,17 +872,6 @@ def q56_quality_gate(spark, sf_dir):
                  F.sum("doc_id").cast("bigint").alias("sum_ids")))
 
 
-def q57_source_profile(spark, sf_dir):
-    """Per-source reliability profile (operators.profile
-    .source_reliability): doc/distinct-content/duplicate counts plus
-    exact integer quality and token totals — the evidence behind
-    source-level KEEP/DROP curation decisions (RefinedWeb/FineWeb
-    drop whole domains on exactly these aggregates)."""
-    from python_mecab_ner_spark.operators.profile import source_reliability
-    d = _load(spark, sf_dir, "documents")
-    return source_reliability(d, "text", "doc_id", "source")
-
-
 def q58_neighbor_jaccard(spark, sf_dir):
     """Structural node similarity (operators.graph.neighbor_jaccard):
     integer-ppm Jaccard of neighbor sets over the q49 part<->supplier
@@ -1059,16 +952,6 @@ def q99_degree_histogram(spark, sf_dir):
             .agg(F.count("*").cast("bigint").alias("n_nodes"),
                  F.min("deg").cast("bigint").alias("min_deg"),
                  F.max("deg").cast("bigint").alias("max_deg")))
-
-
-def q101_kwic(spark, sf_dir):
-    """Keyword-in-context concordance (operators.retrieval
-    .kwic_snippets): every occurrence of 'spark' with its +-3-token
-    window — pure per-row array expressions (positions and slice
-    never leave the row), scan -> project, zero shuffle/UDF."""
-    from python_mecab_ner_spark.operators.retrieval import kwic_snippets
-    d = _loadp(spark, sf_dir, "documents")
-    return kwic_snippets(d, "text", "doc_id", term="spark", window=3)
 
 
 def q105_source_risk(spark, sf_dir):
@@ -1231,22 +1114,6 @@ def q117_script_mix(spark, sf_dir):
             .select("doc_id", *TX.script_mix_ppm(F.col("t"))))
 
 
-def q120_vocab_drift(spark, sf_dir):
-    """Epoch-to-epoch vocabulary drift (operators.profile
-    .vocab_drift): top-50 terms by the exact-integer chi-square
-    numerator |o0*n1 - o1*n0| between two corpus halves (source-number
-    parity stands in for crawl snapshots) — the crawl-monitoring
-    dashboard that flags 'this month's crawl is suddenly full of X'.
-    One combinable term aggregate + a broadcast scalar total +
-    TakeOrdered."""
-    from python_mecab_ner_spark.operators.profile import vocab_drift
-    d = _load(spark, sf_dir, "documents")
-    epoch = (F.regexp_extract("source", r"(\d+)", 1).cast("int")
-             % 2).alias("epoch")
-    return vocab_drift(d.select(epoch, "text"), "text", "epoch",
-                       top_k=50)
-
-
 def q121_blocklist(spark, sf_dir):
     """Phrase-blocklist screening (functions.text
     .blocklist_phrase_counts): word-boundary occurrence counts for
@@ -1262,19 +1129,6 @@ def q121_blocklist(spark, sf_dir):
     return hits.select("doc_id", *bl_cols,
                        total.cast("bigint").alias("n_hits"),
                        (total > 0).cast("int").alias("blocked"))
-
-
-def q122_postings(spark, sf_dir):
-    """Inverted-index construction (operators.retrieval
-    .postings_table): per term df, cf, top-tf document (packed-max
-    argmax, ties -> min doc id), and a deterministic sorted posting
-    sample — the index-build deliverable the retrieval stack (q59
-    BM25, q88 cosine pairs) consumes.  Two map-side-combinable
-    aggregates, no window, no self-join."""
-    from python_mecab_ner_spark.operators.retrieval import postings_table
-    d = _loadp(spark, sf_dir, "documents")
-    return postings_table(d, "text", "doc_id", min_df=2,
-                          sample_docs=8)
 
 
 HYPERBALL_ITERS = 2
@@ -1355,22 +1209,6 @@ def q129_robots_gate(spark, sf_dir):
                  .alias("n_allowed")))
 
 
-HEAD_KS = (1, 10, 100, 1000)
-
-
-def q132_vocab_head(spark, sf_dir):
-    """Zipf head-coverage curve (operators.profile
-    .vocab_head_coverage): token mass covered by the top-k vocabulary
-    at k in 1/10/100/1000 — tokenizer-vocab sizing + stopword cutoff
-    evidence.  The vocabulary is never globally sorted: top-1000 by
-    TakeOrderedAndProject, cumulative window over those 1000 rows
-    only."""
-    from python_mecab_ner_spark.operators.profile import (
-        vocab_head_coverage)
-    d = _loadp(spark, sf_dir, "documents")
-    return vocab_head_coverage(d, "text", ks=HEAD_KS)
-
-
 def q133_fetch_rounds(spark, sf_dir):
     """Politeness-schedule depth of the robots-allowed frontier
     (operators.crawl.fetch_rounds over the q129 gate): round r = the
@@ -1384,36 +1222,6 @@ def q133_fetch_rounds(spark, sf_dir):
     rules = spark.createDataFrame(ROBOTS_RULES, "host string, path string")
     allowed = robots_gate(urls, rules).where("blocked = 0")
     return fetch_rounds(allowed, host_col="host", id_col="doc_id")
-
-
-FUNNEL_QUALITY_MIN = 90        # 25th-pct quality at sf0.01 — splits
-FUNNEL_REP_MAX_PPM = 100_000   # Gopher duplicate-bigram cut
-FUNNEL_MIN_TOKENS = 30
-
-
-def q134_gate_funnel(spark, sf_dir):
-    """Filter-funnel / gate-overlap audit (operators.profile
-    .gate_funnel): documents counted by the exact COMBINATION of the
-    five cleaning gates they pass (language, quality, repetition,
-    length, blocklist) — the upset-plot joint distribution behind
-    every dataset card's removal table; marginals double-count docs
-    failing several gates, the mask histogram doesn't.  One row-local
-    scan + ONE mask-keyed aggregate, <= 32 rows at any corpus size."""
-    from python_mecab_ner_spark.operators.profile import gate_funnel
-    d = _load(spark, sf_dir, "documents")
-    bl_total = sum((c for c in TX.blocklist_phrase_counts(
-        F.col("text"))), F.lit(0).cast("bigint"))
-    gates = [
-        ("lang", TX.lang_id(F.col("text")) == "en"),
-        ("quality",
-         TX.quality_score(F.col("text")) >= FUNNEL_QUALITY_MIN),
-        ("repetition",
-         TX.duplicate_ngram_ppm(F.col("text"), n=2)
-         <= FUNNEL_REP_MAX_PPM),
-        ("length", TX.token_count(F.col("text")) >= FUNNEL_MIN_TOKENS),
-        ("blocklist", bl_total == 0),
-    ]
-    return gate_funnel(d, gates)
 
 
 RECRAWL_EPOCHS = 8
@@ -1495,27 +1303,6 @@ def q136_truth_finding(spark, sf_dir):
     integer argmax); no window — every argmax is a combinable max."""
     from python_mecab_ner_spark.operators.truth import adjudicate_claims
     return adjudicate_claims(_claim_table(spark, sf_dir))
-
-
-SKEW_CANDIDATES = (8, 32, 128)
-
-
-def q138_partition_skew(spark, sf_dir):
-    """Partition-skew planner (operators.profile.partition_skew): for
-    each candidate partition count, the max/min bucket load and
-    skew_ppm a hash partitioner on the chosen key would produce —
-    run on BOTH the skewed key (source: a handful of distinct values,
-    max bucket = a whole source) and the even key (doc_id), labelled
-    in one output.  The sheet that decides bucketing/salting before a
-    100 TB write; the candidate list rides as an exploded literal
-    dimension, one combinable agg per side."""
-    from python_mecab_ner_spark.operators.profile import partition_skew
-    d = _load(spark, sf_dir, "documents")
-    by_source = (partition_skew(d, "source", n_parts=SKEW_CANDIDATES)
-                 .withColumn("key_name", F.lit("source")))
-    by_id = (partition_skew(d, "doc_id", n_parts=SKEW_CANDIDATES)
-             .withColumn("key_name", F.lit("doc_id")))
-    return by_source.unionByName(by_id)
 
 
 def _c4_pages(spark, sf_dir):
@@ -1700,29 +1487,6 @@ def q145_warc_roundtrip(spark, sf_dir):
         F.md5("html").alias("payload_md5"))
 
 
-TEMPLATE_PREFIX = "cookie notice accept terms"
-
-
-def q146_template_prefixes(spark, sf_dir):
-    """Boilerplate-template audit (operators.profile
-    .template_prefixes): clusters of documents sharing their first 4
-    normalized tokens, with corpus share ppm — the CCNet-style
-    template check that catches cookie banners / subscribe footers /
-    CMS shells before they skew dedup and LM training.  Every fifth
-    doc gets a planted banner prefix (same hash-injection pattern as
-    q47's PII / q139's line structure), pinning one dominant cluster;
-    one combinable prefix-keyed aggregate + a 1-row broadcast total."""
-    from python_mecab_ner_spark.operators.profile import (
-        template_prefixes)
-    d = _load(spark, sf_dir, "documents")
-    page = (F.when(F.col("doc_id") % 5 == 0,
-                   F.concat(F.lit(TEMPLATE_PREFIX + " "), F.col("text")))
-            .otherwise(F.col("text")))
-    return template_prefixes(
-        d.select("doc_id", page.alias("page")), "page", "doc_id",
-        k=4, min_docs=2)
-
-
 def q147_bcubed_eval(spark, sf_dir):
     """B-cubed clustering evaluation (operators.metrics.bcubed_ppm,
     Bagga & Baldwin '98) — the standard entity-resolution metric,
@@ -1860,18 +1624,6 @@ def q151_edge_lifespan(spark, sf_dir):
              .unionByName(ver(F.col("l_linenumber") >= 2, 2))
              .unionByName(ver(F.col("l_linenumber") % 2 == 1, 3)))
     return edge_lifespan(edges, ["src", "dst"])
-
-
-def q152_term_salience(spark, sf_dir):
-    """Lead-position term salience (operators.profile.term_salience):
-    per document the most-salient term — frequency * 1000 plus an
-    earliness bonus bounded below 1000 so the fields never interfere
-    — with the max-then-min deterministic tie-break (no window).
-    Runs over the shared _doc_context token table (url, idx, word),
-    one cache entry across the stats family."""
-    from python_mecab_ner_spark.operators.profile import term_salience
-    return term_salience(_doc_context(spark, sf_dir), id_col="url",
-                         min_len=5, pos_cap=500)
 
 
 def q154_modularity(spark, sf_dir):
@@ -2440,60 +2192,6 @@ def q165_epoch_allocation(spark, sf_dir):
     return epoch_allocation(src, budget=1_000_000, max_epochs=4)
 
 
-def q166_robust_outliers(spark, sf_dir):
-    """Per-source robust length-outlier sheet (operators.profile.
-    robust_outliers): exact integer median + MAD over the
-    (source, n_chars) histogram — the ingest drift alarm that
-    mean/stddev monitoring cannot give (outliers blow up the very
-    stddev that should flag them).  Histogram-cumulative medians, no
-    corpus sort; z threshold 4448 milli ~= 3 sigma."""
-    from python_mecab_ner_spark.operators.profile import \
-        robust_outliers
-    docs = _load(spark, sf_dir, "documents")
-    out = robust_outliers(docs, group="source", value="n_chars")
-    res = out.select("source", "n_docs", "median", "mad",
-                     "n_outliers", "outlier_ppm")
-    res.unpersist_input = out.unpersist_input
-    return res
-
-
-def q167_phrase_search(spark, sf_dir):
-    """Exact phrase query (operators.retrieval.phrase_search,
-    'table part') via the positional-postings join — the consecutive-
-    words capability bag-of-words BM25 cannot answer: per matching
-    document, occurrence count and first position."""
-    from python_mecab_ner_spark.operators.retrieval import \
-        phrase_search
-    docs = _load(spark, sf_dir, "documents")
-    return phrase_search(docs, "text", "doc_id", "table part")
-
-
-def q168_symspell(spark, sf_dir):
-    """Edit-distance-1 alias candidates (operators.retrieval.
-    symspell_alias_pairs): the documents vocabulary plus planted
-    deterministic OCR corruptions ('x' replacing the first letter of
-    every md5%3==0 word) — symmetric-deletion keys guarantee every
-    distance-1 pair collides, the exact levenshtein verify (both
-    engines bit-identical) confirms.  The gazetteer typo/variant
-    alias generator feeding canonicalization."""
-    from python_mecab_ner_spark.functions.hashing import md5_int
-    from python_mecab_ner_spark.operators.retrieval import \
-        symspell_alias_pairs
-    docs = _load(spark, sf_dir, "documents")
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))),
-                                    r"\s+", " "), " ")
-    v0 = (docs.select(F.explode(toks).alias("term"))
-          .where(F.col("term") != "").distinct())
-    corrupted = (v0.where((F.length("term") > 2)
-                          & (md5_int(F.col("term")) % 3 == 0))
-                 .select(F.concat(F.lit("x"),
-                                  F.col("term").substr(F.lit(2),
-                                                       F.length("term")))
-                         .alias("term")))
-    vocab = v0.unionByName(corrupted)
-    return symspell_alias_pairs(vocab)
-
-
 def q169_heaps_law(spark, sf_dir):
     """Vocabulary-growth (Heaps law) audit over hash-nested corpus
     subsets: distinct terms at 25% / 50% / 100% of documents
@@ -2531,40 +2229,12 @@ def q169_heaps_law(spark, sf_dir):
         "AS (level, n_docs, n_tokens, vocab)")
 
 
-def q170_symspell_d2(spark, sf_dir):
-    """Edit-distance-2 alias candidates (operators.retrieval.
-    symspell_alias_pairs(max_dist=2), round-4 verdict task 7): the
-    documents vocabulary plus planted DOUBLE corruptions ('x'
-    replacing the first letter AND the last letter dropped, for
-    md5%5==0 words longer than 4 chars — exactly distance 2 from the
-    source word, invisible to the q168 distance-1 pass).  Depth-2
-    symmetric-deletion keys guarantee every distance<=2 pair
-    collides; exact levenshtein verifies and reports the distance."""
-    from python_mecab_ner_spark.functions.hashing import md5_int
-    from python_mecab_ner_spark.operators.retrieval import \
-        symspell_alias_pairs
-    docs = _load(spark, sf_dir, "documents")
-    toks = F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))),
-                                    r"\s+", " "), " ")
-    v0 = (docs.select(F.explode(toks).alias("term"))
-          .where(F.col("term") != "").distinct())
-    corrupted = (v0.where((F.length("term") > 4)
-                          & (md5_int(F.col("term")) % 5 == 0))
-                 .select(F.concat(
-                     F.lit("x"),
-                     F.col("term").substr(F.lit(2),
-                                          F.length("term") - 2))
-                     .alias("term")))
-    vocab = v0.unionByName(corrupted)
-    return symspell_alias_pairs(vocab, max_dist=2)
-
-
 def q171_sorted_neighborhood(spark, sf_dir):
     """Sorted-neighborhood ER blocking (operators.dedup
     .sorted_neighborhood_pairs, Hernandez & Stolfo): documents ordered
     by the first 16 chars of normalized text, candidate pairs within a
     4-record sliding window — the skew-immune third blocking strategy
-    next to token-key (q16/q17) and deletion-key (q168) blocking.
+    next to token-key (q16/q17) and deletion-key (SymSpell) blocking.
     The global order comes from global_rank (range partition +
     partition-offset row numbers, Spark's native TB-sort path — no
     single-partition window), certified here against the oracle's
@@ -2633,7 +2303,6 @@ COVER_K = 5     # q193 greedy-coverage rounds, shared with the oracle
 JSONL_FILES = 8   # q203: shard count, shared with the oracle
 TEMPORAL_ORACLE_ROUNDS = 10  # q206: oracle unroll (7 measured at
                              # sf0.01); Spark runs TEMPORAL_BUDGET
-IJ_WINDOWS = 40   # q207: audit-window count, shared with the oracle
 TEMPORAL_BUDGET = 40  # q206: Spark budget (24 measured at sf0.1);
                       # post-fixpoint rounds are no-ops so the two
                       # budgets may differ — both sides stop moving
@@ -2664,43 +2333,6 @@ def q177_mis(spark, sf_dir):
                     F.col("mis_round").cast("int").alias("mis_round")))
 
 
-def q178_funnel(spark, sf_dir):
-    """First-touch conversion funnel (operators.spans.funnel_steps)
-    over the event stream: earliest view -> first click within 1 day
-    -> first purchase within 3 days of that click, per user; one row
-    per stage with integer-ppm conversion vs the previous stage and
-    vs stage 1.  Generalizes q63's inline chain (q63: NO per-step
-    deadline, minute-truncated anchors, single-row counts — the
-    unbounded-window variant) into a reusable operator with per-step
-    gap windows and ppm conversions: the deadlines change the
-    semantics materially — unbounded, every one of the 150 sf0.01
-    users clicks after their first view eventually; the 1-day
-    deadline cuts that to 60.  All time math stays NAIVE
-    (timestamp_ntz comparisons + interval addition — zone-free and
-    microsecond-exact in both engines; epoch conversion on ntz input
-    routes through Spark's session timezone, the measured trap).  At
-    sf0.01 the funnel reads 150 -> 60 -> 45 users."""
-    from python_mecab_ner_spark.operators.spans import funnel_steps
-    ev = _load(spark, sf_dir, "events")
-    return funnel_steps(ev, ["view", "click", "purchase"],
-                        [86_400, 259_200])
-
-
-def q179_cohort_retention(spark, sf_dir):
-    """Cohort retention triangle (operators.spans.cohort_retention):
-    users bucketed by the week of their first event, per-offset
-    re-activity counts + integer-ppm retention vs cohort size — the
-    NORMALIZED weekly form of q64's raw daily count matrix (q64:
-    day-of-year buckets, absolute counts, no cohort-size
-    denominator; this: epoch-week buckets + retention_ppm, the
-    dashboard-ready curve).  Week index = unix_date(naive date)
-    div 7 — zone-free in both engines (the q178 discipline); every
-    cohort's offset-0 row reads exactly 1e6."""
-    from python_mecab_ner_spark.operators.spans import cohort_retention
-    ev = _load(spark, sf_dir, "events")
-    return cohort_retention(ev, period_days=7)
-
-
 def q180_semantic_decon(spark, sf_dir):
     """Embedding-level benchmark decontamination
     (operators.ann.semantic_decontaminate): the embeddings table is
@@ -2718,19 +2350,6 @@ def q180_semantic_decon(spark, sf_dir):
     return (semantic_decontaminate(corpus, bench, t_num=3, t_den=10)
             .select(F.col("vec_id").cast("bigint").alias("vec_id"),
                     "n_hits", "max_dot"))
-
-
-def q181_event_transitions(spark, sf_dir):
-    """First-order Markov transition sheet
-    (operators.spans.event_transitions) over the event stream:
-    corpus-wide consecutive (src_type -> dst_type) counts per user
-    ordered by (ts, event_id) — the event_id tiebreaker is part of
-    the cross-engine contract — with integer-ppm row-normalized
-    probabilities.  The behavioral drift monitor q178's funnel is a
-    slice of; 5x5 type matrix at any SF."""
-    from python_mecab_ner_spark.operators.spans import event_transitions
-    ev = _load(spark, sf_dir, "events")
-    return event_transitions(ev, tiebreak_col="event_id")
 
 
 def q184_bootstrap_ci(spark, sf_dir):
@@ -3018,29 +2637,12 @@ def q195_url_templates(spark, sf_dir):
     combinable (host, template) count over the injected route URLs —
     the CMS-route induction that separates content routes from
     crawler traps and keys per-route dedup/scheduling policy.
-    Structural complement of q66 (which canonicalizes single URLs)
-    and q146 (which audits content prefixes)."""
+    Structural complement of q66 (which canonicalizes single URLs)."""
     from python_mecab_ner_spark.operators.crawl import \
         url_path_templates
     d = _load(spark, sf_dir, "documents")
     urls = d.select(_template_urls().alias("url"))
     return url_path_templates(urls)
-
-
-def q196_rake(spark, sf_dir):
-    """RAKE keyphrase extraction (operators.retrieval
-    .rake_keyphrases): corpus-global multi-word keyphrases — maximal
-    non-stopword runs scored by the summed deg/freq of their words,
-    with the stopword set DERIVED as the 20 highest-df tokens
-    (deterministic twin of RAKE's function-word list; ties by word
-    asc).  Integer-ppm scores end-to-end; the phrase-length cap is
-    applied before scoring on BOTH engines.  The multi-word member
-    of the term-mining family: q152 ranks single terms per doc, q50
-    ranks bigrams by PMI, this harvests phrase vocabulary."""
-    from python_mecab_ner_spark.operators.retrieval import \
-        rake_keyphrases
-    d = _loadp(spark, sf_dir, "documents")
-    return rake_keyphrases(d, "text", "doc_id")
 
 
 def _copurchase_pairs(spark, sf_dir):
@@ -3115,29 +2717,6 @@ def q198_densest(spark, sf_dir):
                     F.col("density_ppm").cast("bigint")
                     .alias("density_ppm"),
                     F.col("is_best").cast("int").alias("is_best")))
-
-
-def q199_k_anonymity(spark, sf_dir):
-    """k-anonymity / l-diversity release audit (operators.profile
-    .k_anonymity_audit): quasi-identifiers = (source, lang,
-    512-char size bucket), sensitive attribute = an md5-derived
-    7-class label standing in for a content-derived category (the
-    q47 injection convention — deterministic, byte-identical in the
-    oracle).  One groupBy + one conditional-sum pass produce the
-    whole threshold sheet: corpus share in QI groups smaller than
-    k in {2,5,10} and in groups with fewer than l in {2,3} distinct
-    sensitive values — the governance numbers a release gate reads
-    next to q47's PII counts (direct identifiers scrubbed; this
-    audits the quasi-identifiers that remain)."""
-    from python_mecab_ner_spark.operators.profile import \
-        k_anonymity_audit
-    d = _load(spark, sf_dir, "documents")
-    sens = F.pmod(md5_int(F.col("text"), salt="sens:"), F.lit(7))
-    qi = d.select("source", "lang",
-                  F.expr("n_chars div 512").alias("size_bucket"),
-                  sens.alias("sens"))
-    return k_anonymity_audit(qi, ["source", "lang", "size_bucket"],
-                             F.col("sens"))
 
 
 def q200_pareto(spark, sf_dir):
@@ -3249,10 +2828,11 @@ def q206_temporal_reach(spark, sf_dir):
     contact is symmetric, and seeds are users 0-4 at time 0.
     Arrival = the earliest event INDEX at which a causal
     (non-decreasing-time) contact chain from a seed reaches the
-    user — who COULD know, in causal order (q181's Markov counts
-    ignore ordering constraints; q49's khop ignores time).  Event
+    user — who COULD know, in causal order (q49's khop ignores
+    time).  Event
     ids are the integer clock (monotone with ts, measured), so no
-    ntz epoch math touches the oracle (the q178 trap).  7
+    ntz epoch math touches the oracle (Spark converts ntz epochs
+    through the session timezone).  7
     fixpoint rounds at sf0.01, 24 at sf0.1 (measured); budgets
     differ per engine because post-fixpoint rounds are no-ops."""
     from python_mecab_ner_spark.operators.temporal import \
@@ -3277,45 +2857,6 @@ def q206_temporal_reach(spark, sf_dir):
                                   max_rounds=TEMPORAL_BUDGET)
             .select(F.col("node").cast("bigint").alias("node"),
                     F.col("arrival").cast("bigint").alias("arrival")))
-
-
-def q207_interval_join(spark, sf_dir):
-    """Batch interval-overlap join via bucket expansion
-    (operators.spans.interval_join): lineitem shipping intervals
-    [shipdate, receiptdate] against 40 overlapping 80-day audit
-    windows, aggregated per window — the interval x interval member
-    of the temporal-join family (q31 = point x latest as-of).  The
-    rewrite turns the theta-join Spark would BNL-plan into a partitionable
-    equi-join on 64-day buckets, each pair counted once at its
-    overlap-start bucket (no dedup shuffle).  Dates become
-    NON-NEGATIVE epoch-day integers via unix_date (zone-free, the
-    q179 discipline; 8035 = days to 1992-01-01 in both engines);
-    the testdata lineitem has no receiptdate, so transit is an
-    md5-derived 1-60 days (the q47 injection convention)."""
-    from python_mecab_ner_spark.operators.spans import interval_join
-    li0 = _load(spark, sf_dir, "lineitem")
-    transit = (F.pmod(md5_int(
-        F.concat(F.col("l_orderkey").cast("string"), F.lit("#"),
-                 F.col("l_linenumber").cast("string")), salt="ijt:"),
-        F.lit(60)) + 1)
-    li = li0.select(
-        F.unix_date(F.col("l_shipdate").cast("date")).alias("ls"),
-        (F.unix_date(F.col("l_shipdate").cast("date")) + transit)
-        .alias("le"),
-        F.col("l_quantity").cast("bigint").alias("qty"))
-    win = spark.range(0, IJ_WINDOWS).select(
-        F.col("id").alias("window_id"),
-        (F.lit(8035) + F.col("id") * 50).alias("rs"),
-        (F.lit(8035) + F.col("id") * 50 + 80).alias("re"))
-    joined = interval_join(li, win, ("ls", "le"), ("rs", "re"),
-                           bucket=64)
-    return (joined.groupBy("window_id")
-            .agg(F.count("*").alias("n_lines"),
-                 F.sum("qty").alias("sum_qty"))
-            .select(F.col("window_id").cast("bigint")
-                    .alias("window_id"),
-                    F.col("n_lines").cast("bigint").alias("n_lines"),
-                    F.col("sum_qty").cast("bigint").alias("sum_qty")))
 
 
 def q208_scd2_history(spark, sf_dir):
@@ -3366,17 +2907,16 @@ def q209_textrank(spark, sf_dir):
     .textrank_keywords): weighted integer PageRank over the word
     co-occurrence graph (window 2, derived top-20-df stoplist, both
     shared with the oracle) — the iterative graph-global member of
-    the term-mining family: q196 RAKE scores phrases by local
-    deg/freq in one pass, q152 is per-doc tf-idf, q50 ranks bigrams
-    by PMI; TextRank rewards words that co-occur with other
-    well-connected words.  The all-integer PR recurrence
+    the term-mining family: q50 ranks bigrams by PMI; TextRank
+    rewards words that co-occur with other well-connected words.
+    The all-integer PR recurrence
     (pagerank_weighted_int) makes the unrolled-SQL oracle bit-exact;
     the word graph is persisted (two non-exchange-identical
     consumers per round) and released per query."""
     from python_mecab_ner_spark.operators.retrieval import (
         textrank_keywords)
     d = _loadp(spark, sf_dir, "documents")
-    # n_stop=8, not the RAKE default 20: the template corpus has ~31
+    # n_stop=8, not the default 20: the template corpus has ~31
     # distinct tokens, so the default stoplist would leave an
     # 11-node graph (production callers keep 20+)
     out = textrank_keywords(d, "text", "doc_id", n_stop=8,
@@ -3389,7 +2929,7 @@ def q209_textrank(spark, sf_dir):
 def _textrank_oracle_sql(iters: int = 3, scale: int = 1_000_000,
                          dn: int = 85, dd: int = 100,
                          n_stop: int = 20) -> str:
-    """Generated DuckDB twin of q209: the q196 tokenization +
+    """Generated DuckDB twin of q209: the tokenization +
     derived-stoplist CTEs, lead()-window co-occurrence pairs, then
     the q68 unrolled weighted-PageRank rounds on the word graph."""
     base = (scale * (dd - dn)) // dd
@@ -3455,13 +2995,13 @@ def q210_zorder_layout(spark, sf_dir):
     .layout_audit): events bucketized on (user_id % 64,
     epoch_day % 64), Morton-interleaved vs d2-major keys
     range-split into 64 files each, per-file min/max zone maps out.
-    The data-layout complement of q138 (partition skew): q138 audits
-    how much lands in each partition, this audits what a reader's
-    min/max pruning can SKIP — under `linear` every file spans the
-    full user domain (user-sliced queries read everything), under
-    `zorder` both spans are bounded, so either dimension prunes.
-    Day buckets via unix_date (zone-free, the q179/q207 discipline);
-    all bit arithmetic 64-bit integer in both engines."""
+    Where a partition-skew audit counts how much lands in each
+    partition, this audits what a reader's min/max pruning can
+    SKIP — under `linear` every file spans the full user domain
+    (user-sliced queries read everything), under `zorder` both spans
+    are bounded, so either dimension prunes.  Day buckets via
+    unix_date (zone-free); all bit arithmetic 64-bit integer in both
+    engines."""
     from python_mecab_ner_spark.operators.layout import layout_audit
     ev = _load(spark, sf_dir, "events")
     return layout_audit(
@@ -3725,99 +3265,6 @@ def _reshard_oracle_sql(n_from: int = 16, n_to: int = 17,
         FROM u"""
 
 
-def q221_postings_gaps(spark, sf_dir):
-    """Inverted-index delta-gap compression audit (operators
-    .retrieval.postings_gap_audit): bits to store doc-id gaps
-    (sum bit_length(gap), the Elias/varint cost model) vs 32-bit
-    fixed postings, rolled up per df-class — the index-layout
-    sizing sheet read before building q122's postings at scale;
-    frequent terms (dense lists, tiny gaps) compress hardest, and
-    the ratio column shows it monotonically."""
-    from python_mecab_ner_spark.operators.retrieval import (
-        postings_gap_audit)
-    d = _loadp(spark, sf_dir, "documents")
-    # bigrams=True widens the 31-word template vocabulary into a
-    # real df spectrum (unigrams alone yield two df-classes)
-    return postings_gap_audit(d, "text", "doc_id", bigrams=True)
-
-
-_POSTINGS_GAP_ORACLE_SQL = """
-    WITH t AS (SELECT doc_id,
-                      list_filter(regexp_split_to_array(
-                          lower(trim(text)), '\\s+'),
-                          s -> s <> '') AS w
-               FROM documents),
-    uni AS (SELECT doc_id, unnest(w) AS word FROM t),
-    bidx AS (SELECT doc_id, w,
-                    unnest(range(0, greatest(len(w) - 1, 0))) AS i
-             FROM t),
-    big AS (SELECT doc_id, w[i + 1] || '_' || w[i + 2] AS word
-            FROM bidx),
-    post AS (SELECT DISTINCT doc AS doc, word FROM (
-               SELECT doc_id AS doc, word FROM uni
-               UNION ALL SELECT doc_id, word FROM big)),
-    gaps AS (SELECT word,
-                    doc - coalesce(lag(doc) OVER (PARTITION BY word
-                                                  ORDER BY doc),
-                                   -1) AS gap
-             FROM post),
-    pw AS (SELECT word, count(*) AS df,
-                  sum(length(bin(gap))) AS gbits
-           FROM gaps GROUP BY 1)
-    SELECT CAST(length(bin(df)) AS INT) AS df_bits,
-           CAST(count(*) AS BIGINT) AS n_terms,
-           CAST(sum(df) AS BIGINT) AS n_postings,
-           CAST(sum(gbits) AS BIGINT) AS gap_bits,
-           CAST(sum(df) * 32 AS BIGINT) AS fixed_bits,
-           CAST((sum(gbits) * 1000000) // (sum(df) * 32) AS BIGINT)
-               AS ratio_ppm
-    FROM pw GROUP BY 1"""
-
-
-def q222_class_terms(spark, sf_dir):
-    """Class-based TF-IDF distinctive terms (operators.retrieval
-    .class_tfidf_terms, BERTopic's c-TF-IDF integerized): each
-    source as one meta-document, terms scored ctf * bitlen-icf,
-    top-5 per source with bigram terms — the "name this cluster"
-    step after any grouping; q38 ranks within a document, this
-    ranks what SEPARATES a class from the rest."""
-    from python_mecab_ner_spark.operators.retrieval import (
-        class_tfidf_terms)
-    d = _loadp(spark, sf_dir, "documents")
-    return class_tfidf_terms(d, "text", "source", k=5)
-
-
-_CLASS_TERMS_ORACLE_SQL = """
-    WITH t AS (SELECT source,
-                      list_filter(regexp_split_to_array(
-                          lower(trim(text)), '\\s+'),
-                          s -> s <> '') AS w
-               FROM documents),
-    uni AS (SELECT source, unnest(w) AS term FROM t),
-    bidx AS (SELECT source, w,
-                    unnest(range(0, greatest(len(w) - 1, 0))) AS i
-             FROM t),
-    big AS (SELECT source, w[i + 1] || '_' || w[i + 2] AS term
-            FROM bidx),
-    tok AS (SELECT source AS cls, term FROM uni
-            UNION ALL SELECT source, term FROM big),
-    ctf AS (SELECT cls, term, count(*) AS ctf
-            FROM tok GROUP BY 1, 2),
-    cf AS (SELECT term, count(*) AS cf FROM ctf GROUP BY 1),
-    ncls AS (SELECT count(DISTINCT cls) AS c FROM tok),
-    scored AS (SELECT cls, term, ctf, cf,
-                      ctf * length(bin(c // cf)) AS score
-               FROM ctf JOIN cf USING (term) CROSS JOIN ncls)
-    SELECT cls AS source, CAST(rank AS INT) AS rank, term,
-           CAST(ctf AS BIGINT) AS ctf, CAST(cf AS BIGINT) AS cf,
-           CAST(score AS BIGINT) AS score
-    FROM (SELECT *, row_number() OVER (PARTITION BY cls
-                                       ORDER BY score DESC,
-                                                 term ASC) AS rank
-          FROM scored)
-    WHERE rank <= 5"""
-
-
 def q223_neyman(spark, sf_dir):
     """Neyman-optimal stratified budget allocation (operators.sample
     .neyman_allocation): 1000 labeling seats split across sources
@@ -3860,57 +3307,6 @@ def _neyman_oracle_sql(budget: int = 1000) -> str:
                CAST(base + (CASE WHEN rk <= leftover
                             THEN 1 ELSE 0 END) AS BIGINT) AS alloc
         FROM r CROSS JOIN seats"""
-
-
-def q224_seasonal_outliers(spark, sf_dir):
-    """Seasonality-adjusted daily anomalies (operators.spans
-    .seasonal_outliers): per event type, days deviating > 18% from
-    their OWN weekday's mean count — the detector that survives
-    weekly rhythm (q85's global-mean burst rule alarms every Monday
-    on weekday-heavy streams; q189's CUSUM finds level shifts, not
-    single days).  Weekday = epoch_day % 7, zone-free integer (the
-    ntz discipline); deviation test cross-multiplied, no division;
-    worst day recovered from one packed argmax."""
-    from python_mecab_ner_spark.operators.spans import seasonal_outliers
-    ev = _load(spark, sf_dir, "events")
-    # dev_pct=18, not the operator's 50 default: the synthetic
-    # streams are near-Poisson (p90 deviation ~15%, max ~27%,
-    # measured), so 50 never fires and the packed-argmax branch
-    # would go untested; 18 flags the true tail days
-    return (seasonal_outliers(ev, "ts", "event_type", dev_pct=18)
-            .orderBy("event_type"))
-
-
-_SEASONAL_ORACLE_SQL = f"""
-    WITH d AS (SELECT event_type AS k,
-                      (CAST(ts AS DATE) - DATE '1970-01-01') AS day
-               FROM events),
-    daily AS (SELECT k, day, CAST(count(*) AS BIGINT) AS cnt
-              FROM d GROUP BY 1, 2),
-    prof AS (SELECT k, day % 7 AS dow, sum(cnt) AS total,
-                    count(*) AS n_days
-             FROM daily GROUP BY 1, 2),
-    j AS (SELECT daily.k, daily.day, daily.cnt, prof.total,
-                 prof.n_days,
-                 abs(daily.cnt * prof.n_days - prof.total) AS dev
-          FROM daily JOIN prof ON prof.k = daily.k
-           AND prof.dow = daily.day % 7),
-    f AS (SELECT *, CASE WHEN dev * 100 > 18 * total
-                         THEN 1 ELSE 0 END AS is_out FROM j),
-    agg AS (SELECT k, count(DISTINCT day) AS n_days,
-                   sum(is_out) AS n_outlier_days,
-                   max(CASE WHEN is_out = 1 THEN
-                       dev * {1 << 42}
-                       + ({(1 << 21) - 1} - day) * {1 << 21}
-                       + cnt END) AS pk
-            FROM f GROUP BY 1)
-    SELECT k AS event_type, CAST(n_days AS BIGINT) AS n_days,
-           CAST(n_outlier_days AS BIGINT) AS n_outlier_days,
-           CAST(coalesce({(1 << 21) - 1}
-                         - ((pk // {1 << 21}) % {1 << 21}), -1)
-                AS BIGINT) AS worst_day,
-           CAST(coalesce(pk % {1 << 21}, -1) AS BIGINT) AS worst_cnt
-    FROM agg"""
 
 
 def q228_fresh_rank(spark, sf_dir):
@@ -3987,21 +3383,6 @@ def _fresh_rank_oracle_sql(iters: int = 3, scale: int = 1_000_000,
         SELECT CAST(node AS BIGINT) AS node, pr FROM pr{iters}"""
 
 
-def q189_cusum(spark, sf_dir):
-    """Single change-point per event type (operators.spans
-    .cusum_changepoint): the integer CUSUM statistic
-    |T*S_t - t*S_T| maximized over daily-count prefixes, argmax via
-    the house packed-integer max (ties to the EARLIEST split) — the
-    level-shift detector that complements q85's single-spike burst
-    rule (q85: per-day threshold vs the mean; here: where the mean
-    itself moves).  Day buckets via date_format on the raw ntz
-    column — never epoch arithmetic (the q178/q179 trap)."""
-    from python_mecab_ner_spark.operators.spans import cusum_changepoint
-    ev = _load(spark, sf_dir, "events")
-    return (cusum_changepoint(ev, "ts", "event_type")
-            .orderBy("event_type"))
-
-
 def q143_mix_weights(spark, sf_dir):
     """Temperature-smoothed source mixture weights (operators.sample
     .temperature_mix_weights, tau = 1/2 as in Conneau & Lample 2019):
@@ -4023,22 +3404,8 @@ def q143_mix_weights(spark, sf_dir):
     return temperature_mix_weights(classes)
 
 
-BM25_TERMS = ["spark", "query", "hash"]   # deterministic query bag
 PACK_BUDGET = 512                         # tokens per training sequence
 PACK_BUCKETS = 16
-
-
-def q59_bm25(spark, sf_dir):
-    """Integer fixed-point BM25 retrieval (operators.retrieval
-    .bm25_topk): top-20 documents for a fixed query bag — all
-    fractions cleared to 64-bit integers (k1=6/5, b=3/4, bit-length
-    idf), so ranking is bit-identical across engines.  The lexical
-    retrieval path next to the ANN family (q20/q21)."""
-    from python_mecab_ner_spark.operators.retrieval import bm25_topk
-    ctx = _doc_context(spark, sf_dir)
-    return (bm25_topk(ctx, BM25_TERMS, k=20)
-            .select(F.col("doc_id").cast("bigint").alias("doc_id"),
-                    "n_terms", "bm25_milli"))
 
 
 def q60_pack_sequences(spark, sf_dir):
@@ -4531,7 +3898,7 @@ def kg_entity_khop(spark, sf_dir):
                    F.col("n_2hop").cast("bigint").alias("n_2hop")))
     # withColumnRenamed returns a NEW DataFrame without the attribute
     # — re-attach so check_oracle's per-query release sees it (the
-    # q49/q163/q166 convention; leak flagged by round-4 advice)
+    # q49/q163 convention; leak flagged by round-4 advice)
     res.unpersist_input = out.unpersist_input
     return res
 
@@ -4680,9 +4047,8 @@ def kg_entity_salience(spark, sf_dir):
     """Lead-position salience over REAL gazetteer mentions
     (operators.profile.term_salience with char offsets as positions):
     per page the most-salient surfaced entity — mention count * 1000
-    plus the bounded earliness bonus, max-then-min tie-break.  The
-    q152 formula with actual extraction offsets instead of the
-    length->=5 token heuristic."""
+    plus the bounded earliness bonus, max-then-min tie-break, over
+    actual extraction offsets instead of token positions."""
     from python_mecab_ner_spark.operators.profile import term_salience
     g = _kg_graph(spark)
     return term_salience(g["mentions"], id_col="url",
@@ -4887,7 +4253,7 @@ def _kg_dense_sym(spark, min_pairs: int = 2):
 
 def kg_community_labels(spark, sf_dir):
     """Name the real KG communities (operators.retrieval
-    .class_tfidf_from_tokens, the q222 scoring on mention-context
+    .class_tfidf_from_tokens, c-TF-IDF scoring on mention-context
     tokens): for each LPA community on the co-mention graph, the
     top-5 context words around its members' mentions by c-TF-IDF —
     the label-generation step that turns an opaque community id
@@ -4901,7 +4267,7 @@ def kg_community_labels(spark, sf_dir):
     terms (pagoda-site, cat-breed, sequoia, moon clusters at
     sf0.001) — the honest small-C limit; production class counts
     (hundreds of communities) separate cleanly.  Rows-only; the
-    scoring kernel is q222's oracle."""
+    scoring kernel's python twin is in tests/test_round5d_ops.py."""
     from python_mecab_ner_spark.operators.retrieval import (
         class_tfidf_from_tokens)
     sym, lpa, _, dense = _kg_dense_sym(spark)
@@ -4973,7 +4339,7 @@ def kg_mis_seeds(spark, sf_dir):
 
 
 def kg_release_audit(spark, sf_dir):
-    """k-anonymity / l-diversity audit (q199's operator) on the REAL
+    """k-anonymity / l-diversity audit (operators.profile) on the REAL
     extracted triple set before a KG release: quasi-identifiers =
     (predicate, source host) — the attributes a downstream joiner
     sees — and the OBJECT surface as the sensitive attribute.  Tiny
@@ -5271,12 +4637,13 @@ def kg_type_propagation(spark, sf_dir):
 
 def kg_alias_candidates(spark, sf_dir):
     """SymSpell edit-distance-1 alias candidates over the REAL
-    extracted mention surfaces (the q168-certified kernel at syllable
-    granularity) — one-syllable variants of the same entity surface,
-    the cheap complement to the jamo-shingle MinHash blocking that
-    kg_canonical_clusters runs (symmetric deletion catches the
-    adjacent single-slip pairs LSH banding can miss at short
-    lengths).  Rows-only; output sorted pairs."""
+    extracted mention surfaces (the kernel that
+    tests/test_graph_ontology_round4.py checks against a python twin,
+    at syllable granularity) — one-syllable variants of the same
+    entity surface, the cheap complement to the jamo-shingle MinHash
+    blocking that kg_canonical_clusters runs (symmetric deletion
+    catches the adjacent single-slip pairs LSH banding can miss at
+    short lengths).  Rows-only; output sorted pairs."""
     from python_mecab_ner_spark.operators.retrieval import \
         symspell_alias_pairs
     g = _kg_graph(spark)
@@ -5368,23 +4735,24 @@ _SNAPSHOT_FIRST_50 = [
     # dedup / blocking family
     "q16_jaccard_pairs", "q17_lsh_pairs", "q18_simhash",
     "q48_line_dedup", "q54_window_dedup", "q171_sorted_neighborhood",
+    "q43_dup_argmax",
     # ANN / embeddings
     "q20_ann_bruteforce", "q21_ann_lsh", "q180_semantic_decon",
     # graph
     "q40_pagerank", "q49_khop", "q154_modularity", "q161_wl_classes",
-    "q162_scc", "q173_ktruss", "q176_star_cc", "q177_mis",
+    "q162_scc", "q173_ktruss", "q176_star_cc", "q177_mis", "q198_densest",
     # ontology / schema induction
     "q140_pred_functionality", "q141_domain_range",
     "q142_inverse_preds", "q155_entity_alignment",
     # retrieval
-    "q59_bm25", "q101_kwic", "q167_phrase_search", "q170_symspell_d2",
-    # sampling / mixture
-    "q55_stratified_sample", "q95_quality_hist_gate",
-    "q165_epoch_allocation",
+    "q209_textrank",
+    # sampling / selection
+    "q193_coverage_selection",
     # monitoring / profiling
-    "q166_robust_outliers", "q169_heaps_law",
+    "q148_encoding_audit", "q149_ngram_diversity", "q169_heaps_law",
     # crawl / web
-    "q66_url_canonical", "q145_warc_roundtrip",
+    "q66_url_canonical", "q145_warc_roundtrip", "q195_url_templates",
+    "q203_jsonl_ledger",
     # real-KG rows-only
     "kg_link_levels", "kg_triples_by_pred", "kg_host_scc",
 ]
@@ -5408,7 +4776,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q07_anti_join": q07_anti_join,
         "q08_word_freq": q08_word_freq,
         "q09_neighbor_window": q09_neighbor_window,
-        "q10_latest_per_user": q10_latest_per_user,
         "q11_token_count": q11_token_count,
         "q12_lang_id": q12_lang_id,
         "q13_quality_score": q13_quality_score,
@@ -5420,7 +4787,6 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q20_ann_bruteforce": q20_ann_bruteforce,
         "q21_ann_lsh": q21_ann_lsh,
         "q22_salt_distribution": q22_salt_distribution,
-        "q28_sessionize": q28_sessionize,
         "q30_rollup": q30_rollup,
         "q31_asof_join": q31_asof_join,
         "q32_trailing_window": q32_trailing_window,
@@ -5443,9 +4809,7 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q54_window_dedup": q54_window_dedup,
         "q55_stratified_sample": q55_stratified_sample,
         "q56_quality_gate": q56_quality_gate,
-        "q57_source_profile": q57_source_profile,
         "q58_neighbor_jaccard": q58_neighbor_jaccard,
-        "q59_bm25": q59_bm25,
         "q60_pack_sequences": q60_pack_sequences,
         "q62_ppr": q62_ppr,
         "q63_funnel": q63_funnel,
@@ -5461,15 +4825,10 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q81_crawl_budget": q81_crawl_budget,
         "q83_fuzzy_alias": q83_fuzzy_alias,
         "q84_importance_weights": q84_importance_weights,
-        "q85_burst_days": q85_burst_days,
-        "q86_length_deciles": q86_length_deciles,
-        "q87_rrf_fusion": q87_rrf_fusion,
-        "q88_tfidf_cosine_pairs": q88_tfidf_cosine_pairs,
         "q92_recency_decay": q92_recency_decay,
         "q95_quality_hist_gate": q95_quality_hist_gate,
         "q96_cooccurrence": q96_cooccurrence,
         "q99_degree_histogram": q99_degree_histogram,
-        "q101_kwic": q101_kwic,
         "q105_source_risk": q105_source_risk,
         "q106_source_overlap": q106_source_overlap,
         "q107_next_word": q107_next_word,
@@ -5477,30 +4836,23 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q113_normalize": q113_normalize,
         "q116_weighted_sample": q116_weighted_sample,
         "q117_script_mix": q117_script_mix,
-        "q120_vocab_drift": q120_vocab_drift,
         "q121_blocklist": q121_blocklist,
-        "q122_postings": q122_postings,
         "q123_hyperball": q123_hyperball,
         "q129_robots_gate": q129_robots_gate,
-        "q132_vocab_head": q132_vocab_head,
         "q133_fetch_rounds": q133_fetch_rounds,
-        "q134_gate_funnel": q134_gate_funnel,
         "q135_recrawl_schedule": q135_recrawl_schedule,
         "q136_truth_finding": q136_truth_finding,
-        "q138_partition_skew": q138_partition_skew,
         "q139_c4_line_rules": q139_c4_line_rules,
         "q140_pred_functionality": q140_pred_functionality,
         "q141_domain_range": q141_domain_range,
         "q142_inverse_preds": q142_inverse_preds,
         "q143_mix_weights": q143_mix_weights,
         "q145_warc_roundtrip": q145_warc_roundtrip,
-        "q146_template_prefixes": q146_template_prefixes,
         "q147_bcubed_eval": q147_bcubed_eval,
         "q148_encoding_audit": q148_encoding_audit,
         "q149_ngram_diversity": q149_ngram_diversity,
         "q150_rule_mining": q150_rule_mining,
         "q151_edge_lifespan": q151_edge_lifespan,
-        "q152_term_salience": q152_term_salience,
         "q154_modularity": q154_modularity,
         "q155_entity_alignment": q155_entity_alignment,
         "q156_type_propagation": q156_type_propagation,
@@ -5512,47 +4864,33 @@ def _queries_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q163_itemsets": q163_itemsets,
         "q164_graph_contraction": q164_graph_contraction,
         "q165_epoch_allocation": q165_epoch_allocation,
-        "q166_robust_outliers": q166_robust_outliers,
-        "q167_phrase_search": q167_phrase_search,
-        "q168_symspell": q168_symspell,
         "q169_heaps_law": q169_heaps_law,
-        "q170_symspell_d2": q170_symspell_d2,
         "q171_sorted_neighborhood": q171_sorted_neighborhood,
         "q173_ktruss": q173_ktruss,
         "q176_star_cc": q176_star_cc,
         "q177_mis": q177_mis,
-        "q178_funnel": q178_funnel,
-        "q179_cohort_retention": q179_cohort_retention,
         "q180_semantic_decon": q180_semantic_decon,
-        "q181_event_transitions": q181_event_transitions,
         "q184_bootstrap_ci": q184_bootstrap_ci,
         "q185_wilson": q185_wilson,
         "q186_hearst": q186_hearst,
         "q192_stitch": q192_stitch,
         "q188_merge_matching": q188_merge_matching,
-        "q189_cusum": q189_cusum,
         "q190_betweenness": q190_betweenness,
         "q193_coverage_selection": q193_coverage_selection,
         "q195_url_templates": q195_url_templates,
-        "q196_rake": q196_rake,
         "q197_boruvka_mst": q197_boruvka_mst,
         "q198_densest": q198_densest,
-        "q199_k_anonymity": q199_k_anonymity,
         "q200_pareto": q200_pareto,
         "q202_good_turing": q202_good_turing,
         "q203_jsonl_ledger": q203_jsonl_ledger,
         "q206_temporal_reach": q206_temporal_reach,
-        "q207_interval_join": q207_interval_join,
         "q208_scd2_history": q208_scd2_history,
         "q209_textrank": q209_textrank,
         "q210_zorder_layout": q210_zorder_layout,
         "q212_spam_mass": q212_spam_mass,
         "q213_rand_ari": q213_rand_ari,
         "q220_reshard": q220_reshard,
-        "q221_postings_gaps": q221_postings_gaps,
-        "q222_class_terms": q222_class_terms,
         "q223_neyman": q223_neyman,
-        "q224_seasonal_outliers": q224_seasonal_outliers,
         "q228_fresh_rank": q228_fresh_rank,
         "kg_triples_by_pred": kg_triples_by_pred,
         "kg_modularity": kg_modularity,
@@ -6073,60 +5411,6 @@ def oracle_sql() -> dict[str, str]:
     """
 
 
-    # head-coverage oracle (q132): same tokenization as the Spark
-    # side, rank + running sum over the vocab, rows at the k knots
-    _head_in = ", ".join(str(k) for k in HEAD_KS)
-    vocab_head_sql = f"""
-        WITH tok AS (SELECT unnest(regexp_split_to_array(
-                         regexp_replace(lower(trim(text)),
-                                        '\\s+', ' ', 'g'), ' '))
-                         AS term
-                     FROM documents),
-        cnt AS (SELECT term, count(*) AS cnt FROM tok
-                WHERE term <> '' GROUP BY 1),
-        tot AS (SELECT sum(cnt) AS total_cnt FROM cnt),
-        rk AS (SELECT term, cnt,
-                      row_number() OVER (ORDER BY cnt DESC, term ASC)
-                          AS k,
-                      sum(cnt) OVER (ORDER BY cnt DESC, term ASC
-                                     ROWS UNBOUNDED PRECEDING)
-                          AS cum_cnt
-               FROM cnt)
-        SELECT CAST(k AS INT) AS k, term AS kth_term,
-               CAST(cnt AS BIGINT) AS kth_cnt,
-               CAST(cum_cnt AS BIGINT) AS cum_cnt,
-               CAST(total_cnt AS BIGINT) AS total_cnt,
-               CAST((cum_cnt * 1000000) // total_cnt AS BIGINT)
-                   AS coverage_ppm
-        FROM rk CROSS JOIN tot WHERE k IN ({_head_in})
-    """
-
-    # gate-funnel oracle (q134): the five gate CASEs packed into one
-    # mask, bits re-derived from the mask so names stay in lockstep
-    _fn_rep = TX.duplicate_ngram_ppm_sql("text", n=2)
-    _fn_tok = TX.token_count_sql("text")
-    _fn_bl = " + ".join(c for c, _ in TX.blocklist_phrase_counts_sql(
-        "text"))
-    _fn_gates = [
-        ("lang", f"{lang_sql} = 'en'"),
-        ("quality", f"{qual_sql} >= {FUNNEL_QUALITY_MIN}"),
-        ("repetition", f"{_fn_rep} <= {FUNNEL_REP_MAX_PPM}"),
-        ("length", f"{_fn_tok} >= {FUNNEL_MIN_TOKENS}"),
-        ("blocklist", f"({_fn_bl}) = 0"),
-    ]
-    _fn_mask = " + ".join(
-        f"(CASE WHEN {cond} THEN {1 << i} ELSE 0 END)"
-        for i, (_, cond) in enumerate(_fn_gates))
-    _fn_bits = ", ".join(
-        f"CAST((mask // {1 << i}) % 2 AS INT) AS pass_{name}"
-        for i, (name, _) in enumerate(_fn_gates))
-    gate_funnel_sql = f"""
-        WITH m AS (SELECT {_fn_mask} AS mask FROM documents)
-        SELECT CAST(mask AS BIGINT) AS mask, {_fn_bits},
-               CAST(count(*) AS BIGINT) AS n_docs
-        FROM m GROUP BY ALL
-    """
-
     # recrawl-schedule oracle (q135): rebuild the hash-deterministic
     # snapshot history, lag-compare fingerprints, integer MLE rate
     _rc_rate = md5_int_sql("CAST(doc_id AS VARCHAR)", salt="rate:")
@@ -6216,37 +5500,6 @@ def oracle_sql() -> dict[str, str]:
                CAST(((p1 // {_VB}) * 1000000) // total AS BIGINT)
                    AS support_ppm
         FROM o JOIN c0 ON c0.subj = o.subj
-    """
-
-    # partition-skew oracle (q138): same md5 bucketing over both key
-    # choices, candidate counts as a VALUES dimension
-    _ps_cand = ", ".join(f"({n})" for n in SKEW_CANDIDATES)
-    _ps_h = md5_int_sql("key", salt="part:")
-    partition_skew_sql = f"""
-        WITH cand(n_parts) AS (VALUES {_ps_cand}),
-        k AS (SELECT 'source' AS key_name, source AS key
-              FROM documents
-              UNION ALL
-              SELECT 'doc_id', CAST(doc_id AS VARCHAR)
-              FROM documents),
-        b AS (SELECT key_name, n_parts, {_ps_h} % n_parts AS bucket
-              FROM k CROSS JOIN cand),
-        per AS (SELECT key_name, n_parts, bucket, count(*) AS n_rows
-                FROM b GROUP BY 1, 2, 3),
-        o AS (SELECT key_name, n_parts, sum(n_rows) AS total_rows,
-                     count(*) AS n_nonempty, max(n_rows) AS max_bucket,
-                     min(n_rows) AS min_bucket
-              FROM per GROUP BY 1, 2)
-        SELECT CAST(n_parts AS INT) AS n_parts,
-               CAST(total_rows AS BIGINT) AS total_rows,
-               CAST(n_nonempty AS BIGINT) AS n_nonempty,
-               CAST(n_parts - n_nonempty AS BIGINT) AS n_empty,
-               CAST(max_bucket AS BIGINT) AS max_bucket,
-               CAST(min_bucket AS BIGINT) AS min_bucket,
-               CAST((max_bucket * n_parts * 1000000) // total_rows
-                    AS BIGINT) AS skew_ppm,
-               key_name
-        FROM o
     """
 
     # C4 line-rules oracle (q139): rebuild the hash-synthesized pages,
@@ -6483,13 +5736,6 @@ def oracle_sql() -> dict[str, str]:
                         ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS BIGINT) AS w_sum_c
             FROM events
         """,
-        "q10_latest_per_user": f"""
-            SELECT user_id, event_id FROM (
-              SELECT user_id, event_id,
-                     ROW_NUMBER() OVER (PARTITION BY user_id
-                         ORDER BY {minute.format(c='ts')} DESC, event_id DESC) AS rn
-              FROM events) WHERE rn = 1
-        """,
         "q11_token_count": f"SELECT doc_id, {tok_sql} AS n_tokens FROM documents",
         "q12_lang_id": f"SELECT doc_id, {lang_sql} AS lang_pred FROM documents",
         "q13_quality_score": f"SELECT doc_id, {qual_sql} AS quality FROM documents",
@@ -6551,29 +5797,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, {", ".join(TX.script_mix_ppm_sql('t'))}
             FROM m
         """,
-        "q120_vocab_drift": """
-            WITH d AS (SELECT CAST(regexp_extract(source, '(\\d+)', 1)
-                                   AS INT) % 2 AS epoch, text
-                       FROM documents),
-            w AS (SELECT epoch,
-                         unnest(regexp_split_to_array(
-                             regexp_replace(lower(trim(text)),
-                                            '\\s+', ' ', 'g'),
-                             ' ')) AS term
-                  FROM d),
-            w2 AS (SELECT epoch, term FROM w WHERE term <> ''),
-            c AS (SELECT term,
-                         sum(CASE WHEN epoch = 0 THEN 1 ELSE 0 END) AS o0,
-                         sum(CASE WHEN epoch = 1 THEN 1 ELSE 0 END) AS o1
-                  FROM w2 GROUP BY 1),
-            tot AS (SELECT sum(o0) AS n0, sum(o1) AS n1 FROM c)
-            SELECT term, CAST(o0 AS BIGINT) AS o0,
-                   CAST(o1 AS BIGINT) AS o1,
-                   CAST(abs(o0 * n1 - o1 * n0) AS BIGINT) AS drift
-            FROM c CROSS JOIN tot
-            ORDER BY drift DESC, term ASC
-            LIMIT 50
-        """,
         "q121_blocklist": f"""
             WITH h AS (SELECT doc_id, {_bl_defs} FROM documents)
             SELECT doc_id, {_bl_names},
@@ -6583,12 +5806,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "q123_hyperball": hyperball_sql,
         "q129_robots_gate": robots_gate_sql,
-        "q132_vocab_head": vocab_head_sql,
         "q133_fetch_rounds": fetch_rounds_sql,
-        "q134_gate_funnel": gate_funnel_sql,
         "q135_recrawl_schedule": recrawl_schedule_sql,
         "q136_truth_finding": truth_finding_sql,
-        "q138_partition_skew": partition_skew_sql,
         "q139_c4_line_rules": c4_line_rules_sql,
         "q140_pred_functionality": pred_functionality_sql,
         "q141_domain_range": domain_range_sql,
@@ -6719,31 +5939,6 @@ def oracle_sql() -> dict[str, str]:
                         AS INT) AS is_current
             FROM g CROSS JOIN c
         """,
-        # q152: twin of profile.term_salience over the _doc_context
-        # token split (0-based idx BEFORE the empty-word filter)
-        "q152_term_salience": """
-            WITH t AS (SELECT doc_id,
-                              regexp_split_to_array(lower(trim(text)),
-                                                    '\\s+') AS w
-                       FROM documents),
-            px AS (SELECT doc_id, unnest(w) AS word,
-                          unnest(range(0, len(w))) AS idx
-                   FROM t),
-            g AS (SELECT doc_id AS id, word, count(*) AS cnt,
-                         min(idx) AS first_idx
-                  FROM px WHERE word <> '' AND length(word) >= 5
-                  GROUP BY 1, 2),
-            s AS (SELECT id, word,
-                         cnt * 1000 + greatest(0, 499 - first_idx)
-                             AS sal
-                  FROM g),
-            tp AS (SELECT id, max(sal) AS top_sal FROM s GROUP BY 1)
-            SELECT s.id, min(word) AS top_word,
-                   CAST(max(sal) AS BIGINT) AS salience,
-                   CAST(max(sal) // 1000 AS BIGINT) AS n_mentions
-            FROM s JOIN tp ON tp.id = s.id AND sal = top_sal
-            GROUP BY 1
-        """,
         "q147_bcubed_eval": """
             WITH a AS (SELECT p_partkey AS i, p_brand AS c,
                               (regexp_split_to_array(p_type, ' '))[1] AS g
@@ -6772,59 +5967,11 @@ def oracle_sql() -> dict[str, str]:
                         END AS BIGINT) AS b3_f1_ppm
             FROM pr
         """,
-        "q146_template_prefixes": f"""
-            WITH p AS (SELECT doc_id,
-                              CASE WHEN doc_id % 5 = 0
-                                   THEN '{TEMPLATE_PREFIX} ' || text
-                                   ELSE text END AS page
-                       FROM documents),
-            n AS (SELECT doc_id,
-                         array_to_string(
-                             (regexp_split_to_array(
-                                  regexp_replace(lower(trim(page)),
-                                                 '\\s+', ' ', 'g'),
-                                  ' '))[1:4], ' ') AS prefix
-                  FROM p),
-            t AS (SELECT count(*) AS total FROM n),
-            g AS (SELECT prefix, count(*) AS n_docs,
-                         min(doc_id) AS exemplar_id
-                  FROM n GROUP BY 1)
-            SELECT prefix, CAST(n_docs AS BIGINT) AS n_docs,
-                   CAST(exemplar_id AS BIGINT) AS exemplar_id,
-                   CAST((n_docs * 1000000) // total AS BIGINT)
-                       AS share_ppm
-            FROM g CROSS JOIN t WHERE n_docs >= 2
-        """,
         "q145_warc_roundtrip": """
             SELECT CAST(doc_id AS BIGINT) AS doc_id,
                    CAST(length(text) AS BIGINT) AS n_chars,
                    md5(text) AS payload_md5
             FROM documents
-        """,
-        "q122_postings": """
-            WITH wd AS (SELECT doc_id,
-                               unnest(regexp_split_to_array(
-                                   regexp_replace(lower(trim(text)),
-                                                  '\\s+', ' ', 'g'),
-                                   ' ')) AS term
-                        FROM documents),
-            w2 AS (SELECT doc_id, term FROM wd WHERE term <> ''),
-            tf AS (SELECT term, doc_id, count(*) AS tf
-                   FROM w2 GROUP BY 1, 2),
-            agg AS (SELECT term, count(*) AS df, sum(tf) AS cf,
-                           max(tf * 1099511627776
-                               + (1099511627775 - doc_id)) AS mx,
-                           array_to_string(
-                               list_sort(list(DISTINCT doc_id))[1:8],
-                               ',') AS posting_sample
-                    FROM tf GROUP BY 1)
-            SELECT term, CAST(df AS BIGINT) AS df,
-                   CAST(cf AS BIGINT) AS cf,
-                   CAST(1099511627775 - (mx & 1099511627775)
-                        AS BIGINT) AS top_doc,
-                   CAST(mx >> 40 AS BIGINT) AS top_tf,
-                   posting_sample
-            FROM agg WHERE df >= 2
         """,
         "q18_simhash": f"""
             WITH words AS (
@@ -6913,24 +6060,6 @@ def oracle_sql() -> dict[str, str]:
             FROM orders
             GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
         """,
-        "q28_sessionize": f"""
-            WITH mm AS (SELECT user_id, event_id, {minute.format(c='ts')} AS m
-                        FROM events),
-            f AS (SELECT user_id, event_id, m,
-                         CASE WHEN lag(m) OVER w IS NULL
-                                   OR m - lag(m) OVER w > 30
-                              THEN 1 ELSE 0 END AS newf
-                  FROM mm
-                  WINDOW w AS (PARTITION BY user_id ORDER BY m, event_id)),
-            s AS (SELECT user_id, m,
-                         CAST(sum(newf) OVER (PARTITION BY user_id
-                              ORDER BY m, event_id
-                              ROWS UNBOUNDED PRECEDING) AS INT) AS session_id
-                  FROM f)
-            SELECT user_id, session_id, min(m) AS session_start,
-                   max(m) AS session_end, count(*) AS n_events
-            FROM s GROUP BY 1, 2
-        """,
         "q68_weighted_rank": _wpr_oracle_sql(iters=3),
         "q78_source_mix": f"""
             WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_s
@@ -6954,34 +6083,6 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY 1
         """,
         "q70_communities": _lpa_oracle_sql(iters=2),
-        "q88_tfidf_cosine_pairs": """
-            WITH toks AS (SELECT p_partkey AS d,
-                                 unnest(regexp_split_to_array(
-                                     lower(p_name), ' ')) AS w
-                          FROM part WHERE p_partkey <= 1000),
-            tf AS (SELECT d, w, count(*) AS tf FROM toks GROUP BY 1, 2),
-            dft AS (SELECT w, count(*) AS df FROM tf GROUP BY 1),
-            nd AS (SELECT count(DISTINCT d) AS n FROM toks),
-            kept AS (SELECT d, tf.w,
-                            tf.tf * length(bin(CAST(
-                                (SELECT n FROM nd) // dft.df AS BIGINT)))
-                                AS wt
-                     FROM tf JOIN dft USING (w) WHERE dft.df <= 512),
-            norms AS (SELECT d, sum(wt * wt) AS n2 FROM kept GROUP BY 1),
-            dots AS (SELECT a.d AS d1, b.d AS d2,
-                            sum(a.wt * b.wt) AS dot
-                     FROM kept a JOIN kept b
-                       ON a.w = b.w AND a.d < b.d
-                     GROUP BY 1, 2),
-            res AS (SELECT d1, d2, dot,
-                           (dot * dot * 1000000) // (na.n2 * nb.n2) AS c
-                    FROM dots JOIN norms na ON na.d = d1
-                    JOIN norms nb ON nb.d = d2)
-            SELECT CAST(d1 AS BIGINT) AS d1, CAST(d2 AS BIGINT) AS d2,
-                   CAST(dot AS BIGINT) AS dot,
-                   CAST(c AS BIGINT) AS cos2_ppm
-            FROM res WHERE c >= 500000
-        """,
         "q107_next_word": """
             WITH t AS (SELECT doc_id, regexp_split_to_array(
                            lower(trim(text)), '\\s+') AS w
@@ -7073,24 +6174,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(w) AS BIGINT) AS decayed
             FROM w GROUP BY 1
         """,
-        # slice bounds mirror greatest/least clamping; DuckDB array
-        # slicing is 1-based inclusive
-        "q101_kwic": """
-            WITH t AS (SELECT doc_id, regexp_split_to_array(
-                           lower(trim(text)), '\\s+') AS w
-                       FROM documents),
-            idx AS (SELECT doc_id, w,
-                           generate_subscripts(w, 1) - 1 AS i,
-                           unnest(w) AS word
-                    FROM t),
-            o AS (SELECT doc_id, w, i FROM idx WHERE word = 'spark')
-            SELECT doc_id, CAST(i AS BIGINT) AS pos,
-                   array_to_string(
-                       w[greatest(i - 3, 0) + 1
-                         : least(i + 3, len(w) - 1) + 1], ' ')
-                       AS snippet
-            FROM o
-        """,
         # exploded-offset equi-join == the b.idx in (a.idx+1 ..
         # a.idx+5) join; weights 60 // d are exact for d <= 5
         "q96_cooccurrence": """
@@ -7137,83 +6220,6 @@ def oracle_sql() -> dict[str, str]:
                        FROM documents)
             SELECT source, doc_id, n_chars FROM r
             WHERE rk < (n * 1 + 3) // 4
-        """,
-        "q87_rrf_fusion": f"""
-            WITH t AS (SELECT doc_id,
-                              regexp_split_to_array(lower(trim(text)),
-                                                    '\\s+') AS w
-                       FROM documents),
-            ctx AS (SELECT doc_id, unnest(w) AS word FROM t),
-            c2 AS (SELECT * FROM ctx WHERE word <> ''),
-            dl AS (SELECT doc_id, count(*) AS dl FROM c2 GROUP BY 1),
-            tot AS (SELECT sum(dl) AS tot, count(*) AS n_docs FROM dl),
-            qt AS (SELECT doc_id, word FROM c2
-                   WHERE word IN ({", ".join(f"'{t}'" for t in BM25_TERMS)})),
-            tf AS (SELECT doc_id, word, count(*) AS tf FROM qt GROUP BY 1, 2),
-            dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM qt
-                    GROUP BY 1),
-            s AS (SELECT tf.doc_id,
-                         (length(bin(CAST(tot.n_docs // dfq.df AS BIGINT)))
-                          * tf.tf * 44000 * (tot.tot // tot.n_docs))
-                         // (20 * (tot.tot // tot.n_docs) * tf.tf
-                             + 6 * (tot.tot // tot.n_docs) + 18 * dl.dl)
-                             AS contrib
-                  FROM tf JOIN dfq USING (word) JOIN dl USING (doc_id)
-                  CROSS JOIN tot),
-            bm AS (SELECT doc_id, sum(contrib) AS bm25
-                   FROM s GROUP BY 1
-                   ORDER BY bm25 DESC, doc_id LIMIT 20),
-            bmr AS (SELECT doc_id, row_number() OVER (
-                        ORDER BY bm25 DESC, doc_id) AS rank FROM bm),
-            u AS (SELECT word, count(*) AS c FROM c2 GROUP BY 1),
-            n AS (SELECT count(*) AS n_tok FROM c2),
-            si AS (SELECT doc_id,
-                          length(bin(CAST(n.n_tok // u.c AS BIGINT))) AS idf
-                   FROM c2 JOIN u USING (word) CROSS JOIN n),
-            sup AS (SELECT doc_id,
-                           (sum(idf) * 1000) // count(*) AS rar
-                    FROM si GROUP BY 1
-                    ORDER BY rar DESC, doc_id LIMIT 20),
-            supr AS (SELECT doc_id, row_number() OVER (
-                         ORDER BY rar DESC, doc_id) AS rank FROM sup),
-            uall AS (SELECT doc_id, 1000000 // (60 + rank) AS pt
-                     FROM bmr
-                     UNION ALL
-                     SELECT doc_id, 1000000 // (60 + rank) FROM supr)
-            SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                   CAST(count(*) AS INT) AS n_systems,
-                   CAST(sum(pt) AS BIGINT) AS rrf_micro
-            FROM uall GROUP BY 1
-        """,
-        "q85_burst_days": """
-            WITH daily AS (SELECT event_type,
-                                  strftime(ts, '%Y-%m-%d') AS day,
-                                  count(*) AS cnt
-                           FROM events GROUP BY 1, 2),
-            base AS (SELECT event_type, sum(cnt) AS total
-                     FROM daily GROUP BY 1),
-            nd AS (SELECT count(DISTINCT day) AS n_days FROM daily)
-            SELECT d.event_type, d.day, CAST(d.cnt AS BIGINT) AS cnt,
-                   CAST(b.total AS BIGINT) AS total,
-                   CAST(nd.n_days AS BIGINT) AS n_days
-            FROM daily d JOIN base b USING (event_type) CROSS JOIN nd
-            WHERE d.cnt * nd.n_days * 5 >= 6 * b.total
-        """,
-        "q86_length_deciles": """
-            WITH h AS (SELECT source, n_chars // 64 AS b,
-                              count(*) AS c
-                       FROM documents GROUP BY 1, 2),
-            cum AS (SELECT source, b,
-                           sum(c) OVER (PARTITION BY source
-                                        ORDER BY b) AS cum,
-                           sum(c) OVER (PARTITION BY source) AS tot
-                    FROM h),
-            e AS (SELECT source, b, cum, tot, q
-                  FROM cum CROSS JOIN
-                       (SELECT unnest(range(1, 10)) AS q))
-            SELECT source, CAST(q AS INT) AS q,
-                   CAST(min(b) * 64 AS BIGINT) AS value_lo
-            FROM e WHERE cum * 10 >= q * tot GROUP BY 1, 2
         """,
         "q83_fuzzy_alias": """
             WITH f AS (SELECT DISTINCT lower(c_name) AS n,
@@ -7286,91 +6292,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT 4, CAST(d4 AS BIGINT), CAST(t4 AS BIGINT),
                    CAST(v4 AS BIGINT) FROM agg
         """,
-        # q167: positional phrase join ('table part', 0-based pos)
-        "q167_phrase_search": """
-            WITH t AS (SELECT doc_id,
-                              regexp_split_to_array(regexp_replace(
-                                  lower(trim(text)), '\\s+', ' ', 'g'),
-                                  ' ') AS w
-                       FROM documents),
-            p AS (SELECT doc_id, w[i + 1] AS term, i AS pos
-                  FROM t, UNNEST(range(0, len(w))) AS r(i)),
-            m AS (SELECT a.doc_id, a.pos AS start
-                  FROM p a JOIN p b
-                    ON b.doc_id = a.doc_id AND b.pos = a.pos + 1
-                  WHERE a.term = 'table' AND b.term = 'part')
-            SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches,
-                   CAST(min(start) AS BIGINT) AS first_pos
-            FROM m GROUP BY 1
-        """,
-        # q168: symmetric-deletion candidates + exact levenshtein
-        # verify, planted 'x'-substitution corruptions
-        "q168_symspell": f"""
-            WITH v0 AS (
-                SELECT DISTINCT term FROM (
-                    SELECT unnest(regexp_split_to_array(
-                        regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                       'g'), ' ')) AS term
-                    FROM documents)
-                WHERE term <> ''),
-            v AS (SELECT term FROM v0
-                  UNION
-                  SELECT 'x' || substr(term, 2) FROM v0
-                  WHERE length(term) > 2
-                    AND ({md5_int_sql('term')}) % 3 = 0),
-            vl AS (SELECT term FROM v
-                   WHERE length(term) <= 24 AND length(term) > 0),
-            keys AS (SELECT DISTINCT term, k
-                     FROM vl, UNNEST(list_prepend(term,
-                          list_transform(range(1, length(term) + 1),
-                              i -> substr(term, 1, i - 1)
-                                   || substr(term, i + 1)))) AS u(k)),
-            cand AS (SELECT DISTINCT a.term AS term_a,
-                            b.term AS term_b
-                     FROM keys a JOIN keys b
-                       ON b.k = a.k AND a.term < b.term)
-            SELECT term_a, term_b FROM cand
-            WHERE levenshtein(term_a, term_b) <= 1
-        """,
-        # q170: depth-2 symmetric-deletion candidates + exact
-        # levenshtein verify, planted sub+del double corruptions
-        "q170_symspell_d2": f"""
-            WITH v0 AS (
-                SELECT DISTINCT term FROM (
-                    SELECT unnest(regexp_split_to_array(
-                        regexp_replace(lower(trim(text)), '\\s+', ' ',
-                                       'g'), ' ')) AS term
-                    FROM documents)
-                WHERE term <> ''),
-            v AS (SELECT term FROM v0
-                  UNION
-                  SELECT 'x' || substr(term, 2, length(term) - 2)
-                  FROM v0
-                  WHERE length(term) > 4
-                    AND ({md5_int_sql('term')}) % 5 = 0),
-            vl AS (SELECT term, list_transform(
-                       range(1, length(term) + 1),
-                       i -> substr(term, 1, i - 1)
-                            || substr(term, i + 1)) AS d1
-                   FROM v
-                   WHERE length(term) <= 24 AND length(term) > 0),
-            keys AS (SELECT DISTINCT term, k
-                     FROM vl, UNNEST(list_distinct(list_concat(
-                          list_prepend(term, d1),
-                          flatten(list_transform(d1,
-                              d -> list_transform(
-                                  range(1, length(d) + 1),
-                                  j -> substr(d, 1, j - 1)
-                                       || substr(d, j + 1))))))) AS u(k)),
-            cand AS (SELECT DISTINCT a.term AS term_a,
-                            b.term AS term_b
-                     FROM keys a JOIN keys b
-                       ON b.k = a.k AND a.term < b.term)
-            SELECT term_a, term_b,
-                   CAST(levenshtein(term_a, term_b) AS INT) AS dist
-            FROM cand
-            WHERE levenshtein(term_a, term_b) <= 2
-        """,
         # q171: sorted-neighborhood blocking — ONE global row_number
         # window (the oracle affords what the engine must not)
         "q171_sorted_neighborhood": """
@@ -7420,36 +6341,12 @@ def oracle_sql() -> dict[str, str]:
                      md5('new:' || CAST(doc_id AS VARCHAR)), 2, NULL
               FROM b WHERE ad)
         """,
-        "q207_interval_join": f"""
-            WITH win AS (
-              SELECT w AS window_id, 8035 + w * 50 AS ws,
-                     8035 + w * 50 + 80 AS we
-              FROM (SELECT unnest(range(0, {IJ_WINDOWS})) AS w)),
-            li AS (
-              SELECT (CAST(l_shipdate AS DATE) - DATE '1970-01-01')
-                         AS ls,
-                     (CAST(l_shipdate AS DATE) - DATE '1970-01-01')
-                     + ({md5_int_sql(
-                         "CAST(l_orderkey AS VARCHAR) || '#' || "
-                         "CAST(l_linenumber AS VARCHAR)",
-                         salt="ijt:")} % 60) + 1 AS le,
-                     CAST(l_quantity AS BIGINT) AS qty
-              FROM lineitem)
-            SELECT CAST(window_id AS BIGINT) AS window_id,
-                   CAST(count(*) AS BIGINT) AS n_lines,
-                   CAST(sum(qty) AS BIGINT) AS sum_qty
-            FROM li JOIN win ON li.ls <= win.we AND win.ws <= li.le
-            GROUP BY 1
-        """,
         "q209_textrank": _textrank_oracle_sql(iters=3, n_stop=8),
         "q210_zorder_layout": _zorder_oracle_sql(),
         "q212_spam_mass": _spam_mass_oracle_sql(),
         "q213_rand_ari": _ARI_ORACLE_SQL,
         "q220_reshard": _reshard_oracle_sql(),
-        "q221_postings_gaps": _POSTINGS_GAP_ORACLE_SQL,
-        "q222_class_terms": _CLASS_TERMS_ORACLE_SQL,
         "q223_neyman": _neyman_oracle_sql(),
-        "q224_seasonal_outliers": _SEASONAL_ORACLE_SQL,
         "q228_fresh_rank": _fresh_rank_oracle_sql(),
         "q188_merge_matching": matching_sql,
         # q192: suffix-prefix boundary join over the injected stitch
@@ -7475,99 +6372,6 @@ def oracle_sql() -> dict[str, str]:
             FROM sfx JOIN pfx USING (boundary)
             WHERE doc_a <> doc_b
             ORDER BY 1, 2
-        """,
-        # q189: integer CUSUM |T*S_t - t*S_T| over per-type daily
-        # counts, packed-integer argmax (2^20 pack, earliest-split
-        # tie-break) — mirrors cusum_changepoint bit for bit.
-        "q189_cusum": """
-            WITH daily AS (SELECT event_type AS key,
-                                  strftime(ts, '%Y-%m-%d') AS day,
-                                  count(*) AS cnt
-                           FROM events GROUP BY 1, 2),
-            d AS (SELECT key, day, cnt,
-                         row_number() OVER
-                           (PARTITION BY key ORDER BY day) AS t,
-                         sum(cnt) OVER
-                           (PARTITION BY key ORDER BY day) AS s_t,
-                         sum(cnt) OVER (PARTITION BY key) AS s_total,
-                         count(*) OVER (PARTITION BY key) AS n_days
-                  FROM daily),
-            c AS (SELECT key, day, t, n_days, s_total,
-                         abs(n_days * s_t - t * s_total) AS c_t
-                  FROM d),
-            best AS (SELECT key,
-                            max(c_t * 1048576 + (1048575 - t)) AS pk,
-                            max(n_days) AS n_days,
-                            max(s_total) AS total
-                     FROM c GROUP BY 1),
-            s AS (SELECT key, n_days, total,
-                         pk // 1048576 AS cusum_stat,
-                         1048575 - (pk % 1048576) AS t_split
-                  FROM best)
-            SELECT s.key AS event_type,
-                   CAST(s.n_days AS BIGINT) AS n_days,
-                   CAST(s.total AS BIGINT) AS total,
-                   c.day AS change_day,
-                   CAST(s.t_split AS BIGINT) AS t_split,
-                   CAST(s.cusum_stat AS BIGINT) AS cusum_stat
-            FROM s JOIN c ON c.key = s.key AND c.t = s.t_split
-            ORDER BY 1
-        """,
-        # q178: first-touch funnel — NAIVE timestamp comparisons +
-        # interval addition (zone-free, exact to the microsecond in
-        # both engines; epoch conversion would route through Spark's
-        # session timezone on ntz input — measured trap)
-        "q178_funnel": """
-            WITH s1 AS (SELECT user_id AS u, min(ts) AS t
-                        FROM events WHERE event_type = 'view'
-                        GROUP BY 1),
-            s2 AS (SELECT e.user_id AS u, min(e.ts) AS t
-                   FROM events e JOIN s1 ON s1.u = e.user_id
-                   WHERE e.event_type = 'click'
-                     AND e.ts > s1.t
-                     AND e.ts <= s1.t + INTERVAL 86400 SECOND
-                   GROUP BY 1),
-            s3 AS (SELECT e.user_id AS u, min(e.ts) AS t
-                   FROM events e JOIN s2 ON s2.u = e.user_id
-                   WHERE e.event_type = 'purchase'
-                     AND e.ts > s2.t
-                     AND e.ts <= s2.t + INTERVAL 259200 SECOND
-                   GROUP BY 1),
-            n AS (SELECT 0 AS step_idx, 'all' AS step,
-                         count(DISTINCT user_id) AS n_users FROM events
-                  UNION ALL SELECT 1, 'view', count(*) FROM s1
-                  UNION ALL SELECT 2, 'click', count(*) FROM s2
-                  UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-            SELECT CAST(c.step_idx AS INT) AS step_idx, c.step,
-                   CAST(c.n_users AS BIGINT) AS n_users,
-                   CAST((c.n_users * 1000000) // greatest(p.n_users, 1)
-                        AS BIGINT) AS conv_prev_ppm,
-                   CAST((c.n_users * 1000000) // greatest(f.n_users, 1)
-                        AS BIGINT) AS conv_first_ppm
-            FROM n c JOIN n p ON p.step_idx = c.step_idx - 1
-            CROSS JOIN (SELECT n_users FROM n WHERE step_idx = 1) f
-            WHERE c.step_idx >= 1
-        """,
-        # q179: cohort retention — naive-date week index (zone-free),
-        # integer-ppm retention vs the cohort's offset-0 size
-        "q179_cohort_retention": """
-            WITH p AS (SELECT user_id AS u,
-                              date_diff('day', DATE '1970-01-01',
-                                        CAST(ts AS DATE)) // 7 AS p
-                       FROM events),
-            f AS (SELECT u, min(p) AS cohort FROM p GROUP BY 1),
-            d AS (SELECT DISTINCT u, p FROM p),
-            act AS (SELECT f.cohort, d.p - f.cohort AS period_offset,
-                           count(DISTINCT d.u) AS n_active
-                    FROM d JOIN f ON f.u = d.u GROUP BY 1, 2),
-            sz AS (SELECT cohort, count(*) AS cohort_n FROM f
-                   GROUP BY 1)
-            SELECT CAST(a.cohort AS BIGINT) AS cohort_period,
-                   CAST(a.period_offset AS BIGINT) AS period_offset,
-                   CAST(a.n_active AS BIGINT) AS n_active,
-                   CAST((a.n_active * 1000000) // s.cohort_n
-                        AS BIGINT) AS retention_ppm
-            FROM act a JOIN sz s ON s.cohort = a.cohort
         """,
         # q180: embedding-level decontamination — floor-clip int8
         # quantization, cosine >= 3/10 by integer
@@ -7599,25 +6403,6 @@ def oracle_sql() -> dict[str, str]:
             FROM pairs
             WHERE dot > 0 AND dot * dot * 100 >= 9 * cn2 * bn2
             GROUP BY 1
-        """,
-        # q181: first-order Markov transitions — per-user lead with
-        # the event_id tiebreaker (part of the contract), integer-ppm
-        # row normalization
-        "q181_event_transitions": """
-            WITH o AS (SELECT event_type AS src_type,
-                              lead(event_type) OVER (
-                                  PARTITION BY user_id
-                                  ORDER BY ts, event_id) AS dst_type
-                       FROM events),
-            pairs AS (SELECT src_type, dst_type, count(*) AS n
-                      FROM o WHERE dst_type IS NOT NULL
-                      GROUP BY 1, 2),
-            tot AS (SELECT src_type, sum(n) AS tot FROM pairs
-                    GROUP BY 1)
-            SELECT p.src_type, p.dst_type,
-                   CAST(p.n AS BIGINT) AS n,
-                   CAST((p.n * 1000000) // t.tot AS BIGINT) AS prob_ppm
-            FROM pairs p JOIN tot t ON t.src_type = p.src_type
         """,
         # q184: deterministic Poisson(1) weights (md5 -> CDF ppm
         # ladder), B=200 replicate means, percentile ranks 5/195
@@ -7713,46 +6498,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(min(id) OVER (PARTITION BY id % 8) AS BIGINT)
                        AS comp
             FROM verts
-        """,
-        # q166: histogram-cumulative median/MAD twin
-        "q166_robust_outliers": """
-            WITH hist AS (SELECT source AS g,
-                                 CAST(n_chars AS BIGINT) AS v,
-                                 count(*) AS c
-                          FROM documents GROUP BY 1, 2),
-            tot AS (SELECT g, sum(c) AS n FROM hist GROUP BY 1),
-            cum AS (SELECT g, v, c,
-                           sum(c) OVER (PARTITION BY g ORDER BY v)
-                               AS cum
-                    FROM hist),
-            med AS (SELECT cum.g, min(v) AS med
-                    FROM cum JOIN tot USING (g)
-                    WHERE cum >= (n + 1) // 2 GROUP BY 1),
-            dh AS (SELECT h.g, abs(v - med) AS d, sum(c) AS c
-                   FROM hist h JOIN med USING (g) GROUP BY 1, 2),
-            cumd AS (SELECT g, d, c,
-                            sum(c) OVER (PARTITION BY g ORDER BY d)
-                                AS cum
-                     FROM dh),
-            mad AS (SELECT cumd.g, min(d) AS mad
-                    FROM cumd JOIN tot USING (g)
-                    WHERE cum >= (n + 1) // 2 GROUP BY 1),
-            fl AS (SELECT h.g,
-                          sum(CASE WHEN (CASE WHEN mad.mad > 0
-                                   THEN abs(h.v - med.med) * 1000
-                                        > 4448 * mad.mad
-                                   ELSE abs(h.v - med.med) > 0 END)
-                              THEN c ELSE 0 END) AS n_out
-                   FROM hist h JOIN med USING (g) JOIN mad USING (g)
-                   GROUP BY 1)
-            SELECT tot.g AS source, CAST(n AS BIGINT) AS n_docs,
-                   CAST(med AS BIGINT) AS median,
-                   CAST(mad.mad AS BIGINT) AS mad,
-                   CAST(coalesce(n_out, 0) AS BIGINT) AS n_outliers,
-                   CAST((coalesce(n_out, 0) * 1000000) // n AS BIGINT)
-                       AS outlier_ppm
-            FROM tot JOIN med USING (g) JOIN mad USING (g)
-            LEFT JOIN fl USING (g)
         """,
         # q165: the same arithmetic as epoch_allocation, step by step
         "q165_epoch_allocation": """
@@ -7908,9 +6653,6 @@ def oracle_sql() -> dict[str, str]:
         "q190_betweenness": _betweenness_oracle_sql(radius=3),
         "q193_coverage_selection": _coverage_oracle_sql(COVER_K),
         "q195_url_templates": _url_templates_oracle_sql(),
-        # q196: same derived-stoplist + islands-window recurrence;
-        # DuckDB windows default to RANGE-to-current-row, identical
-        # to Spark's rowsBetween here because pos is unique per doc
         "q203_jsonl_ledger": f"""
             WITH b AS (
               SELECT doc_id, text, doc_id % {JSONL_FILES} AS shard,
@@ -7968,86 +6710,6 @@ def oracle_sql() -> dict[str, str]:
                 AND q.ldiv_ppm >= p.ldiv_ppm
                 AND (q.n_tokens > p.n_tokens
                      OR q.ldiv_ppm > p.ldiv_ppm))
-        """,
-        "q199_k_anonymity": f"""
-            WITH g AS (
-              SELECT source, lang, n_chars // 512 AS size_bucket,
-                     count(*) AS n,
-                     count(DISTINCT
-                           ({md5_int_sql("text", salt="sens:")} % 7))
-                         AS s
-              FROM documents GROUP BY 1, 2, 3),
-            one AS (
-              SELECT sum(n) AS tot,
-                     sum(CASE WHEN n < 2 THEN 1 ELSE 0 END) AS gk2,
-                     sum(CASE WHEN n < 2 THEN n ELSE 0 END) AS rk2,
-                     sum(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS gk5,
-                     sum(CASE WHEN n < 5 THEN n ELSE 0 END) AS rk5,
-                     sum(CASE WHEN n < 10 THEN 1 ELSE 0 END) AS gk10,
-                     sum(CASE WHEN n < 10 THEN n ELSE 0 END) AS rk10,
-                     sum(CASE WHEN s < 2 THEN 1 ELSE 0 END) AS gl2,
-                     sum(CASE WHEN s < 2 THEN n ELSE 0 END) AS rl2,
-                     sum(CASE WHEN s < 3 THEN 1 ELSE 0 END) AS gl3,
-                     sum(CASE WHEN s < 3 THEN n ELSE 0 END) AS rl3
-              FROM g)
-            SELECT metric, threshold, groups_flagged, rows_flagged,
-                   CAST((rows_flagged * 1000000) // tot AS BIGINT)
-                       AS rows_ppm
-            FROM (
-              SELECT 'k_anonymity' AS metric,
-                     CAST(2 AS BIGINT) AS threshold,
-                     CAST(gk2 AS BIGINT) AS groups_flagged,
-                     CAST(rk2 AS BIGINT) AS rows_flagged, tot FROM one
-              UNION ALL SELECT 'k_anonymity', 5, gk5, rk5, tot FROM one
-              UNION ALL SELECT 'k_anonymity', 10, gk10, rk10, tot
-                FROM one
-              UNION ALL SELECT 'l_diversity', 2, gl2, rl2, tot FROM one
-              UNION ALL SELECT 'l_diversity', 3, gl3, rl3, tot FROM one)
-        """,
-        "q196_rake": """
-            WITH t AS (SELECT doc_id,
-                              list_filter(regexp_split_to_array(
-                                  lower(trim(text)), '\\s+'),
-                                  s -> s <> '') AS w
-                       FROM documents),
-            px AS (SELECT doc_id, w,
-                          unnest(range(1, len(w) + 1)) AS pos
-                   FROM t),
-            tok AS MATERIALIZED (
-                SELECT doc_id, pos, w[pos] AS word FROM px),
-            stops AS MATERIALIZED (
-                SELECT word FROM (
-                  SELECT word, count(DISTINCT doc_id) AS df
-                  FROM tok GROUP BY 1)
-                ORDER BY df DESC, word LIMIT 20),
-            m0 AS (SELECT doc_id, pos, word,
-                          sum(CASE WHEN word IN (SELECT word
-                                                 FROM stops)
-                              THEN 1 ELSE 0 END)
-                              OVER (PARTITION BY doc_id
-                                    ORDER BY pos) AS g
-                   FROM tok),
-            m2 AS MATERIALIZED (
-                SELECT doc_id, pos, word, g,
-                       count(*) OVER (PARTITION BY doc_id, g) AS plen
-                FROM m0
-                WHERE word NOT IN (SELECT word FROM stops)
-                QUALIFY plen <= 4),
-            ws AS MATERIALIZED (
-                SELECT word,
-                       (sum(plen) * 1000000) // count(*) AS score_ppm
-                FROM m2 GROUP BY 1),
-            ph AS (SELECT m2.doc_id, m2.g,
-                          string_agg(m2.word, ' '
-                                     ORDER BY m2.pos) AS phrase,
-                          max(m2.plen) AS plen,
-                          sum(ws.score_ppm) AS score_ppm
-                   FROM m2 JOIN ws USING (word)
-                   GROUP BY 1, 2)
-            SELECT phrase, CAST(count(*) AS BIGINT) AS n_occ,
-                   CAST(max(plen) AS BIGINT) AS plen,
-                   CAST(max(score_ppm) AS BIGINT) AS score_ppm
-            FROM ph GROUP BY 1 HAVING count(*) >= 2
         """,
         "q159_warm_pagerank": _warm_pr_oracle_sql(old_iters=2),
         "q161_wl_classes": _wl_oracle_sql(iters=2),
@@ -8503,17 +7165,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(sum(doc_id) AS BIGINT) AS sum_ids
             FROM r WHERE rk * 4 < n GROUP BY 1
         """,
-        "q57_source_profile": f"""
-            SELECT source,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(count(DISTINCT {fp_sql}) AS BIGINT) AS n_unique,
-                   CAST(sum({qual_sql}) AS BIGINT) AS sum_quality,
-                   CAST(sum({tok_sql}) AS BIGINT) AS sum_tokens,
-                   CAST(count(*) - count(DISTINCT {fp_sql}) AS BIGINT)
-                       AS n_dup
-            FROM documents
-            GROUP BY 1
-        """,
         # wedge-join neighbor Jaccard over the q49 bipartite graph;
         # the center-degree cap (256) is mirrored from the Spark side
         "q58_neighbor_jaccard": """
@@ -8545,36 +7196,6 @@ def oracle_sql() -> dict[str, str]:
             FROM cm JOIN deg d1 ON d1.node = cm.n1
                     JOIN deg d2 ON d2.node = cm.n2
             ORDER BY jac_ppm DESC, n1, n2 LIMIT 100
-        """,
-        # integer-cleared BM25 (k1=6/5, b=3/4, bit-length idf):
-        # contrib = idf*tf*44000*avgdl // (20*avgdl*tf + 6*avgdl + 18*dl)
-        "q59_bm25": f"""
-            WITH t AS (SELECT doc_id,
-                              regexp_split_to_array(lower(trim(text)),
-                                                    '\\s+') AS w
-                       FROM documents),
-            ctx AS (SELECT doc_id, unnest(w) AS word FROM t),
-            c2 AS (SELECT * FROM ctx WHERE word <> ''),
-            dl AS (SELECT doc_id, count(*) AS dl FROM c2 GROUP BY 1),
-            tot AS (SELECT sum(dl) AS tot, count(*) AS n_docs FROM dl),
-            qt AS (SELECT doc_id, word FROM c2
-                   WHERE word IN ({", ".join(f"'{t}'" for t in BM25_TERMS)})),
-            tf AS (SELECT doc_id, word, count(*) AS tf FROM qt GROUP BY 1, 2),
-            dfq AS (SELECT word, count(DISTINCT doc_id) AS df FROM qt
-                    GROUP BY 1),
-            s AS (SELECT tf.doc_id,
-                         (length(bin(CAST(tot.n_docs // dfq.df AS BIGINT)))
-                          * tf.tf * 44000 * (tot.tot // tot.n_docs))
-                         // (20 * (tot.tot // tot.n_docs) * tf.tf
-                             + 6 * (tot.tot // tot.n_docs) + 18 * dl.dl)
-                             AS contrib
-                  FROM tf JOIN dfq USING (word) JOIN dl USING (doc_id)
-                  CROSS JOIN tot)
-            SELECT CAST(doc_id AS BIGINT) AS doc_id,
-                   CAST(count(*) AS INT) AS n_terms,
-                   CAST(sum(contrib) AS BIGINT) AS bm25_milli
-            FROM s GROUP BY 1
-            ORDER BY bm25_milli DESC, doc_id LIMIT 20
         """,
         # concat-and-chunk packing: same hash bucket, same id-order
         # running sum, same integer div/mod slots

@@ -275,7 +275,7 @@ def suffix_prefix_stitch(df: DataFrame, text_col: str, id_col: str,
     volume is bounded by boundary-key collisions, not corpus size
     squared; natural-language k-grams at k>=4 are near-unique, and a
     pathological repeated boundary (boilerplate banner) surfaces as
-    a hot key to feed the template_prefixes audit, not a crash.
+    a hot key, not a crash.
     Docs shorter than 2k tokens are excluded (their prefix and
     suffix would overlap, which stitching semantics do not allow).
 

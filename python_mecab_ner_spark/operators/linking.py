@@ -352,15 +352,14 @@ def brute_link(unlinked: DataFrame, context_df: DataFrame,
 
 
 def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
-                  context_df: DataFrame | None = None,
-                  neighbor_stats_df: DataFrame | None = None,
-                  core_stats_df: DataFrame | None = None) -> DataFrame:
+                  context_df: DataFrame, neighbor_stats_df: DataFrame,
+                  core_stats_df: DataFrame) -> DataFrame:
     """mentions (url, start, end, surface, large, small) ->
     + (entity_id, link_level, link_score); unlinkable mentions keep
     entity_id NULL at level LEVEL_UNLINKED.
 
-    Without context/stats the ladder is levels 0-2 (+ NULL); with them
-    the full 6-level ladder runs and learned evidence disambiguates
+    The full 6-level ladder runs over the context tokens and the
+    learned neighbor/core stats, and learned evidence disambiguates
     multi-candidate spans inside the final rank-1 window.  That window
     is ordered by the reference's delete_duplicate_value policy: the
     +-3 capped-product neighbor score (mecab_category_storage.py:39-63),
@@ -435,67 +434,60 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
     # and unpersist() on a derived frame is a silent no-op (the round-2
     # working-set leak).
     cand_ws = l0.unionByName(l1).unionByName(l2).persist()
-    candidates = cand_ws
-    l3_ws = None
-    with_stats = (context_df is not None and neighbor_stats_df is not None)
 
-    if with_stats:
-        # level 3 NEIGHBOR candidates: only for spans no earlier level
-        # touched — jamo-suffix aliases across categories; the floor
-        # filter below rejects candidates without neighbor evidence.
-        # The suffix match is keyed on the last-2-jamo equi-key so the
-        # join plans as a broadcast HASH join (a raw endswith condition
-        # would be a nested loop: O(|unlinked| x |entities|)
-        # comparisons, which dies when both grow).
-        un1 = (m.join(cand_ws.select(*SPAN_KEY).distinct(),
-                      SPAN_KEY, "left_anti"))
-        ent_sfx = ent.withColumn("_sfx", F.substring(F.col("e_jamo"), -2, 2))
-        l3_ws = (un1.withColumn("_sfx", F.substring(F.col("m_jamo"), -2, 2))
-                 .join(F.broadcast(ent_sfx), "_sfx")
-                 .where((F.length(F.col("e_jamo")) >= 2)
-                        & (F.col("m_jamo") != F.col("e_jamo"))
-                        & F.col("m_jamo").endswith(F.col("e_jamo")))
-                 .select(*MENTION_COLS, F.col("e_id").alias("entity_id"),
-                         F.lit(3).alias("link_level"),
-                         F.lit(0).cast("bigint").alias("link_score"),
-                         F.col("e_large").alias("n_label"))
-                 .persist())  # anti-join + suffix join run once, not 3x
-        candidates = cand_ws.unionByName(l3_ws)
+    # level 3 NEIGHBOR candidates: only for spans no earlier level
+    # touched — jamo-suffix aliases across categories; the floor
+    # filter below rejects candidates without neighbor evidence.
+    # The suffix match is keyed on the last-2-jamo equi-key so the
+    # join plans as a broadcast HASH join (a raw endswith condition
+    # would be a nested loop: O(|unlinked| x |entities|)
+    # comparisons, which dies when both grow).
+    un1 = (m.join(cand_ws.select(*SPAN_KEY).distinct(),
+                  SPAN_KEY, "left_anti"))
+    ent_sfx = ent.withColumn("_sfx", F.substring(F.col("e_jamo"), -2, 2))
+    l3_ws = (un1.withColumn("_sfx", F.substring(F.col("m_jamo"), -2, 2))
+             .join(F.broadcast(ent_sfx), "_sfx")
+             .where((F.length(F.col("e_jamo")) >= 2)
+                    & (F.col("m_jamo") != F.col("e_jamo"))
+                    & F.col("m_jamo").endswith(F.col("e_jamo")))
+             .select(*MENTION_COLS, F.col("e_id").alias("entity_id"),
+                     F.lit(3).alias("link_level"),
+                     F.lit(0).cast("bigint").alias("link_score"),
+                     F.col("e_large").alias("n_label"))
+             .persist())  # anti-join + suffix join run once, not 3x
+    candidates = cand_ws.unionByName(l3_ws)
 
-        # Evidence scoring is only DECISIVE for (a) level-3 candidates
-        # (the n_score > 1 acceptance gate) and (b) spans whose
-        # candidates carry MORE THAN ONE label — scores are keyed by
-        # (span, label), so on a single-label span every row shares
-        # one score and the rank-1 ordering is unchanged by it.  Most
-        # web-corpus spans are single-label exact matches, so scoring
-        # ONLY the ambiguous/level-3 subset removes the bulk of the
-        # window-token join and the score join-back at identical
-        # output (the pinned kg link-level histogram is the regression
-        # gate).  The label-count window shuffles by SPAN_KEY — the
-        # same key the final rank window uses.
-        wspan = Window.partitionBy(*SPAN_KEY)
-        cand_n = candidates.withColumn(
-            "_nl", F.size(F.collect_set("n_label").over(wspan)))
-        need = (cand_n.where((F.col("_nl") > 1)
-                             | (F.col("link_level") == 3)).drop("_nl"))
-        solo = (cand_n.where((F.col("_nl") == 1)
-                             & (F.col("link_level") != 3)).drop("_nl")
-                .withColumn("n_score", F.lit(1).cast("bigint")))
-        # ONE evidence-scoring pass over the decisive subset: scores
-        # the level-3 evidence floor AND the in-window homonym
-        # disambiguation (reference delete_duplicate_value)
-        scored = (add_neighbor_scores(need, context_df, neighbor_stats_df)
-                  .where((F.col("link_level") != 3)
-                         | (F.col("n_score") > 1))
-                  .withColumn(
-                      "link_score",
-                      F.when(F.col("link_level") == 3,
-                             F.col("n_score"))
-                      .otherwise(F.col("link_score"))))
-        candidates = scored.unionByName(solo)
-    else:
-        candidates = candidates.withColumn("n_score",
-                                           F.lit(1).cast("bigint"))
+    # Evidence scoring is only DECISIVE for (a) level-3 candidates
+    # (the n_score > 1 acceptance gate) and (b) spans whose
+    # candidates carry MORE THAN ONE label — scores are keyed by
+    # (span, label), so on a single-label span every row shares
+    # one score and the rank-1 ordering is unchanged by it.  Most
+    # web-corpus spans are single-label exact matches, so scoring
+    # ONLY the ambiguous/level-3 subset removes the bulk of the
+    # window-token join and the score join-back at identical
+    # output (the pinned kg link-level histogram is the regression
+    # gate).  The label-count window shuffles by SPAN_KEY — the
+    # same key the final rank window uses.
+    wspan = Window.partitionBy(*SPAN_KEY)
+    cand_n = candidates.withColumn(
+        "_nl", F.size(F.collect_set("n_label").over(wspan)))
+    need = (cand_n.where((F.col("_nl") > 1)
+                         | (F.col("link_level") == 3)).drop("_nl"))
+    solo = (cand_n.where((F.col("_nl") == 1)
+                         & (F.col("link_level") != 3)).drop("_nl")
+            .withColumn("n_score", F.lit(1).cast("bigint")))
+    # ONE evidence-scoring pass over the decisive subset: scores
+    # the level-3 evidence floor AND the in-window homonym
+    # disambiguation (reference delete_duplicate_value)
+    scored = (add_neighbor_scores(need, context_df, neighbor_stats_df)
+              .where((F.col("link_level") != 3)
+                     | (F.col("n_score") > 1))
+              .withColumn(
+                  "link_score",
+                  F.when(F.col("link_level") == 3,
+                         F.col("n_score"))
+                  .otherwise(F.col("link_score"))))
+    candidates = scored.unionByName(solo)
 
     # rank-1 per mention: best level, then the neighbor evidence (the
     # reference's disambiguation), then level score, stable id
@@ -506,32 +498,21 @@ def link_mentions(mentions_df: DataFrame, entities_df: DataFrame,
             .filter("_rn = 1").drop("_rn", "n_score", "n_label")
             .persist())
 
-    linked_parts = [best.select(OUT_COLS)]
+    linked = best.select(OUT_COLS)
     rem_ws = (mentions_df.select(*MENTION_COLS)
               .join(best.select(*SPAN_KEY).distinct(), SPAN_KEY,
                     "left_anti").persist())
-    remainder = rem_ws
-
-    if with_stats and core_stats_df is not None:
-        l4 = brute_link(remainder, context_df, core_stats_df)
-        linked_parts.append(l4.select(OUT_COLS))
-        remainder = remainder.join(l4.select(*SPAN_KEY).distinct(),
-                                   SPAN_KEY, "left_anti")
-
-    unlinked = (remainder
+    l4 = brute_link(rem_ws, context_df, core_stats_df)
+    brute = l4.select(OUT_COLS)
+    unlinked = (rem_ws.join(l4.select(*SPAN_KEY).distinct(),
+                            SPAN_KEY, "left_anti")
                 .withColumn("entity_id", F.lit(None).cast("bigint"))
                 .withColumn("link_level", F.lit(LEVEL_UNLINKED))
                 .withColumn("link_score", F.lit(0).cast("bigint")))
-    linked_parts.append(unlinked.select(OUT_COLS))
-
-    out = linked_parts[0]
-    for p in linked_parts[1:]:
-        out = out.unionByName(p)
+    out = linked.unionByName(brute).unionByName(unlinked.select(OUT_COLS))
 
     def _release():
         for df in (ent, m, cand_ws, l3_ws, best, rem_ws):
-            if df is None:
-                continue
             try:
                 df.unpersist()
             except Exception:

@@ -1,282 +1,17 @@
-"""Corpus profiling: per-source reliability aggregates.
+"""Corpus profiling: audit sheets that curation and release gates read,
+each one combinable aggregate over a bounded dimension:
 
-Web-scale curation pipelines (C4, RefinedWeb, FineWeb) make KEEP/DROP/
-DOWNWEIGHT decisions per source (domain, crawl, feed) before touching
-individual documents — a source whose pages are mostly mutual
-duplicates or low-quality boilerplate is dropped wholesale.  This
-operator computes the per-source evidence for that decision.
+- encoding_audit: per-source mojibake and control-character density;
+- ngram_diversity: per-source distinct-n share;
+- term_salience: the most salient term of each document;
+- k_anonymity_audit: re-identification risk of quasi-identifier
+  groups.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.text import fingerprint, quality_score, token_count
-
-
-def source_reliability(df: DataFrame, text_col: str, id_col: str,
-                       source_col: str) -> DataFrame:
-    """Per-source: document count, distinct-content count (exact-dup
-    fingerprint), duplicate count, total quality score, and total
-    token count.  Downstream: dup_rate = n_dup/n_docs and mean
-    quality = sum_quality/n_docs (kept as exact integer sums here so
-    the oracle hash-matches; the ratios are presentation-layer).
-
-    Scale shape: ONE aggregate keyed by source with a partial-
-    distinct fingerprint count (two-phase: map-side distinct within
-    (source, fp), then merge) — sources are a bounded dimension
-    (domains), so the result is tiny; the only corpus-wide exchange
-    is the aggregate's own shuffle.  A skewed mega-source is handled
-    by AQE skew splitting since every other term is map-side
-    combinable."""
-    enriched = df.select(
-        F.col(source_col).alias("source"),
-        fingerprint(F.col(text_col)).alias("_fp"),
-        quality_score(F.col(text_col)).alias("_q"),
-        token_count(F.col(text_col)).alias("_t"))
-    return (enriched.groupBy("source")
-            .agg(F.count("*").cast("bigint").alias("n_docs"),
-                 F.countDistinct("_fp").cast("bigint").alias("n_unique"),
-                 F.sum("_q").cast("bigint").alias("sum_quality"),
-                 F.sum("_t").cast("bigint").alias("sum_tokens"))
-            .withColumn("n_dup",
-                        (F.col("n_docs") - F.col("n_unique"))
-                        .cast("bigint")))
-
-
-def histogram_deciles(df: DataFrame, value_col: str, by: str,
-                      bin_width: int = 256, n_q: int = 10) -> DataFrame:
-    """Per-group quantiles from a FIXED-BIN integer histogram — the
-    t-digest/approx_percentile stand-in whose result is exactly
-    reproducible on any engine: bin = value div bin_width, and the
-    q-th quantile (q = 1..n_q-1) is the lower edge of the first bin
-    whose cumulative count reaches q/n_q of the group:
-
-        quantile(q) = bin_width * min{ b : cum(b) * n_q >= q * total }
-
-    Resolution is the bin width (documented approximation — exact
-    quantiles need a per-group sort; approx_percentile is tighter but
-    sketch-dependent and not cross-engine stable).  Returns
-    (by, q, value_lo), all integers.
-
-    Scale shape: ONE map-side-combinable (group, bin) count — the
-    histogram is the only corpus-pass state and its size is bounded
-    by groups x (max_value/bin_width), independent of row count; the
-    cumulative pass and quantile argmin run over that bounded
-    histogram (a dimension-sized window), not the data."""
-    hist = (df.select(F.col(by),
-                      F.expr(f"{value_col} div {bin_width}").alias("b"))
-            .groupBy(by, "b").agg(F.count("*").alias("c")))
-    w = Window.partitionBy(by).orderBy("b") \
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tw = Window.partitionBy(by)
-    cum = (hist.withColumn("cum", F.sum("c").over(w))
-           .withColumn("tot", F.sum("c").over(tw)))
-    qs = F.explode(F.array(*[F.lit(q) for q in range(1, n_q)])).alias("q")
-    return (cum.select(by, "b", "cum", "tot", qs)
-            .where(F.col("cum") * n_q >= F.col("q") * F.col("tot"))
-            .groupBy(by, "q")
-            .agg((F.min("b") * bin_width).cast("bigint").alias("value_lo"))
-            .select(by, F.col("q").cast("int").alias("q"), "value_lo"))
-
-
-def vocab_drift(df: DataFrame, text_col: str, epoch_col: str,
-                top_k: int = 50) -> DataFrame:
-    """Distribution-shift detector between two corpus epochs (crawl
-    snapshots, time buckets, pre/post-filter versions): per term,
-    the cross-product deviation |o0*n1 - o1*n0| where o_e is the
-    term's count in epoch e and n_e the epoch's total token mass —
-    the exact-integer numerator of the 2x2 chi-square / two-proportion
-    z test, zero iff the term's rate is identical in both epochs.
-    Ranking by it orders terms by absolute rate imbalance scaled by
-    both corpus masses — the terms a crawl-drift dashboard surfaces
-    ("this month's crawl is suddenly full of X").  Exact bigints, no
-    logs, no floats: bit-identical across engines.
-
-    Scale shape: one token explode, ONE map-side-combinable aggregate
-    keyed by term (two conditional sums), a 1-row total aggregate
-    cross-joined back (broadcast of a scalar), and a top-k
-    TakeOrderedAndProject — no self-join, no window.  epoch_col must
-    be 0/1."""
-    t = df.select(F.col(epoch_col).alias("epoch"),
-                  F.explode(F.split(F.regexp_replace(
-                      F.lower(F.trim(F.col(text_col))), r"\s+", " "),
-                      " ")).alias("term"))
-    t = t.where(F.col("term") != "")
-    counts = (t.groupBy("term")
-              .agg(F.sum(F.when(F.col("epoch") == 0, 1).otherwise(0))
-                   .cast("bigint").alias("o0"),
-                   F.sum(F.when(F.col("epoch") == 1, 1).otherwise(0))
-                   .cast("bigint").alias("o1")))
-    totals = counts.agg(F.sum("o0").alias("n0"), F.sum("o1").alias("n1"))
-    return (counts.crossJoin(F.broadcast(totals))
-            .select("term", "o0", "o1",
-                    F.abs(F.col("o0") * F.col("n1")
-                          - F.col("o1") * F.col("n0"))
-                    .cast("bigint").alias("drift"))
-            .orderBy(F.desc("drift"), F.asc("term"))
-            .limit(top_k))
-
-
-def vocab_head_coverage(df: DataFrame, text_col: str,
-                        ks: tuple[int, ...] = (1, 10, 100, 1000)
-                        ) -> DataFrame:
-    """Zipf head-coverage curve: what fraction of the corpus' token
-    mass the top-k vocabulary covers, at each k — the dataset-card
-    number behind tokenizer-vocab sizing and stopword-list cut-offs
-    (a corpus whose top-1000 terms carry 80% of tokens compresses /
-    tokenizes very differently from a flat one).
-
-    Rank order is (count desc, term asc) — fully deterministic under
-    ties.  coverage_ppm = cumulative count * 1e6 div total tokens,
-    exact integers end to end.
-
-    Returns one row per k in ks: (k, kth_term, kth_cnt, cum_cnt,
-    total_cnt, coverage_ppm).
-
-    Scale shape: one token explode + ONE map-side-combinable term
-    aggregate; the global ordering never sorts the vocabulary — a
-    TakeOrderedAndProject keeps only max(ks) rows (driver-sized), and
-    the cumulative window runs over THAT max(ks)-row table only.  The
-    token total is a 1-row aggregate broadcast back.  No corpus-wide
-    sort or window at any k."""
-    max_k = max(ks)
-    t = (df.select(F.explode(F.split(F.regexp_replace(
-             F.lower(F.trim(F.col(text_col))), r"\s+", " "),
-             " ")).alias("term"))
-         .where(F.col("term") != ""))
-    counts = t.groupBy("term").agg(F.count("*").cast("bigint")
-                                   .alias("cnt"))
-    total = counts.agg(F.sum("cnt").cast("bigint").alias("total_cnt"))
-    top = (counts.orderBy(F.desc("cnt"), F.asc("term")).limit(max_k))
-    w = (Window.orderBy(F.desc("cnt"), F.asc("term"))
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    ranked = (top.withColumn("cum_cnt", F.sum("cnt").over(w)
-                             .cast("bigint"))
-              .withColumn("k", F.row_number().over(
-                  Window.orderBy(F.desc("cnt"), F.asc("term")))))
-    return (ranked.where(F.col("k").isin(*[int(k) for k in ks]))
-            .crossJoin(F.broadcast(total))
-            .select(F.col("k").cast("int").alias("k"),
-                    F.col("term").alias("kth_term"),
-                    F.col("cnt").cast("bigint").alias("kth_cnt"),
-                    "cum_cnt", "total_cnt",
-                    F.expr("(cum_cnt * 1000000) div total_cnt")
-                    .cast("bigint").alias("coverage_ppm")))
-
-
-def gate_funnel(df: DataFrame, gates: list) -> DataFrame:
-    """Filter-funnel / gate-overlap audit: given the corpus-cleaning
-    gates as named 0/1 conditions, count documents by the exact
-    COMBINATION of gates they pass — the upset-plot numbers behind
-    every dataset card's "we removed X% for quality, Y% for language"
-    table.  Marginals hide overlap (a doc failing both the language
-    and the quality gate is double-counted in per-gate kill rates);
-    the mask histogram is the exact joint distribution, from which
-    any marginal, any conditional kill rate, and the survivor count
-    (mask = all-ones) are derivable client-side.
-
-    `gates` is an ordered list of (name, Column) with boolean
-    Columns; gate i contributes bit 2^i to the mask.  Returns one row
-    per observed mask: (mask, pass_<name>... one 0/1 column per gate,
-    n_docs).  At most 2^len(gates) rows exist at ANY corpus size.
-
-    Scale shape: every gate is a row-local JVM expression, so the
-    whole audit is ONE map-side-combinable aggregate keyed by the
-    packed mask — a single scan, no window, no join; the result is
-    dimension-sized (<= 2^gates rows)."""
-    mask = F.lit(0).cast("bigint")
-    for i, (_, cond) in enumerate(gates):
-        mask = mask + cond.cast("bigint") * F.lit(1 << i)
-    agg = (df.select(mask.alias("mask"))
-           .groupBy("mask")
-           .agg(F.count("*").cast("bigint").alias("n_docs")))
-    bits = [F.expr(f"CAST((mask div {1 << i}) % 2 AS INT)")
-            .alias(f"pass_{name}") for i, (name, _) in enumerate(gates)]
-    return agg.select(F.col("mask").cast("bigint").alias("mask"),
-                      *bits, "n_docs")
-
-
-def partition_skew(df: DataFrame, key_col: str,
-                   n_parts: tuple = (8, 32, 128),
-                   salt: str = "part:") -> DataFrame:
-    """Partition-skew planner: for each candidate partition count,
-    hash the key column into buckets and report how uneven the load
-    would be — the sheet read BEFORE picking a partitioner /
-    bucketing scheme for a 100 TB write or join (a key whose max
-    bucket holds 40% of rows at n=128 will straggle a 128-task
-    stage no matter what the cluster looks like).
-
-    skew_ppm = max_bucket * n_parts * 1e6 div total: 1e6 = perfectly
-    even, n_parts*1e6 = everything in one bucket.  The bucket hash is
-    the house md5 (cross-engine exact), NOT Spark's internal hash —
-    the audit is about the KEY DISTRIBUTION, which any decent hash
-    exposes identically.
-
-    Returns per candidate: (n_parts, total_rows, n_nonempty, n_empty,
-    max_bucket, min_bucket) + skew_ppm.  All integers.
-
-    Scale shape: the candidate list rides in as an exploded literal
-    dimension (|candidates| copies of the scan in ONE narrow stage),
-    then a (n_parts, bucket)-keyed combinable aggregate — at most
-    sum(n_parts) groups — and a candidate-keyed rollup.  No window,
-    no sort."""
-    from ..functions.hashing import md5_int
-    cand = F.array(*[F.lit(int(n)) for n in n_parts])
-    b = df.select(
-        F.explode(cand).alias("n_parts"),
-        md5_int(F.col(key_col).cast("string"), salt=salt)
-        .alias("_h"))
-    per = (b.select("n_parts", (F.col("_h") % F.col("n_parts"))
-                    .alias("bucket"))
-           .groupBy("n_parts", "bucket")
-           .agg(F.count("*").cast("bigint").alias("n_rows")))
-    out = (per.groupBy("n_parts")
-           .agg(F.sum("n_rows").cast("bigint").alias("total_rows"),
-                F.count("*").cast("bigint").alias("n_nonempty"),
-                F.max("n_rows").cast("bigint").alias("max_bucket"),
-                F.min("n_rows").cast("bigint").alias("min_bucket")))
-    return out.select(
-        F.col("n_parts").cast("int").alias("n_parts"),
-        "total_rows", "n_nonempty",
-        (F.col("n_parts") - F.col("n_nonempty")).cast("bigint")
-        .alias("n_empty"),
-        "max_bucket", "min_bucket",
-        F.expr("(max_bucket * n_parts * 1000000) div total_rows")
-        .cast("bigint").alias("skew_ppm"))
-
-
-def template_prefixes(df: DataFrame, text_col: str, id_col: str,
-                      k: int = 4, min_docs: int = 2) -> DataFrame:
-    """Boilerplate-template audit (the CCNet/RefinedWeb 'template
-    docs' check): documents sharing their first ``k`` normalized
-    tokens are template candidates — cookie banners, subscribe
-    footers, mirrored CMS shells — and a cluster's share of the
-    corpus decides whether the prefix is stripped or its documents
-    dropped.  Emits per prefix (with >= min_docs members): member
-    count, the smallest member id as exemplar, and corpus share in
-    ppm.
-
-    Scale shape: one map-side-combinable aggregate keyed on the
-    k-token prefix (bounded-width key — never the whole text), plus a
-    1-row broadcast total; no window, no join against corpus-sized
-    data.  Prefix normalization matches the house tokenizer rule
-    (lower/trim/whitespace-collapse)."""
-    toks = F.slice(
-        F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                                 r"\s+", " "), " "), 1, k)
-    d = df.select(F.col(id_col).alias("_id"),
-                  F.array_join(toks, " ").alias("prefix"))
-    total = d.agg(F.count("*").alias("total"))
-    g = (d.groupBy("prefix")
-         .agg(F.count("*").cast("bigint").alias("n_docs"),
-              F.min("_id").cast("bigint").alias("exemplar_id")))
-    return (g.where(F.col("n_docs") >= min_docs)
-            .crossJoin(F.broadcast(total))
-            .select("prefix", "n_docs", "exemplar_id",
-                    F.expr("(n_docs * 1000000) div total")
-                    .cast("bigint").alias("share_ppm")))
 
 
 def encoding_audit(df: DataFrame, text_col: str = "text",
@@ -385,74 +120,6 @@ def term_salience(tokens: DataFrame, id_col: str = "url",
             .select("id", "top_word", "salience",
                     F.expr("salience div 1000").cast("bigint")
                     .alias("n_mentions")))
-
-
-def robust_outliers(df: DataFrame, group: str = "source",
-                    value: str = "n_chars",
-                    z_milli: int = 4448) -> DataFrame:
-    """Per-group robust outlier sheet: exact integer median and MAD
-    (median absolute deviation) with an outlier count at
-    |v - median| * 1000 > z_milli * MAD — the drift/corruption alarm
-    for ingest monitoring (a source whose length distribution grows a
-    heavy tail is scraping boilerplate or truncating; mean/stddev
-    alarms are blown by the very outliers they hunt, median/MAD are
-    not).  Default z_milli = 4448 ~= 3 sigma * 1.4826 (the normal
-    consistency constant), kept integer.
-
-    Exact WITHOUT sorting the corpus (the quality_gate_histogram
-    discipline): both medians walk cumulative counts over the
-    (group, value) HISTOGRAM — windows partition by group over
-    DISTINCT VALUES, a dimension bounded by the value range, never
-    corpus rows.  Lower median at even counts (rank (n+1) div 2),
-    deterministic.  MAD = 0 (over half the mass on one value)
-    degenerates to flagging any v != median — documented convention.
-
-    Scale shape: one combinable (group, value) aggregate; the
-    histogram is persisted (three consumers: median walk, deviation
-    re-bin, flag pass); medians broadcast back.  Returns one row per
-    group: (group, n_docs, median, mad, n_outliers, outlier_ppm)."""
-    from pyspark.sql import Window
-    hist = (df.groupBy(F.col(group).alias("g"),
-                       F.col(value).cast("bigint").alias("v"))
-            .agg(F.count("*").alias("c")).persist())
-    tot = hist.groupBy("g").agg(F.sum("c").alias("n"))
-    wv = (Window.partitionBy("g").orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    med = (hist.withColumn("cum", F.sum("c").over(wv))
-           .join(F.broadcast(tot), "g")
-           .where(F.col("cum") >= F.expr("(n + 1) div 2"))
-           .groupBy("g").agg(F.min("v").alias("med")))
-    dh = (hist.join(F.broadcast(med), "g")
-          .groupBy("g", F.abs(F.col("v") - F.col("med")).alias("d"))
-          .agg(F.sum("c").alias("c")))
-    wd = (Window.partitionBy("g").orderBy("d")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    mad = (dh.withColumn("cum", F.sum("c").over(wd))
-           .join(F.broadcast(tot), "g")
-           .where(F.col("cum") >= F.expr("(n + 1) div 2"))
-           .groupBy("g").agg(F.min("d").alias("mad")))
-    is_out = F.when(
-        F.col("mad") > 0,
-        F.abs(F.col("v") - F.col("med")) * 1000
-        > F.lit(z_milli) * F.col("mad")) \
-        .otherwise(F.abs(F.col("v") - F.col("med")) > 0)
-    counted = (hist.join(F.broadcast(med), "g")
-               .join(F.broadcast(mad), "g")
-               .groupBy("g")
-               .agg(F.sum(F.when(is_out, F.col("c")).otherwise(0))
-                    .alias("n_out")))
-    out = (tot.join(med, "g").join(mad, "g")
-           .join(counted, "g", "left")
-           .select(F.col("g").alias(group),
-                   F.col("n").cast("bigint").alias("n_docs"),
-                   F.col("med").cast("bigint").alias("median"),
-                   F.col("mad").cast("bigint").alias("mad"),
-                   F.coalesce("n_out", F.lit(0)).cast("bigint")
-                   .alias("n_outliers"),
-                   F.expr("(coalesce(n_out, 0) * 1000000) div n")
-                   .cast("bigint").alias("outlier_ppm")))
-    out.unpersist_input = hist.unpersist
-    return out
 
 
 def k_anonymity_audit(df: DataFrame, qi_cols: list[str], sensitive_col,

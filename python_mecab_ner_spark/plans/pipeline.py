@@ -35,17 +35,17 @@ def _training_mentions(mentions):
     return mentions.join(unambig, ["url", "start", "end"], "left_semi")
 
 
-def _annotate(pages_df, bc, learned_stats=True):
+def _annotate(pages_df, bc):
     # "context": the slim 4-field token struct — every consumer of the
     # graph's context table (stats builds, scoring, BIO) reads only
     # (word, pos, begin, end); the full struct is ~3x the cache/Arrow
     # payload.  Surface-restoring paths (posseq) re-tokenize via
     # annotate.tokenize_pages from g["pages"] instead.
     return annotate_pages(pages_df.select("url", "warc_ts", "text", "lang"),
-                          bc, with_tokens="context" if learned_stats else False)
+                          bc, with_tokens="context")
 
 
-def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
+def _build_graph(annotated, gaz_df, canonicalize=True,
                  kb_holdout_mod=None) -> dict:
     """Everything after annotate, over an already-materialized
     `annotated` frame: the lazily planned graph dict plus its
@@ -59,15 +59,13 @@ def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
         from ..functions.hashing import md5_int
         entities = entities.where(
             F.pmod(md5_int(F.col("surface")), F.lit(kb_holdout_mod)) != 0)
-    context = nstats = cstats = None
-    if learned_stats:
-        # context feeds 5 scoring/stats passes; persist the exploded
-        # token table once instead of re-exploding per pass
-        context = tokens_table(annotated).persist()
-        train = _training_mentions(mentions)
-        # ONE fused mention-context join builds both counters; the
-        # vocab-sized combined aggregate is persisted inside
-        nstats, cstats = build_stats(context, train)
+    # context feeds 5 scoring/stats passes; persist the exploded
+    # token table once instead of re-exploding per pass
+    context = tokens_table(annotated).persist()
+    train = _training_mentions(mentions)
+    # ONE fused mention-context join builds both counters; the
+    # vocab-sized combined aggregate is persisted inside
+    nstats, cstats = build_stats(context, train)
     # link the resolved NER spans (the final entities of a page);
     # the spans' word column is the mention surface for linking
     linked = link_mentions(
@@ -90,12 +88,8 @@ def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
         Call when done with the graph — a long session building many
         graphs otherwise accumulates pinned cache entries.  Idempotent;
         the DataFrames remain usable (they just recompute)."""
-        for hook in (linked.unpersist_working_set,
-                     nstats.unpersist_input if nstats is not None else None,
-                     context.unpersist if context is not None else None,
-                     annotated.unpersist):
-            if hook is None:
-                continue
+        for hook in (linked.unpersist_working_set, nstats.unpersist_input,
+                     context.unpersist, annotated.unpersist):
             try:
                 hook()
             except Exception:
@@ -110,17 +104,16 @@ def _build_graph(annotated, gaz_df, canonicalize=True, learned_stats=True,
     }
 
 
-def extract_graph(spark, pages_df, canonicalize=True, learned_stats=True,
-                  kb_holdout_mod=None):
+def extract_graph(spark, pages_df, canonicalize=True, kb_holdout_mod=None):
     """Returns a dict of lazily-planned DataFrames:
-    annotated, mentions, spans, triples, entities, linked, vertices,
-    edges (+ canonical when canonicalize=True; + context/neighbor_stats
-    /core_stats when learned_stats=True), pages, and release().
+    annotated, mentions, spans, triples, entities, linked, context,
+    neighbor_stats, core_stats, vertices, edges (+ canonical when
+    canonicalize=True), pages, and release().
 
-    learned_stats=True runs the full 6-level linking ladder: the
-    corpus' own unambiguous gazetteer mentions train the +-3-neighbor
-    and core counters (one groupBy job each, broadcast), which then
-    power levels 3/4 and in-window homonym disambiguation.
+    Linking runs the full 6-level ladder: the corpus' own unambiguous
+    gazetteer mentions train the +-3-neighbor and core counters (one
+    groupBy job each, broadcast), which then power levels 3/4 and
+    in-window homonym disambiguation.
 
     kb_holdout_mod=N deterministically drops aliases with
     pmod(md5(surface), N) == 0 from the CANONICAL entity KB (mention
@@ -130,18 +123,15 @@ def extract_graph(spark, pages_df, canonicalize=True, learned_stats=True,
     the reference's PART/BRUTE inference levels exist for (reference
     mecab_category_storage.py:534-595)."""
     gaz_df = gazetteer_df_from_tsv(spark)
-    annotated = _annotate(pages_df, broadcast_rows(spark, df=gaz_df),
-                          learned_stats)
-    if learned_stats:
-        # the annotate stage feeds ~10 downstream subplans (stats
-        # builds, context joins, level-3/4 scoring, spans, triples);
-        # without materialization each one re-executes the whole
-        # tokenize+match mapInArrow.  Lazy-plan variant: persist
-        # (memory+disk); run_pipeline checkpoints it to Parquet.
-        from pyspark import StorageLevel
-        annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
+    annotated = _annotate(pages_df, broadcast_rows(spark, df=gaz_df))
+    # the annotate stage feeds ~10 downstream subplans (stats builds,
+    # context joins, level-3/4 scoring, spans, triples); without
+    # materialization each one re-executes the whole tokenize+match
+    # mapInArrow.  Lazy-plan variant: persist (memory+disk);
+    # run_pipeline checkpoints it to Parquet.
+    from pyspark import StorageLevel
+    annotated = annotated.persist(StorageLevel.MEMORY_AND_DISK)
     g = _build_graph(annotated, gaz_df, canonicalize=canonicalize,
-                     learned_stats=learned_stats,
                      kb_holdout_mod=kb_holdout_mod)
     g["pages"] = pages_df
     return g

@@ -29,18 +29,17 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q48_line_dedup", "q49_khop", "q50_bigram_pmi",
         "q53_surprisal",
         "q54_window_dedup", "q55_stratified_sample", "q56_quality_gate",
-        "q57_source_profile", "q58_neighbor_jaccard", "q59_bm25",
+        "q58_neighbor_jaccard",
         "q60_pack_sequences", "q62_ppr", "q63_funnel",
         "q64_cohort_retention", "q66_url_canonical",
         "q67_chunk_overlap", "q68_weighted_rank", "q69_hash_split",
         "q70_communities", "q72_training_prep",
         "q78_source_mix",
         "q80_kn_continuation", "q81_crawl_budget", "q83_fuzzy_alias",
-        "q84_importance_weights", "q85_burst_days", "q86_length_deciles",
-        "q87_rrf_fusion", "q88_tfidf_cosine_pairs",
+        "q84_importance_weights",
         "q92_recency_decay", "q95_quality_hist_gate",
         "q96_cooccurrence",
-        "q99_degree_histogram", "q101_kwic",
+        "q99_degree_histogram",
         "q105_source_risk", "q106_source_overlap", "q107_next_word",
         "q108_eval_sample",
         # round 4
@@ -48,31 +47,24 @@ SHOW = ["q01_pricing_summary", "q02_region_revenue", "q04_event_islands",
         "q156_type_propagation", "q157_edge_cut",
         "q159_warm_pagerank", "q160_contrastive_pairs",
         "q161_wl_classes", "q163_itemsets", "q164_graph_contraction",
-        "q165_epoch_allocation", "q166_robust_outliers",
-        "q167_phrase_search", "q168_symspell",
+        "q165_epoch_allocation",
         # round 5
-        "q170_symspell_d2", "q171_sorted_neighborhood",
-        "q173_ktruss",
-        "q177_mis", "q178_funnel", "q179_cohort_retention",
-        "q180_semantic_decon", "q181_event_transitions",
+        "q171_sorted_neighborhood", "q173_ktruss",
+        "q177_mis", "q180_semantic_decon",
         # final round-5 sweep
         "q184_bootstrap_ci", "q185_wilson", "q186_hearst",
-        "q188_merge_matching", "q189_cusum",
+        "q188_merge_matching",
         "q190_betweenness", "q192_stitch",
-        "q193_coverage_selection",
-        "q195_url_templates", "q196_rake",
+        "q193_coverage_selection", "q195_url_templates",
         # round-5 continuation
-        "q197_boruvka_mst", "q198_densest", "q199_k_anonymity",
+        "q197_boruvka_mst", "q198_densest",
         "q200_pareto", "q202_good_turing",
         "q203_jsonl_ledger",
-        "q206_temporal_reach", "q207_interval_join",
-        "q208_scd2_history",
+        "q206_temporal_reach", "q208_scd2_history",
         # post-closeout
         "q209_textrank", "q210_zorder_layout",
         "q212_spam_mass", "q213_rand_ari",
-        "q220_reshard", "q221_postings_gaps",
-        "q222_class_terms", "q223_neyman",
-        "q224_seasonal_outliers",
+        "q220_reshard", "q223_neyman",
         "q228_fresh_rank"]
 
 

@@ -1,26 +1,10 @@
-"""Round-3 final additions: vocab drift, phrase blocklist, postings
-table, HyperBall — hand-computed goldens and edge cases."""
+"""Round-3 final additions: phrase blocklist, HyperBall — hand-computed
+goldens and edge cases."""
 
 from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.functions.hashing import md5_int_py
 from python_mecab_ner_spark.functions.text import blocklist_phrase_counts
-from python_mecab_ner_spark.operators.profile import vocab_drift
-from python_mecab_ner_spark.operators.retrieval import postings_table
-
-
-def test_vocab_drift_golden(spark):
-    # epoch 0: a=3 b=1 c=1 (n0=5); epoch 1: a=1 b=3 c=1 (n1=5)
-    # drift(a)=|3*5-1*5|=10, drift(b)=10, balanced c: 0
-    d = spark.createDataFrame(
-        [(0, "a a a b c"), (1, "b b b a c")],
-        "epoch int, text string")
-    # note: c appears once per epoch -> drift 0 but still listed
-    rows = vocab_drift(d, "text", "epoch", top_k=10).collect()
-    got = {r.term: (r.o0, r.o1, r.drift) for r in rows}
-    assert got == {"a": (3, 1, 10), "b": (1, 3, 10), "c": (1, 1, 0)}
-    # ordering: drift desc, term asc
-    assert [r.term for r in rows] == ["a", "b", "c"]
 
 
 def test_blocklist_counts_word_boundaries(spark):
@@ -37,29 +21,6 @@ def test_blocklist_counts_word_boundaries(spark):
     assert (rows[2].bl_table_table, rows[2].bl_fast_scan) == (0, 0)
     assert rows[3].bl_table_table == 1   # shared-space overlap skipped
     assert (rows[4].bl_fast_scan, rows[4].bl_query_big) == (1, 1)
-
-
-def test_postings_table_golden(spark):
-    d = spark.createDataFrame(
-        [(1, "w w x"), (2, "w x x"), (3, "w y")],
-        "doc_id int, text string")
-    rows = {r.term: r for r in
-            postings_table(d, "text", "doc_id", min_df=2,
-                           sample_docs=2).collect()}
-    assert set(rows) == {"w", "x"}          # y has df=1, cut
-    w = rows["w"]
-    # tf(w): doc1=2, doc2=1, doc3=1 -> top doc1; sample first 2 sorted
-    assert (w.df, w.cf, w.top_doc, w.top_tf) == (3, 4, 1, 2)
-    assert w.posting_sample == "1,2"
-    x = rows["x"]
-    assert (x.df, x.cf, x.top_doc, x.top_tf) == (2, 3, 2, 2)
-
-
-def test_postings_tie_breaks_min_doc(spark):
-    d = spark.createDataFrame(
-        [(7, "z z"), (4, "z z"), (9, "z")], "doc_id int, text string")
-    r = postings_table(d, "text", "doc_id", min_df=2).collect()[0]
-    assert (r.term, r.top_doc, r.top_tf) == ("z", 4, 2)
 
 
 def _hb_regs_py(ids, m=16):

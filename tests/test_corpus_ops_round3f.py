@@ -1,29 +1,7 @@
-"""Round-3 additions (batch f): Zipf head coverage, politeness fetch
-rounds — hand-computed goldens and edge cases."""
+"""Round-3 additions (batch f): politeness fetch rounds — hand-computed
+goldens and edge cases."""
 
 from python_mecab_ner_spark.operators.crawl import fetch_rounds
-from python_mecab_ner_spark.operators.profile import vocab_head_coverage
-
-
-def test_vocab_head_coverage_golden(spark):
-    # counts: the 4, bee 3, cat 2, dog 1  (total 10)
-    text = "the the the the bee bee bee cat cat dog"
-    d = spark.createDataFrame([(1, text)], "doc_id int, text string")
-    got = {r.k: (r.kth_term, r.kth_cnt, r.cum_cnt, r.total_cnt,
-                 r.coverage_ppm)
-           for r in vocab_head_coverage(d, "text", ks=(1, 2, 4))
-           .collect()}
-    assert got[1] == ("the", 4, 4, 10, 400_000)
-    assert got[2] == ("bee", 3, 7, 10, 700_000)
-    assert got[4] == ("dog", 1, 10, 10, 1_000_000)
-
-
-def test_vocab_head_coverage_tie_break_and_small_vocab(spark):
-    # tie on count: term ascending decides rank deterministically
-    d = spark.createDataFrame([(1, "b a b a")], "doc_id int, text string")
-    rows = vocab_head_coverage(d, "text", ks=(1, 2, 10)).collect()
-    got = {r.k: r.kth_term for r in rows}
-    assert got == {1: "a", 2: "b"}  # k=10 absent: vocab smaller
 
 
 def test_fetch_rounds_histogram(spark):

@@ -1,38 +1,9 @@
-"""Round-3 additions (batch g): gate funnel, recrawl change-rate
-scheduling, truth-finding claim adjudication — hand-computed goldens
-and edge cases."""
+"""Round-3 additions (batch g): recrawl change-rate scheduling,
+truth-finding claim adjudication, C4 line rules — hand-computed
+goldens and edge cases."""
 
 from pyspark.sql import functions as F
 
-from python_mecab_ner_spark.operators.profile import gate_funnel
-
-
-def test_gate_funnel_golden(spark):
-    # docs: (long?, clean?) -> masks long=1, clean=2
-    rows = [("aaaa", 1), ("b", 1), ("aaaa", 0), ("aaaa", 0)]
-    d = spark.createDataFrame(rows, "text string, flag int")
-    gates = [("long", F.length("text") > 2),
-             ("clean", F.col("flag") == 1)]
-    got = {r.mask: (r.pass_long, r.pass_clean, r.n_docs)
-           for r in gate_funnel(d, gates).collect()}
-    assert got[3] == (1, 1, 1)   # aaaa + flag1
-    assert got[2] == (0, 1, 1)   # b + flag1
-    assert got[1] == (1, 0, 2)   # aaaa + flag0 (x2)
-    assert 0 not in got
-
-
-def test_gate_funnel_mask_is_exhaustive_partition(spark):
-    d = spark.createDataFrame([(i, f"t{i}") for i in range(20)],
-                              "doc_id int, text string")
-    gates = [("even", F.col("doc_id") % 2 == 0),
-             ("small", F.col("doc_id") < 7),
-             ("vowel", F.col("text").rlike("[aeiou]"))]
-    rows = gate_funnel(d, gates).collect()
-    assert sum(r.n_docs for r in rows) == 20
-    # bits re-derived from mask agree with the mask itself
-    for r in rows:
-        assert r.mask == (r.pass_even + 2 * r.pass_small
-                          + 4 * r.pass_vowel)
 
 
 def test_change_rate_schedule_golden(spark):
@@ -104,27 +75,6 @@ def test_adjudicate_claims_deterministic_tie_breaks(spark):
     # trust: B=(1+1)e6/3=666666 (agrees), A=(0+1)e6/3=333333
     assert r.support_ppm == (666666 * 1_000_000) // 999_999
     out.unpersist_input()
-
-
-def test_partition_skew_golden(spark):
-    from python_mecab_ner_spark.operators.profile import partition_skew
-    # constant key: everything lands in one bucket at any n
-    d = spark.createDataFrame([("k",)] * 12, "key string")
-    got = {r.n_parts: (r.total_rows, r.n_nonempty, r.n_empty,
-                       r.max_bucket, r.min_bucket, r.skew_ppm)
-           for r in partition_skew(d, "key", n_parts=(4, 8)).collect()}
-    assert got[4] == (12, 1, 3, 12, 12, 4_000_000)
-    assert got[8] == (12, 1, 7, 12, 12, 8_000_000)
-
-
-def test_partition_skew_even_key_near_uniform(spark):
-    from python_mecab_ner_spark.operators.profile import partition_skew
-    d = spark.createDataFrame([(i,) for i in range(4000)], "k bigint")
-    r = {x.n_parts: x for x in
-         partition_skew(d, "k", n_parts=(8,)).collect()}[8]
-    assert r.n_nonempty == 8 and r.total_rows == 4000
-    # md5 is a good hash: max bucket within 25% of even on 4k keys
-    assert r.skew_ppm < 1_250_000
 
 
 def test_c4_line_stats_golden(spark):

@@ -26,10 +26,10 @@ def test_first_50_spans_families_and_suite_is_complete():
                   "q21_ann_lsh",                  # ANN
                   "q154_modularity",              # graph
                   "q141_domain_range",            # ontology
-                  "q95_quality_hist_gate",        # sampling
-                  "q166_robust_outliers",         # monitoring
+                  "q193_coverage_selection",      # sampling
+                  "q148_encoding_audit",          # monitoring
                   "q145_warc_roundtrip",          # crawl/web
-                  "q167_phrase_search",           # retrieval
+                  "q209_textrank",                # retrieval
                   "q47_pii_redact",               # text quality
                   "kg_link_levels"]:              # real-KG rows-only
         assert probe in first, probe

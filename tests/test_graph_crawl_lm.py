@@ -81,65 +81,6 @@ def test_importance_weights_python_twin(spark):
     assert got == want
 
 
-def test_burst_days_silent_days_lower_the_baseline(spark):
-    from datetime import datetime
-
-    from python_mecab_ner_spark.operators.spans import burst_days
-    # type A: 6 events on day1, 0 on day2/day3 (silent); type B: 2+2+2
-    rows = ([(datetime(2024, 1, 1, 10, 0, i), "A") for i in range(6)]
-            + [(datetime(2024, 1, d, 10, 0, s), "B")
-               for d in (1, 2, 3) for s in (0, 1)])
-    ev = spark.createDataFrame(rows, "ts timestamp, event_type string")
-    got = {(r.event_type, r.day): (r.cnt, r.total, r.n_days)
-           for r in burst_days(ev, "ts", "event_type",
-                               factor_num=2, factor_den=1).collect()}
-    # A's mean over the GLOBAL 3 days is 2/day -> day1 (6) bursts at 2x;
-    # B is flat at its mean, no burst
-    assert got == {("A", "2024-01-01"): (6, 6, 3)}
-
-
-def test_histogram_deciles_golden_and_monotone(spark):
-    from python_mecab_ner_spark.operators.profile import histogram_deciles
-    # group g: values 0..99 -> bins 0..9 with width 10, 10 values each
-    d = spark.createDataFrame([("g", v) for v in range(100)],
-                              "source string, n int")
-    out = histogram_deciles(d, "n", "source", bin_width=10).collect()
-    got = {r.q: r.value_lo for r in out}
-    # decile q lands exactly at the end of bin q-1: value_lo = (q-1)*10
-    assert got == {q: (q - 1) * 10 for q in range(1, 10)}
-    los = [got[q] for q in sorted(got)]
-    assert los == sorted(los)
-
-
-def test_tfidf_cosine_pairs_golden(spark):
-    from python_mecab_ner_spark.operators.retrieval import \
-        tfidf_cosine_pairs
-    ctx = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "a"), (2, "b"), (3, "a"), (3, "c"),
-         (4, "x"), (4, "y")], "url bigint, word string")
-    got = {(r.d1, r.d2): (r.dot, r.cos2_ppm)
-           for r in tfidf_cosine_pairs(ctx, max_df=64,
-                                       min_cos2_ppm=0).collect()}
-    # idf: a=bitlen(4//3)=1, b=bitlen(2)=2, c=x=y=bitlen(4)=3
-    # doc1=doc2=(a:1,b:2) norm2=5; doc3=(a:1,c:3) norm2=10; doc4 disjoint
-    assert got == {(1, 2): (5, 1_000_000),
-                   (1, 3): (1, 20_000), (2, 3): (1, 20_000)}
-
-
-def test_rrf_fuse_golden(spark):
-    from python_mecab_ner_spark.operators.retrieval import rrf_fuse
-    a = spark.createDataFrame([(1, 1), (2, 2), (3, 3)],
-                              "doc_id bigint, rank int")
-    b = spark.createDataFrame([(2, 1), (4, 2)],
-                              "doc_id bigint, rank int")
-    got = {r.doc_id: (r.n_systems, r.rrf_micro)
-           for r in rrf_fuse([a, b]).collect()}
-    assert got == {1: (1, 1_000_000 // 61),
-                   2: (2, 1_000_000 // 62 + 1_000_000 // 61),
-                   3: (1, 1_000_000 // 63),
-                   4: (1, 1_000_000 // 62)}
-
-
 def test_crawl_budget_sums_to_budget_randomized(spark):
     rng = random.Random(81)
     rows = [(f"h{i}", rng.randrange(1, 1000)) for i in range(50)]
@@ -218,5 +159,3 @@ def test_cooccurrence_counts_golden_and_python_twin(spark):
                     c, s = exp.get(k, (0, 0))
                     exp[k] = (c + 1, s + 60 // d)
     assert got == exp
-
-

@@ -403,37 +403,6 @@ def test_epoch_allocation_invariants(spark):
             assert r.budget_unmet == max(0, budget - total_cap)
 
 
-def test_robust_outliers_exact_median_mad(spark):
-    from python_mecab_ner_spark.operators.profile import robust_outliers
-    # group A: median 10, MAD 1 over {8,9,10,11,12,100}:
-    # sorted v = 8,9,10,11,12,100 -> lower median rank 3 -> 10
-    # |v-10| = 2,1,0,1,2,90 sorted 0,1,1,2,2,90 -> MAD rank 3 -> 1
-    # outliers at 4448 milli: |v-10|*1000 > 4448 -> only 100
-    rows = [("A", v) for v in (8, 9, 10, 11, 12, 100)]
-    # group B: constant values -> MAD 0 -> degenerate rule flags v!=med
-    rows += [("B", v) for v in (5, 5, 5, 7)]
-    df = spark.createDataFrame(rows, ["source", "n_chars"])
-    got = {r.source: r for r in robust_outliers(df).collect()}
-    a = got["A"]
-    assert (a.n_docs, a.median, a.mad, a.n_outliers) == (6, 10, 1, 1)
-    assert a.outlier_ppm == 1_000_000 // 6
-    b = got["B"]
-    assert (b.median, b.mad, b.n_outliers) == (5, 0, 1)
-
-
-def test_phrase_search_positions_and_counts(spark):
-    from python_mecab_ner_spark.operators.retrieval import phrase_search
-    docs = spark.createDataFrame(
-        [(1, "a b c a b a b"), (2, "b a x a b"), (3, "c c c")],
-        ["doc_id", "text"])
-    got = {r.doc_id: (r.n_matches, r.first_pos) for r in
-           phrase_search(docs, "text", "doc_id", "a b").collect()}
-    assert got == {1: (3, 0), 2: (1, 3)}
-    three = {r.doc_id: (r.n_matches, r.first_pos) for r in
-             phrase_search(docs, "text", "doc_id", "a b c").collect()}
-    assert three == {1: (1, 0)}
-
-
 def test_symspell_finds_all_edit1_kinds_and_rejects_edit2(spark):
     from python_mecab_ner_spark.operators.retrieval import \
         symspell_alias_pairs

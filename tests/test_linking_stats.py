@@ -337,21 +337,3 @@ def test_disambig_policy_selects_winner(spark):
                         core_stats_df=cstats).collect()
     assert len(out) == 1 and out[0].link_level == 0
     assert out[0].large == "A"
-
-
-def test_ladder_backcompat_without_stats(spark):
-    """No context/stats -> levels 0-2 + UNLINKED only (the round-1
-    behavior), terminal level renumbered to LEVEL_UNLINKED."""
-    from python_mecab_ner_spark.operators.linking import (LEVEL_UNLINKED,
-                                                          canonical_entities,
-                                                          link_mentions)
-    gaz = spark.createDataFrame([("FOOD", "f", "버거")],
-                                "large string, small string, surface string")
-    mentions = spark.createDataFrame(
-        [("u1", 0, 1, "버거", "FOOD", "f"),
-         ("u2", 0, 1, "없는것", "FOOD", "f")],
-        "url string, start int, end int, surface string, large string, small string")
-    out = {r.url: r for r in
-           link_mentions(mentions, canonical_entities(gaz)).collect()}
-    assert out["u1"].link_level == 0
-    assert out["u2"].link_level == LEVEL_UNLINKED

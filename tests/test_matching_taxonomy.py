@@ -1,19 +1,17 @@
-"""Round-5 gap fills: deterministic maximal matching (q188) and the
-integer CUSUM change-point (q189).
+"""Round-5 gap fills: deterministic maximal matching (q188),
+Brandes betweenness (q190) and suffix-prefix stitching (q192).
 
 Discipline as in test_mis_funnel.py: every test recomputes the
 expected answer with plain Python on small randomized or hand-built
 inputs, so the DuckDB oracles are not the only cross-check.
 """
 
-import datetime
 import hashlib
 import random
 
 import pytest
 
 from python_mecab_ner_spark.operators.graph import maximal_matching
-from python_mecab_ner_spark.operators.spans import cusum_changepoint
 
 
 def _epri(a, b):
@@ -70,58 +68,6 @@ def test_matching_raises_on_round_exhaustion(spark):
 def test_matching_self_loops_only(spark):
     df = spark.createDataFrame([(1, 1)], ["src", "dst"])
     assert maximal_matching(df).collect() == []
-
-
-def _py_cusum(rows):
-    daily = {}
-    for key, ts in rows:
-        d = ts.strftime("%Y-%m-%d")
-        daily[(key, d)] = daily.get((key, d), 0) + 1
-    out = {}
-    bykey = {}
-    for (key, d), c in daily.items():
-        bykey.setdefault(key, []).append((d, c))
-    for key, days in bykey.items():
-        days.sort()
-        total = sum(c for _, c in days)
-        n = len(days)
-        s, best = 0, None
-        for t, (d, c) in enumerate(days, start=1):
-            s += c
-            ct = abs(n * s - t * total)
-            # packed max, earliest-split tie-break
-            if best is None or (ct, -t) > (best[0], -best[1]):
-                best = (ct, t, d)
-        out[key] = (n, total, best[2], best[1], best[0])
-    return out
-
-
-def test_cusum_random_twin(spark):
-    rng = random.Random(13)
-    t0 = datetime.datetime(2024, 3, 1)
-    rows = [("k%d" % rng.randrange(4),
-             t0 + datetime.timedelta(hours=rng.randrange(24 * 20)))
-            for _ in range(500)]
-    df = spark.createDataFrame([(k, t, "x") for k, t in rows],
-                               ["key", "ts", "pad"])
-    got = {r.key: (r.n_days, r.total, r.change_day, r.t_split,
-                   r.cusum_stat)
-           for r in cusum_changepoint(df, "ts", "key").collect()}
-    assert got == _py_cusum(rows)
-
-
-def test_cusum_detects_planted_level_shift(spark):
-    # 30 days at 2/day then 30 days at 10/day: split lands on day 30
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = []
-    for d in range(60):
-        for i in range(2 if d < 30 else 10):
-            rows.append(("k", t0 + datetime.timedelta(days=d, hours=i)))
-    df = spark.createDataFrame([(k, t, "x") for k, t in rows],
-                               ["key", "ts", "pad"])
-    r = cusum_changepoint(df, "ts", "key").collect()[0]
-    assert r.t_split == 30 and r.change_day == "2024-01-30"
-    assert r.n_days == 60 and r.total == 360
 
 
 def _py_betweenness(edges, roots, radius=3, scale=1_000_000):

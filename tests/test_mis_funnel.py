@@ -1,19 +1,17 @@
 """Round-5 late additions: deterministic Luby MIS (q177) and the
-first-touch conversion funnel (q178).
+semantic decontamination scan (q180).
 
 Discipline as in test_round5_ops.py: every test recomputes the
 expected answer with plain Python on small randomized or hand-built
 inputs, so the DuckDB oracles are not the only cross-check.
 """
 
-import datetime
 import hashlib
 import random
 
 import pytest
 
 from python_mecab_ner_spark.operators.graph import maximal_independent_set
-from python_mecab_ner_spark.operators.spans import funnel_steps
 
 
 def _pri(v):
@@ -78,82 +76,6 @@ def test_mis_empty_graph(spark):
     assert maximal_independent_set(df).collect() == []
 
 
-def _ev(spark, rows):
-    t0 = datetime.datetime(2024, 1, 1)
-    data = [(u, t0 + datetime.timedelta(seconds=s), et)
-            for u, s, et in rows]
-    return spark.createDataFrame(data, ["user_id", "ts", "event_type"])
-
-
-def test_funnel_first_touch_semantics(spark):
-    rows = [
-        # u1 full chain inside the gaps
-        (1, 0, "view"), (1, 50, "click"), (1, 100, "buy"),
-        # u2: click too late after the FIRST view; the second view
-        # would have converted — documented first-touch miss
-        (2, 0, "view"), (2, 500, "view"), (2, 520, "click"),
-        # u3 reaches click, buy outside gap2
-        (3, 0, "view"), (3, 30, "click"), (3, 1000, "buy"),
-        # u4 never views (click alone cannot enter the funnel)
-        (4, 0, "click"), (4, 10, "buy"),
-    ]
-    out = funnel_steps(_ev(spark, rows), ["view", "click", "buy"],
-                       [100, 100])
-    got = {r.step: r for r in out.collect()}
-    assert [got[s].n_users for s in ("view", "click", "buy")] == [3, 2, 1]
-    assert got["view"].step_idx == 1
-    # 4 distinct users overall -> view conv 750000; click 2/3; buy 1/2
-    assert got["view"].conv_prev_ppm == 750_000
-    assert got["click"].conv_prev_ppm == 666_666
-    assert got["buy"].conv_prev_ppm == 500_000
-    assert got["buy"].conv_first_ppm == 333_333
-    assert got["view"].conv_first_ppm == 1_000_000
-
-
-def test_funnel_boundary_is_inclusive_and_strictly_after(spark):
-    rows = [
-        (1, 0, "a"), (1, 0, "b"),      # same instant: NOT strictly after
-        (2, 0, "a"), (2, 100, "b"),    # exactly at the gap: inclusive
-        (3, 0, "a"), (3, 101, "b"),    # one past the gap: out
-    ]
-    out = funnel_steps(_ev(spark, rows), ["a", "b"], [100])
-    got = {r.step: r.n_users for r in out.collect()}
-    assert got == {"a": 3, "b": 1}
-
-
-def test_cohort_retention_python_twin(spark):
-    from python_mecab_ner_spark.operators.spans import cohort_retention
-    rng = random.Random(9)
-    t0 = datetime.date(2024, 1, 1)
-    rows = [(rng.randrange(25),
-             datetime.datetime.combine(
-                 t0 + datetime.timedelta(days=rng.randrange(35)),
-                 datetime.time(rng.randrange(24))), "e")
-            for _ in range(400)]
-    df = spark.createDataFrame(rows, ["user_id", "ts", "event_type"])
-    got = {(r.cohort_period, r.period_offset):
-           (r.n_active, r.retention_ppm)
-           for r in cohort_retention(df).collect()}
-    # python twin
-    per = {}
-    for u, ts, _ in rows:
-        p = (ts.date() - datetime.date(1970, 1, 1)).days // 7
-        per.setdefault(u, set()).add(p)
-    first = {u: min(ps) for u, ps in per.items()}
-    size = {}
-    for u, c in first.items():
-        size[c] = size.get(c, 0) + 1
-    want = {}
-    for u, ps in per.items():
-        for p in ps:
-            k = (first[u], p - first[u])
-            want[k] = want.get(k, 0) + 1
-    want = {k: (n, n * 1_000_000 // size[k[0]]) for k, n in want.items()}
-    assert got == want
-    # every cohort's offset-0 row is exactly 1e6
-    assert all(v[1] == 1_000_000 for k, v in got.items() if k[1] == 0)
-
-
 def test_semantic_decontaminate_python_twin(spark):
     from python_mecab_ner_spark.operators.ann import (
         QUANT_SCALE, semantic_decontaminate)
@@ -193,31 +115,3 @@ def test_semantic_decontaminate_python_twin(spark):
             want[cid] = (len(hits), max(hits))
     assert got == want
     assert 999 in got  # the planted paraphrase is flagged
-
-
-def test_event_transitions_python_twin(spark):
-    from python_mecab_ner_spark.operators.spans import event_transitions
-    rng = random.Random(3)
-    t0 = datetime.datetime(2024, 1, 1)
-    rows = [(i, rng.randrange(8),
-             t0 + datetime.timedelta(seconds=rng.randrange(50)),
-             "t%d" % rng.randrange(4)) for i in range(200)]
-    df = spark.createDataFrame(rows, ["event_id", "user_id", "ts",
-                                      "event_type"])
-    got = {(r.src_type, r.dst_type): (r.n, r.prob_ppm)
-           for r in event_transitions(df,
-                                      tiebreak_col="event_id").collect()}
-    seqs = {}
-    for eid, u, ts, et in sorted(rows, key=lambda r: (r[2], r[0])):
-        seqs.setdefault(u, []).append(et)
-    n = {}
-    for s in seqs.values():
-        for a, b in zip(s, s[1:]):
-            n[(a, b)] = n.get((a, b), 0) + 1
-    tot = {}
-    for (a, _), c in n.items():
-        tot[a] = tot.get(a, 0) + c
-    want = {k: (c, c * 1_000_000 // tot[k[0]]) for k, c in n.items()}
-    assert got == want
-
-

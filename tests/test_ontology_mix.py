@@ -113,23 +113,6 @@ def test_temperature_mix_boost_direction(spark):
     assert got["head"].nat_ppm == 100 * 1_000_000 // 101
 
 
-def test_template_prefixes_golden(spark):
-    from python_mecab_ner_spark.operators.profile import (
-        template_prefixes)
-    rows = [(1, "Cookie  Notice accept terms now x"),
-            (2, "cookie notice ACCEPT terms later y"),
-            (3, "unique document body here z"),
-            (4, "cookie notice accept terms again")]
-    d = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = template_prefixes(d, "text", "doc_id", k=4,
-                            min_docs=2).collect()
-    assert len(got) == 1
-    r = got[0]
-    # case/whitespace-normalized 4-token prefix clusters 1, 2, 4
-    assert r.prefix == "cookie notice accept terms"
-    assert (r.n_docs, r.exemplar_id, r.share_ppm) == (3, 1, 750_000)
-
-
 def test_functionality_matches_pure_python_randomized(spark):
     """House engine-vs-pyref property: functionality sheet on a
     seeded random triple table equals a dict-based recomputation."""

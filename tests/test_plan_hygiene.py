@@ -83,7 +83,8 @@ def test_linking_suffix_join_is_hash_not_nested_loop(spark):
     nstats = spark.createDataFrame([("FOOD", "먹", "VV", 5)],
                                    "label string, word string, pos string, cnt long")
     linked = link_mentions(mentions, canonical_entities(gaz),
-                           context_df=ctx, neighbor_stats_df=nstats)
+                           context_df=ctx, neighbor_stats_df=nstats,
+                           core_stats_df=nstats)
     plan = _plan(linked)
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -189,12 +190,6 @@ def test_surprisal_broadcasts_vocab(spark, sf01):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_bm25_topk_take_ordered_and_pruned_scan(spark, sf01):
-    plan = _plan(entry.q59_bm25(spark, sf01))
-    # top-k is TakeOrderedAndProject (no global sort materializes)
-    assert "TakeOrderedAndProject" in plan, plan
-
-
 def test_stratified_sample_has_no_shuffle(spark, sf01):
     from pyspark.sql import functions as F
     from python_mecab_ner_spark.operators.sample import (
@@ -288,30 +283,11 @@ def test_q116_pps_sample_windows_per_stratum(spark, sf01):
     assert "hashpartitioning(source" in plan, plan
 
 
-def test_q120_drift_single_term_agg_takeordered(spark, sf01):
-    """One combinable term aggregate, a broadcast 1-row total, and a
-    TakeOrdered top-k — no window, no sort of the full term table."""
-    plan = _plan(entry.q120_vocab_drift(spark, sf01))
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Window" not in plan, plan
-    assert "BroadcastExchange" in plan, plan
-
-
 def test_q121_blocklist_zero_shuffle(spark, sf01):
     """Pure per-row JVM string expressions: no Exchange, no UDF."""
     plan = _plan(entry.q121_blocklist(spark, sf01))
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
-
-
-def test_q122_postings_two_aggs_no_window(spark, sf01):
-    """Token explode -> (term, doc) count -> term-keyed final agg:
-    both map-side combinable, argmax via packed max (no window), no
-    join anywhere."""
-    plan = _plan(entry.q122_postings(spark, sf01))
-    assert "Window" not in plan, plan
-    assert "Join" not in plan, plan
-    assert plan.count("HashAggregate") >= 4, plan  # 2x (partial+final)
 
 
 def test_q140_functionality_no_window_no_udf(spark, sf01):
@@ -347,15 +323,6 @@ def test_q143_mix_weights_single_count_no_window(spark, sf01):
     """One combinable per-class count + a 1-row broadcast total; all
     integer JVM expressions."""
     plan = _plan(entry.q143_mix_weights(spark, sf01))
-    assert "Window" not in plan, plan
-    assert "BatchEvalPython" not in plan, plan
-    assert "BroadcastExchange" in plan, plan
-
-
-def test_q146_template_audit_single_agg_no_window(spark, sf01):
-    """One prefix-keyed combinable aggregate + 1-row broadcast total:
-    no window, no python, no corpus-sized join."""
-    plan = _plan(entry.q146_template_prefixes(spark, sf01))
     assert "Window" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
     assert "BroadcastExchange" in plan, plan

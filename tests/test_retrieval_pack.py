@@ -1,40 +1,7 @@
-"""Integer BM25 retrieval + training-sequence packing goldens."""
+"""Training-sequence packing and chunking goldens."""
 
-from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.operators.pack import pack_sequences
-from python_mecab_ner_spark.operators.retrieval import bm25_topk
-
-
-def _ctx(spark, docs):
-    d = spark.createDataFrame(docs, "url int, text string")
-    return (d.select("url", F.explode(F.split(F.lower(F.trim("text")),
-                                              r"\s+")).alias("word"))
-            .where("word <> ''"))
-
-
-def test_bm25_hand_golden(spark):
-    # N=3 docs, total tokens 10, avgdl = 10 div 3 = 3
-    # df(spark)=1 -> idf = bitlen(3)=2; df(query)=1 -> idf=2
-    # doc1 tf(spark)=2, dl=4: 2*2*44000*3 // (120+18+72) = 2514
-    # doc2 tf(query)=1, dl=2: 2*1*44000*3 // (60+18+36)  = 2315
-    ctx = _ctx(spark, [(1, "spark spark is fast"),
-                       (2, "query engine"),
-                       (3, "no relevant words here")])
-    rows = bm25_topk(ctx, ["spark", "query"], k=10,
-                     id_col="url").collect()
-    got = [(r.doc_id, r.n_terms, r.bm25_milli) for r in rows]
-    assert got == [(1, 1, 2514), (2, 1, 2315)]
-
-
-def test_bm25_rank_order_and_limit(spark):
-    # more matching terms -> higher score; k truncates
-    ctx = _ctx(spark, [(i, "spark query" if i == 1 else "spark filler")
-                       for i in range(1, 6)])
-    rows = bm25_topk(ctx, ["spark", "query"], k=2, id_col="url").collect()
-    assert [r.doc_id for r in rows] == [1, 2]
-    assert rows[0].n_terms == 2 and rows[1].n_terms == 1
-    assert rows[0].bm25_milli > rows[1].bm25_milli
 
 
 def test_pack_sequences_single_bucket_golden(spark):
@@ -95,33 +62,3 @@ def test_chunk_documents_is_shuffle_free(spark):
             ._jdf.queryExecution().executedPlan().toString())
     assert "Exchange" not in plan
     assert "Generate" in plan  # the posexplode row-multiplier
-
-
-def test_kwic_snippets_golden_and_clamping(spark):
-    from python_mecab_ner_spark.operators.retrieval import kwic_snippets
-    rows = [(1, "spark runs fast"),             # occurrence at pos 0
-            (2, "a b c spark d e f"),           # centered
-            (3, "tail ends with spark"),        # right-clamped
-            (4, "no match here"),
-            (5, "spark x spark")]               # two occurrences
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {(r.doc_id, r.pos): r.snippet
-           for r in kwic_snippets(df, "text", "doc_id",
-                                  term="spark", window=3).collect()}
-    assert got == {
-        (1, 0): "spark runs fast",
-        (2, 3): "a b c spark d e f",
-        (3, 3): "tail ends with spark",
-        (5, 0): "spark x spark",
-        (5, 2): "spark x spark",
-    }
-
-
-def test_kwic_plan_is_shuffle_free(spark):
-    from python_mecab_ner_spark.operators.retrieval import kwic_snippets
-    df = spark.createDataFrame([(1, "spark a b")],
-                               "doc_id bigint, text string")
-    out = kwic_snippets(df, "text", "doc_id", term="spark")
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted")
-    assert "Exchange" not in plan and "Join" not in plan, plan

@@ -1,7 +1,6 @@
-"""Round-5 post-closeout additions (q209-q225): TextRank, Z-order
-layout audit, TrustRank spam mass, Rand/ARI, resharding audit,
-postings gaps, Neyman allocation, c-TF-IDF class terms, seasonal
-outliers.
+"""Round-5 post-closeout additions (q209-q228): TextRank, Z-order
+layout audit, TrustRank spam mass, Rand/ARI, resharding audit, Neyman
+allocation, c-TF-IDF class terms, freshness-decayed rank.
 
 Discipline as in test_round5_ops.py: every test recomputes the
 expected answer with plain Python on small hand-built or randomized
@@ -272,37 +271,6 @@ def test_hrw_only_new_shard_gains_keys():
             assert b == 8
 
 
-# ----------------------------------------------- postings gap audit
-
-def test_postings_gap_audit_matches_python_twin(spark):
-    from python_mecab_ner_spark.operators.retrieval import (
-        postings_gap_audit)
-    rng = random.Random(61)
-    vocab = [f"w{i}" for i in range(40)]
-    docs = [(i, " ".join(rng.choice(vocab)
-                         for _ in range(rng.randrange(3, 25))))
-            for i in range(120)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    got = {r["df_bits"]: (r["n_terms"], r["n_postings"], r["gap_bits"],
-                          r["fixed_bits"], r["ratio_ppm"])
-           for r in postings_gap_audit(df, "text", "doc_id").collect()}
-    posts = {}
-    for i, t in docs:
-        for w in set(t.split()):
-            posts.setdefault(w, set()).add(i)
-    agg = {}
-    for w, ids in posts.items():
-        ids = sorted(ids)
-        gbits = sum((g - p).bit_length()
-                    for p, g in zip([-1] + ids, ids))
-        b = len(ids).bit_length()
-        t0, p0, g0 = agg.get(b, (0, 0, 0))
-        agg[b] = (t0 + 1, p0 + len(ids), g0 + gbits)
-    exp = {b: (t, p, g, p * 32, g * 1_000_000 // (p * 32))
-           for b, (t, p, g) in agg.items()}
-    assert got == exp
-
-
 # -------------------------------------------------- Neyman allocation
 
 def _py_neyman(rows, budget):
@@ -345,7 +313,7 @@ def test_neyman_matches_python_twin_and_sums_to_budget(spark):
 
 def test_class_tfidf_matches_python_twin(spark):
     from python_mecab_ner_spark.operators.retrieval import (
-        class_tfidf_terms)
+        class_tfidf_from_tokens)
     rng = random.Random(71)
     common = [f"c{i}" for i in range(6)]
     docs = []
@@ -354,12 +322,13 @@ def test_class_tfidf_matches_python_twin(spark):
         words = [rng.choice(common) for _ in range(8)] + [f"own{i % 3}"]
         rng.shuffle(words)
         docs.append((i, " ".join(words), cls))
-    df = spark.createDataFrame(docs, ["doc_id", "text", "cls"])
-    out = class_tfidf_terms(df, "text", "cls", k=3, bigrams=False)
+    tok = spark.createDataFrame(
+        [(c, w) for _, t, c in docs for w in t.split()], ["cls", "term"])
+    out = class_tfidf_from_tokens(tok, k=3)
     got = {(r["cls"], r["rank"]): (r["term"], r["ctf"], r["cf"],
                                    r["score"])
            for r in out.collect()}
-    ctf, cls_of = Counter(), {}
+    ctf = Counter()
     for _, t, c in docs:
         for w in t.split():
             ctf[(c, w)] += 1
@@ -380,50 +349,6 @@ def test_class_tfidf_matches_python_twin(spark):
     # each class's own marker word must be its #1 distinctive term
     for c in {"k0", "k1", "k2"}:
         assert got[(c, 1)][0] == "own" + c[1]
-
-
-# ------------------------------------------------- seasonal outliers
-
-def test_seasonal_outliers_matches_python_twin(spark):
-    import datetime
-
-    from python_mecab_ner_spark.operators.spans import seasonal_outliers
-    rng = random.Random(73)
-    rows = []
-    base = datetime.datetime(2024, 1, 1)
-    for d in range(28):
-        day = base + datetime.timedelta(days=d)
-        # weekday-shaped rate + two planted spikes
-        n = 40 if (17532 + d) % 7 < 5 else 12   # 2024-01-01 = day 19723
-        if d in (9, 20):
-            n *= 2
-        for i in range(n):
-            rows.append(("ev", day + datetime.timedelta(seconds=i)))
-    df = spark.createDataFrame(rows, ["event_type", "ts"])
-    got = seasonal_outliers(df, "ts", "event_type", dev_pct=50).collect()
-    assert len(got) == 1
-    r = got[0]
-    daily = Counter()
-    for _, ts in rows:
-        daily[(ts.date() - datetime.date(1970, 1, 1)).days] += 1
-    prof = {}
-    for day, cnt in daily.items():
-        t, n = prof.get(day % 7, (0, 0))
-        prof[day % 7] = (t + cnt, n + 1)
-    outs = []
-    for day, cnt in daily.items():
-        t, n = prof[day % 7]
-        dev = abs(cnt * n - t)
-        if dev * 100 > 50 * t:
-            outs.append((dev, -day, cnt))
-    worst = max(outs)
-    assert (r["n_days"], r["n_outlier_days"]) == (28, len(outs))
-    assert (r["worst_day"], r["worst_cnt"]) == (-worst[1], worst[2])
-    # the two planted spike days are exactly the outliers
-    spike_days = {(datetime.date(2024, 1, 1)
-                   - datetime.date(1970, 1, 1)).days + d
-                  for d in (9, 20)}
-    assert {-d for _, d, _ in outs} == spike_days
 
 
 # ---------------------------------------------------- fresh rank

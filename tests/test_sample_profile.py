@@ -1,14 +1,13 @@
 """Round-3 additions: deterministic stratified sampling, exact/approx
 quality gating, duplicated-window coverage, neighbor-Jaccard node
-similarity, source reliability profile — hand-computed goldens plus
-the python hash twin for the sampler."""
+similarity — hand-computed goldens plus the python hash twin for the
+sampler."""
 
 from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.functions.hashing import md5_int_py
 from python_mecab_ner_spark.operators.dedup import window_dup_stats
 from python_mecab_ner_spark.operators.graph import neighbor_jaccard
-from python_mecab_ner_spark.operators.profile import source_reliability
 from python_mecab_ner_spark.operators.sample import (
     hash_stratified_sample, quality_gate_approx, quality_percentile_gate)
 
@@ -105,20 +104,3 @@ def test_neighbor_jaccard_center_cap(spark):
                            max_center_degree=2)
     got = {(r.n1, r.n2): r.common for r in out.collect()}
     assert got == {(1, 2): 1, (10, 11): 2}
-
-
-def test_source_reliability_golden(spark):
-    # "aa bb cc dd ee ff": 17 chars -> len_band 15; 6 toks -> 40;
-    # no punct -> q = 15 + 40 + 20 = 75.  "hi there": 8 chars -> 0;
-    # 2 toks -> 20; q = 0 + 20 + 20 = 40.
-    d = spark.createDataFrame(
-        [(1, "aa bb cc dd ee ff", "s1"),
-         (2, "aa  bb cc dd ee ff", "s1"),   # same fingerprint (ws-norm)
-         (3, "hi there", "s1"),
-         (4, "hi there", "s2")],
-        "doc_id int, text string, source string")
-    out = source_reliability(d, "text", "doc_id", "source")
-    got = {r.source: (r.n_docs, r.n_unique, r.n_dup, r.sum_quality,
-                      r.sum_tokens) for r in out.collect()}
-    assert got == {"s1": (3, 2, 1, 75 + 75 + 40, 6 + 6 + 2),
-                   "s2": (1, 1, 0, 40, 2)}

@@ -1,5 +1,5 @@
-"""Round-5 closing additions: greedy max-coverage selection (q193), URL
-path-template mining (q195), and RAKE keyphrase extraction (q196).
+"""Round-5 closing additions: greedy max-coverage selection (q193) and
+URL path-template mining (q195).
 
 Discipline as in test_matching_taxonomy.py: every test recomputes the
 expected answer with plain Python on small randomized or hand-built
@@ -75,58 +75,3 @@ def test_url_templates(spark):
         ("b.org", "/"): 1,
         ("a.com", "/v2/item/{n}"): 1,
     }
-
-
-def _py_rake(docs, n_stop, max_len, min_occ):
-    """Plain-python RAKE with the derived stoplist and capped
-    pre-scoring candidate set."""
-    toks = {d: [w for w in t.lower().split() if w] for d, t in docs}
-    df = {}
-    for _d, ws in toks.items():
-        for w in set(ws):
-            df[w] = df.get(w, 0) + 1
-    stops = set(sorted(df, key=lambda w: (-df[w], w))[:n_stop])
-    runs = []
-    for d, ws in toks.items():
-        cur = []
-        for w in ws:
-            if w in stops:
-                if cur:
-                    runs.append(cur)
-                cur = []
-            else:
-                cur.append(w)
-        if cur:
-            runs.append(cur)
-    runs = [r for r in runs if len(r) <= max_len]
-    freq, deg = {}, {}
-    for r in runs:
-        for w in r:
-            freq[w] = freq.get(w, 0) + 1
-            deg[w] = deg.get(w, 0) + len(r)
-    score = {w: (deg[w] * 1_000_000) // freq[w] for w in freq}
-    out = {}
-    for r in runs:
-        p = " ".join(r)
-        n, _pl, _s = out.get(p, (0, 0, 0))
-        out[p] = (n + 1, len(r), sum(score[w] for w in r))
-    return {p: v for p, v in out.items() if v[0] >= min_occ}
-
-
-def test_rake_twin(spark):
-    rng = random.Random(31)
-    vocab = ["the", "of", "red", "apple", "pie", "green", "tart",
-             "cold", "press", "oak"]
-    docs = [(i, " ".join(rng.choice(vocab) for _ in range(40)))
-            for i in range(25)]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    from python_mecab_ner_spark.operators.retrieval import \
-        rake_keyphrases
-    got = {r.phrase: (r.n_occ, r.plen, r.score_ppm)
-           for r in rake_keyphrases(df, "text", "doc_id", n_stop=2,
-                                    max_len=3, min_occ=2).collect()}
-    assert got == _py_rake(docs, n_stop=2, max_len=3, min_occ=2)
-    # the derived stoplist really is the top-df pair: with seed 31
-    # over 25x40 uniform draws, every word appears in >20 docs, so
-    # the stoplist tie-break (df desc, word asc) is exercised
-    assert len(got) > 0

@@ -78,16 +78,14 @@ def test_graph_edges_snapshot_recrawl_changelog(spark, tmp_path):
     key = ["url", "src_id", "pred", "dst_id"]
 
     crawl1 = pages_dataframe(spark, 40, seed=7, partitions=2).select(*cols)
-    g1 = extract_graph(spark, crawl1, canonicalize=False,
-                       learned_stats=False)
+    g1 = extract_graph(spark, crawl1, canonicalize=False)
     snapshot_write(g1["edges"].select(*key), base)
     g1["release"]()
 
     crawl2 = recrawl_pages(spark, 40, seed=7, overlap_start=0,
                            change_mod=4, ts_shift_min=0,
                            partitions=2).select(*cols)
-    g2 = extract_graph(spark, crawl2, canonicalize=False,
-                       learned_stats=False)
+    g2 = extract_graph(spark, crawl2, canonicalize=False)
     snapshot_write(g2["edges"].select(*key), base)
     g2["release"]()
 

@@ -1,5 +1,5 @@
-"""Round-5 continuation: temporal reachability (q206), bucketized
-interval join (q207), SCD2 history merge (q208) — Python twins."""
+"""Round-5 continuation: temporal reachability (q206) and SCD2 history
+merge (q208) — Python twins."""
 
 import random
 
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from python_mecab_ner_spark.operators.crawl import scd2_merge
-from python_mecab_ner_spark.operators.spans import interval_join
 from python_mecab_ner_spark.operators.temporal import temporal_reachability
 
 
@@ -64,29 +63,6 @@ def test_reach_budget_raises(spark):
     edges = [(i, i + 1, i) for i in range(10)]  # 10-hop causal chain
     with pytest.raises(RuntimeError):
         _run_reach(spark, edges, [0], max_rounds=3)
-
-
-# ------------------------------------------------------------ interval join
-
-def test_interval_join_matches_brute_force(spark):
-    rng = random.Random(41)
-    lv = [(i, s := rng.randrange(500), s + rng.randrange(80))
-          for i in range(200)]
-    rv = [(j, s := rng.randrange(500), s + rng.randrange(150))
-          for j in range(40)]
-    l = spark.createDataFrame(lv, "lid bigint, ls bigint, le bigint")
-    r = spark.createDataFrame(rv, "rid bigint, rs bigint, re bigint")
-    for bucket in (7, 64, 1000):  # incl. bucket >> spans: one bucket
-        got = {(x["lid"], x["rid"]) for x in
-               interval_join(l, r, ("ls", "le"), ("rs", "re"),
-                             bucket=bucket).collect()}
-        exp = {(i, j) for i, s1, e1 in lv for j, s2, e2 in rv
-               if s1 <= e2 and s2 <= e1}
-        assert got == exp, bucket
-    # exactly-once: no pair duplicated (set size == row count)
-    rows = interval_join(l, r, ("ls", "le"), ("rs", "re"),
-                         bucket=7).count()
-    assert rows == len(exp)
 
 
 # ------------------------------------------------------------------- scd2
